@@ -9,6 +9,10 @@ Catalyst plans it as FileScan → Generate → partial HashAggregate →
 Exchange(hash word) → final HashAggregate → TakeOrderedAndProject — i.e.
 map-side combine and heap-based top-K that the reference lacks (its
 shuffle is O(M×R) full file re-reads with no combiner, slave.cc:176-210).
+The per-initial layout adds one hash exchange on the initial at the
+session's shuffle width, so parallel tasks write one file per initial;
+sorting each task by (initial, word) meets the partitioned writer's
+required ordering, so the files stay sorted by word.
 
 Intended-semantics fidelity (SURVEY.md §2.5): ties in top-K are KEPT
 (the reference collides them, master.cc:431); chunk-boundary handling is
@@ -99,19 +103,34 @@ def partitioned_sorted_counts(counts: DataFrame) -> DataFrame:
     """O7's user-visible layout: counts keyed by first letter, words sorted
     within each letter partition (output-<letter>.txt, slave.cc:174,219-226).
 
-    ``repartitionByRange`` + ``sortWithinPartitions`` reproduce the layout
-    with one range shuffle; at scale each initial-letter range lands in
-    one (or a few, for skewed letters) output files.
+    One hash exchange on ``initial`` at the session's
+    ``spark.sql.shuffle.partitions`` (read per call), then a sort on
+    ``(initial, word)`` inside each task:
+
+    - Hashing needs no bounds, so no sampling job runs ahead of it (a
+      range exchange samples its input in a job of its own).
+    - The explicit width keeps AQE from coalescing the exchange into a
+      single task, so the per-initial files are written by ``width``
+      tasks in parallel, like the reference's reducers. Every row of one
+      initial lands in one task, so the sink writes one file per initial.
+    - ``initial`` leads the sort because ``partitionBy("initial")``
+      requires its input ordered by the partition column; an ordering
+      that satisfies it stops Spark from planning a ``Sort(initial)`` of
+      its own, which would discard the word order. The initial is a
+      UTF-8 byte prefix of the word, so ``(initial, word)`` orders each
+      initial's rows exactly as ``word`` alone does.
     """
+    width = int(counts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
         with_initial(counts)
-        .repartitionByRange("initial")
-        .sortWithinPartitions("word")
+        .repartition(width, "initial")
+        .sortWithinPartitions("initial", "word")
     )
 
 
 def write_partitioned_sorted(counts: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """O7 sink: one directory per initial, rows sorted by word within files."""
+    """O7 sink: one directory per initial holding one file sorted by word,
+    written by parallel tasks (see :func:`partitioned_sorted_counts`)."""
     (
         partitioned_sorted_counts(counts)
         .write.mode("overwrite")

@@ -6,8 +6,8 @@ Registry note (round 2, tightened round 4): the driver verifies at most
 queries that still execute every reference operator: ``wc_suite`` — a
 tagged union of O3 tokenize + O6 count + O9 top-K (``op='topk'``) and
 O5 key-range parity (``op='keyrange'``), each branch keeping its own
-plan fragment — and O6 + O7 layout + skew-salted aggregation
-(``wc_partitioned_layout``, whose counts are the full O6 aggregate).
+plan fragment — and O6 + O7 layout (``wc_partitioned_layout``, whose
+counts are the full O6 aggregate).
 Per-document stats moved into ``text_doc_profile``.
 
 DuckDB oracle note: the Spark side splits on the reference's exact
@@ -88,15 +88,13 @@ def wc_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def wc_partitioned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O6+O7: the complete word→count aggregate (computed via the salted
-    two-phase aggregation from plans/skew.py — provably identical to the
-    plain groupBy, Zipf-head-safe) laid out in the reference's
-    user-visible shape: keyed by initial letter, sorted by word within
-    each initial partition (output-<c>.txt, slave.cc:174,219-226). Hash
-    compare is order-insensitive, so the oracle checks content;
-    sortedness and salted==plain are asserted in tests."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import salted_word_count
-
+    """O6+O7: the complete word→count aggregate (the plain partial+final
+    ``groupBy``; the salted form in plans/skew.py measured no faster for
+    algebraic counts at any scale, SCALE.md §1) laid out in the
+    reference's user-visible shape: keyed by initial letter, each
+    initial's rows in one hash partition and sorted by word there
+    (output-<c>.txt, slave.cc:174,219-226). Hash compare is
+    order-insensitive, so the oracle checks content; sortedness is
+    asserted in tests."""
     docs = load_table(spark, sf_dir, "documents")
-    counts = salted_word_count(wc.tokenize(docs))
-    return wc.partitioned_sorted_counts(counts).select("initial", "word", "cnt")
+    return wc.partitioned_sorted_counts(wc.word_count(docs)).select("initial", "word", "cnt")

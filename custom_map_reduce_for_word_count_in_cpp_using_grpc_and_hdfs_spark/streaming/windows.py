@@ -217,10 +217,25 @@ def stream_shuffle_width(sf_dir: str, *tables: str) -> int | None:
     for table in tables or ("events",):
         path = os.path.join(sf_dir, f"{table}.parquet")
         try:
-            total += os.path.getsize(path)
+            total += _source_bytes(path)
         except OSError:
             return None
     return max(STREAM_WIDTH_FLOOR, math.ceil(total / STREAM_WIDTH_TARGET_BYTES))
+
+
+def _source_bytes(path: str) -> int:
+    """Bytes of a parquet source: the file itself, or the data files under
+    a parquet directory (``_``/``.``-prefixed names skipped, as Spark's
+    reader skips them). ``getsize`` on a directory is its entry size, not
+    its contents."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(root, name))
+        for root, _, names in os.walk(path)
+        for name in names
+        if not name.startswith(("_", "."))
+    )
 
 
 def run_available_now(

@@ -28,20 +28,66 @@ def test_format_roundtrips(spark, tmp_path_factory):
         assert got == expected, fmt
 
 
+def _layout_files(path):
+    """{initial directory: [part files]} of a written layout; asserts every
+    file's ``word`` column is sorted and every directory holds one file."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = {
+        d: sorted(glob.glob(os.path.join(path, d, "part-*.parquet")))
+        for d in os.listdir(path)
+        if d.startswith("initial=")
+    }
+    for d, parts in files.items():
+        assert len(parts) == 1, (d, parts)
+        words = pq.read_table(parts[0], columns=["word"]).column("word").to_pylist()
+        assert words == sorted(words), d
+    return files
+
+
 def test_partitioned_sorted_sink_layout(spark):
     """The reference's output-<initial> layout (slave.cc:174,219-226):
-    one directory per initial, rows sorted by word within files."""
+    one directory per initial holding one file, rows sorted by word."""
     docs = load_table(spark, SF_SMOKE, "documents")
     counts = wc.word_count(docs)
     path = os.path.join(SCRATCH, "wc_layout")
     wc.write_partitioned_sorted(counts, path)
-    dirs = {d for d in os.listdir(path) if d.startswith("initial=")}
-    assert len(dirs) > 1
+    assert len(_layout_files(path)) > 1
     back = spark.read.parquet(path)
     assert back.where(F.substring("word", 1, 1) != F.col("initial")).count() == 0
     # global counts survive the layout
     total = back.agg(F.sum("cnt")).collect()[0][0]
     assert total == wc.tokenize(docs).count()
+
+
+def test_partitioned_layout_plan_and_width(spark):
+    """The layout is one hash exchange on ``initial`` at the session's
+    shuffle width (no range exchange, so no sampling job), and the write
+    keeps one sorted file per initial when that width is 1 (one task
+    writes every initial) and when it exceeds the number of initials
+    (most tasks are empty)."""
+    import re
+
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.explain import formatted_plan
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    counts = wc.word_count(docs)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    plan = formatted_plan(wc.partitioned_sorted_counts(counts))
+    assert re.search(rf"hashpartitioning\(initial#\d+, {width}\)", plan), plan
+    assert "rangepartitioning" not in plan
+
+    n_initials = counts.select(F.substring("word", 1, 1)).distinct().count()
+    try:
+        for w in (1, n_initials + 5):
+            spark.conf.set("spark.sql.shuffle.partitions", str(w))
+            path = os.path.join(SCRATCH, f"wc_layout_w{w}")
+            wc.write_partitioned_sorted(counts, path)
+            assert len(_layout_files(path)) == n_initials, w
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
 
 
 def test_text_source_roundtrip(spark):
@@ -56,6 +102,61 @@ def test_text_source_roundtrip(spark):
     direct = wc.word_count(docs).orderBy("word").collect()
     via_text = wc.word_count(corpus, text_col="value").orderBy("word").collect()
     assert [(r.word, r.cnt) for r in direct] == [(r.word, r.cnt) for r in via_text]
+
+
+def _split_edge_corpus(split: int, n_edges: int) -> bytes:
+    """Deterministic text whose byte offsets ``k * split`` fall inside a
+    multi-byte UTF-8 character for odd ``k`` and on a newline for even
+    ``k`` — the cuts the reference's byte-range chunking mishandles
+    (slave.cc:76-134)."""
+    import random
+
+    rng = random.Random(7)
+    narrow = ["the", "of", "word", "split", "Zed"]
+    wide = ["日本語", "Ωmega", "ïn", "😀ok", "жук"]
+    out = bytearray()
+    for k in range(1, n_edges + 1):
+        edge = k * split
+        while edge - len(out) > 2:  # a token cut short never reaches the edge
+            token = rng.choice(narrow).encode()[: edge - len(out) - 2]
+            out += token + (b"\n" if rng.random() < 0.2 else b" ")
+        if edge - len(out) == 2:
+            out += b"b"
+        if k % 2:  # first character of a wide token starts one byte before the edge
+            out += rng.choice(wide).encode() + b" "
+        else:  # the line ends right at the edge
+            out += b"\n"
+    return bytes(out + b"tail " + "ünï\n".encode())
+
+
+def test_text_split_boundaries_exact(spark, tmp_path):
+    """Split-boundary exactness on a real multi-split text scan: with
+    splits of a few hundred bytes cut inside multi-byte characters and at
+    line ends, ``read_text_corpus`` + ``word_count`` equal a Counter over
+    the file's lines."""
+    from collections import Counter
+
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.registry import read_text_corpus
+
+    split, edges = 256, 16
+    data = _split_edge_corpus(split, edges)
+    assert all(data[k * split] & 0xC0 == 0x80 for k in range(1, edges + 1, 2))  # mid-character cuts
+    path = tmp_path / "corpus.txt"
+    path.write_bytes(data)
+    expected = Counter(t for line in data.decode().split("\n") for t in line.split(" ") if t)
+
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, str(split))
+        corpus = read_text_corpus(spark, str(path))
+        assert corpus.rdd.getNumPartitions() > 1
+        got = {r.word: r.cnt for r in wc.word_count(corpus, text_col="value").collect()}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert got == dict(expected)
 
 
 def test_hadoop_fs_scheme_roundtrip(spark):

@@ -729,6 +729,40 @@ def test_stream_shuffle_width_input_sized(tmp_path, monkeypatch):
     assert stream_shuffle_width(str(tmp_path), "events") == 17
 
 
+def test_stream_shuffle_width_sums_parquet_directory(tmp_path, monkeypatch):
+    """A parquet *directory* source is sized by the data files inside it,
+    not by its directory entry: with the target
+    patched below the total, the width rises above the floor, and the
+    hidden ``_SUCCESS``/``.crc`` files Spark leaves behind do not count."""
+    import math
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming import windows
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
+    table_dir = tmp_path / "events.parquet"
+    table_dir.mkdir()
+    rng = np.random.default_rng(0)
+    for i in range(3):
+        pq.write_table(
+            pa.table({"x": rng.integers(0, 2**62, 4096)}),
+            table_dir / f"part-{i:05d}.parquet",
+            compression="none",
+        )
+    (table_dir / "_SUCCESS").write_bytes(b"")
+    (table_dir / ".part-00000.parquet.crc").write_bytes(b"c" * 100_000)
+    data_bytes = sum(os.path.getsize(p) for p in table_dir.glob("part-*.parquet"))
+
+    target = 16 * 1024
+    monkeypatch.setattr(windows, "STREAM_WIDTH_TARGET_BYTES", target)
+    expected = math.ceil(data_bytes / target)
+    assert expected > windows.STREAM_WIDTH_FLOOR
+    assert windows.stream_shuffle_width(str(tmp_path), "events") == expected
+
+
 def test_run_available_now_many_sets_and_restores_width(spark, tmp_path):
     """shuffle_width pins the state-store partition count for the drain
     (streaming reads spark.sql.shuffle.partitions at query start; AQE
