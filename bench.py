@@ -27,7 +27,7 @@ for code that measured 38.8 s uncontended (same box, same commit),
 1.8× wrong about unchanged code, while the per-query minima summed to
 43.6 s. Medians stay in `queries_median` as the dispersion signal:
 median >> min flags a noisy run, not slow code. Proof harness:
-tools/noise_injection.py runs a mini-suite with and without a
+tools/noise_injection.py at e49ef4e runs a mini-suite with and without a
 synthetic CPU hog and checks the min-sum moves <15% while the
 median-sum visibly inflates.
 """

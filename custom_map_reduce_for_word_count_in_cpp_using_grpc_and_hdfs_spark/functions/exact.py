@@ -86,14 +86,6 @@ RATE = "decimal(3,2)"  # l_discount / l_tax and 1±them (all 2-digit, < 10)
 QTY = "decimal(12,2)"  # l_quantity (integer-valued double)
 
 
-def dmul(*factors: Column) -> Column:
-    """Exact decimal product of pre-cast factors (pyspark side)."""
-    out = factors[0]
-    for f in factors[1:]:
-        out = out * f
-    return out
-
-
 def rev_col(ep: str = "l_extendedprice", disc: str = "l_discount") -> Column:
     """``ep * (1 - disc)`` as an exact decimal(16,4)."""
     return F.col(ep).cast(MONEY) * (F.lit(1) - F.col(disc)).cast(RATE)

@@ -436,7 +436,7 @@ def minhash_near_dups(
 #: localCheckpoints + 1 count) per round — which is latency-bound until
 #: edge partitions carry real data, while the driver route is one
 #: collect + O(E log V) numpy + one parallelize. Measured at sf0.1
-#: (tools/r13_cc_ab.py, 5 interleaved reps, labeling stage only, edge
+#: (tools/r13_cc_ab.py at e49ef4e, 5 interleaved reps, labeling stage only, edge
 #: frames pre-persisted, routes row-identical at both sizes): 256
 #: exact-Jaccard edges — loop 0.881 s vs driver 0.390 s (2.26x); 2.09M
 #: simhash edges (at the cap) — loop 6.77 s vs driver 2.866 s (2.36x —
@@ -535,7 +535,7 @@ def connected_components(
     numpy union-find, parallelize the label relation back — whenever the
     edge count is at most CC_DRIVER_LOCAL_MAX_EDGES, the endpoint types
     are integral, and no endpoint is null; the distributed hash-min loop
-    otherwise. 'loop' / 'driver' force a side (tests and A/B tools; the
+    otherwise. 'loop' / 'driver' force a side (tests and A/B runs; the
     forced driver route raises on unsupported endpoint types). The two
     routes are row-identical (pinned by tests); only edge endpoint PAIRS
     ever reach the driver, bounded at 32 MB of longs by the cap, while

@@ -26,20 +26,6 @@ def dim(df: DataFrame, name: str | None = None) -> DataFrame:
     return F.broadcast(df)
 
 
-def star_join(fact: DataFrame, *dims: tuple[DataFrame, list[str] | str]) -> DataFrame:
-    """Join a fact table against broadcast dimensions left-to-right.
-
-    Only pass dimensions that are provably bounded at every deployment
-    scale (nation/region-class, pre-aggregated candidate sets): the
-    forced hint bypasses the size check, so a dim that grows with the
-    facts belongs in a plain join where the planner + AQE decide
-    (SCALE.md §2)."""
-    out = fact
-    for d, on in dims:
-        out = out.join(F.broadcast(d), on=on)
-    return out
-
-
 def top_n(df: DataFrame, n: int, *order_cols) -> DataFrame:
     """Global deterministic top-N: ORDER BY ... LIMIT n.
 

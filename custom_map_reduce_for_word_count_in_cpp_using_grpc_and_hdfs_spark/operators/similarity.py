@@ -756,7 +756,7 @@ IVF_MIN_PROBED_VECTORS = 1500
 
 def ivf_nprobe_for(n_centroids: int, n_vectors: int | None = None) -> int:
     """Floor-aware stored-route probe count: the quarter-of-centroids
-    operating point (tools/ann_scale.py), raised at small N so the probe
+    operating point (tools/ann_scale.py at e49ef4e), raised at small N so the probe
     sweeps at least :data:`IVF_MIN_PROBED_VECTORS` expected vectors —
     the regime where the round-12 crossover measured recall under the
     0.65 floor (see SCALE_R12_ANN_CROSSOVER.json / SCALE_R13_ANN_FLOOR).
@@ -1031,7 +1031,7 @@ def auto_ivf_topk(
       k-means, write-once hive-partitioned index, partition-pruned
       probes (:func:`ensure_ivf_index` + :func:`ivf_topk_stored`) at
       nprobe = k/4 — the uniform-fixture floor-clearing operating point
-      (tools/ann_scale.py); measured 8.5×/decade vs the live route's
+      (tools/ann_scale.py at e49ef4e); measured 8.5×/decade vs the live route's
       18.5× (SCALE_R11_ANN.json), and already ahead COLD at 200k
       vectors (45.2 s vs 72.8 s).
 

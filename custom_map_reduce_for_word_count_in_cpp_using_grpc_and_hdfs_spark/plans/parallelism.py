@@ -69,28 +69,36 @@ def _as_bytes(v: str) -> int:
     return int(float(s) * mult)
 
 
-def scan_file_sizes(df: DataFrame) -> list[int] | None:
-    """Byte sizes of the local files behind ``df``'s scan, or ``None``
-    when they cannot be cheaply sized (non-local scheme, non-file source,
-    empty listing). This is the ACCURATE pre-explode size — unlike
-    Catalyst's post-``Generate`` estimate, file bytes never lie."""
+def _local_scan_paths(df: DataFrame) -> list[str] | None:
+    """Local paths of the files behind ``df``'s scan, or ``None`` for a
+    non-file source, an empty listing or any non-local scheme."""
     try:
         files = df.inputFiles()
     except Exception:
         return None
     if not files:
         return None
-    sizes = []
+    paths = []
     for uri in files:
         parsed = urlparse(uri)
         if parsed.scheme not in ("file", ""):
             return None
-        path = unquote(parsed.path or uri)
-        try:
-            sizes.append(os.path.getsize(path))
-        except OSError:
-            return None
-    return sizes
+        paths.append(unquote(parsed.path or uri))
+    return paths
+
+
+def scan_file_sizes(df: DataFrame) -> list[int] | None:
+    """Byte sizes of the local files behind ``df``'s scan, or ``None``
+    when they cannot be cheaply sized (non-local scheme, non-file source,
+    empty listing). This is the ACCURATE pre-explode size — unlike
+    Catalyst's post-``Generate`` estimate, file bytes never lie."""
+    paths = _local_scan_paths(df)
+    if paths is None:
+        return None
+    try:
+        return [os.path.getsize(p) for p in paths]
+    except OSError:
+        return None
 
 
 #: Analyzed-plan node names that preserve the scan's row count 1:1.
@@ -116,22 +124,9 @@ def scan_row_count(df: DataFrame) -> int | None:
     Project/SubqueryAlias/Relation — Filter/Join/Generate/Sample/Limit
     or any UNKNOWN node name returns None, so new operators fail toward
     the correct (job-based) path, never toward a wrong count."""
-    files = None
-    try:
-        files = df.inputFiles()
-    except Exception:
+    paths = _local_scan_paths(df)
+    if paths is None or not all(p.endswith(".parquet") for p in paths):
         return None
-    if not files:
-        return None
-    paths = []
-    for uri in files:
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("file", ""):
-            return None
-        path = unquote(parsed.path or uri)
-        if not path.endswith(".parquet"):
-            return None
-        paths.append(path)
     import contextlib
     import io
     import re

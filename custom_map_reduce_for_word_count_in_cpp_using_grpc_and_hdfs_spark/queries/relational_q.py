@@ -69,8 +69,8 @@ def rel_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson 7 applied to decimal aggregation, not just token explodes).
     The bench fixture's one ~11 MB file yields ~3 splits, serializing
     the decimal work on 3 of 32 cores; measured A/B at sf0.1
-    (tools/r13_q1_simhash_ab.py, 5 interleaved reps): 1.661 s as-is vs
-    1.127 s spread = 0.68x. Round-robin (no key: the grouping key has
+    (tools/r13_q1_simhash_ab.py at e49ef4e, 5 interleaved reps): 1.661 s
+    as-is vs 1.127 s spread = 0.68x. Round-robin (no key: the grouping key has
     ~6 distinct values — hashing on it would collapse parallelism), and
     conditional: at production split counts spread() is a no-op and the
     plan is unchanged."""

@@ -56,19 +56,27 @@ def get_session(app_name: str = "spark-engine", *, extra_conf: dict[str, str] | 
       initial value).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    builder = builder.config("spark.sql.shuffle.partitions", shuffle)
-    builder = builder.config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        _initial_shuffle_partitions(shuffle),
-    )
+    for key, value in _shuffle_conf().items():
+        builder = builder.config(key, value)
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     for key, value in ENGINE_CONF.items():
         builder = builder.config(key, value)
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def _shuffle_conf() -> dict[str, str]:
+    """The session shuffle width (``SPARK_GRAFT_SHUFFLE_PARTITIONS``, else
+    ``SPARK_GRAFT_CPUS``) and AQE's initial width derived from it."""
+    shuffle = os.environ.get(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32")
+    )
+    return {
+        "spark.sql.shuffle.partitions": shuffle,
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": _initial_shuffle_partitions(shuffle),
+    }
 
 
 def _initial_shuffle_partitions(shuffle: str) -> str:
@@ -84,11 +92,8 @@ def _initial_shuffle_partitions(shuffle: str) -> str:
     INITIAL width high — 8× the target width, floor 256 — and lets AQE
     coalesce down to the 64 MB advisory size per stage: small stages
     still end up at a handful of partitions (the sf0.1 bench is
-    unchanged), big stages get the width the data needs. Override with
-    ``SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS``."""
-    return os.environ.get(
-        "SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS", str(max(256, 8 * int(shuffle)))
-    )
+    unchanged), big stages get the width the data needs."""
+    return str(max(256, 8 * int(shuffle)))
 
 
 #: Bundled RocksDB state-store provider — the documented posture for
@@ -327,15 +332,9 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     # A host-built session often carries the 200-partition default; size
     # the shuffle like get_session does (AQE coalesces upward mistakes,
     # but 200 tasks per tiny sf0.01 stage is pure scheduling overhead).
-    shuffle = os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            _initial_shuffle_partitions(shuffle),
-        )
+        for key, value in _shuffle_conf().items():
+            spark.conf.set(key, value)
     except Exception:
         pass
     return spark

@@ -182,8 +182,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: core-count default makes every drain pay (#queries x width)
 #: state-store inits regardless of data volume — the bench's only
 #: anti-scaling entry (8-core beat 32-core 2.5x on identical code,
-#: PERF_r13.json). Measured at three decades (tools/r14_stream_width_ab.py,
-#: interleaved minima, rows identical at every width):
+#: PERF_r13.json). Measured at three decades (tools/r14_stream_width_ab.py
+#: at e49ef4e, interleaved minima, rows identical at every width):
 #:   sf0.1 (2 MB events):   w2 1.12 s  w4 1.20  w8 1.28  w16 1.66  w32 2.23
 #:   sf1   (17 MB):         w2 1.31 s  w8 1.61  w32 3.01  w64 4.65
 #:   sf10  (174 MB):        w2 1.86 s  w4 1.67  w8 1.82  w32 3.53
@@ -205,14 +205,9 @@ def stream_shuffle_width(sf_dir: str, *tables: str) -> int | None:
     """Input-sized streaming shuffle/state width: ceil(total source
     bytes / STREAM_WIDTH_TARGET_BYTES), floored at STREAM_WIDTH_FLOOR —
     or ``None`` (leave the session width alone) when a source cannot be
-    sized locally. ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides
-    the derivation for cluster tuning, mirroring the batch-side
-    SPARK_GRAFT_SHUFFLE_PARTITIONS knob."""
+    sized locally."""
     import math
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
     total = 0
     for table in tables or ("events",):
         path = os.path.join(sf_dir, f"{table}.parquet")

@@ -277,12 +277,20 @@ def test_scan_row_count_exact_and_guarded(spark, tmp_path):
     """scan_row_count (round 14): EXACT parquet-footer row count with
     zero Spark jobs on a provably row-preserving frame (bare scan or
     projection), None on anything that could change the row count —
-    filter, join, limit, sample, non-file source — so callers sizing a
-    geometry from it (cosine_near_dup_pairs' LSH bands) get the value a
-    count() job would return, or fall back to running one."""
+    filter, join, limit, sample, non-file or non-parquet source — so
+    callers sizing a geometry from it (cosine_near_dup_pairs' LSH bands)
+    get the value a count() job would return, or fall back to running
+    one. scan_file_sizes resolves the same local files and reports their
+    on-disk sizes."""
+    import glob
+    import os
+
     from pyspark.sql import functions as F
 
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import scan_row_count
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import (
+        scan_file_sizes,
+        scan_row_count,
+    )
 
     path = str(tmp_path / "t")
     spark.range(0, 1234).write.parquet(path)
@@ -294,6 +302,12 @@ def test_scan_row_count_exact_and_guarded(spark, tmp_path):
     assert scan_row_count(df.sample(0.5)) is None
     assert scan_row_count(df.join(df.select(F.col("id").alias("j")), df.id == F.col("j"))) is None
     assert scan_row_count(spark.range(10).toDF("x")) is None
+    json_path = str(tmp_path / "j")
+    spark.range(0, 10).write.json(json_path)
+    assert scan_row_count(spark.read.json(json_path)) is None
+    parts = glob.glob(os.path.join(path, "part-*.parquet"))
+    assert parts
+    assert sorted(scan_file_sizes(df)) == sorted(os.path.getsize(p) for p in parts)
 
 
 def test_ann_topk_plans_window_group_limit(spark):
@@ -328,8 +342,8 @@ def test_ann_topk_plans_window_group_limit(spark):
 #: relation, which is strictly cheaper at scale but raised the combined
 #: id count (4 Ex + 3 BEx = 7 > the old combined pin of 5) and broke the
 #: suite after the final r13 snapshot. Per-kind values re-measured at
-#: HEAD with tools/r14_count_exchanges.py (sf0.01, the test's SF): every
-#: entry's Exchange count is at or below its old combined pin.
+#: HEAD with tools/r14_count_exchanges.py at e49ef4e (sf0.01, the test's
+#: SF): every entry's Exchange count is at or below its old combined pin.
 HEADLINE_PLAN_CEILINGS = {
     "wc_top_k": (2, 0, 0, 0),
     # 2 (round 13, up from 1): the conditional spread() before the

