@@ -83,7 +83,6 @@ def dsum_expr(sql_expr: str, scale: int = 4) -> str:
 #: Value-exact factor types for the star schema's domains.
 MONEY = "decimal(12,2)"  # l_extendedprice, p_retailprice, *_acctbal, o_totalprice
 RATE = "decimal(3,2)"  # l_discount / l_tax and 1±them (all 2-digit, < 10)
-QTY = "decimal(12,2)"  # l_quantity (integer-valued double)
 
 
 def rev_col(ep: str = "l_extendedprice", disc: str = "l_discount") -> Column:

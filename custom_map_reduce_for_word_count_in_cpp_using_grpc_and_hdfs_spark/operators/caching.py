@@ -63,13 +63,10 @@ def _size_proof(
       (threshold <= 0): the planner won't pick ANY estimate-driven
       broadcast, so there is nothing to mis-plan.
     - *proof*: do we have positive size evidence (``sum(file bytes) ×
-      bound < threshold``, threshold > 0) strong enough to justify an
-      explicit ``F.broadcast()`` hint? A disabled threshold is a USER
-      INSTRUCTION to avoid broadcasts, not evidence of smallness —
-      explicit hints override the disabled threshold, so treating
-      "nothing to mis-plan" as "provably small" forced broadcasts backed
-      by zero size evidence on exactly the sessions configured (-1) to
-      prevent driver-OOM broadcasts. Hence: threshold <= 0 → no proof.
+      bound < threshold``, threshold > 0)? It picks the audit line
+      :func:`eager_stats` logs. A disabled threshold is a USER
+      INSTRUCTION to avoid broadcasts, not evidence of smallness, so
+      threshold <= 0 → no proof.
 
     Unknown sizes (remote schemes, non-file sources) report risky and
     unproven: at production scale, materialize and measure. The
@@ -91,12 +88,6 @@ def _size_proof(
     return not proven, proven, sizes
 
 
-def _broadcast_risk(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> bool:
-    """Mis-plan risk component of :func:`_size_proof` (kept as the
-    stable name the tests and docs cite)."""
-    return _size_proof(df, expansion_bound)[0]
-
-
 def eager_stats(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> DataFrame:
     """Persist ``df`` and materialize it NOW, so joins planned afterwards
     see the cache's MEASURED size instead of Catalyst's estimate.
@@ -105,7 +96,7 @@ def eager_stats(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> DataF
     small SF, measured round 5), so it runs only when it can change a
     decision: when the source scan is big enough — or unsizeable — that
     the true cached size could cross the broadcast threshold at
-    ``expansion_bound``× growth (:func:`_broadcast_risk`; pass a
+    ``expansion_bound``× growth (:func:`_size_proof`; pass a
     shape-specific bound when the default's measured ceiling doesn't
     cover the caller's expansion). Small sources keep the lazy persist
     and their (correct) broadcast plans; the sf0.1 driver bench takes
@@ -162,31 +153,7 @@ def eager_stats(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> DataF
             "the planner cannot mis-pick an estimate-driven broadcast, and "
             "no size proof was taken)"
         )
-    # The lazy path skips the materializing count, so downstream joins
-    # plan against Catalyst's ESTIMATE of the cached relation — which
-    # over-shoots aggregate outputs badly enough to demote joins the
-    # measured bound PROVES broadcast-safe (the round-7 regression:
-    # jaccard's per-doc sizes joins fell back to sort-merge at sf1,
-    # 7.3 -> 9.7 s). Annotate the frame so operators can re-assert the
-    # proof with an explicit broadcast hint (see provably_small). The
-    # annotation carries the POSITIVE size proof, not merely "not risky":
-    # a disabled broadcast threshold makes the frame not-risky but must
-    # never force hints the user's config forbids (round-8 fix).
-    df._sg_provably_small = proven  # noqa: SLF001 — engine-internal annotation
     return df
-
-
-def provably_small(df: DataFrame) -> bool:
-    """True iff :func:`eager_stats` measured a POSITIVE size proof for
-    ``df``: source-scan bytes x the call site's measured expansion bound
-    stay under an ENABLED broadcast threshold — a proof that frames
-    derived from it row-for-row (per-key aggregates, projections) are
-    broadcast-safe, strong enough to justify an explicit broadcast hint
-    where Catalyst's estimate would demote the join. Always False when
-    the session disables auto-broadcast (threshold <= 0): hints override
-    that config, and "the user forbade broadcasts" is not size
-    evidence."""
-    return bool(getattr(df, "_sg_provably_small", False))
 
 
 def tie_cache_lifetime(result: DataFrame, *frames: DataFrame) -> DataFrame:
@@ -227,9 +194,9 @@ def materialize(df: DataFrame, prefer_local: bool = False) -> DataFrame:
     sf1, BASELINE §K) plus one per IVF training iteration. Spark only
     deletes checkpoint files when
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (default
-    false) — set it, or use a per-job checkpoint dir deleted on exit
-    (README "reliable checkpoints" note), or the store grows without
-    bound across jobs.
+    false) — set it, or point the checkpoint dir at a per-job path the
+    caller deletes when the job ends (README "Running"), or the store
+    grows without bound across jobs.
 
     ``prefer_local=True`` keeps the frame on ``localCheckpoint`` even
     when a reliable dir is configured — for frames that are read once

@@ -54,9 +54,6 @@ SHINGLE_INDEX_BOUND = 8   # hashed (doc_id, n_sh, xxhash64) rows: 3.5-3.7x flat
 # compresses it to ~nothing and the ~2x headroom under the bound stands)
 MINHASH_SIG_BOUND = 5     # (doc_id, 32 longs): 2.3x flat
 SIMHASH_FP_BOUND = 1      # (doc_id, long): 0.08-0.10x
-WINNOW_FP_BOUND = 9       # (doc_id, long fp): 4.30x sf0.1 / 4.38x sf1 (round 13;
-# only the skew_robust join route consumes the frame twice and wants the cache —
-# the default window route is single-pass and uncached)
 
 
 # --------------------------------------------------------------------------
@@ -255,7 +252,7 @@ def minhash_signature(
 def band_hashes_col(sig_col, bands: int, num_perm: int):
     """array<long> of per-band hashes over a minhash signature column —
     band b = xxhash64 of its ``num_perm // bands`` signature slots. Pure
-    expression: computable at WRITE time (see :func:`write_minhash_store`)."""
+    expression, so it could be computed once at write time."""
     sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
     rows_per_band = num_perm // bands
     return F.array(
@@ -287,38 +284,6 @@ def _banded_candidate_join(banded: DataFrame, bands: int) -> DataFrame:
         .where((F.col("doc_a") < F.col("doc_b")) & first_agreeing)
         .select("doc_a", "doc_b")
     )
-
-
-def write_minhash_store(
-    df: DataFrame,
-    path: str,
-    num_perm: int = 32,
-    bands: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> None:
-    """Materialize (id, sig, bhs) at WRITE time. At 100 TB signatures are
-    computed once at ingest and every dedup run starts from this compact
-    store (num_perm+bands longs per doc, no text) — candidate generation
-    then never tokenizes, hashes, or aggregates the corpus again
-    (:func:`lsh_candidate_pairs_stored`, plan-pinned in
-    tests/test_scale_layout.py)."""
-    sigs = minhash_signature(df, num_perm, id_col, text_col, n)
-    sigs.select(
-        F.col(id_col), "sig", band_hashes_col("sig", bands, num_perm).alias("bhs")
-    ).write.mode("overwrite").parquet(path)
-
-
-def lsh_candidate_pairs_stored(spark, path: str, bands: int, id_col: str = "doc_id") -> DataFrame:
-    """LSH candidate pairs straight from a :func:`write_minhash_store`
-    layout: scan → posexplode(bhs) → equi-join. No shingling, no minhash
-    aggregation, no band hashing at query time."""
-    stored = spark.read.parquet(path)
-    banded = stored.select(
-        F.col(id_col).alias("_id"), "bhs", F.posexplode("bhs").alias("band", "band_hash")
-    )
-    return _banded_candidate_join(banded, bands)
 
 
 def lsh_candidate_pairs(
@@ -427,8 +392,8 @@ def minhash_near_dups(
 # Dedup clusters (connected components over near-dup pairs)
 # --------------------------------------------------------------------------
 
-#: Cost crossover for the driver-local components route (round 13, the
-#: sixth decision on the plans/cost.py seam): edge lists at or below
+#: Cost crossover for the driver-local components route (round 13, a
+#: decision on the plans/cost.py seam): edge lists at or below
 #: this count are collected (Arrow path) and labeled with a vectorized
 #: numpy pointer-jumping union-find on the driver; larger ones take the
 #: distributed hash-min loop. Rationale: the loop's cost floor is its
@@ -603,12 +568,12 @@ def connected_components(
     # and the loop's per-round re-reads scan the same materialized bytes.
     pairs = materialize(edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")))
 
-    # Round-13 driver-local route (the sixth plans/cost.py decision):
+    # Round-13 driver-local route (a plans/cost.py decision):
     # the loop's floor is ~6+ SEQUENTIAL jobs (seed + per-round
     # checkpoints + convergence counts) — pure latency for edge lists
     # that fit one Arrow collect. Decide on the materialized pair
     # count (one cheap job over the checkpointed blocks — the same
-    # measure-then-route shape as the edge/skew/state/ANN seams); label
+    # measure-then-route shape as the edge/ANN/decode seams); label
     # on the driver with the vectorized numpy union-find, parallelize
     # the (small) label relation back, and keep the vertex frame fully
     # distributed — only edge ENDPOINT PAIRS ever reach the driver,
@@ -1165,9 +1130,7 @@ def winnow_sql(k: int = WINNOW_K, w: int = WINNOW_W, table: str = "documents") -
     """
 
 
-def winnow_shared_docs(
-    fps: DataFrame, id_col: str = "doc_id", skew_robust: bool = False
-) -> DataFrame:
+def winnow_shared_docs(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per-document shared-span summary over a winnow fingerprint frame:
     one row per document carrying >= 1 fingerprint that also appears in
     another document — (id_col, survivor_id, n_copies) where
@@ -1177,41 +1140,24 @@ def winnow_shared_docs(
     fingerprints are shared (the duplicated-span mass, the quantity a
     curation pipeline thresholds on).
 
-    Two formulations, identical row set (pinned equal in tests):
-
-    - default (window): per-fp count/min as whole-partition window
-      functions over ONE sort-shuffle of the fingerprint frame, then
-      the per-doc aggregate. Measured 1.5-2x the join route at sf1/sf10
-      (round 13) AND single-consumer — the expensive fingerprint kernel
-      feeds straight through without caching.
-    - ``skew_robust=True`` (groupBy + join-back): one partially-
-      aggregated groupBy(fp) and a 1:N equi-join. Slower (the big frame
-      shuffles twice, and the caller should cache ``fps``), but a
-      pathological boilerplate fingerprint — one fp carried by 10^7+
-      documents, e.g. a license header at full-corpus scale — lands in
-      an AQE-splittable join partition instead of a single window task
-      (window partitions cannot be split; Spark sorts each fp's rows in
-      one task and would spill). Flip this on when a fingerprint's
-      document frequency can approach a partition's memory budget; the
-      oracle sees the identical (exact) row set either way, which is
-      also why there is no DF cap here (cf. the shingle index, where
-      the cap is part of the contract).
+    Per-fp count/min run as whole-partition window functions over ONE
+    sort-shuffle of the fingerprint frame, then the per-doc aggregate:
+    single-consumer, so the expensive fingerprint kernel feeds straight
+    through without caching. A groupBy(fp) + join-back formulation
+    measured 1.5-2x slower at sf1/sf10 (round 13). Window partitions
+    cannot be split, so a fingerprint carried by 10^7+ documents (a
+    license header at full-corpus scale) sorts in one task. There is no
+    DF cap here (cf. the shingle index, where the cap is part of the
+    contract): the oracle sees the exact row set.
     """
-    if skew_robust:
-        stats = fps.groupBy("fp").agg(
-            F.count(F.lit(1)).alias("_n_docs"),
-            F.min(id_col).alias("_first_doc"),
-        )
-        shared = fps.join(stats.where(F.col("_n_docs") >= 2), "fp")
-    else:
-        from pyspark.sql import Window
+    from pyspark.sql import Window
 
-        wfp = Window.partitionBy("fp")
-        shared = (
-            fps.withColumn("_n_docs", F.count(F.lit(1)).over(wfp))
-            .withColumn("_first_doc", F.min(id_col).over(wfp))
-            .where(F.col("_n_docs") >= 2)
-        )
+    wfp = Window.partitionBy("fp")
+    shared = (
+        fps.withColumn("_n_docs", F.count(F.lit(1)).over(wfp))
+        .withColumn("_first_doc", F.min(id_col).over(wfp))
+        .where(F.col("_n_docs") >= 2)
+    )
     return shared.groupBy(id_col).agg(
         F.min("_first_doc").alias("survivor_id"),
         F.count(F.lit(1)).alias("n_copies"),

@@ -31,10 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Metadata schema accompanying every payload column.
-META_FIELDS = "modality string, byte_len long, encoding string"
-
-
 def attach_payload(df: DataFrame, text_col: str = "text", modality: str = "text") -> DataFrame:
     """Wrap a column as (payload: binary, meta: struct) — the canonical
     multimodal row shape. Here the payload is the utf-8 encoding of the
@@ -107,7 +103,7 @@ def decode_image_pillow(payload_bytes: bytes) -> dict:
 #: PINNED from the round-12 production-payload measurement
 #: (SCALE_R12_MM_REALISTIC.json, 121 KB 256x192 stills / 4-frame clips /
 #: 5 s stereo audio on 32 cores). These are the statistics the 'auto'
-#: backend decision compares, exactly as the edge/skew/state/ANN seams
+#: backend decision compares, exactly as the edge/components/ANN seams
 #: pin their crossovers from scale A/Bs.
 NATIVE_DECODE_MBPS_PER_CORE = {
     "jpeg": 0.38,   # transform codec, per-symbol Python after LUT rework
@@ -146,9 +142,9 @@ def sniff_image_format(payload_bytes: bytes) -> str:
 
 
 def decide_decode_backend(fmt: str, adapter_available: bool):
-    """The FIFTH measured-crossover decision on the shared
-    ``plans/cost.py`` seam (after dedup edge method, skew salting,
-    streaming state store, ANN live-vs-stored): route a payload class to
+    """A measured-crossover decision on the shared ``plans/cost.py``
+    seam (with the dedup edge method, the components route and ANN
+    live-vs-stored): route a payload class to
     the production decode adapter when its measured NATIVE rate sits
     under :data:`DECODE_ADAPTER_CROSSOVER_MBPS` — at 100 TB,
     entropy-coded image decode is the governing cost
@@ -2547,12 +2543,6 @@ def decode_avi_mjpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
     if not frames:
         raise ValueError("AVI movi list carries no video frames")
     return width, height, np.stack(frames)
-
-
-#: The AVI decoder handles every layout the container can carry without
-#: an inter-frame entropy codec; alias the dispatching name for callers
-#: reading it as the general container entry point.
-decode_avi = decode_avi_mjpeg
 
 
 def _mjpeg_fixture_geom(doc_id: int) -> tuple[int, int, int]:

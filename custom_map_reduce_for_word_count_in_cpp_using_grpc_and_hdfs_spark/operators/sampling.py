@@ -1,4 +1,4 @@
-"""Deterministic sampling for training-data pipelines.
+"""Deterministic hash buckets for sampling training-data pipelines.
 
 Random sampling (``df.sample``) is wrong for corpus curation at scale:
 it is not reproducible across retries (a re-run of a failed stage picks
@@ -15,21 +15,16 @@ range. Properties:
   grows into the 10% run without recomputing.
 
 The hash is the engine-portable polynomial fold from
-``functions/hashing.py``, so every operator here is exactly
-reproducible by the DuckDB oracle (and by any other engine — the
-recurrence is ~5 lines in any SQL dialect).
-
-``stratified_exact_k`` keeps exactly k rows per stratum — the "cap each
-language/source at N documents" balancing step. Hash-ordering inside the
-stratum makes the pick deterministic yet unbiased by ingestion order; a
-single window over (stratum) is one shuffle, and at 100 TB the heavy
-strata stream through TakeOrderedAndProject-style partial top-k inside
-each partition before the final per-stratum sort.
+``functions/hashing.py``, so :func:`hash_bucket` is exactly reproducible
+by the DuckDB oracle through :func:`hash_bucket_sql` (and by any other
+engine — the recurrence is ~5 lines in any SQL dialect). The curation
+pipeline tags every surviving document with its ``sample_bucket``
+(queries/pipeline_q.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import (
@@ -49,69 +44,3 @@ def hash_bucket_sql(key_expr: str, n_buckets: int = 100) -> str:
     """DuckDB rendering of :func:`hash_bucket` (same fold, same mod)."""
     return f"({poly_hash_chars_sql(f'CAST({key_expr} AS VARCHAR)')} % {n_buckets})"
 
-
-def deterministic_sample(
-    df: DataFrame, key_col: str, keep_buckets: int, n_buckets: int = 100
-) -> DataFrame:
-    """Keep rows whose key hashes into the first ``keep_buckets`` of
-    ``n_buckets`` — a reproducible ~keep/n fraction of the input. The
-    predicate is a pure codegen expression, so it pushes below joins
-    and survives stage retries bit-for-bit."""
-    return df.where(hash_bucket(key_col, n_buckets) < keep_buckets)
-
-
-def stratified_exact_k(
-    df: DataFrame, strata_cols: list[str], k: int, key_col: str
-) -> DataFrame:
-    """Exactly min(k, |stratum|) rows per stratum, picked by hash order
-    (key order as tiebreak for full determinism)."""
-    w = Window.partitionBy(*strata_cols).orderBy(
-        hash_bucket(key_col, 1 << 30).asc(), F.col(key_col).asc()
-    )
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def weighted_sample(
-    df: DataFrame, key_col: str, weight: Column | str | float
-) -> DataFrame:
-    """Keep each row with probability ``weight`` (a column, column name,
-    or constant in [0, 1]), decided by the row's own key hash — the
-    quality-weighted downsampling step of a curation pipeline ("keep 90%
-    of high-quality docs, 10% of low").
-
-    Deterministic (same key + weight → same decision across runs, stage
-    retries, and engines via the portable hash), composable with
-    ``deterministic_sample``'s independent bucket space, and a pure
-    codegen predicate that pushes below joins. Integer compare: the
-    hash's uniform residue in [0, 10^6) is kept iff < round(w * 10^6).
-    """
-    if isinstance(weight, (int, float)):
-        weight = F.lit(float(weight))
-    elif isinstance(weight, str):
-        weight = F.col(weight)
-    # The rolling hash is positional, NOT mixing — sequential keys give
-    # sequential hash values (fine for hash_bucket, whose small modulus
-    # cycles uniformly; useless against a wide threshold). A Fibonacci
-    # multiplicative mix (Knuth 2654435761 mod 2^32) equidistributes
-    # sequential inputs; all arithmetic stays inside int64 on both
-    # engines (h < 10^9, product < 2.7*10^18). The "w|" salt keeps this
-    # residue space independent of hash_bucket's, so a bucket-sampled
-    # frame re-weighted afterwards stays unbiased.
-    key = F.col(key_col) if isinstance(key_col, str) else key_col
-    h = poly_hash_chars(F.concat(F.lit("w|"), key.cast("string")))
-    mixed = F.pmod(h * F.lit(2654435761), F.lit(4294967296))
-    residue = F.pmod(mixed, F.lit(1_000_000))
-    return df.where(residue < F.round(weight * 1_000_000).cast("long"))
-
-
-def weighted_sample_sql(key_expr: str, weight_expr: str) -> str:
-    """DuckDB rendering of :func:`weighted_sample`'s predicate."""
-    h = poly_hash_chars_sql(f"'w|' || CAST({key_expr} AS VARCHAR)")
-    return (
-        f"(((({h}) * 2654435761) % 4294967296) % 1000000)"
-        f" < CAST(round(({weight_expr}) * 1000000) AS BIGINT)"
-    )

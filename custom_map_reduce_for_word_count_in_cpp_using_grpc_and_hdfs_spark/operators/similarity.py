@@ -229,9 +229,11 @@ def cosine_batch_near_dups(
 
 
 def band_codes_vectorized(planes: np.ndarray, bands: int):
-    """Arrow-vectorized variant of :func:`band_codes`: one BLAS matmul
-    per batch — (batch, dim) @ (dim, n_planes) — instead of n_planes
-    interpreted ``aggregate`` lambda folds per row.
+    """Per-band sign-bit codes as an array<int> column: band b's code
+    packs the sign bits of its ``len(planes)//bands`` hyperplanes,
+    computed Arrow-vectorized — one BLAS matmul per batch, (batch, dim)
+    @ (dim, n_planes) — instead of n_planes interpreted ``aggregate``
+    lambda folds per row.
 
     This is the deliberate exception to the engine's no-Python-UDF rule:
     higher-order-function expressions run INTERPRETED (outside
@@ -255,33 +257,6 @@ def band_codes_vectorized(planes: np.ndarray, bands: int):
         return pd.Series(list(B.astype(np.int32)))
 
     return codes
-
-
-def band_codes(vec_col, planes: np.ndarray, bands: int):
-    """Per-band sign-bit codes as an array<int> column: band b's code
-    packs the sign bits of its ``len(planes)//bands`` hyperplanes.
-    Pure expression — computable at write time, so a 100 TB corpus can
-    be stored bucketed by (band, code) for candidate-local joins.
-    For query-time bulk use prefer :func:`band_codes_vectorized`."""
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    width = len(planes) // bands
-    codes = []
-    for b in range(bands):
-        code = F.lit(0)
-        for j in range(width):
-            p = planes[b * width + j]
-            dot_j = F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(float(x)) for x in p]),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            code = code + F.when(dot_j >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        codes.append(code)
-    return F.array(*codes)
 
 
 def lsh_band_geometry(
@@ -815,91 +790,6 @@ def ivf_topk_stored(
     return _topk_by_score(scored, k)
 
 
-def quantized_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    overfetch: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Int8-quantized first pass + exact rescoring — the memory-bound ANN
-    shape: symmetric per-vector quantization (scale = max|x|/127) shrinks
-    the scanned corpus 8x and turns the scoring fold into integer
-    multiply-adds; the top k*overfetch candidates per query are then
-    rescored with the exact double cosine and cut to k.
-
-    approx_dot(a, b) = s_a * s_b * <qa, qb> with integer <qa, qb> — exact
-    long arithmetic, so candidate ranking is order-deterministic. At
-    100 TB the quantized columns are computed at WRITE time and stored
-    alongside (or instead of) the float vectors. The candidate window
-    and the rescore both run WITHOUT the float vectors attached: the
-    first pass scores (query_id, neighbor_id, approx_score) only, and
-    the k*overfetch survivors are joined back to the float columns by id
-    with the CANDIDATE side broadcast — the corpus streams through both
-    passes, never shuffled and never carrying arrays into a window.
-    Recall vs brute force is measured in tests, not assumed.
-    """
-
-    def quant(df: DataFrame, out_id: str, out_q: str, out_s: str) -> DataFrame:
-        vec = F.col(vec_col)
-        mx = F.array_max(F.transform(vec, lambda x: F.abs(x.cast("double"))))
-        s = F.when(mx == 0, F.lit(1.0)).otherwise(mx / F.lit(127.0))
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.transform(vec, lambda x: F.round(x.cast("double") / s).cast("long")).alias(out_q),
-            s.alias(out_s),
-        )
-
-    q = quant(queries, "query_id", "q_q", "q_s")
-    c = quant(spread(corpus, by=[id_col]), "neighbor_id", "c_q", "c_s")
-    int_dot = F.aggregate(
-        F.zip_with(F.col("q_q"), F.col("c_q"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    approx = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("q_s") * F.col("c_s") * int_dot).alias("approx_score"),
-        )
-    )
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("approx_score").desc(), F.col("neighbor_id").asc()
-    )
-    candidates = (
-        approx.withColumn("r", F.row_number().over(w_cand))
-        .where(F.col("r") <= k * overfetch)
-        .select("query_id", "neighbor_id")
-    )
-    # join the float vectors back by id: candidates (|Q| * k * overfetch
-    # rows) broadcast against the streaming corpus, then the tiny query
-    # set — no corpus shuffle, no arrays through a window
-    q_vecs = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    c_vecs = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    paired = (
-        c_vecs.join(F.broadcast(candidates), "neighbor_id")
-        .join(F.broadcast(q_vecs), "query_id")
-    )
-    # zero-norm guard: cosine's norm division would raise under ANSI mode
-    # (and 0/0-NaN otherwise); a directionless vector scores 0 everywhere
-    qn, cn = norm2("q_vec"), norm2("c_vec")
-    safe_cosine = F.when((qn == 0) | (cn == 0), F.lit(0.0)).otherwise(
-        dot("q_vec", "c_vec") / (qn * cn)
-    )
-    rescored = paired.select("query_id", "neighbor_id", safe_cosine.alias("score"))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
-    )
-
-
 #: Live-vs-stored IVF crossover, in corpus vectors — pinned from the
 #: round-12 cold A/B (SCALE_R12_ANN_CROSSOVER.json) plus the decade
 #: record (SCALE_R11_ANN.json). Two measured curves, and it's RECALL,
@@ -1018,10 +908,9 @@ def auto_ivf_topk(
     vec_col: str = "embedding",
     crossover: int = IVF_AUTO_CROSSOVER_VECTORS,
 ):
-    """Cost-aware IVF top-k — the fourth measured-crossover default on
-    the shared ``plans/cost.py`` seam (after edge route, skew salting,
-    state store). Measures the corpus size (one metadata-cheap count)
-    and routes:
+    """Cost-aware IVF top-k — a measured-crossover default on the
+    shared ``plans/cost.py`` seam, like the near-dup edge route.
+    Measures the corpus size (one metadata-cheap count) and routes:
 
     - ``live`` (≤ crossover): in-plan Lloyd training at k=16 + in-plan
       bucket assignment (:func:`ivf_centroids` + :func:`ivf_topk`) —

@@ -1,15 +1,3 @@
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.explain import (
-    formatted_plan,
-    plan_has_broadcast_join,
-    pushed_filters,
-    read_schema,
-)
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import salted_group_agg
 
-__all__ = [
-    "formatted_plan",
-    "plan_has_broadcast_join",
-    "pushed_filters",
-    "read_schema",
-    "salted_group_agg",
-]
+__all__ = ["salted_group_agg"]

@@ -1,25 +1,28 @@
 """Shared measured-crossover decision seam.
 
-Three cost-aware defaults in this engine follow one pattern — measure a
+Four cost-aware defaults in this engine follow one pattern — measure a
 cheap statistic, compare it to a crossover PINNED from an A/B run at
 scale, log which side won and why, select the route:
 
 - near-dup edge route (``queries/pipeline_q.choose_edge_method``):
   estimated shingle postings vs the 30M crossover where MinHash+LSH
   overtakes the exact shingle-index join (sf100 A/B: 0.33x).
-- skewed-join strategy (``plans/skew.auto_skew_join``): the hottest
-  key's ROW share vs the 0.5 crossover where salting beats leaving the
-  hot key in one task (sf10 A/B: 3.4x win above, 2x loss below).
-- streaming dedup state-store provider (``streaming/stateful``):
-  expected distinct-key cardinality vs the on-heap blow-up point
-  (sf100: 26.3 GB on-heap vs 449 MB RocksDB at 100M events).
+- connected-components route (``operators/dedup.connected_components``):
+  the materialized edge count vs the 2M-edge cap up to which one
+  driver-local union-find beats the distributed label-propagation loop.
+- multimodal decode backend (``operators/multimodal``): a payload
+  class's native decode MB/s/core vs the 2.0 MB/s/core rate below which
+  the library adapter wins.
+- IVF top-k route (``operators/similarity.auto_ivf_topk``): corpus
+  vectors vs the 60k-vector size above which the stored,
+  partition-pruned index beats in-plan training.
 
 Centralizing the compare-and-log step keeps every new cost-aware
 default on one seam with one test pattern (VERDICT r9 item 7): the
 callers stay responsible for MEASURING their statistic (each has a
-different cheap path — metadata counts, sampled aggregates, caller
-hints) and for acting on the label; this module owns the decision and
-its audit trail.
+different cheap path — metadata counts, sampled aggregates, static
+rate tables) and for acting on the label; this module owns the decision
+and its audit trail.
 """
 
 from __future__ import annotations
@@ -54,13 +57,11 @@ def decide_crossover(
     logger: logging.Logger | None = None,
     detail: str = "",
 ) -> CostDecision:
-    """Pick ``above_label`` iff ``stat > crossover`` (strict, matching
-    both pre-existing callers), log the selection with the evidence, and
-    return the full decision record.
+    """Pick ``above_label`` iff ``stat > crossover`` (strict), log the
+    selection with the evidence, and return the full decision record.
 
     Pure and unit-testable at both ends of every caller's measured A/B —
-    the convention set by ``_decide_edge_method`` / ``_decide_salting``,
-    which now delegate here.
+    the convention set by ``_decide_edge_method``, which delegates here.
     """
     choice = above_label if stat > crossover else below_label
     d = CostDecision(choice=choice, stat=float(stat), crossover=float(crossover), stat_name=stat_name)

@@ -101,11 +101,21 @@ def scan_file_sizes(df: DataFrame) -> list[int] | None:
         return None
 
 
-#: Analyzed-plan node names that preserve the scan's row count 1:1.
-#: Anything else (Filter, Join, Generate, Aggregate, Sample, Limit,
-#: Distinct, ...) disqualifies the frame from footer-based counting —
-#: unknown node types fail closed (fall back to a real count job).
-_ROW_PRESERVING_NODES = ("Project", "SubqueryAlias", "Relation", "View", "Alias")
+#: Analyzed-plan node names (``nodeName()``) that preserve the scan's
+#: row count 1:1. Anything else (Filter, Join, Generate, Aggregate,
+#: Sample, GlobalLimit, Distinct, ...) disqualifies the frame from
+#: footer-based counting — unknown node types fail closed (fall back to
+#: a real count job).
+_ROW_PRESERVING_NODES = frozenset({"Project", "SubqueryAlias", "View", "LogicalRelation"})
+
+
+def _row_preserving(plan) -> bool:
+    """True iff every node of the analyzed logical ``plan`` (a py4j
+    handle) is in :data:`_ROW_PRESERVING_NODES`."""
+    if plan.nodeName() not in _ROW_PRESERVING_NODES:
+        return False
+    children = plan.children()
+    return all(_row_preserving(children.apply(i)) for i in range(children.size()))
 
 
 def scan_row_count(df: DataFrame) -> int | None:
@@ -119,38 +129,17 @@ def scan_row_count(df: DataFrame) -> int | None:
     job returns (a bound would not do — e.g. LSH band geometry changes
     with ceil(log2(n)), and a changed geometry changes candidate sets).
 
-    The row-preserving guard parses the analyzed logical plan (captured
-    via the public ``explain`` API) and requires every node to be a
-    Project/SubqueryAlias/Relation — Filter/Join/Generate/Sample/Limit
-    or any UNKNOWN node name returns None, so new operators fail toward
-    the correct (job-based) path, never toward a wrong count."""
+    The row-preserving guard walks the analyzed logical plan node by
+    node and admits only Project/SubqueryAlias/View/LogicalRelation —
+    Filter/Join/Generate/Sample/Limit or any UNKNOWN node name returns
+    None, so new operators fail toward the correct (job-based) path,
+    never toward a wrong count."""
     paths = _local_scan_paths(df)
     if paths is None or not all(p.endswith(".parquet") for p in paths):
         return None
-    import contextlib
-    import io
-    import re
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("extended")
-    text = buf.getvalue()
-    m = re.search(
-        r"== Analyzed Logical Plan ==\n(.*?)\n== Optimized Logical Plan ==",
-        text,
-        re.DOTALL,
-    )
-    if not m:
-        return None
-    # first line of the section is the output schema; the rest are nodes
-    for line in m.group(1).splitlines()[1:]:
-        stripped = re.sub(r"^[\s:+\-]*", "", line)
-        if not stripped:
-            continue
-        node = re.match(r"[A-Za-z]+", stripped)
-        if node is None or not any(node.group(0).startswith(ok) for ok in _ROW_PRESERVING_NODES):
-            return None
     try:
+        if not _row_preserving(df._jdf.queryExecution().analyzed()):
+            return None
         import pyarrow.parquet as pq
 
         return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)

@@ -14,12 +14,8 @@ merge expressions explicitly.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-_LOG = logging.getLogger(__name__)
 
 
 def salted_group_agg(
@@ -69,174 +65,3 @@ def salted_word_count(words: DataFrame, word_col: str = "word", num_salts: int =
         num_salts,
     )
 
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    num_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join for when AQE's skew splitting isn't available
-    (legacy engines, disabled AQE, or a skew AQE can't see because stats
-    arrive too late): salt the big side, REPLICATE the small side once
-    per salt, join on (key, salt).
-
-    The big side's hot key spreads over ``num_salts`` tasks; the small
-    side grows num_salts-fold — acceptable exactly when it is small
-    (the same precondition as a broadcast, which is why this helper is
-    the fallback, not the default: prefer `F.broadcast` or AQE skew
-    join, in that order; see SCALE.md).
-
-    The salt is PER-ROW — ``pmod(xxhash64(monotonically_increasing_id()),
-    S)`` — not per-partition: a partition-id salt is constant for every
-    row of an input partition, so a hot key concentrated in few
-    partitions (the typical post-shuffle / bucketed-scan skew scenario
-    this helper exists for) would still land in ~one reduce task and get
-    zero relief. monotonically_increasing_id varies within a partition,
-    so a hot key spreads over all ``num_salts`` subkeys regardless of
-    input clustering. Which salt a row gets never affects the result
-    (each big row matches exactly the replica carrying its own salt), so
-    the id's instability under retries is harmless here.
-
-    All four equi-join types are supported. ``inner``/``left`` preserve
-    the (salted) big side directly. ``right``/``full`` need care: a
-    small row's key may match big rows under *some* salts and not
-    others, so a per-replica outer join would emit spurious
-    null-extended rows (and ``num_salts`` duplicates for truly
-    unmatched keys). Instead the preserved-small half is rebuilt
-    exactly: salted inner/left join ∪ (small rows whose key appears
-    nowhere in big, null-extended on the big columns).
-
-    Big-side cost note (round-5 audit): the rebuild's
-    ``big.select(key).distinct()`` is a SECOND pass over big, but NOT a
-    second full-table read — Catalyst prunes that branch's scan to the
-    key column alone (plan-pinned in tests/test_sinks_and_skew.py:
-    the anti-join branch's ReadSchema carries only ``key``), and partial
-    aggregation collapses each partition's keys map-side before the
-    distinct's (tiny) shuffle. On a columnar store the extra I/O is one
-    column of one table — typically 1-5% of the table bytes, fully
-    parallel, skew-free. The alternatives lose at 100 TB: persisting or
-    checkpointing the salted join output to share its lineage
-    materializes the full join (≥ the table's width) to executor disk,
-    and forcing a shared (key, salt) exchange for ReuseExchange was
-    measured to be impossible without defeating column pruning — the
-    pruned branch's subtree is never byte-identical to the full-width
-    join branch, so Catalyst will not unify them. A caller that already
-    has ``big`` cached gets the reuse for free.
-    """
-    if how not in ("inner", "left", "right", "full"):
-        raise ValueError(f"salted_join supports inner/left/right/full, got {how!r}")
-    salted_big = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(num_salts)).cast("int")
-    )
-    replicated_small = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(num_salts)]))
-    )
-    base_how = "left" if how in ("left", "full") else "inner"
-    joined = salted_big.join(replicated_small, [key, "_salt"], base_how).drop("_salt")
-    if how in ("inner", "left"):
-        return joined
-    # right/full: append each small row whose key never occurs in big,
-    # once, null-extended on the big columns. Null-keyed small rows are
-    # kept (a null key never equals anything — standard outer-join
-    # semantics, same as left_anti's null-unsafe match). See the
-    # docstring's cost note: this branch's scan of big is column-pruned
-    # to the key (plan-pinned), not a second full-width pass.
-    unmatched = small.join(big.select(key).distinct(), [key], "left_anti")
-    big_types = {f.name: f.dataType for f in big.schema.fields}
-    extended = unmatched.select(
-        F.col(key),
-        *[F.lit(None).cast(big_types[c]).alias(c) for c in big.columns if c != key],
-        *[F.col(c) for c in small.columns if c != key],
-    )
-    return joined.unionByName(extended)
-
-
-#: Hot-key share above which salting the join beats leaving the hot key
-#: in one task, measured on the sf10 fact-fact A/B (SCALE.md lesson 35,
-#: SCALE_R9_SF10_SKEWJOIN.json): at a 1/3-hot key salted_join LOST
-#: 2x (16x dim replication costs more than the hot task saves); at a
-#: 2/3-hot key it won 3.4x over the unsplit join. 0.5 splits the two
-#: measured points.
-SALT_HOT_SHARE_THRESHOLD = 0.5
-
-
-def _decide_salting(hot_count: int, total: int, threshold: float) -> tuple[bool, float]:
-    """Pure decision (unit-testable at both measured ends): salt iff the
-    hottest key's row share exceeds the pinned crossover. Delegates the
-    compare-and-log to the shared plans/cost.py seam (VERDICT r9 item 7)."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
-
-    share = hot_count / total if total else 0.0
-    d = decide_crossover(
-        share,
-        threshold,
-        "salted",
-        "plain",
-        "hot-key row share",
-        logger=_LOG,
-        detail=f"hottest key {hot_count} of {total} rows",
-    )
-    return d.choice == "salted", share
-
-
-def measure_key_skew(big: DataFrame, key: str) -> tuple[int, int]:
-    """ONE narrow Spark job returning (hottest key's row count, total
-    rows) for ``key`` in ``big``: a column-pruned scan with map-side
-    partial aggregation, then a 1-row rollup — max and sum ride the same
-    job (round-10 fix for the ADVICE r9 two-action pre-pass, which also
-    evaluated an uncached derived ``big``'s lineage twice). Callers that
-    join the same table on the same key repeatedly should compute this
-    once and pass it to :func:`auto_skew_join` via ``stats=``."""
-    row = (
-        big.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(F.max("_n").alias("_hot"), F.sum("_n").alias("_total"))
-        .first()
-    )
-    hot = int(row["_hot"]) if row and row["_hot"] is not None else 0
-    total = int(row["_total"]) if row and row["_total"] is not None else 0
-    return hot, total
-
-
-def auto_skew_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    num_salts: int = 16,
-    how: str = "inner",
-    threshold: float = SALT_HOT_SHARE_THRESHOLD,
-    stats: tuple[int, int] | None = None,
-) -> DataFrame:
-    """Cost-aware skew guard for the equi-join class AQE cannot see
-    (round 9, from SCALE.md lesson 35's measured blind spot): AQE's
-    skew detector reads COMPRESSED map-output bytes, so a hot key whose
-    rows are byte-light — a constant join key after column pruning, a
-    narrow or highly compressible row — can carry most of the ROWS
-    while every partition looks balanced in bytes, leaving one task
-    with the merge work. This helper measures the ROW skew directly and
-    picks the strategy from the measured crossover: ONE narrow Spark job
-    computes both the hottest key's count and the total (column-pruned
-    scan + map-side partial aggregation, max and sum riding the same
-    rollup — :func:`measure_key_skew`; the round-9 shape paid two jobs
-    and evaluated an uncached derived ``big``'s lineage twice), salting
-    only above the pinned threshold, where the sf10 A/B showed it wins
-    3.4x (and below which it measurably LOSES to the plain join). The
-    selection is logged via the shared plans/cost.py seam.
-
-    ``stats`` accepts a precomputed ``(hot_count, total)`` — pass it
-    when joining the same table on the same key repeatedly so the
-    pre-pass runs once per (table, key), not once per join; at 100 TB
-    the pre-pass is this helper's dominant cost when it decides "plain".
-
-    Use where AQE is unavailable OR the skew is byte-invisible; when
-    AQE can see the skew (wide rows), its in-flight split is the better
-    tool — measured 6.3x vs the salted route's 3.4x on the same
-    fixture — and this helper's plain-join branch leaves AQE in charge.
-    """
-    hot, total = stats if stats is not None else measure_key_skew(big, key)
-    salt, _share = _decide_salting(hot, total, threshold)
-    if salt:
-        return salted_join(big, small, key, num_salts=num_salts, how=how)
-    return big.join(small, [key], how)

@@ -108,9 +108,7 @@ def dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_copies = the doc's shared-fingerprint count.
     # the window formulation consumes the fingerprint frame exactly once
     # (count/min per fp as whole-partition window functions over one
-    # sort-shuffle), so the expensive kernel pass needs no cache — see
-    # winnow_shared_docs for the skew_robust alternative and when to
-    # prefer it
+    # sort-shuffle), so the expensive kernel pass needs no cache
     winnow = D.winnow_shared_docs(D.winnow_fingerprints(docs)).select(
         F.lit("winnow").alias("kind"),
         F.col("doc_id").cast("string").alias("key"),

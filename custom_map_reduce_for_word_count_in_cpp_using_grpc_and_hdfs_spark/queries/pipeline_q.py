@@ -185,7 +185,7 @@ def _decide_edge_method(n_docs: int, avg_shingles: float) -> tuple[str, float]:
     """Pure crossover decision (unit-testable at both ends): returns the
     chosen route and the estimated posting count it was based on.
     Delegates the compare-and-log to the shared plans/cost.py seam
-    (VERDICT r9 item 7) — same pattern as plans/skew._decide_salting."""
+    (VERDICT r9 item 7)."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
 
     est = n_docs * avg_shingles

@@ -116,7 +116,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF variant, COST-AWARE since round 12 (VERDICT r11 item 1):
-    routes through ``plans/cost.py`` like the edge/skew/state seams —
+    routes through ``plans/cost.py`` like the edge-route seam —
     below the measured corpus-size crossover the live in-plan route
     (k=16 Lloyd training + in-plan assignment, nprobe 10); above it the
     scale route (√N sampled-k-means centroids, write-once

@@ -28,10 +28,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-#: Small dimension tables — always broadcast-join candidates. At SF ratios
-#: (TPC-H-like) these stay tiny relative to the fact tables.
-DIM_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier", "customer", "part"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table from ``sf_dir``.
@@ -49,13 +45,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    """The events table is written with TIMESTAMP(NANOS) parquet type,
-    which Spark's vectorized reader rejects outright. Read nanos as long
-    (legacy conf) and truncate to microseconds — the same truncation
-    DuckDB applies, so oracle comparisons stay exact."""
+    """The events table may be written with TIMESTAMP(NANOS) parquet
+    type, which the engine conf reads as long nanos
+    (``spark.sql.legacy.parquet.nanosAsLong``, session.ENGINE_CONF);
+    truncate those to microseconds — the same truncation DuckDB applies,
+    so oracle comparisons stay exact."""
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":

@@ -31,8 +31,3 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
         reader = reader.option("header", "true").option("inferSchema", "true")
     return reader.load(path)
 
-
-def roundtrip(spark: SparkSession, df: DataFrame, path: str, fmt: str) -> DataFrame:
-    """Write then read back — the format-coverage test primitive."""
-    write_table(df, path, fmt)
-    return read_table(spark, path, fmt)

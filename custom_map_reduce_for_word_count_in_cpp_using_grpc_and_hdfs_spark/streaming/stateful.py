@@ -8,8 +8,8 @@ emits its state on every trigger — the skeleton any custom stateful op
 (fraud scoring, CEP, per-entity model state) starts from.
 
 Scale: state lives in the state store partitioned by the grouping key;
-timeouts (``GroupStateTimeout``) bound state lifetime exactly like a
-watermark bounds windowed aggs.
+the accumulator never times a key out, so state grows with the keys
+seen.
 """
 
 from __future__ import annotations
@@ -51,8 +51,8 @@ def user_activity_state(events: DataFrame) -> DataFrame:
     user per trigger carrying the running (count, value-cents) state.
 
     Unbounded state lifetime (NoTimeout) — correct for bounded drains and
-    small key spaces; production streams with open-ended key spaces use
-    :func:`user_activity_state_with_timeout` so idle keys are evicted."""
+    small key spaces; an open-ended key space needs a processing-time
+    timeout that evicts idle keys."""
     return events.groupBy("user_id").applyInPandasWithState(
         _accumulate,
         outputStructType=OUTPUT_SCHEMA,
@@ -61,128 +61,3 @@ def user_activity_state(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-#: Timeout-variant output: the running state plus whether this row is an
-#: eviction tombstone (the key's final state at idle-timeout).
-TIMEOUT_OUTPUT_SCHEMA = "user_id BIGINT, n_events BIGINT, total_value_cents BIGINT, evicted BOOLEAN"
-
-
-def _accumulate_with_timeout(timeout_ms: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle-timeout fired with no new data: emit the tombstone
-            # carrying the final state, then drop the state entry — the
-            # bounded-state guarantee. If the key returns later it starts
-            # a FRESH accumulator (re-registration).
-            count, value_cents = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [count],
-                    "total_value_cents": [value_cents],
-                    "evicted": [True],
-                }
-            )
-            return
-        count, value_cents = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            count += len(pdf)
-            value_cents += int((pdf["value"] * 100).round().astype("int64").sum())
-        state.update((count, value_cents))
-        # the deadline must be re-armed on EVERY invocation that touches
-        # the key — ProcessingTimeTimeout deadlines are absolute, not
-        # sliding, and are cleared by update()
-        state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [count],
-                "total_value_cents": [value_cents],
-                "evicted": [False],
-            }
-        )
-
-    return fn
-
-
-def user_activity_state_with_timeout(events: DataFrame, timeout_ms: int = 500) -> DataFrame:
-    """Bounded-state variant of :func:`user_activity_state`: keys idle
-    for ``timeout_ms`` of processing time are evicted (state removed,
-    tombstone row emitted with ``evicted=true``), and a key arriving
-    after its eviction re-registers from scratch. At 100 TB this is the
-    difference between a state store proportional to ACTIVE keys and one
-    proportional to ALL keys ever seen."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _accumulate_with_timeout(timeout_ms),
-        outputStructType=TIMEOUT_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-# --------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API v2)
-# --------------------------------------------------------------------------
-
-try:  # the v2 API's state-server protocol needs protobuf at runtime
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _ActivityProcessor(StatefulProcessor):
-        """StatefulProcessor twin of :func:`user_activity_state`'s
-        accumulator: a ValueState holding (count, value_cents), updated
-        per Arrow batch, one output row per key per trigger."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._acc = handle.getValueState("acc", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001 — API signature
-            st = self._acc.get() if self._acc.exists() else (0, 0)
-            count, cents = int(st[0]), int(st[1])
-            for pdf in rows:
-                count += len(pdf)
-                cents += int((pdf["value"] * 100).round().astype("int64").sum())
-            self._acc.update((count, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [count], "total_value_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover — very old pyspark
-    _ActivityProcessor = None
-
-
-def user_activity_state_v2(events: DataFrame) -> DataFrame:
-    """:func:`user_activity_state` on Spark 4's arbitrary-state API v2
-    (``transformWithStateInPandas`` + ``StatefulProcessor``) — same
-    output schema and values, different state plumbing: named,
-    individually evolvable state variables (ValueState/ListState/
-    MapState), timers instead of GroupStateTimeout, and a
-    RocksDB-provider requirement (the API targets exactly the
-    high-cardinality posture ``session.use_state_store('rocksdb')``
-    configures).
-
-    Runtime prerequisites beyond the classic API: the RocksDB state
-    store provider AND the ``protobuf`` package (the v2 state server
-    speaks protobuf to the Python worker) — absent protobuf the query
-    fails at initialization with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE, which is an
-    environment gap, not an operator bug; the conformance test
-    (tests/test_streaming.py) skips cleanly there and asserts
-    output parity with :func:`user_activity_state` where the deps
-    exist."""
-    if _ActivityProcessor is None:
-        raise NotImplementedError("transformWithStateInPandas requires pyspark >= 4.0")
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _ActivityProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )

@@ -160,10 +160,8 @@ def decode_kafka_events(raw: DataFrame) -> DataFrame:
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DataFrame over the events table (ts normalized to
     microsecond timestamps, same as the batch reader)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     stream = events_source(spark, {"kind": "file", "sf_dir": sf_dir})
-    ts_kind = dict((f.name, f.dataType.simpleString()) for f in batch_schema.fields).get("ts")
+    ts_kind = dict(stream.dtypes).get("ts")
     if ts_kind == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_kind == "timestamp_ntz":

@@ -11,6 +11,11 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def formatted_plan(df) -> str:
+    """``df``'s formatted physical plan, for plan-shape assertions."""
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

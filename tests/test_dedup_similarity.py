@@ -302,36 +302,6 @@ def test_connected_components_raises_when_unconverged(spark):
     assert {r.comp for r in full.collect()} == {0}
 
 
-def test_quantized_topk_recall_vs_bruteforce(spark):
-    """Int8 quantization + 4x-overfetch exact rescore must recover nearly
-    all of the exact top-10 (the first pass only has to land true
-    neighbors inside the candidate pool)."""
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    queries = emb.where(F.expr("vec_id % 50 = 0"))
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in S.brute_force_topk(queries, emb, 10).collect()
-    }
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in S.quantized_topk(queries, emb, 10).collect()
-    }
-    assert exact
-    recall = len(approx & exact) / len(exact)
-    assert recall >= 0.9, recall
-
-
-def test_quantized_topk_zero_vector_safe(spark):
-    """A zero vector must quantize to the zero vector (scale guard), not
-    NaN, and score 0 against everything (ranking below any positive
-    cosine; the zero-vs-orthogonal tie at score 0 breaks by id)."""
-    rows = [(0, [0.0] * 4), (1, [1.0, 0.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0, 0.0]), (3, [0.1, 1.0, 0.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = S.quantized_topk(df.where("vec_id = 1"), df, k=2).collect()
-    got = [(r.neighbor_id, r.rank) for r in sorted(out, key=lambda r: r.rank)]
-    assert got == [(2, 1), (3, 2)], got
-
-
 def test_connected_components_long_chain_converges_logarithmically(spark):
     """Path halving must collapse a 200-node path graph well inside
     max_iters=12 (2^12 >> 200) — plain hash-min would need ~200 rounds."""
@@ -342,21 +312,6 @@ def test_connected_components_long_chain_converges_logarithmically(spark):
     rows = comps.collect()
     assert len(rows) == n
     assert {r.comp for r in rows} == {0}, "one component rooted at min id"
-
-
-def test_band_codes_vectorized_matches_expression(spark):
-    """The Arrow-vectorized band-code path (numpy matmul per batch) must
-    produce the EXACT codes of the pure-expression path on the fixture —
-    the deliberate-Python-UDF exception stands only while the two agree
-    (a disagreement means a plane dot landed within summation-order
-    noise of 0, which continuous fixtures never produce)."""
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    planes = S.hyperplanes(64, 128)
-    expr = emb.select("vec_id", S.band_codes("embedding", planes, 16).alias("codes"))
-    vec = emb.select(
-        "vec_id", S.band_codes_vectorized(planes, 16)(F.col("embedding")).alias("codes2")
-    )
-    assert expr.join(vec, "vec_id").where(F.col("codes") != F.col("codes2")).count() == 0
 
 
 def test_connected_components_route_seam(spark, monkeypatch, caplog):
@@ -494,50 +449,29 @@ def test_eager_stats_count_gated_on_source_bytes(spark):
     fixed at small SF) that only pays when the cached relation could
     cross the broadcast threshold. Provably-small local scans keep the
     lazy persist; unsizeable sources (in-memory frames, remote schemes)
-    stay eager — the production-safe direction."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import _broadcast_risk
+    stay eager — the production-safe direction. A disabled threshold
+    (ADVICE r7) is neither a risk nor a proof of smallness: the user set
+    it to forbid broadcasts, which is no size evidence."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import _size_proof
 
     docs = load_table(spark, SF_CORRECT, "documents")
     # 65 KB parquet × 32 expansion bound << 64 MB threshold: no risk.
-    assert _broadcast_risk(D.doc_shingles(docs)) is False
+    assert _size_proof(D.doc_shingles(docs))[0] is False
+    # the same tiny source under its measured bound IS proven small
+    risky, proven, sizes = _size_proof(D.doc_shingles(docs), D.SHINGLE_INDEX_BOUND)
+    assert (risky, proven) == (False, True) and sizes
     # In-memory frame: no file listing, size unprovable → eager.
     mem = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    assert _broadcast_risk(D.doc_shingles(mem)) is True
-    # Auto-broadcast disabled: a mis-estimate cannot mis-plan → lazy.
+    assert _size_proof(D.doc_shingles(mem))[0] is True
+    # Auto-broadcast disabled: a mis-estimate cannot mis-plan → lazy,
+    # and nothing is proven.
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        assert _broadcast_risk(D.doc_shingles(mem)) is False
+        assert _size_proof(D.doc_shingles(mem))[0] is False
+        assert _size_proof(D.doc_shingles(docs), D.SHINGLE_INDEX_BOUND) == (False, False, None)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_disabled_threshold_is_not_a_smallness_proof(spark):
-    """ADVICE r7 (medium): with autoBroadcastJoinThreshold=-1 the frame
-    is not RISKY (the planner won't pick any estimate-driven broadcast)
-    but must also not be marked PROVABLY SMALL — explicit F.broadcast()
-    hints override a disabled threshold, so annotating "provably small"
-    off a config the user set specifically to prevent driver-OOM
-    broadcasts would force broadcasts backed by zero size evidence."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import caching
-
-    docs = load_table(spark, SF_CORRECT, "documents")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        frame = caching.eager_stats(D.doc_shingles(docs), D.SHINGLE_INDEX_BOUND)
-        try:
-            assert caching.provably_small(frame) is False
-        finally:
-            frame.unpersist()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    # with the threshold ENABLED the same tiny source IS proven small
-    frame = caching.eager_stats(D.doc_shingles(docs), D.SHINGLE_INDEX_BOUND)
-    try:
-        assert caching.provably_small(frame) is True
-    finally:
-        frame.unpersist()
 
 
 def test_eager_stats_lazy_path_logs_audit_line(spark):
@@ -872,12 +806,3 @@ def test_winnow_fingerprints_match_duckdb(spark):
     oracle_fps = {(r[0], r[1]) for r in con.execute(D.winnow_sql()).fetchall()}
     assert spark_fps == oracle_fps
 
-
-def test_winnow_shared_docs_formulations_agree(spark):
-    """The window (default) and skew_robust (groupBy + join-back)
-    formulations are two physical plans for one definition — identical
-    row sets on the real fixture."""
-    fps = D.winnow_fingerprints(load_table(spark, SF_CORRECT, "documents"))
-    window = {tuple(r) for r in D.winnow_shared_docs(fps).collect()}
-    joined = {tuple(r) for r in D.winnow_shared_docs(fps, skew_robust=True).collect()}
-    assert window == joined and window

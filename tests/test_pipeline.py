@@ -95,86 +95,35 @@ def test_curated_corpus_partitioned_write(spark, tmp_path_factory):
 
 
 def test_hash_sampling_deterministic_and_consistent(spark):
-    """Deterministic sampling (operators/sampling.py): retry-stable
-    buckets, composable rates, cross-table consistency, and exact-k
-    stratified picks."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.sampling import (
-        deterministic_sample,
-        hash_bucket,
-        stratified_exact_k,
-    )
+    """Deterministic sampling (operators/sampling.py): a bucket-range
+    sample is retry-stable and composable, and bucket assignment is
+    total and in range."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.sampling import hash_bucket
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     n = docs.count()
+
+    def sample(keep):
+        return docs.where(hash_bucket("doc_id") < keep).select("doc_id")
+
     # identical across independent evaluations (pure function of the key)
-    s1 = sorted(r.doc_id for r in deterministic_sample(docs, "doc_id", 10).select("doc_id").collect())
-    s2 = sorted(r.doc_id for r in deterministic_sample(docs, "doc_id", 10).select("doc_id").collect())
+    s1 = sorted(r.doc_id for r in sample(10).collect())
+    s2 = sorted(r.doc_id for r in sample(10).collect())
     assert s1 == s2 and 0 < len(s1) < n
     # a 1-bucket pilot is a subset of the 10-bucket run (composability)
-    pilot = set(r.doc_id for r in deterministic_sample(docs, "doc_id", 1).select("doc_id").collect())
+    pilot = set(r.doc_id for r in sample(1).collect())
     assert pilot <= set(s1)
     # bucket assignment is total and in range
     rng = docs.select(hash_bucket("doc_id", 10).alias("b")).agg(
         F.min("b").alias("lo"), F.max("b").alias("hi"), F.count(F.lit(1)).alias("cnt")
     ).first()
     assert rng["lo"] >= 0 and rng["hi"] <= 9 and rng["cnt"] == n
-    # stratified: exactly min(k, |stratum|) per language, deterministic
-    k = 5
-    per = (
-        stratified_exact_k(docs, ["lang"], k, "doc_id")
-        .groupBy("lang").agg(F.count(F.lit(1)).alias("got"))
-        .join(docs.groupBy("lang").agg(F.count(F.lit(1)).alias("avail")), "lang")
-        .collect()
-    )
-    assert per and all(r.got == min(k, r.avail) for r in per)
-
-
-def test_weighted_sample_deterministic_and_calibrated(spark):
-    """weighted_sample: decisions are stable across evaluations, the kept
-    fraction tracks the weight, weight 0/1 are exact, and the predicate
-    matches its DuckDB rendering (oracle-portable)."""
-    import duckdb
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.sampling import (
-        weighted_sample,
-        weighted_sample_sql,
-    )
-
-    df = spark.range(0, 4000).withColumnRenamed("id", "k")
-    assert weighted_sample(df, "k", 0.0).count() == 0
-    assert weighted_sample(df, "k", 1.0).count() == 4000
-    kept = weighted_sample(df, "k", 0.3)
-    n1, n2 = kept.count(), kept.count()
-    assert n1 == n2  # deterministic under re-evaluation
-    assert abs(n1 / 4000 - 0.3) < 0.05  # calibrated within sampling noise
-
-    # per-row weight column + cross-engine parity of the predicate
-    wdf = df.withColumn("w", (F.col("k") % 10) / 10.0)
-    got = sorted(r.k for r in weighted_sample(wdf, "k", "w").collect())
-    con = duckdb.connect()
-    try:
-        con.execute("CREATE TABLE t AS SELECT range AS k, (range % 10) / 10.0 AS w FROM range(0, 4000)")
-        want = sorted(
-            r[0] for r in con.execute(
-                f"SELECT k FROM t WHERE {weighted_sample_sql('k', 'w')}"
-            ).fetchall()
-        )
-    finally:
-        con.close()
-    assert got == want
 
 
 def test_hash_bucket_calibration_and_independence(spark):
-    """hash_bucket must spread integer AND string keys near-uniformly
-    (the weighted_sample lesson: positional hashes can pass one shape
-    and fail another), and composing the bucket sample with
-    weighted_sample must keep ~the product fraction (independent
-    residue spaces)."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.sampling import (
-        deterministic_sample,
-        hash_bucket,
-        weighted_sample,
-    )
+    """hash_bucket must spread integer AND string keys near-uniformly:
+    a positional hash can pass one key shape and fail another."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.sampling import hash_bucket
 
     n = 5000
     ints = spark.range(0, n).withColumnRenamed("id", "k")
@@ -186,10 +135,6 @@ def test_hash_bucket_calibration_and_independence(spark):
         ]
         assert len(counts) == 10
         assert max(counts) < 1.25 * n / 10 and min(counts) > 0.75 * n / 10, counts
-
-    composed = weighted_sample(deterministic_sample(ints, "k", 50, 100), "k", 0.5)
-    frac = composed.count() / n
-    assert abs(frac - 0.25) < 0.05, frac
 
 
 # --- sequence packing (operators/packing.py) --------------------------------

@@ -11,10 +11,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.explain import formatted_plan
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, formatted_plan
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
@@ -188,31 +187,6 @@ def test_ivf_scaled_k_and_numpy_assignment(spark):
     assert S.IVF_NUMPY_ASSIGN_MIN_K == 64
     with _pytest.raises(ValueError, match="method"):
         S.write_ivf_index(emb, centroids, path_np, method="bogus")
-
-
-def test_minhash_store_candidates_scan_only(spark):
-    """write_minhash_store materializes (doc_id, sig, bhs) at write time;
-    candidate generation from the store must be scan → posexplode → join
-    with ZERO text processing — no tokenize/shingle split, no minhash MIN
-    aggregation, no band hashing — and must produce exactly the candidate
-    set the in-flight path produces."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import dedup as D
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    path = os.path.join(SCRATCH, "minhash_store")
-    D.write_minhash_store(docs, path, num_perm=32, bands=8)
-
-    stored_cands = D.lsh_candidate_pairs_stored(spark, path, bands=8)
-    plan = formatted_plan(stored_cands)
-    # signature computation starts with split(text...) and aggregates
-    # per-permutation mins; band hashing is an xxhash64 over sig slots —
-    # ALL of it must be absent from the stored-path plan
-    assert "split(" not in plan, plan
-    assert "xxhash64" not in plan, plan
-    assert "partial_min" not in plan and "min(sig" not in plan, plan
-    # equality with the in-flight candidate path
-    inflight = D.lsh_candidate_pairs(D.minhash_signature(docs, 32), bands=8, num_perm=32)
-    assert sorted(map(tuple, stored_cands.collect())) == sorted(map(tuple, inflight.collect()))
 
 
 def test_single_row_group_layout_resilience(spark):

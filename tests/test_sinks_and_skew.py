@@ -1,19 +1,18 @@
-"""Write-path format coverage, partitioned sorted sink layout, and the
-salted aggregation helper."""
+"""Write-path format coverage, partitioned sorted sink layout, load_table
+schemas, and the salted aggregation helper."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import wordcount as wc
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import salted_word_count
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.sinks import roundtrip
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.sinks import read_table, write_table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, formatted_plan
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "sink-tests")
 
@@ -23,7 +22,8 @@ def test_format_roundtrips(spark, tmp_path_factory):
     expected = sorted(tuple(r) for r in docs.collect())
     for fmt in ["parquet", "orc", "json", "csv"]:
         path = os.path.join(SCRATCH, f"roundtrip_{fmt}")
-        back = roundtrip(spark, docs, path, fmt)
+        write_table(docs, path, fmt)
+        back = read_table(spark, path, fmt)
         got = sorted((r.doc_id, r.lang, r.n_chars) for r in back.select("doc_id", "lang", "n_chars").collect())
         assert got == expected, fmt
 
@@ -69,8 +69,6 @@ def test_partitioned_layout_plan_and_width(spark):
     writes every initial) and when it exceeds the number of initials
     (most tasks are empty)."""
     import re
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.explain import formatted_plan
 
     docs = load_table(spark, SF_SMOKE, "documents")
     counts = wc.word_count(docs)
@@ -187,32 +185,6 @@ def test_salted_word_count_equals_plain(spark):
     assert salted == plain
 
 
-@pytest.mark.parametrize("how", ["inner", "left", "right", "full"])
-def test_salted_join_equals_plain_join(spark, how):
-    """salted_join must be multiset-identical to the plain equi-join for
-    every supported join type, on a fixture with all the hard cases:
-    null keys on both sides, keys unmatched on either side, duplicate
-    keys on both sides (fan-out), and a hot key concentrated in ONE
-    input partition (the scenario the per-row salt exists for)."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import salted_join
-
-    big_rows = (
-        [(7, f"hot{i}") for i in range(500)]  # hot key, single partition
-        + [(1, "a"), (1, "b"), (2, "c"), (3, "d"), (None, "n1"), (None, "n2"), (9, "only_big")]
-    )
-    big = spark.createDataFrame(big_rows, "k int, bv string").repartitionByRange(4, "k")
-    small = spark.createDataFrame(
-        [(7, "s7"), (1, "s1a"), (1, "s1b"), (2, "s2"), (None, "sn"), (42, "only_small")],
-        "k int, sv string",
-    )
-    plain = big.join(small, ["k"], how).select("k", "bv", "sv")
-    salted = salted_join(big, small, "k", num_salts=8, how=how).select("k", "bv", "sv")
-    nullsafe = lambda rows: sorted(
-        (tuple((v is None, v) for v in r) for r in rows), key=str
-    )
-    assert nullsafe(plain.collect()) == nullsafe(salted.collect())
-
-
 # Outside the l_orderkey domain (orderkeys are >= 1), so no genuine key
 # silently merges into the hot one — orderkey 1 used to (1 % 3 != 0 maps
 # its rows to jk=1), slightly distorting the hot share and dim
@@ -253,11 +225,8 @@ def test_skewed_fact_join_strategies_agree(spark):
     """VERDICT r8 item 5: the deliberately skewed fact-fact join shape
     (every orderkey ≡ 0 mod 3 remapped to ONE hot key, so the hot key
     carries ~1/3 of all rows — the exact fixture tools/skew_join_ab.py at
-    e49ef4e timed at sf10) must produce identical results under all three
-    documented strategies: plain join with AQE skew-join ON, plain join
-    with it OFF, and the salted_join fallback."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import salted_join
-
+    e49ef4e timed at sf10) must produce identical results with AQE's
+    skew-join splitting ON and OFF."""
     skewed, dim = _skewed_frames(spark, SF_SMOKE)
     hot_rows = skewed.where(F.col("jk") == HOT_KEY).count()
     assert hot_rows >= skewed.count() // 4  # the fixture is genuinely skewed
@@ -274,98 +243,7 @@ def test_skewed_fact_join_strategies_agree(spark):
         no_skew_aqe = result(skewed.join(dim, "jk"))
     finally:
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    salted = result(salted_join(skewed, dim, "jk", num_salts=8))
-    assert plain == no_skew_aqe == salted and plain
-
-
-def test_auto_skew_join_decision_and_equality(spark, caplog):
-    """auto_skew_join (lesson 35 operationalized): the pure decision is
-    pinned at both measured ends (1/3-hot stays plain, 2/3-hot salts,
-    boundary exclusive, empty frame plain), the selection is logged via
-    the shared plans/cost seam, BOTH branches produce the plain join's
-    exact multiset, the pre-pass is ONE Spark action (round-10: max and
-    sum ride the same rollup — the r9 shape paid a collect + a count),
-    and precomputed ``stats=`` skips it entirely."""
-    import logging as _logging
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import (
-        SALT_HOT_SHARE_THRESHOLD,
-        _decide_salting,
-        auto_skew_join,
-        measure_key_skew,
-    )
-
-    assert _decide_salting(20, 60, SALT_HOT_SHARE_THRESHOLD) == (False, 20 / 60)
-    assert _decide_salting(40, 60, SALT_HOT_SHARE_THRESHOLD)[0] is True
-    assert _decide_salting(30, 60, SALT_HOT_SHARE_THRESHOLD)[0] is False  # exclusive
-    assert _decide_salting(0, 0, SALT_HOT_SHARE_THRESHOLD) == (False, 0.0)
-
-    small = spark.createDataFrame([(1, "hot"), (2, "s2"), (5, "s5")], "k int, sv string")
-    logger = "custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew"
-
-    # Count driver-side ACTIONS fired by the decision path (the returned
-    # join is lazy, so everything counted here is pre-pass). AQE splits
-    # one query into several Spark jobs, so job counts can't pin this;
-    # action counts can: the r9 shape fired collect+count = 2, the
-    # single-rollup shape fires exactly 1 (first -> one inner collect).
-    from unittest import mock
-
-    try:  # pyspark>=4: the live class is classic.DataFrame, which
-        # OVERRIDES collect/count — patching the abstract base is a no-op
-        from pyspark.sql.classic.dataframe import DataFrame as _DF
-    except ImportError:  # pragma: no cover — pyspark 3.x
-        from pyspark.sql import DataFrame as _DF
-
-    actions = {"n": 0}
-    real_collect, real_count = _DF.collect, _DF.count
-
-    def counting_collect(self_df):
-        actions["n"] += 1
-        return real_collect(self_df)
-
-    def counting_count(self_df):
-        actions["n"] += 1
-        return real_count(self_df)
-
-    for hot_rows, expect in ((3, "plain"), (30, "salted")):
-        rows = [(1, f"h{i}") for i in range(hot_rows)] + [(2, "b2"), (3, "b3"), (4, "b4")]
-        big = spark.createDataFrame(rows, "k int, bv string")
-        plain = sorted(map(tuple, big.join(small, ["k"]).select("k", "bv", "sv").collect()))
-        with caplog.at_level(_logging.INFO, logger=logger):
-            caplog.clear()
-            actions["n"] = 0
-            with mock.patch.object(_DF, "collect", counting_collect), \
-                    mock.patch.object(_DF, "count", counting_count):
-                joined = auto_skew_join(big, small, "k", num_salts=4)
-                assert actions["n"] == 1, f"pre-pass fired {actions['n']} actions"
-            got = sorted(map(tuple, joined.select("k", "bv", "sv").collect()))
-        msgs = [r.getMessage() for r in caplog.records if "hot-key row share" in r.getMessage()]
-        assert msgs and f"'{expect}'" in msgs[0], (hot_rows, msgs)
-        assert got == plain and got
-        # precomputed stats: same result, ZERO pre-pass actions
-        stats = measure_key_skew(big, "k")
-        actions["n"] = 0
-        with mock.patch.object(_DF, "collect", counting_collect), \
-                mock.patch.object(_DF, "count", counting_count):
-            joined2 = auto_skew_join(big, small, "k", num_salts=4, stats=stats)
-            assert actions["n"] == 0
-        assert sorted(map(tuple, joined2.select("k", "bv", "sv").collect())) == plain
-
-
-def test_salted_join_tpch_inner(spark):
-    """Same equality on real tables (lineitem ⋈ orders aggregate)."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import salted_join
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
-
-    from .conftest import SF_SMOKE
-
-    li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
-    o = load_table(spark, SF_SMOKE, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
-    )
-    plain = li.join(o, "l_orderkey").groupBy("l_orderkey").count()
-    salted = salted_join(li, o, "l_orderkey").groupBy("l_orderkey").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
+    assert plain == no_skew_aqe and plain
 
 
 def test_parquet_schema_evolution_merge(spark):
@@ -396,6 +274,68 @@ def test_parquet_schema_evolution_merge(spark):
     assert projected.count() == 2
 
 
+#: load_table's schema for every driver table (sf0.01), pinned so a
+#: session-wide read conf cannot silently retype a column.
+TABLE_SCHEMAS = {
+    "region": "struct<r_regionkey:int,r_name:string>",
+    "nation": "struct<n_nationkey:int,n_name:string,n_regionkey:int>",
+    "customer": "struct<c_custkey:bigint,c_name:string,c_nationkey:int,c_acctbal:double,c_mktsegment:string>",
+    "supplier": "struct<s_suppkey:bigint,s_name:string,s_nationkey:int,s_acctbal:double>",
+    "part": "struct<p_partkey:bigint,p_name:string,p_brand:string,p_type:string,p_size:int,p_retailprice:double>",
+    "orders": "struct<o_orderkey:bigint,o_custkey:bigint,o_orderstatus:string,o_totalprice:double,"
+    "o_orderdate:timestamp_ntz,o_orderpriority:string>",
+    "lineitem": "struct<l_orderkey:bigint,l_partkey:bigint,l_suppkey:bigint,l_linenumber:int,"
+    "l_quantity:double,l_extendedprice:double,l_discount:double,l_tax:double,"
+    "l_returnflag:string,l_linestatus:string,l_shipdate:timestamp_ntz>",
+    "events": "struct<event_id:bigint,ts:timestamp_ntz,user_id:bigint,event_type:string,value:double,props:string>",
+    "documents": "struct<doc_id:bigint,text:string,lang:string,source:string,n_chars:bigint>",
+    "embeddings": "struct<vec_id:bigint,embedding:array<float>,label:int>",
+}
+
+
+def test_load_table_schemas_pinned(spark, tmp_path):
+    """load_table's schema for every driver table is pinned, and an
+    events table written with TIMESTAMP(NANOS) reads, batch and
+    streaming, as microsecond timestamps truncated the way DuckDB
+    truncates them."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.registry import TABLES
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import events_stream
+
+    from .conftest import SF_CORRECT
+
+    assert set(TABLES) == set(TABLE_SCHEMAS)
+    got = {t: load_table(spark, SF_CORRECT, t).schema.simpleString() for t in TABLES}
+    assert got == TABLE_SCHEMAS
+
+    nanos = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(nanos, pa.timestamp("ns")),
+            "user_id": pa.array([7, 8], pa.int64()),
+            "event_type": ["click", "view"],
+            "value": [1.5, 2.5],
+            "props": ["{}", "{}"],
+        }),
+        tmp_path / "events.parquet",
+        version="2.6",
+    )
+    events = load_table(spark, str(tmp_path), "events")
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    micros = sorted(
+        round((r.ts.replace(tzinfo=dt.timezone.utc) - epoch) / dt.timedelta(microseconds=1))
+        for r in events.select(F.col("ts").cast("timestamp_ntz").alias("ts")).collect()
+    )
+    assert micros == [n // 1000 for n in nanos]
+    assert dict(events_stream(spark, str(tmp_path)).dtypes)["ts"] == "timestamp"
+
+
 def test_zipf_bench_workload_salted_equals_plain(spark):
     """The bench's Zipf stress pair must be the SAME workload two ways:
     identical per-word counts from the plain and salted aggregations."""
@@ -410,35 +350,3 @@ def test_zipf_bench_workload_salted_equals_plain(spark):
     hot = plain["__zipf_hot__"]
     assert 0.03 <= hot / total <= 0.07, f"hot mass {hot}/{total} out of the ~5% design band"
 
-
-def test_salted_outer_join_second_big_pass_is_key_pruned(spark):
-    """The right/full rebuild's key-membership probe must NOT re-read the
-    big table at full width: its scan is column-pruned to the join key
-    alone (plans/skew.py cost note — one column of one table, not a
-    second full-table pass). Pin both scan shapes in the executed plan:
-    the join pass reads all columns, the anti-join pass reads only k."""
-    import re
-    import uuid
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import salted_join
-
-    path = os.path.join(SCRATCH, f"salted_big_{uuid.uuid4().hex[:8]}")
-    spark.range(0, 10000).selectExpr(
-        "id % 97 AS k", "id AS bv", "repeat('x', 50) AS wide"
-    ).write.mode("overwrite").parquet(path)
-    big = spark.read.parquet(path)
-    small = spark.createDataFrame([(1, "s"), (10**9, "u")], "k long, sv string")
-
-    out = salted_join(big, small, "k", num_salts=4, how="full")
-    out.write.format("noop").mode("overwrite").save()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    col_lists = set(
-        re.match(r"FileScan parquet \[([^\]]*)\]", line.strip().lstrip(":+- ")).group(1)
-        for line in plan.splitlines()
-        if "FileScan parquet" in line and os.path.basename(path) in line
-    )
-    # exactly two scan shapes: the full-width join pass and the key-only probe
-    assert len(col_lists) == 2, plan
-    widths = sorted(len(cols.split(",")) for cols in col_lists)
-    assert widths[0] == 1, f"membership probe not pruned to the key: {col_lists}"
-    assert widths[1] == 3, f"join pass should read all big columns: {col_lists}"

@@ -10,10 +10,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import sketch as sk
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.explain import plan_has_broadcast_join
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, formatted_plan
 
 
 def _keyed(spark):
@@ -93,10 +92,10 @@ def test_sketch_probe_plans_broadcast(spark):
     df = _keyed(spark)
     counters = sk.count_min_counters(df, "key", 4, 64)
     est = sk.count_min_estimates(counters, df.distinct(), "key", 4, 64)
-    assert plan_has_broadcast_join(est)
+    assert "BroadcastHashJoin" in formatted_plan(est)
     positions = sk.bloom_build(df.distinct(), "key", 1 << 12, 4)
     probed = sk.bloom_probe(positions, df.distinct(), "key", 1 << 12, 4)
-    assert plan_has_broadcast_join(probed)
+    assert "BroadcastHashJoin" in formatted_plan(probed)
 
 
 def test_operators_tolerate_empty_inputs(spark):
@@ -118,8 +117,7 @@ def test_operators_tolerate_empty_inputs(spark):
     assert D.contaminated_docs(docs, empty_docs).count() == 0
     assert D.contaminated_docs(empty_docs, docs).count() == 0
     assert D.jaccard_pairs(empty_docs, 0.3).count() == 0
-    assert S.quantized_topk(empty_vecs, vecs).count() == 0
-    assert S.quantized_topk(vecs, empty_vecs).count() == 0
+    assert S.brute_force_topk(empty_vecs, vecs).count() == 0
     assert S.brute_force_topk(vecs, empty_vecs).count() == 0
 
     empty_keys = spark.createDataFrame([], "key long")

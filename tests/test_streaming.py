@@ -269,75 +269,6 @@ def test_kafka_mapper_in_streaming_query(spark):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_processing_time_timeout_evicts_and_rearms(spark):
-    """Bounded-state guarantee of user_activity_state_with_timeout, over
-    real micro-batches: (1) an idle key's state is evicted and a
-    tombstone emitted; (2) the key's later return starts a FRESH
-    accumulator (no resurrected counts); (3) a key that keeps arriving
-    accumulates across batches as before."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.stateful import (
-        user_activity_state_with_timeout,
-    )
-
-    schema = "event_id long, ts timestamp, user_id long, value double"
-    root = os.path.join(SCRATCH, f"timeout_src_{uuid.uuid4().hex[:8]}")
-    os.makedirs(root, exist_ok=True)
-
-    def add_file(i, rows):
-        df = spark.createDataFrame(rows, schema)
-        tmp = os.path.join(root, f"tmp_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(tmp, part), os.path.join(root, f"batch_{i}.parquet"))
-
-    add_file(0, [(1, _ts(10, 0), 1, 1.0), (2, _ts(10, 0), 2, 2.0)])
-
-    stream = spark.readStream.schema(schema).parquet(root)
-    name = f"timeout_{uuid.uuid4().hex[:10]}"
-    # 10s idle timeout >> worst-case feed latency (file-write job +
-    # source discovery + stateful-batch time measured at ~5s here): key 2
-    # is fed again inside the horizon (stays live, accumulates), key 1
-    # goes idle and must expire
-    q = (
-        user_activity_state_with_timeout(stream, timeout_ms=10000)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-
-    def wait_for(pred, desc, timeout_s=90):
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            rows = [tuple(r) for r in spark.table(name).collect()]
-            if pred(rows):
-                return rows
-            if q.exception() is not None:
-                raise q.exception()
-            time.sleep(0.5)
-        raise TimeoutError(f"{desc}; sink so far: {sorted(rows)}")
-
-    try:
-        wait_for(lambda rs: (1, 1, 100, False) in rs and (2, 1, 200, False) in rs, "batch-1 rows")
-        add_file(1, [(3, _ts(10, 5), 2, 3.0)])  # only user 2, well inside its horizon
-        wait_for(
-            lambda rs: (2, 2, 500, False) in rs,
-            "user-2 accumulation across batches (not evicted while active)",
-        )
-        # user 1 has been idle since batch 1 → its 5s deadline expires and
-        # the state store drops it, emitting the tombstone
-        wait_for(lambda rs: (1, 1, 100, True) in rs, "user-1 eviction tombstone")
-        add_file(2, [(4, _ts(10, 10), 1, 4.0)])  # user 1 returns after eviction
-        rows = wait_for(lambda rs: (1, 1, 400, False) in rs, "user-1 re-registration")
-        # fresh re-registration: count restarted at 1 with only the new
-        # value — a resurrected accumulator would show (1, 2, 500, False)
-        assert (1, 2, 500, False) not in rows
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-
-
 @pytest.mark.kafka
 @pytest.mark.skipif(
     not os.environ.get("SPARK_GRAFT_KAFKA_BOOTSTRAP"),
@@ -363,55 +294,6 @@ def test_kafka_live_source_smoke(spark):
     )
     out = _drain(tumbling_counts(stream), "complete")
     assert out.count() >= 0  # schema + plumbing; content depends on the live topic
-
-
-def test_rocksdb_state_store_seam(spark):
-    """VERDICT r7 item 5: the RocksDB state-store trade (measured 295 MB
-    vs 1.8 GB on-heap at 20M dedup rows) is one session call away —
-    session.use_state_store('rocksdb') — and the provider swap changes
-    WHERE state lives, not WHAT the query emits: the watermark-dedup
-    scenario reproduces the default provider's exact output, and the
-    query's state-operator metrics prove RocksDB actually served it."""
-    import json
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import ROCKSDB_PROVIDER, use_state_store
-
-    batches = [
-        [(1, _ts(10, 0), 1, 1.0), (2, _ts(10, 5), 1, 1.0)],
-        [(1, _ts(10, 1), 1, 1.0), (3, _ts(10, 30), 1, 1.0)],
-    ]
-    root = _write_batches(spark, batches)
-
-    def run():
-        stream = (
-            spark.readStream.schema("event_id long, ts timestamp, user_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
-        deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["event_id"])
-        name = f"rocks_{uuid.uuid4().hex[:10]}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        assert q.exception() is None, q.exception()
-        ids = sorted(r.event_id for r in spark.table(name).collect())
-        return ids, json.loads(q.lastProgress.json) if q.lastProgress else {}
-
-    baseline_ids, _ = run()
-    use_state_store(spark, "rocksdb")
-    try:
-        assert spark.conf.get("spark.sql.streaming.stateStore.providerClass") == ROCKSDB_PROVIDER
-        rocks_ids, progress = run()
-    finally:
-        use_state_store(spark, "hdfs")
-    assert rocks_ids == baseline_ids == [1, 2, 3]
-    metrics = (progress.get("stateOperators") or [{}])[0].get("customMetrics", {})
-    assert any(k.startswith("rocksdb") for k in metrics), metrics
 
 
 def test_streaming_media_ingest_decode_and_quarantine_rollup(spark, tmp_path):
@@ -451,217 +333,6 @@ def test_streaming_media_ingest_decode_and_quarantine_rollup(spark, tmp_path):
     )
     out2 = _drain(s_summary, "complete")
     assert {(r["status"], r["n_docs"]) for r in out2.collect()} == batch_summary
-
-
-def test_job_checkpoint_dir_lifecycle(spark, tmp_path):
-    """VERDICT r7 item 7: job_checkpoint_dir gives iterative operators a
-    reliable checkpoint dir for the job's duration and removes it on
-    exit — no unbounded checkpoint accumulation across jobs. Inside the
-    context, materialize() takes the RELIABLE branch (the frame reports
-    isCheckpointed); after exit the per-job directory is gone and the
-    previous checkpoint dir (none) is restored."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import dedup as D
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import job_checkpoint_dir
-
-    base = str(tmp_path / "ckpt")
-    vertices = spark.createDataFrame([(i,) for i in range(6)], "id long")
-    edges = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "src long, dst long")
-    prev = spark.sparkContext.getCheckpointDir()
-    with job_checkpoint_dir(spark, base) as job_dir:
-        # Spark appends its own session UUID below the dir we set
-        assert job_dir.rsplit("/", 1)[-1] in spark.sparkContext.getCheckpointDir()
-        comps = {
-            (r["id"], r["comp"])
-            for r in D.connected_components(vertices, edges).collect()
-        }
-        assert comps == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 4)}
-        # the reliable store was actually used: the job dir has content
-        assert os.path.isdir(job_dir) and os.listdir(job_dir)
-    assert not os.path.exists(job_dir)  # removed on exit
-    assert spark.sparkContext.getCheckpointDir() == prev  # restored (None)
-
-
-def test_checkpoint_dir_restore_fallback_is_loud(caplog):
-    """ADVICE r8 + VERDICT r8 #6: unsetting the checkpoint dir rides the
-    private Scala setter ``checkpointDir_$eq``; if a Spark version
-    renames it, the failure must be LOUD (warning naming the consequence,
-    False returned), never a crash at context exit or a silent pass."""
-    import logging as _logging
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import _restore_unset_checkpoint_dir
-
-    class _NoSetterScalaCtx:  # a Spark whose internal was renamed away
-        pass
-
-    class _FakeJsc:
-        def sc(self):
-            return _NoSetterScalaCtx()
-
-    class _FakeSc:
-        _jsc = _FakeJsc()
-
-    with caplog.at_level(_logging.WARNING, logger="custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session"):
-        ok = _restore_unset_checkpoint_dir(_FakeSc(), jvm=None)
-    assert ok is False
-    assert any("checkpointDir_$eq" in r.getMessage() for r in caplog.records)
-    assert any("setCheckpointDir" in r.getMessage() for r in caplog.records)
-
-
-def _has_tws_protobuf() -> bool:
-    """transformWithStateInPandas' state server needs a working protobuf
-    install; this sandbox ships a broken namespace stub, so probe the
-    actual import the driver worker performs."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(not _has_tws_protobuf(), reason="protobuf not installed (transformWithState v2 state server needs it)")
-def test_transform_with_state_v2_matches_classic_api(spark):
-    """Spark 4 arbitrary-state API v2 conformance: user_activity_state_v2
-    (transformWithStateInPandas + StatefulProcessor, RocksDB provider)
-    must emit exactly the classic applyInPandasWithState operator's
-    final per-user state on the same bounded drain."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import use_state_store
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.stateful import (
-        user_activity_state,
-        user_activity_state_v2,
-    )
-
-    batches = [
-        [(1, _ts(10, 0), 1, 2.0), (2, _ts(10, 5), 1, 3.5), (3, _ts(10, 6), 2, 1.25)],
-        [(4, _ts(10, 7), 1, 0.75), (5, _ts(10, 9), 3, 9.99)],
-    ]
-    root = _write_batches(spark, batches)
-
-    def run(op):
-        stream = (
-            spark.readStream.schema("event_id long, ts timestamp, user_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
-        name = f"tws_{uuid.uuid4().hex[:10]}"
-        q = (
-            op(stream).writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        assert q.exception() is None, q.exception()
-        # update mode re-emits per trigger: keep the final row per user
-        rows = {}
-        for r in spark.table(name).collect():
-            rows[r["user_id"]] = (r["n_events"], r["total_value_cents"])
-        return rows
-
-    classic = run(user_activity_state)
-    use_state_store(spark, "rocksdb")  # v2 requires the RocksDB provider
-    try:
-        v2 = run(user_activity_state_v2)
-    finally:
-        use_state_store(spark, "hdfs")
-    assert v2 == classic == {1: (3, 625), 2: (1, 125), 3: (1, 999)}
-
-
-def test_auto_state_store_pinned_at_both_measured_ends(spark, caplog):
-    """VERDICT r9 item 2: the state-store provider choice is cost-aware.
-    Both measured ends of SCALE_R9_SF100_STREAMING.json map correctly —
-    20M dedup keys (on-heap measured 1.8 GB, fine) stays on the default
-    on-heap provider; 100M keys (on-heap measured 26.3 GB — an OOM one
-    decade later) flips to RocksDB. The conf is actually applied and the
-    decision is logged with its evidence through the plans/cost seam."""
-    import logging as _logging
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import (
-        HDFS_PROVIDER,
-        ROCKSDB_PROVIDER,
-        auto_state_store,
-        use_state_store,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    logger = "custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session"
-    try:
-        with caplog.at_level(_logging.INFO, logger=logger):
-            caplog.clear()
-            assert auto_state_store(spark, expected_keys=20_000_000) == "hdfs"
-            assert spark.conf.get(key) == HDFS_PROVIDER
-            assert auto_state_store(spark, expected_keys=100_000_000) == "rocksdb"
-            assert spark.conf.get(key) == ROCKSDB_PROVIDER
-        msgs = [r.getMessage() for r in caplog.records
-                if "estimated on-heap state bytes" in r.getMessage()]
-        assert len(msgs) == 2 and "'hdfs'" in msgs[0] and "'rocksdb'" in msgs[1], msgs
-        assert all("hinted keys" in m for m in msgs)
-        # a caller-supplied heap budget moves the crossover
-        assert auto_state_store(spark, 20_000_000, heap_budget_bytes=1024**3) == "rocksdb"
-    finally:
-        use_state_store(spark, "hdfs")
-
-
-def test_auto_state_store_measured_path(spark, caplog):
-    """Round 11 (VERDICT r10 item 2): auto_state_store MEASURES its
-    key-cardinality statistic like the other two cost seams — one
-    batch-side approx_count_distinct over the stream's source via
-    source=/key_cols=. Both decision ends exercised on a real measured
-    count (the heap budget scales the crossover around the same 1000-key
-    source); the explicit hint still works and takes precedence over a
-    supplied source; and missing both inputs fails loudly."""
-    import logging as _logging
-
-    import pytest as _pytest
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import (
-        ONHEAP_STATE_BYTES_PER_KEY,
-        auto_state_store,
-        measure_state_keys,
-        use_state_store,
-    )
-
-    # 2000 rows, 1000 distinct user_ids (each twice): the state key of a
-    # dedup/session query over this source
-    src = spark.range(2000).selectExpr(
-        "id % 1000 AS user_id", "id AS event_id", "CAST(id AS STRING) AS payload"
-    )
-    measured = measure_state_keys(src, "user_id")
-    assert abs(measured - 1000) <= 50  # HLL ~2% relative error
-
-    logger = "custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session"
-    try:
-        with caplog.at_level(_logging.INFO, logger=logger):
-            caplog.clear()
-            # budget far above the ~263 KB estimate -> on-heap stays
-            assert auto_state_store(spark, source=src, key_cols="user_id") == "hdfs"
-            # budget below it -> RocksDB, same measured statistic
-            assert auto_state_store(
-                spark, source=src, key_cols="user_id",
-                heap_budget_bytes=100 * ONHEAP_STATE_BYTES_PER_KEY,
-            ) == "rocksdb"
-        msgs = [r.getMessage() for r in caplog.records
-                if "estimated on-heap state bytes" in r.getMessage()]
-        assert len(msgs) == 2 and all("measured keys" in m for m in msgs), msgs
-
-        # composite state key measures the struct, not one column
-        assert abs(measure_state_keys(src, ["user_id", "event_id"]) - 2000) <= 100
-
-        # explicit hint beats a supplied source (deliberate bound wins)
-        with caplog.at_level(_logging.INFO, logger=logger):
-            caplog.clear()
-            assert auto_state_store(
-                spark, expected_keys=100_000_000, source=src, key_cols="user_id"
-            ) == "rocksdb"
-        assert any("100000000 hinted keys" in r.getMessage() for r in caplog.records)
-
-        with _pytest.raises(ValueError, match="expected_keys.*or source"):
-            auto_state_store(spark)
-        with _pytest.raises(ValueError, match="at least one state-key column"):
-            measure_state_keys(src, [])
-    finally:
-        use_state_store(spark, "hdfs")
 
 
 def test_streaming_mjpeg_video_ingest(spark, tmp_path):
