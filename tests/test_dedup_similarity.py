@@ -449,29 +449,43 @@ def test_eager_stats_count_gated_on_source_bytes(spark):
     fixed at small SF) that only pays when the cached relation could
     cross the broadcast threshold. Provably-small local scans keep the
     lazy persist; unsizeable sources (in-memory frames, remote schemes)
-    stay eager — the production-safe direction. A disabled threshold
-    (ADVICE r7) is neither a risk nor a proof of smallness: the user set
-    it to forbid broadcasts, which is no size evidence."""
+    stay eager — the production-safe direction."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import _size_proof
 
     docs = load_table(spark, SF_CORRECT, "documents")
     # 65 KB parquet × 32 expansion bound << 64 MB threshold: no risk.
     assert _size_proof(D.doc_shingles(docs))[0] is False
-    # the same tiny source under its measured bound IS proven small
-    risky, proven, sizes = _size_proof(D.doc_shingles(docs), D.SHINGLE_INDEX_BOUND)
-    assert (risky, proven) == (False, True) and sizes
     # In-memory frame: no file listing, size unprovable → eager.
     mem = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     assert _size_proof(D.doc_shingles(mem))[0] is True
-    # Auto-broadcast disabled: a mis-estimate cannot mis-plan → lazy,
-    # and nothing is proven.
+    # Auto-broadcast disabled: a mis-estimate cannot mis-plan → lazy.
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         assert _size_proof(D.doc_shingles(mem))[0] is False
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_disabled_threshold_is_not_a_smallness_proof(spark):
+    """ADVICE r7 (medium): with autoBroadcastJoinThreshold=-1 the frame
+    is not RISKY (the planner won't pick any estimate-driven broadcast)
+    but must also not be PROVEN small — explicit F.broadcast() hints
+    override a disabled threshold, so a smallness verdict taken off a
+    config the user set specifically to prevent driver-OOM broadcasts
+    would rest on zero size evidence."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import _size_proof
+
+    docs = load_table(spark, SF_CORRECT, "documents")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
         assert _size_proof(D.doc_shingles(docs), D.SHINGLE_INDEX_BOUND) == (False, False, None)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    # with the threshold ENABLED the same tiny source IS proven small
+    risky, proven, sizes = _size_proof(D.doc_shingles(docs), D.SHINGLE_INDEX_BOUND)
+    assert (risky, proven) == (False, True) and sizes
 
 
 def test_eager_stats_lazy_path_logs_audit_line(spark):
