@@ -490,18 +490,17 @@ def connected_components(
     dst_col: str = "dst",
     max_iters: int = 20,
     check_vertices: bool | None = None,
-    route: str = "auto",
 ) -> DataFrame:
     """(id, component) — connected components; component = min vertex id
     in the component.
 
-    ``route`` (round 13): 'auto' (default) takes the DRIVER-LOCAL path —
-    Arrow-collect the materialized edge list, label it with a vectorized
-    numpy union-find, parallelize the label relation back — whenever the
-    edge count is at most CC_DRIVER_LOCAL_MAX_EDGES, the endpoint types
-    are integral, and no endpoint is null; the distributed hash-min loop
-    otherwise. 'loop' / 'driver' force a side (tests and A/B runs; the
-    forced driver route raises on unsupported endpoint types). The two
+    Two routes, chosen on the plans/cost.py seam (round 13): the
+    DRIVER-LOCAL path — Arrow-collect the materialized edge list, label
+    it with a vectorized numpy union-find, parallelize the label
+    relation back — whenever the edge count is at most
+    CC_DRIVER_LOCAL_MAX_EDGES (read at call time, so tests force the
+    loop by lowering it), the endpoint types are integral, and no
+    endpoint is null; the distributed hash-min loop otherwise. The two
     routes are row-identical (pinned by tests); only edge endpoint PAIRS
     ever reach the driver, bounded at 32 MB of longs by the cap, while
     the corpus-sized vertex frame stays distributed.
@@ -573,7 +572,7 @@ def connected_components(
     # checkpoints + convergence counts) — pure latency for edge lists
     # that fit one Arrow collect. Decide on the materialized pair
     # count (one cheap job over the checkpointed blocks — the same
-    # measure-then-route shape as the edge/ANN/decode seams); label
+    # measure-then-route shape as the edge and ANN seams); label
     # on the driver with the vectorized numpy union-find, parallelize
     # the (small) label relation back, and keep the vertex frame fully
     # distributed — only edge ENDPOINT PAIRS ever reach the driver,
@@ -582,16 +581,9 @@ def connected_components(
     # guaranteed there; anything else takes the loop.
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
 
-    if route not in ("auto", "loop", "driver"):
-        raise ValueError(f"route must be 'auto', 'loop' or 'driver', got {route!r}")
     dtypes = dict(pairs.dtypes)
     integral = dtypes["a"] == dtypes["b"] and dtypes["a"] in ("bigint", "int", "smallint", "tinyint")
-    if route == "driver" and not integral:
-        raise ValueError(
-            f"route='driver' needs matching integral endpoint types, got "
-            f"({dtypes['a']}, {dtypes['b']})"
-        )
-    if route != "loop" and integral:
+    if integral:
         # one job for both decision statistics over the checkpointed
         # blocks: edge count, and whether any endpoint is null (null
         # endpoints keep the loop's join semantics — never the numpy
@@ -602,28 +594,21 @@ def connected_components(
         ).first()
         n_edges, n_nulls = stats[0], stats[1] or 0
         if n_nulls:
-            if route == "driver":
-                raise ValueError(
-                    f"route='driver' cannot represent {n_nulls} null edge endpoints"
-                )
             _CC_LOG.info(
                 "connected_components: %d null edge endpoints — keeping the "
                 "distributed loop (null keys are outside the numpy route's "
                 "int64 domain)",
                 n_nulls,
             )
-            d = None
-        else:
-            d = decide_crossover(
-                n_edges,
-                CC_DRIVER_LOCAL_MAX_EDGES,
-                "loop",
-                "driver_local",
-                "materialized edge count",
-                logger=_CC_LOG,
-                detail=f"driver-local cap {CC_DRIVER_LOCAL_MAX_EDGES} edges",
-            )
-        if d is not None and (route == "driver" or d.choice == "driver_local"):
+        elif decide_crossover(
+            n_edges,
+            CC_DRIVER_LOCAL_MAX_EDGES,
+            "loop",
+            "driver_local",
+            "materialized edge count",
+            logger=_CC_LOG,
+            detail=f"driver-local cap {CC_DRIVER_LOCAL_MAX_EDGES} edges",
+        ).choice == "driver_local":
             labels = _driver_local_labels(pairs, dtypes["a"])
             all_labels = vertices.select(
                 F.col(id_col).alias("vid"), F.col(id_col).alias("comp")

@@ -46,16 +46,14 @@ def attach_payload(df: DataFrame, text_col: str = "text", modality: str = "text"
 
 
 def decode_image_real(payload_bytes: bytes) -> dict:
-    """Real codec hook, dispatched on the payload's magic bytes.
+    """The image decoder every image stage runs, dispatched on the
+    payload's magic bytes.
 
     PPM (P6), BMP (uncompressed 24-bit), zlib-PNG, and JPEG — baseline
     AND progressive, 4:4:4 and subsampled 4:2:0/4:2:2 — decode natively
-    below in pure numpy/stdlib, no media libraries needed. The remaining
-    seams are arithmetic-coded JPEG and video,
-    which raise with the exact production drop-in documented
-    (PIL/libvips/ffmpeg slot in at this seam; the mapInPandas plumbing
-    around it is identical — see :func:`decode_image_stats`, and its
-    ``safe=True`` quarantine mode for the 100 TB ingest posture).
+    below in pure numpy/stdlib, no media libraries needed. Arithmetic-
+    coded JPEG and video raise at this seam; :func:`decode_image_stats`'s
+    ``safe=True`` mode turns those into quarantine rows.
     """
     if payload_bytes[:2] == b"P6":
         w, h, maxval, px = decode_ppm(payload_bytes)
@@ -79,156 +77,20 @@ def decode_image_real(payload_bytes: bytes) -> dict:
 
 
 def decode_image_pillow(payload_bytes: bytes) -> dict:
-    """Production decode adapter (round 9 — VERDICT r8 item 2): the
-    PIL/Pillow drop-in at the :func:`decode_image_real` seam, returning
-    the identical ``{width, height, maxval, pixels}`` contract so the
-    mapInPandas plumbing in :func:`decode_image_stats` is byte-for-byte
-    shared between backends. Covers the media classes the native numpy
-    codecs quarantine (arithmetic-coded JPEG where libjpeg supports it,
-    GIF, TIFF, grayscale/CMYK — normalized to RGB). Imports lazily so
-    the engine has NO hard Pillow dependency; the skip-clean adapter
-    test (tests/test_multimodal.py) exercises it wherever Pillow exists,
-    the same pattern tests/test_hdfs.py uses for a live namenode."""
+    """Pillow reference decoder with :func:`decode_image_real`'s
+    ``{width, height, maxval, pixels}`` contract (any Pillow-readable
+    format, normalized to RGB). No stage calls it: the skip-clean test
+    in tests/test_multimodal.py cross-checks the native codecs against
+    it wherever Pillow is installed. Imports lazily, so the engine has
+    no Pillow dependency."""
     import io
 
-    from PIL import Image  # ImportError here = backend unavailable
+    from PIL import Image  # ImportError here = Pillow not installed
 
     with Image.open(io.BytesIO(payload_bytes)) as im:
         rgb = im.convert("RGB")
         px = np.asarray(rgb, dtype=np.uint8)
         return {"width": rgb.width, "height": rgb.height, "maxval": 255, "pixels": px}
-
-
-#: Native per-core decode throughput by payload class, MB/s/core —
-#: PINNED from the round-12 production-payload measurement
-#: (SCALE_R12_MM_REALISTIC.json, 121 KB 256x192 stills / 4-frame clips /
-#: 5 s stereo audio on 32 cores). These are the statistics the 'auto'
-#: backend decision compares, exactly as the edge/components/ANN seams
-#: pin their crossovers from scale A/Bs.
-NATIVE_DECODE_MBPS_PER_CORE = {
-    "jpeg": 0.38,   # transform codec, per-symbol Python after LUT rework
-    "png": 0.76,    # zlib + vectorized defilter
-    "ppm": 23.8,    # memcpy-class
-    "bmp": 16.7,    # memcpy-class (DIB rate; BMP stills share the kernel)
-    "flac": 1.76,   # vectorized Rice, compressed-side rate
-    "wav": 5.3,     # slowest RIFF family member (IMA-ADPCM); PCM is 29
-}
-
-#: Crossover for the 'auto' backend route, in native MB/s/core: classes
-#: DECODING SLOWER than this go to the production adapter (libjpeg-turbo
-#: via Pillow for stills, ffmpeg for audio) whenever the library/binary
-#: is importable — published libjpeg-turbo/libFLAC rates are 30-100+
-#: MB/s/core, over an order of magnitude above the threshold, so the
-#: exact cut sits comfortably between the engine's memcpy/vectorized
-#: classes (5.3+) and its per-symbol transform classes (<= 1.8). Where
-#: the adapter is absent the route degrades to native (measured above —
-#: correct, just entropy-rate-bound).
-DECODE_ADAPTER_CROSSOVER_MBPS = 2.0
-
-
-def sniff_image_format(payload_bytes: bytes) -> str:
-    """Magic-byte class of a still-image payload — the dispatch key of
-    :func:`decode_image_real`, exposed so the 'auto' backend can route
-    per payload class."""
-    if payload_bytes[:2] == b"\xff\xd8":
-        return "jpeg"
-    if payload_bytes[:8] == PNG_SIGNATURE:
-        return "png"
-    if payload_bytes[:2] == b"P6":
-        return "ppm"
-    if payload_bytes[:2] == b"BM":
-        return "bmp"
-    return "other"
-
-
-def decide_decode_backend(fmt: str, adapter_available: bool):
-    """A measured-crossover decision on the shared ``plans/cost.py``
-    seam (with the dedup edge method, the components route and ANN
-    live-vs-stored): route a payload class to
-    the production decode adapter when its measured NATIVE rate sits
-    under :data:`DECODE_ADAPTER_CROSSOVER_MBPS` — at 100 TB,
-    entropy-coded image decode is the governing cost
-    (SCALE_R12_MM_REALISTIC.json: JPEG 0.38 MB/s/core vs 23.8 for PPM)
-    and the adapter is bit-for-bit cross-checked where it exists.
-
-    Pure and unit-testable at both ends: ``adapter_available=False``
-    (this sandbox) degrades the under-crossover classes to native —
-    an absent library is an environment fact, not a payload defect.
-    Unknown classes route native, whose dispatcher raises the documented
-    seam error into the quarantine boundary.
-
-    Video is deliberately NOT auto-routed: MJPEG-in-AVI (0.40 MB/s/core,
-    JPEG-class) decodes per-frame inside the container walk, so a
-    per-payload backend switch would split one container's frames across
-    decoders; a pipeline needing libjpeg/ffmpeg rates for MJPEG swaps
-    the whole stage to :func:`decode_video_ffmpeg` (the shipped,
-    cross-checked adapter), same as the inter-frame codecs."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
-
-    stat = NATIVE_DECODE_MBPS_PER_CORE.get(fmt)
-    if stat is None:
-        return decide_crossover(
-            float("inf"), DECODE_ADAPTER_CROSSOVER_MBPS, "native", "adapter",
-            "native decode MB/s/core", detail=f"unknown class {fmt!r} -> native seam error",
-        )
-    d = decide_crossover(
-        stat, DECODE_ADAPTER_CROSSOVER_MBPS, "native", "adapter",
-        "native decode MB/s/core",
-        detail=f"class={fmt} adapter_available={adapter_available}",
-    )
-    if d.choice == "adapter" and not adapter_available:
-        from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import CostDecision
-
-        return CostDecision(
-            choice="native", stat=d.stat, crossover=d.crossover,
-            stat_name=d.stat_name + " (adapter unavailable)",
-        )
-    return d
-
-
-def _resolve_decode_backend(decode_backend: str):
-    """Backend name -> decode callable, validated EAGERLY on the driver:
-    a missing library must fail at operator-build time with a clear
-    ImportError, not per-row inside executors (where safe=True would
-    silently quarantine every image as ``quarantined:ImportError``).
-
-    'auto' (round 13 — VERDICT r12 item 2): the cost-aware route. The
-    per-class decision table is computed ONCE on the driver
-    (:func:`decide_decode_backend` — adapter availability probed here,
-    never executor-side) and captured by the dispatching closure;
-    payloads then route on magic bytes: entropy-coded classes (JPEG) to
-    :func:`decode_image_pillow` where Pillow imports, everything else —
-    and everything, when it doesn't — to the native numpy codecs."""
-    if decode_backend == "native":
-        return decode_image_real
-    if decode_backend == "pillow":
-        import importlib.util
-
-        if importlib.util.find_spec("PIL") is None:
-            raise ImportError(
-                "decode_backend='pillow' requires Pillow; pip install Pillow "
-                "or use the native backend"
-            )
-        return decode_image_pillow
-    if decode_backend == "auto":
-        import importlib.util
-
-        available = importlib.util.find_spec("PIL") is not None
-        route = {
-            fmt: decide_decode_backend(fmt, available).choice
-            for fmt in ("jpeg", "png", "ppm", "bmp")
-        }
-
-        def decode_image_auto(payload_bytes: bytes) -> dict:
-            if route.get(sniff_image_format(payload_bytes)) == "adapter":
-                return decode_image_pillow(payload_bytes)
-            return decode_image_real(payload_bytes)
-
-        decode_image_auto.route = route  # audit surface for tests/callers
-        return decode_image_auto
-    raise ValueError(
-        f"decode_backend must be 'native', 'pillow' or 'auto', got {decode_backend!r}"
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1428,13 +1290,94 @@ def _jpeg_progressive(doc_id: int) -> bool:
     return doc_id % 40 == 0
 
 
+def _fixture_image(doc_id: int) -> tuple[int, int, np.ndarray]:
+    """(width, height, pixels) of the fixture image for ``doc_id``."""
+    w, h = _fixture_dims(doc_id)
+    return w, h, _fixture_pixels(doc_id, w, h)
+
+
+def _render_stage(df: DataFrame, out_col: str, encode_one, id_col: str) -> DataFrame:
+    """Fixture-renderer plumbing shared by every ``render_*``: one
+    ``encode_one(doc_id) -> bytes`` payload per row, built executor-side
+    in Arrow batches (mapInPandas) so the bytes never touch the driver —
+    the ingest shape of a real media pipeline, which reads bytes via
+    binaryFile/parquet instead of rendering."""
+
+    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [encode_one(int(doc_id)) for doc_id in pdf[id_col]]
+            yield pd.DataFrame({id_col: pdf[id_col], out_col: payloads})
+
+    return df.select(id_col).mapInPandas(render, f"{id_col} long, {out_col} binary")
+
+
+#: Truncation bound for quarantined-row error strings — long enough to
+#: diagnose, short enough that a pathological payload can't bloat the row.
+_QUARANTINE_ERR_LEN = 200
+
+
+def _decode_stage(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    fields: str,
+    decode,
+    features,
+    safe: bool = False,
+) -> DataFrame:
+    """Decode-stage plumbing shared by every media decode stage: per row,
+    ``decode(payload_bytes)`` then ``features(doc_id, payload_bytes,
+    decoded) -> tuple`` of the ``fields`` schema (a DDL string of the
+    output columns after ``id_col``), in Arrow batches via mapInPandas.
+
+    ``safe=True`` is the quarantine contract (the 100 TB ingest
+    posture): a payload whose ``decode`` raises becomes a row with null
+    features, ``status='quarantined:<ExceptionType>'`` and the truncated
+    error message, instead of failing the task, its retries and then the
+    job on one bad file among billions. Decoded rows carry
+    ``status='ok'`` and ``error=NULL``. Only ``decode`` is guarded: a
+    ``features`` failure is an engine bug and always raises. ImportError
+    always escapes — a decode library missing on an executor is an
+    environment defect, not a payload defect, and must fail loudly
+    rather than tag every row. ``safe=False`` fails the stage on the
+    first undecodable payload."""
+    schema = f"{id_col} long, {fields}" + (", status string, error string" if safe else "")
+    cols = [f.split()[0] for f in schema.split(",")]  # no field type carries a comma
+    n_features = len(fields.split(","))
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+                data = bytes(payload)
+                try:
+                    decoded = decode(data)
+                except ImportError:
+                    raise
+                except Exception as exc:  # noqa: BLE001 — quarantine boundary
+                    if not safe:
+                        raise
+                    rows.append(
+                        (doc_id,) + (None,) * n_features
+                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
+                    )
+                    continue
+                row = (doc_id,) + features(doc_id, data, decoded)
+                rows.append(row + ("ok", None) if safe else row)
+            yield pd.DataFrame(rows, columns=cols)
+
+    return df.select(id_col, payload_col).mapInPandas(run, schema)
+
+
+def _channel_sums(px: np.ndarray) -> tuple[int, int, int]:
+    """Exact per-channel sums over an (..., 3) RGB raster or frame stack."""
+    return tuple(int(s) for s in px.astype(np.int64).reshape(-1, 3).sum(axis=0))
+
+
 def render_ppm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fixture-image renderer: one real PPM binary per row, content a
-    deterministic function of the id (``_fixture_pixels``). mapInPandas
-    so the binary payloads are born executor-side in Arrow batches and
-    never touch the driver — the ingest shape of a real media pipeline
-    (which reads bytes via binaryFile/parquet instead of rendering)."""
-    return _render_payloads(df, encode_ppm, id_col)
+    deterministic function of the id (``_fixture_pixels``)."""
+    return _render_stage(df, "img", lambda d: encode_ppm(*_fixture_image(d)), id_col)
 
 
 def render_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1442,7 +1385,7 @@ def render_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     row (filters cycling per row, CRC'd chunks). Decoding these proves
     the compressed-codec path end to end with the same arithmetic
     oracle as the PPM branch — the pixel content is identical."""
-    return _render_payloads(df, encode_png, id_col)
+    return _render_stage(df, "img", lambda d: encode_png(*_fixture_image(d)), id_col)
 
 
 def render_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1456,13 +1399,14 @@ def render_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     :func:`decode_jpeg_check`'s in-plan error bound rather than exact
     sums — JPEG loses by design."""
 
-    def enc(w: int, h: int, px: np.ndarray, doc_id: int) -> bytes:
+    def enc(doc_id: int) -> bytes:
+        w, h, px = _fixture_image(doc_id)
         sub = _jpeg_subsampling(doc_id)
         if sub == "420":
             px = _fixture_pixels_420(doc_id, w, h)
         return encode_jpeg(w, h, px, subsampling=sub, progressive=_jpeg_progressive(doc_id))
 
-    return _render_payloads(df, enc, id_col, pass_id=True)
+    return _render_stage(df, "img", enc, id_col)
 
 
 def encode_arithmetic_stub(width: int, height: int, pixels: np.ndarray) -> bytes:
@@ -1498,7 +1442,8 @@ def render_quarantine_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFra
     actually hits, planted IN the same batch as good rows so the test
     proves bad payloads don't poison their neighbors."""
 
-    def enc(w: int, h: int, px: np.ndarray, doc_id: int) -> bytes:
+    def enc(doc_id: int) -> bytes:
+        w, h, px = _fixture_image(doc_id)
         m = doc_id % 100
         if m == _QUARANTINE_TRUNCATED:
             return encode_ppm(w, h, px)[:10]
@@ -1508,7 +1453,7 @@ def render_quarantine_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFra
             return b"MOOVftypisom" + bytes(16)
         return encode_ppm(w, h, px)
 
-    return _render_payloads(df, enc, id_col, pass_id=True)
+    return _render_stage(df, "img", enc, id_col)
 
 
 def decode_jpeg_check(df: DataFrame, id_col: str = "doc_id", img_col: str = "img") -> DataFrame:
@@ -1519,37 +1464,16 @@ def decode_jpeg_check(df: DataFrame, id_col: str = "doc_id", img_col: str = "img
     executor batch (the same _fixture_pixels the render stage used), so
     the oracle only has to assert TRUE — the established recall-invariant
     pattern for results a SQL engine cannot reproduce bit-for-bit."""
-    schema = f"{id_col} long, width long, height long, decode_ok boolean"
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col].astype("int64"), pdf[img_col]):
-                w, h, _, px = decode_jpeg(bytes(payload))
-                ref_fn = (
-                    _fixture_pixels_420
-                    if _jpeg_subsampling(int(doc_id)) == "420"
-                    else _fixture_pixels
-                )
-                ref = ref_fn(int(doc_id), w, h).astype(np.int64)
-                err = int(np.abs(px.astype(np.int64) - ref).max())
-                rows.append((doc_id, w, h, bool(err <= JPEG_TOLERANCE)))
-            yield pd.DataFrame(rows, columns=[id_col, "width", "height", "decode_ok"])
+    def features(doc_id: int, data: bytes, decoded) -> tuple:
+        w, h, _, px = decoded
+        ref_fn = _fixture_pixels_420 if _jpeg_subsampling(doc_id) == "420" else _fixture_pixels
+        err = int(np.abs(px.astype(np.int64) - ref_fn(doc_id, w, h).astype(np.int64)).max())
+        return w, h, bool(err <= JPEG_TOLERANCE)
 
-    return df.select(id_col, img_col).mapInPandas(check, schema)
-
-
-def _render_payloads(df: DataFrame, encoder, id_col: str, pass_id: bool = False) -> DataFrame:
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            imgs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h = _fixture_dims(doc_id)
-                px = _fixture_pixels(doc_id, w, h)
-                imgs.append(encoder(w, h, px, int(doc_id)) if pass_id else encoder(w, h, px))
-            yield pd.DataFrame({id_col: pdf[id_col], "img": imgs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, img binary")
+    return _decode_stage(
+        df, id_col, img_col, "width long, height long, decode_ok boolean", decode_jpeg, features
+    )
 
 
 def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> str:
@@ -1601,8 +1525,7 @@ def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> 
     def write_part(rows) -> None:
         for r in rows:
             doc_id = int(r[0])
-            w, h = _fixture_dims(doc_id)
-            payload = encode_ppm(w, h, _fixture_pixels(doc_id, w, h))
+            payload = encode_ppm(*_fixture_image(doc_id))
             tmp = os.path.join(path, f".{doc_id}.ppm.tmp")
             with open(tmp, "wb") as f:
                 f.write(payload)
@@ -1613,17 +1536,11 @@ def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> 
     return path
 
 
-#: Truncation bound for quarantined-row error strings — long enough to
-#: diagnose, short enough that a pathological payload can't bloat the row.
-_QUARANTINE_ERR_LEN = 200
-
-
 def decode_image_stats(
     df: DataFrame,
     id_col: str = "doc_id",
     img_col: str = "img",
     safe: bool = False,
-    decode_backend: str = "native",
 ) -> DataFrame:
     """REAL decode stage: parse each binary payload with
     :func:`decode_image_real` (PPM/BMP/PNG/JPEG numpy codecs) and emit
@@ -1632,78 +1549,26 @@ def decode_image_stats(
     header mis-parse, row-padding slip, or channel-order bug shows up as
     a value mismatch against the arithmetic oracle.
 
-    ``safe=True`` (round 8 — the 100 TB ingest posture): decode each
-    payload under try/except. Undecodable payloads (arithmetic-coded
-    JPEG, video, truncated/corrupt streams, unknown magic) become rows with
-    null stats, ``status='quarantined:<ExceptionType>'`` and the error
-    message, instead of raising inside ``mapInPandas`` — where one bad
-    file among billions fails the task, its 3 retries, and then the
-    whole job. Decoded rows carry ``status='ok'``, ``error=NULL`` and
-    stats identical to the ``safe=False`` path. Route quarantined rows
-    to a side sink (``.where("status <> 'ok'")``) for offline triage —
-    they keep their ``doc_id`` so the source payload is recoverable.
-    ``safe=False`` keeps the strict posture for fixture pipelines where
-    an undecodable payload IS the bug and must fail loudly.
+    ``safe=True`` (the 100 TB ingest posture): undecodable payloads
+    (arithmetic-coded JPEG, video, truncated/corrupt streams, unknown
+    magic) become rows with null stats, ``status='quarantined:
+    <ExceptionType>'`` and the error message (the :func:`_decode_stage`
+    contract); decoded rows carry ``status='ok'`` and stats identical to
+    the ``safe=False`` path. Route quarantined rows to a side sink
+    (``.where("status <> 'ok'")``) for offline triage — they keep their
+    ``doc_id`` so the source payload is recoverable. ``safe=False``
+    keeps the strict posture for fixture pipelines where an undecodable
+    payload IS the bug and must fail loudly."""
 
-    ``decode_backend``: 'native' (default — the numpy codecs, zero
-    dependencies), 'pillow' (the production adapter
-    :func:`decode_image_pillow`; validated on the driver at build time
-    so a missing library fails loudly, not as a sea of quarantine
-    rows), or 'auto' (round 13 — the cost-aware route: entropy-coded
-    classes go to the adapter where it imports, per the pinned
-    throughput crossover in :func:`decide_decode_backend`; the 100 TB
-    ingest default for image-heavy corpora). All backends share this
-    function's schema, Arrow batching and quarantine semantics
-    unchanged."""
-    decode_fn = _resolve_decode_backend(decode_backend)
-    schema = (
-        f"{id_col} long, width long, height long, maxval long, "
-        "pixel_sum long, r_sum long, g_sum long, b_sum long"
+    def features(doc_id: int, data: bytes, d: dict) -> tuple:
+        rgb = _channel_sums(d["pixels"])
+        return (d["width"], d["height"], d["maxval"], sum(rgb)) + rgb
+
+    return _decode_stage(
+        df, id_col, img_col,
+        "width long, height long, maxval long, pixel_sum long, r_sum long, g_sum long, b_sum long",
+        decode_image_real, features, safe,
     )
-    if safe:
-        schema += ", status string, error string"
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "width", "height", "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[img_col]):
-                try:
-                    d = decode_fn(bytes(payload))
-                except ImportError:
-                    # NEVER quarantine a missing decode library (ADVICE
-                    # r9): _resolve_decode_backend validates on the
-                    # DRIVER only — an executor missing Pillow would
-                    # otherwise tag every row 'quarantined:ImportError',
-                    # the exact silent mass-failure the eager check
-                    # exists to prevent. An environment defect is not a
-                    # payload defect; fail the task loudly.
-                    raise
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 7
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                px = d["pixels"].astype(np.int64)
-                row = (
-                    doc_id,
-                    d["width"],
-                    d["height"],
-                    d["maxval"],
-                    int(px.sum()),
-                    int(px[:, :, 0].sum()),
-                    int(px[:, :, 1].sum()),
-                    int(px[:, :, 2].sum()),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, img_col).mapInPandas(decode, schema)
 
 
 #: Resize target box (the usual vision-model input side).
@@ -1747,36 +1612,18 @@ def resized_image_stats(
     whole/per-channel pixel sums. Because NN resampling is pure index
     arithmetic, the sums are exactly SQL-derivable — the resize KERNEL
     itself is oracle-checked, not just the plumbing around it."""
-    schema = (
-        f"{id_col} long, width long, height long, resized_w long, resized_h long, "
-        "pixel_sum long, r_sum long, g_sum long, b_sum long"
+
+    def features(doc_id: int, data: bytes, d: dict) -> tuple:
+        ow, oh = resize_fit(d["width"], d["height"], box)
+        rgb = _channel_sums(resize_nn(d["pixels"], ow, oh))
+        return (d["width"], d["height"], ow, oh, sum(rgb)) + rgb
+
+    return _decode_stage(
+        df, id_col, img_col,
+        "width long, height long, resized_w long, resized_h long, "
+        "pixel_sum long, r_sum long, g_sum long, b_sum long",
+        decode_image_real, features,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "width", "height", "resized_w", "resized_h",
-                "pixel_sum", "r_sum", "g_sum", "b_sum"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[img_col]):
-                d = decode_image_real(bytes(payload))
-                ow, oh = resize_fit(d["width"], d["height"], box)
-                out = resize_nn(d["pixels"], ow, oh).astype(np.int64)
-                rows.append(
-                    (
-                        doc_id,
-                        d["width"],
-                        d["height"],
-                        ow,
-                        oh,
-                        int(out.sum()),
-                        int(out[:, :, 0].sum()),
-                        int(out[:, :, 1].sum()),
-                        int(out[:, :, 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, img_col).mapInPandas(decode, schema)
 
 
 def quarantine_summary(stats: DataFrame) -> DataFrame:
@@ -2013,6 +1860,8 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
     tag, ch, rate, _, block_align, bits = struct.unpack_from("<HHIIHH", fmt, 0)
     if ch < 1:
         raise ValueError("WAVE fmt declares zero channels")
+    if rate == 0:
+        raise ValueError("WAVE fmt declares a zero sample rate")
     if tag == 0xFFFE:
         # WAVE_FORMAT_EXTENSIBLE (round 11): the container real 24-bit/
         # multichannel writers emit — cbSize >= 22 extension carrying
@@ -2077,18 +1926,15 @@ def _wav_fixture_samples(doc_id: int, ch: int, n: int) -> np.ndarray:
     return (((13 * doc_id + 29 * i) % 4096) - 2048).astype(np.int16).reshape(n, ch)
 
 
+def _wav_fixture(doc_id: int) -> tuple[int, np.ndarray]:
+    """(sample_rate, samples) of the fixture audio for ``doc_id``."""
+    rate, ch, n = _wav_fixture_geom(doc_id)
+    return rate, _wav_fixture_samples(doc_id, ch, n)
+
+
 def render_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fixture-audio renderer: one real WAV per row, executor-side."""
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                wavs.append(encode_wav(rate, _wav_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
+    return _render_stage(df, "audio", lambda d: encode_wav(*_wav_fixture(d)), id_col)
 
 
 def _pcm_variant(doc_id: int) -> int:
@@ -2105,17 +1951,9 @@ def render_pcm_variant_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFr
     by doc arithmetic — same samples and geometry as
     :func:`render_wav_payloads`, four real on-disk layouts."""
     encoders = [encode_wav, encode_wav_extensible, encode_wav_s24, encode_wav_u8]
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                enc = encoders[_pcm_variant(int(doc_id))]
-                wavs.append(enc(rate, _wav_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
+    return _render_stage(
+        df, "audio", lambda d: encoders[_pcm_variant(d)](*_wav_fixture(d)), id_col
+    )
 
 
 def audio_features(
@@ -2123,83 +1961,39 @@ def audio_features(
     id_col: str = "doc_id",
     audio_col: str = "audio",
     safe: bool = False,
-    decode_backend: str = "native",
 ) -> DataFrame:
-    """REAL audio decode + feature stage: parse each WAV
-    (:func:`decode_wav`) and emit per-document features — exact
+    """REAL audio decode + feature stage: parse each WAV or FLAC payload
+    (:func:`decode_audio_native`) and emit per-document features — exact
     container byte length, sample rate, channel/sample counts, exact
     integer duration in µs, per-channel sample sums (first two
     channels) and the whole-stream L1 energy (sum of |sample|). All
     integers, all pure functions of the container bytes — a chunk-walk
     slip, endianness bug, or de-interleave error is a value mismatch
-    against the arithmetic oracle. Same mapInPandas plumbing as the
-    image/video stages; a compressed-audio pipeline swaps decode_wav
-    for libsndfile/ffmpeg inside the same iterator.
+    against the arithmetic oracle.
 
-    ``safe=True``: the same quarantine contract as
-    :func:`decode_image_stats` — undecodable payloads become rows with
-    null features, ``status='quarantined:<ExceptionType>'`` and the
-    error string, instead of failing the task (and its retries, and the
-    job) on one corrupt file among billions; decoded rows carry
-    ``status='ok'`` and features identical to strict mode. Feed the
-    output to :func:`quarantine_summary` for the rate rollup.
+    ``safe=True``: the :func:`_decode_stage` quarantine contract —
+    undecodable payloads become rows with null features,
+    ``status='quarantined:<ExceptionType>'`` and the error string;
+    decoded rows carry ``status='ok'`` and features identical to strict
+    mode. Feed the output to :func:`quarantine_summary` for the rate
+    rollup."""
 
-    ``decode_backend``: 'native' (the zero-dependency RIFF parser —
-    PCM s16le, G.711 A-law/µ-law, and since round 11 IEEE-float and
-    IMA-ADPCM) or 'ffmpeg' (:func:`decode_audio_ffmpeg` — the
-    production adapter whose exclusive territory is ENTROPY-coded
-    audio: MP3/AAC; on the overlapping formats it
-    cross-checks the native decoder bit-for-bit; validated eagerly on
-    the driver, ImportError re-raised through the quarantine boundary
-    executor-side). Both share this schema, batching and quarantine
-    semantics (round 10 — the Pillow-adapter pattern at the audio
-    seam)."""
-    decode_fn = _resolve_audio_backend(decode_backend)
-    schema = (
-        f"{id_col} long, byte_len long, sample_rate long, n_channels long, "
-        "n_samples long, duration_us long, ch0_sum long, ch1_sum long, abs_sum long"
+    def features(doc_id: int, data: bytes, decoded) -> tuple:
+        rate, samples = decoded
+        n, ch = samples.shape
+        s64 = samples.astype(np.int64)
+        return (
+            len(data), rate, ch, n, n * 1_000_000 // rate,
+            int(s64[:, 0].sum()), int(s64[:, 1].sum()) if ch > 1 else None,
+            int(np.abs(s64).sum()),
+        )
+
+    return _decode_stage(
+        df, id_col, audio_col,
+        "byte_len long, sample_rate long, n_channels long, n_samples long, "
+        "duration_us long, ch0_sum long, ch1_sum long, abs_sum long",
+        decode_audio_native, features, safe,
     )
-    if safe:
-        schema += ", status string, error string"
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "sample_rate", "n_channels", "n_samples",
-                "duration_us", "ch0_sum", "ch1_sum", "abs_sum"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[audio_col]):
-                data = bytes(payload)
-                try:
-                    rate, samples = decode_fn(data)
-                except ImportError:
-                    raise  # environment defect, not a payload defect (ADVICE r9)
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 8
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                n, ch = samples.shape
-                s64 = samples.astype(np.int64)
-                row = (
-                    doc_id,
-                    len(data),
-                    rate,
-                    ch,
-                    n,
-                    n * 1_000_000 // rate,
-                    int(s64[:, 0].sum()),
-                    int(s64[:, 1].sum()) if ch > 1 else None,
-                    int(np.abs(s64).sum()),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, audio_col).mapInPandas(decode, schema)
 
 
 def _y4m_fixture_geom(doc_id: int) -> tuple[int, int, int]:
@@ -2226,15 +2020,22 @@ def render_y4m_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     and plane bytes deterministic functions of the id — executor-side
     Arrow batches, same ingest shape as the image renderers."""
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h, n = _y4m_fixture_geom(int(doc_id))
-                vids.append(encode_y4m(w, h, _y4m_fixture_frames(int(doc_id), w, h, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "video": vids})
+    def enc(doc_id: int) -> bytes:
+        w, h, n = _y4m_fixture_geom(doc_id)
+        return encode_y4m(w, h, _y4m_fixture_frames(doc_id, w, h, n))
 
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, video binary")
+    return _render_stage(df, "video", enc, id_col)
+
+
+#: Leading output fields of every video stage (see :func:`_frame_sample`).
+_VIDEO_FIELDS = "byte_len long, width long, height long, n_frames long, sampled_frames string"
+
+
+def _frame_sample(data: bytes, w: int, h: int, n_frames: int, stride: int) -> tuple:
+    """The :data:`_VIDEO_FIELDS` values: container bytes, geometry,
+    frame count and the comma-joined indices every ``stride``-th frame
+    keeps."""
+    return len(data), w, h, n_frames, ",".join(str(i) for i in range(0, n_frames, stride))
 
 
 def video_frame_stats(
@@ -2261,48 +2062,16 @@ def video_frame_stats(
     ``status='quarantined:<ExceptionType>'`` + the error string instead
     of killing the stage; good rows carry ``status='ok'`` and features
     identical to strict mode. Feed to :func:`quarantine_summary`."""
-    schema = (
-        f"{id_col} long, byte_len long, width long, height long, n_frames long, "
-        "sampled_frames string, y_sum long, cb_sum long, cr_sum long"
+
+    def features(doc_id: int, data: bytes, decoded) -> tuple:
+        w, h, frames = decoded
+        planes = frames[::stride].astype(np.int64).sum(axis=(0, 2))
+        return _frame_sample(data, w, h, len(frames), stride) + tuple(int(p) for p in planes)
+
+    return _decode_stage(
+        df, id_col, vid_col, _VIDEO_FIELDS + ", y_sum long, cb_sum long, cr_sum long",
+        decode_y4m, features, safe,
     )
-    if safe:
-        schema += ", status string, error string"
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "width", "height", "n_frames",
-                "sampled_frames", "y_sum", "cb_sum", "cr_sum"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[vid_col]):
-                data = bytes(payload)
-                try:
-                    w, h, frames = decode_y4m(data)
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 8
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                kept = frames[::stride].astype(np.int64)
-                row = (
-                    doc_id,
-                    len(data),
-                    w,
-                    h,
-                    len(frames),
-                    ",".join(str(i) for i in range(0, len(frames), stride)),
-                    int(kept[:, 0].sum()),
-                    int(kept[:, 1].sum()),
-                    int(kept[:, 2].sum()),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, vid_col).mapInPandas(decode, schema)
 
 
 def fake_decode_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2566,19 +2335,13 @@ def render_avi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     genuine baseline 4:4:4 JPEG from :func:`encode_jpeg` — executor-side
     Arrow batches, same ingest shape as the other media renderers."""
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h, n = _mjpeg_fixture_geom(int(doc_id))
-                jpegs = [
-                    encode_jpeg(w, h, _mjpeg_fixture_frame(int(doc_id), f, w, h))
-                    for f in range(n)
-                ]
-                vids.append(encode_avi_mjpeg(w, h, jpegs))
-            yield pd.DataFrame({id_col: pdf[id_col], "video": vids})
+    def enc(doc_id: int) -> bytes:
+        w, h, n = _mjpeg_fixture_geom(doc_id)
+        return encode_avi_mjpeg(
+            w, h, [encode_jpeg(w, h, _mjpeg_fixture_frame(doc_id, f, w, h)) for f in range(n)]
+        )
 
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, video binary")
+    return _render_stage(df, "video", enc, id_col)
 
 
 def mjpeg_frame_check(
@@ -2599,51 +2362,18 @@ def mjpeg_frame_check(
     dimensions, total frame count, sampled indices. ``safe=True``: the
     standard quarantine contract (non-MJPEG AVIs raise at the declared
     seam and become status rows instead of killing the stage)."""
-    schema = (
-        f"{id_col} long, byte_len long, width long, height long, n_frames long, "
-        "sampled_frames string, decode_ok boolean"
+
+    def features(doc_id: int, data: bytes, decoded) -> tuple:
+        w, h, frames = decoded
+        err = 0
+        for f in range(0, len(frames), stride):
+            ref = _mjpeg_fixture_frame(doc_id, f, w, h).astype(np.int64)
+            err = max(err, int(np.abs(frames[f].astype(np.int64) - ref).max()))
+        return _frame_sample(data, w, h, len(frames), stride) + (bool(err <= JPEG_TOLERANCE),)
+
+    return _decode_stage(
+        df, id_col, vid_col, _VIDEO_FIELDS + ", decode_ok boolean", decode_avi_mjpeg, features, safe
     )
-    if safe:
-        schema += ", status string, error string"
-
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "width", "height", "n_frames",
-                "sampled_frames", "decode_ok"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col].astype("int64"), pdf[vid_col]):
-                data = bytes(payload)
-                try:
-                    w, h, frames = decode_avi_mjpeg(data)
-                except ImportError:
-                    raise  # environment defect, not a payload defect
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 6
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                err = 0
-                for f in range(0, len(frames), stride):
-                    ref = _mjpeg_fixture_frame(int(doc_id), f, w, h).astype(np.int64)
-                    err = max(err, int(np.abs(frames[f].astype(np.int64) - ref).max()))
-                row = (
-                    doc_id,
-                    len(data),
-                    w,
-                    h,
-                    len(frames),
-                    ",".join(str(i) for i in range(0, len(frames), stride)),
-                    bool(err <= JPEG_TOLERANCE),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, vid_col).mapInPandas(check, schema)
 
 
 def render_dib_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2652,18 +2382,13 @@ def render_dib_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     as the MJPEG fixture — but the container is LOSSLESS, so the decode
     is value-exact, not bounded-error."""
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h, n = _mjpeg_fixture_geom(int(doc_id))
-                frames = np.stack(
-                    [_mjpeg_fixture_frame(int(doc_id), f, w, h) for f in range(n)]
-                )
-                vids.append(encode_avi_rawrgb(w, h, frames))
-            yield pd.DataFrame({id_col: pdf[id_col], "video": vids})
+    def enc(doc_id: int) -> bytes:
+        w, h, n = _mjpeg_fixture_geom(doc_id)
+        return encode_avi_rawrgb(
+            w, h, np.stack([_mjpeg_fixture_frame(doc_id, f, w, h) for f in range(n)])
+        )
 
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, video binary")
+    return _render_stage(df, "video", enc, id_col)
 
 
 def dib_frame_stats(
@@ -2683,63 +2408,25 @@ def dib_frame_stats(
     integer the arithmetic oracle recomputes — a row-padding slip,
     BGR/bottom-up mix-up, or chunk mis-walk is a value mismatch, the
     stronger check the lossy MJPEG branch cannot make."""
-    schema = (
-        f"{id_col} long, byte_len long, width long, height long, n_frames long, "
-        "sampled_frames string, r_sum long, g_sum long, b_sum long"
+
+    def features(doc_id: int, data: bytes, decoded) -> tuple:
+        w, h, frames = decoded
+        return _frame_sample(data, w, h, len(frames), stride) + _channel_sums(frames[::stride])
+
+    return _decode_stage(
+        df, id_col, vid_col, _VIDEO_FIELDS + ", r_sum long, g_sum long, b_sum long",
+        decode_avi_mjpeg, features, safe,
     )
-    if safe:
-        schema += ", status string, error string"
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "width", "height", "n_frames",
-                "sampled_frames", "r_sum", "g_sum", "b_sum"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[vid_col]):
-                data = bytes(payload)
-                try:
-                    w, h, frames = decode_avi_mjpeg(data)
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 8
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                kept = frames[::stride].astype(np.int64)
-                row = (
-                    doc_id,
-                    len(data),
-                    w,
-                    h,
-                    len(frames),
-                    ",".join(str(i) for i in range(0, len(frames), stride)),
-                    int(kept[..., 0].sum()),
-                    int(kept[..., 1].sum()),
-                    int(kept[..., 2].sum()),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, vid_col).mapInPandas(decode, schema)
 
 
 # --------------------------------------------------------------------------
-# A/V production-decode adapter (round 10 — VERDICT r9 item 6): the
-# ffmpeg drop-in at the audio/video seam, mirroring the round-9 Pillow
-# image adapter. Used only when the ffmpeg binary exists (validated
-# eagerly — see the ImportError-escapes-quarantine rule above); the
-# skip-clean tests exercise it wherever the tool is installed. Since
-# round 11 the native decoders also cover IEEE-float WAV, IMA-ADPCM WAV
-# and raw-RGB DIB AVI, and since round 12 FLAC, so the adapter's
-# exclusive territory is PERCEPTUAL/inter-frame A/V only (MP3/AAC
-# audio, H.264/VP9 video) — and
-# wherever ffmpeg exists, the overlapping formats cross-check the two
-# engines bit-for-bit. The unconditional quarantine fixtures are
-# real-but-refused headers (MP3-in-WAV tag 0x55, H264-fourcc AVI).
+# A/V reference decoders: ffmpeg, reached only from tests. Where the
+# ffmpeg binary exists, the skip-clean adapter test cross-checks the
+# native decoders against it bit-for-bit on every format both decode
+# (G.711, IEEE-float, IMA-ADPCM, FLAC, raw-RGB DIB AVI); its exclusive
+# territory is PERCEPTUAL/inter-frame A/V (MP3/AAC audio, H.264/VP9
+# video). The unconditional quarantine fixtures are real-but-refused
+# headers (MP3-in-WAV tag 0x55, H264-fourcc AVI).
 # --------------------------------------------------------------------------
 
 
@@ -2835,17 +2522,16 @@ def encode_avi_rawrgb(
 
 
 def _require_ffmpeg() -> str:
-    """Eager binary check (driver-side, same contract as the Pillow
-    backend): a missing ffmpeg must fail at operator-build time with an
-    ImportError — which the quarantine boundary deliberately re-raises
-    executor-side too — not surface as per-row quarantine rows."""
+    """Path of the ffmpeg binary; ImportError when it is absent, so a
+    decode stage's quarantine boundary re-raises it instead of tagging
+    rows."""
     import shutil
 
     path = shutil.which("ffmpeg")
     if path is None:
         raise ImportError(
-            "decode_backend='ffmpeg' requires the ffmpeg binary on PATH; "
-            "install ffmpeg or use the native backend"
+            "the ffmpeg reference decoders need the ffmpeg binary on PATH; "
+            "the native decoders (decode_audio_native, decode_avi_mjpeg) need nothing"
         )
     return path
 
@@ -2864,16 +2550,14 @@ def _run_ffmpeg(args: list[str], payload: bytes) -> bytes:
 
 
 def decode_audio_ffmpeg(payload: bytes) -> tuple[int, np.ndarray]:
-    """ffmpeg audio adapter at the :func:`decode_audio_native` seam —
-    identical (sample_rate, samples int16 (n, ch)) contract, so
-    :func:`audio_features` shares every downstream line between
-    backends. Geometry (rate, channels) is parsed from the container
-    header — the RIFF fmt chunk, or since round 12 the FLAC STREAMINFO
-    (so the native FLAC decoder has a bit-for-bit cross-check where
-    ffmpeg exists). The adapter's EXCLUSIVE territory is now PERCEPTUAL
-    codecs only — MP3/AAC — with PCM/float/G.711/ADPCM/FLAC all
-    decoding natively; a container-agnostic build would ffprobe
-    instead. The decoded stream is ffmpeg's s16le output."""
+    """ffmpeg reference decoder with :func:`decode_audio_native`'s
+    (sample_rate, samples int16 (n, ch)) contract. No stage calls it:
+    the skip-clean test cross-checks the native WAV and FLAC decoders
+    against it wherever ffmpeg exists, and it also decodes the
+    PERCEPTUAL codecs (MP3/AAC) the native side refuses. Geometry
+    (rate, channels) is parsed from the container header — the RIFF fmt
+    chunk or the FLAC STREAMINFO; the decoded stream is ffmpeg's s16le
+    output."""
     if payload[:4] == FLAC_MAGIC:
         # STREAMINFO (spec-required first block): rate 20 bits at byte
         # 10 of the 34-byte body, channels-1 the next 3 bits
@@ -2916,8 +2600,8 @@ def decode_audio_ffmpeg(payload: bytes) -> tuple[int, np.ndarray]:
 
 
 def decode_video_ffmpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """ffmpeg video adapter at the :func:`decode_avi_mjpeg` seam —
-    identical (width, height, frames uint8 (n, h, w, 3) RGB) contract.
+    """ffmpeg reference decoder with :func:`decode_avi_mjpeg`'s
+    (width, height, frames uint8 (n, h, w, 3) RGB) contract.
     Geometry comes from the AVI avih header (this adapter targets AVI
     containers; ffprobe generalizes), frames from ffmpeg's rawvideo
     rgb24 output."""
@@ -2938,41 +2622,6 @@ def decode_video_ffmpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
         raise ValueError("ffmpeg output is not whole rgb24 frames")
     frames = np.frombuffer(raw, np.uint8).reshape(-1, height, width, 3)
     return width, height, frames
-
-
-def _resolve_audio_backend(decode_backend: str):
-    """Backend name -> (payload) -> (rate, samples) — the audio twin of
-    :func:`_resolve_decode_backend`, eagerly validated on the driver.
-
-    'auto' (round 13): the same cost-seam route as the image side —
-    FLAC (native 1.76 MB/s/core, under the 2.0 crossover) goes to the
-    ffmpeg adapter where the binary exists; the RIFF family (5.3-29
-    MB/s/core) stays native; adapter absent -> everything native."""
-    if decode_backend == "native":
-        return decode_audio_native
-    if decode_backend == "ffmpeg":
-        _require_ffmpeg()
-        return decode_audio_ffmpeg
-    if decode_backend == "auto":
-        import shutil as _shutil
-
-        available = _shutil.which("ffmpeg") is not None
-        route = {
-            fmt: decide_decode_backend(fmt, available).choice
-            for fmt in ("flac", "wav")
-        }
-
-        def decode_audio_auto(payload: bytes):
-            fmt = "flac" if payload[:4] == FLAC_MAGIC else "wav"
-            if route.get(fmt) == "adapter":
-                return decode_audio_ffmpeg(payload)
-            return decode_audio_native(payload)
-
-        decode_audio_auto.route = route  # audit surface for tests/callers
-        return decode_audio_auto
-    raise ValueError(
-        f"decode_backend must be 'native', 'ffmpeg' or 'auto', got {decode_backend!r}"
-    )
 
 
 _ULAW_BIAS, _ULAW_CLIP = 0x84, 8159
@@ -3044,16 +2693,7 @@ def render_g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     G.711 A-law into a real tag-6 RIFF/WAVE container (round 10 —
     decoded natively by :func:`decode_wav` via the exhaustively-pinned
     expander)."""
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                wavs.append(encode_wav_alaw(rate, _wav_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
+    return _render_stage(df, "audio", lambda d: encode_wav_alaw(*_wav_fixture(d)), id_col)
 
 
 def render_f32_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -3062,16 +2702,7 @@ def render_f32_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     containers (round 11 — decoded natively by :func:`decode_wav`; the
     fixture values k/2^15 are exact dyadics, so the float round-trip is
     bit-exact and the audio_wav arithmetic oracle applies unchanged)."""
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                wavs.append(encode_wav_f32(rate, _wav_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
+    return _render_stage(df, "audio", lambda d: encode_wav_f32(*_wav_fixture(d)), id_col)
 
 
 # --------------------------------------------------------------------------
@@ -3267,15 +2898,11 @@ def render_adpcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     fixture compressed 4:1 into real tag-0x11 containers (multi-block,
     carried step index, fact-trimmed final block)."""
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                wavs.append(encode_wav_adpcm(rate, _adpcm_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
+    def enc(doc_id: int) -> bytes:
+        rate, ch, n = _wav_fixture_geom(doc_id)
+        return encode_wav_adpcm(rate, _adpcm_fixture_samples(doc_id, ch, n))
 
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
+    return _render_stage(df, "audio", enc, id_col)
 
 
 def adpcm_roundtrip_check(
@@ -3292,47 +2919,25 @@ def adpcm_roundtrip_check(
     doc_id inside the executor batch. ADPCM is differential — a wrong
     step table, nibble order, or block-state handoff diverges by the
     full signal swing, far past the pinned tolerance."""
-    schema = (
-        f"{id_col} long, byte_len long, sample_rate long, n_channels long, "
-        "n_samples long, duration_us long, decode_ok boolean"
+
+    def features(doc_id: int, data: bytes, decoded) -> tuple:
+        rate, samples = decoded
+        _, ch, n = _wav_fixture_geom(doc_id)
+        ref = _adpcm_fixture_samples(doc_id, ch, n)
+        ok = (
+            samples.shape == ref.shape
+            and int(np.abs(samples.astype(np.int64) - ref.astype(np.int64)).max())
+            <= ADPCM_TOLERANCE
+        )
+        n_samples, n_channels = samples.shape
+        return len(data), rate, n_channels, n_samples, n_samples * 1_000_000 // rate, bool(ok)
+
+    return _decode_stage(
+        df, id_col, audio_col,
+        "byte_len long, sample_rate long, n_channels long, n_samples long, "
+        "duration_us long, decode_ok boolean",
+        decode_wav, features, safe,
     )
-    if safe:
-        schema += ", status string, error string"
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "sample_rate", "n_channels", "n_samples",
-                "duration_us", "decode_ok"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[audio_col]):
-                data = bytes(payload)
-                try:
-                    rate, samples = decode_wav(data)
-                except ImportError:
-                    raise  # environment defect, not a payload defect
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 6
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                _, ch, n = _wav_fixture_geom(int(doc_id))
-                ref = _adpcm_fixture_samples(int(doc_id), ch, n)
-                ok = (
-                    samples.shape == ref.shape
-                    and int(np.abs(samples.astype(np.int64) - ref.astype(np.int64)).max())
-                    <= ADPCM_TOLERANCE
-                )
-                row = (doc_id, len(data), rate, samples.shape[1], samples.shape[0],
-                       samples.shape[0] * 1_000_000 // rate, bool(ok))
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, audio_col).mapInPandas(decode, schema)
 
 
 # --------------------------------------------------------------------
@@ -4016,10 +3621,9 @@ def encode_flac(
 def decode_audio_native(payload: bytes) -> tuple[int, np.ndarray]:
     """The zero-dependency audio entry point: container dispatch on the
     magic bytes — FLAC (``fLaC``) to :func:`decode_flac`, everything
-    else to the RIFF/WAVE walk of :func:`decode_wav`. This is what
-    ``audio_features(decode_backend='native')`` runs; with FLAC native,
-    the adapter seam (``decode_audio_ffmpeg``) is down to PERCEPTUAL
-    codecs only (MP3/AAC)."""
+    else to the RIFF/WAVE walk of :func:`decode_wav`. This is the decoder
+    :func:`audio_features` runs; only PERCEPTUAL codecs (MP3/AAC) are
+    left to the ffmpeg reference decoder :func:`decode_audio_ffmpeg`."""
     if payload[:4] == FLAC_MAGIC:
         return decode_flac(payload)
     return decode_wav(payload)
@@ -4035,15 +3639,9 @@ def render_flac_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     requires."""
     modes = ["independent", "left-side", "right-side", "mid-side"]
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            flacs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                mode = modes[(int(doc_id) // 10) % 4] if ch == 2 else "independent"
-                flacs.append(
-                    encode_flac(rate, _wav_fixture_samples(int(doc_id), ch, n), stereo_mode=mode)
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": flacs})
+    def enc(doc_id: int) -> bytes:
+        rate, samples = _wav_fixture(doc_id)
+        mode = modes[(doc_id // 10) % 4] if samples.shape[1] == 2 else "independent"
+        return encode_flac(rate, samples, stereo_mode=mode)
 
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
+    return _render_stage(df, "audio", enc, id_col)

@@ -436,7 +436,7 @@ def ivf_centroids_np(
     trains on bounded samples for the same reason), so training cost
     becomes O(sample · k · dim) driver-side matmul — independent of
     corpus size. Assignment of the full corpus happens once, at write
-    time (:func:`write_ivf_index` with method='numpy')."""
+    time (:func:`write_ivf_index`, whose matmul route takes large k)."""
     spark = corpus.sparkSession
     n_sample = sample_per_centroid * k
     sample = (
@@ -694,7 +694,6 @@ def write_ivf_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "auto",
 ) -> None:
     """Materialize the IVF index: assign each corpus row's bucket ONCE at
     write time and store the corpus hive-partitioned by bucket. At 100 TB
@@ -702,19 +701,17 @@ def write_ivf_index(
     once at ingest, and a probe becomes a partition-pruned read of
     ``nprobe`` directories instead of a full scan + assignment.
 
-    ``method``: 'sql' (the broadcast one-row-relation fold of
-    :func:`with_bucket` — plan O(1) in k, fine at small k), 'numpy'
-    (:func:`assign_buckets_np` — Arrow matmul, the √N-scaled-k route),
-    or 'auto' (numpy above IVF_NUMPY_ASSIGN_MIN_K centroids)."""
-    if method == "auto":
-        method = "numpy" if len(centroids) > IVF_NUMPY_ASSIGN_MIN_K else "sql"
-    if method == "numpy":
+    Above IVF_NUMPY_ASSIGN_MIN_K centroids (read at call time, so tests
+    force either side by patching it) the assignment is
+    :func:`assign_buckets_np` — Arrow matmul, the √N-scaled-k route;
+    at or below it, the broadcast one-row-relation fold of
+    :func:`with_bucket` — plan O(1) in k, fine at small k. Both assign
+    identical buckets."""
+    if len(centroids) > IVF_NUMPY_ASSIGN_MIN_K:
         assigned = assign_buckets_np(corpus, centroids, vec_col, "bucket")
-    elif method == "sql":
+    else:
         crel = centroid_relation(corpus.sparkSession, centroids)
         assigned = with_bucket(corpus, crel, vec_col, "bucket")
-    else:
-        raise ValueError(f"method must be 'auto'|'sql'|'numpy', got {method!r}")
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
@@ -906,11 +903,12 @@ def auto_ivf_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    crossover: int = IVF_AUTO_CROSSOVER_VECTORS,
 ):
     """Cost-aware IVF top-k — a measured-crossover default on the
     shared ``plans/cost.py`` seam, like the near-dup edge route.
-    Measures the corpus size (one metadata-cheap count) and routes:
+    Measures the corpus size (one metadata-cheap count) and compares it
+    with IVF_AUTO_CROSSOVER_VECTORS, read at call time (tests force the
+    stored route by lowering it):
 
     - ``live`` (≤ crossover): in-plan Lloyd training at k=16 + in-plan
       bucket assignment (:func:`ivf_centroids` + :func:`ivf_topk`) —
@@ -931,7 +929,7 @@ def auto_ivf_topk(
     n = corpus.count()
     decision = decide_crossover(
         float(n),
-        float(crossover),
+        float(IVF_AUTO_CROSSOVER_VECTORS),
         "stored",
         "live",
         "ivf corpus vectors",

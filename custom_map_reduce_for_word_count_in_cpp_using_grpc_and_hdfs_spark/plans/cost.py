@@ -1,8 +1,10 @@
 """Shared measured-crossover decision seam.
 
-Four cost-aware defaults in this engine follow one pattern — measure a
-cheap statistic, compare it to a crossover PINNED from an A/B run at
-scale, log which side won and why, select the route:
+Three cost-aware routes in this engine call :func:`decide_crossover`.
+Each measures a cheap statistic, compares it to a crossover PINNED from
+an A/B run at scale, logs which side won and why, and selects the route.
+None takes a parameter that forces a side: each reads its module-level
+constant at call time, so tests force a side by patching the constant.
 
 - near-dup edge route (``queries/pipeline_q.choose_edge_method``):
   estimated shingle postings vs the 30M crossover where MinHash+LSH
@@ -10,9 +12,6 @@ scale, log which side won and why, select the route:
 - connected-components route (``operators/dedup.connected_components``):
   the materialized edge count vs the 2M-edge cap up to which one
   driver-local union-find beats the distributed label-propagation loop.
-- multimodal decode backend (``operators/multimodal``): a payload
-  class's native decode MB/s/core vs the 2.0 MB/s/core rate below which
-  the library adapter wins.
 - IVF top-k route (``operators/similarity.auto_ivf_topk``): corpus
   vectors vs the 60k-vector size above which the stored,
   partition-pruned index beats in-plan training.
@@ -20,8 +19,8 @@ scale, log which side won and why, select the route:
 Centralizing the compare-and-log step keeps every new cost-aware
 default on one seam with one test pattern (VERDICT r9 item 7): the
 callers stay responsible for MEASURING their statistic (each has a
-different cheap path — metadata counts, sampled aggregates, static
-rate tables) and for acting on the label; this module owns the decision
+different cheap path — metadata counts, sampled aggregates) and for
+acting on the label; this module owns the decision
 and its audit trail.
 """
 

@@ -276,24 +276,21 @@ def choose_edge_method(docs: DataFrame, text_col: str = "text", n: int = 3) -> s
     return method
 
 
-def curate(docs: DataFrame, edge_method: str = "auto") -> DataFrame:
+def curate(docs: DataFrame) -> DataFrame:
     """Pipeline over an arbitrary documents DataFrame (doc_id, text, lang)
     — the seam the pathological hot-shingle fixture test drives.
 
-    ``edge_method`` selects the near-dup edge source for the clustering
-    stage (same knob as operators/dedup.py::near_dup_components):
-    'auto' (default since round 9 — VERDICT r8 item 1) picks the route
-    from measured corpus stats via :func:`choose_edge_method`: exact
-    below the pinned posting crossover (every SF with a hash-exact
-    oracle lands here), MinHash above it (the measured 0.33x edge route
-    at sf100 — at 100 TB a user takes the default, so the default is
-    cost-aware); 'jaccard' forces the exact shingle-index join with the
-    hot-shingle df cap — the oracle-exact shape; 'minhash' forces
-    LSH-verified MinHash edges — identical output wherever LSH recall
-    is 1.0 (this corpus: measured 1.0 at sf0.01–sf1, asserted in
-    tests/test_pipeline.py; 0.9999+ at sf10/sf100 — see
-    EDGE_AUTO_CROSSOVER_POSTINGS), never over-merging anywhere
-    (verified edges ⇒ the partition refines the exact one).
+    The near-dup edge source for the clustering stage is picked from
+    measured corpus stats by :func:`choose_edge_method` (round 9 —
+    VERDICT r8 item 1) against EDGE_AUTO_CROSSOVER_POSTINGS, read at
+    call time (tests force either side by patching it): below it, the
+    exact shingle-index join with the hot-shingle df cap — the
+    oracle-exact shape, where every SF with a hash-exact oracle lands;
+    above it, LSH-verified MinHash edges (the measured 0.33x edge route
+    at sf100) — identical output wherever LSH recall is 1.0 (this
+    corpus: measured 1.0 at sf0.01–sf1, asserted in
+    tests/test_pipeline.py; 0.9999+ at sf10/sf100), never over-merging
+    anywhere (verified edges ⇒ the partition refines the exact one).
 
     The quality gate is computed PER ROW (quality_features/lang_id/
     fingerprint — one narrow map over the scan, no explode, no shuffle),
@@ -334,20 +331,14 @@ def curate(docs: DataFrame, edge_method: str = "auto") -> DataFrame:
     # hot shingles capped out of candidate generation (SHINGLE_DF_CAP);
     # minhash route: the banded equi-join IS the skew bound (band width
     # caps any key's collision mass), so no df cap applies.
-    if edge_method == "auto":
-        # decide on the RAW input frame: its count is metadata-cheap for
-        # a parquet scan (survivors would force the gate+dedup stages an
-        # extra time) and upper-bounds the survivor count, so the switch
-        # can only trip EARLY — toward the route that wins at scale
-        edge_method = choose_edge_method(docs)
-    if edge_method == "jaccard":
+    # decide on the RAW input frame: its count is metadata-cheap for a
+    # parquet scan (survivors would force the gate+dedup stages an extra
+    # time) and upper-bounds the survivor count, so the switch can only
+    # trip EARLY — toward the route that wins at scale
+    if choose_edge_method(docs) == "jaccard":
         edges = D.jaccard_pairs(surv_docs, JACCARD_T, max_shingle_df=SHINGLE_DF_CAP)
-    elif edge_method == "minhash":
-        edges = D.minhash_near_dups(surv_docs, JACCARD_T)
     else:
-        raise ValueError(
-            f"edge_method must be 'auto', 'jaccard' or 'minhash', got {edge_method!r}"
-        )
+        edges = D.minhash_near_dups(surv_docs, JACCARD_T)
     edges = edges.select("doc_a", "doc_b")
     comps = D.connected_components(
         surv_docs.select("doc_id"), edges, id_col="doc_id", src_col="doc_a", dst_col="doc_b"

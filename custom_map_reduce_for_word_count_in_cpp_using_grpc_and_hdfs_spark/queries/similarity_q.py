@@ -3,6 +3,8 @@ operators/multimodal.py)."""
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -137,6 +139,36 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = approx.select("query_id", "neighbor_id")
     exact = S.brute_force_topk(queries, emb, TOP_K).select("query_id", "neighbor_id")
     return _recall_invariant(approx, exact, queries, 0.65, "recall_ge_0_65")
+
+
+#: mm_suite's tagged-union columns after ``op``, with their types, in output order.
+_MM_UNION = (
+    ("doc_id", "long"), ("payload_md5", "string"), ("modality", "string"),
+    ("byte_len", "long"), ("width", "long"), ("height", "long"), ("n_frames", "long"),
+    ("resized_w", "long"), ("resized_h", "long"), ("sampled_frames", "string"),
+    ("maxval", "long"), ("pixel_sum", "long"), ("r_sum", "long"), ("g_sum", "long"),
+    ("b_sum", "long"), ("decode_ok", "boolean"), ("status", "string"),
+)
+
+
+def _same(*names: str) -> dict:
+    """Union columns taken unchanged from same-named source columns."""
+    return {name: name for name in names}
+
+
+def _mm_branch(frame: DataFrame, op: str, cols: dict) -> DataFrame:
+    """One ``mm_suite`` union branch: the ``op`` tag, then every
+    :data:`_MM_UNION` column in order. ``cols`` maps a union column to a
+    source column name or a Column; a union column it omits or maps to
+    None is a NULL of the union type (the oracle check is type-exact)."""
+
+    def slot(name: str, dtype: str):
+        src = cols.get(name)
+        if src is None:
+            return F.lit(None).cast(dtype).alias(name)
+        return (F.col(src) if isinstance(src, str) else src).alias(name)
+
+    return frame.select(F.lit(op).alias("op"), *(slot(n, t) for n, t in _MM_UNION))
 
 
 @query(
@@ -528,7 +560,9 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal surface end to end, one tagged union (round-4
-    registry consolidation of the former mm_suite + mm_real_decode):
+    registry consolidation of the former mm_suite + mm_real_decode).
+    Every op fills the same ``op`` + 17-column union through
+    :func:`_mm_branch`, NULL (typed) where the op has no value:
 
     - op='meta_decode': rows carry (payload: binary, meta: struct) —
       payload proven byte-exact via md5 over the bytes on both engines,
@@ -654,38 +688,18 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("meta.modality").alias("modality"),
     )
     decoded = MM.fake_decode_meta(with_payload)
-    nb = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
-    nflag = F.lit(None).cast("boolean")
-    meta_rows = meta.join(decoded, "doc_id").select(
-        F.lit("meta_decode").alias("op"),
-        "doc_id", "payload_md5", "modality", "byte_len", "width", "height", "n_frames",
-        "resized_w", "resized_h", "sampled_frames",
-        nb.alias("maxval"), nb.alias("pixel_sum"),
-        nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
+    meta_rows = _mm_branch(
+        meta.join(decoded, "doc_id"), "meta_decode",
+        _same("doc_id", "payload_md5", "modality", "byte_len", "width", "height", "n_frames",
+              "resized_w", "resized_h", "sampled_frames"),
     )
-    def decoded_rows(op: str, rendered: DataFrame) -> DataFrame:
-        return MM.decode_image_stats(rendered).select(
-            F.lit(op).alias("op"),
-            "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-            "width", "height", nb.alias("n_frames"),
-            nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-            "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum",
-            nflag.alias("decode_ok"), ns.alias("status"),
-        )
-
-    real_rows = decoded_rows("real_decode", MM.render_ppm_payloads(docs))
-    png_rows = decoded_rows("png_decode", MM.render_png_payloads(docs))
+    image = _same("doc_id", "width", "height", "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum")
+    real_rows = _mm_branch(MM.decode_image_stats(MM.render_ppm_payloads(docs)), "real_decode", image)
+    png_rows = _mm_branch(MM.decode_image_stats(MM.render_png_payloads(docs)), "png_decode", image)
     jpeg_docs = docs.where(F.col("doc_id") % 10 == 0)
-    jpeg_rows = MM.decode_jpeg_check(MM.render_jpeg_payloads(jpeg_docs)).select(
-        F.lit("jpeg_decode").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        "width", "height", nb.alias("n_frames"),
-        nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-        nb.alias("maxval"), nb.alias("pixel_sum"),
-        nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        "decode_ok", ns.alias("status"),
+    jpeg_rows = _mm_branch(
+        MM.decode_jpeg_check(MM.render_jpeg_payloads(jpeg_docs)), "jpeg_decode",
+        _same("doc_id", "width", "height", "decode_ok"),
     )
     # op='quarantine' (round 8, VERDICT r7 item 1): safe-mode decode over
     # a batch with three planted failure classes (truncated PPM,
@@ -696,14 +710,7 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here (kept for triage in the operator output): exception MESSAGES
     # can vary across numpy versions, exception CLASSES cannot.
     q_stats = MM.decode_image_stats(MM.render_quarantine_payloads(jpeg_docs), safe=True)
-    quarantine_rows = q_stats.select(
-        F.lit("quarantine").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        "width", "height", nb.alias("n_frames"),
-        nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-        "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum",
-        nflag.alias("decode_ok"), "status",
-    )
+    quarantine_rows = _mm_branch(q_stats, "quarantine", {**image, "status": "status"})
     # op='quarantine_summary' (round 9, VERDICT r8 item 7): the one-pass
     # quarantine-rate rollup a 100 TB ingest watches next to the decode —
     # per-status doc counts (in byte_len) over the same safe-decode
@@ -711,6 +718,10 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the driver row keeps the driver-stable columns (counts + status —
     # error MESSAGES vary across numpy versions, counts and CLASSES
     # cannot).
+    summary_rows = _mm_branch(
+        MM.quarantine_summary(q_stats), "quarantine_summary",
+        {"byte_len": "n_docs", "status": "status"},
+    )
     # op='video_y4m' (round 9): REAL video-container decode — one raw
     # YUV4MPEG2 stream per sampled doc rendered executor-side, parsed by
     # the native Y4M decoder (header parameter scan + length-based FRAME
@@ -719,116 +730,56 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # planes — no color conversion), so the oracle regenerates every
     # byte arithmetically: byte_len = exact container size, pixel_sum =
     # y+cb+cr, and the r/g/b columns carry the Y/Cb/Cr plane sums.
-    video_rows = MM.video_frame_stats(MM.render_y4m_payloads(jpeg_docs)).select(
-        F.lit("video_y4m").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        "width", "height", "n_frames",
-        nb.alias("resized_w"), nb.alias("resized_h"), "sampled_frames",
-        nb.alias("maxval"),
-        (F.col("y_sum") + F.col("cb_sum") + F.col("cr_sum")).alias("pixel_sum"),
-        F.col("y_sum").alias("r_sum"), F.col("cb_sum").alias("g_sum"),
-        F.col("cr_sum").alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
+    video = _same("doc_id", "byte_len", "width", "height", "n_frames", "sampled_frames")
+    video_rows = _mm_branch(
+        MM.video_frame_stats(MM.render_y4m_payloads(jpeg_docs)), "video_y4m",
+        {
+            **video,
+            "pixel_sum": F.col("y_sum") + F.col("cb_sum") + F.col("cr_sum"),
+            "r_sum": "y_sum", "g_sum": "cb_sum", "b_sum": "cr_sum",
+        },
     )
-    # op='audio_wav' (round 9): REAL audio-container decode — one RIFF/
-    # WAVE (16-bit PCM) per sampled doc, chunk-walked by the native WAV
-    # parser, per-document features all integers. Union-schema mapping
-    # (documented here because the tagged union reuses column slots):
-    # width=sample_rate, height=n_channels, n_frames=n_samples,
-    # resized_w=duration_us, pixel_sum=abs_sum (L1 energy),
-    # r_sum=ch0_sum, g_sum=ch1_sum (NULL for mono).
-    audio_rows = MM.audio_features(MM.render_pcm_variant_payloads(jpeg_docs)).select(
-        F.lit("audio_wav").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        F.col("abs_sum").alias("pixel_sum"),
-        F.col("ch0_sum").alias("r_sum"), F.col("ch1_sum").alias("g_sum"),
-        nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
+    # The audio ops (round 9 audio_wav: the four PCM containers; round 10
+    # audio_g711: A-law, expanded by the exhaustively-pinned compander;
+    # round 11 audio_f32: IEEE-float, bit-exact on the dyadic fixture;
+    # round 12 audio_flac: Rice-coded, all four stereo channel
+    # assignments, CRC- and MD5-self-verified) share one union-slot
+    # mapping: width=sample_rate, height=n_channels, n_frames=n_samples,
+    # resized_w=duration_us, pixel_sum=abs_sum (L1 energy), r_sum=ch0_sum,
+    # g_sum=ch1_sum (NULL for mono). audio_flac leaves byte_len NULL —
+    # Rice lengths aren't SQL-expressible, which is precisely what
+    # distinguishes an entropy container from the fixed-layout ones.
+    audio = {
+        "doc_id": "doc_id", "byte_len": "byte_len", "width": "sample_rate",
+        "height": "n_channels", "n_frames": "n_samples", "resized_w": "duration_us",
+        "pixel_sum": "abs_sum", "r_sum": "ch0_sum", "g_sum": "ch1_sum",
+    }
+    audio_rows = [
+        _mm_branch(MM.audio_features(render(jpeg_docs)), op, cols)
+        for op, render, cols in (
+            ("audio_wav", MM.render_pcm_variant_payloads, audio),
+            ("audio_g711", MM.render_g711_payloads, audio),
+            ("audio_f32", MM.render_f32_payloads, audio),
+            ("audio_flac", MM.render_flac_payloads, {**audio, "byte_len": None}),
+        )
+    ]
     # op='image_resize' (round 9): decode -> REAL nearest-neighbor
     # resize (aspect-preserving 8-box fit, no upscale) -> sums of the
     # RESIZED raster. NN resampling is pure index arithmetic, so the
     # oracle re-derives every output pixel — the resize KERNEL is
     # hash-checked, not just the plumbing (fake_decode_meta's resized_w/h
     # checked only the geometry arithmetic).
-    resize_rows = MM.resized_image_stats(MM.render_ppm_payloads(docs), box=8).select(
-        F.lit("image_resize").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        "width", "height", nb.alias("n_frames"),
-        F.col("resized_w"), F.col("resized_h"), ns.alias("sampled_frames"),
-        nb.alias("maxval"), "pixel_sum", "r_sum", "g_sum", "b_sum",
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    # op='audio_g711' (round 10): COMPRESSED audio decoded natively —
-    # A-law (tag 6) containers of the same fixture samples, expanded by
-    # the exhaustively-pinned compander inside decode_wav; the oracle
-    # recomputes the quantized sums via the SQL quantizer, so the
-    # compander itself is value-checked cross-engine. Same union-slot
-    # mapping as audio_wav.
-    g711_rows = MM.audio_features(MM.render_g711_payloads(jpeg_docs)).select(
-        F.lit("audio_g711").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        F.col("abs_sum").alias("pixel_sum"),
-        F.col("ch0_sum").alias("r_sum"), F.col("ch1_sum").alias("g_sum"),
-        nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
+    resize_rows = _mm_branch(
+        MM.resized_image_stats(MM.render_ppm_payloads(docs), box=8), "image_resize",
+        _same("doc_id", "width", "height", "resized_w", "resized_h",
+              "pixel_sum", "r_sum", "g_sum", "b_sum"),
     )
     # op='video_mjpeg' (round 10): compressed-container video — RIFF/AVI
     # walk + per-frame JPEG decode; exact geometry/count/indices, pixel
     # correctness via the in-plan bounded-error invariant (decode_ok).
-    mjpeg_rows = MM.mjpeg_frame_check(MM.render_avi_payloads(jpeg_docs)).select(
-        F.lit("video_mjpeg").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        "width", "height", "n_frames",
-        nb.alias("resized_w"), nb.alias("resized_h"), "sampled_frames",
-        nb.alias("maxval"), nb.alias("pixel_sum"),
-        nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        "decode_ok", ns.alias("status"),
-    )
-    # op='audio_f32' (round 11): IEEE-float WAV (tag 3) decoded natively
-    # — fixture values k/2^15 are exact dyadics, so the float round-trip
-    # is bit-exact and the PCM arithmetic oracle applies verbatim; only
-    # byte_len changes (4-byte samples + the fact chunk). Same
-    # union-slot mapping as audio_wav.
-    f32_rows = MM.audio_features(MM.render_f32_payloads(jpeg_docs)).select(
-        F.lit("audio_f32").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        F.col("abs_sum").alias("pixel_sum"),
-        F.col("ch0_sum").alias("r_sum"), F.col("ch1_sum").alias("g_sum"),
-        nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    # op='audio_flac' (round 12): FLAC decoded NATIVELY — the entropy
-    # codec milestone: Rice-coded fixed-prediction residuals, all four
-    # stereo channel assignments cycled by doc arithmetic, CRC-8/16 and
-    # STREAMINFO-MD5 self-verified in the decoder. Lossless, so the
-    # exact PCM sums apply verbatim (same union-slot mapping as
-    # audio_wav); byte_len is NULL — Rice lengths aren't
-    # SQL-expressible, which is precisely what distinguishes an entropy
-    # container from the fixed-layout ones.
-    flac_rows = MM.audio_features(MM.render_flac_payloads(jpeg_docs)).select(
-        F.lit("audio_flac").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        F.col("abs_sum").alias("pixel_sum"),
-        F.col("ch0_sum").alias("r_sum"), F.col("ch1_sum").alias("g_sum"),
-        nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
+    mjpeg_rows = _mm_branch(
+        MM.mjpeg_frame_check(MM.render_avi_payloads(jpeg_docs)), "video_mjpeg",
+        {**video, "byte_len": None, "decode_ok": "decode_ok"},
     )
     # op='audio_adpcm' (round 11): IMA-ADPCM WAV (tag 0x11) decoded
     # natively — block-structured 4-bit differential codec, multi-block
@@ -838,40 +789,22 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and sample correctness is the in-plan bounded-error invariant
     # (decode_ok ≤ ADPCM_TOLERANCE vs the triangle-wave reference — the
     # jpeg_decode pattern at the audio seam).
-    adpcm_rows = MM.adpcm_roundtrip_check(MM.render_adpcm_payloads(jpeg_docs)).select(
-        F.lit("audio_adpcm").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        nb.alias("pixel_sum"), nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        "decode_ok", ns.alias("status"),
+    adpcm_rows = _mm_branch(
+        MM.adpcm_roundtrip_check(MM.render_adpcm_payloads(jpeg_docs)), "audio_adpcm",
+        {**audio, "pixel_sum": None, "r_sum": None, "g_sum": None, "decode_ok": "decode_ok"},
     )
     # op='video_dib' (round 11): UNCOMPRESSED AVI — raw-RGB DIB frames
     # through the same RIFF walk (BMP row layout: bottom-up, BGR, 4-byte
     # padding). Lossless, so unlike video_mjpeg every output is an exact
     # integer: container bytes, geometry, and per-channel sums over the
     # sampled frames, all re-derived arithmetically by the oracle.
-    dib_rows = MM.dib_frame_stats(MM.render_dib_payloads(jpeg_docs)).select(
-        F.lit("video_dib").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        "width", "height", "n_frames",
-        nb.alias("resized_w"), nb.alias("resized_h"), "sampled_frames",
-        nb.alias("maxval"),
-        (F.col("r_sum") + F.col("g_sum") + F.col("b_sum")).alias("pixel_sum"),
-        "r_sum", "g_sum", "b_sum",
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    summary_rows = MM.quarantine_summary(q_stats).select(
-        F.lit("quarantine_summary").alias("op"),
-        nb.alias("doc_id"), ns.alias("payload_md5"), ns.alias("modality"),
-        F.col("n_docs").alias("byte_len"),
-        nb.alias("width"), nb.alias("height"), nb.alias("n_frames"),
-        nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-        nb.alias("maxval"), nb.alias("pixel_sum"),
-        nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        nflag.alias("decode_ok"), "status",
+    dib_rows = _mm_branch(
+        MM.dib_frame_stats(MM.render_dib_payloads(jpeg_docs)), "video_dib",
+        {
+            **video,
+            "pixel_sum": F.col("r_sum") + F.col("g_sum") + F.col("b_sum"),
+            **_same("r_sum", "g_sum", "b_sum"),
+        },
     )
     # op='binary_ingest' (round 7, VERDICT r6 item 3): the raw-FILE edge.
     # Real .ppm files staged once per sf_dir (executor-written, marker-
@@ -885,30 +818,12 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("length").cast("long").alias("byte_len"),
         F.col("content").alias("img"),
     )
-    ingest_rows = MM.decode_image_stats(parsed).join(
-        parsed.select("doc_id", "byte_len"), "doc_id"
-    ).select(
-        F.lit("binary_ingest").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        "width", "height", nb.alias("n_frames"),
-        nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-        "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum",
-        nflag.alias("decode_ok"), ns.alias("status"),
+    ingest_rows = _mm_branch(
+        MM.decode_image_stats(parsed).join(parsed.select("doc_id", "byte_len"), "doc_id"),
+        "binary_ingest", {**image, "byte_len": "byte_len"},
     )
-    return (
-        meta_rows.unionAll(real_rows)
-        .unionAll(png_rows)
-        .unionAll(jpeg_rows)
-        .unionAll(ingest_rows)
-        .unionAll(quarantine_rows)
-        .unionAll(summary_rows)
-        .unionAll(video_rows)
-        .unionAll(audio_rows)
-        .unionAll(resize_rows)
-        .unionAll(mjpeg_rows)
-        .unionAll(g711_rows)
-        .unionAll(f32_rows)
-        .unionAll(flac_rows)
-        .unionAll(adpcm_rows)
-        .unionAll(dib_rows)
-    )
+    branches = [
+        meta_rows, real_rows, png_rows, jpeg_rows, ingest_rows, quarantine_rows,
+        summary_rows, video_rows, *audio_rows, resize_rows, mjpeg_rows, adpcm_rows, dib_rows,
+    ]
+    return functools.reduce(DataFrame.unionAll, branches)

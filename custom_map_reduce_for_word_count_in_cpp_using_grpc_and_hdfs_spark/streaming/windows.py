@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -231,6 +232,12 @@ def _source_bytes(path: str) -> int:
     )
 
 
+#: Serializes the save / set / start / restore of the session shuffle
+#: width in :func:`run_available_now_many` across threads sharing one
+#: session, so overlapping drains never restore each other's width.
+_WIDTH_LOCK = threading.Lock()
+
+
 def run_available_now(
     df: DataFrame, mode: str, timeout_s: int = 300, shuffle_width: int | None = None
 ) -> DataFrame:
@@ -260,31 +267,40 @@ def run_available_now_many(
     ``shuffle_width`` (round 14): the shuffle/state-store partition
     count for the queries STARTED here — streaming reads
     ``spark.sql.shuffle.partitions`` at query start (AQE is disabled, so
-    there is no later coalescing) and pins it into the checkpoint. The
-    session value is restored after the drains complete; callers derive
-    the width from their source size via :func:`stream_shuffle_width`.
-    ``None`` leaves the session width untouched.
+    there is no later coalescing) and pins it into the checkpoint. So
+    the session value is restored as soon as the last query has started,
+    before any drain is awaited, and the save-set-start-restore sequence
+    holds a module-level lock: drains overlapping on other threads of the
+    same session each see and restore the caller's width, never another
+    drain's. Callers derive the width from their source size via
+    :func:`stream_shuffle_width`. ``None`` leaves the session width
+    untouched.
 
     If any drain fails or times out, every still-active query is stopped
     before the error propagates — no leaked streaming queries or
     memory-sink state."""
     started = []
     spark = dfs_modes[0][0].sparkSession if dfs_modes else None
-    prev_width = None
-    if shuffle_width is not None and spark is not None:
-        prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width))
+    set_width = shuffle_width is not None and spark is not None
     try:
-        for df, mode in dfs_modes:
-            name = f"stream_{uuid.uuid4().hex[:12]}"
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            started.append((df, name, q))
+        with _WIDTH_LOCK:
+            if set_width:
+                prev_width = spark.conf.get("spark.sql.shuffle.partitions")
+                spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width))
+            try:
+                for df, mode in dfs_modes:
+                    name = f"stream_{uuid.uuid4().hex[:12]}"
+                    q = (
+                        df.writeStream.format("memory")
+                        .queryName(name)
+                        .outputMode(mode)
+                        .trigger(availableNow=True)
+                        .start()
+                    )
+                    started.append((df, name, q))
+            finally:
+                if set_width:
+                    spark.conf.set("spark.sql.shuffle.partitions", prev_width)
         out = []
         for df, name, q in started:
             if not q.awaitTermination(timeout_s):
@@ -301,9 +317,6 @@ def run_available_now_many(
             except Exception:
                 pass
         raise
-    finally:
-        if prev_width is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_width)
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:

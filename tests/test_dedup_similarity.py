@@ -182,7 +182,7 @@ def test_zero_norm_vectors_do_not_poison_topk(spark):
     assert got[0].neighbor_id == 2
 
 
-def test_connected_components_matches_union_find(spark):
+def test_connected_components_matches_union_find(spark, monkeypatch):
     """Property: hash-min label propagation equals a reference union-find
     on random graphs (including isolated vertices and multi-hop chains
     that need several propagation rounds)."""
@@ -222,9 +222,11 @@ def test_connected_components_matches_union_find(spark):
 
         vdf = spark.createDataFrame(vertices, "id long")
         edf = spark.createDataFrame(edges, "src long, dst long")
-        # both routes of the round-13 cost seam must equal the reference
-        for route in ("driver", "loop"):
-            got = {r.id: r.comp for r in D.connected_components(vdf, edf, route=route).collect()}
+        # both routes of the round-13 cost seam must equal the reference:
+        # driver-local under the default edge cap, the loop with no cap
+        for route, cap in (("driver", D.CC_DRIVER_LOCAL_MAX_EDGES), ("loop", -1)):
+            monkeypatch.setattr(D, "CC_DRIVER_LOCAL_MAX_EDGES", cap)
+            got = {r.id: r.comp for r in D.connected_components(vdf, edf).collect()}
             assert got == want, f"trial {trial} route {route}"
 
 
@@ -286,10 +288,13 @@ def test_lsh_candidate_pairs_rejects_wrong_signature_width(spark):
         D.lsh_candidate_pairs(sigs, bands=8, num_perm=32).count()
 
 
-def test_connected_components_raises_when_unconverged(spark):
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
     """A chain longer than max_iters' propagation reach must raise, not
-    return silently under-merged labels."""
+    return silently under-merged labels (the distributed loop, forced by
+    an edge cap of -1)."""
     import pytest
+
+    monkeypatch.setattr(D, "CC_DRIVER_LOCAL_MAX_EDGES", -1)
 
     n = 12
     vertices = spark.range(n).select(F.col("id"))
@@ -297,18 +302,20 @@ def test_connected_components_raises_when_unconverged(spark):
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
     with pytest.raises(RuntimeError, match="still changing"):
-        D.connected_components(vertices, edges, max_iters=2, route="loop")
-    full = D.connected_components(vertices, edges, max_iters=n + 1, route="loop")
+        D.connected_components(vertices, edges, max_iters=2)
+    full = D.connected_components(vertices, edges, max_iters=n + 1)
     assert {r.comp for r in full.collect()} == {0}
 
 
-def test_connected_components_long_chain_converges_logarithmically(spark):
+def test_connected_components_long_chain_converges_logarithmically(spark, monkeypatch):
     """Path halving must collapse a 200-node path graph well inside
-    max_iters=12 (2^12 >> 200) — plain hash-min would need ~200 rounds."""
+    max_iters=12 (2^12 >> 200) — plain hash-min would need ~200 rounds.
+    The distributed loop is forced by an edge cap of -1."""
+    monkeypatch.setattr(D, "CC_DRIVER_LOCAL_MAX_EDGES", -1)
     n = 200
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
     chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
-    comps = D.connected_components(verts, chain, max_iters=12, route="loop")
+    comps = D.connected_components(verts, chain, max_iters=12)
     rows = comps.collect()
     assert len(rows) == n
     assert {r.comp for r in rows} == {0}, "one component rooted at min id"
@@ -318,10 +325,8 @@ def test_connected_components_route_seam(spark, monkeypatch, caplog):
     """The round-13 driver-local route rides the plans/cost.py seam:
     auto picks driver-local below the edge cap (audit line included),
     the loop above it; null endpoints and non-integral ids always keep
-    the loop; route='driver' on unrepresentable inputs fails loudly."""
+    the loop."""
     import logging as _logging
-
-    import pytest
 
     logger = "custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.dedup"
     verts = spark.createDataFrame([(i,) for i in range(6)], "id long")
@@ -344,21 +349,16 @@ def test_connected_components_route_seam(spark, monkeypatch, caplog):
     assert any("'loop'" in m for m in msgs), msgs
     monkeypatch.undo()
 
-    # null endpoints: auto logs the fallback and takes the loop;
-    # forced driver raises
+    # null endpoints: auto logs the fallback and takes the loop
     nedges = spark.createDataFrame([(0, 1), (2, None)], "src long, dst long")
     caplog.clear()
     with caplog.at_level(_logging.INFO, logger=logger):
         D.connected_components(verts, nedges).collect()
     assert any("null edge endpoints" in r.getMessage() for r in caplog.records)
-    with pytest.raises(ValueError, match="null edge endpoints"):
-        D.connected_components(verts, nedges, route="driver")
 
-    # non-integral ids: forced driver raises; auto silently loops
+    # non-integral ids: auto silently loops
     sverts = spark.createDataFrame([("a",), ("b",), ("c",)], "id string")
     sedges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with pytest.raises(ValueError, match="integral"):
-        D.connected_components(sverts, sedges, route="driver")
     got = {(r.id, r.comp) for r in D.connected_components(sverts, sedges).collect()}
     assert got == {("a", "a"), ("b", "a"), ("c", "c")}
 
@@ -615,7 +615,7 @@ def test_near_dup_components_minhash_refines_exact(spark):
         D.near_dup_components(docs, 0.3, "bogus")
 
 
-def test_auto_ivf_topk_routes_on_measured_crossover(spark, tmp_path):
+def test_auto_ivf_topk_routes_on_measured_crossover(spark, tmp_path, monkeypatch):
     """Round 12 (VERDICT r11 item 1): the driver-gated IVF path is
     cost-aware on the shared plans/cost.py seam. Both ends on the tiny
     fixture by overriding the pinned crossover:
@@ -642,7 +642,8 @@ def test_auto_ivf_topk_routes_on_measured_crossover(spark, tmp_path):
     }
     assert {(r.query_id, r.neighbor_id) for r in live_df.collect()} == expected
 
-    stored_df, d = S.auto_ivf_topk(queries, emb, index_root=idx, crossover=100)
+    monkeypatch.setattr(S, "IVF_AUTO_CROSSOVER_VECTORS", 100)
+    stored_df, d = S.auto_ivf_topk(queries, emb, index_root=idx)
     assert d.choice == "stored" and d.above
     got = {}
     for r in stored_df.collect():
@@ -658,7 +659,7 @@ def test_auto_ivf_topk_routes_on_measured_crossover(spark, tmp_path):
 
     # write-once: the second call loads the sidecar instead of rebuilding
     stamp = {b: os.path.getmtime(os.path.join(idx, b)) for b in buckets}
-    again, d2 = S.auto_ivf_topk(queries, emb, index_root=idx, crossover=100)
+    again, d2 = S.auto_ivf_topk(queries, emb, index_root=idx)
     assert d2.choice == "stored"
     assert {(r.query_id, r.neighbor_id) for r in again.collect()} == {
         (q, n) for q, ns in got.items() for n in ns

@@ -428,11 +428,10 @@ def _has_pillow() -> bool:
 
 @pytest.mark.skipif(not _has_pillow(), reason="Pillow not installed (production decode adapter)")
 def test_pillow_adapter_decodes_what_native_quarantines(spark):
-    """VERDICT r8 item 2, skip-clean like tests/test_hdfs.py: where
-    Pillow exists, decode_backend='pillow' decodes media classes the
-    native numpy codecs quarantine (here: GIF — unknown magic natively),
-    through the SAME mapInPandas plumbing and schema; and on formats
-    both speak (PPM) the two backends agree exactly."""
+    """Skip-clean like tests/test_hdfs.py: where Pillow exists, the
+    Pillow reference decoder decodes media classes the native numpy
+    codecs quarantine (here: GIF — unknown magic natively), and on
+    formats both speak (PPM) the two decoders agree exactly."""
     import io
 
     from PIL import Image
@@ -448,23 +447,9 @@ def test_pillow_adapter_decodes_what_native_quarantines(spark):
     df = spark.createDataFrame([(1, bytearray(gif))], "doc_id long, img binary")
     native = MM.decode_image_stats(df, safe=True).collect()[0]
     assert native["status"].startswith("quarantined:")
-    via_pil = MM.decode_image_stats(df, safe=True, decode_backend="pillow").collect()[0]
-    assert via_pil["status"] == "ok" and (via_pil["width"], via_pil["height"]) == (5, 4)
     # cross-backend agreement on a format both decode natively
     ppm = MM.encode_ppm(5, 4, MM._fixture_pixels(7, 5, 4))
     assert MM.decode_image_pillow(ppm)["pixels"].tolist() == MM.decode_image_real(ppm)["pixels"].tolist()
-
-
-@pytest.mark.skipif(_has_pillow(), reason="Pillow installed — missing-backend guard not reachable")
-def test_pillow_backend_missing_fails_loudly_at_build_time(spark):
-    """Without Pillow, asking for the pillow backend must fail ON THE
-    DRIVER at operator-build time with a clear ImportError — not decode
-    every image into quarantined:ImportError rows executor-side."""
-    df = spark.createDataFrame([(1, bytearray(b"P6"))], "doc_id long, img binary")
-    with pytest.raises(ImportError, match="Pillow"):
-        MM.decode_image_stats(df, safe=True, decode_backend="pillow")
-    with pytest.raises(ValueError, match="decode_backend"):
-        MM.decode_image_stats(df, decode_backend="bogus")
 
 
 def test_y4m_roundtrip_and_seams():
@@ -589,19 +574,24 @@ def test_audio_features_exact(spark):
 
 
 def test_av_safe_mode_quarantines_bad_containers(spark):
-    """audio_features/video_frame_stats(safe=True) carry the same
-    quarantine contract as the image path: planted bad containers
-    (MP3-in-WAV, truncated WAV, chroma-subsampled Y4M, alien magic)
-    become status rows with the exception class while good neighbors
-    keep strict-mode-identical features; strict mode still raises; and
-    quarantine_summary rolls both outputs up unchanged."""
+    """audio_features/adpcm_roundtrip_check/video_frame_stats(safe=True)
+    carry the same quarantine contract as the image path: planted bad
+    containers (MP3-in-WAV, truncated WAV, a WAV declaring a zero sample
+    rate, chroma-subsampled Y4M, alien magic) become status rows with
+    the exception class while good neighbors keep strict-mode-identical
+    features; strict mode still raises; and quarantine_summary rolls
+    both outputs up unchanged. A zero rate must be refused by the
+    decoder: the duration feature divides by it outside the quarantine
+    boundary, so a decoded rate of 0 would fail the whole job."""
     rate, ch, n = MM._wav_fixture_geom(4)
-    good_wav = MM.encode_wav(rate, MM._wav_fixture_samples(4, ch, n))
+    samples = MM._wav_fixture_samples(4, ch, n)
+    good_wav = MM.encode_wav(rate, samples)
     mp3_wav = bytearray(good_wav)
     mp3_wav[20] = 0x55  # format tag 0x55 = MPEG Layer 3: entropy-coded
     wavs = spark.createDataFrame(
         [(1, bytearray(good_wav)), (2, bytearray(bytes(mp3_wav))),
-         (3, bytearray(good_wav[:-3])), (4, bytearray(b"OggS" + b"\0" * 40))],
+         (3, bytearray(good_wav[:-3])), (4, bytearray(b"OggS" + b"\0" * 40)),
+         (5, bytearray(MM.encode_wav(0, samples)))],
         "doc_id long, audio binary",
     )
     rows = {r["doc_id"]: r for r in MM.audio_features(wavs, safe=True).collect()}
@@ -609,13 +599,26 @@ def test_av_safe_mode_quarantines_bad_containers(spark):
     assert rows[2]["status"] == "quarantined:NotImplementedError"
     assert rows[3]["status"] == "quarantined:ValueError"
     assert rows[4]["status"] == "quarantined:ValueError"
-    assert all(rows[i]["abs_sum"] is None and rows[i]["error"] for i in (2, 3, 4))
+    assert rows[5]["status"] == "quarantined:ValueError"
+    assert "zero sample rate" in rows[5]["error"]
+    assert all(rows[i]["abs_sum"] is None and rows[i]["error"] for i in (2, 3, 4, 5))
     with pytest.raises(Exception):
         MM.audio_features(wavs, safe=False).collect()
     summary = {r["status"]: r["n_docs"] for r in MM.quarantine_summary(
         MM.audio_features(wavs, safe=True)).collect()}
     assert summary == {"ok": 1, "quarantined:NotImplementedError": 1,
-                       "quarantined:ValueError": 2}
+                       "quarantined:ValueError": 3}
+
+    tri = MM._adpcm_fixture_samples(4, ch, n)
+    adpcm = spark.createDataFrame(
+        [(4, bytearray(MM.encode_wav_adpcm(rate, tri))),
+         (5, bytearray(MM.encode_wav_adpcm(0, tri)))],
+        "doc_id long, audio binary",
+    )
+    arows = {r["doc_id"]: r for r in MM.adpcm_roundtrip_check(adpcm, safe=True).collect()}
+    assert arows[4]["status"] == "ok" and arows[4]["decode_ok"] is True
+    assert arows[5]["status"] == "quarantined:ValueError"
+    assert arows[5]["duration_us"] is None and "zero sample rate" in arows[5]["error"]
 
     w, h, nf = MM._y4m_fixture_geom(7)
     good_y4m = MM.encode_y4m(w, h, MM._y4m_fixture_frames(7, w, h, nf))
@@ -1081,22 +1084,20 @@ def test_mjpeg_frame_check_and_safe_quarantine(spark):
 def test_safe_decode_importerror_escapes_quarantine(spark):
     """ADVICE r9: an executor-side missing decode library is an
     ENVIRONMENT defect, not a payload defect — safe=True must not
-    swallow it as a sea of 'quarantined:ImportError' rows. Patch the
-    backend resolver to a function that raises ImportError (simulating
-    Pillow present on the driver, absent on executors) and assert the
-    stage FAILS with the ImportError surfaced, instead of completing
-    with quarantine rows."""
-    from unittest import mock
-
+    swallow it as a sea of 'quarantined:ImportError' rows. Hand the
+    decode-stage helper every stage runs through a decode that raises
+    ImportError and assert the stage FAILS with the ImportError
+    surfaced, instead of completing with quarantine rows."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import multimodal as MM
 
-    def missing_backend(payload):
+    def missing_library(payload):
         raise ImportError("No module named 'PIL' (executor)")
 
     ids = spark.createDataFrame([(0,)], "doc_id long")
     rendered = MM.render_ppm_payloads(ids)
-    with mock.patch.object(MM, "_resolve_decode_backend", return_value=missing_backend):
-        df = MM.decode_image_stats(rendered, safe=True, decode_backend="pillow")
+    df = MM._decode_stage(
+        rendered, "doc_id", "img", "width long", missing_library, lambda *_: (0,), safe=True
+    )
     import pytest as _pytest
 
     with _pytest.raises(Exception, match="ImportError|No module named"):
@@ -1223,7 +1224,7 @@ def test_ffmpeg_adapter_cross_checks_native_decoders(spark):
     correctness evidence two independent implementations can give. Then
     the adapter's exclusive territory: an MP3-in-WAV encoded BY ffmpeg
     (genuinely entropy-coded — the native decoder refuses the tag)
-    decodes through the same audio_features contract."""
+    decodes with sane geometry."""
     import subprocess
 
     import numpy as np
@@ -1283,23 +1284,6 @@ def test_ffmpeg_adapter_cross_checks_native_decoders(spark):
         rate_m, out_m = MM.decode_audio_ffmpeg(mp3_wav)
         assert rate_m == 8000 and out_m.shape[1] == 2
         assert abs(out_m.shape[0] - x.shape[0]) < 3000  # codec delay padding
-
-    df = spark.createDataFrame([(1, bytearray(MM.encode_wav_alaw(8000, x)))],
-                               "doc_id long, audio binary")
-    row = MM.audio_features(df, decode_backend="ffmpeg").collect()[0]
-    assert row.sample_rate == 8000 and row.n_channels == 2 and row.n_samples == 2000
-
-
-@pytest.mark.skipif(_has_ffmpeg(), reason="ffmpeg installed — missing-backend guard not reachable")
-def test_ffmpeg_backend_missing_fails_loudly_at_build_time(spark):
-    """Without ffmpeg, decode_backend='ffmpeg' must fail ON THE DRIVER
-    at operator-build time with a clear ImportError — never as per-row
-    quarantined:ImportError rows executor-side."""
-    df = spark.createDataFrame([(1, bytearray(b"RIFF"))], "doc_id long, audio binary")
-    with pytest.raises(ImportError, match="ffmpeg"):
-        MM.audio_features(df, safe=True, decode_backend="ffmpeg")
-    with pytest.raises(ValueError, match="decode_backend"):
-        MM.audio_features(df, decode_backend="bogus")
 
 
 def test_avi_and_alaw_roundtrip_fuzz():
@@ -1648,104 +1632,3 @@ def test_flac_frame_bps_must_match_streaminfo():
         MM.decode_flac(payload)
 
 
-def test_auto_decode_backend_routes_on_cost_seam(monkeypatch):
-    """Round 13 (VERDICT r12 item 2): decode_backend='auto' is the FIFTH
-    measured-crossover decision on the shared plans/cost.py seam.
-    Payload classes whose pinned NATIVE rate (SCALE_R12_MM_REALISTIC)
-    sits under DECODE_ADAPTER_CROSSOVER_MBPS route to the production
-    adapter where the library imports; adapter absent -> native,
-    explicitly flagged in the decision record. Both ends exercised:
-    this sandbox has no Pillow (absent end is real); the present end is
-    simulated by claiming PIL importable and stubbing the adapter."""
-    import importlib.util
-
-    # pure decision: both sides of the crossover, both availability ends
-    d = MM.decide_decode_backend("jpeg", True)
-    assert d.choice == "adapter" and d.stat == 0.38 and d.crossover == 2.0
-    assert MM.decide_decode_backend("png", True).choice == "adapter"
-    assert MM.decide_decode_backend("flac", True).choice == "adapter"
-    assert MM.decide_decode_backend("ppm", True).choice == "native"
-    assert MM.decide_decode_backend("wav", True).choice == "native"
-    d = MM.decide_decode_backend("jpeg", False)
-    assert d.choice == "native" and "unavailable" in d.stat_name
-    assert MM.decide_decode_backend("gif", True).choice == "native"  # unknown class
-
-    # magic sniffing matches decode_image_real's dispatch
-    px = _px(6, 4, seed=3).astype(np.uint8)
-    ppm = MM.encode_ppm(6, 4, px)
-    assert MM.sniff_image_format(ppm) == "ppm"
-    assert MM.sniff_image_format(b"\xff\xd8\xff\xe0") == "jpeg"
-    assert MM.sniff_image_format(MM.PNG_SIGNATURE + b"x") == "png"
-    assert MM.sniff_image_format(b"BMxxxx") == "bmp"
-    assert MM.sniff_image_format(b"GIF89a") == "other"
-
-    # absent end (real on this box): every class degrades to native and
-    # the dispatcher decodes identically to decode_image_real
-    if importlib.util.find_spec("PIL") is None:
-        fn = MM._resolve_decode_backend("auto")
-        assert set(fn.route.values()) == {"native"}
-        assert fn(ppm)["pixels"].tolist() == MM.decode_image_real(ppm)["pixels"].tolist()
-
-    # present end, simulated: PIL "importable", adapter stubbed — the
-    # under-crossover classes route to the adapter, memcpy classes stay native
-    sentinel = {"width": 1, "height": 1, "maxval": 255,
-                "pixels": np.zeros((1, 1, 3), np.uint8)}
-    real_find_spec = importlib.util.find_spec
-    monkeypatch.setattr(
-        importlib.util, "find_spec",
-        lambda name, *a, **k: object() if name == "PIL" else real_find_spec(name, *a, **k),
-    )
-    monkeypatch.setattr(MM, "decode_image_pillow", lambda b: sentinel)
-    fn = MM._resolve_decode_backend("auto")
-    assert fn.route == {"jpeg": "adapter", "png": "adapter", "ppm": "native", "bmp": "native"}
-    assert fn(b"\xff\xd8\xff\xe0 not a real jpeg") is sentinel
-    assert fn(ppm)["width"] == 6  # memcpy class stays native
-
-
-def test_auto_audio_backend_routes_flac_to_adapter(monkeypatch):
-    """The audio twin of the 'auto' route: FLAC (native 1.76 MB/s/core,
-    under the crossover) goes to the ffmpeg adapter where the binary
-    exists; the RIFF family stays native; no ffmpeg -> all native."""
-    import shutil
-
-    x = ((np.arange(600) % 200 - 100) * 50).astype(np.int16).reshape(-1, 1)
-    flac = MM.encode_flac(8000, x)
-    wav = MM.encode_wav(8000, x)
-
-    if shutil.which("ffmpeg") is None:  # real absent end on this box
-        fn = MM._resolve_audio_backend("auto")
-        assert fn.route == {"flac": "native", "wav": "native"}
-        r, out = fn(flac)
-        r2, out2 = MM.decode_audio_native(flac)
-        assert r == r2 and np.array_equal(out, out2)
-
-    # present end, simulated
-    monkeypatch.setattr(shutil, "which", lambda n: "/usr/bin/ffmpeg" if n == "ffmpeg" else None)
-    monkeypatch.setattr(MM, "decode_audio_ffmpeg", lambda b: (99, "SENTINEL"))
-    fn = MM._resolve_audio_backend("auto")
-    assert fn.route == {"flac": "adapter", "wav": "native"}
-    assert fn(flac) == (99, "SENTINEL")
-    r, out = fn(wav)
-    assert r == 8000 and np.array_equal(out, x)  # RIFF stays native
-
-
-def test_decode_image_stats_auto_equals_native_without_adapter(spark):
-    """End-to-end through the mapInPandas plumbing: on a box without the
-    adapter library, decode_backend='auto' must produce rows identical
-    to 'native' — the degradation is a route choice, never a value
-    change."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
-
-    from .conftest import SF_SMOKE
-
-    import importlib.util
-
-    if importlib.util.find_spec("PIL") is not None:
-        import pytest as _pytest
-
-        _pytest.skip("adapter present — covered by the bit-for-bit cross-check")
-    docs = load_table(spark, SF_SMOKE, "documents").limit(12)
-    rendered = MM.render_ppm_payloads(docs)
-    native = sorted(map(tuple, MM.decode_image_stats(rendered).collect()))
-    auto = sorted(map(tuple, MM.decode_image_stats(rendered, decode_backend="auto").collect()))
-    assert native == auto

@@ -274,24 +274,23 @@ def test_perrow_gate_bit_identical_to_profile_gate(spark):
             assert r.punct_ratio == 0.0 and r.punct_ratio == r.punct_ratio  # not NaN
 
 
-def test_curate_minhash_edge_route_matches_exact(spark):
-    """curate(edge_method='minhash') — the at-scale edge knob (0.55x the
-    exact route at sf10, BASELINE §M) — must produce the exact route's
-    output wherever LSH recall is 1.0, which it measurably (and
-    deterministically) is on this corpus. The bogus-route guard rides
-    along."""
-    import pytest as _pytest
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q import curate
+def test_curate_minhash_edge_route_matches_exact(spark, monkeypatch):
+    """curate's MinHash edge route — the at-scale side (0.55x the exact
+    route at sf10, BASELINE §M), forced here by a zero posting
+    crossover — must produce the exact route's output wherever LSH
+    recall is 1.0, which it measurably (and deterministically) is on
+    this corpus."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import pipeline_q as PQ
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
     docs = load_table(spark, SF_CORRECT, "documents")
-    exact = {tuple(r) for r in curate(docs, edge_method="jaccard").collect()}
-    mh = {tuple(r) for r in curate(docs, edge_method="minhash").collect()}
+    assert PQ.choose_edge_method(docs) == "jaccard"
+    exact = {tuple(r) for r in PQ.curate(docs).collect()}
+    monkeypatch.setattr(PQ, "EDGE_AUTO_CROSSOVER_POSTINGS", 0)
+    assert PQ.choose_edge_method(docs) == "minhash"
+    mh = {tuple(r) for r in PQ.curate(docs).collect()}
     assert exact, "pipeline should keep survivors at this SF"
     assert mh == exact
-    with _pytest.raises(ValueError, match="edge_method"):
-        curate(docs, edge_method="bogus")
 
 
 def test_edge_route_crossover_decision():
@@ -319,28 +318,35 @@ def test_edge_route_crossover_decision():
     assert _decide_edge_method(0, 0.0)[0] == "jaccard"
 
 
-def test_curate_auto_selects_and_logs(spark, caplog):
-    """curate() defaults to the cost-aware route: on the fixture corpus
+def test_curate_auto_selects_and_logs(spark, monkeypatch, caplog):
+    """curate() takes the cost-aware route: on the fixture corpus
     (provably below the crossover from scan bytes alone — the round-13
-    zero-job exit) auto logs the selection with its bytes evidence,
-    picks jaccard, and produces the forced-jaccard output bit for bit —
-    so the driver's hash gate sees the same rows the oracle states.
+    zero-job exit) it logs the selection with its bytes evidence, picks
+    jaccard, and produces bit for bit the rows of the jaccard route
+    reached through the measured path (crossover lowered under the
+    bytes bound but above the sampled posting estimate) — so the
+    driver's hash gate sees the same rows the oracle states.
     The measured (count + sample) path stays covered by
     test_curate_auto_minhash_side_integration and
     test_choose_edge_method_count_only_margin, whose monkeypatched
     crossovers sit below the bytes bound."""
     import logging as _logging
 
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q import choose_edge_method, curate
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import pipeline_q as PQ
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
     docs = load_table(spark, SF_CORRECT, "documents")
     with caplog.at_level(_logging.INFO, logger="custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q"):
-        assert choose_edge_method(docs) == "jaccard"
+        assert PQ.choose_edge_method(docs) == "jaccard"
     msgs = [r.getMessage() for r in caplog.records if "auto-selected" in r.getMessage()]
     assert msgs and "'jaccard'" in msgs[0] and "scan bytes alone" in msgs[0]
-    auto = {tuple(r) for r in curate(docs).collect()}
-    exact = {tuple(r) for r in curate(docs, edge_method="jaccard").collect()}
+    auto = {tuple(r) for r in PQ.curate(docs).collect()}
+    monkeypatch.setattr(PQ, "EDGE_AUTO_CROSSOVER_POSTINGS", 100_000)
+    caplog.clear()
+    with caplog.at_level(_logging.INFO, logger="custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q"):
+        assert PQ.choose_edge_method(docs) == "jaccard"
+    assert not any("scan bytes alone" in r.getMessage() for r in caplog.records)
+    exact = {tuple(r) for r in PQ.curate(docs).collect()}
     assert auto == exact and auto
 
 
@@ -356,12 +362,13 @@ def test_curate_auto_minhash_side_integration(spark, monkeypatch, caplog):
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
     docs = load_table(spark, SF_CORRECT, "documents")
+    exact = {tuple(r) for r in PQ.curate(docs).collect()}  # default crossover: jaccard
     monkeypatch.setattr(PQ, "EDGE_AUTO_CROSSOVER_POSTINGS", 1_000)
+    caplog.clear()
     with caplog.at_level(_logging.INFO, logger="custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q"):
         auto = {tuple(r) for r in PQ.curate(docs).collect()}
     msgs = [r.getMessage() for r in caplog.records if "auto-selected" in r.getMessage()]
     assert msgs and "'minhash'" in msgs[0]
-    exact = {tuple(r) for r in PQ.curate(docs, edge_method="jaccard").collect()}
     assert auto == exact and auto
 
 

@@ -30,6 +30,10 @@ ALLOWED_UNREACHED = {
     ("operators/multimodal.py", "_lin2ulaw"): "mu-law quantizer behind encode_wav_ulaw",
     ("operators/multimodal.py", "render_wav_payloads"): "renders WAV fixture payloads for the live audio decoder's tests",
     ("operators/multimodal.py", "decode_video_ffmpeg"): "reference adapter the native video decoders are cross-checked against",
+    ("operators/multimodal.py", "decode_audio_ffmpeg"): "reference decoder the native audio decoders are cross-checked against",
+    ("operators/multimodal.py", "decode_image_pillow"): "reference decoder the native image codecs are cross-checked against",
+    ("operators/multimodal.py", "_run_ffmpeg"): "subprocess helper of the two ffmpeg reference decoders",
+    ("operators/multimodal.py", "_require_ffmpeg"): "binary lookup of the ffmpeg reference decoders",
 }
 
 

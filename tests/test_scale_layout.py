@@ -143,7 +143,7 @@ def test_ivf_stored_index_partition_pruned_probe(spark):
     assert sorted(map(tuple, stored.collect())) == sorted(map(tuple, inflight.collect()))
 
 
-def test_ivf_scaled_k_and_numpy_assignment(spark):
+def test_ivf_scaled_k_and_numpy_assignment(spark, monkeypatch):
     """Round 11 (ANN decade root cause): a FIXED centroid count makes
     IVF query cost track the corpus linearly (nprobe/16 probes 62% of
     any corpus), so k scales as √N via ivf_k_for, and write-time
@@ -174,19 +174,25 @@ def test_ivf_scaled_k_and_numpy_assignment(spark):
     np_b = {r.vec_id: r.bucket for r in S.assign_buckets_np(emb, centroids).select("vec_id", "bucket").collect()}
     assert sql_b == np_b
 
+    # the write-time route is chosen by centroid count across
+    # IVF_NUMPY_ASSIGN_MIN_K; patch it to force each side at k=32
+    np_calls = []
+    real_np = S.assign_buckets_np
+    monkeypatch.setattr(S, "assign_buckets_np", lambda *a, **kw: np_calls.append(1) or real_np(*a, **kw))
     path_np = os.path.join(SCRATCH, "ivf_index_np")
-    S.write_ivf_index(emb, centroids, path_np, method="numpy")
+    monkeypatch.setattr(S, "IVF_NUMPY_ASSIGN_MIN_K", 31)
+    S.write_ivf_index(emb, centroids, path_np)
+    assert len(np_calls) == 1
     path_sql = os.path.join(SCRATCH, "ivf_index_sql")
-    S.write_ivf_index(emb, centroids, path_sql, method="sql")
+    monkeypatch.setattr(S, "IVF_NUMPY_ASSIGN_MIN_K", 32)
+    S.write_ivf_index(emb, centroids, path_sql)
+    assert len(np_calls) == 1
+    monkeypatch.undo()
     queries = emb.where(F.col("vec_id") % 50 == 0)
     a = sorted(map(tuple, S.ivf_topk_stored(spark, queries, path_np, centroids, k=5, nprobe=6).collect()))
     b = sorted(map(tuple, S.ivf_topk_stored(spark, queries, path_sql, centroids, k=5, nprobe=6).collect()))
     assert a == b and a
-
-    # 'auto' routes by centroid count across IVF_NUMPY_ASSIGN_MIN_K
     assert S.IVF_NUMPY_ASSIGN_MIN_K == 64
-    with _pytest.raises(ValueError, match="method"):
-        S.write_ivf_index(emb, centroids, path_np, method="bogus")
 
 
 def test_single_row_group_layout_resilience(spark):

@@ -455,3 +455,72 @@ def test_run_available_now_many_sets_and_restores_width(spark, tmp_path):
     with pytest.raises(Exception):
         run_available_now_many([(bad, "complete")], timeout_s=60, shuffle_width=5)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_overlapping_drains_restore_the_session_width(spark, tmp_path, monkeypatch):
+    """Two drains on two threads of one session, overlapping: drain B
+    starts while drain A is running, and B's awaitTermination returns
+    only after A has returned. Each query still runs at its own width
+    (pinned at start), and the session is left at its width from
+    before the calls — not at a drain's width, which a restore that
+    waits for the drain to finish leaves behind when drains interleave."""
+    import threading
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
+        run_available_now_many,
+    )
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(i, i % 3) for i in range(30)], "id long, k long").write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+
+    a_awaiting, b_awaiting, a_done = threading.Event(), threading.Event(), threading.Event()
+    widths, results, errors = {}, {}, []
+    real_await = StreamingQuery.awaitTermination
+
+    def ordered_await(self, timeout=None):
+        if threading.current_thread().name == "drain-a":
+            a_awaiting.set()
+            assert b_awaiting.wait(120), "drain B never started"
+        else:
+            b_awaiting.set()
+            assert a_done.wait(120), "drain A never returned"
+        done = real_await(self, timeout)
+        widths[threading.current_thread().name] = (
+            self.lastProgress["stateOperators"][0]["numShufflePartitions"]
+        )
+        return done
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", ordered_await)
+
+    def drain(width, after=None):
+        name = threading.current_thread().name
+        try:
+            if after is not None:
+                assert after.wait(120), "drain A never started"
+            (out,) = run_available_now_many(
+                [(stream.groupBy("k").count(), "complete")], timeout_s=120, shuffle_width=width
+            )
+            results[name] = {tuple(r) for r in out.collect()}
+        except BaseException as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+        finally:
+            if name == "drain-a":
+                a_done.set()
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    threads = [
+        threading.Thread(target=drain, name="drain-a", args=(3,)),
+        threading.Thread(target=drain, name="drain-b", args=(5, a_awaiting)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not any(t.is_alive() for t in threads), "a drain thread hung"
+    assert not errors, errors
+    assert widths == {"drain-a": 3, "drain-b": 5}
+    assert results == {n: {(0, 10), (1, 10), (2, 10)} for n in ("drain-a", "drain-b")}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
