@@ -191,8 +191,7 @@ def materialize(df: DataFrame, prefer_local: bool = False) -> DataFrame:
     shared store and survive any executor. The extra I/O per
     connected-components round is two writes + two reads (the propagate
     and path-halving frames both materialize; ~3% warm wall measured at
-    sf1, BASELINE §K) plus one per IVF training iteration. Spark only
-    deletes checkpoint files when
+    sf1, BASELINE §K). Spark only deletes checkpoint files when
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (default
     false) — set it, or point the checkpoint dir at a per-job path the
     caller deletes when the job ends (README "Running"), or the store

@@ -882,7 +882,7 @@ def simhash_near_dups(
     count job)."""
     from itertools import combinations
 
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import scan_file_sizes
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count, scan_file_sizes
 
     d = max_distance
     if n_blocks is None:
@@ -891,15 +891,7 @@ def simhash_near_dups(
             if sizes is not None and sum(sizes) <= 16 * 1024 * 1024:
                 n_blocks = d + 1  # provably-safe small corpus: skip the count
             else:
-                # zero-job EXACT footer count on a bare row-preserving
-                # scan (round 14, plans/parallelism.scan_row_count);
-                # filtered/derived frames run the count job as before —
-                # the geometry needs the exact n either way
-                from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import scan_row_count
-
-                corpus_size = scan_row_count(df)
-                if corpus_size is None:
-                    corpus_size = df.count()
+                corpus_size = row_count(df)  # the geometry needs the exact n
         if n_blocks is None:
             n_blocks = simhash_block_geometry(corpus_size, d)
     # persisted: both join sides and all combination projections read the

@@ -1,22 +1,28 @@
 """Vector similarity search over the ``embeddings`` table.
 
-Two paths, one semantics:
+Three paths, one output shape (query_id, neighbor_id, rank):
 
 - **Brute force** — broadcast the query set against the corpus, score
   with the codegen cosine from ``functions.vector``, take per-query
   top-k via a rank window. Exact; correct baseline at any scale where
   |queries| is small (the corpus is never collected or shuffled — it
   streams through one projection + one bounded-heap window).
-- **LSH-bucketed (random hyperplanes)** — sign-bit signatures from a
-  fixed seeded projection matrix; candidates must share a signature
-  prefix band with the query, then exact cosine rescoring within the
-  bucket. Trades recall for touching ~1/2^b of the corpus per band.
-  Recall is measured against brute force in tests, not assumed.
+- **LSH-bucketed (random hyperplanes)** — per-band sign-bit codes from a
+  fixed seeded projection matrix; candidates must share a band code
+  with the query, then exact cosine rescoring. Trades recall for
+  touching ~1/2^width of the corpus per band.
+- **IVF (k-means buckets)** — each query probes its ``nprobe`` nearest
+  centroid buckets and rescores exactly within them; the corpus is
+  bucketed in flight, or once at write time into a partitioned index.
 
-At 100 TB the brute-force path is a full scan per query batch (fine for
-offline eval); the bucketed path is the online/ANN shape: bucket id is
-computable at write time, so the corpus can be stored partitioned by
-bucket and partition pruning turns a query into a few-bucket read.
+Every vector step that is not the exact rescore — hyperplane signing,
+k-means training, nearest-centroid assignment and probe selection — is
+a numpy matmul over Arrow batches (or over a driver-side sample, for
+training), not an interpreted higher-order-function fold: those run
+outside whole-stage codegen and cost ~1000x more per row. Rescoring
+keeps the ``functions.vector`` folds, whose fold order the DuckDB
+oracle reproduces. Recall of both approximate paths is measured against
+brute force in tests, not assumed.
 """
 
 from __future__ import annotations
@@ -28,8 +34,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.vector import cosine, dot, norm2
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import eager_stats, materialize, tie_cache_lifetime
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import spread
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import eager_stats, tie_cache_lifetime
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count, spread
 
 #: Fixed seed for the hyperplane projections — part of the operator
 #: definition (same planes at write and query time).
@@ -44,6 +50,17 @@ LSH_SEED = 20240813
 #: 32x default — precisely the mis-broadcast risk the per-call-site
 #: bound mechanism exists for. 64 = plateau + ~1.6x headroom.
 BANDED_CODES_BOUND = 64
+
+
+def _topk_by_score(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-``k`` of (query_id, neighbor_id, score) rows as
+    (query_id, neighbor_id, rank); score ties break by neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
+    )
 
 
 def brute_force_topk(
@@ -88,12 +105,7 @@ def brute_force_topk(
             dot("q_vec", "c_vec").alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk_by_score(scored, k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = LSH_SEED) -> np.ndarray:
@@ -101,30 +113,17 @@ def hyperplanes(dim: int, n_planes: int, seed: int = LSH_SEED) -> np.ndarray:
     return np.random.default_rng(seed).standard_normal((n_planes, dim))
 
 
-def signature_col(vec_col, planes: np.ndarray):
-    """Sign-bit signature as a long column: bit_i = 1 iff <v, p_i> >= 0.
-
-    Pure expression (one fused dot per plane) — computable at write time
-    for bucket-partitioned storage.
-    """
-    bits = []
-    for i, p in enumerate(planes):
-        dot_i = F.aggregate(
-            F.zip_with(
-                vec_col if not isinstance(vec_col, str) else F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in p]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+def _first_agreeing_band(codes_a: str, codes_b: str, bands: int):
+    """Canonical-band dedup predicate over a (band, code) equi-join: true
+    only on the row of the pair's FIRST agreeing band, so each candidate
+    pair survives once without a DISTINCT shuffle over (id, vector) rows
+    — element_at compares the per-band code arrays both sides carry."""
+    first = F.lit(True)
+    for j in range(bands - 1):
+        first = first & (
+            (F.col("band") <= j) | (F.element_at(codes_a, j + 1) != F.element_at(codes_b, j + 1))
         )
-        bits.append(
-            F.when(dot_i >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+    return first
 
 
 def lsh_topk(
@@ -140,63 +139,27 @@ def lsh_topk(
     """Approximate top-k: candidates share ≥1 of ``bands`` signature bands
     with the query, then exact cosine rescoring. Same output schema as
     :func:`brute_force_topk` (query_id, neighbor_id, rank)."""
-    planes = hyperplanes(dim, n_planes)
-    width = n_planes // bands
-    mask = (1 << width) - 1
+    codes_udf = band_codes_vectorized(hyperplanes(dim, n_planes), bands)
 
     def banded(df: DataFrame, role: str) -> DataFrame:
-        sig = signature_col(vec_col, planes)
         return df.select(
             F.col(id_col).alias(f"{role}_id"),
             F.col(vec_col).alias(f"{role}_vec"),
-            sig.alias(f"{role}_sig"),
-        ).select(
-            f"{role}_id",
-            f"{role}_vec",
-            f"{role}_sig",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.shiftright(F.col(f"{role}_sig"), b * width).bitwiseAND(F.lit(mask)).alias("band_val"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(f"{role}_id", f"{role}_vec", f"{role}_sig", "bb.band", "bb.band_val")
+            codes_udf(F.col(vec_col)).alias(f"{role}_codes"),
+        ).select("*", F.posexplode(f"{role}_codes").alias("band", "code"))
 
     q = banded(queries, "query")
     c = banded(spread(corpus, by=[id_col]), "neighbor")
-    # Canonical-band dedup: keep a candidate pair only at its FIRST
-    # agreeing band, so the exact same candidate set survives without a
-    # DISTINCT over (id, vector-array) rows — the predicate is bit math
-    # on the signature longs both sides already carry.
-    first_agreeing = F.lit(True)
-    for j in range(bands - 1):
-        first_agreeing = first_agreeing & (
-            (F.col("band") <= j)
-            | (
-                F.shiftright(F.col("query_sig"), j * width).bitwiseAND(F.lit(mask))
-                != F.shiftright(F.col("neighbor_sig"), j * width).bitwiseAND(F.lit(mask))
-            )
-        )
-    cands = (
+    scored = (
         F.broadcast(q)
-        .join(c, ["band", "band_val"])
-        .where((F.col("query_id") != F.col("neighbor_id")) & first_agreeing)
-        .select("query_id", "query_vec", "neighbor_id", "neighbor_vec")
+        .join(c, ["band", "code"])
+        .where(
+            (F.col("query_id") != F.col("neighbor_id"))
+            & _first_agreeing_band("query_codes", "neighbor_codes", bands)
+        )
+        .select("query_id", "neighbor_id", cosine("query_vec", "neighbor_vec").alias("score"))
     )
-    scored = cands.select(
-        "query_id", "neighbor_id", cosine("query_vec", "neighbor_vec").alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk_by_score(scored, k)
 
 
 def cosine_batch_near_dups(
@@ -230,21 +193,21 @@ def cosine_batch_near_dups(
 
 def band_codes_vectorized(planes: np.ndarray, bands: int):
     """Per-band sign-bit codes as an array<int> column: band b's code
-    packs the sign bits of its ``len(planes)//bands`` hyperplanes,
-    computed Arrow-vectorized — one BLAS matmul per batch, (batch, dim)
-    @ (dim, n_planes) — instead of n_planes interpreted ``aggregate``
-    lambda folds per row.
+    packs the sign bits of its ``len(planes)//bands`` hyperplanes (bit j
+    = plane ``b·width + j``, set iff the dot product is ≥ 0), computed
+    Arrow-vectorized — one BLAS matmul per batch, (batch, dim) @ (dim,
+    n_planes) — instead of n_planes interpreted ``aggregate`` lambda
+    folds per row.
 
     This is the deliberate exception to the engine's no-Python-UDF rule:
     higher-order-function expressions run INTERPRETED (outside
     whole-stage codegen), so 128 plane dots cost ~2 ms/row as
     expressions vs ~2 µs/row as a numpy matmul — the measured 0.88 s →
-    0.06 s on the corpus-cosine headliner's code stage at sf0.1. Sign
-    bits of the two paths agree unless a dot product lands within
-    float-summation-order noise of exactly 0 (probability ~0 for
-    continuous data) — and candidates are exact-rescored afterwards
-    either way, so a flipped borderline bit can only perturb the
-    approximate candidate set, never emit a wrong pair."""
+    0.06 s on the corpus-cosine headliner's code stage at sf0.1. A dot
+    product within float-summation-order noise of exactly 0 could sign
+    either way (probability ~0 for continuous data); candidates are
+    exact-rescored afterwards, so a flipped borderline bit can only
+    perturb the approximate candidate set, never emit a wrong pair."""
     width = len(planes) // bands
     P = planes.astype(np.float64).T  # (dim, n_planes)
     weights = (1 << np.arange(width)).astype(np.int64)
@@ -332,19 +295,9 @@ def cosine_near_dup_pairs(
       (see lsh_band_geometry; the sf10 smoke measured the fixed-width
       variant at 1.5e9 candidates vs 1.8e6 adaptive)."""
     if bands is None or n_planes is None:
-        n = corpus_size
-        if n is None:
-            # zero-job EXACT count from parquet footers when the frame is
-            # provably a bare row-preserving scan (round 14 — the same
-            # metadata-decision discipline as the pipeline bytes gate,
-            # but exact, because geometry flips on ceil(log2 n) and a
-            # changed geometry changes candidate sets); filtered/derived
-            # frames fall back to the count job, semantics identical
-            from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import scan_row_count
-
-            n = scan_row_count(df)
-        if n is None:
-            n = df.count()
+        # exact either way (geometry flips on ceil(log2 n), and a changed
+        # geometry changes candidate sets): zero jobs on a bare scan
+        n = row_count(df) if corpus_size is None else corpus_size
         bands, width = lsh_band_geometry(n, threshold)
         n_planes = bands * width
     planes = hyperplanes(dim, n_planes)
@@ -363,17 +316,9 @@ def cosine_near_dup_pairs(
     )
     a = banded.select(F.col("vid").alias("id_a"), F.col("codes").alias("codes_a"), "band", "code")
     b = banded.select(F.col("vid").alias("id_b"), F.col("codes").alias("codes_b"), "band", "code")
-    # canonical-band dedup (see simhash_near_dups): emit a pair only at
-    # its first agreeing band — same candidate set, no DISTINCT shuffle
-    first_agreeing = F.lit(True)
-    for j in range(bands - 1):
-        first_agreeing = first_agreeing & (
-            (F.col("band") <= j)
-            | (F.element_at("codes_a", j + 1) != F.element_at("codes_b", j + 1))
-        )
     cands = (
         a.join(b, ["band", "code"])
-        .where((F.col("id_a") < F.col("id_b")) & first_agreeing)
+        .where((F.col("id_a") < F.col("id_b")) & _first_agreeing_band("codes_a", "codes_b", bands))
         .select("id_a", "id_b")
     )
     vecs = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
@@ -414,6 +359,34 @@ def ivf_k_for(n_vectors: int) -> int:
     return max(16, min(4096, int(k)))
 
 
+def _sq_l2(M: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n, k) squared L2 distances from the rows of ``M`` to the
+    centroids ``C``, as |M|² − 2·M·Cᵀ + |C|² — one BLAS matmul. The one
+    distance kernel of training, assignment and probing."""
+    return (M * M).sum(1)[:, None] - 2.0 * (M @ C.T) + (C * C).sum(1)[None, :]
+
+
+def _nearest(M: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Nearest centroid per row of ``M``; a tie goes to the smallest
+    bucket (``argmin`` returns the first minimum)."""
+    return _sq_l2(M, C).argmin(1)
+
+
+def _probe_order(M: np.ndarray, C: np.ndarray, nprobe: int) -> np.ndarray:
+    """The ``nprobe`` nearest buckets per row of ``M``, in (distance,
+    bucket) order — the stable sort keeps tied buckets ascending."""
+    return _sq_l2(M, C).argsort(1, kind="stable")[:, :nprobe]
+
+
+def _matrix(vectors: pd.Series) -> np.ndarray:
+    """An Arrow batch's array column as an (n, dim) float64 matrix."""
+    return np.stack(vectors.to_numpy()).astype("float64")
+
+
+def _ddl(df: DataFrame) -> str:
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
+
+
 def ivf_centroids_np(
     corpus: DataFrame,
     k: int,
@@ -422,27 +395,27 @@ def ivf_centroids_np(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> np.ndarray:
-    """Sampled driver-side k-means for LARGE k (the √N regime of
-    :func:`ivf_k_for`): hash-ordered deterministic sample of
-    ``sample_per_centroid × k`` vectors collected once (k-bounded, the
-    same contract as :func:`ivf_centroids`'s seed sample), Lloyd
-    iterations as numpy matmuls on the driver.
+    """Sampled driver-side k-means: a hash-ordered sample of
+    ``sample_per_centroid × k`` vectors collected once (k-bounded),
+    seeded-RNG initial centroids, then ``iters`` Lloyd iterations as
+    numpy matmuls on the driver. Deterministic run to run; fewer sampled
+    vectors than ``k`` shrink k rather than fail.
 
-    Why not the in-plan Lloyd loop of :func:`ivf_centroids` at large k:
-    its per-row assignment folds over the k-element centroid array —
-    O(k·dim) interpreted work per corpus row per iteration, measured
-    187.7 s at (k=16, 2M vectors); at k=1448 that is ~90× more. k-means
-    quality needs a REPRESENTATIVE sample, not the full corpus (FAISS
-    trains on bounded samples for the same reason), so training cost
-    becomes O(sample · k · dim) driver-side matmul — independent of
-    corpus size. Assignment of the full corpus happens once, at write
-    time (:func:`write_ivf_index`, whose matmul route takes large k)."""
-    spark = corpus.sparkSession
-    n_sample = sample_per_centroid * k
+    The hash order spreads the sample across the corpus no matter how
+    ids correlate with storage layout (a prefix-of-ids sample seeds every
+    centroid inside whatever clusters come first, measured ~15 recall
+    points worse on the sf0.01 fixture). k-means quality needs a
+    REPRESENTATIVE sample, not the full corpus (FAISS trains on bounded
+    samples for the same reason), so training costs O(sample · k · dim)
+    on the driver, independent of corpus size: 0.16-0.25 s at k=16 on
+    the sf0.01 and sf0.1 embeddings (4 vCPU), where an in-plan Lloyd
+    loop paid 4.4-5.7 s in per-iteration jobs.
+    Assignment of the full corpus runs on executors
+    (:func:`assign_buckets_np`)."""
     sample = (
         corpus.select(vec_col)
         .orderBy(F.xxhash64(F.col(id_col)).asc(), F.col(id_col).asc())
-        .limit(n_sample)
+        .limit(sample_per_centroid * k)
         .collect()
     )
     X = np.array([r[0] for r in sample], dtype="float64")
@@ -452,10 +425,7 @@ def ivf_centroids_np(
     rng = np.random.default_rng(IVF_SEED)
     C = X[rng.choice(len(X), size=k, replace=False)]
     for _ in range(iters):
-        # squared L2 via the expansion; argmin ties break at the
-        # smallest bucket (np.argmin picks the first minimum)
-        d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(1)[None, :]
-        a = d2.argmin(1)
+        a = _nearest(X, C)
         for b in range(k):
             m = a == b
             if m.any():
@@ -466,188 +436,36 @@ def ivf_centroids_np(
 def assign_buckets_np(
     df: DataFrame, centroids: np.ndarray, vec_col: str = "embedding", out: str = "bucket"
 ) -> DataFrame:
-    """Vectorized nearest-centroid assignment for LARGE k: an Arrow
-    mapInPandas matmul argmin over the centroid matrix (shipped in the
-    task closure — k×dim doubles, ≤2 MB at the k cap). Same semantics
-    as :func:`with_bucket` (squared L2, smallest-bucket tie-break), but
-    per-row cost is a BLAS matmul row instead of an interpreted
-    O(k·dim) SQL fold — the difference between write-time assignment
-    being feasible and not at √N-scaled k."""
-    import pandas as pd
-
+    """``df`` plus each row's nearest-centroid bucket (int ``out``
+    column): an Arrow mapInPandas argmin over the centroid matrix, which
+    ships in the task closure (k×dim doubles, ≤2 MB at the k cap) — so
+    the plan stays O(1) in k and per-row cost is a BLAS matmul row."""
     C = np.ascontiguousarray(centroids, dtype="float64")
-    c_sq = (C * C).sum(1)
-    cols = df.columns
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
 
     def assign(batches):
         for pdf in batches:
-            M = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            d2 = (M * M).sum(1)[:, None] - 2.0 * (M @ C.T) + c_sq[None, :]
-            yield pd.DataFrame({**{c: pdf[c] for c in cols}, out: d2.argmin(1).astype("int32")})
+            yield pdf.assign(**{out: _nearest(_matrix(pdf[vec_col]), C).astype("int32")})
 
-    return df.mapInPandas(assign, f"{fields}, {out} int")
+    return df.mapInPandas(assign, f"{_ddl(df)}, {out} int")
 
 
-def centroid_relation(spark, centroids: np.ndarray) -> DataFrame:
-    """Centroids as DATA, not plan literals: a ONE-ROW relation holding
-    ``_centroids: array<struct<bucket:int, cvec:array<double>>>`` (sorted
-    by bucket, so downstream argmin tie-breaks are deterministic).
-
-    Why this shape and not k×dim literal expressions (the round-3
-    design): a literal centroid table bakes k×dim constants into the
-    Catalyst plan, so analysis time, codegen method size (64 KB JVM
-    limit) and plan serialization all grow with k — a 100 TB IVF index
-    wants k in the thousands, where the *plan itself* becomes the
-    bottleneck. And not a (bucket, cvec) row-per-centroid relation
-    joined + min_by-aggregated either: the argmin groupBy would shuffle
-    the full corpus once per assignment. Broadcasting ONE row and
-    folding over the array column keeps the plan O(1) in k, ships the
-    centroid payload through the broadcast (data plane, not plan), and
-    assigns buckets with zero shuffle."""
-    rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
-    flat = spark.createDataFrame(rows, "bucket int, cvec array<double>")
-    return flat.agg(F.array_sort(F.collect_list(F.struct("bucket", "cvec"))).alias("_centroids"))
-
-
-def _centroid_dists(vec, centroids_col):
-    """array<struct<d:double, bucket:int>> of squared L2 distances from
-    ``vec`` to every centroid in the (broadcast) centroid array column —
-    struct order (d, bucket) makes array_min/array_sort argmin with
-    deterministic smallest-bucket tie-breaks."""
-    return F.transform(
-        centroids_col,
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    vec, c["cvec"], lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            c["bucket"].alias("bucket"),
-        ),
-    )
-
-
-def with_bucket(
-    df: DataFrame, crel: DataFrame, vec_col: str = "embedding", out: str = "bucket"
+def _probe_buckets(
+    queries: DataFrame, centroids: np.ndarray, nprobe: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Attach each row's nearest-centroid bucket via the broadcast one-row
-    centroid relation — no shuffle, plan size independent of k. This is
-    the write-time assignment used by :func:`write_ivf_index`."""
-    return (
-        df.crossJoin(F.broadcast(crel))
-        .withColumn(out, F.array_min(_centroid_dists(F.col(vec_col), F.col("_centroids")))["bucket"])
-        .drop("_centroids")
-    )
+    """(query_id, q_vec, bucket): each query once for each of its
+    ``nprobe`` nearest centroid buckets (one mapInPandas over the
+    queries, :func:`_probe_order`)."""
+    C = np.ascontiguousarray(centroids, dtype="float64")
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
 
+    def probe(batches):
+        for pdf in batches:
+            order = _probe_order(_matrix(pdf["q_vec"]), C, nprobe)
+            rows = pdf.loc[pdf.index.repeat(order.shape[1])].reset_index(drop=True)
+            rows["bucket"] = order.ravel().astype("int32")
+            yield rows
 
-def ivf_centroids(
-    corpus: DataFrame,
-    k: int = 16,
-    iters: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Deterministic-ish k-means centroids: seeded sample init + a few
-    Lloyd iterations. (Float means are aggregation-order-sensitive, so
-    borderline assignments may flip between runs; IVF is an approximate
-    index, its quality is measured by recall, not by bit-stable
-    centroids.)
-
-    Driver traffic (round-6, VERDICT r5 item 9): training state never
-    crosses the driver mid-loop. The earlier shape collected the k×dim
-    means EVERY iteration (k=4096, dim=1024, 10 rounds = ~320 MB
-    serialized through the driver plus Python-side reassembly); now each
-    iteration derives the next (bucket, cvec) relation from the previous
-    one entirely in-plan — assignment via the broadcast one-row centroid
-    relation, per-dimension means, collect_list re-assembly, and an
-    empty-bucket coalesce against the previous centroids — and
-    caching.materialize() keeps the iterative lineage flat (the k-row
-    frame lands on executors, or in the reliable checkpoint store when
-    the session configures one). Exactly two driver materializations
-    total, both k-bounded: the seed sample (4k rows) and the final
-    centroid fetch at convergence."""
-    spark = corpus.sparkSession
-    # hash-ordered sample: deterministic AND spread across the corpus no
-    # matter how ids correlate with storage/cluster layout (a prefix-of-ids
-    # sample seeds every centroid inside whatever clusters come first,
-    # measured ~15 recall points worse on the sf0.01 fixture)
-    sample = (
-        corpus.select(vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)).asc(), F.col(id_col).asc())
-        .limit(4 * k)
-        .collect()
-    )
-    rng = np.random.default_rng(IVF_SEED)
-    pool = np.array([r[0] for r in sample], dtype="float64")
-    if len(pool) == 0:
-        raise ValueError("ivf_centroids: corpus is empty — nothing to index")
-    # short corpus: fewer centroids than requested beats a sampling crash
-    k = min(k, len(pool))
-    seed = pool[rng.choice(len(pool), size=k, replace=False)]
-    vecs = spread(corpus).select(F.col(vec_col).alias("v"))
-    flat = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(seed)],
-        "bucket int, cvec array<double>",
-    )
-    for _ in range(iters):
-        crel = flat.agg(
-            F.array_sort(F.collect_list(F.struct("bucket", "cvec"))).alias("_centroids")
-        )
-        assigned = with_bucket(vecs, crel, "v", "c")
-        new_flat = (
-            assigned.select("c", F.posexplode("v").alias("i", "x"))
-            .groupBy("c", "i")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("c")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "m"))), lambda s: s["m"]
-                ).alias("cvec")
-            )
-            .select(F.col("c").alias("bucket"), "cvec")
-        )
-        # a bucket that captured no points keeps its previous centroid
-        # (the old driver-side loop had the same rule, implicitly)
-        flat = materialize(
-            flat.alias("p")
-            .join(new_flat.alias("n"), F.col("p.bucket") == F.col("n.bucket"), "left")
-            .select(
-                F.col("p.bucket").alias("bucket"),
-                F.coalesce(F.col("n.cvec"), F.col("p.cvec")).alias("cvec"),
-            )
-        )
-    final = flat.orderBy("bucket").collect()
-    return np.array([r.cvec for r in final], dtype="float64")
-
-
-def _probe_buckets(queries: DataFrame, crel: DataFrame, nprobe: int, id_col: str, vec_col: str) -> DataFrame:
-    """(query_id, q_vec, bucket) — each query exploded to its ``nprobe``
-    nearest centroid buckets, distances computed against the broadcast
-    centroid array."""
-    return (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-        .crossJoin(F.broadcast(crel))
-        .select(
-            "query_id",
-            "q_vec",
-            F.explode(
-                F.slice(F.array_sort(_centroid_dists(F.col("q_vec"), F.col("_centroids"))), 1, nprobe)
-            ).alias("p"),
-        )
-        .select("query_id", "q_vec", F.col("p.bucket").alias("bucket"))
-    )
-
-
-def _topk_by_score(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return q.mapInPandas(probe, f"{_ddl(q)}, bucket int")
 
 
 def ivf_topk(
@@ -659,19 +477,17 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF search: corpus rows carry their nearest-centroid bucket
-    (assigned via the broadcast centroid relation — at scale the
-    assignment happens at write time instead, see :func:`write_ivf_index`
-    / :func:`ivf_topk_stored`); each query probes its nprobe nearest
+    """IVF search: corpus rows get their nearest-centroid bucket in
+    flight (:func:`assign_buckets_np` — at scale the assignment happens
+    at write time instead, see :func:`write_ivf_index` /
+    :func:`ivf_topk_stored`); each query probes its nprobe nearest
     centroid buckets and rescores exactly within them."""
-    crel = centroid_relation(corpus.sparkSession, centroids)
-    c_assigned = with_bucket(
+    c_assigned = assign_buckets_np(
         spread(corpus, by=[id_col]).select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
-        crel,
+        centroids,
         "c_vec",
-        "bucket",
     )
-    probed = _probe_buckets(queries, crel, nprobe, id_col, vec_col)
+    probed = _probe_buckets(queries, centroids, nprobe, id_col, vec_col)
     scored = (
         F.broadcast(probed)
         .join(c_assigned, "bucket")
@@ -679,13 +495,6 @@ def ivf_topk(
         .select("query_id", "neighbor_id", cosine("q_vec", "c_vec").alias("score"))
     )
     return _topk_by_score(scored, k)
-
-
-#: with_bucket's interpreted SQL fold costs O(k·dim) per row; past this
-#: centroid count the Arrow matmul path (assign_buckets_np) wins — a
-#: structural per-row-cost rule, not a measured data statistic, so it
-#: does not ride plans/cost.py.
-IVF_NUMPY_ASSIGN_MIN_K = 64
 
 
 def write_ivf_index(
@@ -696,22 +505,12 @@ def write_ivf_index(
     vec_col: str = "embedding",
 ) -> None:
     """Materialize the IVF index: assign each corpus row's bucket ONCE at
-    write time and store the corpus hive-partitioned by bucket. At 100 TB
-    this is the whole point of IVF — the per-row assignment cost is paid
-    once at ingest, and a probe becomes a partition-pruned read of
-    ``nprobe`` directories instead of a full scan + assignment.
-
-    Above IVF_NUMPY_ASSIGN_MIN_K centroids (read at call time, so tests
-    force either side by patching it) the assignment is
-    :func:`assign_buckets_np` — Arrow matmul, the √N-scaled-k route;
-    at or below it, the broadcast one-row-relation fold of
-    :func:`with_bucket` — plan O(1) in k, fine at small k. Both assign
-    identical buckets."""
-    if len(centroids) > IVF_NUMPY_ASSIGN_MIN_K:
-        assigned = assign_buckets_np(corpus, centroids, vec_col, "bucket")
-    else:
-        crel = centroid_relation(corpus.sparkSession, centroids)
-        assigned = with_bucket(corpus, crel, vec_col, "bucket")
+    write time (:func:`assign_buckets_np`) and store the corpus
+    hive-partitioned by bucket. At 100 TB this is the whole point of
+    IVF — the per-row assignment cost is paid once at ingest, and a
+    probe becomes a partition-pruned read of ``nprobe`` directories
+    instead of a full scan + assignment."""
+    assigned = assign_buckets_np(corpus, centroids, vec_col, "bucket")
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
@@ -758,8 +557,8 @@ def ivf_topk_stored(
     ``bucket`` partition column triggers DYNAMIC PARTITION PRUNING: the
     scan's PartitionFilters carry ``dynamicpruningexpression(bucket IN
     <broadcast result>)``, so only the probed bucket directories are
-    read and NO bucket assignment runs at query time — the plan is
-    scan(pruned) → broadcast-join → rescore (pinned in
+    read and NO bucket assignment runs over index rows at query time —
+    the plan is scan(pruned) → broadcast-join → rescore (pinned in
     tests/test_scale_layout.py). Round-5 change: the probe bucket list
     never round-trips through the driver (the previous
     ``.collect()``-into-``isin`` was bounded but serialized the bucket
@@ -772,8 +571,7 @@ def ivf_topk_stored(
     audited override (bench probes, fraction sweeps)."""
     if nprobe is None:
         nprobe = ivf_nprobe_for(len(centroids))
-    crel = centroid_relation(spark, centroids)
-    probed = _probe_buckets(queries, crel, nprobe, id_col, vec_col)
+    probed = _probe_buckets(queries, centroids, nprobe, id_col, vec_col)
     index = spark.read.parquet(index_path)
     scored = (
         F.broadcast(probed)
@@ -787,26 +585,22 @@ def ivf_topk_stored(
     return _topk_by_score(scored, k)
 
 
-#: Live-vs-stored IVF crossover, in corpus vectors — pinned from the
-#: round-12 cold A/B (SCALE_R12_ANN_CROSSOVER.json) plus the decade
-#: record (SCALE_R11_ANN.json). Two measured curves, and it's RECALL,
-#: not speed, that binds at small N:
-#:
-#: - speed (cold train+[write]+probe): stored wins at EVERY measured
-#:   size — 5.1 vs 9.2 s at 2k, 12.2 vs 13.6 s at 20k, 45.2 vs 72.8 s
-#:   at 200k, 268 vs 1067 s at 2M — because the live route's 6 in-plan
-#:   Lloyd iterations pay fixed per-job overhead that never amortizes.
-#: - recall at the stored operating point (nprobe = k/4, the
-#:   uniform-fixture fraction): 0.645 at 2k (UNDER the registry's 0.65
-#:   floor), 0.710 at 20k (thin), 0.829 at 200k, 0.896 at 2M — the
-#:   sqrt-N geometry needs enough vectors per bucket for the probed
-#:   quarter to carry the neighbors; the live route's 62% probe
-#:   fraction holds ~0.89 at every size.
-#:
-#: So the crossover sits where the stored route's recall margin is
-#: established (between the thin 20k point and the comfortable 200k
-#: point — geometric middle 60k), keeping small corpora on the
-#: high-recall live route and large ones on the 8.5x/decade index.
+#: Live-vs-stored IVF crossover, in corpus vectors. It is pinned for
+#: RECALL, not speed: at the stored route's operating point (nprobe =
+#: k/4, the uniform-fixture fraction) the round-12 record
+#: (SCALE_R12_ANN_CROSSOVER.json) measured recall 0.645 at 2k vectors
+#: (UNDER the registry's 0.65 floor), 0.710 at 20k (thin), 0.829 at 200k
+#: and 0.896 at 2M — the sqrt-N geometry needs enough vectors per bucket
+#: for the probed quarter to carry the neighbors — while the live
+#: route's 10-of-16 probe fraction measures 0.940 on the sf0.01 fixture
+#: and 0.865 on sf0.1. The crossover sits where the stored
+#: route's recall margin is established (geometric middle of the thin
+#: 20k and the comfortable 200k points), keeping small corpora on the
+#: high-recall live route and large ones on the write-once index
+#: (8.5x/decade, SCALE_R11_ANN.json). The speed side of that record
+#: (stored ahead at every size) timed an in-plan Lloyd trainer that is
+#: gone; the live route now trains on the driver in a fraction of a
+#: second, so speed no longer argues against it at small N.
 IVF_AUTO_CROSSOVER_VECTORS = 60_000
 
 
@@ -906,27 +700,27 @@ def auto_ivf_topk(
 ):
     """Cost-aware IVF top-k — a measured-crossover default on the
     shared ``plans/cost.py`` seam, like the near-dup edge route.
-    Measures the corpus size (one metadata-cheap count) and compares it
-    with IVF_AUTO_CROSSOVER_VECTORS, read at call time (tests force the
-    stored route by lowering it):
+    Measures the corpus size (:func:`row_count`: zero jobs on a bare
+    scan) and compares it with IVF_AUTO_CROSSOVER_VECTORS, read at call
+    time (tests force the stored route by lowering it):
 
-    - ``live`` (≤ crossover): in-plan Lloyd training at k=16 + in-plan
-      bucket assignment (:func:`ivf_centroids` + :func:`ivf_topk`) —
-      no storage touched; right for one-shot small-corpus queries where
-      the stored route's parquet write+read roundtrip dominates.
-    - ``stored`` (> crossover): √N centroids via sampled driver-side
-      k-means, write-once hive-partitioned index, partition-pruned
-      probes (:func:`ensure_ivf_index` + :func:`ivf_topk_stored`) at
-      nprobe = k/4 — the uniform-fixture floor-clearing operating point
-      (tools/ann_scale.py at e49ef4e); measured 8.5×/decade vs the live route's
-      18.5× (SCALE_R11_ANN.json), and already ahead COLD at 200k
-      vectors (45.2 s vs 72.8 s).
+    - ``live`` (≤ crossover): 16 centroids from the sampled driver-side
+      trainer, in-flight bucket assignment, nprobe 10
+      (:func:`ivf_centroids_np` + :func:`ivf_topk`) — no storage
+      touched; right for one-shot small-corpus queries, where the
+      stored route's recall is under the floor and its parquet
+      write+read roundtrip dominates.
+    - ``stored`` (> crossover): √N centroids from the same trainer,
+      write-once hive-partitioned index, partition-pruned probes
+      (:func:`ensure_ivf_index` + :func:`ivf_topk_stored`) at the
+      floor-aware :func:`ivf_nprobe_for` — measured 8.5×/decade
+      (SCALE_R11_ANN.json).
 
     Returns ``(topk_df, CostDecision)`` so callers and tests can audit
     the route, same as the other cost-aware seams."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
 
-    n = corpus.count()
+    n = row_count(corpus)
     decision = decide_crossover(
         float(n),
         float(IVF_AUTO_CROSSOVER_VECTORS),
@@ -936,7 +730,7 @@ def auto_ivf_topk(
         detail=f"stored route: sqrt-N={ivf_k_for(n)} centroids at {index_root}",
     )
     if decision.choice == "live":
-        centroids = ivf_centroids(corpus, id_col=id_col, vec_col=vec_col)
+        centroids = ivf_centroids_np(corpus, k=16, id_col=id_col, vec_col=vec_col)
         return (
             ivf_topk(queries, corpus, centroids, k, nprobe=10, id_col=id_col, vec_col=vec_col),
             decision,

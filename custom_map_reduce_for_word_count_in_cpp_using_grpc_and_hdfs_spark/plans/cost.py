@@ -14,7 +14,7 @@ constant at call time, so tests force a side by patching the constant.
   driver-local union-find beats the distributed label-propagation loop.
 - IVF top-k route (``operators/similarity.auto_ivf_topk``): corpus
   vectors vs the 60k-vector size above which the stored,
-  partition-pruned index beats in-plan training.
+  partition-pruned index clears the recall floor with margin.
 
 Centralizing the compare-and-log step keeps every new cost-aware
 default on one seam with one test pattern (VERDICT r9 item 7): the

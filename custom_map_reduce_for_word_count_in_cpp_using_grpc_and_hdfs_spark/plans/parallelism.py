@@ -118,7 +118,7 @@ def _row_preserving(plan) -> bool:
     return all(_row_preserving(children.apply(i)) for i in range(children.size()))
 
 
-def scan_row_count(df: DataFrame) -> int | None:
+def _footer_row_count(df: DataFrame) -> int | None:
     """EXACT row count of ``df`` from its parquet footers — zero Spark
     jobs — or ``None`` when it cannot be safely derived (non-local or
     non-parquet files, or a plan that is not provably row-preserving
@@ -145,6 +145,16 @@ def scan_row_count(df: DataFrame) -> int | None:
         return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
     except Exception:
         return None
+
+
+def row_count(df: DataFrame) -> int:
+    """EXACT row count of ``df``: :func:`_footer_row_count` when the plan
+    is provably a bare parquet scan (zero jobs), a ``count()`` job
+    otherwise. The one sizing count of every cost seam that needs the
+    exact ``n`` (LSH and SimHash geometry, the edge route, the IVF
+    route), so the hit-or-fallback decision lives in one place."""
+    n = _footer_row_count(df)
+    return df.count() if n is None else n
 
 
 def scan_splits(df: DataFrame) -> int:

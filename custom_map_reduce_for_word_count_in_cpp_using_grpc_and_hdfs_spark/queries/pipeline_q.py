@@ -231,10 +231,7 @@ def choose_edge_method(docs: DataFrame, text_col: str = "text", n: int = 3) -> s
     exact side is oracle-identical) and bounded (the gate fires only
     under crossover/bound ≈ 937 KB of scan bytes), so the gate stays a
     bytes check rather than also proving the plan is a bare scan."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import (
-        scan_file_sizes,
-        scan_row_count,
-    )
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count, scan_file_sizes
 
     sizes = scan_file_sizes(docs)
     if sizes is not None and sum(sizes) * EDGE_AUTO_BYTES_EXPANSION_BOUND <= EDGE_AUTO_CROSSOVER_POSTINGS:
@@ -251,12 +248,7 @@ def choose_edge_method(docs: DataFrame, text_col: str = "text", n: int = 3) -> s
             EDGE_AUTO_CROSSOVER_POSTINGS,
         )
         return "jaccard"
-    # zero-job EXACT footer count where the frame is a bare
-    # row-preserving scan (round 14); the decision statistics are
-    # identical to the count job's, so the routes cannot move
-    n_docs = scan_row_count(docs)
-    if n_docs is None:
-        n_docs = docs.count()
+    n_docs = row_count(docs)
     if n_docs > EDGE_AUTO_CROSSOVER_POSTINGS * EDGE_AUTO_COUNT_ONLY_MARGIN:
         method, _ = _decide_edge_method(n_docs, 1.0)  # count alone decides
         return method

@@ -119,12 +119,13 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF variant, COST-AWARE since round 12 (VERDICT r11 item 1):
     routes through ``plans/cost.py`` like the edge-route seam —
-    below the measured corpus-size crossover the live in-plan route
-    (k=16 Lloyd training + in-plan assignment, nprobe 10); above it the
-    scale route (√N sampled-k-means centroids, write-once
-    hive-partitioned index under the repo scratch dir, partition-pruned
-    probes at nprobe = k/4 — 8.5×/decade measured vs the live route's
-    18.5×, SCALE_R11_ANN.json).
+    below the measured corpus-size crossover the live route (k=16
+    centroids trained on a driver-side sample, in-flight assignment,
+    nprobe 10); above it the scale route (√N centroids from the same
+    trainer, write-once hive-partitioned index under the repo scratch
+    dir, partition-pruned probes at the floor-aware nprobe —
+    8.5×/decade measured, SCALE_R11_ANN.json). The route decision reads
+    the corpus size from parquet footers, so it launches no job.
 
     K-means bucket boundaries are float-order-sensitive, so as with the
     LSH path the driver row is the in-plan invariant: (n_queries, k,

@@ -40,16 +40,20 @@ SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.a
 
 def _stage_dir(sf_dir: str, table: str = "events") -> str:
     """Stage ``<sf_dir>/<table>.parquet`` into a directory usable by the
-    file-stream source. Idempotent per (sf_dir, table)."""
+    file-stream source. Idempotent per (sf_dir, table). A table already
+    stored as a parquet directory is returned as it is: the file source
+    reads directories."""
     import hashlib
 
+    source = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isdir(source):
+        return source
     # stable digest — Python's hash() is per-process randomized, which
     # would re-stage (and leak) a fresh copy every run
     digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     key = f"{table}-{digest}"
     target = os.path.join(SCRATCH, "streams", key)
     marker = os.path.join(target, f"{table}.parquet")
-    source = os.path.join(sf_dir, f"{table}.parquet")
     # staleness guard: if the source was regenerated since we staged it,
     # re-copy — otherwise a long-lived .scratch dir silently streams last
     # round's data. copy2 preserves the source mtime, so freshness is an
@@ -258,9 +262,9 @@ def run_available_now_many(
     Single-batch constraint for oracle-checked drains: the staged file
     source is exactly ONE file (see _stage_dir), so an AvailableNow drain
     is one micro-batch and the watermark never advances mid-drain. With a
-    multi-file source the watermark could advance between micro-batches
-    and drop late rows (dropDuplicatesWithinWatermark, stream-stream
-    join), legitimately diverging from the batch oracle — if a staged
+    multi-file source (a directory-shaped table streams in place) the
+    watermark could advance between micro-batches and drop late rows
+    (dropDuplicatesWithinWatermark, stream-stream join), legitimately diverging from the batch oracle — if a staged
     source ever grows multiple files, pin maxFilesPerTrigger above the
     file count or use a watermark delay exceeding the event-time span.
 

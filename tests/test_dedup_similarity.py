@@ -121,7 +121,7 @@ def test_jaccard_shingle_df_cap_only_prunes_candidates(spark):
 def test_ann_ivf_recall(spark):
     emb = load_table(spark, SF_CORRECT, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    centroids = S.ivf_centroids(emb)
+    centroids = S.ivf_centroids_np(emb, k=16)
     brute = S.brute_force_topk(queries, emb, 10).collect()
     approx = S.ivf_topk(queries, emb, centroids, 10, nprobe=10).collect()
     bs, as_ = {}, {}
@@ -131,7 +131,7 @@ def test_ann_ivf_recall(spark):
         as_.setdefault(r.query_id, set()).add(r.neighbor_id)
     recalls = [len(bs[q] & as_.get(q, set())) / len(bs[q]) for q in bs]
     mean_recall = sum(recalls) / len(recalls)
-    # hash-spread init + 6 Lloyd iters + nprobe=10 of 16: measured 0.90 on
+    # hash-spread sample + 6 Lloyd iters + nprobe=10 of 16: measured 0.94 on
     # this weakly-clustered fixture (true neighbors sit at cos ≈ 0.35-0.5,
     # so buckets split neighborhoods; production-clustered embeddings
     # reach the same recall at far smaller nprobe/k)
@@ -234,10 +234,28 @@ def test_ivf_short_corpus_guard(spark):
     """Fewer vectors than k must shrink k, not crash the sampler."""
     rows = [(i, [float(i), 1.0, 0.0, 0.0]) for i in range(5)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    centroids = S.ivf_centroids(df, k=16, iters=1)
+    centroids = S.ivf_centroids_np(df, k=16, iters=1)
     assert 1 <= len(centroids) <= 5
     out = S.ivf_topk(df.limit(1), df, centroids, k=2, nprobe=4)
     assert out.count() >= 1
+
+
+def test_ivf_kernel_breaks_ties_toward_the_smaller_bucket():
+    """The one squared-L2 kernel behind IVF training, assignment and
+    probing: a vector equidistant from two centroids goes to the smaller
+    bucket, and probes visit buckets in (distance, bucket) order — the
+    order a sort of (distance, bucket) pairs gives."""
+    import numpy as np
+
+    C = np.array([[2.0, 0.0], [1.0, 0.0], [-1.0, 0.0], [0.0, 1.0], [0.0, 0.0]])
+    M = np.array([[0.0, 0.0], [0.5, 0.0], [3.0, 0.0]])
+    d = S._sq_l2(M, C)
+    assert d.tolist() == [[4, 1, 1, 1, 0], [2.25, 0.25, 2.25, 1.25, 0.25], [1, 4, 16, 10, 9]]
+    assert S._nearest(M, C).tolist() == [4, 1, 0]
+    assert S._probe_order(M, C, 4).tolist() == [[4, 1, 2, 3], [1, 4, 3, 0], [0, 1, 4, 3]]
+    want = [[b for _, b in sorted(zip(row, range(len(C))))] for row in d.tolist()]
+    assert S._probe_order(M, C, len(C)).tolist() == want
+    assert S._probe_order(M, C, 99).shape == (3, len(C))
 
 
 def test_operator_caches_release_with_result(spark):
@@ -638,7 +656,7 @@ def test_auto_ivf_topk_routes_on_measured_crossover(spark, tmp_path, monkeypatch
     assert not os.path.exists(idx), "live route must not touch storage"
     expected = {
         (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk(queries, emb, S.ivf_centroids(emb), 10, nprobe=10).collect()
+        for r in S.ivf_topk(queries, emb, S.ivf_centroids_np(emb, k=16), 10, nprobe=10).collect()
     }
     assert {(r.query_id, r.neighbor_id) for r in live_df.collect()} == expected
 

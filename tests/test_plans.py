@@ -274,37 +274,44 @@ def test_spread_streaming_passthrough(spark, tmp_path):
 
 
 def test_scan_row_count_exact_and_guarded(spark, tmp_path):
-    """scan_row_count (round 14): EXACT parquet-footer row count with
-    zero Spark jobs on a provably row-preserving frame (bare scan or
-    projection), None on anything that could change the row count —
-    filter, join, limit, sample, non-file or non-parquet source — so
-    callers sizing a geometry from it (cosine_near_dup_pairs' LSH bands)
-    get the value a count() job would return, or fall back to running
-    one. scan_file_sizes resolves the same local files and reports their
-    on-disk sizes."""
+    """row_count: the EXACT row count of any frame. The parquet-footer
+    helper behind it answers with zero Spark jobs on a provably
+    row-preserving frame (bare scan or projection) and returns None on
+    anything that could change the row count — filter, join, limit,
+    sample, non-file or non-parquet source — so callers sizing a
+    geometry from row_count (cosine_near_dup_pairs' LSH bands) get the
+    value a count() job returns either way. scan_file_sizes resolves
+    the same local files and reports their on-disk sizes."""
     import glob
     import os
 
     from pyspark.sql import functions as F
 
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import (
+        _footer_row_count,
+        row_count,
         scan_file_sizes,
-        scan_row_count,
     )
 
     path = str(tmp_path / "t")
     spark.range(0, 1234).write.parquet(path)
     df = spark.read.parquet(path)
-    assert scan_row_count(df) == 1234
-    assert scan_row_count(df.select("id")) == 1234
-    assert scan_row_count(df.where("id % 2 = 0")) is None
-    assert scan_row_count(df.limit(5)) is None
-    assert scan_row_count(df.sample(0.5)) is None
-    assert scan_row_count(df.join(df.select(F.col("id").alias("j")), df.id == F.col("j"))) is None
-    assert scan_row_count(spark.range(10).toDF("x")) is None
     json_path = str(tmp_path / "j")
     spark.range(0, 10).write.json(json_path)
-    assert scan_row_count(spark.read.json(json_path)) is None
+    assert _footer_row_count(df) == 1234
+    assert _footer_row_count(df.select("id")) == 1234
+    guarded = [
+        df.where("id % 2 = 0"),
+        df.limit(5),
+        df.sample(0.5, seed=3),
+        df.join(df.select(F.col("id").alias("j")), df.id == F.col("j")),
+        spark.range(10).toDF("x"),
+        spark.read.json(json_path),
+    ]
+    for frame in guarded:
+        assert _footer_row_count(frame) is None
+    for frame in [df, df.select("id"), *guarded]:
+        assert row_count(frame) == frame.count()
     parts = glob.glob(os.path.join(path, "part-*.parquet"))
     assert parts
     assert sorted(scan_file_sizes(df)) == sorted(os.path.getsize(p) for p in parts)

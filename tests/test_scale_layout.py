@@ -114,13 +114,13 @@ def test_ivf_stored_index_partition_pruned_probe(spark):
     """write_ivf_index assigns buckets at WRITE time; a probe against the
     stored layout must (a) carry a bucket partition filter — only nprobe
     directories are scanned — and (b) run NO bucket assignment over index
-    rows at query time (no distance fold on the scan side), and (c)
-    return exactly what the in-flight ivf_topk returns."""
+    rows at query time, and (c) return exactly what the in-flight
+    ivf_topk returns."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import similarity as S
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    centroids = S.ivf_centroids(emb, k=8, iters=2)
+    centroids = S.ivf_centroids_np(emb, k=8, iters=2)
     path = os.path.join(SCRATCH, "ivf_index")
     S.write_ivf_index(emb, centroids, path)
 
@@ -132,27 +132,29 @@ def test_ivf_stored_index_partition_pruned_probe(spark):
     # pruning (executor-side broadcast result), not a driver-collected
     # isin list — pin the dynamicpruning expression on the index scan
     assert "dynamicpruning" in scan_section, plan
-    # the index scan must not recompute assignments at query time:
-    # nearest-bucket assignment is the array_min argmin (with_bucket),
-    # which must be ABSENT from the stored-path plan (buckets come from
-    # the partition column) and present in the in-flight plan
-    assert "array_min" not in plan, plan
+    # the index scan must not recompute assignments at query time: the
+    # stored plan tree's only MapInPandas is the query-side probe, where
+    # the in-flight tree also assigns every corpus row (the tree is the
+    # plan's first paragraph; the dynamic-pruning subquery repeats the
+    # probe below it)
+    def batch_stages(p: str) -> int:
+        return p.split("\n\n", 1)[0].count("MapInPandas")
+
+    assert batch_stages(plan) == 1, plan
 
     inflight = S.ivf_topk(queries, emb, centroids, k=5, nprobe=3)
-    assert "array_min" in formatted_plan(inflight)
+    assert batch_stages(formatted_plan(inflight)) == 2
     assert sorted(map(tuple, stored.collect())) == sorted(map(tuple, inflight.collect()))
 
 
-def test_ivf_scaled_k_and_numpy_assignment(spark, monkeypatch):
+def test_ivf_scaled_k_and_numpy_assignment(spark):
     """Round 11 (ANN decade root cause): a FIXED centroid count makes
     IVF query cost track the corpus linearly (nprobe/16 probes 62% of
     any corpus), so k scales as √N via ivf_k_for, and write-time
     assignment at √N-scaled k runs through the Arrow matmul path
-    (assign_buckets_np) instead of the O(k·dim)-per-row SQL fold. Pins:
-    ivf_k_for's curve and clamps; numpy assignment ≡ with_bucket bucket
-    for bucket; the sampled driver-side trainer (ivf_centroids_np)
-    feeds a stored index whose probe answers match the SQL-assigned
-    stored index exactly at the same centroids."""
+    (assign_buckets_np). Pins: ivf_k_for's curve and clamps; the sampled
+    driver-side trainer's shape; and a stored index probed at its own
+    centroids answers exactly like the in-flight search."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import similarity as S
 
     assert S.ivf_k_for(1) == 16 and S.ivf_k_for(500) == 16  # floor
@@ -169,30 +171,12 @@ def test_ivf_scaled_k_and_numpy_assignment(spark, monkeypatch):
     centroids = S.ivf_centroids_np(emb, k=32, iters=3)
     assert centroids.shape == (32, 64)
 
-    crel = S.centroid_relation(spark, centroids)
-    sql_b = {r.vec_id: r.bucket for r in S.with_bucket(emb, crel).select("vec_id", "bucket").collect()}
-    np_b = {r.vec_id: r.bucket for r in S.assign_buckets_np(emb, centroids).select("vec_id", "bucket").collect()}
-    assert sql_b == np_b
-
-    # the write-time route is chosen by centroid count across
-    # IVF_NUMPY_ASSIGN_MIN_K; patch it to force each side at k=32
-    np_calls = []
-    real_np = S.assign_buckets_np
-    monkeypatch.setattr(S, "assign_buckets_np", lambda *a, **kw: np_calls.append(1) or real_np(*a, **kw))
-    path_np = os.path.join(SCRATCH, "ivf_index_np")
-    monkeypatch.setattr(S, "IVF_NUMPY_ASSIGN_MIN_K", 31)
-    S.write_ivf_index(emb, centroids, path_np)
-    assert len(np_calls) == 1
-    path_sql = os.path.join(SCRATCH, "ivf_index_sql")
-    monkeypatch.setattr(S, "IVF_NUMPY_ASSIGN_MIN_K", 32)
-    S.write_ivf_index(emb, centroids, path_sql)
-    assert len(np_calls) == 1
-    monkeypatch.undo()
+    path = os.path.join(SCRATCH, "ivf_index_np")
+    S.write_ivf_index(emb, centroids, path)
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    a = sorted(map(tuple, S.ivf_topk_stored(spark, queries, path_np, centroids, k=5, nprobe=6).collect()))
-    b = sorted(map(tuple, S.ivf_topk_stored(spark, queries, path_sql, centroids, k=5, nprobe=6).collect()))
+    a = sorted(map(tuple, S.ivf_topk_stored(spark, queries, path, centroids, k=5, nprobe=6).collect()))
+    b = sorted(map(tuple, S.ivf_topk(queries, emb, centroids, k=5, nprobe=6).collect()))
     assert a == b and a
-    assert S.IVF_NUMPY_ASSIGN_MIN_K == 64
 
 
 def test_single_row_group_layout_resilience(spark):

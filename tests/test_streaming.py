@@ -524,3 +524,34 @@ def test_overlapping_drains_restore_the_session_width(spark, tmp_path, monkeypat
     assert widths == {"drain-a": 3, "drain-b": 5}
     assert results == {n: {(0, 10), (1, 10), (2, 10)} for n in ("drain-a", "drain-b")}
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_directory_shaped_events_stream_in_place(spark, tmp_path):
+    """A table stored as a parquet *directory* (``events.parquet/`` with
+    part files, the layout stream_shuffle_width already sizes) streams
+    from where it is instead of failing to stage: the sf0.001 events
+    file copied in as one part drains through events_stream +
+    tumbling_counts to exactly the batch result."""
+    import shutil
+
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
+        events_stream,
+        run_available_now_many,
+        stream_shuffle_width,
+        tumbling_counts,
+    )
+
+    from .conftest import SF_SMOKE
+
+    table_dir = tmp_path / "events.parquet"
+    table_dir.mkdir()
+    shutil.copy(os.path.join(SF_SMOKE, "events.parquet"), table_dir / "part-00000.parquet")
+    sf_dir = str(tmp_path)
+    (got,) = run_available_now_many(
+        [(tumbling_counts(events_stream(spark, sf_dir)), "complete")],
+        shuffle_width=stream_shuffle_width(sf_dir),
+    )
+    want = tumbling_counts(load_table(spark, SF_SMOKE, "events"))
+    rows = sorted(map(tuple, got.collect()))
+    assert rows and rows == sorted(map(tuple, want.collect()))
