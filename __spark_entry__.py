@@ -33,7 +33,8 @@ def entry(spark: SparkSession) -> DataFrame:
     at sf0.001 (the reference's one query, SURVEY.md §3.1)."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import apply_engine_conf
 
-    return flagship(apply_engine_conf(spark), SF0001)
+    apply_engine_conf(spark)
+    return flagship(spark, SF0001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -30,7 +30,8 @@ def query(name: str, oracle: str | None = None):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import apply_engine_conf
 
-            return fn(apply_engine_conf(spark), sf_dir)
+            apply_engine_conf(spark)
+            return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

@@ -24,14 +24,13 @@ def _scratch_dir(sf_dir: str, kind: str) -> str:
     index), keyed by the sf_dir's ABSOLUTE path (basename for
     readability + an 8-hex path hash so two sf dirs sharing a basename
     never collide — ADVICE r7; override the root with
-    $SPARK_GRAFT_SCRATCH). CWD-independent: anchored at the repo root
-    derived from the package location."""
+    $SPARK_GRAFT_SCRATCH, see ``session.scratch_root``)."""
     import hashlib
     import os
 
-    # __file__ = <repo>/<package>/queries/similarity_q.py -> 3 dirnames up
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", os.path.join(repo_root, ".scratch"))
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import scratch_root
+
+    scratch = scratch_root()
     norm = os.path.normpath(os.path.abspath(sf_dir))
     tag = f"{os.path.basename(norm)}-{hashlib.sha1(norm.encode()).hexdigest()[:8]}"
     return os.path.join(scratch, kind, tag)

@@ -6,13 +6,22 @@ The reference reads exactly one hardcoded HDFS text file
 scale the same call pattern works against partitioned parquet datasets on
 any Hadoop-compatible filesystem — predicate pushdown and partition
 pruning come from expressing reads through ``spark.read.parquet``.
+
+Every parquet table read goes through :func:`read_parquet`, which infers
+a file's schema once per SparkContext: inference runs a one-task Spark
+job to read the footer, and a warm short query otherwise paid one such
+job per table it loads.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Every table the driver generates (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -32,16 +41,69 @@ TABLES: tuple[str, ...] = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table from ``sf_dir``.
 
-    Plain ``spark.read.parquet`` so scans keep vectorized reading, filter
-    pushdown, and column pruning (verify with ``.explain``: PushedFilters /
-    ReadSchema reflect downstream select/filter).
+    A plain parquet scan (:func:`read_parquet`) so scans keep vectorized
+    reading, filter pushdown, and column pruning (verify with
+    ``.explain``: PushedFilters / ReadSchema reflect downstream
+    select/filter).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _load_events(spark, path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
+
+
+#: Session confs that change the schema Spark infers from a parquet
+#: footer; their values are part of the memo key, so changing one
+#: infers again.
+_SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+#: Inferred schemas of the live SparkContext's parquet files, keyed on
+#: (applicationId, absolute path, size, mtime_ns, schema confs). Entries
+#: of an earlier SparkContext are dropped when a new one stores its first.
+_SCHEMAS: dict[tuple, StructType] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job after
+    the first read of the same file in the same SparkContext: the schema
+    inferred then is passed to ``spark.read.schema(...)``. Only schemas
+    are kept, never data. A directory, a non-local path, a stat error or
+    a session without a SparkContext (Spark Connect) always infers."""
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key) if key is not None else None
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        schema = df.schema
+        with _SCHEMAS_LOCK:
+            for stale in [k for k in _SCHEMAS if k[0] != key[0]]:
+                del _SCHEMAS[stale]
+            _SCHEMAS[key] = schema
+    return df
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """The memo key of a local parquet file, or ``None`` (infer)."""
+    sc = getattr(spark, "sparkContext", None)
+    if sc is None or urlsplit(path).scheme:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    return (sc.applicationId, os.path.abspath(path), st.st_size, st.st_mtime_ns, confs)
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
@@ -52,7 +114,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     so oracle comparisons stay exact."""
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.exact import dsum
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.registry import read_parquet
 
 #: Scratch root for staged stream directories (inside the repo; the
 #: environment forbids writes elsewhere).
@@ -88,7 +89,7 @@ def events_source(spark: SparkSession, conf: dict | None = None) -> DataFrame:
     kind = conf.get("kind", "file")
     if kind == "file":
         sf_dir = conf["sf_dir"]
-        batch_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+        batch_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
         return spark.readStream.schema(batch_schema).parquet(_stage_dir(sf_dir))
     if kind == "rate":
         # Deterministic synthetic events from the built-in rate-micro-batch
@@ -399,7 +400,7 @@ def click_purchase_join(clicks: DataFrame, purchases: DataFrame, horizon: str = 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source over the documents table (for incremental
     word-count — the reference query as a stream)."""
-    batch_schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    batch_schema = read_parquet(spark, os.path.join(sf_dir, "documents.parquet")).schema
     return spark.readStream.schema(batch_schema).parquet(_stage_dir(sf_dir, "documents"))
 
 

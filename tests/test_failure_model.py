@@ -38,10 +38,11 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import apply_engine_conf
 
 master, corpus, out, seed = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
-spark = apply_engine_conf(
+spark = (
     SparkSession.builder.master(master).config("spark.driver.memory", "1g")
     .config("spark.ui.enabled", "false").getOrCreate()
 )
+apply_engine_conf(spark)
 text = spark.read.text(corpus)
 parts = text.rdd.getNumPartitions()
 failing = set(random.Random(seed).sample(range(parts), max(1, parts // 2)))
