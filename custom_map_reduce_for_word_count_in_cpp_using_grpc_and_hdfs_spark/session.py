@@ -126,6 +126,12 @@ def _initial_shuffle_partitions(shuffle: str) -> str:
     return str(max(256, 8 * int(shuffle)))
 
 
+#: ``spark.conf.isModifiable`` per ENGINE_CONF key. Whether a SQL key is
+#: static is fixed by the Spark build, so it cannot change within a
+#: process.
+_MODIFIABLE: dict[str, bool] = {}
+
+
 def apply_engine_conf(spark: SparkSession) -> tuple[str, ...]:
     """Apply the runtime-settable engine defaults to an externally built
     session and return the static ENGINE_CONF keys it skipped.
@@ -135,9 +141,13 @@ def apply_engine_conf(spark: SparkSession) -> tuple[str, ...]:
     consistent regardless of who constructed the session. Static keys
     cannot change on a started session and are skipped (they took effect
     only if :func:`get_session` built it); any other failure to set a key
-    raises.
+    raises. Which keys are static is asked of Spark once per key per
+    process (:data:`_MODIFIABLE`), not on every registry call.
     """
-    skipped = tuple(key for key in ENGINE_CONF if not spark.conf.isModifiable(key))
+    for key in ENGINE_CONF:
+        if key not in _MODIFIABLE:
+            _MODIFIABLE[key] = spark.conf.isModifiable(key)
+    skipped = tuple(key for key in ENGINE_CONF if not _MODIFIABLE[key])
     for key, value in ENGINE_CONF.items():
         if key not in skipped:
             spark.conf.set(key, value)

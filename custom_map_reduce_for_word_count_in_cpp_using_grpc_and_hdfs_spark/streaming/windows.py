@@ -5,8 +5,9 @@ surface. Design:
 
 - **Source**: file stream over a staged directory (Spark's file source
   requires a directory; the driver's events table is a single parquet
-  file, so we stage a copy under ``.scratch/``). In production this is a
-  Kafka/file-drop source; everything downstream is identical.
+  file, so we stage a copy under ``<scratch root>/streams``, see
+  ``session.scratch_root``). In production this is a Kafka/file-drop
+  source; everything downstream is identical.
 - **Windows**: tumbling/sliding via ``window()``, sessions via
   ``session_window()`` — all computed with ``Trigger.AvailableNow`` so a
   bounded run drains the source and terminates, giving batch-equivalent
@@ -14,6 +15,12 @@ surface. Design:
 - **Output modes**: ``complete`` for windowed aggregations (emits every
   finalized window at drain time without waiting on watermark
   expiry), ``append`` + watermark for stateful dedup.
+- **Drain cost**: :func:`run_available_now_many` starts each bounded
+  drain at an input-sized state width (one partition below 64 MB of
+  source) and, when the checkpoint root is provably local, on Spark's
+  FileSystem-API checkpoint manager: where Hadoop has no native library,
+  the default FileContext manager forks ``readlink`` on every checkpoint
+  rename, and this one forks none.
 - **Scale posture**: state size is bounded by watermarks
   (``withWatermark``) in production mode; AvailableNow runs accept the
   one-shot full-state cost by design. Skewed session keys fall under
@@ -27,23 +34,21 @@ import os
 import shutil
 import threading
 import uuid
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.exact import dsum
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import scratch_root
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.registry import read_parquet
-
-#: Scratch root for staged stream directories (inside the repo; the
-#: environment forbids writes elsewhere).
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 
 def _stage_dir(sf_dir: str, table: str = "events") -> str:
     """Stage ``<sf_dir>/<table>.parquet`` into a directory usable by the
-    file-stream source. Idempotent per (sf_dir, table). A table already
-    stored as a parquet directory is returned as it is: the file source
-    reads directories."""
+    file-stream source, under ``<scratch root>/streams``. Idempotent per
+    (sf_dir, table). A table already stored as a parquet directory is
+    returned as it is: the file source reads directories."""
     import hashlib
 
     source = os.path.join(sf_dir, f"{table}.parquet")
@@ -53,10 +58,10 @@ def _stage_dir(sf_dir: str, table: str = "events") -> str:
     # would re-stage (and leak) a fresh copy every run
     digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     key = f"{table}-{digest}"
-    target = os.path.join(SCRATCH, "streams", key)
+    target = os.path.join(scratch_root(), "streams", key)
     marker = os.path.join(target, f"{table}.parquet")
     # staleness guard: if the source was regenerated since we staged it,
-    # re-copy — otherwise a long-lived .scratch dir silently streams last
+    # re-copy — otherwise a long-lived scratch dir silently streams last
     # round's data. copy2 preserves the source mtime, so freshness is an
     # EXACT (size, mtime) match: a restored/checked-out source whose mtime
     # moved *backwards* (same size) also re-stages, which the previous
@@ -191,25 +196,23 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #:   sf0.1 (2 MB events):   w2 1.12 s  w4 1.20  w8 1.28  w16 1.66  w32 2.23
 #:   sf1   (17 MB):         w2 1.31 s  w8 1.61  w32 3.01  w64 4.65
 #:   sf10  (174 MB):        w2 1.86 s  w4 1.67  w8 1.82  w32 3.53
-#: The optimum tracks source bytes (2 -> 2 -> 4), matching
-#: ceil(bytes / 64 MB) with a floor of 2; the derived width reaches ~28
-#: at sf100 (1.7 GB) and keeps growing linearly past any fixed core
-#: count — at 100 TB the same formula spreads state across ~1.6M
-#: partitions' worth of budget, i.e. the cluster-sizing regime where
-#: per-partition state memory, not drain latency, binds.
+#: The optimum tracks source bytes, matching ceil(bytes / 64 MB); the
+#: derived width reaches ~28 at sf100 (1.7 GB) and keeps growing linearly
+#: past any fixed core count — at 100 TB the same formula spreads state
+#: across ~1.6M partitions' worth of budget, i.e. the cluster-sizing
+#: regime where per-partition state memory, not drain latency, binds.
+#: There is no floor above 1: a source under 64 MB drains at one state
+#: partition (an sf0.01 ``stream_word_count`` drain took 0.45-0.47 s at
+#: width 1 against 0.61-0.71 s at width 2), with one state directory to
+#: create and commit. A test that needs the multi-partition state path
+#: passes ``shuffle_width=2``.
 STREAM_WIDTH_TARGET_BYTES = 64 * 1024 * 1024
-#: Width floor: keeps at least two-way state parallelism so the
-#: distributed code path (state shuffle, per-partition stores) is always
-#: exercised; measured indistinguishable from wider floors at the SFs
-#: where it applies.
-STREAM_WIDTH_FLOOR = 2
 
 
 def stream_shuffle_width(sf_dir: str, *tables: str) -> int | None:
     """Input-sized streaming shuffle/state width: ceil(total source
-    bytes / STREAM_WIDTH_TARGET_BYTES), floored at STREAM_WIDTH_FLOOR —
-    or ``None`` (leave the session width alone) when a source cannot be
-    sized locally."""
+    bytes / STREAM_WIDTH_TARGET_BYTES), at least 1 — or ``None`` (leave
+    the session width alone) when a source cannot be sized locally."""
     import math
 
     total = 0
@@ -219,7 +222,7 @@ def stream_shuffle_width(sf_dir: str, *tables: str) -> int | None:
             total += _source_bytes(path)
         except OSError:
             return None
-    return max(STREAM_WIDTH_FLOOR, math.ceil(total / STREAM_WIDTH_TARGET_BYTES))
+    return max(1, math.ceil(total / STREAM_WIDTH_TARGET_BYTES))
 
 
 def _source_bytes(path: str) -> int:
@@ -237,9 +240,57 @@ def _source_bytes(path: str) -> int:
     )
 
 
-#: Serializes the save / set / start / restore of the session shuffle
-#: width in :func:`run_available_now_many` across threads sharing one
-#: session, so overlapping drains never restore each other's width.
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+#: Spark's checkpoint manager over the Hadoop ``FileSystem`` API. Spark's
+#: default, the ``FileContext`` manager, goes through ``ChecksumFs`` on a
+#: local path: without Hadoop's native library every rename forks
+#: ``readlink`` (and creates fork ``chmod``, as they still do here). This
+#: one renames with ``java.io.File``. Its commit is atomic wherever rename
+#: is, which holds on a local POSIX file system; on an object store it is
+#: not, so it is only chosen for a provably local root
+#: (:func:`checkpoint_root_is_local`).
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_root_is_local(location: str | None, default_fs: str | None) -> bool:
+    """Whether a drain's checkpoint root is provably on the local file
+    system, given ``spark.sql.streaming.checkpointLocation`` (``None``:
+    unset) and the Hadoop ``fs.defaultFS`` (``None``: unknown).
+
+    A ``file:`` location is local and any other scheme is not. A
+    scheme-less location resolves against the default file system, and
+    so does an unset one: Spark then checkpoints to a scheme-less local
+    temp dir. Both are local only when ``fs.defaultFS`` is ``file:``, so
+    an unknown default file system fails closed."""
+    scheme = urlsplit(location).scheme if location else ""
+    if scheme:
+        return scheme == "file"
+    return default_fs is not None and urlsplit(default_fs).scheme == "file"
+
+
+def _drain_confs(spark: SparkSession, shuffle_width: int | None) -> dict[str, str]:
+    """The session confs a drain is started under: the shuffle/state
+    width when one is given, and the FileSystem checkpoint manager when
+    the session names no manager of its own and its checkpoint root is
+    provably local. Where no JVM handle exists (Spark Connect) the
+    default file system is unknown, so the manager is left alone."""
+    confs = {}
+    if shuffle_width is not None:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_width)
+    jsession = getattr(spark, "_jsparkSession", None)
+    default_fs = jsession.sessionState().newHadoopConf().get("fs.defaultFS") if jsession is not None else None
+    if spark.conf.get(_MANAGER_KEY, None) is None and checkpoint_root_is_local(
+        spark.conf.get("spark.sql.streaming.checkpointLocation", None), default_fs
+    ):
+        confs[_MANAGER_KEY] = FS_CHECKPOINT_MANAGER
+    return confs
+
+
+#: Serializes the save / set / start / restore of the drain confs in
+#: :func:`run_available_now_many` across threads sharing one session, so
+#: overlapping drains never restore each other's values.
 _WIDTH_LOCK = threading.Lock()
 
 
@@ -269,30 +320,47 @@ def run_available_now_many(
     source ever grows multiple files, pin maxFilesPerTrigger above the
     file count or use a watermark delay exceeding the event-time span.
 
-    ``shuffle_width`` (round 14): the shuffle/state-store partition
-    count for the queries STARTED here — streaming reads
-    ``spark.sql.shuffle.partitions`` at query start (AQE is disabled, so
-    there is no later coalescing) and pins it into the checkpoint. So
-    the session value is restored as soon as the last query has started,
-    before any drain is awaited, and the save-set-start-restore sequence
-    holds a module-level lock: drains overlapping on other threads of the
-    same session each see and restore the caller's width, never another
-    drain's. Callers derive the width from their source size via
-    :func:`stream_shuffle_width`. ``None`` leaves the session width
-    untouched.
+    Drain confs: a started query clones the session conf, so the queries
+    are started under :func:`_drain_confs` and the session's own values
+    are restored (or unset again) as soon as the last query has started,
+    before any drain is awaited. The save-set-start-restore sequence
+    holds a module-level lock: drains overlapping on other threads of
+    the same session each see and restore the caller's values, never
+    another drain's. The confs are
+
+    - ``spark.sql.shuffle.partitions`` = ``shuffle_width`` (round 14):
+      streaming reads it at query start (AQE is disabled, so there is no
+      later coalescing) and pins it into the checkpoint as the state
+      partition count. Callers derive it from their source size via
+      :func:`stream_shuffle_width`; ``None`` leaves the session width
+      untouched.
+    - ``spark.sql.streaming.checkpointFileManagerClass`` =
+      :data:`FS_CHECKPOINT_MANAGER` when the checkpoint root is provably
+      local (:func:`checkpoint_root_is_local`) and the session sets no
+      manager; any other root keeps Spark's default manager.
+
+    Each result is resolved from its memory sink's temp view, which is
+    then dropped: the returned frame holds the sink's rows, and the
+    session catalog keeps no ``stream_*`` view after the call. Where no
+    JVM handle exists (Spark Connect) a frame resolves the view by name
+    at every execution, so the view is kept.
 
     If any drain fails or times out, every still-active query is stopped
-    before the error propagates — no leaked streaming queries or
-    memory-sink state."""
+    and every sink view dropped before the error propagates — no leaked
+    streaming queries or memory-sink state."""
+    if not dfs_modes:
+        return []
     started = []
-    spark = dfs_modes[0][0].sparkSession if dfs_modes else None
-    set_width = shuffle_width is not None and spark is not None
+    spark = dfs_modes[0][0].sparkSession
+    # a classic frame holds its analyzed plan; a Connect frame does not
+    drop_views = getattr(spark, "_jsparkSession", None) is not None
     try:
         with _WIDTH_LOCK:
-            if set_width:
-                prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-                spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width))
+            confs = _drain_confs(spark, shuffle_width)
+            saved = {key: spark.conf.get(key, None) for key in confs}
             try:
+                for key, value in confs.items():
+                    spark.conf.set(key, value)
                 for df, mode in dfs_modes:
                     name = f"stream_{uuid.uuid4().hex[:12]}"
                     q = (
@@ -302,23 +370,30 @@ def run_available_now_many(
                         .trigger(availableNow=True)
                         .start()
                     )
-                    started.append((df, name, q))
+                    started.append((df.sparkSession, name, q))
             finally:
-                if set_width:
-                    spark.conf.set("spark.sql.shuffle.partitions", prev_width)
+                for key, value in saved.items():
+                    if value is None:
+                        spark.conf.unset(key)
+                    else:
+                        spark.conf.set(key, value)
         out = []
-        for df, name, q in started:
+        for session, name, q in started:
             if not q.awaitTermination(timeout_s):
                 raise TimeoutError(f"streaming drain {name} still running after {timeout_s}s")
             if q.exception() is not None:
                 raise q.exception()
-            out.append(df.sparkSession.table(name))
+            out.append(session.table(name))
+            if drop_views:
+                session.catalog.dropTempView(name)
         return out
     except BaseException:
-        for _, _, q in started:
+        for session, name, q in started:
             try:
                 if q.isActive:
                     q.stop()
+                if drop_views:
+                    session.catalog.dropTempView(name)
             except Exception:
                 pass
         raise

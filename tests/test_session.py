@@ -55,6 +55,26 @@ def test_apply_engine_conf_sets_runtime_keys_and_reports_static_ones(spark, monk
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+def test_apply_engine_conf_asks_for_static_keys_once(spark, monkeypatch):
+    """Which keys are static is asked of Spark once per process: a second
+    call makes no ``isModifiable`` round trip and reports the same keys."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import apply_engine_conf
+
+    first = apply_engine_conf(spark)
+    calls = []
+    real = RuntimeConfig.isModifiable
+
+    def counted(self, key):
+        calls.append(key)
+        return real(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "isModifiable", counted)
+    assert apply_engine_conf(spark) == first
+    assert calls == []
+
+
 def test_warm_interactive_pass_compiles_nothing(spark, monkeypatch):
     """The second pass over perfbench's nine interactive queries compiles
     no class: the codegen cache holds the whole working set (Spark's

@@ -369,20 +369,19 @@ def test_streaming_mjpeg_video_ingest(spark, tmp_path):
 
 def test_stream_shuffle_width_input_sized(tmp_path):
     """The round-14 input-sized streaming width (VERDICT r13 item 3):
-    ceil(source bytes / 64 MB) floored at 2, and None (leave the session
+    ceil(source bytes / 64 MB), at least 1, and None (leave the session
     width alone) when a source cannot be sized — the measured 3-decade
     optimum (sf0.1/sf1/sf10 A/B in tools/r14_stream_width_ab.py at
     e49ef4e: width 2/2/4 vs 2-2.3x slower at the
-    pinned 32)."""
+    pinned 32). A source far under 64 MB drains at one state partition."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
-        STREAM_WIDTH_FLOOR,
         STREAM_WIDTH_TARGET_BYTES,
         stream_shuffle_width,
     )
 
     small = tmp_path / "events.parquet"
     small.write_bytes(b"x" * 1024)
-    assert stream_shuffle_width(str(tmp_path), "events") == STREAM_WIDTH_FLOOR
+    assert stream_shuffle_width(str(tmp_path), "events") == 1
 
     # sparse file: logical size drives the width, multiple tables sum
     big = tmp_path / "documents.parquet"
@@ -398,7 +397,7 @@ def test_stream_shuffle_width_input_sized(tmp_path):
 def test_stream_shuffle_width_sums_parquet_directory(tmp_path, monkeypatch):
     """A parquet *directory* source is sized by the data files inside it,
     not by its directory entry: with the target
-    patched below the total, the width rises above the floor, and the
+    patched below the total, the width rises above 1, and the
     hidden ``_SUCCESS``/``.crc`` files Spark leaves behind do not count."""
     import math
 
@@ -424,7 +423,7 @@ def test_stream_shuffle_width_sums_parquet_directory(tmp_path, monkeypatch):
     target = 16 * 1024
     monkeypatch.setattr(windows, "STREAM_WIDTH_TARGET_BYTES", target)
     expected = math.ceil(data_bytes / target)
-    assert expected > windows.STREAM_WIDTH_FLOOR
+    assert expected > 1
     assert windows.stream_shuffle_width(str(tmp_path), "events") == expected
 
 
@@ -455,6 +454,106 @@ def test_run_available_now_many_sets_and_restores_width(spark, tmp_path):
     with pytest.raises(Exception):
         run_available_now_many([(bad, "complete")], timeout_s=60, shuffle_width=5)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_checkpoint_root_is_local():
+    """The FileSystem checkpoint manager is chosen only for a provably
+    local root: unset or scheme-less on a ``file:`` default file system,
+    or an explicit ``file:`` location. A scheme-less (or unset) root on an
+    HDFS default file system, an ``hdfs://`` or ``s3a://`` root, and an
+    unknown default file system keep Spark's default manager."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
+        checkpoint_root_is_local,
+    )
+
+    local_fs, hdfs = "file:///", "hdfs://namenode:8020"
+    assert checkpoint_root_is_local(None, local_fs)
+    assert checkpoint_root_is_local("file:/tmp/ckpt", hdfs)
+    assert checkpoint_root_is_local("/tmp/ckpt", local_fs)
+    assert not checkpoint_root_is_local("/tmp/ckpt", hdfs)
+    assert not checkpoint_root_is_local(None, hdfs)
+    assert not checkpoint_root_is_local("hdfs://namenode:8020/ckpt", local_fs)
+    assert not checkpoint_root_is_local("s3a://bucket/ckpt", local_fs)
+    assert not checkpoint_root_is_local("/tmp/ckpt", None)
+
+
+def _grouped_stream(spark, tmp_path):
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(i, i % 3) for i in range(30)], "id long, k long").write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    return stream.groupBy("k").count()
+
+
+def test_drain_starts_on_the_filesystem_manager_and_restores_the_session(spark, tmp_path, monkeypatch):
+    """On the fixture session (no checkpoint location, ``file:`` default
+    file system) the drain's queries start under the FileSystem
+    checkpoint manager and the given width, and the session is left with
+    both keys as they were; a manager the session names itself is kept."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
+        FS_CHECKPOINT_MANAGER,
+        run_available_now_many,
+    )
+
+    manager_key = "spark.sql.streaming.checkpointFileManagerClass"
+    width_key = "spark.sql.shuffle.partitions"
+    seen = []
+    real_start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        seen.append((spark.conf.get(manager_key, None), spark.conf.get(width_key)))
+        return real_start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    agg = _grouped_stream(spark, tmp_path)
+
+    before = {key: spark.conf.get(key, None) for key in (manager_key, width_key)}
+    assert before[manager_key] is None
+    (out,) = run_available_now_many([(agg, "complete")], shuffle_width=2)
+    assert seen == [(FS_CHECKPOINT_MANAGER, "2")]
+    assert {key: spark.conf.get(key, None) for key in before} == before
+    assert {tuple(r) for r in out.collect()} == {(0, 10), (1, 10), (2, 10)}
+
+    # the session's own manager choice wins and is left in place
+    default_manager = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    spark.conf.set(manager_key, default_manager)
+    try:
+        run_available_now_many([(agg, "complete")])
+        assert seen[-1] == (default_manager, before[width_key])
+        assert spark.conf.get(manager_key) == default_manager
+    finally:
+        spark.conf.unset(manager_key)
+
+
+def test_drain_drops_its_memory_sink_view(spark, tmp_path):
+    """A drain leaves no ``stream_*`` temp view (and with it the sink's
+    rows) in the session catalog, and the frame it returned still
+    collects the drained rows afterwards."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
+        run_available_now_many,
+    )
+
+    agg = _grouped_stream(spark, tmp_path)
+    (out,) = run_available_now_many([(agg, "complete")])
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_")]
+    want = {(0, 10), (1, 10), (2, 10)}
+    assert {tuple(r) for r in out.collect()} == want
+    assert {tuple(r) for r in out.where(F.col("k") >= 0).collect()} == want
+
+
+def test_events_stream_stages_under_the_scratch_root(spark, tmp_path, monkeypatch):
+    """``events_stream`` stages its single-file copy under
+    ``$SPARK_GRAFT_SCRATCH/streams``, not under the repository."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import events_stream
+
+    from .conftest import SF_SMOKE
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    events_stream(spark, SF_SMOKE)
+    (staged,) = os.listdir(tmp_path / "streams")
+    assert staged.startswith("events-")
+    assert os.listdir(tmp_path / "streams" / staged) == ["events.parquet"]
 
 
 def test_overlapping_drains_restore_the_session_width(spark, tmp_path, monkeypatch):
