@@ -175,9 +175,12 @@ def tie_cache_lifetime(result: DataFrame, *frames: DataFrame) -> DataFrame:
 
 
 def materialize(df: DataFrame, prefer_local: bool = False) -> DataFrame:
-    """Truncate lineage for an iterative operator's per-round frame:
-    reliable ``checkpoint()`` when the session has a checkpoint directory
-    configured, executor-local ``localCheckpoint()`` otherwise.
+    """Materialize ``df`` now and truncate its lineage: reliable
+    ``checkpoint()`` when the session has a checkpoint directory
+    configured, executor-local ``localCheckpoint()`` otherwise. Callers:
+    an iterative operator's per-round frame (``dedup.connected_components``)
+    and a frame read by several consumers (``wordcount.word_count``, whose
+    aggregate feeds both top-K and the per-initial layout).
 
     The distinction is fault-tolerance posture, not semantics (both
     materialize and cut lineage). ``localCheckpoint`` stores blocks in

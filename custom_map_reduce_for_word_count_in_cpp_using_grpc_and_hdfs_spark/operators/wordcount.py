@@ -4,11 +4,21 @@ The reference's one query is: tokenize an HDFS text file on ``' '`` and
 ``'\n'`` (slave.cc:101-116), count words with a letter-range partitioned
 reduce (slave.cc:149-210, master.cc:311-325), emit per-initial sorted
 files (slave.cc:212-228), and print an interactive top-K
-(master.cc:395-453). Everything here is declarative DataFrame code so
-Catalyst plans it as FileScan → Generate → partial HashAggregate →
-Exchange(hash word) → final HashAggregate → TakeOrderedAndProject — i.e.
-map-side combine and heap-based top-K that the reference lacks (its
-shuffle is O(M×R) full file re-reads with no combiner, slave.cc:176-210).
+(master.cc:395-453). Everything here is declarative DataFrame code, so
+Catalyst plans the count as FileScan → Generate → partial HashAggregate →
+Exchange(hash word) → final HashAggregate: map-side combine that the
+reference lacks (its shuffle is O(M×R) full file re-reads with no
+combiner, slave.cc:176-210). Top-K is TakeOrderedAndProject, per-partition
+bounded heaps merged on the driver.
+
+The reference counts the corpus once and reads top-K back from its
+reducers' outputs (master.cc:406-437). :func:`word_count` does the same:
+it materializes the aggregate once, so top-K and the layout both read
+its rows instead of each rescanning and re-tokenizing the input. A
+composition with one consumer (:func:`word_count_top_k`,
+:func:`word_count_layout`) keeps the aggregate lazy inside its own plan,
+which needs no job to build and no blocks to hold.
+
 The per-initial layout adds one hash exchange on the initial at the
 session's shuffle width, so parallel tasks write one file per initial;
 sorting each task by (initial, word) meets the partitioned writer's
@@ -26,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import materialize
 
 #: The reference's exact token delimiter set: space and newline ONLY
 #: (slave.cc:103). No lowercasing, no punctuation stripping.
@@ -57,24 +69,39 @@ def key_range_filter(df: DataFrame, word_col: str = "word", low: str = "a", high
     return df.where((initial >= low) & (initial <= high))
 
 
+def _aggregate(df: DataFrame, text_col: str, *, reference_parity: bool = False) -> DataFrame:
+    """O3+O5+O6 as one lazy plan: tokenize then GROUP BY word COUNT(*).
+
+    Catalyst gives partial (map-side) aggregation before the hash shuffle
+    — at 100 TB the shuffle carries one row per distinct word per input
+    partition, not one row per token occurrence like the reference's
+    materialized map files (slave.cc:105-106)."""
+    words = tokenize(df, text_col)
+    if reference_parity:
+        words = key_range_filter(words)
+    return words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+
+
 def word_count(
     df: DataFrame,
     text_col: str = "text",
     *,
     reference_parity: bool = False,
 ) -> DataFrame:
-    """O3+O5+O6: tokenize then GROUP BY word COUNT(*).
+    """O3+O5+O6, materialized once: DataFrame[word: string, cnt: bigint].
 
-    Returns DataFrame[word: string, cnt: bigint]. Catalyst gives partial
-    (map-side) aggregation before the hash shuffle — at 100 TB the shuffle
-    carries one row per distinct word per input partition, not one row per
-    token occurrence like the reference's materialized map files
-    (slave.cc:105-106).
-    """
-    words = tokenize(df, text_col)
-    if reference_parity:
-        words = key_range_filter(words)
-    return words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+    The aggregate is computed once, before this returns
+    (:func:`~custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching.materialize`),
+    so every consumer of the returned frame — top-K, the layout, a count —
+    reads the same rows and the input is scanned once, as in the
+    reference (master.cc:406-437). Without a checkpoint directory the rows
+    are an executor-local ``localCheckpoint``; with
+    ``sparkContext.setCheckpointDir`` set they are a reliable
+    ``checkpoint()`` that survives executor loss. The blocks live as long
+    as the returned frame: Spark's ContextCleaner drops them once the frame
+    and every frame derived from it are garbage collected. It is not a
+    result cache: each call recounts its input."""
+    return materialize(_aggregate(df, text_col, reference_parity=reference_parity))
 
 
 def top_k(counts: DataFrame, k: int, count_col: str = "cnt", key_col: str = "word") -> DataFrame:
@@ -89,8 +116,14 @@ def top_k(counts: DataFrame, k: int, count_col: str = "cnt", key_col: str = "wor
 
 
 def word_count_top_k(df: DataFrame, k: int = 100, text_col: str = "text", **kw) -> DataFrame:
-    """The reference's full query: word-count then top-K."""
-    return top_k(word_count(df, text_col, **kw), k)
+    """The reference's full query: word-count then top-K, one lazy plan."""
+    return top_k(_aggregate(df, text_col, **kw), k)
+
+
+def word_count_layout(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Word-count laid out per initial (:func:`partitioned_sorted_counts`),
+    one lazy plan."""
+    return partitioned_sorted_counts(_aggregate(df, text_col))
 
 
 def with_initial(df: DataFrame, word_col: str = "word", out_col: str = "initial") -> Column | DataFrame:

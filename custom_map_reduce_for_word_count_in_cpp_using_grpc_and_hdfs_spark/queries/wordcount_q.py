@@ -97,4 +97,4 @@ def wc_partitioned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-insensitive, so the oracle checks content; sortedness is
     asserted in tests."""
     docs = load_table(spark, sf_dir, "documents")
-    return wc.partitioned_sorted_counts(wc.word_count(docs)).select("initial", "word", "cnt")
+    return wc.word_count_layout(docs).select("initial", "word", "cnt")

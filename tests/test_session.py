@@ -8,29 +8,16 @@ import json
 import os
 import subprocess
 import sys
-import uuid
 
 import pytest
 
-from .conftest import SF_CORRECT
+from .conftest import SF_CORRECT, jobs_launched
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: The static keys the engine touches; both are static in Spark 4.1.
 CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
 CALL_SITES = "spark.python.sql.dataFrameDebugging.enabled"
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs launched while ``fn()`` runs on this thread."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "counted")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_apply_engine_conf_sets_runtime_keys_and_reports_static_ones(spark, monkeypatch):
@@ -106,9 +93,9 @@ def test_second_load_table_launches_no_job(spark, tmp_path):
 
     shutil.copy(os.path.join(SF_CORRECT, "orders.parquet"), tmp_path / "orders.parquet")
     first = []
-    assert _jobs(spark, lambda: first.append(load_table(spark, str(tmp_path), "orders"))) >= 1
+    assert jobs_launched(spark, lambda: first.append(load_table(spark, str(tmp_path), "orders"))) >= 1
     again = []
-    assert _jobs(spark, lambda: again.append(load_table(spark, str(tmp_path), "orders"))) == 0
+    assert jobs_launched(spark, lambda: again.append(load_table(spark, str(tmp_path), "orders"))) == 0
     assert again[0].schema == first[0].schema
     assert sorted(again[0].collect()) == sorted(first[0].collect())
 
@@ -126,7 +113,7 @@ def test_rewritten_file_is_inferred_again(spark, tmp_path):
     assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
     pq.write_table(pa.table({"r_regionkey": pa.array([3], pa.int64()), "r_name": ["ASIA"]}), path)
     reread = []
-    assert _jobs(spark, lambda: reread.append(load_table(spark, str(tmp_path), "region"))) >= 1
+    assert jobs_launched(spark, lambda: reread.append(load_table(spark, str(tmp_path), "region"))) >= 1
     assert [tuple(r) for r in reread[0].collect()] == [(3, "ASIA")]
 
 
@@ -158,7 +145,7 @@ def test_parquet_directory_is_always_inferred(spark, tmp_path):
     )
     for _ in range(2):
         got = []
-        assert _jobs(spark, lambda: got.append(load_table(spark, str(tmp_path), "nation"))) >= 1
+        assert jobs_launched(spark, lambda: got.append(load_table(spark, str(tmp_path), "nation"))) >= 1
         assert got[0].count() == 25
     assert not any(key[1].startswith(str(tmp_path)) for key in registry._SCHEMAS)
 
