@@ -7,5 +7,5 @@
 - ``similarity`` — vector similarity search over embeddings.
 - ``text``       — language-ID, quality scoring, token counting,
   fingerprinting.
-- ``multimodal`` — binary-column plumbing with stubbed decoders.
+- ``multimodal`` — binary media columns with native image/audio/video codecs.
 """

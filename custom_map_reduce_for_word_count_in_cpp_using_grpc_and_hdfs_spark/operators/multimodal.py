@@ -4,14 +4,12 @@ with decode/feature-extraction as Arrow-batched ``mapInPandas`` stages.
 The Spark-side design: binary columns travel as ``BinaryType`` with a
 metadata struct alongside; decoding happens in ``mapInPandas`` so each
 Arrow batch is processed vectorized in Python and oversized rows never
-materialize on the driver. ``decode_image_real`` dispatches on magic
-bytes: PPM (P6) and uncompressed 24-bit BMP are decoded FOR REAL by the
-pure-numpy codecs below (header grammar, raster layout, BMP's bottom-up
-BGR padded rows); compressed formats (JPEG/PNG/video) raise
-NotImplementedError because their codec libraries are not shipped here —
-PIL/libvips/ffmpeg slot in at that seam with zero Spark-side changes.
-``fake_decode_meta`` keeps a fully-arithmetic variant whose every output
-is oracle-checkable in ANSI SQL.
+materialize on the driver. The codecs below are native numpy/stdlib:
+images (PPM, BMP, PNG, Huffman JPEG), audio (WAV PCM/float/G.711/ADPCM,
+FLAC), video (Y4M, MJPEG and raw-RGB AVI). Only arithmetic-coded JPEG,
+inter-frame video and perceptual audio raise NotImplementedError, the
+seam where PIL/libvips/ffmpeg slot in. ``fake_decode_meta`` keeps a
+fully-arithmetic variant whose every output is oracle-checkable in SQL.
 
 At 100 TB: payloads should be read through ``spark.read.format
 ("binaryFile")`` or parquet binary columns with
@@ -65,8 +63,7 @@ def decode_image_real(payload_bytes: bytes) -> dict:
         w, h, maxval, px = decode_jpeg(payload_bytes)
     else:
         raise NotImplementedError(
-            "INTER-frame video codecs (H.264/VP9) need ffmpeg "
-            "(decode_video_ffmpeg is the shipped adapter); raw Y4M and "
+            "INTER-frame video codecs (H.264/VP9) need ffmpeg; raw Y4M and "
             "MJPEG-in-AVI containers decode natively via "
             "decode_y4m/video_frame_stats and "
             "decode_avi_mjpeg/mjpeg_frame_check; PPM, BMP, zlib-PNG and "
@@ -74,23 +71,6 @@ def decode_image_real(payload_bytes: bytes) -> dict:
             "decode natively here"
         )
     return {"width": w, "height": h, "maxval": maxval, "pixels": px}
-
-
-def decode_image_pillow(payload_bytes: bytes) -> dict:
-    """Pillow reference decoder with :func:`decode_image_real`'s
-    ``{width, height, maxval, pixels}`` contract (any Pillow-readable
-    format, normalized to RGB). No stage calls it: the skip-clean test
-    in tests/test_multimodal.py cross-checks the native codecs against
-    it wherever Pillow is installed. Imports lazily, so the engine has
-    no Pillow dependency."""
-    import io
-
-    from PIL import Image  # ImportError here = Pillow not installed
-
-    with Image.open(io.BytesIO(payload_bytes)) as im:
-        rgb = im.convert("RGB")
-        px = np.asarray(rgb, dtype=np.uint8)
-        return {"width": rgb.width, "height": rgb.height, "maxval": 255, "pixels": px}
 
 
 # --------------------------------------------------------------------------
@@ -131,22 +111,30 @@ def decode_ppm(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     return w, h, maxval, raster.reshape(h, w, 3)
 
 
-def encode_bmp(width: int, height: int, pixels: np.ndarray) -> bytes:
-    """Uncompressed 24-bit BMP (BITMAPINFOHEADER): rows bottom-up, BGR
-    channel order, each row padded to a 4-byte boundary — the three
-    layout quirks that make BMP a real parsing exercise."""
+def _dib_rows(rgb: np.ndarray, top_down: bool = False) -> bytes:
+    """24-bit DIB raster of an (h, w, 3) RGB image, as BMP and raw AVI store
+    it: BGR, rows padded to 4 bytes, bottom-up unless ``top_down``."""
+    h, w, _ = rgb.shape
+    raster = np.zeros((h, (w * 3 + 3) & ~3), dtype=np.uint8)
+    raster[:, : w * 3] = (rgb if top_down else rgb[::-1])[:, :, ::-1].reshape(h, w * 3)
+    return raster.tobytes()
+
+
+def _dib_rgb(raster: bytes, width: int, height: int, top_down: bool = False) -> np.ndarray:
+    """Inverse of :func:`_dib_rows`: a raster of exactly ``height`` padded
+    rows back to (height, width, 3) RGB u8."""
     row_bytes = (width * 3 + 3) & ~3
-    raster = np.zeros((height, row_bytes), dtype=np.uint8)
-    raster[:, : width * 3] = pixels[::-1, :, ::-1].reshape(height, width * 3)
-    data = raster.tobytes()
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(data), 2835, 2835, 0, 0)
-    return header + info + data
+    if len(raster) != height * row_bytes:
+        raise ValueError(f"DIB raster is {len(raster)} bytes, geometry needs {height * row_bytes}")
+    img = np.frombuffer(raster, np.uint8).reshape(height, row_bytes)[:, : width * 3]
+    img = img.reshape(height, width, 3)
+    return (img if top_down else img[::-1])[:, :, ::-1]
 
 
 def decode_bmp(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     """Parse uncompressed 24-bit BMP back to (w, h, 255, (h,w,3) RGB u8),
-    undoing bottom-up row order, BGR, and row padding."""
+    undoing bottom-up row order (top-down when biHeight is negative),
+    BGR, and row padding."""
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     data_offset = struct.unpack_from("<I", payload, 10)[0]
@@ -155,10 +143,9 @@ def decode_bmp(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     compression = struct.unpack_from("<I", payload, 30)[0]
     if bpp != 24 or compression != 0:
         raise NotImplementedError(f"only uncompressed 24-bit BMP (got bpp={bpp})")
-    row_bytes = (width * 3 + 3) & ~3
-    raster = np.frombuffer(payload, dtype=np.uint8, count=height * row_bytes, offset=data_offset)
-    rows = raster.reshape(height, row_bytes)[:, : width * 3]
-    return width, height, 255, rows.reshape(height, width, 3)[::-1, :, ::-1]
+    top_down, height = height < 0, abs(height)
+    raster = payload[data_offset : data_offset + height * ((width * 3 + 3) & ~3)]
+    return width, height, 255, _dib_rgb(raster, width, height, top_down)
 
 
 # --------------------------------------------------------------------------
@@ -400,37 +387,46 @@ def _canonical_codes(bits: list[int], symbols: list[int]) -> dict[int, tuple[int
 
 
 class _BitWriter:
-    def __init__(self) -> None:
+    """MSB-first bit writer for FLAC frames and JPEG entropy segments. The
+    accumulator holds only the bits not yet emitted, so writing stays
+    linear. ``stuff=True`` (JPEG) stuffs a 0x00 after every 0xFF byte
+    and pads with 1-bits (T.81 F.1.2.3) instead of 0-bits."""
+
+    __slots__ = ("buf", "acc", "nb", "stuff")
+
+    def __init__(self, stuff: bool = False):
         self.buf = bytearray()
         self.acc = 0
-        self.n = 0
+        self.nb = 0
+        self.stuff = stuff
 
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            byte = (self.acc >> (self.n - 8)) & 0xFF
-            self.n -= 8
+    def write(self, v: int, n: int) -> None:
+        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
+        self.nb += n
+        while self.nb >= 8:
+            self.nb -= 8
+            byte = (self.acc >> self.nb) & 0xFF
             self.buf.append(byte)
-            if byte == 0xFF:  # byte stuffing
+            if byte == 0xFF and self.stuff:
                 self.buf.append(0x00)
+        self.acc &= (1 << self.nb) - 1
 
-    def pad(self) -> None:
-        """Byte-align with 1-bits (T.81 F.1.2.3); a pad byte that lands
-        on 0xFF gets stuffed like any data byte."""
-        if self.n:
-            k = 8 - self.n
-            self.write((1 << k) - 1, k)
+    def align(self) -> None:
+        """Pad to a byte boundary; a JPEG pad byte that lands on 0xFF is
+        stuffed like any data byte."""
+        if self.nb:
+            k = 8 - self.nb
+            self.write((1 << k) - 1 if self.stuff else 0, k)
 
     def raw(self, b: bytes) -> None:
         """Append marker bytes verbatim (markers are never stuffed);
         caller must have byte-aligned first."""
-        if self.n:
+        if self.nb:
             raise ValueError("raw marker bytes require byte alignment")
         self.buf += b
 
-    def flush(self) -> bytes:
-        self.pad()
+    def getvalue(self) -> bytes:
+        self.align()
         return bytes(self.buf)
 
 
@@ -483,22 +479,11 @@ def _comp_coef_arrays(
     return arrays, hv, mw, mh
 
 
-def _write_block_baseline(
-    w: "_BitWriter", zz: np.ndarray, prev_dc: int, dc_codes: dict, ac_codes: dict
-) -> int:
-    """Entropy-code ONE block's zigzag coefficients in baseline mode
-    (DC diff + AC run/size with EOB/ZRL); returns the DC predictor."""
-    diff = int(zz[0]) - prev_dc
-    t, lo = _magnitude(diff)
-    code, length = dc_codes[t]
-    w.write(code, length)
-    if t:
-        w.write(lo, t)
+def _write_ac_runs(w: "_BitWriter", vals, ac_codes: dict) -> None:
+    """Huffman-code AC values through the last one given: (run, size)
+    symbol + magnitude bits per nonzero value, ZRL per 16 zeros."""
     run = 0
-    nz = np.nonzero(zz[1:])[0]
-    last = nz[-1] + 1 if len(nz) else 0
-    for i in range(1, last + 1):
-        v = int(zz[i])
+    for v in vals:
         if v == 0:
             run += 1
             continue
@@ -511,6 +496,22 @@ def _write_block_baseline(
         w.write(code, length)
         w.write(lo, t)
         run = 0
+
+
+def _write_block_baseline(
+    w: "_BitWriter", zz: np.ndarray, prev_dc: int, dc_codes: dict, ac_codes: dict
+) -> int:
+    """Entropy-code ONE block's zigzag coefficients in baseline mode
+    (DC diff + AC run/size with EOB/ZRL); returns the DC predictor."""
+    diff = int(zz[0]) - prev_dc
+    t, lo = _magnitude(diff)
+    code, length = dc_codes[t]
+    w.write(code, length)
+    if t:
+        w.write(lo, t)
+    nz = np.nonzero(zz[1:])[0]
+    last = nz[-1] + 1 if len(nz) else 0
+    _write_ac_runs(w, [int(v) for v in zz[1 : last + 1]], ac_codes)
     if last < 63:
         code, length = ac_codes[0x00]  # EOB
         w.write(code, length)
@@ -533,7 +534,7 @@ def _maybe_restart(w: "_BitWriter", unit: int, restart: int, prev: list | None =
     """Encoder-side restart boundary: at every ``restart`` units emit a
     byte-aligned RSTn (n cycling 0..7) and reset the DC predictors."""
     if restart and unit and unit % restart == 0:
-        w.pad()
+        w.align()
         w.raw(bytes([0xFF, 0xD0 + ((unit // restart - 1) % 8)]))
         if prev is not None:
             prev[:] = [0] * len(prev)
@@ -547,7 +548,7 @@ def _comp_block_dims(width: int, height: int, hi: int, vi: int, hmax: int, vmax:
 
 
 def _scan_dc_first(arrays, hv, mw, mh, al: int, dc_codes: dict, restart: int = 0) -> bytes:
-    w = _BitWriter()
+    w = _BitWriter(stuff=True)
     prev = [0, 0, 0]
     seen = -1
     for mcu, c, by, bx in _mcu_block_order(hv, mw, mh):
@@ -561,18 +562,18 @@ def _scan_dc_first(arrays, hv, mw, mh, al: int, dc_codes: dict, restart: int = 0
         w.write(code, length)
         if t:
             w.write(lo, t)
-    return w.flush()
+    return w.getvalue()
 
 
 def _scan_dc_refine(arrays, hv, mw, mh, al: int, restart: int = 0) -> bytes:
-    w = _BitWriter()
+    w = _BitWriter(stuff=True)
     seen = -1
     for mcu, c, by, bx in _mcu_block_order(hv, mw, mh):
         if mcu != seen:
             _maybe_restart(w, mcu, restart)
             seen = mcu
         w.write((int(arrays[c][by, bx, 0]) >> al) & 1, 1)
-    return w.flush()
+    return w.getvalue()
 
 
 def _flush_eobrun(w: "_BitWriter", eobrun: int, ac_codes: dict, bits: list | None = None) -> int:
@@ -597,7 +598,7 @@ def _scan_ac_first(
     """Spectral-selection first pass (Ah=0) over one component's band:
     point-transformed coefficients with EOB-run coding across blocks.
     EOB runs never cross a restart boundary (flushed before each RSTn)."""
-    w = _BitWriter()
+    w = _BitWriter(stuff=True)
     eobrun = 0
     for unit, (by, bx) in enumerate((b, x) for b in range(cbh) for x in range(cbw)):
         if restart and unit and unit % restart == 0:
@@ -615,25 +616,11 @@ def _scan_ac_first(
                 eobrun = _flush_eobrun(w, eobrun, ac_codes)
             continue
         eobrun = _flush_eobrun(w, eobrun, ac_codes)
-        run = 0
-        for i in range(nz[-1] + 1):
-            v = vals[i]
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, length = ac_codes[0xF0]
-                w.write(code, length)
-                run -= 16
-            t, lo = _magnitude(v)
-            code, length = ac_codes[(run << 4) | t]
-            w.write(code, length)
-            w.write(lo, t)
-            run = 0
+        _write_ac_runs(w, vals[: nz[-1] + 1], ac_codes)
         if nz[-1] < len(vals) - 1:
             eobrun += 1  # trailing zeros fold into the EOB run
     _flush_eobrun(w, eobrun, ac_codes)
-    return w.flush()
+    return w.getvalue()
 
 
 def _scan_ac_refine(
@@ -644,7 +631,7 @@ def _scan_ac_refine(
     previously nonzero coefficient, correction bits buffered across
     EOB runs — the T.81 G.1.2.3 protocol as implemented by libjpeg.
     EOB runs (and their buffered bits) flush before each RSTn."""
-    w = _BitWriter()
+    w = _BitWriter(stuff=True)
     eobrun = 0
     eob_bits: list[int] = []
     for unit, (by, bx) in enumerate((b, x) for b in range(cbh) for x in range(cbw)):
@@ -690,7 +677,7 @@ def _scan_ac_refine(
             eobrun += 1
             eob_bits += pend
     _flush_eobrun(w, eobrun, ac_codes, eob_bits)
-    return w.flush()
+    return w.getvalue()
 
 
 def _jpeg_seg(marker: int, payload: bytes) -> bytes:
@@ -793,7 +780,7 @@ def encode_jpeg(
                 arrays[c], cbh, cbw, 1, 63, 0, codes, ri
             )
     else:
-        w = _BitWriter()
+        w = _BitWriter(stuff=True)
         prev_dc = [0, 0, 0]
         seen = -1
         for mcu, c, by, bx in _mcu_block_order(hv, mw, mh):
@@ -801,7 +788,7 @@ def encode_jpeg(
                 _maybe_restart(w, mcu, ri, prev_dc)
                 seen = mcu
             prev_dc[c] = _write_block_baseline(w, arrays[c][by, bx], prev_dc[c], dc_codes, ac_codes)
-        body = _sos_header([0, 1, 2], 0, 63, 0, 0) + w.flush()
+        body = _sos_header([0, 1, 2], 0, 63, 0, 0) + w.getvalue()
 
     qt = bytes([1] * 64)
     dqt = _jpeg_seg(0xFFDB, bytes([0x00]) + qt) + _jpeg_seg(0xFFDB, bytes([0x01]) + qt)
@@ -1747,52 +1734,76 @@ def decode_y4m(payload: bytes) -> tuple[int, int, np.ndarray]:
 # --------------------------------------------------------------------------
 
 
+def _chunk(cid: bytes, body: bytes) -> bytes:
+    """One RIFF chunk (a LIST is ``_chunk(b"LIST", kind + chunks)``):
+    fourcc, little-endian size, body, pad byte after an odd body."""
+    return cid + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) & 1)
+
+
+def _riff(form: bytes, *chunks: bytes) -> bytes:
+    """A RIFF file of form type ``form`` (``WAVE``, ``AVI ``)."""
+    return _chunk(b"RIFF", form + b"".join(chunks))
+
+
+def _riff_chunks(payload: bytes, pos: int, end: int):
+    """Yield (fourcc, body_start, size) walking a RIFF chunk sequence;
+    chunks are word-aligned (odd sizes carry a pad byte). Every RIFF
+    reader here (WAV and AVI) walks with it."""
+    while pos + 8 <= end:
+        cid = payload[pos : pos + 4]
+        (size,) = struct.unpack_from("<I", payload, pos + 4)
+        if pos + 8 + size > end:
+            raise ValueError(f"truncated {cid!r} chunk at byte {pos}")
+        yield cid, pos + 8, size
+        pos += 8 + size + (size & 1)
+
+
+def _int16_frames(samples: np.ndarray) -> tuple[int, int]:
+    """(n_samples, n_channels) of an audio encoder's int16 input."""
+    if samples.ndim != 2 or samples.dtype != np.int16:
+        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
+    return samples.shape
+
+
+def _wav(
+    tag: int, ch: int, rate: int, block_align: int, bits: int, data: bytes,
+    ext: bytes = b"", fact_n: int | None = None, avg: int | None = None,
+) -> bytes:
+    """RIFF/WAVE: a WAVEFORMATEX fmt chunk (16-byte head + ``ext``), a fact
+    chunk when ``fact_n`` is given, the data chunk. ``avg`` (bytes/s)
+    defaults to ``rate * block_align``."""
+    avg = rate * block_align if avg is None else avg
+    fmt = struct.pack("<HHIIHH", tag, ch, rate, avg, block_align, bits) + ext
+    fact = b"" if fact_n is None else _chunk(b"fact", struct.pack("<I", fact_n))
+    return _riff(b"WAVE", _chunk(b"fmt ", fmt), fact, _chunk(b"data", data))
+
+
 def encode_wav(sample_rate: int, samples: np.ndarray) -> bytes:
     """Canonical RIFF/WAVE writer: 16-byte PCM fmt chunk + data chunk.
     ``samples``: int16 of shape (n_samples, n_channels), interleaved on
     disk per the WAV layout."""
-    if samples.ndim != 2 or samples.dtype != np.int16:
-        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
-    n, ch = samples.shape
-    data = samples.astype("<i2").tobytes()  # interleaved frames, s16le
-    fmt = struct.pack("<HHIIHH", 1, ch, sample_rate, sample_rate * ch * 2, ch * 2, 16)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _wav_container(fmt: bytes, data: bytes) -> bytes:
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    _, ch = _int16_frames(samples)
+    return _wav(1, ch, sample_rate, ch * 2, 16, samples.astype("<i2").tobytes())
 
 
 def encode_wav_u8(sample_rate: int, samples: np.ndarray) -> bytes:
     """Unsigned 8-bit PCM WAV (tag 1, bits 8): byte = (s>>8) + 128, so
     decode's (x−128)<<8 reproduces s & 0xFF00 — fixtures quantized to
     256-multiples round-trip exactly."""
-    if samples.ndim != 2 or samples.dtype != np.int16:
-        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
-    n, ch = samples.shape
+    _, ch = _int16_frames(samples)
     data = ((samples.reshape(-1).astype(np.int16) >> 8) + 128).astype(np.uint8).tobytes()
-    fmt = struct.pack("<HHIIHH", 1, ch, sample_rate, sample_rate * ch, ch, 8)
-    return _wav_container(fmt, data)
+    return _wav(1, ch, sample_rate, ch, 8, data)
 
 
 def encode_wav_s24(sample_rate: int, samples: np.ndarray) -> bytes:
     """Signed 24-bit PCM WAV (tag 1, bits 24): each int16 sample written
     as s<<8 in 3 little-endian bytes — the low byte is zero, so decode's
     top-16-bit rule reproduces the input bit-exactly."""
-    if samples.ndim != 2 or samples.dtype != np.int16:
-        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
-    n, ch = samples.shape
+    _, ch = _int16_frames(samples)
     v = (samples.reshape(-1).astype(np.int64) << 8) & 0xFFFFFF
     b = np.empty((len(v), 3), dtype=np.uint8)
     b[:, 0], b[:, 1], b[:, 2] = v & 0xFF, (v >> 8) & 0xFF, (v >> 16) & 0xFF
-    fmt = struct.pack("<HHIIHH", 1, ch, sample_rate, sample_rate * ch * 3, ch * 3, 24)
-    return _wav_container(fmt, b.tobytes())
+    return _wav(1, ch, sample_rate, ch * 3, 24, b.tobytes())
 
 
 #: KSDATAFORMAT media-type GUID suffix (bytes 2..16 of every SUBTYPE_*
@@ -1805,15 +1816,9 @@ def encode_wav_extensible(sample_rate: int, samples: np.ndarray) -> bytes:
     40-byte fmt real multichannel/24-bit writers emit: WAVEFORMATEX
     with cbSize=22, then wValidBitsPerSample, dwChannelMask and the
     SubFormat GUID whose leading two bytes carry the true tag (1)."""
-    if samples.ndim != 2 or samples.dtype != np.int16:
-        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
-    n, ch = samples.shape
-    data = samples.astype("<i2").tobytes()
-    fmt = struct.pack(
-        "<HHIIHHHHI", 0xFFFE, ch, sample_rate, sample_rate * ch * 2, ch * 2, 16,
-        22, 16, (1 << ch) - 1,
-    ) + struct.pack("<H", 1) + _EXTENSIBLE_GUID_SUFFIX
-    return _wav_container(fmt, data)
+    _, ch = _int16_frames(samples)
+    ext = struct.pack("<HHIH", 22, 16, (1 << ch) - 1, 1) + _EXTENSIBLE_GUID_SUFFIX
+    return _wav(0xFFFE, ch, sample_rate, ch * 2, 16, samples.astype("<i2").tobytes(), ext)
 
 
 def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
@@ -1838,23 +1843,17 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
     leading tag re-dispatches to any of the above). FLAC is native too
     since round 12 (:func:`decode_flac`, its own container — dispatch
     via :func:`decode_audio_native`); the remaining adapter seam is
-    PERCEPTUAL codecs only (MP3/AAC — decode_audio_ffmpeg)."""
+    PERCEPTUAL codecs only (MP3/AAC, which need ffmpeg)."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
-    pos, fmt, data, fact_n = 12, None, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) != size:
-            raise ValueError(f"truncated {cid!r} chunk")
+    fmt = data = fact_n = None
+    for cid, at, size in _riff_chunks(payload, 12, len(payload)):
         if cid == b"fmt ":
-            fmt = body
+            fmt = payload[at : at + size]
         elif cid == b"data":
-            data = body
+            data = payload[at : at + size]
         elif cid == b"fact" and size >= 4:
-            (fact_n,) = struct.unpack_from("<I", body, 0)
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
+            (fact_n,) = struct.unpack_from("<I", payload, at)
     if fmt is None or data is None:
         raise ValueError("WAVE missing fmt /data chunk")
     tag, ch, rate, _, block_align, bits = struct.unpack_from("<HHIIHH", fmt, 0)
@@ -1904,8 +1903,7 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
             "PCM s16le, IEEE-float, G.711 A-law/µ-law and IMA-ADPCM WAV "
             f"decode natively (format tag {tag}, {bits}-bit); FLAC decodes "
             "natively via decode_flac (round 12); PERCEPTUAL codecs "
-            "(MP3/AAC) need ffmpeg (decode_audio_ffmpeg is the shipped "
-            "adapter)"
+            "(MP3/AAC) need ffmpeg"
         )
     if len(samples) % ch:
         raise ValueError("data chunk is not whole interleaved frames")
@@ -1932,11 +1930,6 @@ def _wav_fixture(doc_id: int) -> tuple[int, np.ndarray]:
     return rate, _wav_fixture_samples(doc_id, ch, n)
 
 
-def render_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture-audio renderer: one real WAV per row, executor-side."""
-    return _render_stage(df, "audio", lambda d: encode_wav(*_wav_fixture(d)), id_col)
-
-
 def _pcm_variant(doc_id: int) -> int:
     """PCM container variant for the widened audio_wav fixture (round
     11): over the 1-in-10 sampled docs, (doc_id // 10) % 4 cycles
@@ -1948,8 +1941,8 @@ def _pcm_variant(doc_id: int) -> int:
 
 def render_pcm_variant_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fixture renderer cycling all four natively-decoded PCM containers
-    by doc arithmetic — same samples and geometry as
-    :func:`render_wav_payloads`, four real on-disk layouts."""
+    by doc arithmetic — the samples and geometry of :func:`_wav_fixture`,
+    four real on-disk layouts."""
     encoders = [encode_wav, encode_wav_extensible, encode_wav_s24, encode_wav_u8]
     return _render_stage(
         df, "audio", lambda d: encoders[_pcm_variant(d)](*_wav_fixture(d)), id_col
@@ -2135,27 +2128,26 @@ def fake_decode_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _riff_chunks(payload: bytes, pos: int, end: int):
-    """Yield (fourcc, body_start, size) walking a RIFF chunk sequence;
-    chunks are word-aligned (odd sizes carry a pad byte) — the same
-    rule decode_wav applies."""
-    while pos + 8 <= end:
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if pos + 8 + size > end:
-            raise ValueError(f"truncated {cid!r} chunk at byte {pos}")
-        yield cid, pos + 8, size
-        pos += 8 + size + (size & 1)
-
-
 def encode_avi_mjpeg(width: int, height: int, jpeg_frames: list[bytes], fps: int = 25) -> bytes:
     """Minimal-but-real AVI writer: RIFF'AVI ' with LIST'hdrl' (avih main
     header + LIST'strl' with a 'vids'/'MJPG' strh and a BITMAPINFOHEADER
     strf whose biCompression is 'MJPG'), LIST'movi' with one '00dc'
     chunk per JPEG frame (word-aligned), and an idx1 index — the layout
     every MJPEG capture tool emits."""
-    n = len(jpeg_frames)
+    strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG", width * height * 3, 0, 0, 0, 0)
     max_bytes = max((len(f) for f in jpeg_frames), default=0)
+    return _avi(width, height, jpeg_frames, fps, b"MJPG", strf, max_bytes, b"00dc", index=True)
+
+
+def _avi(
+    width: int, height: int, frames: list[bytes], fps: int, handler: bytes, strf: bytes,
+    max_bytes: int, tag: bytes, index: bool,
+) -> bytes:
+    """RIFF'AVI ': LIST'hdrl' (avih + LIST'strl' with a 'vids' strh naming
+    ``handler`` and the BITMAPINFOHEADER ``strf``), LIST'movi' with one
+    ``tag`` chunk per frame, and with ``index`` an idx1 (offsets from the
+    'movi' fourcc). ``max_bytes`` is the largest frame."""
+    n = len(frames)
     avih = struct.pack(
         "<IIIIIIIIII4I",
         1_000_000 // fps,  # dwMicroSecPerFrame
@@ -2170,32 +2162,18 @@ def encode_avi_mjpeg(width: int, height: int, jpeg_frames: list[bytes], fps: int
     # dwFlags, wPriority, wLanguage, dwInitialFrames, dwScale, dwRate,
     # dwStart, dwLength, dwSuggestedBufferSize, dwQuality, dwSampleSize,
     # rcFrame (left, top, right, bottom)
-    strh = b"vids" + b"MJPG" + struct.pack(
+    strh = b"vids" + handler + struct.pack(
         "<IHHIIIIIIII4H", 0, 0, 0, 0, 1, fps, 0, n, max_bytes, 10_000, 0,
         0, 0, width, height,
     )
-    strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG",
-                       width * height * 3, 0, 0, 0, 0)
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi_body = b"movi"
-    idx_entries = []
-    for f in jpeg_frames:
-        # idx1 offsets are relative to the start of the 'movi' fourcc
-        idx_entries.append(struct.pack("<4sII I", b"00dc", 0x10, len(movi_body), len(f)))
-        movi_body += chunk(b"00dc", f)
-    movi = b"LIST" + struct.pack("<I", len(movi_body)) + movi_body
-    idx1 = chunk(b"idx1", b"".join(idx_entries))
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
+    strl = _chunk(b"LIST", b"strl" + _chunk(b"strh", strh) + _chunk(b"strf", strf))
+    hdrl = _chunk(b"LIST", b"hdrl" + _chunk(b"avih", avih) + strl)
+    movi, idx = b"movi", []
+    for f in frames:
+        idx.append(struct.pack("<4sIII", tag, 0x10, len(movi), len(f)))
+        movi += _chunk(tag, f)
+    idx1 = _chunk(b"idx1", b"".join(idx)) if index else b""
+    return _riff(b"AVI ", hdrl, _chunk(b"LIST", movi), idx1)
 
 
 def decode_avi_mjpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
@@ -2264,18 +2242,6 @@ def decode_avi_mjpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
                         (bpp,) = struct.unpack_from("<H", payload, b2 + 14)
                         compression = payload[b2 + 16 : b2 + 20]
 
-    def decode_dib_frame(raw: bytes) -> np.ndarray:
-        # BMP raster rules on a bare frame: BGR, rows padded to 4 bytes,
-        # bottom-up unless strf declared a negative (top-down) biHeight
-        row_bytes = (width * 3 + 3) & ~3
-        if len(raw) != height * row_bytes:
-            raise ValueError(
-                f"DIB frame is {len(raw)} bytes, geometry needs {height * row_bytes}"
-            )
-        rows = np.frombuffer(raw, np.uint8).reshape(height, row_bytes)[:, : width * 3]
-        img = rows.reshape(height, width, 3)
-        return (img if dib_top_down else img[::-1])[:, :, ::-1]
-
     for cid, body_at, size in _riff_chunks(payload, 12, len(payload)):
         if cid != b"LIST":
             continue  # idx1 / JUNK are optional for sequential decode
@@ -2298,7 +2264,7 @@ def decode_avi_mjpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
                 if c2 in (vtag + b"dc", vtag + b"db"):
                     chunk = payload[b2 : b2 + s2]
                     if raw_dib:
-                        px = decode_dib_frame(chunk)
+                        px = _dib_rgb(chunk, width, height, dib_top_down)
                         w, h = width, height
                     else:
                         w, h, _, px = decode_jpeg(chunk)
@@ -2420,13 +2386,13 @@ def dib_frame_stats(
 
 
 # --------------------------------------------------------------------------
-# A/V reference decoders: ffmpeg, reached only from tests. Where the
-# ffmpeg binary exists, the skip-clean adapter test cross-checks the
-# native decoders against it bit-for-bit on every format both decode
-# (G.711, IEEE-float, IMA-ADPCM, FLAC, raw-RGB DIB AVI); its exclusive
-# territory is PERCEPTUAL/inter-frame A/V (MP3/AAC audio, H.264/VP9
-# video). The unconditional quarantine fixtures are real-but-refused
-# headers (MP3-in-WAV tag 0x55, H264-fourcc AVI).
+# G.711 and raw-RGB AVI writers. Where the ffmpeg binary exists, the
+# skip-clean adapter test (reference decoders in tests/mm_reference.py)
+# cross-checks the native decoders against it bit-for-bit on every format
+# both decode (G.711, IEEE-float, IMA-ADPCM, FLAC, raw-RGB DIB AVI);
+# ffmpeg's exclusive territory is PERCEPTUAL/inter-frame A/V (MP3/AAC
+# audio, H.264/VP9 video). The unconditional quarantine fixtures are
+# real-but-refused headers (MP3-in-WAV tag 0x55, H264-fourcc AVI).
 # --------------------------------------------------------------------------
 
 
@@ -2460,17 +2426,8 @@ def encode_wav_alaw(sample_rate: int, samples: np.ndarray) -> bytes:
     container generatable with zero media libraries. Decoded natively
     by :func:`decode_wav` since round 10 (exhaustively-pinned
     expander); ffmpeg agrees bit-for-bit where installed."""
-    if samples.ndim != 2 or samples.dtype != np.int16:
-        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
-    n, ch = samples.shape
-    data = _lin2alaw(samples.reshape(-1)).tobytes()
-    fmt = struct.pack("<HHIIHH", 6, ch, sample_rate, sample_rate * ch, ch, 8)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"fact" + struct.pack("<II", 4, n)
-    body += b"data" + struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    n, ch = _int16_frames(samples)
+    return _wav(6, ch, sample_rate, ch, 8, _lin2alaw(samples.reshape(-1)).tobytes(), fact_n=n)
 
 
 def encode_avi_rawrgb(
@@ -2487,161 +2444,14 @@ def encode_avi_rawrgb(
     (n, height, width, 3) RGB."""
     if frames.ndim != 4 or frames.shape[1:] != (height, width, 3):
         raise ValueError(f"frames {frames.shape} != (n, {height}, {width}, 3)")
-    row_pad = (-(width * 3)) % 4
-    dibs = []
-    for fr in frames.astype(np.uint8):
-        bgr = (fr if top_down else fr[::-1])[:, :, ::-1]  # BGR; bottom-up unless top-down
-        raw = b"".join(r.tobytes() + b"\x00" * row_pad for r in bgr)
-        dibs.append(raw)
-    n = len(dibs)
-    frame_bytes = (width * 3 + row_pad) * height
-    avih = struct.pack(
-        "<IIIIIIIIII4I", 1_000_000 // fps, frame_bytes * fps, 0, 0x10,
-        n, 0, 1, frame_bytes, width, height, 0, 0, 0, 0,
-    )
-    strh = b"vids" + b"DIB " + struct.pack(
-        "<IHHIIIIIIII4H", 0, 0, 0, 0, 1, fps, 0, n, frame_bytes, 10_000, 0,
-        0, 0, width, height,
-    )
+    dibs = [_dib_rows(fr, top_down) for fr in frames.astype(np.uint8)]
+    frame_bytes = ((width * 3 + 3) & ~3) * height
     strf = struct.pack("<IiiHH4sIiiII", 40, width, -height if top_down else height,
                        1, 24, b"\x00\x00\x00\x00", frame_bytes, 0, 0, 0, 0)
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi_body = b"movi"
-    for dib in dibs:
-        movi_body += chunk(b"00db", dib)
-    movi = b"LIST" + struct.pack("<I", len(movi_body)) + movi_body
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _avi(width, height, dibs, fps, b"DIB ", strf, frame_bytes, b"00db", index=False)
 
 
-def _require_ffmpeg() -> str:
-    """Path of the ffmpeg binary; ImportError when it is absent, so a
-    decode stage's quarantine boundary re-raises it instead of tagging
-    rows."""
-    import shutil
-
-    path = shutil.which("ffmpeg")
-    if path is None:
-        raise ImportError(
-            "the ffmpeg reference decoders need the ffmpeg binary on PATH; "
-            "the native decoders (decode_audio_native, decode_avi_mjpeg) need nothing"
-        )
-    return path
-
-
-def _run_ffmpeg(args: list[str], payload: bytes) -> bytes:
-    import subprocess
-
-    ffmpeg = _require_ffmpeg()
-    proc = subprocess.run(
-        [ffmpeg, "-v", "error", "-i", "pipe:0", *args, "pipe:1"],
-        input=payload, capture_output=True, check=False,
-    )
-    if proc.returncode != 0:
-        raise ValueError(f"ffmpeg decode failed: {proc.stderr.decode(errors='replace')[:200]}")
-    return proc.stdout
-
-
-def decode_audio_ffmpeg(payload: bytes) -> tuple[int, np.ndarray]:
-    """ffmpeg reference decoder with :func:`decode_audio_native`'s
-    (sample_rate, samples int16 (n, ch)) contract. No stage calls it:
-    the skip-clean test cross-checks the native WAV and FLAC decoders
-    against it wherever ffmpeg exists, and it also decodes the
-    PERCEPTUAL codecs (MP3/AAC) the native side refuses. Geometry
-    (rate, channels) is parsed from the container header — the RIFF fmt
-    chunk or the FLAC STREAMINFO; the decoded stream is ffmpeg's s16le
-    output."""
-    if payload[:4] == FLAC_MAGIC:
-        # STREAMINFO (spec-required first block): rate 20 bits at byte
-        # 10 of the 34-byte body, channels-1 the next 3 bits
-        body = payload[8 : 8 + int.from_bytes(payload[5:8], "big")]
-        if (payload[4] & 0x7F) != 0 or len(body) < 34:
-            raise ValueError("FLAC payload missing leading STREAMINFO")
-        rate = (body[10] << 12) | (body[11] << 4) | (body[12] >> 4)
-        ch = ((body[12] >> 1) & 7) + 1
-        raw = _run_ffmpeg(
-            ["-f", "s16le", "-acodec", "pcm_s16le", "-ac", str(int(ch))], payload
-        )
-        samples = np.frombuffer(raw, dtype="<i2")
-        if len(samples) % ch:
-            raise ValueError("ffmpeg output is not whole interleaved frames")
-        return int(rate), samples.reshape(-1, ch).astype(np.int16)
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("decode_audio_ffmpeg expects a RIFF/WAVE or FLAC container")
-    pos, fmt = 12, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if cid == b"fmt ":
-            fmt = payload[pos + 8 : pos + 8 + size]
-            break
-        pos += 8 + size + (size & 1)
-    if fmt is None:
-        raise ValueError("WAVE missing fmt chunk")
-    _, ch, rate = struct.unpack_from("<HHI", fmt, 0)
-    if ch < 1:
-        raise ValueError("WAVE fmt declares zero channels")
-    # Pin the output layout to the header-declared channel count with -ac:
-    # without it, an ffmpeg decoder that emits a different count which
-    # still divides the sample total would silently de-interleave into the
-    # wrong channels instead of failing the whole-frames check below.
-    raw = _run_ffmpeg(["-f", "s16le", "-acodec", "pcm_s16le", "-ac", str(int(ch))], payload)
-    samples = np.frombuffer(raw, dtype="<i2")
-    if len(samples) % ch:
-        raise ValueError("ffmpeg output is not whole interleaved frames")
-    return int(rate), samples.reshape(-1, ch).astype(np.int16)
-
-
-def decode_video_ffmpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """ffmpeg reference decoder with :func:`decode_avi_mjpeg`'s
-    (width, height, frames uint8 (n, h, w, 3) RGB) contract.
-    Geometry comes from the AVI avih header (this adapter targets AVI
-    containers; ffprobe generalizes), frames from ffmpeg's rawvideo
-    rgb24 output."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("decode_video_ffmpeg expects a RIFF/AVI container")
-    width = height = None
-    for cid, body_at, size in _riff_chunks(payload, 12, len(payload)):
-        if cid == b"LIST" and payload[body_at : body_at + 4] == b"hdrl":
-            for c2, b2, s2 in _riff_chunks(payload, body_at + 4, body_at + size):
-                if c2 == b"avih":
-                    w_, h_ = struct.unpack_from("<II", payload, b2 + 32)
-                    width, height = int(w_), int(h_)
-    if not width or not height:
-        raise ValueError("AVI missing avih main header")
-    raw = _run_ffmpeg(["-f", "rawvideo", "-pix_fmt", "rgb24"], payload)
-    frame_bytes = width * height * 3
-    if not raw or len(raw) % frame_bytes:
-        raise ValueError("ffmpeg output is not whole rgb24 frames")
-    frames = np.frombuffer(raw, np.uint8).reshape(-1, height, width, 3)
-    return width, height, frames
-
-
-_ULAW_BIAS, _ULAW_CLIP = 0x84, 8159
-
-
-def _lin2ulaw(samples: np.ndarray) -> np.ndarray:
-    """Pure-numpy G.711 µ-law compressor (the classic public-domain
-    g711.c algorithm, the North-American telephony twin of
-    :func:`_lin2alaw`): 16-bit linear -> 8-bit µ-law."""
-    x = samples.astype(np.int64) >> 2  # 14-bit magnitude domain
-    mask = np.where(x < 0, 0x7F, 0xFF)
-    mag = np.minimum(np.where(x < 0, -x, x), _ULAW_CLIP) + (_ULAW_BIAS >> 2)
-    seg_ends = np.array([0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF, 0x1FFF])
-    seg = np.searchsorted(seg_ends, mag, side="left")
-    # seg == 8 is reachable: CLIP + biased offset (8159 + 33) exceeds
-    # the top segment end 0x1FFF, and g711.c returns 0x7F there
-    uval = np.where(
-        seg >= 8, 0x7F, (np.minimum(seg, 7) << 4) | ((mag >> (np.minimum(seg, 7) + 1)) & 0xF)
-    )
-    return (uval ^ mask).astype(np.uint8)
+_ULAW_BIAS = 0x84
 
 
 def _ulaw2lin(ulaw: np.ndarray) -> np.ndarray:
@@ -2652,23 +2462,6 @@ def _ulaw2lin(ulaw: np.ndarray) -> np.ndarray:
     return np.where(u & 0x80, _ULAW_BIAS - t, t - _ULAW_BIAS).astype(np.int16)
 
 
-def encode_wav_ulaw(sample_rate: int, samples: np.ndarray) -> bytes:
-    """RIFF/WAVE with G.711 µ-law payload (format tag 7, 8 bits/sample,
-    fact chunk) — the second compressed-audio fixture at the ffmpeg
-    adapter seam; the native :func:`decode_wav` refuses it (tag != 1)."""
-    if samples.ndim != 2 or samples.dtype != np.int16:
-        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
-    n, ch = samples.shape
-    data = _lin2ulaw(samples.reshape(-1)).tobytes()
-    fmt = struct.pack("<HHIIHH", 7, ch, sample_rate, sample_rate * ch, ch, 8)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"fact" + struct.pack("<II", 4, n)
-    body += b"data" + struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
 def encode_wav_f32(sample_rate: int, samples: np.ndarray) -> bytes:
     """RIFF/WAVE with IEEE-float payload (format tag 3, 32-bit) — the
     remaining natively-undecodable WAV fixture for the ffmpeg adapter
@@ -2676,20 +2469,14 @@ def encode_wav_f32(sample_rate: int, samples: np.ndarray) -> bytes:
     sample/32768.0, exactly representable in float32, so ffmpeg's
     float→s16 conversion (lrintf(v * 2^15)) reproduces the original
     int16 samples bit-exactly where the adapter test compares them."""
-    if samples.ndim != 2 or samples.dtype != np.int16:
-        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
-    n, ch = samples.shape
+    n, ch = _int16_frames(samples)
     data = (samples.reshape(-1).astype(np.float32) / np.float32(32768.0)).astype("<f4").tobytes()
-    fmt = struct.pack("<HHIIHH", 3, ch, sample_rate, sample_rate * ch * 4, ch * 4, 32)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"fact" + struct.pack("<II", 4, n)
-    body += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(3, ch, sample_rate, ch * 4, 32, data, fact_n=n)
 
 
 def render_g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fixture renderer for the COMPRESSED-audio branch: the same
-    arithmetic samples as :func:`render_wav_payloads`, companded through
+    arithmetic samples (:func:`_wav_fixture`), companded through
     G.711 A-law into a real tag-6 RIFF/WAVE container (round 10 —
     decoded natively by :func:`decode_wav` via the exhaustively-pinned
     expander)."""
@@ -2698,7 +2485,7 @@ def render_g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def render_f32_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fixture renderer for the IEEE-float branch: the same arithmetic
-    samples as :func:`render_wav_payloads` written as tag-3 float32
+    samples (:func:`_wav_fixture`) written as tag-3 float32
     containers (round 11 — decoded natively by :func:`decode_wav`; the
     fixture values k/2^15 are exact dyadics, so the float round-trip is
     bit-exact and the audio_wav arithmetic oracle applies unchanged)."""
@@ -2747,6 +2534,16 @@ ADPCM_SAMPLES_PER_BLOCK = 17
 ADPCM_TOLERANCE = 128
 
 
+def _ima_step(nib: np.ndarray, pred: np.ndarray, index: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(pred, index) per stream after nibble ``nib``: the one IMA state
+    update, shared by the expander and the compressor."""
+    step = _IMA_STEP_TABLE[index]
+    diff = (step >> 3) + np.where(nib & 1, step >> 2, 0) \
+        + np.where(nib & 2, step >> 1, 0) + np.where(nib & 4, step, 0)
+    pred = np.clip(np.where(nib & 8, pred - diff, pred + diff), -32768, 32767)
+    return pred, np.clip(index + _IMA_INDEX_TABLE[nib], 0, 88)
+
+
 def _ima_decode_nibbles(nibbles: np.ndarray, pred: np.ndarray, index: np.ndarray) -> np.ndarray:
     """Core IMA expander, vectorized across streams: ``nibbles`` (S, T)
     uint8 in [0,16), ``pred``/``index`` (S,) initial state per stream ->
@@ -2757,12 +2554,7 @@ def _ima_decode_nibbles(nibbles: np.ndarray, pred: np.ndarray, index: np.ndarray
     pred = pred.astype(np.int64).copy()
     index = np.clip(index.astype(np.int64), 0, 88)
     for t in range(T):
-        nib = nibbles[:, t].astype(np.int64)
-        step = _IMA_STEP_TABLE[index]
-        diff = (step >> 3) + np.where(nib & 1, step >> 2, 0) \
-            + np.where(nib & 2, step >> 1, 0) + np.where(nib & 4, step, 0)
-        pred = np.clip(np.where(nib & 8, pred - diff, pred + diff), -32768, 32767)
-        index = np.clip(index + _IMA_INDEX_TABLE[nib], 0, 88)
+        pred, index = _ima_step(nibbles[:, t].astype(np.int64), pred, index)
         out[:, t] = pred
     return out.astype(np.int16)
 
@@ -2771,8 +2563,8 @@ def _ima_encode_nibbles(samples: np.ndarray, pred: np.ndarray, index: np.ndarray
     """Core IMA compressor, vectorized across streams: ``samples``
     (S, T) int16 targets, ``pred``/``index`` (S,) initial state ->
     (nibbles (S, T) uint8, final pred, final index). The nibble search
-    is the standard 3-step threshold cascade; state updates replay the
-    DECODER arithmetic so encoder and decoder stay in lockstep."""
+    is the standard 3-step threshold cascade; the state update is the
+    decoder's :func:`_ima_step`."""
     S, T = samples.shape
     nibbles = np.empty((S, T), dtype=np.uint8)
     pred = pred.astype(np.int64).copy()
@@ -2787,12 +2579,7 @@ def _ima_encode_nibbles(samples: np.ndarray, pred: np.ndarray, index: np.ndarray
             nib = nib | np.where(take, bit, 0)
             mag = np.where(take, mag - step, mag)
             step = step >> 1
-        # decoder-replay state update (identical arithmetic to above)
-        step = _IMA_STEP_TABLE[index]
-        diff = (step >> 3) + np.where(nib & 1, step >> 2, 0) \
-            + np.where(nib & 2, step >> 1, 0) + np.where(nib & 4, step, 0)
-        pred = np.clip(np.where(nib & 8, pred - diff, pred + diff), -32768, 32767)
-        index = np.clip(index + _IMA_INDEX_TABLE[nib], 0, 88)
+        pred, index = _ima_step(nib, pred, index)
         nibbles[:, t] = nib.astype(np.uint8)
     return nibbles, pred, index
 
@@ -2853,11 +2640,9 @@ def encode_wav_adpcm(
     block is padded by repeating the last sample (decoders trim via
     fact). Step index carries ACROSS blocks per channel — the layout
     ffmpeg's adpcm_ima_wav encoder emits."""
-    if samples.ndim != 2 or samples.dtype != np.int16:
-        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
+    n, ch = _int16_frames(samples)
     if (spb - 1) % 8:
         raise ValueError("samples/block must be 8k+1 for whole 4-byte nibble words")
-    n, ch = samples.shape
     if n == 0:
         raise ValueError("cannot encode an empty sample stream")
     nblocks = (n + spb - 1) // spb
@@ -2867,20 +2652,16 @@ def encode_wav_adpcm(
     out = bytearray()
     for b in range(nblocks):
         pred0 = blocks[b, :, 0].astype(np.int64)
-        head = bytearray()
-        for c in range(ch):
-            head += struct.pack("<hBB", int(pred0[c]), int(index[c]), 0)
+        head = b"".join(struct.pack("<hBB", int(pred0[c]), int(index[c]), 0) for c in range(ch))
         nib, _, index = _ima_encode_nibbles(blocks[b, :, 1:], pred0, index)
         lo, hi = nib[:, 0::2].astype(np.uint8), nib[:, 1::2].astype(np.uint8)
         packed = (lo | (hi << 4)).reshape(ch, -1, 4)  # (ch, words, 4)
-        out += bytes(head) + packed.transpose(1, 0, 2).tobytes()
+        out += head + packed.transpose(1, 0, 2).tobytes()
     block_align = 4 * ch + (spb - 1) // 2 * ch
-    avg = sample_rate * block_align // spb
-    fmt = struct.pack("<HHIIHHHH", 0x11, ch, sample_rate, avg, block_align, 4, 2, spb)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"fact" + struct.pack("<II", 4, n)
-    body += b"data" + struct.pack("<I", len(out)) + bytes(out)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _wav(
+        0x11, ch, sample_rate, block_align, 4, bytes(out), struct.pack("<HH", 2, spb),
+        fact_n=n, avg=sample_rate * block_align // spb,
+    )
 
 
 def _adpcm_fixture_samples(doc_id: int, ch: int, n: int) -> np.ndarray:
@@ -2979,91 +2760,11 @@ def _crc8_flac(data: bytes) -> int:
     return r
 
 
-#: numpy view of the CRC-16 table for the lane-vectorized bulk path
-_FLAC_CRC16_NP = None  # built lazily (numpy import order)
-
-
-def _crc16_gf2_matmul(a: list[int], b: list[int]) -> list[int]:
-    """GF(2) 16x16 matrix product; a matrix is 16 column masks (column
-    j's bits = image of basis vector e_j), the crc32_combine idiom."""
-    out = []
-    for col in b:
-        acc = 0
-        for i in range(16):
-            if col & (1 << i):
-                acc ^= a[i]
-        out.append(acc)
-    return out
-
-
 def _crc16_flac(data: bytes) -> int:
-    """CRC-16 (poly 0x8005, init 0, MSB-first). Small inputs take the
-    per-byte table loop; large inputs (whole FLAC frames — the round-12
-    profile showed this loop at ~30% of decode time) take a vectorized
-    split: the buffer is FRONT-padded with zero bytes (leading zeros
-    are CRC-neutral at init 0) and cut into S equal lanes whose states
-    update in lockstep as numpy uint16 table lookups (len/S python
-    iterations total), then the S per-lane CRCs fold left via the
-    shift-by-lane-length GF(2) matrix, built by log2 squarings of the
-    shift-by-one-byte matrix."""
-    n = len(data)
-    if n < 4096:
-        r = 0
-        for b in data:
-            r = ((r << 8) & 0xFFFF) ^ _FLAC_CRC16[(r >> 8) ^ b]
-        return r
-    global _FLAC_CRC16_NP
-    if _FLAC_CRC16_NP is None:
-        _FLAC_CRC16_NP = np.array(_FLAC_CRC16, dtype=np.uint16)
-    S = 256
-    seg = (n + S - 1) // S
-    padded = b"\x00" * (S * seg - n) + data
-    arr = np.frombuffer(padded, dtype=np.uint8).reshape(S, seg)
-    states = np.zeros(S, dtype=np.uint16)
-    T = _FLAC_CRC16_NP
-    for j in range(seg):
-        states = (states << np.uint16(8)) ^ T[(states >> np.uint16(8)).astype(np.uint8) ^ arr[:, j]]
-    hi, lo = _crc16_shift_tables(seg)
-    crc = 0
-    for s in states.tolist():
-        crc = hi[crc >> 8] ^ lo[crc & 0xFF] ^ s
-    return crc
-
-
-#: seg-bytes -> (hi, lo) 256-entry tables of the shift-by-seg GF(2) map
-_CRC16_SHIFT_CACHE: dict[int, tuple[list[int], list[int]]] = {}
-
-
-def _crc16_shift_tables(seg: int) -> tuple[list[int], list[int]]:
-    """Tables applying the shift-by-``seg``-zero-bytes linear map to a
-    CRC-16 state in two byte lookups: M = (byte-shift matrix)^seg by
-    square-and-multiply over GF(2), then hi/lo images of every byte
-    value. Cached — frames of one stream share a handful of lengths."""
-    cached = _CRC16_SHIFT_CACHE.get(seg)
-    if cached is not None:
-        return cached
-    byte_shift = [((1 << i) << 8) & 0xFFFF ^ _FLAC_CRC16[(1 << i) >> 8] for i in range(16)]
-    M, P, e = None, byte_shift, seg
-    while e:
-        if e & 1:
-            M = P if M is None else _crc16_gf2_matmul(P, M)
-        P = _crc16_gf2_matmul(P, P)
-        e >>= 1
-
-    def image(v: int) -> int:
-        acc = 0
-        i = 0
-        while v:
-            if v & 1:
-                acc ^= M[i]
-            v >>= 1
-            i += 1
-        return acc
-
-    hi = [image(b << 8) for b in range(256)]
-    lo = [image(b) for b in range(256)]
-    _CRC16_SHIFT_CACHE[seg] = (hi, lo)
-    return hi, lo
+    r = 0
+    for b in data:
+        r = ((r << 8) & 0xFFFF) ^ _FLAC_CRC16[(r >> 8) ^ b]
+    return r
 
 
 class _FlacBitReader:
@@ -3117,34 +2818,6 @@ class _FlacBitReader:
         if self.pos % 8:
             raise ValueError("FLAC reader not byte-aligned where the spec requires it")
         return self.pos // 8
-
-
-class _FlacBitWriter:
-    __slots__ = ("buf", "acc", "nb")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nb = 0
-
-    def write(self, v: int, n: int) -> None:
-        if n == 0:
-            return
-        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
-        self.nb += n
-        while self.nb >= 8:
-            self.nb -= 8
-            self.buf.append((self.acc >> self.nb) & 0xFF)
-        self.acc &= (1 << self.nb) - 1
-
-    def align(self) -> None:
-        if self.nb:
-            self.write(0, 8 - self.nb)
-
-    def getvalue(self) -> bytes:
-        if self.nb:
-            raise ValueError("unaligned FLAC writer")
-        return bytes(self.buf)
 
 
 def _flac_utf8_encode(n: int) -> bytes:
@@ -3498,7 +3171,7 @@ def decode_flac(payload: bytes) -> tuple[int, np.ndarray]:
     return si_rate, out.astype(np.int16)
 
 
-def _flac_write_residual(w: _FlacBitWriter, res: list[int]) -> None:
+def _flac_write_residual(w: _BitWriter, res: list[int]) -> None:
     """Method-0 Rice, single partition, parameter chosen by exhaustive
     search over 0..14 (deterministic; the 15 escape is never smaller
     for our int16-residual streams but the decoder handles it)."""
@@ -3517,7 +3190,7 @@ def _flac_write_residual(w: _FlacBitWriter, res: list[int]) -> None:
         w.write(u & ((1 << best_p) - 1), best_p)
 
 
-def _flac_write_subframe(w: _FlacBitWriter, s: list[int], bps: int) -> None:
+def _flac_write_subframe(w: _BitWriter, s: list[int], bps: int) -> None:
     """CONSTANT when the block is flat, else FIXED order 2 (order 0
     when the block is too short for warmup) with Rice residuals."""
     if all(v == s[0] for v in s):
@@ -3552,9 +3225,7 @@ def encode_flac(
     (encoder applies the transform; the decoder must invert it)."""
     import hashlib
 
-    if samples.ndim != 2 or samples.dtype != np.int16:
-        raise ValueError(f"samples must be int16 (n, channels), got {samples.dtype} {samples.shape}")
-    n, ch = samples.shape
+    n, ch = _int16_frames(samples)
     if n == 0:
         raise ValueError("cannot encode an empty sample stream")
     if stereo_mode != "independent" and ch != 2:
@@ -3568,7 +3239,7 @@ def encode_flac(
     for f0 in range(0, n, block_size):
         blk = samples[f0 : f0 + block_size].astype(np.int64)
         bsz = len(blk)
-        w = _FlacBitWriter()
+        w = _BitWriter()
         w.write(0x3FFE, 14)
         w.write(0, 1)  # reserved
         w.write(0, 1)  # fixed-blocksize stream
@@ -3581,8 +3252,7 @@ def encode_flac(
         for b in _flac_utf8_encode(f0 // block_size):
             w.write(b, 8)
         w.write(bsz - 1, 16)
-        hdr = w  # CRC-8 over everything so far (byte-aligned here)
-        w.write(_crc8_flac(bytes(hdr.buf)), 8)
+        w.write(_crc8_flac(bytes(w.buf)), 8)  # over the header so far (byte-aligned)
         if stereo_mode == "independent":
             for c in range(ch):
                 _flac_write_subframe(w, [int(v) for v in blk[:, c]], bps)
@@ -3604,7 +3274,7 @@ def encode_flac(
     # block size actually used (a shorter FINAL block doesn't count,
     # the libFLAC convention); a single short stream declares n
     bs_decl = block_size if n > block_size else n
-    si = _FlacBitWriter()
+    si = _BitWriter()
     si.write(bs_decl, 16)  # min block size
     si.write(bs_decl, 16)  # max block size
     si.write(min(fsizes), 24)
@@ -3623,7 +3293,7 @@ def decode_audio_native(payload: bytes) -> tuple[int, np.ndarray]:
     magic bytes — FLAC (``fLaC``) to :func:`decode_flac`, everything
     else to the RIFF/WAVE walk of :func:`decode_wav`. This is the decoder
     :func:`audio_features` runs; only PERCEPTUAL codecs (MP3/AAC) are
-    left to the ffmpeg reference decoder :func:`decode_audio_ffmpeg`."""
+    left to ffmpeg."""
     if payload[:4] == FLAC_MAGIC:
         return decode_flac(payload)
     return decode_wav(payload)

@@ -11,6 +11,8 @@ import pytest
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import multimodal as MM
 
+from . import mm_reference as REF
+
 
 def _px(w, h, seed=0):
     return MM._fixture_pixels(seed, w, h)
@@ -40,7 +42,7 @@ def test_bmp_roundtrip(w, h):
     """w=1,3 exercise nonzero row padding; the roundtrip proves the
     bottom-up row order and BGR swap cancel exactly."""
     px = _px(w, h, seed=w * 10 + h)
-    payload = MM.encode_bmp(w, h, px)
+    payload = REF.encode_bmp(w, h, px)
     dw, dh, maxval, decoded = MM.decode_bmp(payload)
     assert (dw, dh, maxval) == (w, h, 255)
     assert np.array_equal(decoded, px)
@@ -52,7 +54,7 @@ def test_bmp_layout_is_really_bottom_up_bgr():
     px = np.zeros((2, 1, 3), dtype=np.uint8)
     px[0, 0] = (10, 20, 30)  # top row RGB
     px[1, 0] = (40, 50, 60)  # bottom row RGB
-    payload = MM.encode_bmp(1, 2, px)
+    payload = REF.encode_bmp(1, 2, px)
     raster = payload[54:]
     assert len(raster) == 8  # 2 rows x (3 bytes + 1 pad byte to the 4-byte boundary)
     assert raster[:3] == bytes([60, 50, 40])  # bottom row first, BGR
@@ -60,10 +62,22 @@ def test_bmp_layout_is_really_bottom_up_bgr():
     assert raster[4:7] == bytes([30, 20, 10])  # then the top row, BGR
 
 
+def test_bmp_negative_height_is_top_down():
+    """A negative biHeight declares top-down rows (the DIB convention raw
+    AVI frames share); the decoder returns the true height and pixels
+    instead of a negative height over row-reversed pixels."""
+    w, h = 5, 3
+    px = _px(w, h, seed=4)
+    header = bytearray(REF.encode_bmp(w, h, px)[:54])
+    struct.pack_into("<i", header, 22, -h)
+    dw, dh, _, out = MM.decode_bmp(bytes(header) + MM._dib_rows(px, top_down=True))
+    assert (dw, dh) == (w, h) and np.array_equal(out, px)
+
+
 def test_decode_image_real_dispatch():
     px = _px(4, 3)
     assert MM.decode_image_real(MM.encode_ppm(4, 3, px))["width"] == 4
-    assert MM.decode_image_real(MM.encode_bmp(4, 3, px))["height"] == 3
+    assert MM.decode_image_real(REF.encode_bmp(4, 3, px))["height"] == 3
     assert (MM.decode_image_real(MM.encode_png(4, 3, px))["pixels"] == px).all()
     assert MM.decode_image_real(MM.encode_jpeg(4, 3, px))["width"] == 4
     with pytest.raises(NotImplementedError):
@@ -442,14 +456,14 @@ def test_pillow_adapter_decodes_what_native_quarantines(spark):
     im.save(buf, format="GIF")
     gif = buf.getvalue()
     # native: quarantined (unknown magic); pillow: decoded
-    d = MM.decode_image_pillow(gif)
+    d = REF.decode_image_pillow(gif)
     assert (d["width"], d["height"]) == (5, 4)
     df = spark.createDataFrame([(1, bytearray(gif))], "doc_id long, img binary")
     native = MM.decode_image_stats(df, safe=True).collect()[0]
     assert native["status"].startswith("quarantined:")
     # cross-backend agreement on a format both decode natively
     ppm = MM.encode_ppm(5, 4, MM._fixture_pixels(7, 5, 4))
-    assert MM.decode_image_pillow(ppm)["pixels"].tolist() == MM.decode_image_real(ppm)["pixels"].tolist()
+    assert REF.decode_image_pillow(ppm)["pixels"].tolist() == MM.decode_image_real(ppm)["pixels"].tolist()
 
 
 def test_y4m_roundtrip_and_seams():
@@ -560,7 +574,7 @@ def test_audio_features_exact(spark):
     per-channel sums (ch1 NULL for mono), L1 energy."""
     ids = [0, 1, 10, 37]  # mixes mono (even) and stereo (odd)... geom: ch = 1 + id % 2
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    rows = {r["doc_id"]: r for r in MM.audio_features(MM.render_wav_payloads(docs)).collect()}
+    rows = {r["doc_id"]: r for r in MM.audio_features(REF.render_wav_payloads(docs)).collect()}
     for i in ids:
         rate, ch, n = MM._wav_fixture_geom(i)
         s = MM._wav_fixture_samples(i, ch, n).astype("int64")
@@ -1140,14 +1154,14 @@ def test_av_compressed_fixtures_quarantine_natively(spark):
             assert np.array_equal(
                 MM._alaw2lin(codes), np.frombuffer(audioop.alaw2lin(codes.tobytes(), 2), "<i2")
             )
-            assert MM._lin2ulaw(full).tobytes() == audioop.lin2ulaw(full.astype("<i2").tobytes(), 2)
+            assert REF.lin2ulaw(full).tobytes() == audioop.lin2ulaw(full.astype("<i2").tobytes(), 2)
             assert np.array_equal(
                 MM._ulaw2lin(codes), np.frombuffer(audioop.ulaw2lin(codes.tobytes(), 2), "<i2")
             )
     except ImportError:
         pass  # 3.13+: the expander round-trip below still pins the quantizer
     # expand(compress(x)) is the G.711 quantizer: idempotent on its range
-    for enc, dec in ((MM._lin2alaw, MM._alaw2lin), (MM._lin2ulaw, MM._ulaw2lin)):
+    for enc, dec in ((MM._lin2alaw, MM._alaw2lin), (REF.lin2ulaw, MM._ulaw2lin)):
         q = dec(enc(full))
         assert np.array_equal(dec(enc(q)), q)
 
@@ -1155,7 +1169,7 @@ def test_av_compressed_fixtures_quarantine_natively(spark):
     xs = x.reshape(-1, 2)
     for enc_wav, law_enc, law_dec in (
         (MM.encode_wav_alaw, MM._lin2alaw, MM._alaw2lin),
-        (MM.encode_wav_ulaw, MM._lin2ulaw, MM._ulaw2lin),
+        (REF.encode_wav_ulaw, REF.lin2ulaw, MM._ulaw2lin),
     ):
         rate, out = MM.decode_wav(enc_wav(8000, xs))
         assert rate == 8000 and np.array_equal(out, law_dec(law_enc(xs.reshape(-1))).reshape(-1, 2))
@@ -1192,7 +1206,7 @@ def test_av_compressed_fixtures_quarantine_natively(spark):
     adf = spark.createDataFrame(
         [(1, bytearray(bytes(mp3_wav))), (2, bytearray(good_wav)),
          (3, bytearray(MM.encode_wav_alaw(8000, xs))),
-         (4, bytearray(MM.encode_wav_ulaw(8000, xs))),
+         (4, bytearray(REF.encode_wav_ulaw(8000, xs))),
          (5, bytearray(f32_wav)), (6, bytearray(adpcm_wav))],
         "doc_id long, audio binary",
     )
@@ -1231,22 +1245,22 @@ def test_ffmpeg_adapter_cross_checks_native_decoders(spark):
 
     rng = np.random.default_rng(11)
     x = rng.integers(-32768, 32768, size=4000).astype(np.int16).reshape(-1, 2)
-    for enc in (MM.encode_wav_alaw, MM.encode_wav_ulaw, MM.encode_wav_f32):
+    for enc in (MM.encode_wav_alaw, REF.encode_wav_ulaw, MM.encode_wav_f32):
         wav = enc(8000, x)
         rate_n, out_n = MM.decode_wav(wav)
-        rate_a, out_a = MM.decode_audio_ffmpeg(wav)
+        rate_a, out_a = REF.decode_audio_ffmpeg(wav)
         assert rate_n == rate_a == 8000 and np.array_equal(out_n, out_a), enc.__name__
     # ADPCM: ffmpeg's adpcm_ima_wav decoder against the native one on
     # the native encoder's output
     tri = MM._adpcm_fixture_samples(5, 2, 500)
     adpcm_wav = MM.encode_wav_adpcm(8000, tri)
     rate_n, out_n = MM.decode_wav(adpcm_wav)
-    rate_a, out_a = MM.decode_audio_ffmpeg(adpcm_wav)
+    rate_a, out_a = REF.decode_audio_ffmpeg(adpcm_wav)
     assert rate_n == rate_a == 8000 and np.array_equal(out_n, out_a)
 
     frames = rng.integers(0, 256, size=(4, 6, 5, 3)).astype(np.uint8)
     raw_avi = MM.encode_avi_rawrgb(5, 6, frames)
-    w, h, out = MM.decode_video_ffmpeg(raw_avi)
+    w, h, out = REF.decode_video_ffmpeg(raw_avi)
     assert (w, h, len(out)) == (5, 6, 4)
     assert np.array_equal(out, frames)
     wn, hn, out_native = MM.decode_avi_mjpeg(raw_avi)
@@ -1259,7 +1273,7 @@ def test_ffmpeg_adapter_cross_checks_native_decoders(spark):
     # emit) back to the exact source samples
     for mode in ("independent", "left-side", "mid-side"):
         flac = MM.encode_flac(8000, x, stereo_mode=mode)
-        rate_a, out_a = MM.decode_audio_ffmpeg(flac)
+        rate_a, out_a = REF.decode_audio_ffmpeg(flac)
         assert rate_a == 8000 and np.array_equal(out_a, x), mode
     proc = subprocess.run(
         ["ffmpeg", "-v", "error", "-i", "pipe:0", "-acodec", "flac", "-f", "flac", "pipe:1"],
@@ -1281,7 +1295,7 @@ def test_ffmpeg_adapter_cross_checks_native_decoders(spark):
         mp3_wav = proc.stdout
         with pytest.raises(NotImplementedError, match="PERCEPTUAL"):
             MM.decode_wav(mp3_wav)
-        rate_m, out_m = MM.decode_audio_ffmpeg(mp3_wav)
+        rate_m, out_m = REF.decode_audio_ffmpeg(mp3_wav)
         assert rate_m == 8000 and out_m.shape[1] == 2
         assert abs(out_m.shape[0] - x.shape[0]) < 3000  # codec delay padding
 
@@ -1343,7 +1357,7 @@ def _build_flac_frame(rate, nch, bps, block, write_subframes, md5_bytes=None):
     around caller-supplied subframe bits — the harness for decoder
     paths our encoder never emits (LPC, Rice2, escapes, wasted bits,
     multi-partition residuals, odd bit depths)."""
-    w = MM._FlacBitWriter()
+    w = MM._BitWriter()
     w.write(0x3FFE, 14); w.write(0, 1); w.write(0, 1)
     w.write(7, 4)        # block size: 16-bit value follows
     w.write(0, 4)        # rate: from STREAMINFO
@@ -1357,7 +1371,7 @@ def _build_flac_frame(rate, nch, bps, block, write_subframes, md5_bytes=None):
     w.align()
     w.write(MM._crc16_flac(bytes(w.buf)), 16)
     frame = w.getvalue()
-    si = MM._FlacBitWriter()
+    si = MM._BitWriter()
     si.write(block, 16); si.write(block, 16)
     si.write(len(frame), 24); si.write(len(frame), 24)
     si.write(rate, 20); si.write(nch - 1, 3); si.write(bps - 1, 5)
@@ -1603,7 +1617,7 @@ def test_flac_frame_bps_must_match_streaminfo():
     channel-count checks."""
     # hand-assemble: STREAMINFO declares 16-bit, frame ss_code says 8-bit
     block = 4
-    w = MM._FlacBitWriter()
+    w = MM._BitWriter()
     w.write(0x3FFE, 14); w.write(0, 1); w.write(0, 1)
     w.write(7, 4)   # block size: 16-bit value follows
     w.write(0, 4)   # rate: from STREAMINFO
@@ -1618,7 +1632,7 @@ def test_flac_frame_bps_must_match_streaminfo():
     w.align()
     w.write(MM._crc16_flac(bytes(w.buf)), 16)
     frame = w.getvalue()
-    si = MM._FlacBitWriter()
+    si = MM._BitWriter()
     si.write(block, 16); si.write(block, 16)
     si.write(len(frame), 24); si.write(len(frame), 24)
     si.write(8000, 20); si.write(0, 3); si.write(16 - 1, 5)
@@ -1632,3 +1646,105 @@ def test_flac_frame_bps_must_match_streaminfo():
         MM.decode_flac(payload)
 
 
+
+
+def _crc_bitwise(data: bytes, poly: int, width: int) -> int:
+    """Bit-at-a-time MSB-first CRC, init 0: the textbook definition the
+    table-driven FLAC CRCs must agree with."""
+    top, mask, r = 1 << (width - 1), (1 << width) - 1, 0
+    for byte in data:
+        r ^= byte << (width - 8)
+        for _ in range(8):
+            r = ((r << 1) ^ poly) & mask if r & top else (r << 1) & mask
+    return r
+
+
+def test_flac_crcs_match_standard_check_values():
+    """The FLAC encoder and decoder share ``_crc8_flac``/``_crc16_flac``,
+    so a wrong table would still round-trip every FLAC test. Pin both to
+    the catalogue check values of their CRC models (CRC-8 poly 0x07 and
+    CRC-16/UMTS poly 0x8005, both init 0, unreflected) and to a bitwise
+    reference on inputs of every size up to 50 KB, far past any FLAC
+    frame the encoder writes."""
+    assert MM._crc8_flac(b"123456789") == 0xF4
+    assert MM._crc16_flac(b"123456789") == 0xFEE8
+    buf = np.random.default_rng(3).integers(0, 256, 50_000, dtype=np.uint8).tobytes()
+    for n in (0, 1, 2, 89, 4095, 4096, 4097, 50_000):
+        assert MM._crc8_flac(buf[:n]) == _crc_bitwise(buf[:n], 0x07, 8), n
+        assert MM._crc16_flac(buf[:n]) == _crc_bitwise(buf[:n], 0x8005, 16), n
+
+
+@pytest.mark.parametrize("stuff", [False, True])
+def test_bit_writer_is_bounded_and_exact(stuff):
+    """The one MSB-first bit writer serves FLAC (zero padding) and JPEG
+    (0xFF byte stuffing, one-bit padding). Its accumulator keeps only the
+    bits not yet emitted, so a long stream costs linear time: after each
+    of 400k 9-bit writes it holds fewer than 8 bits. The bytes equal a
+    numpy packbits reference with the stuffing and padding applied."""
+    vals = np.random.default_rng(5).integers(0, 512, 400_000)
+    w = MM._BitWriter(stuff=stuff)
+    for i, v in enumerate(vals.tolist()):
+        w.write(v, 9)
+        if i % 997 == 0:
+            assert w.acc.bit_length() < 8, i
+    assert w.acc.bit_length() < 8
+    bits = ((vals[:, None] >> np.arange(8, -1, -1)) & 1).astype(np.uint8).reshape(-1)
+    pad = (-len(bits)) % 8
+    bits = np.concatenate([bits, np.full(pad, 1 if stuff else 0, np.uint8)])
+    ref = np.packbits(bits).tobytes()
+    if stuff:
+        ref = ref.replace(b"\xff", b"\xff\x00")
+    assert w.getvalue() == ref
+
+
+def test_ffmpeg_reference_adapters_parse_container_headers(monkeypatch):
+    """The ffmpeg adapters take rate, channels and frame geometry from
+    the container header and only the sample/pixel stream from ffmpeg.
+    With ``run_ffmpeg`` replaced by a stub that returns known s16le or
+    rgb24 bytes, the header parsing runs here even without ffmpeg: WAV
+    (also behind a leading chunk), FLAC STREAMINFO and AVI avih, the
+    channel pin passed to ffmpeg, and the not-whole-frames refusals."""
+    calls = []
+    out = {}
+
+    def fake_ffmpeg(args, payload):
+        calls.append(args)
+        return out["raw"]
+
+    monkeypatch.setattr(REF, "run_ffmpeg", fake_ffmpeg)
+    stereo = MM._wav_fixture_samples(3, 2, 41)
+    mono = MM._wav_fixture_samples(4, 1, 40)
+    wav = MM.encode_wav_alaw(11025, stereo)
+    junk_first = wav[:12] + b"JUNK" + struct.pack("<I", 3) + b"abc\x00" + wav[12:]
+    for payload, rate, samples in (
+        (wav, 11025, stereo),
+        (junk_first, 11025, stereo),
+        (MM.encode_wav_f32(8000, mono), 8000, mono),
+        (MM.encode_flac(22050, stereo, stereo_mode="mid-side"), 22050, stereo),
+        (MM.encode_flac(8000, mono), 8000, mono),
+    ):
+        out["raw"] = samples.astype("<i2").tobytes()
+        r, s = REF.decode_audio_ffmpeg(payload)
+        assert r == rate and s.dtype == np.int16 and np.array_equal(s, samples)
+        assert calls[-1][calls[-1].index("-ac") + 1] == str(samples.shape[1])
+        out["raw"] = out["raw"][:-2]  # one sample short of whole stereo frames
+        if samples.shape[1] == 2:
+            with pytest.raises(ValueError, match="not whole interleaved frames"):
+                REF.decode_audio_ffmpeg(payload)
+    with pytest.raises(ValueError, match="missing fmt"):
+        REF.decode_audio_ffmpeg(b"RIFF" + struct.pack("<I", 4) + b"WAVE")
+    with pytest.raises(ValueError, match="RIFF/WAVE or FLAC"):
+        REF.decode_audio_ffmpeg(b"OggS" + bytes(40))
+
+    frames = np.random.default_rng(9).integers(0, 256, (3, 6, 5, 3)).astype(np.uint8)
+    for avi in (MM.encode_avi_rawrgb(5, 6, frames), MM.encode_avi_rawrgb(5, 6, frames, top_down=True)):
+        out["raw"] = frames.tobytes()
+        w, h, got = REF.decode_video_ffmpeg(avi)
+        assert (w, h) == (5, 6) and np.array_equal(got, frames)
+        assert calls[-1] == ["-f", "rawvideo", "-pix_fmt", "rgb24"]
+        for bad in (frames.tobytes()[:-1], b""):
+            out["raw"] = bad
+            with pytest.raises(ValueError, match="not whole rgb24 frames"):
+                REF.decode_video_ffmpeg(avi)
+    with pytest.raises(ValueError, match="RIFF/AVI"):
+        REF.decode_video_ffmpeg(wav)

@@ -25,15 +25,6 @@ PKG = "custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark"
 #: (module path relative to the package, name) -> why it stays unreached.
 ALLOWED_UNREACHED = {
     ("__init__.py", "__version__"): "package metadata, read by humans and packaging",
-    ("operators/multimodal.py", "encode_bmp"): "builds BMP fixtures for the live image decoders' tests",
-    ("operators/multimodal.py", "encode_wav_ulaw"): "builds mu-law WAV fixtures for the live audio decoder's tests",
-    ("operators/multimodal.py", "_lin2ulaw"): "mu-law quantizer behind encode_wav_ulaw",
-    ("operators/multimodal.py", "render_wav_payloads"): "renders WAV fixture payloads for the live audio decoder's tests",
-    ("operators/multimodal.py", "decode_video_ffmpeg"): "reference adapter the native video decoders are cross-checked against",
-    ("operators/multimodal.py", "decode_audio_ffmpeg"): "reference decoder the native audio decoders are cross-checked against",
-    ("operators/multimodal.py", "decode_image_pillow"): "reference decoder the native image codecs are cross-checked against",
-    ("operators/multimodal.py", "_run_ffmpeg"): "subprocess helper of the two ffmpeg reference decoders",
-    ("operators/multimodal.py", "_require_ffmpeg"): "binary lookup of the ffmpeg reference decoders",
 }
 
 
