@@ -43,10 +43,10 @@ def dsum(col: Column | str, scale: int = 4, alias: str | None = None) -> Column:
     return out.alias(alias) if alias else out
 
 
-def davg(col: Column | str, scale: int = 4, alias: str | None = None) -> Column:
-    """Exact-sum AVG: decimal sum cast to double, divided by count."""
+def davg(col: Column | str, alias: str | None = None) -> Column:
+    """Exact-sum AVG: scale-4 decimal sum cast to double, divided by count."""
     c = F.col(col) if isinstance(col, str) else col
-    out = F.sum(c.cast(f"decimal(27,{scale})")).cast("double") / F.count(c)
+    out = F.sum(c.cast("decimal(27,4)")).cast("double") / F.count(c)
     return out.alias(alias) if alias else out
 
 
@@ -85,9 +85,9 @@ MONEY = "decimal(12,2)"  # l_extendedprice, p_retailprice, *_acctbal, o_totalpri
 RATE = "decimal(3,2)"  # l_discount / l_tax and 1±them (all 2-digit, < 10)
 
 
-def rev_col(ep: str = "l_extendedprice", disc: str = "l_discount") -> Column:
-    """``ep * (1 - disc)`` as an exact decimal(16,4)."""
-    return F.col(ep).cast(MONEY) * (F.lit(1) - F.col(disc)).cast(RATE)
+def rev_col() -> Column:
+    """``l_extendedprice * (1 - l_discount)`` as an exact decimal(16,4)."""
+    return F.col("l_extendedprice").cast(MONEY) * (F.lit(1) - F.col("l_discount")).cast(RATE)
 
 
 def rev_sql(ep: str = "l_extendedprice", disc: str = "l_discount") -> str:

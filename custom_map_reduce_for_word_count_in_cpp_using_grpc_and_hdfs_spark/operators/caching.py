@@ -37,9 +37,7 @@ logger = logging.getLogger(__name__)
 #: 0.1×, banded hyperplane codes 6→30→40× (grows with the log2(N) band
 #: count until its 48-band cap — the one measured shape ABOVE this
 #: default, which is why per-site bounds exist). The 32× default
-#: remains for external callers with unmeasured shapes; hashed=False
-#: string shingles (measured 8.7→13.8×, still growing at sf10) are the
-#: documented case to keep at the default or higher. The lazy-path log
+#: remains for external callers with unmeasured shapes. The lazy-path log
 #: line below is the audit trail for diagnosing a mis-broadcast that
 #: slipped past a bound.
 _EXPANSION_BOUND = 32

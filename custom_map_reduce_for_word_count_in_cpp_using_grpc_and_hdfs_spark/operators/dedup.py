@@ -98,18 +98,16 @@ def shingles_sql(text_expr: str, n: int = 3) -> str:
     )
 
 
-def doc_shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3, hashed: bool = True
-) -> DataFrame:
-    """Distinct (doc_id, n_sh, shingle) rows — the inverted-index input,
-    with the per-doc DISTINCT shingle count carried on every row.
+def doc_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Distinct (doc_id, n_sh, shingle) rows over word 3-gram shingles —
+    the inverted-index input of every near-dup route, with the per-doc
+    DISTINCT shingle count carried on every row.
 
-    ``hashed=True`` replaces the shingle string with its xxhash64: the
-    distinct + self-join then shuffle 8-byte keys instead of ~25-byte
-    strings (measurably faster, and the at-scale default — shuffling
-    hashes, not text). Set arithmetic is exact unless two distinct
-    shingles collide in 64 bits: P ≈ n²/2⁶⁵ ≈ 2·10⁻⁹ at 260k shingles.
-    Pass ``hashed=False`` where provable exactness beats speed.
+    The shingle is its xxhash64, not the string: the distinct +
+    self-join then shuffle 8-byte keys instead of ~25-byte strings
+    (shuffling hashes, not text). Set arithmetic is exact unless two
+    distinct shingles collide in 64 bits: P ≈ n²/2⁶⁵ ≈ 2·10⁻⁹ at 260k
+    shingles.
 
     Why ``n_sh`` rides along (round 8): Jaccard verification needs
     |A| and |B| per candidate pair. Joining a per-doc sizes aggregate
@@ -127,10 +125,9 @@ def doc_shingles(
     """
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import spread
 
-    shingle = F.explode(shingles_col(text_col, n)).alias("shingle")
+    shingle = F.explode(shingles_col(text_col, 3)).alias("shingle")
     out = spread(df, by=[id_col]).select(F.col(id_col), shingle)
-    if hashed:
-        out = out.select(id_col, F.xxhash64("shingle").alias("shingle"))
+    out = out.select(id_col, F.xxhash64("shingle").alias("shingle"))
     per_doc = out.groupBy(id_col).agg(F.collect_set("shingle").alias("_sh"))
     return per_doc.select(
         F.col(id_col),
@@ -144,11 +141,10 @@ def jaccard_pairs(
     threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     max_shingle_df: int | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (doc_a < doc_b, jaccard ≥ t).
+    """Exact word 3-gram Jaccard near-dup pairs (doc_a < doc_b, jaccard ≥ t).
 
     Candidates = docs sharing ≥1 (non-capped) shingle; intersection size
     falls out of the join group count; union from per-doc distinct
@@ -174,7 +170,7 @@ def jaccard_pairs(
     # persist (bounded-by-measurement, not a proof — see
     # operators/caching.py::eager_stats for the bound and its audit log).
     ds = (
-        eager_stats(doc_shingles(df, id_col, text_col, n), SHINGLE_INDEX_BOUND)
+        eager_stats(doc_shingles(df, id_col, text_col), SHINGLE_INDEX_BOUND)
         if owned
         else shingles
     )
@@ -221,7 +217,6 @@ def minhash_signature(
     num_perm: int = 32,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, sig: array<long>) — per-permutation min over the doc's
@@ -239,7 +234,7 @@ def minhash_signature(
     ``shingles`` lets callers that already materialized
     :func:`doc_shingles` (e.g. for Jaccard verification) reuse it.
     """
-    ds = shingles if shingles is not None else doc_shingles(df, id_col, text_col, n)
+    ds = shingles if shingles is not None else doc_shingles(df, id_col, text_col)
     mins = [
         F.min(minhash_value(F.col("shingle"), p)).alias(f"_m{p}") for p in range(num_perm)
     ]
@@ -329,17 +324,14 @@ def lsh_candidate_pairs(
 def minhash_near_dups(
     df: DataFrame,
     threshold: float = 0.7,
-    num_perm: int = 32,
-    bands: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """LSH candidates verified with exact Jaccard — returns (doc_a, doc_b,
-    jaccard ≥ threshold). Approximate only in *recall* (a true pair whose
-    every band disagrees is missed); precision is exact thanks to the
-    verification join.
+    """LSH candidates (32 permutations in 8 bands of 4) verified with
+    exact Jaccard — returns (doc_a, doc_b, jaccard ≥ threshold).
+    Approximate only in *recall* (a true pair whose every band disagrees
+    is missed); precision is exact thanks to the verification join.
 
     ``shingles`` — share an already-persisted :func:`doc_shingles` frame
     (see :func:`jaccard_pairs`); caller-owned frames are not re-cached or
@@ -348,16 +340,11 @@ def minhash_near_dups(
     # materialize the shingle inverted index once
     owned = shingles is None
     ds = (
-        eager_stats(doc_shingles(df, id_col, text_col, n), SHINGLE_INDEX_BOUND)
+        eager_stats(doc_shingles(df, id_col, text_col), SHINGLE_INDEX_BOUND)
         if owned
         else shingles
     )
-    cands = lsh_candidate_pairs(
-        minhash_signature(df, num_perm, id_col, text_col, n, shingles=ds),
-        bands,
-        id_col,
-        num_perm,
-    )
+    cands = lsh_candidate_pairs(minhash_signature(df, 32, id_col, text_col, shingles=ds), 8, id_col, 32)
     # |A|/|B| ride on the index rows (see doc_shingles) — verification is
     # a min() in the pair aggregation, no per-doc sizes joins (round 8)
     a = ds.select(F.col(id_col).alias("doc_a"), "shingle", F.col("n_sh").alias("n_a"))
@@ -413,6 +400,11 @@ def minhash_near_dups(
 #: measured). At 100 TB edge counts past the cap take the loop
 #: unchanged — same degrade-to-distributed shape as every other seam.
 CC_DRIVER_LOCAL_MAX_EDGES = 2_000_000
+
+#: Round budget of the distributed components loop, read at call time.
+#: Path halving converges in O(log diameter) rounds, so 20 covers a
+#: 1M-node chain.
+CC_MAX_ITERS = 20
 
 import logging as _logging
 
@@ -488,7 +480,6 @@ def connected_components(
     id_col: str = "id",
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iters: int = 20,
     check_vertices: bool | None = None,
 ) -> DataFrame:
     """(id, component) — connected components; component = min vertex id
@@ -582,6 +573,7 @@ def connected_components(
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
 
     dtypes = dict(pairs.dtypes)
+    labels = None
     integral = dtypes["a"] == dtypes["b"] and dtypes["a"] in ("bigint", "int", "smallint", "tinyint")
     if integral:
         # one job for both decision statistics over the checkpointed
@@ -610,38 +602,17 @@ def connected_components(
             detail=f"driver-local cap {CC_DRIVER_LOCAL_MAX_EDGES} edges",
         ).choice == "driver_local":
             labels = _driver_local_labels(pairs, dtypes["a"])
-            all_labels = vertices.select(
-                F.col(id_col).alias("vid"), F.col(id_col).alias("comp")
-            )
-            if check_vertices:
-                stray = labels.join(all_labels.select("vid"), "vid", "left_anti").count()
-                if stray:
-                    raise ValueError(
-                        f"connected_components: {stray} edge endpoints do not appear "
-                        f"in vertices — pass the full vertex set (filtered vertices "
-                        "with unfiltered edges would contaminate the output)"
-                    )
-            singletons = all_labels.join(labels.select("vid"), "vid", "left_anti")
-            return labels.unionAll(singletons).select(F.col("vid").alias(id_col), "comp")
 
-    # materialize the vertex frame once — the singleton anti-join re-reads
-    # it, and vertices often come from an expensive upstream (the pipeline
-    # passes the exact-dedup survivor set). prefer_local: this is the one
-    # CORPUS-sized frame in the loop — a reliable write here would dwarf
-    # the edge-endpoint-sized per-round checkpoints, and executor loss
-    # only costs recomputing a single select
-    all_labels = materialize(
-        vertices.select(F.col(id_col).alias("vid"), F.col(id_col).alias("comp")),
-        prefer_local=True,
-    )
-    sym = pairs.unionAll(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # sym holds both directions, so grouping on "a" covers every endpoint
-    labels = materialize(
-        sym.groupBy("a")
-        .agg(F.min("b").alias("nb"))
-        .select(F.col("a").alias("vid"), F.least("a", "nb").alias("comp"))
-    )
-    singletons = all_labels.join(labels.select("vid"), "vid", "left_anti")
+    all_labels = vertices.select(F.col(id_col).alias("vid"), F.col(id_col).alias("comp"))
+    if labels is None:
+        # materialize the vertex frame once — the singleton anti-join
+        # re-reads it, and vertices often come from an expensive upstream
+        # (the pipeline passes the exact-dedup survivor set). prefer_local:
+        # this is the one CORPUS-sized frame in the loop — a reliable write
+        # here would dwarf the edge-endpoint-sized per-round checkpoints,
+        # and executor loss only costs recomputing a single select
+        all_labels = materialize(all_labels, prefer_local=True)
+        labels = _hash_min_labels(pairs)
     if check_vertices:
         stray = labels.join(all_labels.select("vid"), "vid", "left_anti").count()
         if stray:
@@ -650,8 +621,23 @@ def connected_components(
                 f"in vertices — pass the full vertex set (filtered vertices "
                 "with unfiltered edges would contaminate the output)"
             )
+    singletons = all_labels.join(labels.select("vid"), "vid", "left_anti")
+    return labels.unionAll(singletons).select(F.col("vid").alias(id_col), "comp")
+
+
+def _hash_min_labels(pairs: DataFrame) -> DataFrame:
+    """(vid, comp) for every endpoint of the materialized (a, b) pair
+    list: the distributed hash-min + path-halving loop of
+    :func:`connected_components`, at most :data:`CC_MAX_ITERS` rounds."""
+    sym = pairs.unionAll(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    # sym holds both directions, so grouping on "a" covers every endpoint
+    labels = materialize(
+        sym.groupBy("a")
+        .agg(F.min("b").alias("nb"))
+        .select(F.col("a").alias("vid"), F.least("a", "nb").alias("comp"))
+    )
     changed = 0
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         msgs = (
             sym.join(labels, sym.a == labels.vid)
             .select(F.col("b").alias("vid"), F.col("comp").alias("msg"))
@@ -685,15 +671,15 @@ def connected_components(
         if changed == 0:
             break
     if changed != 0:
-        # chain-shaped clusters with diameter > max_iters are exactly the
+        # chain-shaped clusters with diameter > CC_MAX_ITERS are exactly the
         # transitive case this operator exists for — partial labels would
         # silently under-merge, so fail loudly instead
         raise RuntimeError(
             f"connected_components: {changed} labels still changing after "
-            f"max_iters={max_iters} rounds — component diameter exceeds the "
-            "iteration budget; raise max_iters"
+            f"CC_MAX_ITERS={CC_MAX_ITERS} rounds — component diameter exceeds the "
+            "iteration budget; raise CC_MAX_ITERS"
         )
-    return labels.unionAll(singletons).select(F.col("vid").alias(id_col), "comp")
+    return labels
 
 
 def near_dup_components(
@@ -702,10 +688,7 @@ def near_dup_components(
     edge_method: str = "jaccard",
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     shingles: DataFrame | None = None,
-    max_iters: int = 20,
-    **edge_kwargs,
 ) -> DataFrame:
     """(id, comp) dedup clusters with a SELECTABLE edge source — the
     composition VERDICT r6 item 2 asked for (previously a user had to
@@ -730,18 +713,12 @@ def near_dup_components(
       EDGE_AUTO_CROSSOVER_POSTINGS pins the auto switch).
 
     Both routes accept a caller-shared ``shingles`` frame (see
-    :func:`jaccard_pairs`); extra ``edge_kwargs`` pass through to the
-    edge generator (e.g. ``max_shingle_df``, ``num_perm``, ``bands``).
+    :func:`jaccard_pairs`).
     """
     if edge_method == "jaccard":
-        edges = jaccard_pairs(
-            df, threshold, id_col, text_col, n, shingles=shingles, **edge_kwargs
-        )
+        edges = jaccard_pairs(df, threshold, id_col, text_col, shingles=shingles)
     elif edge_method == "minhash":
-        edges = minhash_near_dups(
-            df, threshold, id_col=id_col, text_col=text_col, n=n,
-            shingles=shingles, **edge_kwargs,
-        )
+        edges = minhash_near_dups(df, threshold, id_col, text_col, shingles=shingles)
     else:
         raise ValueError(f"edge_method must be 'jaccard' or 'minhash', got {edge_method!r}")
     return connected_components(
@@ -750,7 +727,6 @@ def near_dup_components(
         id_col=id_col,
         src_col="doc_a",
         dst_col="doc_b",
-        max_iters=max_iters,
     )
 
 
@@ -784,7 +760,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     return per_doc.select(F.col(id_col), bit.alias("simhash"))
 
 
-def simhash_sql(id_col: str = "doc_id", text_col: str = "text", table: str = "documents") -> str:
+def simhash_sql(id_col: str = "doc_id", text_col: str = "text") -> str:
     """DuckDB rendering of :func:`simhash` (same hash, same majority rule)."""
     return f"""
     SELECT {id_col}, CAST(SUM(bitval) AS BIGINT) AS simhash FROM (
@@ -797,7 +773,7 @@ def simhash_sql(id_col: str = "doc_id", text_col: str = "text", table: str = "do
                 SELECT {id_col}, {poly_hash_token_sql('tok')} AS h
                 FROM (
                     SELECT {id_col}, unnest({tokens_sql(text_col)}) AS tok
-                    FROM {table}
+                    FROM documents
                 )
             )
         ) GROUP BY {id_col}, b
@@ -805,13 +781,7 @@ def simhash_sql(id_col: str = "doc_id", text_col: str = "text", table: str = "do
     """
 
 
-def simhash_block_geometry(
-    n_docs: int,
-    max_distance: int = 3,
-    bits: int = SIMHASH_BITS,
-    margin_bits: int = 13,
-    max_combos: int = 40,
-) -> int:
+def simhash_block_geometry(n_docs: int, max_distance: int = 3) -> int:
     """Number of pigeonhole blocks B for :func:`simhash_near_dups`,
     sized so the block join's key space outruns the corpus (the
     round-5 sf10 lesson: fixed B = d+1 measured 13.7x wall per 10x
@@ -820,8 +790,8 @@ def simhash_block_geometry(
     A distance-<=d pair agrees on >= B-d of B blocks, so candidates
     come from equi-joins on every (B-d)-block combination; key width
     grows with B (B=4: one 14-bit block; B=5: 22 bits; B=6: 27;
-    B=7: 32). B is the smallest value with key_bits >= log2(N) +
-    margin_bits, capped at C(B,d) <= max_combos.
+    B=7: 32). B is the smallest value with key_bits >= log2(N) + 13,
+    capped at C(B,d) <= 40.
 
     The margin is MEASURED, not modeled: a uniform-fingerprint
     collision model (mass = C(B,d)*C(N,2)/2^key_bits) says ~2 extra
@@ -838,12 +808,12 @@ def simhash_block_geometry(
     from math import comb, log2
 
     d = max_distance
-    target = log2(max(n_docs, 2)) + margin_bits
+    target = log2(max(n_docs, 2)) + 13
     best = d + 1
-    for n_blocks in range(d + 1, bits // 4 + 1):
-        if comb(n_blocks, d) > max_combos:
+    for n_blocks in range(d + 1, SIMHASH_BITS // 4 + 1):
+        if comb(n_blocks, d) > 40:
             break
-        base, extra = divmod(bits, n_blocks)
+        base, extra = divmod(SIMHASH_BITS, n_blocks)
         widths = sorted(base + (1 if i < extra else 0) for i in range(n_blocks))
         key_bits = sum(widths[: n_blocks - d])  # conservative: smallest blocks
         best = n_blocks
@@ -857,8 +827,6 @@ def simhash_near_dups(
     max_distance: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_blocks: int | None = None,
-    corpus_size: int | None = None,
 ) -> DataFrame:
     """Pairs with hamming(simhash_a, simhash_b) ≤ d via the generalized
     pigeonhole block join: 56 bits split into B ≥ d+1 blocks; a
@@ -874,9 +842,8 @@ def simhash_near_dups(
     B widens the join key with bits from the other blocks — the
     "prefix-bit sharding" route BASELINE.md §G documented, generalized
     so the extra bits keep exact recall instead of probabilistic.
-    Geometry comes from :func:`simhash_block_geometry` sized by
-    ``corpus_size``; when neither ``n_blocks`` nor ``corpus_size`` is
-    given, the corpus is counted only if the scan's file bytes say the
+    Geometry comes from :func:`simhash_block_geometry` sized by the
+    exact corpus count, taken only if the scan's file bytes say the
     default shape could go quadratic (>16 MB — the same provable-risk
     gating as caching.eager_stats, so small-SF benches never pay the
     count job)."""
@@ -885,15 +852,11 @@ def simhash_near_dups(
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count, scan_file_sizes
 
     d = max_distance
-    if n_blocks is None:
-        if corpus_size is None:
-            sizes = scan_file_sizes(df)
-            if sizes is not None and sum(sizes) <= 16 * 1024 * 1024:
-                n_blocks = d + 1  # provably-safe small corpus: skip the count
-            else:
-                corpus_size = row_count(df)  # the geometry needs the exact n
-        if n_blocks is None:
-            n_blocks = simhash_block_geometry(corpus_size, d)
+    sizes = scan_file_sizes(df)
+    if sizes is not None and sum(sizes) <= 16 * 1024 * 1024:
+        n_blocks = d + 1  # provably-safe small corpus: skip the count
+    else:
+        n_blocks = simhash_block_geometry(row_count(df), d)
     # persisted: both join sides and all combination projections read the
     # fingerprints; without the barrier each reference recomputes them.
     # Eagerly materialized so the block self-join below plans against the
@@ -1021,19 +984,14 @@ def _winnow_fps_batch(texts, k: int, w: int):
     return pd.Series(out)
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Distinct winnowing fingerprints per document — the
     exact-substring dedup route (Schleimer et al. 2003 winnowing; the
     detection rule behind exact-substring training-data dedup a la Lee
     et al. 2022): polynomial-hash every character k-gram, keep the
     minimum hash of each sliding window of ``w`` consecutive k-gram
-    hashes, distinct the picks per document. Returns (id_col, fp long)
+    hashes (k = :data:`WINNOW_K`, w = :data:`WINNOW_W`, read at call
+    time), distinct the picks per document. Returns (id_col, fp long)
     rows.
 
     GUARANTEE (combinatorial, not probabilistic): two documents sharing
@@ -1064,16 +1022,15 @@ def winnow_fingerprints(
     Documents shorter than the guarantee length have no full window and
     are excluded: by definition they cannot contain a detectable span.
     """
-    udf = F.pandas_udf(
-        lambda texts: _winnow_fps_batch(texts, k, w), "array<long>"
-    )
+    k, w = WINNOW_K, WINNOW_W
+    udf = F.pandas_udf(lambda texts: _winnow_fps_batch(texts, k, w), "array<long>")
     return (
         df.where(F.length(text_col) >= k + w - 1)
         .select(F.col(id_col), F.explode(udf(F.col(text_col))).alias("fp"))
     )
 
 
-def winnow_sql(k: int = WINNOW_K, w: int = WINNOW_W, table: str = "documents") -> str:
+def winnow_sql() -> str:
     """DuckDB derivation of the SAME fingerprint set, deliberately
     different shape — explode positions, per-position Horner fold in
     HUGEINT-widened UBIGINT arithmetic (list_reduce's first-element
@@ -1082,6 +1039,7 @@ def winnow_sql(k: int = WINNOW_K, w: int = WINNOW_W, table: str = "documents") -
     output — an independently-structured implementation of the
     winnowing definition (the dedup_components recursive-CTE
     discipline)."""
+    k, w = WINNOW_K, WINNOW_W
     return f"""
         SELECT DISTINCT doc_id,
                CASE WHEN hmin >= 9223372036854775808::UBIGINT
@@ -1101,7 +1059,7 @@ def winnow_sql(k: int = WINNOW_K, w: int = WINNOW_W, table: str = "documents") -
                        ) AS h
                 FROM (SELECT doc_id, text,
                              unnest(generate_series(1, length(text) - {k - 1})) AS i
-                      FROM {table} WHERE length(text) >= {k + w - 1})
+                      FROM documents WHERE length(text) >= {k + w - 1})
             )
         ) WHERE pos <= m - {w - 1}
     """

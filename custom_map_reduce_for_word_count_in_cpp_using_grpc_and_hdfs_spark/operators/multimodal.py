@@ -29,14 +29,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-def attach_payload(df: DataFrame, text_col: str = "text", modality: str = "text") -> DataFrame:
+def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Wrap a column as (payload: binary, meta: struct) — the canonical
     multimodal row shape. Here the payload is the utf-8 encoding of the
     text column (the container has no binary media); real pipelines load
     bytes via binaryFile/parquet."""
     payload = F.encode(F.col(text_col), "UTF-8")
     meta = F.struct(
-        F.lit(modality).alias("modality"),
+        F.lit("text").alias("modality"),
         F.octet_length(payload).cast("long").alias("byte_len"),
         F.lit("utf-8").alias("encoding"),
     )
@@ -1856,6 +1856,8 @@ def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
             (fact_n,) = struct.unpack_from("<I", payload, at)
     if fmt is None or data is None:
         raise ValueError("WAVE missing fmt /data chunk")
+    if len(fmt) < 16:
+        raise ValueError(f"WAVE fmt chunk is {len(fmt)} bytes, shorter than its 16-byte head")
     tag, ch, rate, _, block_align, bits = struct.unpack_from("<HHIIHH", fmt, 0)
     if ch < 1:
         raise ValueError("WAVE fmt declares zero channels")
@@ -2024,22 +2026,18 @@ def render_y4m_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 _VIDEO_FIELDS = "byte_len long, width long, height long, n_frames long, sampled_frames string"
 
 
-def _frame_sample(data: bytes, w: int, h: int, n_frames: int, stride: int) -> tuple:
+def _frame_sample(data: bytes, w: int, h: int, n_frames: int) -> tuple:
     """The :data:`_VIDEO_FIELDS` values: container bytes, geometry,
-    frame count and the comma-joined indices every ``stride``-th frame
-    keeps."""
-    return len(data), w, h, n_frames, ",".join(str(i) for i in range(0, n_frames, stride))
+    frame count and the comma-joined indices every
+    :data:`FRAME_STRIDE`-th frame keeps."""
+    return len(data), w, h, n_frames, ",".join(str(i) for i in range(0, n_frames, FRAME_STRIDE))
 
 
 def video_frame_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    vid_col: str = "video",
-    stride: int = FRAME_STRIDE,
-    safe: bool = False,
+    df: DataFrame, id_col: str = "doc_id", vid_col: str = "video", safe: bool = False
 ) -> DataFrame:
     """REAL video decode + frame-sample stage: parse each Y4M container
-    (:func:`decode_y4m`), keep every ``stride``-th frame, and emit one
+    (:func:`decode_y4m`), keep every :data:`FRAME_STRIDE`-th frame, and emit one
     row per document — exact container byte length, dimensions, total
     frame count, the sampled frame indices, and per-plane (Y/Cb/Cr)
     byte sums over the SAMPLED frames. Sums are pure functions of the
@@ -2058,8 +2056,8 @@ def video_frame_stats(
 
     def features(doc_id: int, data: bytes, decoded) -> tuple:
         w, h, frames = decoded
-        planes = frames[::stride].astype(np.int64).sum(axis=(0, 2))
-        return _frame_sample(data, w, h, len(frames), stride) + tuple(int(p) for p in planes)
+        planes = frames[::FRAME_STRIDE].astype(np.int64).sum(axis=(0, 2))
+        return _frame_sample(data, w, h, len(frames)) + tuple(int(p) for p in planes)
 
     return _decode_stage(
         df, id_col, vid_col, _VIDEO_FIELDS + ", y_sum long, cb_sum long, cr_sum long",
@@ -2128,7 +2126,7 @@ def fake_decode_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def encode_avi_mjpeg(width: int, height: int, jpeg_frames: list[bytes], fps: int = 25) -> bytes:
+def encode_avi_mjpeg(width: int, height: int, jpeg_frames: list[bytes]) -> bytes:
     """Minimal-but-real AVI writer: RIFF'AVI ' with LIST'hdrl' (avih main
     header + LIST'strl' with a 'vids'/'MJPG' strh and a BITMAPINFOHEADER
     strf whose biCompression is 'MJPG'), LIST'movi' with one '00dc'
@@ -2136,18 +2134,19 @@ def encode_avi_mjpeg(width: int, height: int, jpeg_frames: list[bytes], fps: int
     every MJPEG capture tool emits."""
     strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG", width * height * 3, 0, 0, 0, 0)
     max_bytes = max((len(f) for f in jpeg_frames), default=0)
-    return _avi(width, height, jpeg_frames, fps, b"MJPG", strf, max_bytes, b"00dc", index=True)
+    return _avi(width, height, jpeg_frames, b"MJPG", strf, max_bytes, b"00dc", index=True)
 
 
 def _avi(
-    width: int, height: int, frames: list[bytes], fps: int, handler: bytes, strf: bytes,
+    width: int, height: int, frames: list[bytes], handler: bytes, strf: bytes,
     max_bytes: int, tag: bytes, index: bool,
 ) -> bytes:
-    """RIFF'AVI ': LIST'hdrl' (avih + LIST'strl' with a 'vids' strh naming
-    ``handler`` and the BITMAPINFOHEADER ``strf``), LIST'movi' with one
-    ``tag`` chunk per frame, and with ``index`` an idx1 (offsets from the
-    'movi' fourcc). ``max_bytes`` is the largest frame."""
-    n = len(frames)
+    """RIFF'AVI ' at 25 frames per second: LIST'hdrl' (avih + LIST'strl'
+    with a 'vids' strh naming ``handler`` and the BITMAPINFOHEADER
+    ``strf``), LIST'movi' with one ``tag`` chunk per frame, and with
+    ``index`` an idx1 (offsets from the 'movi' fourcc). ``max_bytes`` is
+    the largest frame."""
+    n, fps = len(frames), 25
     avih = struct.pack(
         "<IIIIIIIIII4I",
         1_000_000 // fps,  # dwMicroSecPerFrame
@@ -2311,15 +2310,11 @@ def render_avi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def mjpeg_frame_check(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    vid_col: str = "video",
-    stride: int = FRAME_STRIDE,
-    safe: bool = False,
+    df: DataFrame, id_col: str = "doc_id", vid_col: str = "video", safe: bool = False
 ) -> DataFrame:
     """COMPRESSED video decode + frame-sample stage: parse each AVI
     (:func:`decode_avi_mjpeg` — RIFF walk + per-frame JPEG decode), keep
-    every ``stride``-th frame, and emit per-document geometry plus the
+    every :data:`FRAME_STRIDE`-th frame, and emit per-document geometry plus the
     JPEG bounded-error invariant: ``decode_ok`` = max per-channel
     |decoded − reference| over the SAMPLED frames ≤ JPEG_TOLERANCE,
     with the reference regenerated arithmetically from (doc_id, frame)
@@ -2332,10 +2327,10 @@ def mjpeg_frame_check(
     def features(doc_id: int, data: bytes, decoded) -> tuple:
         w, h, frames = decoded
         err = 0
-        for f in range(0, len(frames), stride):
+        for f in range(0, len(frames), FRAME_STRIDE):
             ref = _mjpeg_fixture_frame(doc_id, f, w, h).astype(np.int64)
             err = max(err, int(np.abs(frames[f].astype(np.int64) - ref).max()))
-        return _frame_sample(data, w, h, len(frames), stride) + (bool(err <= JPEG_TOLERANCE),)
+        return _frame_sample(data, w, h, len(frames)) + (bool(err <= JPEG_TOLERANCE),)
 
     return _decode_stage(
         df, id_col, vid_col, _VIDEO_FIELDS + ", decode_ok boolean", decode_avi_mjpeg, features, safe
@@ -2358,16 +2353,12 @@ def render_dib_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def dib_frame_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    vid_col: str = "video",
-    stride: int = FRAME_STRIDE,
-    safe: bool = False,
+    df: DataFrame, id_col: str = "doc_id", vid_col: str = "video", safe: bool = False
 ) -> DataFrame:
     """UNCOMPRESSED video decode + frame-sample stage (round 11): parse
     each raw-RGB DIB AVI via :func:`decode_avi_mjpeg`'s BI_RGB route
     (the BMP row reader through the AVI chunk walk — bottom-up rows,
-    BGR, 4-byte padding all undone), keep every ``stride``-th frame,
+    BGR, 4-byte padding all undone), keep every :data:`FRAME_STRIDE`-th frame,
     and emit exact container byte length, avih geometry, frame count,
     sampled indices and per-channel (R/G/B) pixel sums over the SAMPLED
     frames. The container is lossless, so every output is an exact
@@ -2377,7 +2368,7 @@ def dib_frame_stats(
 
     def features(doc_id: int, data: bytes, decoded) -> tuple:
         w, h, frames = decoded
-        return _frame_sample(data, w, h, len(frames), stride) + _channel_sums(frames[::stride])
+        return _frame_sample(data, w, h, len(frames)) + _channel_sums(frames[::FRAME_STRIDE])
 
     return _decode_stage(
         df, id_col, vid_col, _VIDEO_FIELDS + ", r_sum long, g_sum long, b_sum long",
@@ -2431,7 +2422,7 @@ def encode_wav_alaw(sample_rate: int, samples: np.ndarray) -> bytes:
 
 
 def encode_avi_rawrgb(
-    width: int, height: int, frames: np.ndarray, fps: int = 25, top_down: bool = False
+    width: int, height: int, frames: np.ndarray, top_down: bool = False
 ) -> bytes:
     """AVI with UNCOMPRESSED 24-bit DIB video (biCompression=BI_RGB,
     fccHandler 'DIB '): BGR rows padded to 4-byte boundaries — the
@@ -2448,7 +2439,7 @@ def encode_avi_rawrgb(
     frame_bytes = ((width * 3 + 3) & ~3) * height
     strf = struct.pack("<IiiHH4sIiiII", 40, width, -height if top_down else height,
                        1, 24, b"\x00\x00\x00\x00", frame_bytes, 0, 0, 0, 0)
-    return _avi(width, height, dibs, fps, b"DIB ", strf, frame_bytes, b"00db", index=False)
+    return _avi(width, height, dibs, b"DIB ", strf, frame_bytes, b"00db", index=False)
 
 
 _ULAW_BIAS = 0x84

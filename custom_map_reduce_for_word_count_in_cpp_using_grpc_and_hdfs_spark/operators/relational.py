@@ -15,17 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dim(df: DataFrame, name: str | None = None) -> DataFrame:
-    """Mark a dimension table for broadcast join.
-
-    At 100 TB the fact side never fits a shuffle comfortably but the
-    dimensions stay MB-scale; an explicit hint makes the plan robust to
-    missing/stale statistics (AQE can only demote to broadcast *after* a
-    shuffle stage is planned).
-    """
-    return F.broadcast(df)
-
-
 def top_n(df: DataFrame, n: int, *order_cols) -> DataFrame:
     """Global deterministic top-N: ORDER BY ... LIMIT n.
 
@@ -85,10 +74,9 @@ def interval_self_join(
     ts: str,
     id_col: str,
     max_gap_seconds: int,
-    key: str | None = None,
 ) -> DataFrame:
-    """All pairs (a, b) with |ts_a - ts_b| <= gap (and same ``key`` if
-    given), id_a < id_b — via time-bucket candidate generation.
+    """All pairs (a, b) with |ts_a - ts_b| <= gap, id_a < id_b — via
+    time-bucket candidate generation.
 
     The scalable range-join pattern: bucket timestamps by the gap width;
     any qualifying pair lands in the same or adjacent buckets, so
@@ -103,20 +91,17 @@ def interval_self_join(
     # UTC, so ntz→ltz is a deterministic identity on the epoch scale.
     bucket = F.expr(f"unix_micros(cast({ts} as timestamp)) div {gap_us}")
     a = df.select(
-        *( [F.col(key)] if key else [] ),
         F.col(id_col).alias("id_a"),
         F.col(ts).alias("ts_a"),
         bucket.alias("bk"),
     )
     b = df.select(
-        *( [F.col(key)] if key else [] ),
         F.col(id_col).alias("id_b"),
         F.col(ts).alias("ts_b"),
         F.explode(F.array(bucket - 1, bucket, bucket + 1)).alias("bk"),
     )
-    on = ["bk", key] if key else ["bk"]
     return (
-        a.join(b, on)
+        a.join(b, "bk")
         .where(
             (F.col("id_a") < F.col("id_b"))
             & (
@@ -127,6 +112,6 @@ def interval_self_join(
                 <= gap_us
             )
         )
-        .select(*( [key] if key else [] ), "id_a", "id_b", "ts_a", "ts_b")
+        .select("id_a", "id_b", "ts_a", "ts_b")
         .distinct()
     )

@@ -41,6 +41,9 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.par
 #: definition (same planes at write and query time).
 LSH_SEED = 20240813
 
+#: Lloyd iterations of :func:`ivf_centroids_np`, read at call time.
+IVF_ITERS = 6
+
 #: Measured cached-bytes-per-source-byte ceiling for the exploded banded
 #: code frame (round-7 three-decade sweep, .scratch/r7/
 #: measure_expansion.py): 6.0x at sf0.1, 30.4x at sf1, 40.1x at sf10 —
@@ -108,9 +111,9 @@ def brute_force_topk(
     return _topk_by_score(scored, k)
 
 
-def hyperplanes(dim: int, n_planes: int, seed: int = LSH_SEED) -> np.ndarray:
+def hyperplanes(dim: int, n_planes: int) -> np.ndarray:
     """Deterministic Gaussian hyperplanes (same at index and query time)."""
-    return np.random.default_rng(seed).standard_normal((n_planes, dim))
+    return np.random.default_rng(LSH_SEED).standard_normal((n_planes, dim))
 
 
 def _first_agreeing_band(codes_a: str, codes_b: str, bands: int):
@@ -130,16 +133,15 @@ def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    n_planes: int = 16,
-    bands: int = 8,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: candidates share ≥1 of ``bands`` signature bands
-    with the query, then exact cosine rescoring. Same output schema as
-    :func:`brute_force_topk` (query_id, neighbor_id, rank)."""
-    codes_udf = band_codes_vectorized(hyperplanes(dim, n_planes), bands)
+    """Approximate top-k: candidates share ≥1 of 8 two-bit signature
+    bands (16 hyperplanes) with the query, then exact cosine rescoring.
+    Same output schema as :func:`brute_force_topk` (query_id,
+    neighbor_id, rank)."""
+    bands = 8
+    codes_udf = band_codes_vectorized(16, bands)
 
     def banded(df: DataFrame, role: str) -> DataFrame:
         return df.select(
@@ -191,10 +193,11 @@ def cosine_batch_near_dups(
     )
 
 
-def band_codes_vectorized(planes: np.ndarray, bands: int):
+def band_codes_vectorized(n_planes: int, bands: int):
     """Per-band sign-bit codes as an array<int> column: band b's code
-    packs the sign bits of its ``len(planes)//bands`` hyperplanes (bit j
-    = plane ``b·width + j``, set iff the dot product is ≥ 0), computed
+    packs the sign bits of its ``n_planes//bands`` hyperplanes (bit j
+    = plane ``b·width + j`` of :func:`hyperplanes` at the vectors' own
+    width, set iff the dot product is ≥ 0), computed
     Arrow-vectorized — one BLAS matmul per batch, (batch, dim) @ (dim,
     n_planes) — instead of n_planes interpreted ``aggregate`` lambda
     folds per row.
@@ -208,29 +211,20 @@ def band_codes_vectorized(planes: np.ndarray, bands: int):
     either way (probability ~0 for continuous data); candidates are
     exact-rescored afterwards, so a flipped borderline bit can only
     perturb the approximate candidate set, never emit a wrong pair."""
-    width = len(planes) // bands
-    P = planes.astype(np.float64).T  # (dim, n_planes)
+    width = n_planes // bands
     weights = (1 << np.arange(width)).astype(np.int64)
 
     @F.pandas_udf("array<int>")
     def codes(v: pd.Series) -> pd.Series:
-        M = np.stack(v.to_numpy()).astype(np.float64)  # (n, dim)
-        bits = (M @ P >= 0).astype(np.int64)  # (n, n_planes)
+        M = _matrix(v)  # (n, dim)
+        bits = (M @ hyperplanes(M.shape[1], n_planes).T >= 0).astype(np.int64)  # (n, n_planes)
         B = bits.reshape(len(M), bands, width) @ weights  # (n, bands)
         return pd.Series(list(B.astype(np.int32)))
 
     return codes
 
 
-def lsh_band_geometry(
-    n_vectors: int,
-    threshold: float,
-    target_miss: float = 0.05,
-    min_width: int = 8,
-    max_width: int = 24,
-    min_bands: int = 16,
-    max_bands: int = 48,
-) -> tuple[int, int]:
+def lsh_band_geometry(n_vectors: int, threshold: float) -> tuple[int, int]:
     """Size (bands, band_width) for a hyperplane-LSH self-join so the
     candidate-pair mass stays ~linear in corpus size.
 
@@ -239,12 +233,12 @@ def lsh_band_geometry(
     random collisions — bands·C(N,2)/2^width — go quadratic. At
     N=200k, width 8 produced 1.5e9 candidate pairs; width 20, 1.8e6.
     Hence width ≈ log2(N)+2 (per-band collision mass ≈ N/4 for random
-    directions), clamped to [min_width, max_width].
+    directions), clamped to [8, 24].
 
     Bands then come from the LSH S-curve: a pair at cosine=threshold
     agrees on one sign bit w.p. p = 1 − acos(threshold)/π, on a band
     w.p. p^width, and is missed by every band w.p. (1−p^width)^bands —
-    solved for miss ≤ target_miss and clamped to [min_bands, max_bands].
+    solved for miss ≤ 5% and clamped to [16, 48].
     At the cap the miss probability for exactly-at-threshold pairs
     degrades (documented honestly: at N=200k, threshold 0.9, the capped
     48 bands give ~11% miss at cos=0.90 but <0.3% at cos≥0.95); pairs
@@ -252,25 +246,18 @@ def lsh_band_geometry(
     per-bit agreement rises steeply with cosine."""
     import math
 
-    w = int(max(min_width, min(max_width, math.ceil(math.log2(max(n_vectors, 2))) + 2)))
+    w = int(max(8, min(24, math.ceil(math.log2(max(n_vectors, 2))) + 2)))
     p = 1.0 - math.acos(max(-1.0, min(1.0, threshold))) / math.pi
     pw = p**w
-    if pw <= 0.0 or pw >= 1.0:
-        b = min_bands
-    else:
-        b = math.ceil(math.log(target_miss) / math.log(1.0 - pw))
-    return int(max(min_bands, min(max_bands, b))), w
+    b = 16 if pw <= 0.0 or pw >= 1.0 else math.ceil(math.log(0.05) / math.log(1.0 - pw))
+    return int(max(16, min(48, b))), w
 
 
 def cosine_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
-    n_planes: int | None = None,
-    bands: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    corpus_size: int | None = None,
 ) -> DataFrame:
     """Self-join near-dup pairs (a < b, cosine ≥ threshold) via banded
     hyperplane LSH candidates + exact rescoring — the prunable shape for
@@ -280,11 +267,9 @@ def cosine_near_dup_pairs(
     — and exact rescoring keeps precision at 1. Recall-vs-brute-force
     parity on planted dups is asserted in tests/test_dedup_similarity.py.
 
-    Band geometry defaults to :func:`lsh_band_geometry` sized from the
-    corpus count (pass ``corpus_size`` when it is already known to skip
-    the count job; pass explicit ``n_planes``/``bands`` to pin a stored
-    layout's geometry). Two 100 TB design rules are baked into the plan
-    shape:
+    Band geometry is :func:`lsh_band_geometry` sized from the exact
+    corpus count (:func:`row_count`: zero jobs on a bare scan). Two
+    100 TB design rules are baked into the plan shape:
 
     - the heavy vector column NEVER rides the band explode: candidate
       generation shuffles compact (vid, codes, band, code) rows, and the
@@ -294,14 +279,10 @@ def cosine_near_dup_pairs(
     - band width grows with log2(N), keeping collision mass ~linear
       (see lsh_band_geometry; the sf10 smoke measured the fixed-width
       variant at 1.5e9 candidates vs 1.8e6 adaptive)."""
-    if bands is None or n_planes is None:
-        # exact either way (geometry flips on ceil(log2 n), and a changed
-        # geometry changes candidate sets): zero jobs on a bare scan
-        n = row_count(df) if corpus_size is None else corpus_size
-        bands, width = lsh_band_geometry(n, threshold)
-        n_planes = bands * width
-    planes = hyperplanes(dim, n_planes)
-    codes_udf = band_codes_vectorized(planes, bands)
+    # exact (geometry flips on ceil(log2 n), and a changed geometry
+    # changes candidate sets)
+    bands, width = lsh_band_geometry(row_count(df), threshold)
+    codes_udf = band_codes_vectorized(bands * width, bands)
     # eager_stats: the banded frame self-joins below and its explode-
     # derived size estimate is structurally low (caching.py::eager_stats)
     # — materializing also runs the codes UDF once instead of twice
@@ -390,14 +371,12 @@ def _ddl(df: DataFrame) -> str:
 def ivf_centroids_np(
     corpus: DataFrame,
     k: int,
-    iters: int = 6,
-    sample_per_centroid: int = 32,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> np.ndarray:
-    """Sampled driver-side k-means: a hash-ordered sample of
-    ``sample_per_centroid × k`` vectors collected once (k-bounded),
-    seeded-RNG initial centroids, then ``iters`` Lloyd iterations as
+    """Sampled driver-side k-means: a hash-ordered sample of ``32 × k``
+    vectors collected once (k-bounded), seeded-RNG initial centroids,
+    then :data:`IVF_ITERS` Lloyd iterations as
     numpy matmuls on the driver. Deterministic run to run; fewer sampled
     vectors than ``k`` shrink k rather than fail.
 
@@ -415,7 +394,7 @@ def ivf_centroids_np(
     sample = (
         corpus.select(vec_col)
         .orderBy(F.xxhash64(F.col(id_col)).asc(), F.col(id_col).asc())
-        .limit(sample_per_centroid * k)
+        .limit(32 * k)
         .collect()
     )
     X = np.array([r[0] for r in sample], dtype="float64")
@@ -424,7 +403,7 @@ def ivf_centroids_np(
     k = min(k, len(X))
     rng = np.random.default_rng(IVF_SEED)
     C = X[rng.choice(len(X), size=k, replace=False)]
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         a = _nearest(X, C)
         for b in range(k):
             m = a == b
@@ -694,11 +673,10 @@ def auto_ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
     index_root: str,
-    k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """Cost-aware IVF top-k — a measured-crossover default on the
+    """Cost-aware IVF top-10 — a measured-crossover default on the
     shared ``plans/cost.py`` seam, like the near-dup edge route.
     Measures the corpus size (:func:`row_count`: zero jobs on a bare
     scan) and compares it with IVF_AUTO_CROSSOVER_VECTORS, read at call
@@ -732,14 +710,14 @@ def auto_ivf_topk(
     if decision.choice == "live":
         centroids = ivf_centroids_np(corpus, k=16, id_col=id_col, vec_col=vec_col)
         return (
-            ivf_topk(queries, corpus, centroids, k, nprobe=10, id_col=id_col, vec_col=vec_col),
+            ivf_topk(queries, corpus, centroids, 10, nprobe=10, id_col=id_col, vec_col=vec_col),
             decision,
         )
     centroids = ensure_ivf_index(corpus, index_root, n, id_col=id_col, vec_col=vec_col)
     nprobe = ivf_nprobe_for(len(centroids), n)
     return (
         ivf_topk_stored(
-            corpus.sparkSession, queries, index_root, centroids, k,
+            corpus.sparkSession, queries, index_root, centroids, 10,
             nprobe=nprobe, id_col=id_col, vec_col=vec_col,
         ),
         decision,

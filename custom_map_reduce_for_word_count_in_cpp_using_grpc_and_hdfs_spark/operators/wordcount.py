@@ -56,8 +56,8 @@ def tokenize(df: DataFrame, text_col: str = "text", out_col: str = "word") -> Da
     return spread(df).select(word).where(F.col(out_col) != "")
 
 
-def key_range_filter(df: DataFrame, word_col: str = "word", low: str = "a", high: str = "z") -> DataFrame:
-    """O5's predicate: keep words whose FIRST character is in [low, high].
+def key_range_filter(df: DataFrame, word_col: str = "word") -> DataFrame:
+    """O5's predicate: keep words whose FIRST character is in [a, z].
 
     The reference applies this per reducer over ``a..z`` ranges
     (slave.cc:149-157 via master.cc:311-325); the union over all reducers
@@ -66,7 +66,7 @@ def key_range_filter(df: DataFrame, word_col: str = "word", low: str = "a", high
     mode is one filter, not a bespoke pipeline.
     """
     initial = F.substring(F.col(word_col), 1, 1)
-    return df.where((initial >= low) & (initial <= high))
+    return df.where((initial >= "a") & (initial <= "z"))
 
 
 def _aggregate(df: DataFrame, text_col: str, *, reference_parity: bool = False) -> DataFrame:
@@ -82,12 +82,7 @@ def _aggregate(df: DataFrame, text_col: str, *, reference_parity: bool = False) 
     return words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def word_count(
-    df: DataFrame,
-    text_col: str = "text",
-    *,
-    reference_parity: bool = False,
-) -> DataFrame:
+def word_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     """O3+O5+O6, materialized once: DataFrame[word: string, cnt: bigint].
 
     The aggregate is computed once, before this returns
@@ -101,7 +96,7 @@ def word_count(
     as the returned frame: Spark's ContextCleaner drops them once the frame
     and every frame derived from it are garbage collected. It is not a
     result cache: each call recounts its input."""
-    return materialize(_aggregate(df, text_col, reference_parity=reference_parity))
+    return materialize(_aggregate(df, text_col))
 
 
 def top_k(counts: DataFrame, k: int, count_col: str = "cnt", key_col: str = "word") -> DataFrame:
@@ -161,13 +156,8 @@ def partitioned_sorted_counts(counts: DataFrame) -> DataFrame:
     )
 
 
-def write_partitioned_sorted(counts: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """O7 sink: one directory per initial holding one file sorted by word,
-    written by parallel tasks (see :func:`partitioned_sorted_counts`)."""
-    (
-        partitioned_sorted_counts(counts)
-        .write.mode("overwrite")
-        .partitionBy("initial")
-        .format(fmt)
-        .save(path)
-    )
+def write_partitioned_sorted(counts: DataFrame, path: str) -> None:
+    """O7 sink: one parquet directory per initial holding one file sorted
+    by word, written by parallel tasks (see
+    :func:`partitioned_sorted_counts`)."""
+    partitioned_sorted_counts(counts).write.mode("overwrite").partitionBy("initial").parquet(path)

@@ -179,13 +179,9 @@ def scan_splits(df: DataFrame) -> int:
     return sum(max(1, math.ceil(s / split_bytes)) for s in sizes)
 
 
-def spread(
-    df: DataFrame,
-    min_parts: int | None = None,
-    by: list[str] | None = None,
-) -> DataFrame:
-    """Repartition ``df`` up to ``min_parts`` (default: the session's
-    ``spark.sql.shuffle.partitions``) iff its scan is estimated to
+def spread(df: DataFrame, by: list[str] | None = None) -> DataFrame:
+    """Repartition ``df`` up to the session's
+    ``spark.sql.shuffle.partitions`` iff its scan is estimated to
     under-split that width.
 
     ``by`` — column names the downstream pipeline clusters on (group-by
@@ -200,8 +196,7 @@ def spread(
     """
     if df.isStreaming:
         return df
-    if min_parts is None:
-        min_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    min_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     if scan_splits(df) >= min_parts:
         return df
     if by:

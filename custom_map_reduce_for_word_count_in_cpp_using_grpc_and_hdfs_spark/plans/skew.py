@@ -22,9 +22,8 @@ def salted_group_agg(
     df: DataFrame,
     key_cols: list[str],
     agg_exprs: dict[str, tuple[Column, Column]],
-    num_salts: int = 16,
 ) -> DataFrame:
-    """Two-phase salted aggregation.
+    """Two-phase salted aggregation over S = 16 salts.
 
     ``agg_exprs`` maps output name → (partial_agg_expr, merge_agg_expr),
     e.g. ``{"cnt": (F.count(F.lit(1)), F.sum("cnt"))}`` or
@@ -44,7 +43,7 @@ def salted_group_agg(
     expressions are algebraic, any salt assignment composes.)
     """
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.spark_partition_id()), F.lit(num_salts)).cast("int")
+        "_salt", F.pmod(F.xxhash64(F.spark_partition_id()), F.lit(16)).cast("int")
     )
     phase1 = salted.groupBy(*key_cols, "_salt").agg(
         *[expr.alias(name) for name, (expr, _) in agg_exprs.items()]
@@ -54,14 +53,9 @@ def salted_group_agg(
     )
 
 
-def salted_word_count(words: DataFrame, word_col: str = "word", num_salts: int = 16) -> DataFrame:
+def salted_word_count(words: DataFrame, word_col: str = "word") -> DataFrame:
     """The reference workload with Zipf-head protection: word-count via
     salted two-phase aggregation. Semantically identical to
     ``groupBy(word).count()``; use when a handful of words dominate."""
-    return salted_group_agg(
-        words,
-        [word_col],
-        {"cnt": (F.count(F.lit(1)), F.sum("cnt"))},
-        num_salts,
-    )
+    return salted_group_agg(words, [word_col], {"cnt": (F.count(F.lit(1)), F.sum("cnt"))})
 

@@ -201,14 +201,15 @@ def _decide_edge_method(n_docs: int, avg_shingles: float) -> tuple[str, float]:
     return d.choice, est
 
 
-def choose_edge_method(docs: DataFrame, text_col: str = "text", n: int = 3) -> str:
+def choose_edge_method(docs: DataFrame, text_col: str = "text") -> str:
     """Measure the corpus and pick the near-dup edge route (see
     EDGE_AUTO_CROSSOVER_POSTINGS for the measured crossover). Cost of
     the measurement itself: one count (metadata-only on a parquet scan)
     plus one limit-bounded sample aggregate — and the sample is skipped
     entirely when the count alone decides (round 10, margin-guarded in
-    round 11): docs with fewer than n tokens yield 0 shingles, so the
-    avg ≥ 1 floor only holds corpus-wide when short docs don't dominate.
+    round 11): docs with fewer than 3 tokens yield 0 word 3-gram
+    shingles, so the avg ≥ 1 floor only holds corpus-wide when short
+    docs don't dominate.
     The early exit therefore requires n_docs to clear the crossover by
     EDGE_AUTO_COUNT_ONLY_MARGIN× — past that, even a corpus where only
     1/margin of docs shingle at all still crosses, and at that scale the
@@ -254,7 +255,7 @@ def choose_edge_method(docs: DataFrame, text_col: str = "text", n: int = 3) -> s
         return method
     avg = (
         docs.limit(EDGE_AUTO_SAMPLE_DOCS)
-        .select(F.size(F.array_distinct(D.shingles_col(text_col, n))).alias("k"))
+        .select(F.size(F.array_distinct(D.shingles_col(text_col, 3))).alias("k"))
         .agg(F.avg("k"))
         .first()[0]
         or 0.0

@@ -48,10 +48,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        return _load_events(spark, path)
-    return read_parquet(spark, path)
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return nanos_ts_to_micros(df) if name == "events" else df
 
 
 #: Session confs that change the schema Spark infers from a parquet
@@ -106,19 +104,17 @@ def _schema_key(spark: SparkSession, path: str) -> tuple | None:
     return (sc.applicationId, os.path.abspath(path), st.st_size, st.st_mtime_ns, confs)
 
 
-def _load_events(spark: SparkSession, path: str) -> DataFrame:
+def nanos_ts_to_micros(events: DataFrame) -> DataFrame:
     """The events table may be written with TIMESTAMP(NANOS) parquet
     type, which the engine conf reads as long nanos
     (``spark.sql.legacy.parquet.nanosAsLong``, session.ENGINE_CONF);
-    truncate those to microseconds — the same truncation DuckDB applies,
-    so oracle comparisons stay exact."""
+    truncate those to microsecond timestamps — the same truncation DuckDB
+    applies, so oracle comparisons stay exact. Batch or streaming."""
     from pyspark.sql import functions as F
 
-    df = read_parquet(spark, path)
-    ts_type = dict(df.dtypes).get("ts")
-    if ts_type == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    if dict(events.dtypes).get("ts") == "bigint":
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return events
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

@@ -6,8 +6,8 @@ surface. Design:
 - **Source**: file stream over a staged directory (Spark's file source
   requires a directory; the driver's events table is a single parquet
   file, so we stage a copy under ``<scratch root>/streams``, see
-  ``session.scratch_root``). In production this is a Kafka/file-drop
-  source; everything downstream is identical.
+  ``session.scratch_root``). In production this is a file-drop source;
+  everything downstream is identical.
 - **Windows**: tumbling/sliding via ``window()``, sessions via
   ``session_window()`` — all computed with ``Trigger.AvailableNow`` so a
   bounded run drains the source and terminates, giving batch-equivalent
@@ -41,10 +41,10 @@ from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.exact import dsum
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import scratch_root
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.registry import read_parquet
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.registry import nanos_ts_to_micros, read_parquet
 
 
-def _stage_dir(sf_dir: str, table: str = "events") -> str:
+def _stage_dir(sf_dir: str, table: str) -> str:
     """Stage ``<sf_dir>/<table>.parquet`` into a directory usable by the
     file-stream source, under ``<scratch root>/streams``. Idempotent per
     (sf_dir, table). A table already stored as a parquet directory is
@@ -78,104 +78,18 @@ def _stage_dir(sf_dir: str, table: str = "events") -> str:
     return target
 
 
-def events_source(spark: SparkSession, conf: dict | None = None) -> DataFrame:
-    """Source seam: build the raw streaming DataFrame for the events
-    table from a source-kind config, so a Kafka/rate source slots in
-    without touching any query code.
-
-    ``conf`` keys: ``kind`` ("file" — default; "rate"; "kafka") plus
-    kind-specific options: the file kind needs ``sf_dir``, kafka needs
-    ``bootstrap_servers`` (plus optional ``topic``/``starting_offsets``)
-    and decodes JSON record values via :func:`decode_kafka_events` into
-    the same events schema — downstream query code never changes across
-    kinds.
-    """
-    conf = conf or {}
-    kind = conf.get("kind", "file")
-    if kind == "file":
-        sf_dir = conf["sf_dir"]
-        batch_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
-        return spark.readStream.schema(batch_schema).parquet(_stage_dir(sf_dir))
-    if kind == "rate":
-        # Deterministic synthetic events from the built-in rate-micro-batch
-        # source (exactly rows_per_batch rows per micro-batch, monotone
-        # sequence numbers and timestamps) mapped onto the events schema —
-        # the load-generator shape for soak-testing a streaming query
-        # without any files.
-        reader = (
-            spark.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", int(conf.get("rows_per_batch", 100)))
-            .option("numPartitions", int(conf.get("num_partitions", 2)))
-        )
-        if "start_timestamp_ms" in conf:
-            reader = reader.option("startTimestamp", int(conf["start_timestamp_ms"]))
-        raw = reader.load()
-        types = F.array(*[F.lit(t) for t in ("click", "view", "purchase", "signup", "error")])
-        return raw.select(
-            F.col("value").alias("event_id"),
-            F.col("timestamp").alias("ts"),
-            F.pmod(F.col("value"), F.lit(1000)).alias("user_id"),
-            F.element_at(types, (F.pmod(F.col("value"), F.lit(5)) + 1).cast("int")).alias(
-                "event_type"
-            ),
-            (F.pmod(F.col("value"), F.lit(100)) / F.lit(10.0)).alias("value"),
-            F.to_json(F.struct(F.col("value").alias("seq"))).alias("props"),
-        )
-    if kind == "kafka":
-        # Wire format: one JSON event per Kafka record value. The reader
-        # below is the standard kafka source; decode_kafka_events maps the
-        # kafka wire schema to the events schema and is shared verbatim by
-        # the broker-less unit test (tests/test_streaming.py), so the only
-        # untestable-in-sandbox piece is the broker connection itself.
-        # Needs the spark-sql-kafka connector jar on the classpath
-        # (--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>).
-        if "bootstrap_servers" not in conf:
-            raise ValueError(
-                "kafka source needs conf['bootstrap_servers'] (and optionally "
-                "'topic', 'starting_offsets')"
-            )
-        spark.conf.set("spark.sql.session.timeZone", "UTC")  # ts parse determinism
-        raw = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", conf["bootstrap_servers"])
-            .option("subscribe", conf.get("topic", "events"))
-            .option("startingOffsets", conf.get("starting_offsets", "earliest"))
-            .load()
-        )
-        return decode_kafka_events(raw)
-    raise ValueError(f"events_source kind={kind!r}: expected file | rate | kafka")
-
-
-#: JSON value schema on the kafka events topic (matches the events table).
-KAFKA_EVENTS_SCHEMA = (
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
-    "value DOUBLE, props STRING"
-)
-
-
-def decode_kafka_events(raw: DataFrame) -> DataFrame:
-    """Kafka wire rows → events schema: cast the binary value to string,
-    ``from_json`` it with :data:`KAFKA_EVENTS_SCHEMA`, drop the envelope.
-    Malformed values become all-NULL structs rather than failing the
-    stream (from_json's PERMISSIVE default — poison-pill records must not
-    kill a production topic; filter ``event_id IS NULL`` downstream to
-    quarantine them). Works identically on a batch DataFrame with the
-    same (value binary) column, which is how the sandbox tests it without
-    a broker."""
-    return (
-        raw.select(F.from_json(F.col("value").cast("string"), KAFKA_EVENTS_SCHEMA).alias("e"))
-        .select("e.*")
-    )
+def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File stream over ``<sf_dir>/<table>.parquet``, staged by
+    :func:`_stage_dir`, with the batch reader's (memoized) schema."""
+    batch_schema = read_parquet(spark, os.path.join(sf_dir, f"{table}.parquet")).schema
+    return spark.readStream.schema(batch_schema).parquet(_stage_dir(sf_dir, table))
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DataFrame over the events table (ts normalized to
     microsecond timestamps, same as the batch reader)."""
-    stream = events_source(spark, {"kind": "file", "sf_dir": sf_dir})
-    ts_kind = dict(stream.dtypes).get("ts")
-    if ts_kind == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_kind == "timestamp_ntz":
+    stream = nanos_ts_to_micros(_table_stream(spark, sf_dir, "events"))
+    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
         # Parquet timestamp[us] without timezone reads as TIMESTAMP_NTZ,
         # which watermarks/windows reject (Spark 4.1). The engine pins the
         # session timezone to UTC, so ntz -> ltz is a deterministic
@@ -293,19 +207,18 @@ def _drain_confs(spark: SparkSession, shuffle_width: int | None) -> dict[str, st
 #: overlapping drains never restore each other's values.
 _WIDTH_LOCK = threading.Lock()
 
+#: Seconds a drain may run before it is stopped as hung, read at call time.
+DRAIN_TIMEOUT_S = 300
 
-def run_available_now(
-    df: DataFrame, mode: str, timeout_s: int = 300, shuffle_width: int | None = None
-) -> DataFrame:
+
+def run_available_now(df: DataFrame, mode: str, shuffle_width: int | None = None) -> DataFrame:
     """Drain a bounded stream into a memory sink and return the result as
     a batch DataFrame."""
-    return run_available_now_many([(df, mode)], timeout_s, shuffle_width=shuffle_width)[0]
+    return run_available_now_many([(df, mode)], shuffle_width=shuffle_width)[0]
 
 
 def run_available_now_many(
-    dfs_modes: list[tuple[DataFrame, str]],
-    timeout_s: int = 300,
-    shuffle_width: int | None = None,
+    dfs_modes: list[tuple[DataFrame, str]], shuffle_width: int | None = None
 ) -> list[DataFrame]:
     """Drain several bounded streams CONCURRENTLY (all started before any
     is awaited — independent streaming jobs shouldn't serialize on the
@@ -345,7 +258,8 @@ def run_available_now_many(
     JVM handle exists (Spark Connect) a frame resolves the view by name
     at every execution, so the view is kept.
 
-    If any drain fails or times out, every still-active query is stopped
+    If any drain fails or runs past :data:`DRAIN_TIMEOUT_S`, every
+    still-active query is stopped
     and every sink view dropped before the error propagates — no leaked
     streaming queries or memory-sink state."""
     if not dfs_modes:
@@ -378,6 +292,7 @@ def run_available_now_many(
                     else:
                         spark.conf.set(key, value)
         out = []
+        timeout_s = DRAIN_TIMEOUT_S
         for session, name, q in started:
             if not q.awaitTermination(timeout_s):
                 raise TimeoutError(f"streaming drain {name} still running after {timeout_s}s")
@@ -399,29 +314,30 @@ def run_available_now_many(
         raise
 
 
-def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Tumbling-window counts + exact value sums per event_type."""
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """1-hour tumbling-window counts + exact value sums per event_type."""
     return (
-        events.groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), dsum("value", alias="sum_value"))
         .select(F.col("w.start").alias("ws"), "event_type", "n", "sum_value")
     )
 
 
-def sliding_counts(events: DataFrame, width: str = "1 hour", slide: str = "30 minutes") -> DataFrame:
-    """Sliding-window counts (each event lands in width/slide windows)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Counts over 1-hour windows sliding every 30 minutes (each event
+    lands in two windows)."""
     return (
-        events.groupBy(F.window("ts", width, slide).alias("w"))
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
 
 
-def session_windows(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
-    """Per-user session windows with the given inactivity gap; session
+def session_windows(events: DataFrame) -> DataFrame:
+    """Per-user session windows with a 5-minute inactivity gap; session
     end = last event + gap (Spark's session_window semantics)."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        events.groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("sw.start").alias("session_start"),
@@ -432,21 +348,21 @@ def session_windows(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
     )
 
 
-def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def stream_dedup(events: DataFrame) -> DataFrame:
     """Stateful streaming dedup on event_id: duplicates arriving within
-    the watermark horizon are dropped; state for ids older than the
-    watermark is evicted (bounded state at scale).
+    the 1-hour watermark horizon are dropped; state for ids older than
+    the watermark is evicted (bounded state at scale).
 
     Must be ``dropDuplicatesWithinWatermark``: plain ``dropDuplicates``
     on a subset that excludes the event-time column never evicts its
     state even under a watermark — output is identical on a bounded
     drain but state grows without bound on a real stream."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["event_id"])
 
 
-def click_purchase_join(clicks: DataFrame, purchases: DataFrame, horizon: str = "30 minutes") -> DataFrame:
+def click_purchase_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Stream-stream inner join: every (click, purchase) pair by the same
-    user with the purchase inside ``horizon`` after the click.
+    user with the purchase inside 30 minutes after the click.
 
     Both sides carry watermarks and the join condition bounds event time
     on both ends — exactly what Spark needs to evict join state (a
@@ -456,14 +372,7 @@ def click_purchase_join(clicks: DataFrame, purchases: DataFrame, horizon: str = 
     c = clicks.withWatermark("ts", "1 hour").alias("c")
     p = purchases.withWatermark("ts", "1 hour").alias("p")
     return c.join(
-        p,
-        F.expr(
-            f"""
-            c.user_id = p.user_id AND
-            p.ts >= c.ts AND
-            p.ts <= c.ts + INTERVAL {horizon}
-            """
-        ),
+        p, F.expr("c.user_id = p.user_id AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 minutes")
     ).select(
         F.col("c.ts").alias("ts"),
         F.col("c.event_id").alias("click_id"),
@@ -475,8 +384,7 @@ def click_purchase_join(clicks: DataFrame, purchases: DataFrame, horizon: str = 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source over the documents table (for incremental
     word-count — the reference query as a stream)."""
-    batch_schema = read_parquet(spark, os.path.join(sf_dir, "documents.parquet")).schema
-    return spark.readStream.schema(batch_schema).parquet(_stage_dir(sf_dir, "documents"))
+    return _table_stream(spark, sf_dir, "documents")
 
 
 def streaming_word_count(docs: DataFrame) -> DataFrame:

@@ -44,21 +44,26 @@ def test_simhash_block_join_equals_bruteforce(spark):
     assert got == brute  # pigeonhole blocks guarantee recall 1.0
 
 
-def test_simhash_sharded_blocks_identical_result(spark):
+def test_simhash_sharded_blocks_identical_result(spark, monkeypatch):
     """The generalized (B > d+1) combination-pigeonhole join — the sf10
     sharding route — must return the EXACT default row set: recall 1.0
     is the pigeonhole theorem, not a tuning outcome (round-6, VERDICT r5
-    item 4)."""
+    item 4). B is forced by treating the scan as unsized (so the
+    geometry runs) and pinning the geometry's answer."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans import parallelism
+
     docs = load_table(spark, SF_CORRECT, "documents")
     base = sorted(
         (r.doc_a, r.doc_b, r.hamming)
         for r in D.simhash_near_dups(docs, max_distance=3).collect()
     )
     assert base, "fixture should contain near-dup pairs"
+    monkeypatch.setattr(parallelism, "scan_file_sizes", lambda df: None)
     for n_blocks in (5, 7):
+        monkeypatch.setattr(D, "simhash_block_geometry", lambda n, d, b=n_blocks: b)
         sharded = sorted(
             (r.doc_a, r.doc_b, r.hamming)
-            for r in D.simhash_near_dups(docs, max_distance=3, n_blocks=n_blocks).collect()
+            for r in D.simhash_near_dups(docs, max_distance=3).collect()
         )
         assert sharded == base, f"B={n_blocks} diverged from the d+1 default"
 
@@ -230,11 +235,12 @@ def test_connected_components_matches_union_find(spark, monkeypatch):
             assert got == want, f"trial {trial} route {route}"
 
 
-def test_ivf_short_corpus_guard(spark):
+def test_ivf_short_corpus_guard(spark, monkeypatch):
     """Fewer vectors than k must shrink k, not crash the sampler."""
     rows = [(i, [float(i), 1.0, 0.0, 0.0]) for i in range(5)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    centroids = S.ivf_centroids_np(df, k=16, iters=1)
+    monkeypatch.setattr(S, "IVF_ITERS", 1)
+    centroids = S.ivf_centroids_np(df, k=16)
     assert 1 <= len(centroids) <= 5
     out = S.ivf_topk(df.limit(1), df, centroids, k=2, nprobe=4)
     assert out.count() >= 1
@@ -307,7 +313,7 @@ def test_lsh_candidate_pairs_rejects_wrong_signature_width(spark):
 
 
 def test_connected_components_raises_when_unconverged(spark, monkeypatch):
-    """A chain longer than max_iters' propagation reach must raise, not
+    """A chain longer than CC_MAX_ITERS' propagation reach must raise, not
     return silently under-merged labels (the distributed loop, forced by
     an edge cap of -1)."""
     import pytest
@@ -319,21 +325,24 @@ def test_connected_components_raises_when_unconverged(spark, monkeypatch):
     edges = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
+    monkeypatch.setattr(D, "CC_MAX_ITERS", 2)
     with pytest.raises(RuntimeError, match="still changing"):
-        D.connected_components(vertices, edges, max_iters=2)
-    full = D.connected_components(vertices, edges, max_iters=n + 1)
+        D.connected_components(vertices, edges)
+    monkeypatch.setattr(D, "CC_MAX_ITERS", n + 1)
+    full = D.connected_components(vertices, edges)
     assert {r.comp for r in full.collect()} == {0}
 
 
 def test_connected_components_long_chain_converges_logarithmically(spark, monkeypatch):
     """Path halving must collapse a 200-node path graph well inside
-    max_iters=12 (2^12 >> 200) — plain hash-min would need ~200 rounds.
+    CC_MAX_ITERS=12 (2^12 >> 200) — plain hash-min would need ~200 rounds.
     The distributed loop is forced by an edge cap of -1."""
     monkeypatch.setattr(D, "CC_DRIVER_LOCAL_MAX_EDGES", -1)
     n = 200
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
     chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
-    comps = D.connected_components(verts, chain, max_iters=12)
+    monkeypatch.setattr(D, "CC_MAX_ITERS", 12)
+    comps = D.connected_components(verts, chain)
     rows = comps.collect()
     assert len(rows) == n
     assert {r.comp for r in rows} == {0}, "one component rooted at min id"
@@ -839,3 +848,20 @@ def test_winnow_fingerprints_match_duckdb(spark):
     oracle_fps = {(r[0], r[1]) for r in con.execute(D.winnow_sql()).fetchall()}
     assert spark_fps == oracle_fps
 
+
+
+def test_hyperplane_lsh_signs_at_the_vectors_own_width(spark):
+    """lsh_topk and cosine_near_dup_pairs draw their hyperplanes as wide
+    as the vectors, so a 32-dim corpus runs and finds its planted
+    near-duplicate (64-wide planes failed the matmul on it)."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    vecs = rng.standard_normal((200, 32))
+    vecs[1] = vecs[0] + 0.01 * rng.standard_normal(32)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
+    )
+    top = {(r.query_id, r.rank): r.neighbor_id for r in S.lsh_topk(emb.where("vec_id < 2"), emb, 3).collect()}
+    assert top[(0, 1)] == 1 and top[(1, 1)] == 0
+    assert (0, 1) in {(r.id_a, r.id_b) for r in S.cosine_near_dup_pairs(emb, 0.9).collect()}

@@ -285,21 +285,21 @@ def test_winnow_fingerprints_match_duckdb_fuzz(spark, texts, k, w):
     arbitrary inputs (incl. multi-byte code points and texts shorter
     than the guarantee length) for any (k, w) geometry — the property
     the dedup_exact_suite winnow branch's oracle stands on."""
+    from unittest import mock
+
     import pandas as pd
 
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.dedup import winnow_fingerprints, winnow_sql
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import dedup as D
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    got = {(r.doc_id, r.fp) for r in winnow_fingerprints(df, k=k, w=w).collect()}
     con = duckdb.connect()
     try:
-        con.register("docs_fuzz", pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
-        oracle = {
-            (r[0], r[1])
-            for r in con.execute(winnow_sql(k=k, w=w, table="docs_fuzz")).fetchall()
-        }
+        with mock.patch.multiple(D, WINNOW_K=k, WINNOW_W=w):
+            got = {(r.doc_id, r.fp) for r in D.winnow_fingerprints(df).collect()}
+            con.register("documents", pd.DataFrame({"doc_id": range(len(texts)), "text": texts}))
+            oracle = {(r[0], r[1]) for r in con.execute(D.winnow_sql()).fetchall()}
     finally:
         con.close()
     assert got == oracle, (k, w, [repr(t) for t in texts])

@@ -8,7 +8,7 @@ URI is the SAME seam the always-on tests exercise with ``file://``
 engine code changes are needed for HDFS, which is exactly what this
 test proves when a cluster is reachable.
 
-Recipe (README "HDFS smoke"):
+Recipe (README "Integration smokes"):
 
     export SPARK_GRAFT_HDFS_URI=hdfs://<namenode>:8020/tmp/spark-graft
     pytest -m hdfs tests/test_hdfs.py

@@ -1748,3 +1748,16 @@ def test_ffmpeg_reference_adapters_parse_container_headers(monkeypatch):
                 REF.decode_video_ffmpeg(avi)
     with pytest.raises(ValueError, match="RIFF/AVI"):
         REF.decode_video_ffmpeg(wav)
+
+
+def test_short_wav_fmt_chunk_quarantines_as_value_error(spark):
+    """A fmt chunk shorter than its 16-byte head is refused with a
+    ValueError that names it, so a safe stage tags the row
+    ``quarantined:ValueError`` (unpacking the short chunk raised
+    ``struct.error`` before)."""
+    short = MM._riff(b"WAVE", MM._chunk(b"fmt ", b"\x01\x00\x01\x00"), MM._chunk(b"data", b"\x00\x00"))
+    with pytest.raises(ValueError, match="fmt chunk is 4 bytes"):
+        MM.decode_wav(short)
+    wavs = spark.createDataFrame([(1, bytearray(short))], "doc_id long, audio binary")
+    (row,) = MM.audio_features(wavs, safe=True).collect()
+    assert row["status"] == "quarantined:ValueError"

@@ -12,7 +12,6 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.p
     MIN_TOKENS,
     curated_corpus,
 )
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.sinks import read_table, write_table
 
 from .conftest import SF_CORRECT, SF_SMOKE
 
@@ -80,9 +79,9 @@ def test_hot_shingle_cap_kills_quadratic_candidates(spark):
 def test_curated_corpus_partitioned_write(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("curated") / "corpus")
     cur = curated_corpus(spark, SF_SMOKE)
-    write_table(cur, path, partition_by=["lang_label"])
+    cur.write.mode("overwrite").partitionBy("lang_label").parquet(path)
 
-    back = read_table(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == cur.count()
     # partition pruning works: a single-language read scans one directory
     langs = [r["lang_label"] for r in cur.select("lang_label").distinct().collect()]

@@ -110,7 +110,7 @@ def test_ivf_plan_size_independent_of_k(spark):
     assert len(out) > 0
 
 
-def test_ivf_stored_index_partition_pruned_probe(spark):
+def test_ivf_stored_index_partition_pruned_probe(spark, monkeypatch):
     """write_ivf_index assigns buckets at WRITE time; a probe against the
     stored layout must (a) carry a bucket partition filter — only nprobe
     directories are scanned — and (b) run NO bucket assignment over index
@@ -120,7 +120,8 @@ def test_ivf_stored_index_partition_pruned_probe(spark):
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    centroids = S.ivf_centroids_np(emb, k=8, iters=2)
+    monkeypatch.setattr(S, "IVF_ITERS", 2)
+    centroids = S.ivf_centroids_np(emb, k=8)
     path = os.path.join(SCRATCH, "ivf_index")
     S.write_ivf_index(emb, centroids, path)
 
@@ -147,7 +148,7 @@ def test_ivf_stored_index_partition_pruned_probe(spark):
     assert sorted(map(tuple, stored.collect())) == sorted(map(tuple, inflight.collect()))
 
 
-def test_ivf_scaled_k_and_numpy_assignment(spark):
+def test_ivf_scaled_k_and_numpy_assignment(spark, monkeypatch):
     """Round 11 (ANN decade root cause): a FIXED centroid count makes
     IVF query cost track the corpus linearly (nprobe/16 probes 62% of
     any corpus), so k scales as √N via ivf_k_for, and write-time
@@ -168,7 +169,8 @@ def test_ivf_scaled_k_and_numpy_assignment(spark):
         S.ivf_k_for(0)
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    centroids = S.ivf_centroids_np(emb, k=32, iters=3)
+    monkeypatch.setattr(S, "IVF_ITERS", 3)
+    centroids = S.ivf_centroids_np(emb, k=32)
     assert centroids.shape == (32, 64)
 
     path = os.path.join(SCRATCH, "ivf_index_np")

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import wordcount as wc
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.skew import salted_word_count
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.sinks import read_table, write_table
 
 from .conftest import SF_SMOKE, formatted_plan
 
@@ -22,8 +21,12 @@ def test_format_roundtrips(spark, tmp_path_factory):
     expected = sorted(tuple(r) for r in docs.collect())
     for fmt in ["parquet", "orc", "json", "csv"]:
         path = os.path.join(SCRATCH, f"roundtrip_{fmt}")
-        write_table(docs, path, fmt)
-        back = read_table(spark, path, fmt)
+        writer, reader = docs.write.mode("overwrite").format(fmt), spark.read.format(fmt)
+        if fmt == "csv":
+            writer = writer.option("header", "true")
+            reader = reader.option("header", "true").option("inferSchema", "true")
+        writer.save(path)
+        back = reader.load(path)
         got = sorted((r.doc_id, r.lang, r.n_chars) for r in back.select("doc_id", "lang", "n_chars").collect())
         assert got == expected, fmt
 

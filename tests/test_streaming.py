@@ -106,36 +106,6 @@ def test_drop_duplicates_within_watermark(spark):
     assert ids == [1, 2, 3], f"cross-batch duplicate must be dropped: {ids}"
 
 
-def test_rate_source_seam_produces_events_schema(spark):
-    """The events_source 'rate' kind (streaming/windows.py) must emit the
-    exact events schema with deterministic values per sequence number, so
-    any registered streaming query can run against it unchanged."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import events_source
-
-    stream = events_source(
-        spark,
-        {"kind": "rate", "rows_per_batch": 100, "start_timestamp_ms": 1_700_000_000_000},
-    )
-    assert [f.name for f in stream.schema.fields] == [
-        "event_id", "ts", "user_id", "event_type", "value", "props",
-    ]
-    name = f"rate_{uuid.uuid4().hex[:10]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(once=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert q.exception() is None, q.exception()
-    rows = spark.table(name).collect()
-    assert len(rows) == 100
-    by_id = {r.event_id: r for r in rows}
-    assert by_id[0].event_type == "click" and by_id[4].event_type == "error"
-    assert by_id[7].user_id == 7 and by_id[13].value == 1.3
-
-
 def test_checkpoint_recovery_exactly_once(spark):
     """Checkpointed restart semantics: a file-sink query stopped and
     restarted from the same checkpointLocation must process each input
@@ -177,123 +147,6 @@ def test_checkpoint_recovery_exactly_once(spark):
 
     drain()  # nothing new: restart must be a no-op, not a re-emit
     assert sorted(r.event_id for r in spark.read.parquet(out).collect()) == [1, 2, 3]
-
-
-# --------------------------------------------------------------------------
-# Kafka source kind: the JSON value decoder is the only kafka-specific
-# logic; it is exercised broker-less on (a) a batch frame with the kafka
-# wire schema and (b) a real streaming query over wire-shaped files.
-# --------------------------------------------------------------------------
-
-#: Kafka wire schema as the kafka source emits it (envelope + binary value).
-_WIRE = (
-    "key binary, value binary, topic string, partition int, offset long, "
-    "timestamp timestamp, timestampType int"
-)
-
-
-def _wire_rows(spark, events_df):
-    """Wrap events rows as kafka records: value = JSON encoding of the row."""
-    return events_df.select(
-        F.lit(None).cast("binary").alias("key"),
-        F.encode(
-            F.to_json(F.struct("event_id", "ts", "user_id", "event_type", "value", "props")),
-            "UTF-8",
-        ).alias("value"),
-        F.lit("events").alias("topic"),
-        F.lit(0).alias("partition"),
-        F.col("event_id").alias("offset"),
-        F.col("ts").alias("timestamp"),
-        F.lit(0).alias("timestampType"),
-    )
-
-
-def test_kafka_decoder_roundtrip(spark):
-    """decode_kafka_events(wire(e)) == e, field for field — the schema
-    mapper is the entire kafka-specific surface, so this plus the
-    streaming test below is the broker-less proof of the kafka kind."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
-        KAFKA_EVENTS_SCHEMA,
-        decode_kafka_events,
-    )
-
-    events = spark.createDataFrame(
-        [
-            (1, _ts(10, 0), 7, "click", 1.5, '{"seq": 1}'),
-            (2, _ts(10, 5), 8, "view", 0.0, None),
-            (3, _ts(23, 59), 7, "purchase", -2.25, '{"a": [1, 2]}'),
-        ],
-        KAFKA_EVENTS_SCHEMA,
-    )
-    decoded = decode_kafka_events(_wire_rows(spark, events))
-    assert decoded.schema == events.schema
-    assert sorted(map(tuple, decoded.collect())) == sorted(map(tuple, events.collect()))
-
-
-def test_kafka_decoder_poison_pill(spark):
-    """A malformed record value must become an all-NULL row (quarantine
-    downstream), never a stream-killing exception."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import decode_kafka_events
-
-    wire = spark.createDataFrame(
-        [(None, b"{not json", "events", 0, 0, _ts(1, 0), 0)], _WIRE
-    )
-    rows = decode_kafka_events(wire).collect()
-    assert len(rows) == 1 and rows[0]["event_id"] is None
-
-
-def test_kafka_mapper_in_streaming_query(spark):
-    """The kafka decode path inside an actual streaming query: stream
-    wire-shaped records (binary JSON values) from files, decode, run the
-    same tumbling-window agg every other source kind runs, and match the
-    batch answer — proving query code is source-kind agnostic."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
-        KAFKA_EVENTS_SCHEMA,
-        decode_kafka_events,
-        tumbling_counts,
-    )
-
-    events = spark.createDataFrame(
-        [
-            (i, _ts(9 + i % 3, (i * 7) % 60), i % 5, ["click", "view"][i % 2], i / 4.0, None)
-            for i in range(40)
-        ],
-        KAFKA_EVENTS_SCHEMA,
-    )
-    root = os.path.join(SCRATCH, f"kafka_wire_{uuid.uuid4().hex[:8]}")
-    _wire_rows(spark, events).write.mode("overwrite").parquet(root)
-
-    wire_stream = spark.readStream.schema(_WIRE).parquet(root)
-    got = _drain(tumbling_counts(decode_kafka_events(wire_stream)), "complete")
-    want = tumbling_counts(events)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-@pytest.mark.kafka
-@pytest.mark.skipif(
-    not os.environ.get("SPARK_GRAFT_KAFKA_BOOTSTRAP"),
-    reason="SPARK_GRAFT_KAFKA_BOOTSTRAP not set (no broker in sandbox)",
-)
-def test_kafka_live_source_smoke(spark):
-    """Live-broker smoke: the kafka kind of events_source drains a real
-    topic through the same tumbling-window query every other kind runs
-    (README 'Integration smokes' recipe). Requires the spark-sql-kafka
-    connector jar and an `events` topic carrying JSON event rows."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
-        events_source,
-        tumbling_counts,
-    )
-
-    stream = events_source(
-        spark,
-        {
-            "kind": "kafka",
-            "bootstrap_servers": os.environ["SPARK_GRAFT_KAFKA_BOOTSTRAP"],
-            "topic": os.environ.get("SPARK_GRAFT_KAFKA_TOPIC", "events"),
-        },
-    )
-    out = _drain(tumbling_counts(stream), "complete")
-    assert out.count() >= 0  # schema + plumbing; content depends on the live topic
 
 
 def test_streaming_media_ingest_decode_and_quarantine_rollup(spark, tmp_path):
@@ -427,11 +280,12 @@ def test_stream_shuffle_width_sums_parquet_directory(tmp_path, monkeypatch):
     assert windows.stream_shuffle_width(str(tmp_path), "events") == expected
 
 
-def test_run_available_now_many_sets_and_restores_width(spark, tmp_path):
+def test_run_available_now_many_sets_and_restores_width(spark, tmp_path, monkeypatch):
     """shuffle_width pins the state-store partition count for the drain
     (streaming reads spark.sql.shuffle.partitions at query start; AQE
     never coalesces it) and the session value is restored afterwards —
     including on failure."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming import windows
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
         run_available_now_many,
     )
@@ -451,8 +305,9 @@ def test_run_available_now_many_sets_and_restores_width(spark, tmp_path):
     # partitioning is visible in the state store dir only per query, so
     # assert via the restored conf + a forced-failure restore instead
     bad = stream.groupBy("k").count().where(F.expr("assert_true(k < 0)").isNull())
+    monkeypatch.setattr(windows, "DRAIN_TIMEOUT_S", 60)
     with pytest.raises(Exception):
-        run_available_now_many([(bad, "complete")], timeout_s=60, shuffle_width=5)
+        run_available_now_many([(bad, "complete")], shuffle_width=5)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
@@ -567,6 +422,7 @@ def test_overlapping_drains_restore_the_session_width(spark, tmp_path, monkeypat
 
     from pyspark.sql.streaming.query import StreamingQuery
 
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming import windows
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
         run_available_now_many,
     )
@@ -593,15 +449,14 @@ def test_overlapping_drains_restore_the_session_width(spark, tmp_path, monkeypat
         return done
 
     monkeypatch.setattr(StreamingQuery, "awaitTermination", ordered_await)
+    monkeypatch.setattr(windows, "DRAIN_TIMEOUT_S", 120)
 
     def drain(width, after=None):
         name = threading.current_thread().name
         try:
             if after is not None:
                 assert after.wait(120), "drain A never started"
-            (out,) = run_available_now_many(
-                [(stream.groupBy("k").count(), "complete")], timeout_s=120, shuffle_width=width
-            )
+            (out,) = run_available_now_many([(stream.groupBy("k").count(), "complete")], shuffle_width=width)
             results[name] = {tuple(r) for r in out.collect()}
         except BaseException as exc:  # noqa: BLE001 — reported below
             errors.append(exc)
