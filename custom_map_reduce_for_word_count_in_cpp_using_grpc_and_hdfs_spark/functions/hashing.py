@@ -59,10 +59,9 @@ POLY_MOD_56 = (1 << 56) - 5
 SIMHASH_BITS = 56
 
 
-def poly_hash_token(token: Column | str) -> Column:
-    """56-bit polynomial hash of a token string."""
-    token = F.col(token) if isinstance(token, str) else token
-    codes = F.transform(F.split(token, ""), lambda c: F.ascii(c).cast("long"))
+def poly_hash_token() -> Column:
+    """56-bit polynomial hash of the token string column ``tok``."""
+    codes = F.transform(F.split(F.col("tok"), ""), lambda c: F.ascii(c).cast("long"))
     return F.aggregate(
         codes,
         F.lit(0).cast("long"),
@@ -70,9 +69,10 @@ def poly_hash_token(token: Column | str) -> Column:
     )
 
 
-def poly_hash_token_sql(token_expr: str) -> str:
+def poly_hash_token_sql() -> str:
+    """DuckDB rendering of :func:`poly_hash_token` (same fold)."""
     return (
-        f"list_reduce(list_transform(string_split({token_expr}, ''), "
+        "list_reduce(list_transform(string_split(tok, ''), "
         f"c -> ascii(c)::BIGINT), (acc, x) -> (acc * {POLY_BASE} + x) % {POLY_MOD_56})"
     )
 

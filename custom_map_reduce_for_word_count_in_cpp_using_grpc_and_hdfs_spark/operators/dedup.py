@@ -61,10 +61,10 @@ SIMHASH_FP_BOUND = 1      # (doc_id, long): 0.08-0.10x
 # --------------------------------------------------------------------------
 
 
-def exact_dedup_groups(df: DataFrame, key_cols: list[str], id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """One row per distinct key: deterministic survivor + duplicate count."""
     return df.groupBy(*key_cols).agg(
-        F.min(id_col).alias("survivor_id"),
+        F.min("doc_id").alias("survivor_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
 
@@ -98,7 +98,7 @@ def shingles_sql(text_expr: str, n: int = 3) -> str:
     )
 
 
-def doc_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def doc_shingles(df: DataFrame) -> DataFrame:
     """Distinct (doc_id, n_sh, shingle) rows over word 3-gram shingles —
     the inverted-index input of every near-dup route, with the per-doc
     DISTINCT shingle count carried on every row.
@@ -125,12 +125,12 @@ def doc_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     """
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import spread
 
-    shingle = F.explode(shingles_col(text_col, 3)).alias("shingle")
-    out = spread(df, by=[id_col]).select(F.col(id_col), shingle)
-    out = out.select(id_col, F.xxhash64("shingle").alias("shingle"))
-    per_doc = out.groupBy(id_col).agg(F.collect_set("shingle").alias("_sh"))
+    shingle = F.explode(shingles_col("text", 3)).alias("shingle")
+    out = spread(df, by=["doc_id"]).select(F.col("doc_id"), shingle)
+    out = out.select("doc_id", F.xxhash64("shingle").alias("shingle"))
+    per_doc = out.groupBy("doc_id").agg(F.collect_set("shingle").alias("_sh"))
     return per_doc.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_sh").alias("n_sh"),
         F.explode("_sh").alias("shingle"),
     )
@@ -139,8 +139,6 @@ def doc_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
 def jaccard_pairs(
     df: DataFrame,
     threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_shingle_df: int | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -170,7 +168,7 @@ def jaccard_pairs(
     # persist (bounded-by-measurement, not a proof — see
     # operators/caching.py::eager_stats for the bound and its audit log).
     ds = (
-        eager_stats(doc_shingles(df, id_col, text_col), SHINGLE_INDEX_BOUND)
+        eager_stats(doc_shingles(df), SHINGLE_INDEX_BOUND)
         if owned
         else shingles
     )
@@ -186,8 +184,8 @@ def jaccard_pairs(
     # the provably-small broadcast hints they needed are gone (round 8) —
     # two fewer shuffles of the pair frame and a static plan back under
     # the round-6 exchange ceilings.
-    a = index.select(F.col(id_col).alias("doc_a"), "shingle", F.col("n_sh").alias("n_a"))
-    b = index.select(F.col(id_col).alias("doc_b"), "shingle", F.col("n_sh").alias("n_b"))
+    a = index.select(F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("n_a"))
+    b = index.select(F.col("doc_id").alias("doc_b"), "shingle", F.col("n_sh").alias("n_b"))
     result = (
         a.join(b, "shingle")
         .where(F.col("doc_a") < F.col("doc_b"))
@@ -212,17 +210,16 @@ def jaccard_pairs(
 # --------------------------------------------------------------------------
 
 
-def minhash_signature(
-    df: DataFrame,
-    num_perm: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+#: MinHash permutations: the signature width :func:`minhash_signature`
+#: produces and :func:`lsh_candidate_pairs` bands, read at call time.
+MINHASH_PERMS = 32
+
+
+def minhash_signature(df: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
     """(doc_id, sig: array<long>) — per-permutation min over the doc's
     shingle hashes.
 
-    Formulated as ``num_perm`` plain MIN aggregates over the exploded
+    Formulated as :data:`MINHASH_PERMS` plain MIN aggregates over the exploded
     (doc_id, shingle_hash) stream: each permutation is one xxhash64
     remix + min — all flat codegen expressions with map-side partial
     aggregation, so the shuffle carries one row per doc per partition.
@@ -234,21 +231,22 @@ def minhash_signature(
     ``shingles`` lets callers that already materialized
     :func:`doc_shingles` (e.g. for Jaccard verification) reuse it.
     """
-    ds = shingles if shingles is not None else doc_shingles(df, id_col, text_col)
+    num_perm = MINHASH_PERMS
+    ds = shingles if shingles is not None else doc_shingles(df)
     mins = [
         F.min(minhash_value(F.col("shingle"), p)).alias(f"_m{p}") for p in range(num_perm)
     ]
-    wide = ds.groupBy(id_col).agg(*mins)
+    wide = ds.groupBy("doc_id").agg(*mins)
     return wide.select(
-        F.col(id_col), F.array(*[F.col(f"_m{p}") for p in range(num_perm)]).alias("sig")
+        F.col("doc_id"), F.array(*[F.col(f"_m{p}") for p in range(num_perm)]).alias("sig")
     )
 
 
-def band_hashes_col(sig_col, bands: int, num_perm: int):
-    """array<long> of per-band hashes over a minhash signature column —
+def band_hashes_col(bands: int, num_perm: int):
+    """array<long> of per-band hashes over the minhash signature ``sig`` —
     band b = xxhash64 of its ``num_perm // bands`` signature slots. Pure
     expression, so it could be computed once at write time."""
-    sig = F.col(sig_col) if isinstance(sig_col, str) else sig_col
+    sig = F.col("sig")
     rows_per_band = num_perm // bands
     return F.array(
         *[
@@ -281,14 +279,12 @@ def _banded_candidate_join(banded: DataFrame, bands: int) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, bands: int, id_col: str = "doc_id", num_perm: int = 32
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, bands: int) -> DataFrame:
     """Band the signature, equi-join on (band_idx, band_hash).
 
-    ``num_perm`` is the signature width (threaded from the producer —
-    deriving it with a collect() would fire a driver round-trip action
-    before the candidate join, and crash on an empty frame).
+    The signature width is :data:`MINHASH_PERMS`, the producer's (deriving
+    it with a collect() would fire a driver round-trip action before the
+    candidate join, and crash on an empty frame).
 
     ``sigs`` is persisted first: the banding projection references the
     signature array 4×rows_per_band times per band, and Catalyst's
@@ -303,8 +299,9 @@ def lsh_candidate_pairs(
     aggregate-derived signature frame is size-under-estimated the same
     way the shingle index is — see caching.py::eager_stats).
     """
+    num_perm = MINHASH_PERMS
     sigs = eager_stats(sigs, MINHASH_SIG_BOUND)
-    # Guard against a sigs frame built with a DIFFERENT num_perm: slicing
+    # Guard against a sigs frame built with a DIFFERENT width: slicing
     # past the array end would silently band over null hashes, degrading
     # recall with no error. assert_true fails the job instead.
     width_ok = F.assert_true(
@@ -315,19 +312,13 @@ def lsh_candidate_pairs(
         ),
     )
     banded = sigs.select(
-        F.col(id_col).alias("_id"),
-        F.when(width_ok.isNull(), band_hashes_col("sig", bands, num_perm)).alias("bhs"),
+        F.col("doc_id").alias("_id"),
+        F.when(width_ok.isNull(), band_hashes_col(bands, num_perm)).alias("bhs"),
     ).select("_id", "bhs", F.posexplode("bhs").alias("band", "band_hash"))
     return tie_cache_lifetime(_banded_candidate_join(banded, bands), sigs)
 
 
-def minhash_near_dups(
-    df: DataFrame,
-    threshold: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def minhash_near_dups(df: DataFrame, threshold: float = 0.7, shingles: DataFrame | None = None) -> DataFrame:
     """LSH candidates (32 permutations in 8 bands of 4) verified with
     exact Jaccard — returns (doc_a, doc_b, jaccard ≥ threshold).
     Approximate only in *recall* (a true pair whose every band disagrees
@@ -340,16 +331,16 @@ def minhash_near_dups(
     # materialize the shingle inverted index once
     owned = shingles is None
     ds = (
-        eager_stats(doc_shingles(df, id_col, text_col), SHINGLE_INDEX_BOUND)
+        eager_stats(doc_shingles(df), SHINGLE_INDEX_BOUND)
         if owned
         else shingles
     )
-    cands = lsh_candidate_pairs(minhash_signature(df, 32, id_col, text_col, shingles=ds), 8, id_col, 32)
+    cands = lsh_candidate_pairs(minhash_signature(df, shingles=ds), 8)
     # |A|/|B| ride on the index rows (see doc_shingles) — verification is
     # a min() in the pair aggregation, no per-doc sizes joins (round 8)
-    a = ds.select(F.col(id_col).alias("doc_a"), "shingle", F.col("n_sh").alias("n_a"))
+    a = ds.select(F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("n_a"))
     b = ds.select(
-        F.col(id_col).alias("doc_b"),
+        F.col("doc_id").alias("doc_b"),
         F.col("shingle").alias("shingle_b"),
         F.col("n_sh").alias("n_b"),
     )
@@ -416,22 +407,14 @@ def _driver_local_labels(pairs: DataFrame, id_dtype: str) -> DataFrame:
     driver: Arrow-collect the (bounded) pair list, run the numpy
     union-find, parallelize the label relation back at the endpoints'
     original integral type. The Arrow path moves columns, not Row
-    objects; the plain-collect fallback covers builds without
-    DataFrame.toArrow. The fallback is CAPABILITY-gated, not a bare
-    except (ADVICE r13): a genuine collect failure at the 2M-edge cap
-    (Arrow/driver-memory error) must propagate, not silently retry via
-    the much slower Row path."""
+    objects; a collect failure at the 2M-edge cap (Arrow/driver-memory
+    error) propagates."""
     import numpy as np
 
     spark = pairs.sparkSession
-    if hasattr(pairs, "toArrow"):
-        tbl = pairs.toArrow()
-        a = np.asarray(tbl.column("a").to_numpy(zero_copy_only=False), dtype=np.int64)
-        b = np.asarray(tbl.column("b").to_numpy(zero_copy_only=False), dtype=np.int64)
-    else:  # pragma: no cover — non-Arrow builds
-        rows = pairs.collect()
-        a = np.fromiter((r[0] for r in rows), np.int64, len(rows))
-        b = np.fromiter((r[1] for r in rows), np.int64, len(rows))
+    tbl = pairs.toArrow()
+    a = np.asarray(tbl.column("a").to_numpy(zero_copy_only=False), dtype=np.int64)
+    b = np.asarray(tbl.column("b").to_numpy(zero_copy_only=False), dtype=np.int64)
     ids, comp = _numpy_cc_min_labels(a, b)
     schema = f"vid {id_dtype}, comp {id_dtype}"
     if ids.size == 0:
@@ -686,8 +669,6 @@ def near_dup_components(
     df: DataFrame,
     threshold: float,
     edge_method: str = "jaccard",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """(id, comp) dedup clusters with a SELECTABLE edge source — the
@@ -716,21 +697,21 @@ def near_dup_components(
     :func:`jaccard_pairs`).
     """
     if edge_method == "jaccard":
-        edges = jaccard_pairs(df, threshold, id_col, text_col, shingles=shingles)
+        edges = jaccard_pairs(df, threshold, shingles=shingles)
     elif edge_method == "minhash":
-        edges = minhash_near_dups(df, threshold, id_col, text_col, shingles=shingles)
+        edges = minhash_near_dups(df, threshold, shingles=shingles)
     else:
         raise ValueError(f"edge_method must be 'jaccard' or 'minhash', got {edge_method!r}")
     return connected_components(
-        df.select(id_col),
+        df.select("doc_id"),
         edges.select("doc_a", "doc_b"),
-        id_col=id_col,
+        id_col="doc_id",
         src_col="doc_a",
         dst_col="doc_b",
     )
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """(doc_id, simhash: long) — 56-bit SimHash over reference tokens.
 
     bit_b(doc) = 1 iff Σ_tokens (2·bit_b(hash(token)) − 1) > 0, i.e. the
@@ -739,8 +720,8 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     oracle-checkable bit for bit."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import spread
 
-    toks = spread(df, by=[id_col]).select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
-    hashed = toks.select(id_col, poly_hash_token("tok").alias("h"))
+    toks = spread(df, by=["doc_id"]).select(F.col("doc_id"), F.explode(tokens_col("text")).alias("tok"))
+    hashed = toks.select("doc_id", poly_hash_token().alias("h"))
     # 56 flat SUM aggregates (one per bit) with map-side partial
     # aggregation: the shuffle carries one 56-column row per doc per
     # partition. (Both alternatives lose: collect_list shuffles every
@@ -751,33 +732,33 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
         F.sum(F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"_v{b}")
         for b in range(SIMHASH_BITS)
     ]
-    per_doc = hashed.groupBy(id_col).agg(*votes)
+    per_doc = hashed.groupBy("doc_id").agg(*votes)
     bit = F.lit(0).cast("long")
     for b in range(SIMHASH_BITS):
         bit = bit + F.when(F.col(f"_v{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
-    return per_doc.select(F.col(id_col), bit.alias("simhash"))
+    return per_doc.select(F.col("doc_id"), bit.alias("simhash"))
 
 
-def simhash_sql(id_col: str = "doc_id", text_col: str = "text") -> str:
+def simhash_sql() -> str:
     """DuckDB rendering of :func:`simhash` (same hash, same majority rule)."""
     return f"""
-    SELECT {id_col}, CAST(SUM(bitval) AS BIGINT) AS simhash FROM (
-        SELECT {id_col}, CASE WHEN SUM(vote) > 0
+    SELECT doc_id, CAST(SUM(bitval) AS BIGINT) AS simhash FROM (
+        SELECT doc_id, CASE WHEN SUM(vote) > 0
                THEN (CAST(1 AS BIGINT) << b) ELSE 0 END AS bitval
         FROM (
-            SELECT {id_col}, unnest(generate_series(0, {SIMHASH_BITS - 1})) AS b,
+            SELECT doc_id, unnest(generate_series(0, {SIMHASH_BITS - 1})) AS b,
                    2 * ((h >> b) & 1) - 1 AS vote
             FROM (
-                SELECT {id_col}, {poly_hash_token_sql('tok')} AS h
+                SELECT doc_id, {poly_hash_token_sql()} AS h
                 FROM (
-                    SELECT {id_col}, unnest({tokens_sql(text_col)}) AS tok
+                    SELECT doc_id, unnest({tokens_sql('text')}) AS tok
                     FROM documents
                 )
             )
-        ) GROUP BY {id_col}, b
-    ) GROUP BY {id_col}
+        ) GROUP BY doc_id, b
+    ) GROUP BY doc_id
     """
 
 
@@ -822,12 +803,7 @@ def simhash_block_geometry(n_docs: int, max_distance: int = 3) -> int:
     return best
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    max_distance: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_near_dups(df: DataFrame, max_distance: int = 3) -> DataFrame:
     """Pairs with hamming(simhash_a, simhash_b) ≤ d via the generalized
     pigeonhole block join: 56 bits split into B ≥ d+1 blocks; a
     distance-≤d pair's differing bits touch ≤ d blocks, so it agrees
@@ -861,7 +837,7 @@ def simhash_near_dups(
     # fingerprints; without the barrier each reference recomputes them.
     # Eagerly materialized so the block self-join below plans against the
     # cache's measured size (caching.py::eager_stats).
-    fps = eager_stats(simhash(df, id_col, text_col), SIMHASH_FP_BOUND)
+    fps = eager_stats(simhash(df), SIMHASH_FP_BOUND)
 
     base, extra = divmod(SIMHASH_BITS, n_blocks)
     widths = [base + (1 if i < extra else 0) for i in range(n_blocks)]
@@ -885,14 +861,14 @@ def simhash_near_dups(
     ]
 
     keyed = fps.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("simhash"),
         F.posexplode(
             F.array(*[combo_key(F.col("simhash"), combo) for combo in combos])
         ).alias("cmb", "key"),
     )
-    a = keyed.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"), "cmb", "key")
-    b = keyed.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("sh_b"), "cmb", "key")
+    a = keyed.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"), "cmb", "key")
+    b = keyed.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"), "cmb", "key")
 
     # Canonical-combo dedup: a pair agreeing on k combinations would
     # surface k times; keep it ONLY at its first agreeing combination
@@ -984,14 +960,14 @@ def _winnow_fps_batch(texts, k: int, w: int):
     return pd.Series(out)
 
 
-def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Distinct winnowing fingerprints per document — the
     exact-substring dedup route (Schleimer et al. 2003 winnowing; the
     detection rule behind exact-substring training-data dedup a la Lee
     et al. 2022): polynomial-hash every character k-gram, keep the
     minimum hash of each sliding window of ``w`` consecutive k-gram
     hashes (k = :data:`WINNOW_K`, w = :data:`WINNOW_W`, read at call
-    time), distinct the picks per document. Returns (id_col, fp long)
+    time), distinct the picks per document. Returns (doc_id, fp long)
     rows.
 
     GUARANTEE (combinatorial, not probabilistic): two documents sharing
@@ -1025,8 +1001,8 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = "
     k, w = WINNOW_K, WINNOW_W
     udf = F.pandas_udf(lambda texts: _winnow_fps_batch(texts, k, w), "array<long>")
     return (
-        df.where(F.length(text_col) >= k + w - 1)
-        .select(F.col(id_col), F.explode(udf(F.col(text_col))).alias("fp"))
+        df.where(F.length("text") >= k + w - 1)
+        .select(F.col("doc_id"), F.explode(udf(F.col("text"))).alias("fp"))
     )
 
 
@@ -1065,10 +1041,10 @@ def winnow_sql() -> str:
     """
 
 
-def winnow_shared_docs(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def winnow_shared_docs(fps: DataFrame) -> DataFrame:
     """Per-document shared-span summary over a winnow fingerprint frame:
     one row per document carrying >= 1 fingerprint that also appears in
-    another document — (id_col, survivor_id, n_copies) where
+    another document — (doc_id, survivor_id, n_copies) where
     survivor_id = the smallest doc id over every sharing group the doc
     belongs to (the deterministic earliest witness; equals the doc's own
     id when it IS the earliest) and n_copies = how many of the doc's
@@ -1090,24 +1066,18 @@ def winnow_shared_docs(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
     wfp = Window.partitionBy("fp")
     shared = (
         fps.withColumn("_n_docs", F.count(F.lit(1)).over(wfp))
-        .withColumn("_first_doc", F.min(id_col).over(wfp))
+        .withColumn("_first_doc", F.min("doc_id").over(wfp))
         .where(F.col("_n_docs") >= 2)
     )
-    return shared.groupBy(id_col).agg(
+    return shared.groupBy("doc_id").agg(
         F.min("_first_doc").alias("survivor_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
 
 
-def contaminated_docs(
-    df: DataFrame,
-    eval_df: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def contaminated_docs(df: DataFrame, eval_df: DataFrame) -> DataFrame:
     """Training-corpus decontamination: ids of documents sharing at least
-    one word n-gram with an evaluation set (the overlap rule used to
+    one word 3-gram with an evaluation set (the overlap rule used to
     scrub benchmark text out of pretraining data).
 
     Scale shape: the eval side is tiny by construction (benchmarks are
@@ -1115,14 +1085,14 @@ def contaminated_docs(
     explodes to (doc, shingle) rows and a left-semi join + distinct
     flags contaminated ids — one scan of the corpus, no shuffle of
     document text, same inverted-index discipline as `jaccard_pairs`.
-    The n-gram length is a parameter: production decontamination uses
-    8-13; the synthetic fixture's 31-word vocabulary makes 3 the
-    discriminative setting (see queries/dedup_q.py).
+    Production decontamination uses n-grams of 8-13 words; the synthetic
+    fixture's 31-word vocabulary makes 3 the discriminative setting (see
+    queries/dedup_q.py).
     """
-    ev = eval_df.select(F.explode(shingles_col(text_col, n)).alias("shingle")).distinct()
-    sh = df.select(F.col(id_col), F.explode(shingles_col(text_col, n)).alias("shingle"))
+    ev = eval_df.select(F.explode(shingles_col("text", 3)).alias("shingle")).distinct()
+    sh = df.select(F.col("doc_id"), F.explode(shingles_col("text", 3)).alias("shingle"))
     return (
         sh.join(F.broadcast(ev), "shingle", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
     )

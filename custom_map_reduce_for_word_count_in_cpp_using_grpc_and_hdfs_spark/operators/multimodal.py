@@ -29,12 +29,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_payload(df: DataFrame) -> DataFrame:
     """Wrap a column as (payload: binary, meta: struct) — the canonical
     multimodal row shape. Here the payload is the utf-8 encoding of the
     text column (the container has no binary media); real pipelines load
     bytes via binaryFile/parquet."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     meta = F.struct(
         F.lit("text").alias("modality"),
         F.octet_length(payload).cast("long").alias("byte_len"),
@@ -547,7 +547,8 @@ def _comp_block_dims(width: int, height: int, hi: int, vi: int, hmax: int, vmax:
     return -(-ch // 8), -(-cw // 8)  # (block rows, block cols)
 
 
-def _scan_dc_first(arrays, hv, mw, mh, al: int, dc_codes: dict, restart: int = 0) -> bytes:
+def _scan_dc_first(arrays, hv, mw, mh, dc_codes: dict, restart: int = 0) -> bytes:
+    """DC first pass (Ah=0, Al=1) over every component, interleaved."""
     w = _BitWriter(stuff=True)
     prev = [0, 0, 0]
     seen = -1
@@ -555,7 +556,7 @@ def _scan_dc_first(arrays, hv, mw, mh, al: int, dc_codes: dict, restart: int = 0
         if mcu != seen:
             _maybe_restart(w, mcu, restart, prev)
             seen = mcu
-        v = int(arrays[c][by, bx, 0]) >> al  # arithmetic shift (T.81 point transform)
+        v = int(arrays[c][by, bx, 0]) >> 1  # arithmetic shift (T.81 point transform, Al=1)
         t, lo = _magnitude(v - prev[c])
         prev[c] = v
         code, length = dc_codes[t]
@@ -565,14 +566,15 @@ def _scan_dc_first(arrays, hv, mw, mh, al: int, dc_codes: dict, restart: int = 0
     return w.getvalue()
 
 
-def _scan_dc_refine(arrays, hv, mw, mh, al: int, restart: int = 0) -> bytes:
+def _scan_dc_refine(arrays, hv, mw, mh, restart: int = 0) -> bytes:
+    """DC refinement (Ah=1, Al=0): the low bit of every DC coefficient."""
     w = _BitWriter(stuff=True)
     seen = -1
     for mcu, c, by, bx in _mcu_block_order(hv, mw, mh):
         if mcu != seen:
             _maybe_restart(w, mcu, restart)
             seen = mcu
-        w.write((int(arrays[c][by, bx, 0]) >> al) & 1, 1)
+        w.write(int(arrays[c][by, bx, 0]) & 1, 1)
     return w.getvalue()
 
 
@@ -592,12 +594,11 @@ def _flush_eobrun(w: "_BitWriter", eobrun: int, ac_codes: dict, bits: list | Non
     return 0
 
 
-def _scan_ac_first(
-    arr, cbh: int, cbw: int, ss: int, se: int, al: int, ac_codes: dict, restart: int = 0
-) -> bytes:
-    """Spectral-selection first pass (Ah=0) over one component's band:
-    point-transformed coefficients with EOB-run coding across blocks.
-    EOB runs never cross a restart boundary (flushed before each RSTn)."""
+def _scan_ac_first(arr, cbh: int, cbw: int, ac_codes: dict, restart: int = 0) -> bytes:
+    """Spectral-selection first pass (Ah=0, Al=1) over one component's
+    AC band (coefficients 1-63): point-transformed coefficients with
+    EOB-run coding across blocks. EOB runs never cross a restart
+    boundary (flushed before each RSTn)."""
     w = _BitWriter(stuff=True)
     eobrun = 0
     for unit, (by, bx) in enumerate((b, x) for b in range(cbh) for x in range(cbw)):
@@ -606,8 +607,8 @@ def _scan_ac_first(
             _maybe_restart(w, unit, restart)
         zz = arr[by, bx]
         vals = [
-            (1 if int(v) > 0 else -1) * (abs(int(v)) >> al) if int(v) else 0
-            for v in zz[ss : se + 1]
+            (1 if int(v) > 0 else -1) * (abs(int(v)) >> 1) if int(v) else 0
+            for v in zz[1:64]
         ]
         nz = [i for i, v in enumerate(vals) if v]
         if not nz:
@@ -623,10 +624,9 @@ def _scan_ac_first(
     return w.getvalue()
 
 
-def _scan_ac_refine(
-    arr, cbh: int, cbw: int, ss: int, se: int, al: int, ac_codes: dict, restart: int = 0
-) -> bytes:
-    """Successive-approximation AC refinement (Ah=Al+1): one sign-coded
+def _scan_ac_refine(arr, cbh: int, cbw: int, ac_codes: dict, restart: int = 0) -> bytes:
+    """Successive-approximation AC refinement (Ah=1, Al=0) over
+    coefficients 1-63: one sign-coded
     symbol per NEWLY nonzero coefficient, one correction bit per
     previously nonzero coefficient, correction bits buffered across
     EOB runs — the T.81 G.1.2.3 protocol as implemented by libjpeg.
@@ -639,8 +639,8 @@ def _scan_ac_refine(
             eobrun = _flush_eobrun(w, eobrun, ac_codes, eob_bits)
             _maybe_restart(w, unit, restart)
         zz = arr[by, bx]
-        absv = [abs(int(v)) >> al for v in zz[ss : se + 1]]
-        signs = [int(v) > 0 for v in zz[ss : se + 1]]
+        absv = [abs(int(v)) for v in zz[1:64]]
+        signs = [int(v) > 0 for v in zz[1:64]]
         new_pos = [i for i, a in enumerate(absv) if a == 1]
         if not new_pos:
             eobrun += 1
@@ -763,22 +763,16 @@ def encode_jpeg(
             )
             return codes, dht_seg
 
-        body = _sos_header([0, 1, 2], 0, 0, 0, 1) + _scan_dc_first(
-            arrays, hv, mw, mh, 1, dc_codes, ri
-        )
+        body = _sos_header([0, 1, 2], 0, 0, 0, 1) + _scan_dc_first(arrays, hv, mw, mh, dc_codes, ri)
         for c in range(3):
             cbh, cbw = _comp_block_dims(width, height, hv[c][0], hv[c][1], hmax, vmax)
             codes, dht_seg = _ac_scan_tables(c)
-            body += dht_seg + _sos_header([c], 1, 63, 0, 1) + _scan_ac_first(
-                arrays[c], cbh, cbw, 1, 63, 1, codes, ri
-            )
-        body += _sos_header([0, 1, 2], 0, 0, 1, 0) + _scan_dc_refine(arrays, hv, mw, mh, 0, ri)
+            body += dht_seg + _sos_header([c], 1, 63, 0, 1) + _scan_ac_first(arrays[c], cbh, cbw, codes, ri)
+        body += _sos_header([0, 1, 2], 0, 0, 1, 0) + _scan_dc_refine(arrays, hv, mw, mh, ri)
         for c in range(3):
             cbh, cbw = _comp_block_dims(width, height, hv[c][0], hv[c][1], hmax, vmax)
             codes, dht_seg = _ac_scan_tables(c + 1)  # offset: refine differs from first pass
-            body += dht_seg + _sos_header([c], 1, 63, 1, 0) + _scan_ac_refine(
-                arrays[c], cbh, cbw, 1, 63, 0, codes, ri
-            )
+            body += dht_seg + _sos_header([c], 1, 63, 1, 0) + _scan_ac_refine(arrays[c], cbh, cbw, codes, ri)
     else:
         w = _BitWriter(stuff=True)
         prev_dc = [0, 0, 0]
@@ -1283,7 +1277,7 @@ def _fixture_image(doc_id: int) -> tuple[int, int, np.ndarray]:
     return w, h, _fixture_pixels(doc_id, w, h)
 
 
-def _render_stage(df: DataFrame, out_col: str, encode_one, id_col: str) -> DataFrame:
+def _render_stage(df: DataFrame, out_col: str, encode_one) -> DataFrame:
     """Fixture-renderer plumbing shared by every ``render_*``: one
     ``encode_one(doc_id) -> bytes`` payload per row, built executor-side
     in Arrow batches (mapInPandas) so the bytes never touch the driver —
@@ -1292,10 +1286,10 @@ def _render_stage(df: DataFrame, out_col: str, encode_one, id_col: str) -> DataF
 
     def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [encode_one(int(doc_id)) for doc_id in pdf[id_col]]
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: payloads})
+            payloads = [encode_one(int(doc_id)) for doc_id in pdf["doc_id"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], out_col: payloads})
 
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, {out_col} binary")
+    return df.select("doc_id").mapInPandas(render, f"doc_id long, {out_col} binary")
 
 
 #: Truncation bound for quarantined-row error strings — long enough to
@@ -1305,7 +1299,6 @@ _QUARANTINE_ERR_LEN = 200
 
 def _decode_stage(
     df: DataFrame,
-    id_col: str,
     payload_col: str,
     fields: str,
     decode,
@@ -1315,7 +1308,7 @@ def _decode_stage(
     """Decode-stage plumbing shared by every media decode stage: per row,
     ``decode(payload_bytes)`` then ``features(doc_id, payload_bytes,
     decoded) -> tuple`` of the ``fields`` schema (a DDL string of the
-    output columns after ``id_col``), in Arrow batches via mapInPandas.
+    output columns after ``doc_id``), in Arrow batches via mapInPandas.
 
     ``safe=True`` is the quarantine contract (the 100 TB ingest
     posture): a payload whose ``decode`` raises becomes a row with null
@@ -1328,14 +1321,14 @@ def _decode_stage(
     environment defect, not a payload defect, and must fail loudly
     rather than tag every row. ``safe=False`` fails the stage on the
     first undecodable payload."""
-    schema = f"{id_col} long, {fields}" + (", status string, error string" if safe else "")
+    schema = f"doc_id long, {fields}" + (", status string, error string" if safe else "")
     cols = [f.split()[0] for f in schema.split(",")]  # no field type carries a comma
     n_features = len(fields.split(","))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
                 data = bytes(payload)
                 try:
                     decoded = decode(data)
@@ -1353,7 +1346,7 @@ def _decode_stage(
                 rows.append(row + ("ok", None) if safe else row)
             yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return df.select("doc_id", payload_col).mapInPandas(run, schema)
 
 
 def _channel_sums(px: np.ndarray) -> tuple[int, int, int]:
@@ -1361,21 +1354,21 @@ def _channel_sums(px: np.ndarray) -> tuple[int, int, int]:
     return tuple(int(s) for s in px.astype(np.int64).reshape(-1, 3).sum(axis=0))
 
 
-def render_ppm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_ppm_payloads(df: DataFrame) -> DataFrame:
     """Fixture-image renderer: one real PPM binary per row, content a
     deterministic function of the id (``_fixture_pixels``)."""
-    return _render_stage(df, "img", lambda d: encode_ppm(*_fixture_image(d)), id_col)
+    return _render_stage(df, "img", lambda d: encode_ppm(*_fixture_image(d)))
 
 
-def render_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_png_payloads(df: DataFrame) -> DataFrame:
     """Same fixture pixels, COMPRESSED container: a real zlib-PNG per
     row (filters cycling per row, CRC'd chunks). Decoding these proves
     the compressed-codec path end to end with the same arithmetic
     oracle as the PPM branch — the pixel content is identical."""
-    return _render_stage(df, "img", lambda d: encode_png(*_fixture_image(d)), id_col)
+    return _render_stage(df, "img", lambda d: encode_png(*_fixture_image(d)))
 
 
-def render_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_jpeg_payloads(df: DataFrame) -> DataFrame:
     """Same fixture pixels through the LOSSY transform codec: a real
     JFIF per row (DCT + canonical-Huffman entropy coding, unit
     quantization). Per :func:`_jpeg_subsampling`, half the docs render
@@ -1393,7 +1386,7 @@ def render_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             px = _fixture_pixels_420(doc_id, w, h)
         return encode_jpeg(w, h, px, subsampling=sub, progressive=_jpeg_progressive(doc_id))
 
-    return _render_stage(df, "img", enc, id_col)
+    return _render_stage(df, "img", enc)
 
 
 def encode_arithmetic_stub(width: int, height: int, pixels: np.ndarray) -> bytes:
@@ -1420,7 +1413,7 @@ _QUARANTINE_ARITHMETIC = 30  # SOF9 stream -> NotImplementedError
 _QUARANTINE_UNKNOWN = 60  # unknown magic (video-ish) -> NotImplementedError
 
 
-def render_quarantine_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_quarantine_payloads(df: DataFrame) -> DataFrame:
     """Fixture renderer for the safe-decode (quarantine) path: good PPM
     payloads with three deterministic failure classes planted among them
     by doc_id arithmetic — a truncated PPM (corrupt stream), an
@@ -1440,10 +1433,10 @@ def render_quarantine_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFra
             return b"MOOVftypisom" + bytes(16)
         return encode_ppm(w, h, px)
 
-    return _render_stage(df, "img", enc, id_col)
+    return _render_stage(df, "img", enc)
 
 
-def decode_jpeg_check(df: DataFrame, id_col: str = "doc_id", img_col: str = "img") -> DataFrame:
+def decode_jpeg_check(df: DataFrame) -> DataFrame:
     """Decode each JPEG payload and verify it against the arithmetic
     reference pixels IN-PLAN: emits (doc_id, width, height, decode_ok)
     where decode_ok = max per-channel |decoded - reference| <=
@@ -1459,11 +1452,11 @@ def decode_jpeg_check(df: DataFrame, id_col: str = "doc_id", img_col: str = "img
         return w, h, bool(err <= JPEG_TOLERANCE)
 
     return _decode_stage(
-        df, id_col, img_col, "width long, height long, decode_ok boolean", decode_jpeg, features
+        df, "img", "width long, height long, decode_ok boolean", decode_jpeg, features
     )
 
 
-def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> str:
+def stage_ppm_ingest_dir(docs: DataFrame, path: str) -> str:
     """Materialize a directory of REAL ``.ppm`` files, one per input row
     (payload = the deterministic fixture image for the id), written
     executor-side via ``foreachPartition`` so the bytes never cross the
@@ -1492,9 +1485,9 @@ def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> 
     # agree; decimal(38,0) so the sum never overflows under ANSI mode
     key = docs.agg(
         F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr(f"bit_xor(xxhash64({id_col}))"), F.lit(0)).alias("h"),
+        F.coalesce(F.expr("bit_xor(xxhash64(doc_id))"), F.lit(0)).alias("h"),
         F.coalesce(
-            F.expr(f"sum(cast(xxhash64({id_col}) as decimal(38, 0)))"),
+            F.expr("sum(cast(xxhash64(doc_id) as decimal(38, 0)))"),
             F.lit(0).cast("decimal(38, 0)"),
         ).alias("s"),
     ).collect()[0]
@@ -1518,17 +1511,12 @@ def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> 
                 f.write(payload)
             os.replace(tmp, os.path.join(path, f"{doc_id}.ppm"))
 
-    docs.select(id_col).foreachPartition(write_part)
+    docs.select("doc_id").foreachPartition(write_part)
     open(marker, "w").close()
     return path
 
 
-def decode_image_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    img_col: str = "img",
-    safe: bool = False,
-) -> DataFrame:
+def decode_image_stats(df: DataFrame, safe: bool = False) -> DataFrame:
     """REAL decode stage: parse each binary payload with
     :func:`decode_image_real` (PPM/BMP/PNG/JPEG numpy codecs) and emit
     per-image stats — dimensions plus whole-image and per-channel pixel
@@ -1552,7 +1540,7 @@ def decode_image_stats(
         return (d["width"], d["height"], d["maxval"], sum(rgb)) + rgb
 
     return _decode_stage(
-        df, id_col, img_col,
+        df, "img",
         "width long, height long, maxval long, pixel_sum long, r_sum long, g_sum long, b_sum long",
         decode_image_real, features, safe,
     )
@@ -1560,15 +1548,20 @@ def decode_image_stats(
 
 #: Resize target box (the usual vision-model input side).
 RESIZE_BOX = 224
+#: Box side of :func:`resized_image_stats`, read at call time: small so
+#: the oracle's per-output-pixel expansion stays bounded (the kernel is
+#: box-size-independent).
+RESIZE_STAGE_BOX = 8
 #: Keep every k-th frame when sampling.
 FRAME_STRIDE = 2
 
 
-def resize_fit(w: int, h: int, box: int) -> tuple[int, int]:
-    """Aspect-preserving fit of (w, h) into a box x box square, integer
-    math only, never upscaling: images already inside the box keep
-    their dimensions. The downscale rounds like the stand-in decoder
-    (side * box // longest), floored at 1."""
+def resize_fit(w: int, h: int) -> tuple[int, int]:
+    """Aspect-preserving fit of (w, h) into a box x box square (box =
+    :data:`RESIZE_STAGE_BOX`), integer math only, never upscaling: images
+    already inside the box keep their dimensions. The downscale rounds
+    like the stand-in decoder (side * box // longest), floored at 1."""
+    box = RESIZE_STAGE_BOX
     longest = max(w, h)
     if longest <= box:
         return w, h
@@ -1588,25 +1581,23 @@ def resize_nn(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return px[ys][:, xs]
 
 
-def resized_image_stats(
-    df: DataFrame, id_col: str = "doc_id", img_col: str = "img", box: int = RESIZE_BOX
-) -> DataFrame:
+def resized_image_stats(df: DataFrame) -> DataFrame:
     """REAL resize stage (round 9 — previously only the arithmetic
     stand-in in :func:`fake_decode_meta` exercised the resize step):
     decode each payload (:func:`decode_image_real`), nearest-neighbor
-    resize into an aspect-preserving ``box`` fit (:func:`resize_nn`,
+    resize into an aspect-preserving :func:`resize_fit` (:func:`resize_nn`,
     no upscaling), and emit the RESIZED raster's dimensions and
     whole/per-channel pixel sums. Because NN resampling is pure index
     arithmetic, the sums are exactly SQL-derivable — the resize KERNEL
     itself is oracle-checked, not just the plumbing around it."""
 
     def features(doc_id: int, data: bytes, d: dict) -> tuple:
-        ow, oh = resize_fit(d["width"], d["height"], box)
+        ow, oh = resize_fit(d["width"], d["height"])
         rgb = _channel_sums(resize_nn(d["pixels"], ow, oh))
         return (d["width"], d["height"], ow, oh, sum(rgb)) + rgb
 
     return _decode_stage(
-        df, id_col, img_col,
+        df, "img",
         "width long, height long, resized_w long, resized_h long, "
         "pixel_sum long, r_sum long, g_sum long, b_sum long",
         decode_image_real, features,
@@ -1941,22 +1932,17 @@ def _pcm_variant(doc_id: int) -> int:
     return (doc_id // 10) % 4
 
 
-def render_pcm_variant_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_pcm_variant_payloads(df: DataFrame) -> DataFrame:
     """Fixture renderer cycling all four natively-decoded PCM containers
     by doc arithmetic — the samples and geometry of :func:`_wav_fixture`,
     four real on-disk layouts."""
     encoders = [encode_wav, encode_wav_extensible, encode_wav_s24, encode_wav_u8]
     return _render_stage(
-        df, "audio", lambda d: encoders[_pcm_variant(d)](*_wav_fixture(d)), id_col
+        df, "audio", lambda d: encoders[_pcm_variant(d)](*_wav_fixture(d))
     )
 
 
-def audio_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    audio_col: str = "audio",
-    safe: bool = False,
-) -> DataFrame:
+def audio_features(df: DataFrame, safe: bool = False) -> DataFrame:
     """REAL audio decode + feature stage: parse each WAV or FLAC payload
     (:func:`decode_audio_native`) and emit per-document features — exact
     container byte length, sample rate, channel/sample counts, exact
@@ -1984,7 +1970,7 @@ def audio_features(
         )
 
     return _decode_stage(
-        df, id_col, audio_col,
+        df, "audio",
         "byte_len long, sample_rate long, n_channels long, n_samples long, "
         "duration_us long, ch0_sum long, ch1_sum long, abs_sum long",
         decode_audio_native, features, safe,
@@ -2010,7 +1996,7 @@ def _y4m_fixture_frames(doc_id: int, w: int, h: int, n: int) -> np.ndarray:
     return ((11 * doc_id + 17 * f + 23 * p + 31 * i) % 256).astype(np.uint8)
 
 
-def render_y4m_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_y4m_payloads(df: DataFrame) -> DataFrame:
     """Fixture-video renderer: one real Y4M container per row, geometry
     and plane bytes deterministic functions of the id — executor-side
     Arrow batches, same ingest shape as the image renderers."""
@@ -2019,7 +2005,7 @@ def render_y4m_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         w, h, n = _y4m_fixture_geom(doc_id)
         return encode_y4m(w, h, _y4m_fixture_frames(doc_id, w, h, n))
 
-    return _render_stage(df, "video", enc, id_col)
+    return _render_stage(df, "video", enc)
 
 
 #: Leading output fields of every video stage (see :func:`_frame_sample`).
@@ -2033,9 +2019,7 @@ def _frame_sample(data: bytes, w: int, h: int, n_frames: int) -> tuple:
     return len(data), w, h, n_frames, ",".join(str(i) for i in range(0, n_frames, FRAME_STRIDE))
 
 
-def video_frame_stats(
-    df: DataFrame, id_col: str = "doc_id", vid_col: str = "video", safe: bool = False
-) -> DataFrame:
+def video_frame_stats(df: DataFrame, safe: bool = False) -> DataFrame:
     """REAL video decode + frame-sample stage: parse each Y4M container
     (:func:`decode_y4m`), keep every :data:`FRAME_STRIDE`-th frame, and emit one
     row per document — exact container byte length, dimensions, total
@@ -2060,12 +2044,12 @@ def video_frame_stats(
         return _frame_sample(data, w, h, len(frames)) + tuple(int(p) for p in planes)
 
     return _decode_stage(
-        df, id_col, vid_col, _VIDEO_FIELDS + ", y_sum long, cb_sum long, cr_sum long",
+        df, "video", _VIDEO_FIELDS + ", y_sum long, cb_sum long, cr_sum long",
         decode_y4m, features, safe,
     )
 
 
-def fake_decode_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def fake_decode_meta(df: DataFrame) -> DataFrame:
     """Deterministic stand-in decoder + the downstream feature stages a
     media pipeline runs, all via mapInPandas over Arrow batches:
 
@@ -2083,7 +2067,7 @@ def fake_decode_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema, Arrow batching, partitioning — is identical.
     """
     schema = (
-        f"{id_col} long, byte_len long, width long, height long, n_frames long, "
+        "doc_id long, byte_len long, width long, height long, n_frames long, "
         f"resized_w long, resized_h long, sampled_frames string"
     )
 
@@ -2096,7 +2080,7 @@ def fake_decode_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             longest = pd.concat([w, h], axis=1).max(axis=1)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "byte_len": n,
                     "width": w,
                     "height": h,
@@ -2109,7 +2093,7 @@ def fake_decode_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(decode, schema)
+    return df.select("doc_id", "payload").mapInPandas(decode, schema)
 
 
 # --------------------------------------------------------------------------
@@ -2295,7 +2279,7 @@ def _mjpeg_fixture_frame(doc_id: int, f: int, w: int, h: int) -> np.ndarray:
     return ((7 * doc_id + 17 * f + 31 * i) % 256).astype(np.uint8).reshape(h, w, 3)
 
 
-def render_avi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_avi_payloads(df: DataFrame) -> DataFrame:
     """Fixture-video renderer: one real MJPEG AVI per row — each frame a
     genuine baseline 4:4:4 JPEG from :func:`encode_jpeg` — executor-side
     Arrow batches, same ingest shape as the other media renderers."""
@@ -2306,12 +2290,10 @@ def render_avi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             w, h, [encode_jpeg(w, h, _mjpeg_fixture_frame(doc_id, f, w, h)) for f in range(n)]
         )
 
-    return _render_stage(df, "video", enc, id_col)
+    return _render_stage(df, "video", enc)
 
 
-def mjpeg_frame_check(
-    df: DataFrame, id_col: str = "doc_id", vid_col: str = "video", safe: bool = False
-) -> DataFrame:
+def mjpeg_frame_check(df: DataFrame, safe: bool = False) -> DataFrame:
     """COMPRESSED video decode + frame-sample stage: parse each AVI
     (:func:`decode_avi_mjpeg` — RIFF walk + per-frame JPEG decode), keep
     every :data:`FRAME_STRIDE`-th frame, and emit per-document geometry plus the
@@ -2333,11 +2315,11 @@ def mjpeg_frame_check(
         return _frame_sample(data, w, h, len(frames)) + (bool(err <= JPEG_TOLERANCE),)
 
     return _decode_stage(
-        df, id_col, vid_col, _VIDEO_FIELDS + ", decode_ok boolean", decode_avi_mjpeg, features, safe
+        df, "video", _VIDEO_FIELDS + ", decode_ok boolean", decode_avi_mjpeg, features, safe
     )
 
 
-def render_dib_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_dib_payloads(df: DataFrame) -> DataFrame:
     """Fixture-video renderer for the UNCOMPRESSED-AVI branch (round
     11): one raw-RGB DIB AVI per row, frames the same arithmetic pixels
     as the MJPEG fixture — but the container is LOSSLESS, so the decode
@@ -2349,12 +2331,10 @@ def render_dib_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             w, h, np.stack([_mjpeg_fixture_frame(doc_id, f, w, h) for f in range(n)])
         )
 
-    return _render_stage(df, "video", enc, id_col)
+    return _render_stage(df, "video", enc)
 
 
-def dib_frame_stats(
-    df: DataFrame, id_col: str = "doc_id", vid_col: str = "video", safe: bool = False
-) -> DataFrame:
+def dib_frame_stats(df: DataFrame, safe: bool = False) -> DataFrame:
     """UNCOMPRESSED video decode + frame-sample stage (round 11): parse
     each raw-RGB DIB AVI via :func:`decode_avi_mjpeg`'s BI_RGB route
     (the BMP row reader through the AVI chunk walk — bottom-up rows,
@@ -2371,7 +2351,7 @@ def dib_frame_stats(
         return _frame_sample(data, w, h, len(frames)) + _channel_sums(frames[::FRAME_STRIDE])
 
     return _decode_stage(
-        df, id_col, vid_col, _VIDEO_FIELDS + ", r_sum long, g_sum long, b_sum long",
+        df, "video", _VIDEO_FIELDS + ", r_sum long, g_sum long, b_sum long",
         decode_avi_mjpeg, features, safe,
     )
 
@@ -2465,22 +2445,22 @@ def encode_wav_f32(sample_rate: int, samples: np.ndarray) -> bytes:
     return _wav(3, ch, sample_rate, ch * 4, 32, data, fact_n=n)
 
 
-def render_g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_g711_payloads(df: DataFrame) -> DataFrame:
     """Fixture renderer for the COMPRESSED-audio branch: the same
     arithmetic samples (:func:`_wav_fixture`), companded through
     G.711 A-law into a real tag-6 RIFF/WAVE container (round 10 —
     decoded natively by :func:`decode_wav` via the exhaustively-pinned
     expander)."""
-    return _render_stage(df, "audio", lambda d: encode_wav_alaw(*_wav_fixture(d)), id_col)
+    return _render_stage(df, "audio", lambda d: encode_wav_alaw(*_wav_fixture(d)))
 
 
-def render_f32_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_f32_payloads(df: DataFrame) -> DataFrame:
     """Fixture renderer for the IEEE-float branch: the same arithmetic
     samples (:func:`_wav_fixture`) written as tag-3 float32
     containers (round 11 — decoded natively by :func:`decode_wav`; the
     fixture values k/2^15 are exact dyadics, so the float round-trip is
     bit-exact and the audio_wav arithmetic oracle applies unchanged)."""
-    return _render_stage(df, "audio", lambda d: encode_wav_f32(*_wav_fixture(d)), id_col)
+    return _render_stage(df, "audio", lambda d: encode_wav_f32(*_wav_fixture(d)))
 
 
 # --------------------------------------------------------------------------
@@ -2665,7 +2645,7 @@ def _adpcm_fixture_samples(doc_id: int, ch: int, n: int) -> np.ndarray:
     return (np.abs(((17 * doc_id + 29 * i) % 4096) - 2048) - 1024).astype(np.int16).reshape(n, ch)
 
 
-def render_adpcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_adpcm_payloads(df: DataFrame) -> DataFrame:
     """Fixture renderer for the IMA-ADPCM branch: the triangle-wave
     fixture compressed 4:1 into real tag-0x11 containers (multi-block,
     carried step index, fact-trimmed final block)."""
@@ -2674,15 +2654,10 @@ def render_adpcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         rate, ch, n = _wav_fixture_geom(doc_id)
         return encode_wav_adpcm(rate, _adpcm_fixture_samples(doc_id, ch, n))
 
-    return _render_stage(df, "audio", enc, id_col)
+    return _render_stage(df, "audio", enc)
 
 
-def adpcm_roundtrip_check(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    audio_col: str = "audio",
-    safe: bool = False,
-) -> DataFrame:
+def adpcm_roundtrip_check(df: DataFrame, safe: bool = False) -> DataFrame:
     """LOSSY-audio decode stage (the decode_jpeg_check pattern at the
     audio seam): parse each IMA-ADPCM WAV with the native decoder and
     emit exact geometry (container bytes, rate, channels, samples,
@@ -2705,7 +2680,7 @@ def adpcm_roundtrip_check(
         return len(data), rate, n_channels, n_samples, n_samples * 1_000_000 // rate, bool(ok)
 
     return _decode_stage(
-        df, id_col, audio_col,
+        df, "audio",
         "byte_len long, sample_rate long, n_channels long, n_samples long, "
         "duration_us long, decode_ok boolean",
         decode_wav, features, safe,
@@ -3290,7 +3265,7 @@ def decode_audio_native(payload: bytes) -> tuple[int, np.ndarray]:
     return decode_wav(payload)
 
 
-def render_flac_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def render_flac_payloads(df: DataFrame) -> DataFrame:
     """Fixture renderer for the FLAC branch: the SAME samples and
     geometry as the WAV fixture, Rice-compressed into real FLAC
     containers. Stereo docs cycle the inter-channel decorrelation
@@ -3305,4 +3280,4 @@ def render_flac_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         mode = modes[(doc_id // 10) % 4] if samples.shape[1] == 2 else "independent"
         return encode_flac(rate, samples, stereo_mode=mode)
 
-    return _render_stage(df, "audio", enc, id_col)
+    return _render_stage(df, "audio", enc)

@@ -41,22 +41,20 @@ from pyspark.sql import functions as F
 DEFAULT_CHUNK = 128
 
 
-def with_cum_before(
-    df: DataFrame, id_col: str, count_col: str, chunk: int = DEFAULT_CHUNK
-) -> DataFrame:
-    """Add ``cum_before`` — the exact prefix sum of ``count_col`` in
-    ``id_col`` order, excluding the current row — via the two-phase
+def with_cum_before(df: DataFrame, chunk: int = DEFAULT_CHUNK) -> DataFrame:
+    """Add ``cum_before`` — the exact prefix sum of ``n_tokens`` in
+    ``doc_id`` order, excluding the current row — via the two-phase
     distributed scan described in the module docstring."""
-    base = df.withColumn("_range_id", F.expr(f"{id_col} div {chunk}"))
+    base = df.withColumn("_range_id", F.expr(f"doc_id div {chunk}"))
     intra_w = (
         Window.partitionBy("_range_id")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     intra = base.withColumn(
-        "_intra_before", F.coalesce(F.sum(count_col).over(intra_w), F.lit(0)).cast("long")
+        "_intra_before", F.coalesce(F.sum("n_tokens").over(intra_w), F.lit(0)).cast("long")
     )
-    totals = base.groupBy("_range_id").agg(F.sum(count_col).cast("long").alias("_range_total"))
+    totals = base.groupBy("_range_id").agg(F.sum("n_tokens").cast("long").alias("_range_total"))
     offset_w = Window.orderBy("_range_id").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(
         "_range_id",
@@ -69,35 +67,23 @@ def with_cum_before(
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    budget: int,
-    id_col: str = "doc_id",
-    count_col: str = "n_tokens",
-    chunk: int = DEFAULT_CHUNK,
-) -> DataFrame:
+def pack_sequences(df: DataFrame, budget: int, chunk: int = DEFAULT_CHUNK) -> DataFrame:
     """Per-document sequence assignment: input rows plus ``cum_before``
     and ``seq_id`` (integer division — no float anywhere, so exact at
     any tape length)."""
-    out = with_cum_before(df, id_col, count_col, chunk)
+    out = with_cum_before(df, chunk)
     return out.withColumn("seq_id", F.expr(f"cum_before div {budget}").cast("long"))
 
 
-def sequence_stats(
-    df: DataFrame,
-    budget: int,
-    id_col: str = "doc_id",
-    count_col: str = "n_tokens",
-    chunk: int = DEFAULT_CHUNK,
-) -> DataFrame:
+def sequence_stats(df: DataFrame, budget: int, chunk: int = DEFAULT_CHUNK) -> DataFrame:
     """Per-sequence packing summary: document count, token count, id
     span, and fill ratio (>1.0 possible exactly when a document
     straddles the right boundary — it packs where it starts)."""
-    packed = pack_sequences(df, budget, id_col, count_col, chunk)
+    packed = pack_sequences(df, budget, chunk)
     return packed.groupBy("seq_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(count_col).cast("long").alias("seq_tokens"),
-        F.min(id_col).alias("first_doc"),
-        F.max(id_col).alias("last_doc"),
-        (F.sum(count_col).cast("long") / F.lit(budget).cast("long")).alias("fill_ratio"),
+        F.sum("n_tokens").cast("long").alias("seq_tokens"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
+        (F.sum("n_tokens").cast("long") / F.lit(budget).cast("long")).alias("fill_ratio"),
     )

@@ -15,25 +15,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def top_n(df: DataFrame, n: int, *order_cols) -> DataFrame:
-    """Global deterministic top-N: ORDER BY ... LIMIT n.
-
-    Callers must pass a total order (include a unique tiebreaker column)
-    so results are stable across partitionings. Planned as
-    TakeOrderedAndProject — per-partition heaps, no global sort.
-    """
-    return df.orderBy(*order_cols).limit(n)
-
-
-def as_of_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str,
-    right_val: str,
-    out_col: str | None = None,
-) -> DataFrame:
-    """As-of join (latest right row with right.ts <= left.ts per key),
+def as_of_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """As-of join on ``user_id``: each left row gets ``asof_event_id``, the
+    ``event_id`` of the latest right row with right.ts <= left.ts,
     implemented as union + running last_value — the scalable form.
 
     A naive range join is O(|L|·|R|) per key; sort-merge as-of engines
@@ -47,57 +31,51 @@ def as_of_join(
     """
     from pyspark.sql import Window
 
-    out_col = out_col or f"asof_{right_val}"
-    l_tagged = left.withColumn("_side", F.lit(1)).withColumn("_rv", F.lit(None).cast(right.schema[right_val].dataType))
+    l_tagged = left.withColumn("_side", F.lit(1)).withColumn("_rv", F.lit(None).cast(right.schema["event_id"].dataType))
     r_tagged = (
-        right.select(key, ts, F.col(right_val).alias("_rv"))
+        right.select("user_id", "ts", F.col("event_id").alias("_rv"))
         .withColumn("_side", F.lit(0))
     )
-    cols = [key, ts, "_side", "_rv"]
-    unioned = l_tagged.select(*cols, *[c for c in left.columns if c not in {key, ts}]).unionByName(
+    cols = ["user_id", "ts", "_side", "_rv"]
+    unioned = l_tagged.select(*cols, *[c for c in left.columns if c not in {"user_id", "ts"}]).unionByName(
         r_tagged, allowMissingColumns=True
     )
     w = (
-        Window.partitionBy(key)
-        .orderBy(F.col(ts).asc(), F.col("_side").asc(), F.col("_rv").asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("_side").asc(), F.col("_rv").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        unioned.withColumn(out_col, F.last("_rv", ignorenulls=True).over(w))
+        unioned.withColumn("asof_event_id", F.last("_rv", ignorenulls=True).over(w))
         .where(F.col("_side") == 1)
         .drop("_side", "_rv")
     )
 
 
-def interval_self_join(
-    df: DataFrame,
-    ts: str,
-    id_col: str,
-    max_gap_seconds: int,
-) -> DataFrame:
-    """All pairs (a, b) with |ts_a - ts_b| <= gap, id_a < id_b — via
-    time-bucket candidate generation.
+def interval_self_join(df: DataFrame) -> DataFrame:
+    """All event pairs (a, b) with |ts_a - ts_b| <= 60 s, event_id_a <
+    event_id_b — via time-bucket candidate generation.
 
     The scalable range-join pattern: bucket timestamps by the gap width;
     any qualifying pair lands in the same or adjacent buckets, so
     candidates come from an equi-join of (bucket) × (bucket-1..bucket+1)
     — never a cross join — then the exact interval predicate filters.
     """
-    gap_us = max_gap_seconds * 1_000_000
+    gap_us = 60 * 1_000_000
     # integer floor-div: a double division could round across a bucket
     # boundary and silently drop a candidate pair. The cast makes the
     # expression total over TIMESTAMP_NTZ parquet columns too (Spark 4.1
     # rejects unix_micros(ntz)); the engine pins the session timezone to
     # UTC, so ntz→ltz is a deterministic identity on the epoch scale.
-    bucket = F.expr(f"unix_micros(cast({ts} as timestamp)) div {gap_us}")
+    bucket = F.expr(f"unix_micros(cast(ts as timestamp)) div {gap_us}")
     a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(ts).alias("ts_a"),
+        F.col("event_id").alias("id_a"),
+        F.col("ts").alias("ts_a"),
         bucket.alias("bk"),
     )
     b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(ts).alias("ts_b"),
+        F.col("event_id").alias("id_b"),
+        F.col("ts").alias("ts_b"),
         F.explode(F.array(bucket - 1, bucket, bucket + 1)).alias("bk"),
     )
     return (

@@ -33,11 +33,15 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions
 )
 
 
-def hash_bucket(key: Column | str, n_buckets: int = 100) -> Column:
-    """Deterministic bucket in [0, n_buckets) from a key column (any
-    type; hashed via its canonical string form)."""
-    key = F.col(key) if isinstance(key, str) else key
-    return F.pmod(poly_hash_chars(key.cast("string")), F.lit(n_buckets))
+#: Buckets :func:`hash_bucket` spreads keys over, read at call time: the
+#: curation pipeline tags every surviving document with one of 10.
+SAMPLE_BUCKETS = 10
+
+
+def hash_bucket() -> Column:
+    """Deterministic bucket in [0, :data:`SAMPLE_BUCKETS`) from ``doc_id``
+    (any type; hashed via its canonical string form)."""
+    return F.pmod(poly_hash_chars(F.col("doc_id").cast("string")), F.lit(SAMPLE_BUCKETS))
 
 
 def hash_bucket_sql(key_expr: str, n_buckets: int = 100) -> str:

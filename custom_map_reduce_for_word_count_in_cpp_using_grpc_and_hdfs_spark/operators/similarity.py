@@ -66,13 +66,7 @@ def _topk_by_score(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def brute_force_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors for every query vector.
 
     Returns (query_id, neighbor_id, rank) — scores stay internal so
@@ -86,18 +80,18 @@ def brute_force_topk(
     # perturbing rank order); they carry no direction, so they are
     # mapped to the zero vector → score 0 against everything.
     def normalized(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
-        n = norm2(vec_col)
+        n = norm2("embedding")
         return df.select(
-            F.col(id_col).alias(out_id),
-            F.when(n == 0, F.transform(F.col(vec_col), lambda x: F.lit(0.0)))
-            .otherwise(F.transform(F.col(vec_col), lambda x: x.cast("double") / n))
+            F.col("vec_id").alias(out_id),
+            F.when(n == 0, F.transform(F.col("embedding"), lambda x: F.lit(0.0)))
+            .otherwise(F.transform(F.col("embedding"), lambda x: x.cast("double") / n))
             .alias(out_vec),
         )
 
     q = normalized(queries, "query_id", "q_vec")
     # the corpus side carries the per-pair dot folds — spread a
     # few-split scan so scoring parallelizes (no-op on a real corpus)
-    c = normalized(spread(corpus, by=[id_col]), "neighbor_id", "c_vec")
+    c = normalized(spread(corpus, by=["vec_id"]), "neighbor_id", "c_vec")
     scored = (
         F.broadcast(q)
         .crossJoin(c)
@@ -129,13 +123,7 @@ def _first_agreeing_band(codes_a: str, codes_b: str, bands: int):
     return first
 
 
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame:
     """Approximate top-k: candidates share ≥1 of 8 two-bit signature
     bands (16 hyperplanes) with the query, then exact cosine rescoring.
     Same output schema as :func:`brute_force_topk` (query_id,
@@ -145,13 +133,13 @@ def lsh_topk(
 
     def banded(df: DataFrame, role: str) -> DataFrame:
         return df.select(
-            F.col(id_col).alias(f"{role}_id"),
-            F.col(vec_col).alias(f"{role}_vec"),
-            codes_udf(F.col(vec_col)).alias(f"{role}_codes"),
+            F.col("vec_id").alias(f"{role}_id"),
+            F.col("embedding").alias(f"{role}_vec"),
+            codes_udf(F.col("embedding")).alias(f"{role}_codes"),
         ).select("*", F.posexplode(f"{role}_codes").alias("band", "code"))
 
     q = banded(queries, "query")
-    c = banded(spread(corpus, by=[id_col]), "neighbor")
+    c = banded(spread(corpus, by=["vec_id"]), "neighbor")
     scored = (
         F.broadcast(q)
         .join(c, ["band", "code"])
@@ -164,13 +152,7 @@ def lsh_topk(
     return _topk_by_score(scored, k)
 
 
-def cosine_batch_near_dups(
-    batch: DataFrame,
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_batch_near_dups(batch: DataFrame, corpus: DataFrame, threshold: float) -> DataFrame:
     """Exact cosine near-dups of a *bounded batch* against the corpus —
     the incremental-dedup shape (new shard vs existing data).
 
@@ -182,8 +164,8 @@ def cosine_batch_near_dups(
     every pair; see cosine_near_dup_pairs for the prunable high-threshold
     self-join). Scores use the same un-normalized cosine fold as the SQL
     oracle rendering, so results are bit-exact."""
-    a = batch.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
-    b = spread(corpus, by=[id_col]).select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
+    a = batch.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"))
+    b = spread(corpus, by=["vec_id"]).select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"))
     return (
         F.broadcast(a)
         .crossJoin(b)
@@ -253,12 +235,7 @@ def lsh_band_geometry(n_vectors: int, threshold: float) -> tuple[int, int]:
     return int(max(16, min(48, b))), w
 
 
-def cosine_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Self-join near-dup pairs (a < b, cosine ≥ threshold) via banded
     hyperplane LSH candidates + exact rescoring — the prunable shape for
     true near-dup thresholds (≥ ~0.85).
@@ -287,10 +264,10 @@ def cosine_near_dup_pairs(
     # derived size estimate is structurally low (caching.py::eager_stats)
     # — materializing also runs the codes UDF once instead of twice
     banded = eager_stats(
-        spread(df, by=[id_col])
+        spread(df, by=["vec_id"])
         .select(
-            F.col(id_col).alias("vid"),
-            codes_udf(F.col(vec_col)).alias("codes"),
+            F.col("vec_id").alias("vid"),
+            codes_udf(F.col("embedding")).alias("codes"),
         )
         .select("vid", "codes", F.posexplode("codes").alias("band", "code")),
         BANDED_CODES_BOUND,
@@ -302,7 +279,7 @@ def cosine_near_dup_pairs(
         .where((F.col("id_a") < F.col("id_b")) & _first_agreeing_band("codes_a", "codes_b", bands))
         .select("id_a", "id_b")
     )
-    vecs = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    vecs = df.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
     result = (
         cands.join(vecs.select(F.col("vid").alias("id_a"), F.col("vec").alias("vec_a")), "id_a")
         .join(vecs.select(F.col("vid").alias("id_b"), F.col("vec").alias("vec_b")), "id_b")
@@ -368,12 +345,7 @@ def _ddl(df: DataFrame) -> str:
     return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
 
 
-def ivf_centroids_np(
-    corpus: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def ivf_centroids_np(corpus: DataFrame, k: int) -> np.ndarray:
     """Sampled driver-side k-means: a hash-ordered sample of ``32 × k``
     vectors collected once (k-bounded), seeded-RNG initial centroids,
     then :data:`IVF_ITERS` Lloyd iterations as
@@ -392,8 +364,8 @@ def ivf_centroids_np(
     Assignment of the full corpus runs on executors
     (:func:`assign_buckets_np`)."""
     sample = (
-        corpus.select(vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)).asc(), F.col(id_col).asc())
+        corpus.select("embedding")
+        .orderBy(F.xxhash64(F.col("vec_id")).asc(), F.col("vec_id").asc())
         .limit(32 * k)
         .collect()
     )
@@ -412,10 +384,8 @@ def ivf_centroids_np(
     return C
 
 
-def assign_buckets_np(
-    df: DataFrame, centroids: np.ndarray, vec_col: str = "embedding", out: str = "bucket"
-) -> DataFrame:
-    """``df`` plus each row's nearest-centroid bucket (int ``out``
+def assign_buckets_np(df: DataFrame, centroids: np.ndarray, vec_col: str = "embedding") -> DataFrame:
+    """``df`` plus each row's nearest-centroid bucket (int ``bucket``
     column): an Arrow mapInPandas argmin over the centroid matrix, which
     ships in the task closure (k×dim doubles, ≤2 MB at the k cap) — so
     the plan stays O(1) in k and per-row cost is a BLAS matmul row."""
@@ -423,19 +393,17 @@ def assign_buckets_np(
 
     def assign(batches):
         for pdf in batches:
-            yield pdf.assign(**{out: _nearest(_matrix(pdf[vec_col]), C).astype("int32")})
+            yield pdf.assign(bucket=_nearest(_matrix(pdf[vec_col]), C).astype("int32"))
 
-    return df.mapInPandas(assign, f"{_ddl(df)}, {out} int")
+    return df.mapInPandas(assign, f"{_ddl(df)}, bucket int")
 
 
-def _probe_buckets(
-    queries: DataFrame, centroids: np.ndarray, nprobe: int, id_col: str, vec_col: str
-) -> DataFrame:
+def _probe_buckets(queries: DataFrame, centroids: np.ndarray, nprobe: int) -> DataFrame:
     """(query_id, q_vec, bucket): each query once for each of its
     ``nprobe`` nearest centroid buckets (one mapInPandas over the
     queries, :func:`_probe_order`)."""
     C = np.ascontiguousarray(centroids, dtype="float64")
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
 
     def probe(batches):
         for pdf in batches:
@@ -447,49 +415,42 @@ def _probe_buckets(
     return q.mapInPandas(probe, f"{_ddl(q)}, bucket int")
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centroids: np.ndarray,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF search: corpus rows get their nearest-centroid bucket in
-    flight (:func:`assign_buckets_np` — at scale the assignment happens
-    at write time instead, see :func:`write_ivf_index` /
-    :func:`ivf_topk_stored`); each query probes its nprobe nearest
-    centroid buckets and rescores exactly within them."""
+#: Top-k width of the IVF searches and probe count of the live route
+#: (10 of its 16 centroids), read at call time.
+IVF_TOP_K = 10
+IVF_NPROBE = 10
+
+
+def ivf_topk(queries: DataFrame, corpus: DataFrame, centroids: np.ndarray) -> DataFrame:
+    """IVF top-:data:`IVF_TOP_K` search: corpus rows get their
+    nearest-centroid bucket in flight (:func:`assign_buckets_np` — at
+    scale the assignment happens at write time instead, see
+    :func:`write_ivf_index` / :func:`ivf_topk_stored`); each query probes
+    its :data:`IVF_NPROBE` nearest centroid buckets and rescores exactly
+    within them."""
     c_assigned = assign_buckets_np(
-        spread(corpus, by=[id_col]).select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
+        spread(corpus, by=["vec_id"]).select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")),
         centroids,
         "c_vec",
     )
-    probed = _probe_buckets(queries, centroids, nprobe, id_col, vec_col)
+    probed = _probe_buckets(queries, centroids, IVF_NPROBE)
     scored = (
         F.broadcast(probed)
         .join(c_assigned, "bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cosine("q_vec", "c_vec").alias("score"))
     )
-    return _topk_by_score(scored, k)
+    return _topk_by_score(scored, IVF_TOP_K)
 
 
-def write_ivf_index(
-    corpus: DataFrame,
-    centroids: np.ndarray,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
+def write_ivf_index(corpus: DataFrame, centroids: np.ndarray, path: str) -> None:
     """Materialize the IVF index: assign each corpus row's bucket ONCE at
     write time (:func:`assign_buckets_np`) and store the corpus
     hive-partitioned by bucket. At 100 TB this is the whole point of
     IVF — the per-row assignment cost is paid once at ingest, and a
     probe becomes a partition-pruned read of ``nprobe`` directories
     instead of a full scan + assignment."""
-    assigned = assign_buckets_np(corpus, centroids, vec_col, "bucket")
+    assigned = assign_buckets_np(corpus, centroids, "embedding")
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
@@ -526,12 +487,10 @@ def ivf_topk_stored(
     queries: DataFrame,
     index_path: str,
     centroids: np.ndarray,
-    k: int = 10,
     nprobe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF search against a :func:`write_ivf_index` layout. The probe
+    """IVF top-:data:`IVF_TOP_K` search against a :func:`write_ivf_index`
+    layout. The probe
     side broadcasts (bounded: |Q|·nprobe rows) and the equi-join on the
     ``bucket`` partition column triggers DYNAMIC PARTITION PRUNING: the
     scan's PartitionFilters carry ``dynamicpruningexpression(bucket IN
@@ -550,18 +509,18 @@ def ivf_topk_stored(
     audited override (bench probes, fraction sweeps)."""
     if nprobe is None:
         nprobe = ivf_nprobe_for(len(centroids))
-    probed = _probe_buckets(queries, centroids, nprobe, id_col, vec_col)
+    probed = _probe_buckets(queries, centroids, nprobe)
     index = spark.read.parquet(index_path)
     scored = (
         F.broadcast(probed)
         .join(
-            index.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "bucket"),
+            index.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"), "bucket"),
             "bucket",
         )
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cosine("q_vec", "c_vec").alias("score"))
     )
-    return _topk_by_score(scored, k)
+    return _topk_by_score(scored, IVF_TOP_K)
 
 
 #: Live-vs-stored IVF crossover, in corpus vectors. It is pinned for
@@ -583,9 +542,7 @@ def ivf_topk_stored(
 IVF_AUTO_CROSSOVER_VECTORS = 60_000
 
 
-def corpus_fingerprint(
-    corpus: DataFrame, n_vectors: int, id_col: str, vec_col: str
-) -> int:
+def corpus_fingerprint(corpus: DataFrame, n_vectors: int) -> int:
     """Cheap, deterministic content fingerprint for index-reuse checks:
     hash-sample ~64 rows (a fixed ``hash(id) % (N/64)`` predicate — no
     randomness, no ordering assumptions), CRC-32 each sampled
@@ -597,12 +554,12 @@ def corpus_fingerprint(
     p = max(1, n_vectors // 64)
     # cast before abs: abs(hash()) overflows int at Integer.MIN_VALUE,
     # which ANSI mode (Spark 4 default) turns into a runtime error
-    sampled = corpus.where(F.pmod(F.abs(F.hash(F.col(id_col)).cast("long")), F.lit(p)) == 0)
+    sampled = corpus.where(F.pmod(F.abs(F.hash(F.col("vec_id")).cast("long")), F.lit(p)) == 0)
     row = sampled.select(
         F.sum(
             F.crc32(
                 F.concat_ws(
-                    "|", F.col(id_col).cast("string"), F.col(vec_col).cast("string")
+                    "|", F.col("vec_id").cast("string"), F.col("embedding").cast("string")
                 )
             )
         ).alias("fp")
@@ -610,13 +567,7 @@ def corpus_fingerprint(
     return int(row.fp or 0)
 
 
-def ensure_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_vectors: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
+def ensure_ivf_index(corpus: DataFrame, path: str, n_vectors: int) -> np.ndarray:
     """Write-once IVF index with its centroids stored alongside: if
     ``path`` already holds an index built for exactly ``n_vectors``
     vectors, load and return the STORED centroids — probes must use the
@@ -640,7 +591,7 @@ def ensure_ivf_index(
 
     spark = corpus.sparkSession
     cpath = path + "/_centroids"
-    fp = corpus_fingerprint(corpus, n_vectors, id_col, vec_col)
+    fp = corpus_fingerprint(corpus, n_vectors)
     try:
         rows = spark.read.parquet(cpath).orderBy("bucket").collect()
         if (
@@ -652,8 +603,8 @@ def ensure_ivf_index(
     except AnalysisException:
         pass  # no index yet — build below
     k = ivf_k_for(n_vectors)
-    centroids = ivf_centroids_np(corpus, k=k, id_col=id_col, vec_col=vec_col)
-    write_ivf_index(corpus, centroids, path, id_col=id_col, vec_col=vec_col)
+    centroids = ivf_centroids_np(corpus, k=k)
+    write_ivf_index(corpus, centroids, path)
     crows = [
         (int(i), [float(x) for x in c], int(n_vectors), int(fp))
         for i, c in enumerate(centroids)
@@ -669,13 +620,7 @@ def ensure_ivf_index(
     return centroids
 
 
-def auto_ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    index_root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+def auto_ivf_topk(queries: DataFrame, corpus: DataFrame, index_root: str):
     """Cost-aware IVF top-10 — a measured-crossover default on the
     shared ``plans/cost.py`` seam, like the near-dup edge route.
     Measures the corpus size (:func:`row_count`: zero jobs on a bare
@@ -708,17 +653,11 @@ def auto_ivf_topk(
         detail=f"stored route: sqrt-N={ivf_k_for(n)} centroids at {index_root}",
     )
     if decision.choice == "live":
-        centroids = ivf_centroids_np(corpus, k=16, id_col=id_col, vec_col=vec_col)
-        return (
-            ivf_topk(queries, corpus, centroids, 10, nprobe=10, id_col=id_col, vec_col=vec_col),
-            decision,
-        )
-    centroids = ensure_ivf_index(corpus, index_root, n, id_col=id_col, vec_col=vec_col)
+        centroids = ivf_centroids_np(corpus, k=16)
+        return ivf_topk(queries, corpus, centroids), decision
+    centroids = ensure_ivf_index(corpus, index_root, n)
     nprobe = ivf_nprobe_for(len(centroids), n)
     return (
-        ivf_topk_stored(
-            corpus.sparkSession, queries, index_root, centroids, 10,
-            nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-        ),
+        ivf_topk_stored(corpus.sparkSession, queries, index_root, centroids, nprobe=nprobe),
         decision,
     )

@@ -8,8 +8,8 @@ fits in one broadcast instead of a full shuffle).
 
 100 TB posture:
 
-- ``count_min_counters`` is one groupBy over (depth, slot) with at most
-  depth x width distinct groups, so map-side partial aggregation
+- ``count_min_counters`` is one ROLLUP over (depth, slot) with at most
+  depth x (width+1) distinct groups, so map-side partial aggregation
   collapses every task's output to <= depth x width rows regardless of
   input size. The finished counter table is tiny and broadcastable; no
   per-key state ever shuffles.
@@ -50,40 +50,29 @@ def _slots(key: Column, n_hashes: int, modulus: int) -> Column:
     )
 
 
-def count_min_counters(
-    df: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    width: int = 2048,
-    weight_col: str | None = None,
-    with_row_sums: bool = False,
-) -> DataFrame:
-    """Build the count-min counter table ``(d, slot, cnt)`` for a key
-    column: cnt = number of input rows whose key hashes to ``slot`` in
-    hash row ``d``. At most ``depth * width`` output rows.
+def count_min_counters(df: DataFrame, depth: int = 4, width: int = 2048) -> DataFrame:
+    """Build the count-min counter table ``(d, slot, cnt)`` from
+    pre-aggregated ``(word, exact)`` rows: cnt = sum of ``exact`` over the
+    words that hash to ``slot`` in hash row ``d``. At most ``depth * width``
+    counter rows.
 
-    ``weight_col`` — build the WEIGHTED sketch: cnt = sum of weights
-    instead of row count. The standard use: pre-aggregate the stream to
-    ``(key, n)`` once, then sketch the aggregate — the counter table is
-    bit-identical to sketching the raw stream, but the explode runs over
-    |vocab| rows instead of |stream| rows (round-6: this removed one of
-    the suite's two full token-stream passes; at 100 TB it turns a
-    corpus-sized explode into a vocab-sized one).
+    The sketch is WEIGHTED: sketching the ``(word, exact)`` aggregate
+    gives a counter table bit-identical to sketching the raw stream, but
+    the explode runs over |vocab| rows instead of |stream| rows (round-6:
+    this removed one of the suite's two full token-stream passes; at
+    100 TB it turns a corpus-sized explode into a vocab-sized one).
 
-    ``with_row_sums`` — ROLLUP (d, slot) in the same single aggregation
-    pass, appending one ``(d, slot=NULL, cnt=row_total)`` row per depth
-    (the grand-total row is dropped). Callers verifying the conservation
-    invariant (each depth row's counters sum to the stream total) get it
+    Row sums ride along: ROLLUP (d, slot) in the same single aggregation
+    pass appends one ``(d, slot=NULL, cnt=row_total)`` row per depth (the
+    grand-total row is dropped), so a caller verifying the conservation
+    invariant (each depth row's counters sum to the stream total) gets it
     for free instead of re-aggregating the input a second time; map-side
     partial aggregation still collapses every task to
-    <= depth x (width+1) rows."""
-    w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
+    <= depth x (width+1) rows. The counters are the rows with a slot."""
     exploded = df.select(
-        F.posexplode(_slots(F.col(key_col), depth, width)).alias("d", "slot"),
-        w.alias("_w"),
+        F.posexplode(_slots(F.col("word"), depth, width)).alias("d", "slot"),
+        F.col("exact").cast("long").alias("_w"),
     )
-    if not with_row_sums:
-        return exploded.groupBy("d", "slot").agg(F.sum("_w").alias("cnt"))
     return (
         exploded.rollup("d", "slot")
         .agg(F.sum("_w").alias("cnt"))
@@ -91,54 +80,36 @@ def count_min_counters(
     )
 
 
-def count_min_estimates(
-    counters: DataFrame,
-    keys: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    width: int = 2048,
-) -> DataFrame:
-    """Estimated frequency for each distinct key in ``keys``:
-    min over depth of the key's slot counters (0 for a never-seen slot).
+def count_min_estimates(counters: DataFrame, keys: DataFrame, depth: int = 4, width: int = 2048) -> DataFrame:
+    """Estimated frequency for each distinct ``word`` in ``keys``:
+    min over depth of the word's slot counters (0 for a never-seen slot).
     Always >= the true frequency — the count-min guarantee."""
-    probes = keys.select(
-        key_col, F.posexplode(_slots(F.col(key_col), depth, width)).alias("d", "slot")
-    )
+    probes = keys.select("word", F.posexplode(_slots(F.col("word"), depth, width)).alias("d", "slot"))
     return (
         probes.join(F.broadcast(counters), ["d", "slot"], "left")
-        .groupBy(key_col)
+        .groupBy("word")
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0).cast("long"))).alias("cms_est"))
     )
 
 
-def bloom_build(
-    df: DataFrame, key_col: str, num_bits: int = 1 << 16, num_hashes: int = 4
-) -> DataFrame:
-    """Bloom filter over a key column as the relation of its set bit
+def bloom_build(df: DataFrame, num_bits: int = 1 << 16, num_hashes: int = 4) -> DataFrame:
+    """Bloom filter over the ``key`` column as the relation of its set bit
     positions: one ``pos`` column, <= num_bits distinct rows."""
     return (
-        df.select(F.explode(_slots(F.col(key_col), num_hashes, num_bits)).alias("pos"))
+        df.select(F.explode(_slots(F.col("key"), num_hashes, num_bits)).alias("pos"))
         .distinct()
     )
 
 
-def bloom_probe(
-    positions: DataFrame,
-    probes: DataFrame,
-    key_col: str,
-    num_bits: int = 1 << 16,
-    num_hashes: int = 4,
-) -> DataFrame:
-    """Membership test of each probe key against a built filter:
+def bloom_probe(positions: DataFrame, probes: DataFrame, num_bits: int = 1 << 16, num_hashes: int = 4) -> DataFrame:
+    """Membership test of each probe ``key`` against a built filter:
     ``(key, might_contain)``. No false negatives by construction; false
     positives at the usual (1 - e^(-kn/m))^k rate."""
-    exploded = probes.select(
-        key_col, F.explode(_slots(F.col(key_col), num_hashes, num_bits)).alias("pos")
-    )
+    exploded = probes.select("key", F.explode(_slots(F.col("key"), num_hashes, num_bits)).alias("pos"))
     marked = positions.withColumn("present", F.lit(1))
     return (
         exploded.join(F.broadcast(marked), "pos", "left")
-        .groupBy(key_col)
+        .groupBy("key")
         .agg(
             (F.sum(F.when(F.col("present").isNull(), 1).otherwise(0)) == 0).alias(
                 "might_contain"

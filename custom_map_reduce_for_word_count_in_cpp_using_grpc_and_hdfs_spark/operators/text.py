@@ -46,8 +46,9 @@ def token_count_bpe(text: Column | str) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_PATTERN), 0)).cast("long")
 
 
-def token_count_bpe_sql(text_expr: str) -> str:
-    return f"len(regexp_extract_all({text_expr}, '{BPE_PATTERN}'))::BIGINT"
+def token_count_bpe_sql() -> str:
+    """DuckDB rendering of :func:`token_count_bpe` over ``d.text``."""
+    return f"len(regexp_extract_all(d.text, '{BPE_PATTERN}'))::BIGINT"
 
 
 #: Stopword set for quality scoring. Deliberately small and hardcoded —
@@ -159,9 +160,9 @@ def fingerprint_sql(text_expr: str) -> str:
     return poly_hash_chars_sql(text_expr)
 
 
-def doc_profile(df, id_col: str = "doc_id", text_col: str = "text", lang_col: str = "lang"):
-    """The whole per-document feature profile in one scan + two compact
-    shuffles.
+def doc_profile(df):
+    """The whole per-document feature profile of ``doc_id``/``text``/``lang``
+    rows in one scan + two compact shuffles.
 
     Token-derived features (counts, distinct count, top-token count,
     stopword hits, language marker scores, SimHash bit votes) come from
@@ -184,10 +185,10 @@ def doc_profile(df, id_col: str = "doc_id", text_col: str = "text", lang_col: st
     )
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import spread
 
-    df = spread(df, by=[id_col])  # both branches are CPU-bound per-row work
-    text = F.col(text_col)
-    toks = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
-    cnts = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("cnt"))
+    df = spread(df, by=["doc_id"])  # both branches are CPU-bound per-row work
+    text = F.col("text")
+    toks = df.select(F.col("doc_id"), F.explode(tokens_col("text")).alias("tok"))
+    cnts = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("cnt"))
     # Project the token hash ONCE per distinct (doc, token) row before the
     # second aggregate. The polynomial fold is an interpreted higher-order
     # lambda (exempt from subexpression elimination), and it feeds all 56
@@ -196,7 +197,7 @@ def doc_profile(df, id_col: str = "doc_id", text_col: str = "text", lang_col: st
     # expressions, so `_h` evaluates once (measured ~2× on the whole
     # profile at sf0.1; same single-reference discipline as operators/
     # dedup.py::simhash and the round-4 dup-ngram fix).
-    cnts = cnts.withColumn("_h", poly_hash_token("tok"))
+    cnts = cnts.withColumn("_h", poly_hash_token())
     h = F.col("_h")
     cnt = F.col("cnt")
     aggs = [
@@ -213,7 +214,7 @@ def doc_profile(df, id_col: str = "doc_id", text_col: str = "text", lang_col: st
         F.sum((F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1) * cnt).alias(f"_v{b}")
         for b in range(SIMHASH_BITS)
     ]
-    tok_feats = cnts.groupBy(id_col).agg(*aggs)
+    tok_feats = cnts.groupBy("doc_id").agg(*aggs)
 
     simhash = F.lit(0).cast("long")
     for b in range(SIMHASH_BITS):
@@ -228,19 +229,19 @@ def doc_profile(df, id_col: str = "doc_id", text_col: str = "text", lang_col: st
     lang_pred = F.when(best == 0, "und").otherwise(pred)
 
     scalars = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.length(text).cast("long").alias("n_chars"),
         token_count_bpe(text).alias("n_bpe_tokens"),
         punct_count(text).alias("n_punct"),
-        F.col(lang_col).alias("lang_label"),
+        F.col("lang").alias("lang_label"),
         fingerprint(text).alias("fp"),
         fingerprint(normalized_text(text)).alias("fp_normalized"),
         dup_ngram_frac(text, 2).alias("dup_bigram_frac"),
         dup_ngram_frac(text, 3).alias("dup_trigram_frac"),
     )
     n_chars, n_tokens = F.col("n_chars"), F.col("n_tokens")
-    return scalars.join(tok_feats, id_col).select(
-        id_col,
+    return scalars.join(tok_feats, "doc_id").select(
+        "doc_id",
         "n_chars",
         "n_tokens",
         "n_distinct",
@@ -298,10 +299,11 @@ def dup_ngram_frac(text: Column | str, n: int) -> Column:
     return F.when(total == 0, F.lit(0.0)).otherwise((total - distinct) / total)
 
 
-def dup_ngram_frac_sql(text_expr: str, n: int) -> str:
+def dup_ngram_frac_sql(n: int) -> str:
+    """DuckDB rendering of :func:`dup_ngram_frac` over ``d.text``."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.dedup import shingles_sql
 
-    grams = shingles_sql(text_expr, n)
+    grams = shingles_sql("d.text", n)
     return (
         f"CASE WHEN len({grams}) = 0 THEN 0.0 ELSE "
         f"(len({grams})::BIGINT - len(list_distinct({grams}))::BIGINT) "

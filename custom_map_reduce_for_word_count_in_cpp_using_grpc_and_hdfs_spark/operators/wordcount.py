@@ -34,7 +34,7 @@ a ``reference_parity=True`` mode reproducing the reference's silent drop
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import materialize
@@ -43,20 +43,23 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators
 #: (slave.cc:103). No lowercasing, no punctuation stripping.
 TOKEN_DELIMITERS = "[ \n]"
 
+#: The interactive top-K width (master.cc:395-453 prints the top 100).
+TOP_K = 100
 
-def tokenize(df: DataFrame, text_col: str = "text", out_col: str = "word") -> DataFrame:
-    """O3: flatMap a text column into one row per word.
+
+def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """O3: flatMap a text column into one row per ``word``.
 
     Exact reference semantics: split on space/newline only, drop empty
     tokens (slave.cc:103 guards ``word != ""``), keep case and punctuation.
     """
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import spread
 
-    word = F.explode(F.split(F.col(text_col), TOKEN_DELIMITERS)).alias(out_col)
-    return spread(df).select(word).where(F.col(out_col) != "")
+    word = F.explode(F.split(F.col(text_col), TOKEN_DELIMITERS)).alias("word")
+    return spread(df).select(word).where(F.col("word") != "")
 
 
-def key_range_filter(df: DataFrame, word_col: str = "word") -> DataFrame:
+def key_range_filter(df: DataFrame) -> DataFrame:
     """O5's predicate: keep words whose FIRST character is in [a, z].
 
     The reference applies this per reducer over ``a..z`` ranges
@@ -65,7 +68,7 @@ def key_range_filter(df: DataFrame, word_col: str = "word") -> DataFrame:
     words are silently dropped. Exposed standalone so reference_parity
     mode is one filter, not a bespoke pipeline.
     """
-    initial = F.substring(F.col(word_col), 1, 1)
+    initial = F.substring(F.col("word"), 1, 1)
     return df.where((initial >= "a") & (initial <= "z"))
 
 
@@ -99,7 +102,7 @@ def word_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     return materialize(_aggregate(df, text_col))
 
 
-def top_k(counts: DataFrame, k: int, count_col: str = "cnt", key_col: str = "word") -> DataFrame:
+def top_k(counts: DataFrame, k: int) -> DataFrame:
     """O9: global top-K by count, ties kept, deterministic order.
 
     ORDER BY cnt DESC, word ASC LIMIT k → planned as
@@ -107,24 +110,25 @@ def top_k(counts: DataFrame, k: int, count_col: str = "cnt", key_col: str = "wor
     driver, no global sort. The reference instead re-reads every reducer
     file and loses tied words in a count-keyed map (master.cc:405-452).
     """
-    return counts.orderBy(F.col(count_col).desc(), F.col(key_col).asc()).limit(k)
+    return counts.orderBy(F.col("cnt").desc(), F.col("word").asc()).limit(k)
 
 
-def word_count_top_k(df: DataFrame, k: int = 100, text_col: str = "text", **kw) -> DataFrame:
-    """The reference's full query: word-count then top-K, one lazy plan."""
-    return top_k(_aggregate(df, text_col, **kw), k)
+def word_count_top_k(df: DataFrame, reference_parity: bool = False) -> DataFrame:
+    """The reference's full query: word-count then top-:data:`TOP_K`, one
+    lazy plan."""
+    return top_k(_aggregate(df, "text", reference_parity=reference_parity), TOP_K)
 
 
-def word_count_layout(df: DataFrame, text_col: str = "text") -> DataFrame:
+def word_count_layout(df: DataFrame) -> DataFrame:
     """Word-count laid out per initial (:func:`partitioned_sorted_counts`),
     one lazy plan."""
-    return partitioned_sorted_counts(_aggregate(df, text_col))
+    return partitioned_sorted_counts(_aggregate(df, "text"))
 
 
-def with_initial(df: DataFrame, word_col: str = "word", out_col: str = "initial") -> Column | DataFrame:
-    """First character of the word — the reference's reduce partition key
-    (slave.cc:149-157)."""
-    return df.withColumn(out_col, F.substring(F.col(word_col), 1, 1))
+def with_initial(df: DataFrame) -> DataFrame:
+    """``initial``: first character of the word — the reference's reduce
+    partition key (slave.cc:149-157)."""
+    return df.withColumn("initial", F.substring(F.col("word"), 1, 1))
 
 
 def partitioned_sorted_counts(counts: DataFrame) -> DataFrame:

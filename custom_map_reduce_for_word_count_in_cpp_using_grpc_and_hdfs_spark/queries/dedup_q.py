@@ -119,7 +119,7 @@ def dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_slice = docs.where(F.col("doc_id") % 101 == 0)
     rest = docs.where(F.col("doc_id") % 101 != 0)
     contaminated = (
-        rest.join(D.contaminated_docs(rest, eval_slice, n=3), "doc_id", "left_semi")
+        rest.join(D.contaminated_docs(rest, eval_slice), "doc_id", "left_semi")
         .groupBy("lang")
         .agg(F.min("doc_id").alias("survivor_id"), F.count(F.lit(1)).alias("n_copies"))
         .select(

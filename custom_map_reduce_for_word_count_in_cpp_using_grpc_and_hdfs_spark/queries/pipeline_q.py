@@ -166,7 +166,7 @@ _PIPELINE_ORACLE = f"""
     ),
     sized AS (SELECT component, count(*) AS cluster_size FROM comp GROUP BY component)
     SELECT q.doc_id, q.lang_label, q.lang_pred, q.n_tokens, q.n_chars, s.cluster_size,
-           {S.hash_bucket_sql('q.doc_id', 10)} AS sample_bucket
+           {S.hash_bucket_sql('q.doc_id', S.SAMPLE_BUCKETS)} AS sample_bucket
     FROM comp c
     JOIN sized s ON c.component = s.component
     JOIN qual q ON q.doc_id = c.doc_id
@@ -201,7 +201,7 @@ def _decide_edge_method(n_docs: int, avg_shingles: float) -> tuple[str, float]:
     return d.choice, est
 
 
-def choose_edge_method(docs: DataFrame, text_col: str = "text") -> str:
+def choose_edge_method(docs: DataFrame) -> str:
     """Measure the corpus and pick the near-dup edge route (see
     EDGE_AUTO_CROSSOVER_POSTINGS for the measured crossover). Cost of
     the measurement itself: one count (metadata-only on a parquet scan)
@@ -255,7 +255,7 @@ def choose_edge_method(docs: DataFrame, text_col: str = "text") -> str:
         return method
     avg = (
         docs.limit(EDGE_AUTO_SAMPLE_DOCS)
-        .select(F.size(F.array_distinct(D.shingles_col(text_col, 3))).alias("k"))
+        .select(F.size(F.array_distinct(D.shingles_col("text", 3))).alias("k"))
         .agg(F.avg("k"))
         .first()[0]
         or 0.0
@@ -345,7 +345,7 @@ def curate(docs: DataFrame) -> DataFrame:
         # deterministic 10-bucket hash assignment: downstream "sample to
         # budget" keeps buckets < k — retry-stable and table-consistent
         # (operators/sampling.py)
-        .withColumn("sample_bucket", S.hash_bucket("doc_id", 10))
+        .withColumn("sample_bucket", S.hash_bucket())
         .select(
             "doc_id", "lang_label", "lang_pred", "n_tokens", "n_chars",
             "cluster_size", "sample_bucket",

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.exact import dsum, dsum_expr
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table, register_views
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
 
 def rel_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,7 +811,8 @@ def rel_sql_frontend(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL ANSI text runs on spark.sql over registered views and on
     the DuckDB oracle — including an uncorrelated scalar subquery
     (planned by Spark as a 1-row broadcast)."""
-    register_views(spark, sf_dir, ("customer", "nation"))
+    for name in ("customer", "nation"):
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(_FRONTEND_SQL)
 
 
@@ -841,7 +842,7 @@ def rel_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     errors = e.where(F.col("event_type") == "error").select("event_id", "user_id", "ts")
     clicks = e.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    return as_of_join(errors, clicks, key="user_id", ts="ts", right_val="event_id").select(
+    return as_of_join(errors, clicks).select(
         "event_id", "user_id", "ts", "asof_event_id"
     )
 
@@ -873,4 +874,4 @@ def rel_interval_join_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.relational import interval_self_join
 
     e = load_table(spark, sf_dir, "events").where(F.col("event_type") == "error")
-    return interval_self_join(e, ts="ts", id_col="event_id", max_gap_seconds=60)
+    return interval_self_join(e)

@@ -27,7 +27,6 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions
     rev_col,
     rev_sql,
 )
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.relational import top_n
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
@@ -551,11 +550,9 @@ def rel_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Token-stream passes in this branch: one (exact_counts; its shuffle
     # subtree is identical under every consumer, so ReusedExchange
     # serves the rest). Measured: suite 3.12 s -> ~2.6 s uncontended.
-    table = sk.count_min_counters(
-        exact_counts, "word", depth, width, weight_col="exact", with_row_sums=True
-    )
+    table = sk.count_min_counters(exact_counts, depth, width)
     counters = table.where(F.col("slot").isNotNull())
-    est = sk.count_min_estimates(counters, exact_counts.select("word"), "word", depth, width)
+    est = sk.count_min_estimates(counters, exact_counts.select("word"), depth, width)
     # PROVABLE invariants only (round 4): no-underestimate (one-sided
     # error, holds for every input) and per-depth-row counter
     # conservation (each occurrence increments exactly one slot per
@@ -600,17 +597,17 @@ def rel_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = o.select(F.col("o_custkey").alias("key")).distinct()
     n_keys = members.count()
     num_bits, num_hashes = max(1 << 16, 1 << (32 * n_keys).bit_length()), 4
-    positions = sk.bloom_build(members, "key", num_bits, num_hashes)
+    positions = sk.bloom_build(members, num_bits, num_hashes)
     true_members = (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
         .select(F.col("c_custkey").alias("key"))
     )
     negatives = c.select((F.col("c_custkey") + F.lit(1_000_000_000)).alias("key"))
-    pos_stats = sk.bloom_probe(positions, true_members, "key", num_bits, num_hashes).agg(
+    pos_stats = sk.bloom_probe(positions, true_members, num_bits, num_hashes).agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min(F.col("might_contain").cast("int")).alias("all_pass"),
     )
-    neg_stats = sk.bloom_probe(positions, negatives, "key", num_bits, num_hashes).agg(
+    neg_stats = sk.bloom_probe(positions, negatives, num_bits, num_hashes).agg(
         F.sum(F.col("might_contain").cast("long")).alias("fps"),
         F.count(F.lit(1)).alias("n_neg"),
     )
@@ -735,7 +732,7 @@ def rel_scan_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.where((F.col("p_size") >= 30) & F.col("p_type").contains("MO"))
         .select("p_partkey", "p_name", (F.col("p_retailprice") * 0.9).alias("sale_price"))
     )
-    return top_n(projected, 25, F.col("sale_price").desc(), F.col("p_partkey").asc())
+    return projected.orderBy(F.col("sale_price").desc(), F.col("p_partkey").asc()).limit(25)
 
 
 _DISTINCT_SUITE_ORACLE = """

@@ -195,14 +195,13 @@ def _mm_branch(frame: DataFrame, op: str, cols: dict) -> DataFrame:
         FROM dims
     ), rsize AS (
         -- nearest-neighbor resize geometry: aspect-preserving fit into
-        -- an 8-box (small so the oracle's per-output-pixel expansion
-        -- stays bounded; the kernel is box-size-independent), never
-        -- upscaling — same integer math as multimodal.resize_fit
+        -- the multimodal.RESIZE_STAGE_BOX box, never upscaling — same
+        -- integer math as multimodal.resize_fit
         SELECT doc_id, width, height,
-               CASE WHEN greatest(width, height) <= 8 THEN width
-                    ELSE greatest(1, width * 8 // greatest(width, height)) END AS ow,
-               CASE WHEN greatest(width, height) <= 8 THEN height
-                    ELSE greatest(1, height * 8 // greatest(width, height)) END AS oh
+               CASE WHEN greatest(width, height) <= {MM.RESIZE_STAGE_BOX} THEN width
+                    ELSE greatest(1, width * {MM.RESIZE_STAGE_BOX} // greatest(width, height)) END AS ow,
+               CASE WHEN greatest(width, height) <= {MM.RESIZE_STAGE_BOX} THEN height
+                    ELSE greatest(1, height * {MM.RESIZE_STAGE_BOX} // greatest(width, height)) END AS oh
         FROM dims
     ), rsums AS (
         -- output pixel (oy, ox, c) reads fixture flat index
@@ -770,7 +769,7 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash-checked, not just the plumbing (fake_decode_meta's resized_w/h
     # checked only the geometry arithmetic).
     resize_rows = _mm_branch(
-        MM.resized_image_stats(MM.render_ppm_payloads(docs), box=8), "image_resize",
+        MM.resized_image_stats(MM.render_ppm_payloads(docs)), "image_resize",
         _same("doc_id", "width", "height", "resized_w", "resized_h",
               "pixel_sum", "r_sum", "g_sum", "b_sum"),
     )
@@ -813,7 +812,7 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the driver hash-checks the whole ingest path: listing, glob prune,
     # byte-complete reads (byte_len), and content (pixel sums).
     ingest_path = MM.stage_ppm_ingest_dir(jpeg_docs.select("doc_id"), _mm_ingest_dir(sf_dir))
-    parsed = read_binary_dir(spark, ingest_path, glob="*.ppm").select(
+    parsed = read_binary_dir(spark, ingest_path).select(
         F.regexp_extract("path", r"(\d+)\.ppm$", 1).cast("long").alias("doc_id"),
         F.col("length").cast("long").alias("byte_len"),
         F.col("content").alias("img"),

@@ -96,7 +96,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic gaps-and-islands rewrite (end = last event + gap)."""
     return run_available_now(
         session_windows(events_stream(spark, sf_dir)),
-        "complete",
         shuffle_width=stream_shuffle_width(sf_dir, "events"),
     )
 
@@ -269,6 +268,5 @@ def stream_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return run_available_now(
         streaming_word_count(documents_stream(spark, sf_dir)),
-        "complete",
         shuffle_width=stream_shuffle_width(sf_dir, "documents"),
     )

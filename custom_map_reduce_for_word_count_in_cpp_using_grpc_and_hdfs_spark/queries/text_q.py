@@ -52,17 +52,17 @@ _PII_GRAFT_SQL = (
            length(d.text)::BIGINT AS n_chars,
            len({T.tokens_sql('d.text')})::BIGINT AS n_tokens,
            len(list_distinct({T.tokens_sql('d.text')}))::BIGINT AS n_distinct,
-           {T.token_count_bpe_sql('d.text')} AS n_bpe_tokens,
+           {T.token_count_bpe_sql()} AS n_bpe_tokens,
            {T.punct_count_sql('d.text')} AS n_punct,
            (length(d.text)::BIGINT - (len({T.tokens_sql('d.text')})::BIGINT - 1))
              / len({T.tokens_sql('d.text')})::BIGINT AS avg_token_len,
            {T.stopword_count_sql('d.text')} / len({T.tokens_sql('d.text')})::BIGINT AS stopword_ratio,
            {T.punct_count_sql('d.text')} / length(d.text)::BIGINT AS punct_ratio,
            tt.top_cnt / len({T.tokens_sql('d.text')})::BIGINT AS top_token_frac,
-           {T.dup_ngram_frac_sql('d.text', 2)} AS dup_bigram_frac,
-           {T.dup_ngram_frac_sql('d.text', 3)} AS dup_trigram_frac,
+           {T.dup_ngram_frac_sql(2)} AS dup_bigram_frac,
+           {T.dup_ngram_frac_sql(3)} AS dup_trigram_frac,
            (tt.top_cnt / len({T.tokens_sql('d.text')})::BIGINT <= {GATE_MAX_TOP_TOKEN_FRAC}
-            AND {T.dup_ngram_frac_sql('d.text', 2)} <= {GATE_MAX_DUP_BIGRAM_FRAC})
+            AND {T.dup_ngram_frac_sql(2)} <= {GATE_MAX_DUP_BIGRAM_FRAC})
              AS gate_repetition,
            {T.pii_count_sql(_PII_GRAFT_SQL, T.PII_EMAIL)} AS n_pii_emails,
            {T.pii_count_sql(T.pii_redact_sql(_PII_GRAFT_SQL), T.PII_EMAIL)

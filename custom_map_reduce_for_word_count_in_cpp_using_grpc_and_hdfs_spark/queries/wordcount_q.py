@@ -35,7 +35,7 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-count + top-100: the reference's one query (master.cc:470-480),
     ties kept (§2.5.1)."""
     docs = load_table(spark, sf_dir, "documents")
-    return wc.word_count_top_k(docs, k=100)
+    return wc.word_count_top_k(docs)
 
 
 @query(
@@ -46,7 +46,7 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ({_TOKENS_SQL}) WHERE word <> ''
         GROUP BY word
         ORDER BY cnt DESC, word ASC
-        LIMIT 100
+        LIMIT {wc.TOP_K}
     )
   UNION ALL
     SELECT 'keyrange', word, cnt FROM (
@@ -55,7 +55,7 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE word <> '' AND substr(word, 1, 1) BETWEEN 'a' AND 'z'
         GROUP BY word
         ORDER BY cnt DESC, word ASC
-        LIMIT 100
+        LIMIT {wc.TOP_K}
     )
     """,
 )
@@ -73,7 +73,7 @@ def wc_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     topk = flagship(spark, sf_dir).select(F.lit("topk").alias("op"), "word", "cnt")
-    parity = wc.word_count_top_k(docs, k=100, reference_parity=True).select(
+    parity = wc.word_count_top_k(docs, reference_parity=True).select(
         F.lit("keyrange").alias("op"), "word", "cnt"
     )
     return topk.unionAll(parity)

@@ -2,7 +2,6 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.r
     TABLES,
     load_table,
     read_binary_dir,
-    register_views,
 )
 
-__all__ = ["TABLES", "load_table", "read_binary_dir", "register_views"]
+__all__ = ["TABLES", "load_table", "read_binary_dir"]

@@ -117,12 +117,6 @@ def nanos_ts_to_micros(events: DataFrame) -> DataFrame:
     return events
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register each table as a temp view for the SQL front end."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_text_corpus(spark: SparkSession, path: str) -> DataFrame:
     """Raw text source: the reference's input shape (one untyped line stream,
     SURVEY.md §1.1) as a DataFrame[value: string].
@@ -134,9 +128,9 @@ def read_text_corpus(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path)
 
 
-def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Raw-file multimodal ingest: a directory (or object-store prefix) of
-    opaque files as DataFrame[path, modificationTime, length, content:
+def read_binary_dir(spark: SparkSession, path: str) -> DataFrame:
+    """Raw-file multimodal ingest: the ``*.ppm`` files of a directory (or
+    object-store prefix) as DataFrame[path, modificationTime, length, content:
     binary] via Spark's built-in ``binaryFile`` source — the shape
     multimodal corpora actually arrive in at scale (millions of image/
     audio files under a prefix), feeding the same mapInPandas decode
@@ -150,7 +144,4 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> 
     columns (one task per row group instead of per file, and column
     pruning skips payload bytes when a query reads only metadata); this
     source is the ingest edge that builds those tables."""
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
+    return spark.read.format("binaryFile").option("pathGlobFilter", "*.ppm").load(path)

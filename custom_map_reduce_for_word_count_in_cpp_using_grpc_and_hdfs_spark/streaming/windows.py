@@ -211,10 +211,10 @@ _WIDTH_LOCK = threading.Lock()
 DRAIN_TIMEOUT_S = 300
 
 
-def run_available_now(df: DataFrame, mode: str, shuffle_width: int | None = None) -> DataFrame:
-    """Drain a bounded stream into a memory sink and return the result as
-    a batch DataFrame."""
-    return run_available_now_many([(df, mode)], shuffle_width=shuffle_width)[0]
+def run_available_now(df: DataFrame, shuffle_width: int | None = None) -> DataFrame:
+    """Drain a bounded stream in complete output mode into a memory sink
+    and return the result as a batch DataFrame."""
+    return run_available_now_many([(df, "complete")], shuffle_width=shuffle_width)[0]
 
 
 def run_available_now_many(

@@ -52,9 +52,9 @@ def encode_wav_ulaw(sample_rate: int, samples: np.ndarray) -> bytes:
     return MM._wav(7, ch, sample_rate, ch, 8, lin2ulaw(samples.reshape(-1)).tobytes(), fact_n=n)
 
 
-def render_wav_payloads(df, id_col: str = "doc_id"):
+def render_wav_payloads(df):
     """Fixture-audio renderer: one canonical s16 WAV per row, executor-side."""
-    return MM._render_stage(df, "audio", lambda d: MM.encode_wav(*MM._wav_fixture(d)), id_col)
+    return MM._render_stage(df, "audio", lambda d: MM.encode_wav(*MM._wav_fixture(d)))
 
 
 def decode_image_pillow(payload_bytes: bytes) -> dict:

@@ -128,7 +128,7 @@ def test_ann_ivf_recall(spark):
     queries = emb.where(F.col("vec_id") % 50 == 0)
     centroids = S.ivf_centroids_np(emb, k=16)
     brute = S.brute_force_topk(queries, emb, 10).collect()
-    approx = S.ivf_topk(queries, emb, centroids, 10, nprobe=10).collect()
+    approx = S.ivf_topk(queries, emb, centroids).collect()
     bs, as_ = {}, {}
     for r in brute:
         bs.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -242,7 +242,9 @@ def test_ivf_short_corpus_guard(spark, monkeypatch):
     monkeypatch.setattr(S, "IVF_ITERS", 1)
     centroids = S.ivf_centroids_np(df, k=16)
     assert 1 <= len(centroids) <= 5
-    out = S.ivf_topk(df.limit(1), df, centroids, k=2, nprobe=4)
+    monkeypatch.setattr(S, "IVF_TOP_K", 2)
+    monkeypatch.setattr(S, "IVF_NPROBE", 4)
+    out = S.ivf_topk(df.limit(1), df, centroids)
     assert out.count() >= 1
 
 
@@ -300,16 +302,18 @@ def test_operator_caches_release_with_result(spark):
         assert not leaked, f"cached intermediates leaked: {leaked}"
 
 
-def test_lsh_candidate_pairs_rejects_wrong_signature_width(spark):
-    """A sigs frame built with a different num_perm must fail loudly, not
-    band over truncated slices (silent recall loss)."""
+def test_lsh_candidate_pairs_rejects_wrong_signature_width(spark, monkeypatch):
+    """A sigs frame built with a different permutation count must fail
+    loudly, not band over truncated slices (silent recall loss)."""
     import pytest
     from pyspark.errors import SparkRuntimeException
 
     docs = load_table(spark, SF_CORRECT, "documents").limit(20)
-    sigs = D.minhash_signature(docs, num_perm=16)
+    monkeypatch.setattr(D, "MINHASH_PERMS", 16)
+    sigs = D.minhash_signature(docs)
+    monkeypatch.setattr(D, "MINHASH_PERMS", 32)
     with pytest.raises(SparkRuntimeException, match="expected signature width"):
-        D.lsh_candidate_pairs(sigs, bands=8, num_perm=32).count()
+        D.lsh_candidate_pairs(sigs, bands=8).count()
 
 
 def test_connected_components_raises_when_unconverged(spark, monkeypatch):
@@ -665,7 +669,7 @@ def test_auto_ivf_topk_routes_on_measured_crossover(spark, tmp_path, monkeypatch
     assert not os.path.exists(idx), "live route must not touch storage"
     expected = {
         (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk(queries, emb, S.ivf_centroids_np(emb, k=16), 10, nprobe=10).collect()
+        for r in S.ivf_topk(queries, emb, S.ivf_centroids_np(emb, k=16)).collect()
     }
     assert {(r.query_id, r.neighbor_id) for r in live_df.collect()} == expected
 
@@ -735,7 +739,7 @@ def test_stored_ivf_recall_clears_floor_at_2k(spark, tmp_path):
     c = S.ivf_centroids_np(emb, k=S.ivf_k_for(n))
     S.write_ivf_index(emb, c, path)
     got = {}
-    for r in S.ivf_topk_stored(spark, queries, path, c, 10).collect():
+    for r in S.ivf_topk_stored(spark, queries, path, c).collect():
         got.setdefault(r.query_id, set()).add(r.neighbor_id)
     recalls = [len(exact[q] & got.get(q, set())) / len(exact[q]) for q in exact]
     recall = sum(recalls) / len(recalls)
@@ -769,9 +773,7 @@ def test_ivf_index_rebuilds_on_content_change(spark, tmp_path):
     mutated = emb.withColumn(
         "embedding", F.transform(F.col("embedding"), lambda x: x + F.lit(10.0))
     )
-    assert S.corpus_fingerprint(mutated, n, "vec_id", "embedding") != S.corpus_fingerprint(
-        emb, n, "vec_id", "embedding"
-    )
+    assert S.corpus_fingerprint(mutated, n) != S.corpus_fingerprint(emb, n)
     S.ensure_ivf_index(mutated, idx, n)
     assert os.path.getmtime(sidecar) > stamp, "content change must rebuild the index"
 

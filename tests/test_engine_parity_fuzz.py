@@ -5,6 +5,8 @@ corpus — they are the foundation the oracle gate stands on."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 import duckdb
 import numpy as np
 import pytest
@@ -35,13 +37,13 @@ TEXT = st.text(
 @settings(max_examples=25, deadline=None)
 @given(st.lists(TEXT, min_size=1, max_size=8))
 def test_poly_hashes_match_duckdb(spark, texts):
-    df = spark.createDataFrame([(t,) for t in texts], "t string")
-    got = df.select(poly_hash_chars("t").alias("h"), poly_hash_token("t").alias("h56")).collect()
+    df = spark.createDataFrame([(t, t) for t in texts], "t string, tok string")
+    got = df.select(poly_hash_chars("t").alias("h"), poly_hash_token().alias("h56")).collect()
     con = duckdb.connect()
     try:
         for t, row in zip(texts, got):
             o = con.execute(
-                f"SELECT {poly_hash_chars_sql('?')}, {poly_hash_token_sql('?')}", [t, t]
+                f"SELECT {poly_hash_chars_sql('?')}, {poly_hash_token_sql()} FROM (SELECT ? AS tok)", [t, t]
             ).fetchone()
             assert (row.h, row.h56) == (o[0], o[1]), repr(t)
     finally:
@@ -115,7 +117,9 @@ def test_text_profile_primitives_match_duckdb(spark, texts):
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import sampling as SA
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import text as T
 
-    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    df = spark.createDataFrame([(t, t) for t in texts], "t string, doc_id string")
+    with mock.patch.object(SA, "SAMPLE_BUCKETS", 13):
+        bucket = SA.hash_bucket()
     got = df.select(
         T.normalized_text("t").alias("norm"),
         T.token_count_bpe("t").alias("bpe"),
@@ -123,7 +127,7 @@ def test_text_profile_primitives_match_duckdb(spark, texts):
         T.punct_count("t").alias("punct"),
         T.lang_id("t").alias("lang"),
         T.fingerprint("t").alias("fp"),
-        SA.hash_bucket("t", 13).alias("bucket"),
+        bucket.alias("bucket"),
     ).collect()
     con = duckdb.connect()
     try:
@@ -131,14 +135,14 @@ def test_text_profile_primitives_match_duckdb(spark, texts):
             sql = "SELECT " + ", ".join(
                 [
                     T.normalized_text_sql("?"),
-                    T.token_count_bpe_sql("?"),
+                    T.token_count_bpe_sql(),
                     T.stopword_count_sql("?"),
                     T.punct_count_sql("?"),
                     T.lang_id_sql("?"),
                     T.fingerprint_sql("?"),
                     SA.hash_bucket_sql("?", 13),
                 ]
-            )
+            ) + " FROM (SELECT ? AS text) AS d"
             # each twin may expand '?' several times (lang_id alone
             # re-tokenizes per CASE branch)
             o = con.execute(sql, [t] * sql.count("?")).fetchone()
@@ -161,7 +165,7 @@ def test_dup_ngram_frac_matches_duckdb(spark, texts, n):
     try:
         for t, v in zip(texts, got):
             o = con.execute(
-                f"SELECT {dup_ngram_frac_sql('t', n)} FROM (SELECT ? AS t)", [t]
+                f"SELECT {dup_ngram_frac_sql(n)} FROM (SELECT ? AS text) AS d", [t]
             ).fetchone()[0]
             assert v == o, repr(t)
     finally:

@@ -302,7 +302,7 @@ def test_binary_dir_ingest_matches_column_route(spark, tmp_path):
         want[doc_id] = (w, h, int(px.sum()))
     (tmp_path / "notes.txt").write_text("not an image")
 
-    files = read_binary_dir(spark, str(tmp_path), glob="*.ppm")
+    files = read_binary_dir(spark, str(tmp_path))
     assert files.count() == 6  # the .txt is pruned by the glob, not decoded
     ingested = files.select(
         F.regexp_extract("path", r"img_(\d+)\.ppm$", 1).cast("long").alias("doc_id"),
@@ -495,14 +495,16 @@ def test_y4m_roundtrip_and_seams():
         MM.decode_y4m(header)
 
 
-def test_resize_nn_kernel_and_stats(spark):
+def test_resize_nn_kernel_and_stats(spark, monkeypatch):
     """resize_nn: identity when dims fit the box; exact NN index math on
     downscale (checked against a hand-rolled reference); no-upscale fit
     geometry; and resized_image_stats' sums recomputed independently."""
     px = MM._fixture_pixels(9, 16, 10)  # (h=10, w=16, 3)
-    assert MM.resize_fit(16, 10, 16) == (16, 10)  # fits: identity
-    assert MM.resize_fit(16, 10, 8) == (8, 5)
-    assert MM.resize_fit(3, 300, 8) == (1, 8)  # extreme aspect floors at 1
+    monkeypatch.setattr(MM, "RESIZE_STAGE_BOX", 16)
+    assert MM.resize_fit(16, 10) == (16, 10)  # fits: identity
+    monkeypatch.setattr(MM, "RESIZE_STAGE_BOX", 8)
+    assert MM.resize_fit(16, 10) == (8, 5)
+    assert MM.resize_fit(3, 300) == (1, 8)  # extreme aspect floors at 1
     out = MM.resize_nn(px, 8, 5)
     ref = np.array(
         [[px[(oy * 10) // 5, (ox * 16) // 8] for ox in range(8)] for oy in range(5)]
@@ -513,11 +515,11 @@ def test_resize_nn_kernel_and_stats(spark):
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     rows = {
         r["doc_id"]: r
-        for r in MM.resized_image_stats(MM.render_ppm_payloads(docs), box=8).collect()
+        for r in MM.resized_image_stats(MM.render_ppm_payloads(docs)).collect()
     }
     for i in ids:
         w, h = MM._fixture_dims(i)
-        ow, oh = MM.resize_fit(w, h, 8)
+        ow, oh = MM.resize_fit(w, h)
         resized = MM.resize_nn(MM._fixture_pixels(i, w, h), ow, oh).astype("int64")
         r = rows[i]
         assert (r["width"], r["height"], r["resized_w"], r["resized_h"]) == (w, h, ow, oh)
@@ -1110,7 +1112,7 @@ def test_safe_decode_importerror_escapes_quarantine(spark):
     ids = spark.createDataFrame([(0,)], "doc_id long")
     rendered = MM.render_ppm_payloads(ids)
     df = MM._decode_stage(
-        rendered, "doc_id", "img", "width long", missing_library, lambda *_: (0,), safe=True
+        rendered, "img", "width long", missing_library, lambda *_: (0,), safe=True
     )
     import pytest as _pytest
 

@@ -93,17 +93,19 @@ def test_curated_corpus_partitioned_write(spark, tmp_path_factory):
     assert one.count() == cur.where(F.col("lang_label") == langs[0]).count()
 
 
-def test_hash_sampling_deterministic_and_consistent(spark):
+def test_hash_sampling_deterministic_and_consistent(spark, monkeypatch):
     """Deterministic sampling (operators/sampling.py): a bucket-range
     sample is retry-stable and composable, and bucket assignment is
     total and in range."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import sampling
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.sampling import hash_bucket
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     n = docs.count()
+    monkeypatch.setattr(sampling, "SAMPLE_BUCKETS", 100)
 
     def sample(keep):
-        return docs.where(hash_bucket("doc_id") < keep).select("doc_id")
+        return docs.where(hash_bucket() < keep).select("doc_id")
 
     # identical across independent evaluations (pure function of the key)
     s1 = sorted(r.doc_id for r in sample(10).collect())
@@ -113,7 +115,8 @@ def test_hash_sampling_deterministic_and_consistent(spark):
     pilot = set(r.doc_id for r in sample(1).collect())
     assert pilot <= set(s1)
     # bucket assignment is total and in range
-    rng = docs.select(hash_bucket("doc_id", 10).alias("b")).agg(
+    monkeypatch.setattr(sampling, "SAMPLE_BUCKETS", 10)
+    rng = docs.select(hash_bucket().alias("b")).agg(
         F.min("b").alias("lo"), F.max("b").alias("hi"), F.count(F.lit(1)).alias("cnt")
     ).first()
     assert rng["lo"] >= 0 and rng["hi"] <= 9 and rng["cnt"] == n
@@ -125,11 +128,11 @@ def test_hash_bucket_calibration_and_independence(spark):
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.sampling import hash_bucket
 
     n = 5000
-    ints = spark.range(0, n).withColumnRenamed("id", "k")
-    strs = ints.selectExpr("concat('doc-', k) AS k")
+    ints = spark.range(0, n).withColumnRenamed("id", "doc_id")
+    strs = ints.selectExpr("concat('doc-', doc_id) AS doc_id")
     for df in (ints, strs):
         counts = [
-            r.c for r in df.select(hash_bucket("k", 10).alias("b"))
+            r.c for r in df.select(hash_bucket().alias("b"))
             .groupBy("b").agg(F.count(F.lit(1)).alias("c")).collect()
         ]
         assert len(counts) == 10

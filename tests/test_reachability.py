@@ -1,30 +1,36 @@
 """Every top-level package definition is reached from the fixed surface,
-and every option it takes is set from there.
+and every parameter it takes selects something there.
 
 The surface is what the engine is for: the driver contract
 (``__spark_entry__.py`` and every ``@query``-registered function),
 ``bench.py`` and the non-test ``perfbench/*.py`` modules. A static AST
 scan follows names transitively from there; a definition the scan never
 reaches is code that only tests exercise, and belongs deleted with its
-tests. The parameter scan does the same one level down: a defaulted
-parameter no surface or package call ever sets is an option that only
-doubles the configurations tests must cover, so its value belongs
-inlined (or, where tests vary it, a module constant they monkeypatch).
-Needs no Spark.
+tests. The parameter scan does the same one level down: a parameter that
+every package call gives the same literal value, and that no surface call
+passes, selects nothing; it only doubles the configurations tests must
+cover, so its value belongs inlined (or, where tests vary it, a module
+constant they monkeypatch). Needs no Spark.
 
 Names resolve by identifier (bare names, attribute names, import
 aliases), so the scan over-approximates reachability: it can miss dead
-code that shares a name with live code, never flag live code. An
-attribute whose base is a name imported from a module outside the
-package (``np.``, ``pq.``, ``F.``) is that module's, not the package's,
-so it resolves to nothing. The package dispatches nothing through
-``getattr``/``importlib``, which is what makes a name scan sound here.
+code that shares an attribute name with live code, never flag live code.
+Inside a function, a bare name bound there (a parameter, an assignment,
+a ``for``/``with``/``except`` target or a nested ``def``) is the
+function's own and refers to no top-level definition, unless the
+function declares it ``global``; a comprehension's targets are its own.
+A local import still names what it imports. An attribute whose base is a
+name imported from a module outside the package (``np.``, ``pq.``,
+``F.``) is that module's, not the package's, so it resolves to nothing.
+The package dispatches nothing through ``getattr``/``importlib``, which
+is what makes a name scan sound here.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+from collections.abc import Iterator
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark"
@@ -38,13 +44,12 @@ ALLOWED_UNREACHED = {
 _FIXTURE = "fixture-encoder variant: makes valid inputs the decoders must accept"
 _SAFE = "quarantine flag: tests run a decode stage unguarded to see its raw error"
 
-#: (module, qualified function name, parameter) -> why no surface call sets it.
+#: (module, qualified function name, parameter) -> why it keeps its one value.
 ALLOWED_UNSET = {
     ("operators/multimodal.py", "encode_jpeg", "restart_interval"): _FIXTURE,
     ("operators/multimodal.py", "encode_jpeg", "per_scan_dht"): _FIXTURE,
     ("operators/multimodal.py", "encode_avi_rawrgb", "top_down"): _FIXTURE,
     ("operators/multimodal.py", "encode_flac", "block_size"): _FIXTURE,
-    ("operators/multimodal.py", "encode_wav_adpcm", "spb"): _FIXTURE,
     ("operators/multimodal.py", "audio_features", "safe"): _SAFE,
     ("operators/multimodal.py", "adpcm_roundtrip_check", "safe"): _SAFE,
     ("operators/multimodal.py", "video_frame_stats", "safe"): _SAFE,
@@ -54,6 +59,9 @@ ALLOWED_UNSET = {
         "debug check that SPARK_GRAFT_DEBUG turns on; it costs a join and a count per call"
     ),
 }
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+_COMPS = (ast.ListComp, ast.SetComp, ast.GeneratorExp, ast.DictComp)
 
 
 def _is_package_import(node: ast.Import | ast.ImportFrom, alias: ast.alias) -> bool:
@@ -81,12 +89,61 @@ def _root(node: ast.expr) -> str | None:
     return node.id if isinstance(node, ast.Name) else None
 
 
+def _locals(fn: ast.FunctionDef | ast.AsyncFunctionDef | ast.Lambda) -> set[str]:
+    """Names ``fn`` binds in its own scope, minus those it declares ``global``."""
+    a = fn.args
+    names = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg] if p}
+    declared: set[str] = set()
+    todo: list[ast.AST] = list(fn.body) if isinstance(fn.body, list) else [fn.body]
+    while todo:
+        node = todo.pop()
+        if isinstance(node, ast.Global):
+            declared |= set(node.names)
+        elif isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Load):
+            names.add(node.id)
+        elif isinstance(node, ast.ExceptHandler) and node.name:
+            names.add(node.name)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        if not isinstance(node, _FUNCS + _COMPS + (ast.ClassDef,)):  # own scopes
+            todo.extend(ast.iter_child_nodes(node))
+    return names - declared
+
+
+def _scoped(node: ast.AST, bound: frozenset[str] = frozenset()) -> Iterator[tuple[ast.AST, frozenset[str]]]:
+    """Every node under ``node`` with the names bound locally where it sits."""
+    yield node, bound
+    if isinstance(node, _FUNCS):
+        a = node.args
+        outer = [*getattr(node, "decorator_list", []), *a.defaults, *filter(None, a.kw_defaults)]
+        outer += [p.annotation for p in a.posonlyargs + a.args + a.kwonlyargs if p.annotation]
+        outer += [getattr(node, "returns", None)] if getattr(node, "returns", None) else []
+        for part in outer:
+            yield from _scoped(part, bound)
+        inner = bound | _locals(node)
+        for stmt in node.body if isinstance(node.body, list) else [node.body]:
+            yield from _scoped(stmt, inner)
+    elif isinstance(node, _COMPS):
+        gens = node.generators
+        inner = bound | {n.id for g in gens for n in ast.walk(g.target) if isinstance(n, ast.Name)}
+        for i, g in enumerate(gens):
+            yield from _scoped(g.iter, inner if i else bound)  # the first iterable runs outside
+            for part in [g.target, *g.ifs]:
+                yield from _scoped(part, inner)
+        for part in [node.key, node.value] if isinstance(node, ast.DictComp) else [node.elt]:
+            yield from _scoped(part, inner)
+    else:
+        for child in ast.iter_child_nodes(node):
+            yield from _scoped(child, bound)
+
+
 def _refs(node: ast.AST, aliases: dict[str, str], external: set[str]) -> set[str]:
     """Identifiers ``node`` refers to, with import aliases resolved."""
     out: set[str] = set()
-    for sub in ast.walk(node):
+    for sub, bound in _scoped(node):
         if isinstance(sub, ast.Name):
-            out.add(aliases.get(sub.id, sub.id))
+            if sub.id not in bound:
+                out.add(aliases.get(sub.id, sub.id))
         elif isinstance(sub, ast.Attribute):
             if _root(sub) not in external:
                 out.add(sub.attr)
@@ -115,7 +172,7 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(fh.read(), filename=path)
 
 
-def _package_modules() -> list[tuple[str, ast.Module]]:
+def package_modules() -> list[tuple[str, ast.Module]]:
     """(path relative to the package, tree) of every package module."""
     out = []
     for dirpath, _, files in os.walk(PKG_DIR):
@@ -126,7 +183,7 @@ def _package_modules() -> list[tuple[str, ast.Module]]:
     return out
 
 
-def _surface_modules() -> list[ast.Module]:
+def surface_modules() -> list[ast.Module]:
     surface = [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")]
     bench_dir = os.path.join(ROOT, "perfbench")
     surface += [
@@ -137,12 +194,12 @@ def _surface_modules() -> list[ast.Module]:
     return [_parse(path) for path in surface]
 
 
-def unreached_definitions() -> set[tuple[str, str]]:
-    """(module, name) of every top-level package definition the surface
-    does not reach."""
+def unreached_definitions(package: list[tuple[str, ast.Module]], surface: list[ast.Module]) -> set[tuple[str, str]]:
+    """(module, name) of every top-level definition in ``package`` that
+    ``surface`` does not reach."""
     defs: dict[str, list[tuple[str, set[str]]]] = {}  # name -> [(module, refs)]
     seeds: set[str] = set()
-    for rel, tree in _package_modules():
+    for rel, tree in package:
         aliases, external = _imports(tree)
         for stmt in tree.body:
             names = _defined_names(stmt)
@@ -159,7 +216,7 @@ def unreached_definitions() -> set[tuple[str, str]]:
             if any(_is_query(d) for d in decos):
                 seeds |= set(names)
 
-    for tree in _surface_modules():
+    for tree in surface:
         seeds |= _refs(tree, *_imports(tree))
 
     reached: set[str] = set()
@@ -174,9 +231,22 @@ def unreached_definitions() -> set[tuple[str, str]]:
     return {(mod, name) for name, sites in defs.items() if name not in reached for mod, _ in sites}
 
 
+#: The value of an argument that is not a literal: a name, an expression,
+#: a ``*``/``**`` argument, or a default that is not a literal.
+VARIES = "<varies>"
+
+
+def _value(node: ast.expr) -> str:
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError):
+        return VARIES
+    return f"{type(value).__name__}:{value!r}"
+
+
 class _Fn:
     """One scanned function: its positional slots (``self`` dropped for a
-    method), its named parameters, and the defaulted ones the scan checks."""
+    method), its named parameters and the value each default gives."""
 
     def __init__(self, rel: str, qual: str, node: ast.FunctionDef, method: bool):
         a = node.args
@@ -184,29 +254,43 @@ class _Fn:
         static = any(getattr(d, "id", None) == "staticmethod" for d in node.decorator_list)
         self.key = (rel, qual)
         self.slots = positional[1:] if method and not static else positional
-        self.named = set(positional) | {p.arg for p in a.kwonlyargs}
-        defaulted = positional[len(positional) - len(a.defaults):] if a.defaults else []
-        defaulted += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-        self.checked = {p for p in defaulted if not p.endswith("_col")}
-        self.kwarg = a.kwarg.arg if a.kwarg else None
+        self.params = self.slots + [p.arg for p in a.kwonlyargs]
+        self.defaults = {p: _value(d) for p, d in zip(positional[::-1], a.defaults[::-1])}
+        self.defaults |= {p.arg: _value(d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+
+    def given(self, call: ast.Call) -> dict[str, str]:
+        """The value ``call`` passes to each parameter it names or fills."""
+        out: dict[str, str] = {}
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                out |= dict.fromkeys(self.slots[i:], VARIES)
+                break
+            if i < len(self.slots):
+                out[self.slots[i]] = _value(arg)
+        for kw in call.keywords:
+            if kw.arg is None:  # an opaque ** mapping may set anything
+                out = dict.fromkeys(self.params, VARIES) | out
+            elif kw.arg in self.params:
+                out[kw.arg] = _value(kw.value)
+        return out
 
 
-def unset_parameters() -> set[tuple[str, str, str]]:
-    """(module, function, parameter) of every defaulted parameter of a
-    top-level function or class method that no call in the package or on
-    the surface sets. A keyword, a positional slot or a ``**kwargs``
-    pass-through sets it; ``*_col`` parameters bind the frame's schema,
-    select no route, and are not checked. ``ClassName(...)`` calls
-    ``__init__``."""
+def single_valued_parameters(
+    package: list[tuple[str, ast.Module]], surface: list[ast.Module]
+) -> set[tuple[str, str, str]]:
+    """(module, function, parameter) of every parameter of a top-level
+    function or class method in ``package`` that every call gives the same
+    literal value and that no ``surface`` call passes.
+
+    A call gives each parameter the literal it passes, the default where it
+    passes none, and :data:`VARIES` for anything else. ``ClassName(...)``
+    calls ``__init__``; a call through a name bound locally calls whatever
+    that name holds, not the package function of the same name."""
     by_name: dict[str, list[_Fn]] = {}  # callee identifier -> candidates
-    scopes: list[tuple[ast.AST, _Fn | None, dict[str, str], set[str]]] = []
-    for rel, tree in _package_modules():
-        aliases, external = _imports(tree)
+    for rel, tree in package:
         for stmt in tree.body:
             if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                fn = _Fn(rel, stmt.name, stmt, method=False)
-                by_name.setdefault(stmt.name, []).append(fn)
-                scopes.append((stmt, fn, aliases, external))
+                by_name.setdefault(stmt.name, []).append(_Fn(rel, stmt.name, stmt, method=False))
             elif isinstance(stmt, ast.ClassDef):
                 for sub in stmt.body:
                     if isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -214,70 +298,85 @@ def unset_parameters() -> set[tuple[str, str, str]]:
                         by_name.setdefault(sub.name, []).append(fn)
                         if sub.name == "__init__":
                             by_name.setdefault(stmt.name, []).append(fn)
-                        scopes.append((sub, fn, aliases, external))
-                    else:
-                        scopes.append((sub, None, aliases, external))
-                scopes.extend((d, None, aliases, external) for d in stmt.decorator_list)
-            else:
-                scopes.append((stmt, None, aliases, external))
-    for tree in _surface_modules():
-        scopes.append((tree, None, *_imports(tree)))
 
-    set_: set[tuple[tuple[str, str], str]] = set()  # (fn key, parameter) set by slot or opaque **
-    passed: dict[tuple[str, str], set[str]] = {}  # fn key -> keywords its callers pass
-    forwards: dict[tuple[str, str], list[_Fn]] = {}  # fn key -> callees handed its **kwargs
-    for scope, caller, aliases, external in scopes:
-        for call in ast.walk(scope):
+    values: dict[tuple[tuple[str, str], str], set[str]] = {}
+    passed: set[tuple[tuple[str, str], str]] = set()  # (fn key, parameter) a surface call passes
+    trees = [(tree, False) for _, tree in package] + [(tree, True) for tree in surface]
+    for tree, on_surface in trees:
+        aliases, external = _imports(tree)
+        for call, bound in _scoped(tree):
             if not isinstance(call, ast.Call):
                 continue
             func = call.func
-            if isinstance(func, ast.Name):
+            if isinstance(func, ast.Name) and func.id not in bound:
                 name = aliases.get(func.id, func.id)
             elif isinstance(func, ast.Attribute) and _root(func) not in external:
                 name = func.attr
             else:
                 continue
             for fn in by_name.get(name, ()):
-                for i, arg in enumerate(call.args):
-                    slots = fn.slots[i:] if isinstance(arg, ast.Starred) else fn.slots[i : i + 1]
-                    set_ |= {(fn.key, p) for p in slots}
-                for kw in call.keywords:
-                    if kw.arg is not None:
-                        passed.setdefault(fn.key, set()).add(kw.arg)
-                    elif caller and caller.kwarg and getattr(kw.value, "id", None) == caller.kwarg:
-                        forwards.setdefault(caller.key, []).append(fn)
-                    else:  # an opaque ** mapping may set anything
-                        set_ |= {(fn.key, p) for p in fn.named}
-
-    fns = {fn.key: fn for cands in by_name.values() for fn in cands}
-    changed = True
-    while changed:  # keywords a **kwargs function does not name flow on to its callees
-        changed = False
-        for key, callees in forwards.items():
-            extra = passed.get(key, set()) - fns[key].named
-            for fn in callees:
-                got = passed.setdefault(fn.key, set())
-                if not extra <= got:
-                    got |= extra
-                    changed = True
-    set_ |= {(key, p) for key, kws in passed.items() for p in kws}
-    return {(*fn.key, p) for fn in fns.values() for p in fn.checked if (fn.key, p) not in set_}
+                given = fn.given(call)
+                for p in fn.params:
+                    values.setdefault((fn.key, p), set()).add(given.get(p, fn.defaults.get(p, VARIES)))
+                if on_surface:
+                    passed |= {(fn.key, p) for p in given}
+    return {
+        (*key, p)
+        for (key, p), vals in values.items()
+        if len(vals) == 1 and VARIES not in vals and (key, p) not in passed
+    }
 
 
 def test_every_package_definition_is_reached_from_the_surface():
-    unreached = unreached_definitions()
+    unreached = unreached_definitions(package_modules(), surface_modules())
     dead = sorted(unreached - set(ALLOWED_UNREACHED))
     assert not dead, f"package definitions no query, bench.py or perfbench reaches: {dead}"
     stale = sorted(set(ALLOWED_UNREACHED) - unreached)
     assert not stale, f"allowlisted definitions that are now reached (drop them from the list): {stale}"
 
 
-def test_every_defaulted_parameter_is_set_from_the_surface():
-    unset = unset_parameters()
-    options = sorted(unset - set(ALLOWED_UNSET))
-    assert not options, (
-        f"{len(options)} defaulted parameters no query, bench.py or perfbench call sets "
-        f"(inline the value, or make it a module constant tests patch): {options}"
+def test_every_parameter_takes_more_than_one_value():
+    fixed = single_valued_parameters(package_modules(), surface_modules())
+    constants = sorted(fixed - set(ALLOWED_UNSET))
+    assert not constants, (
+        f"{len(constants)} parameters every call gives one literal and no query, bench.py or "
+        f"perfbench call passes (inline the value, or make it a module constant tests patch): {constants}"
     )
-    stale = sorted(set(ALLOWED_UNSET) - unset)
-    assert not stale, f"allowlisted parameters that are now set (drop them from the list): {stale}"
+    stale = sorted(set(ALLOWED_UNSET) - fixed)
+    assert not stale, f"allowlisted parameters that now take other values (drop them from the list): {stale}"
+
+
+def _scan(package_src: str, surface_src: str = "") -> set[tuple[str, str, str]]:
+    return single_valued_parameters([("m.py", ast.parse(package_src))], [ast.parse(surface_src)])
+
+
+def test_a_default_passed_as_itself_is_flagged():
+    src = "def f(x, n=3):\n    return x * n\n\ndef g(y):\n    return f(y, n=3) + f(y)\n"
+    assert ("m.py", "f", "n") in _scan(src)
+
+
+def test_a_required_parameter_given_one_literal_is_flagged():
+    src = "def f(x, mode):\n    return x, mode\n\ndef g(y):\n    return f(y, 'complete'), f(-y, 'complete')\n"
+    assert _scan(src) == {("m.py", "f", "mode")}
+
+
+def test_a_parameter_the_surface_passes_is_not_flagged():
+    src = "def f(x, k=4):\n    return x[:k]\n\ndef g(y):\n    return f(y)\n"
+    assert ("m.py", "f", "k") in _scan(src)
+    assert ("m.py", "f", "k") not in _scan(src, "from m import f\nf([1], 4)\n")
+
+
+def test_a_call_through_a_local_name_is_not_the_package_function():
+    src = "def f(x, k=4):\n    return x[:k]\n\ndef g(f, y):\n    return f(y, k=y)\n\ndef h(y):\n    return f(y)\n"
+    assert ("m.py", "f", "k") in _scan(src)
+
+
+def test_a_dead_definition_sharing_a_local_name_is_unreached():
+    src = (
+        "def dim(name):\n    return name\n\n"
+        "def width(vecs, dim=64):\n    return [v[:dim] for v in vecs]\n\n"
+        "def rows(vecs):\n    dim = len(vecs)\n    return dim\n\n"
+        "_zip = None\n\ndef ship():\n    global _zip\n    _zip = 'pkg.zip'\n"
+    )
+    surface = "from m import width, rows, ship\nwidth([], 3)\nrows([])\nship()\n"
+    assert unreached_definitions([("m.py", ast.parse(src))], [ast.parse(surface)]) == {("m.py", "dim")}

@@ -85,7 +85,7 @@ def test_partition_pruning(spark):
     assert got == expected > 0
 
 
-def test_ivf_plan_size_independent_of_k(spark):
+def test_ivf_plan_size_independent_of_k(spark, monkeypatch):
     """The IVF centroid set is DATA (one-row broadcast relation), not
     plan literals: the physical plan must not grow with k, and k=1024
     must execute without codegen fallback (a literal-per-centroid plan
@@ -98,15 +98,18 @@ def test_ivf_plan_size_independent_of_k(spark):
     queries = emb.where(F.col("vec_id") % 50 == 0)
     rng = np.random.default_rng(7)
     plans = {}
+    monkeypatch.setattr(S, "IVF_TOP_K", 5)
+    monkeypatch.setattr(S, "IVF_NPROBE", 2)
     for k in (16, 1024):
         centroids = rng.standard_normal((k, 64))
-        plans[k] = formatted_plan(S.ivf_topk(queries, emb, centroids, k=5, nprobe=2))
+        plans[k] = formatted_plan(S.ivf_topk(queries, emb, centroids))
     assert "Broadcast" in plans[1024]
     # plan text may differ by a few bytes (ids), but must not scale with k
     assert len(plans[1024]) < 2 * len(plans[16]), (len(plans[16]), len(plans[1024]))
     # and the k=1024 query actually runs end to end
     centroids = rng.standard_normal((1024, 64))
-    out = S.ivf_topk(queries, emb, centroids, k=5, nprobe=8).collect()
+    monkeypatch.setattr(S, "IVF_NPROBE", 8)
+    out = S.ivf_topk(queries, emb, centroids).collect()
     assert len(out) > 0
 
 
@@ -125,7 +128,9 @@ def test_ivf_stored_index_partition_pruned_probe(spark, monkeypatch):
     path = os.path.join(SCRATCH, "ivf_index")
     S.write_ivf_index(emb, centroids, path)
 
-    stored = S.ivf_topk_stored(spark, queries, path, centroids, k=5, nprobe=3)
+    monkeypatch.setattr(S, "IVF_TOP_K", 5)
+    monkeypatch.setattr(S, "IVF_NPROBE", 3)
+    stored = S.ivf_topk_stored(spark, queries, path, centroids, nprobe=3)
     plan = formatted_plan(stored)
     scan_section = plan[plan.index("Scan parquet") :] if "Scan parquet" in plan else plan
     assert "PartitionFilters" in scan_section and "bucket" in scan_section, plan
@@ -143,7 +148,7 @@ def test_ivf_stored_index_partition_pruned_probe(spark, monkeypatch):
 
     assert batch_stages(plan) == 1, plan
 
-    inflight = S.ivf_topk(queries, emb, centroids, k=5, nprobe=3)
+    inflight = S.ivf_topk(queries, emb, centroids)
     assert batch_stages(formatted_plan(inflight)) == 2
     assert sorted(map(tuple, stored.collect())) == sorted(map(tuple, inflight.collect()))
 
@@ -176,8 +181,10 @@ def test_ivf_scaled_k_and_numpy_assignment(spark, monkeypatch):
     path = os.path.join(SCRATCH, "ivf_index_np")
     S.write_ivf_index(emb, centroids, path)
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    a = sorted(map(tuple, S.ivf_topk_stored(spark, queries, path, centroids, k=5, nprobe=6).collect()))
-    b = sorted(map(tuple, S.ivf_topk(queries, emb, centroids, k=5, nprobe=6).collect()))
+    monkeypatch.setattr(S, "IVF_TOP_K", 5)
+    monkeypatch.setattr(S, "IVF_NPROBE", 6)
+    a = sorted(map(tuple, S.ivf_topk_stored(spark, queries, path, centroids, nprobe=6).collect()))
+    b = sorted(map(tuple, S.ivf_topk(queries, emb, centroids).collect()))
     assert a == b and a
 
 

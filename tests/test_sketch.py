@@ -23,15 +23,26 @@ def _keyed(spark):
     )
 
 
+def _word_counts(df):
+    """``(word, exact)``: the pre-aggregated rows a count-min sketch is
+    built from, one per distinct key."""
+    return df.groupBy(F.col("key").alias("word")).agg(F.count(F.lit(1)).alias("exact"))
+
+
+def _counters(df, depth, width):
+    """The counter rows of the count-min table (the row sums dropped)."""
+    return sk.count_min_counters(_word_counts(df), depth, width).where(F.col("slot").isNotNull())
+
+
 def test_count_min_never_underestimates_and_tightens_with_width(spark):
     df = _keyed(spark)
-    exact = df.groupBy("key").agg(F.count(F.lit(1)).alias("exact"))
+    exact = _word_counts(df)
 
     def errors(width):
-        counters = sk.count_min_counters(df, "key", depth=4, width=width)
-        est = sk.count_min_estimates(counters, exact.select("key"), "key", 4, width)
+        counters = _counters(df, 4, width)
+        est = sk.count_min_estimates(counters, exact.select("word"), 4, width)
         row = (
-            exact.join(est, "key")
+            exact.join(est, "word")
             .agg(
                 F.min(F.col("cms_est") - F.col("exact")).alias("lo"),
                 F.max(F.col("cms_est") - F.col("exact")).alias("hi"),
@@ -51,23 +62,26 @@ def test_count_min_never_underestimates_and_tightens_with_width(spark):
 def test_count_min_counter_table_bounded(spark):
     df = _keyed(spark)
     depth, width = 4, 64
-    counters = sk.count_min_counters(df, "key", depth, width)
+    table = sk.count_min_counters(_word_counts(df), depth, width)
+    counters = table.where(F.col("slot").isNotNull())
     assert counters.count() <= depth * width
-    # total mass per depth row equals the input row count (nothing lost)
+    # total mass per depth row equals the input row count (nothing lost),
+    # and so does each depth's row sum
     n = df.count()
     per_depth = counters.groupBy("d").agg(F.sum("cnt").alias("mass")).collect()
     assert len(per_depth) == depth and all(r.mass == n for r in per_depth)
+    assert sorted(r.cnt for r in table.where(F.col("slot").isNull()).collect()) == [n] * depth
 
 
 def test_bloom_no_false_negatives_and_low_fp(spark):
     df = _keyed(spark)
     members = df.distinct()
-    positions = sk.bloom_build(members, "key", num_bits=1 << 16, num_hashes=4)
-    probed = sk.bloom_probe(positions, members, "key", num_bits=1 << 16, num_hashes=4)
+    positions = sk.bloom_build(members, num_bits=1 << 16, num_hashes=4)
+    probed = sk.bloom_probe(positions, members, num_bits=1 << 16, num_hashes=4)
     assert probed.where(~F.col("might_contain")).count() == 0  # provable
 
     negatives = members.select((F.col("key") + 10_000_000).alias("key"))
-    neg = sk.bloom_probe(positions, negatives, "key", num_bits=1 << 16, num_hashes=4)
+    neg = sk.bloom_probe(positions, negatives, num_bits=1 << 16, num_hashes=4)
     fp = neg.where(F.col("might_contain")).count()
     n_neg = negatives.count()
     # expected fp rate at m=65536, k=4, n=200 keys is ~1e-11; 1% is a
@@ -80,9 +94,9 @@ def test_bloom_saturates_when_undersized(spark):
     present — sanity that the probe logic is not trivially rejecting."""
     df = _keyed(spark)
     members = df.distinct()
-    positions = sk.bloom_build(members, "key", num_bits=16, num_hashes=4)
+    positions = sk.bloom_build(members, num_bits=16, num_hashes=4)
     negatives = members.select((F.col("key") + 10_000_000).alias("key"))
-    neg = sk.bloom_probe(positions, negatives, "key", num_bits=16, num_hashes=4)
+    neg = sk.bloom_probe(positions, negatives, num_bits=16, num_hashes=4)
     assert neg.where(F.col("might_contain")).count() > 0
 
 
@@ -90,11 +104,11 @@ def test_sketch_probe_plans_broadcast(spark):
     """Counter and position tables are bounded-size; the probe joins must
     broadcast them, never shuffle the probe side against them."""
     df = _keyed(spark)
-    counters = sk.count_min_counters(df, "key", 4, 64)
-    est = sk.count_min_estimates(counters, df.distinct(), "key", 4, 64)
+    counters = _counters(df, 4, 64)
+    est = sk.count_min_estimates(counters, df.distinct().withColumnRenamed("key", "word"), 4, 64)
     assert "BroadcastHashJoin" in formatted_plan(est)
-    positions = sk.bloom_build(df.distinct(), "key", 1 << 12, 4)
-    probed = sk.bloom_probe(positions, df.distinct(), "key", 1 << 12, 4)
+    positions = sk.bloom_build(df.distinct(), 1 << 12, 4)
+    probed = sk.bloom_probe(positions, df.distinct(), 1 << 12, 4)
     assert "BroadcastHashJoin" in formatted_plan(probed)
 
 
@@ -122,11 +136,11 @@ def test_operators_tolerate_empty_inputs(spark):
 
     empty_keys = spark.createDataFrame([], "key long")
     keys = spark.createDataFrame([(i,) for i in range(10)], "key long")
-    counters = sk.count_min_counters(empty_keys, "key", 2, 16)
+    counters = sk.count_min_counters(spark.createDataFrame([], "word long, exact long"), 2, 16)
     assert counters.count() == 0
-    est = sk.count_min_estimates(counters, keys, "key", 2, 16)
+    est = sk.count_min_estimates(counters, keys.withColumnRenamed("key", "word"), 2, 16)
     assert est.count() == 10  # every probe estimates 0 against an empty sketch
     assert est.agg(F.max("cms_est")).collect()[0][0] == 0
-    pos = sk.bloom_build(empty_keys, "key", 64, 2)
-    probed = sk.bloom_probe(pos, keys, "key", 64, 2)
+    pos = sk.bloom_build(empty_keys, 64, 2)
+    probed = sk.bloom_probe(pos, keys, 64, 2)
     assert probed.where(F.col("might_contain")).count() == 0

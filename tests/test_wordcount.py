@@ -46,15 +46,16 @@ def test_punctuation_retained(spark):
 
 def test_reference_parity_drops_non_az_initial(spark):
     df = spark.createDataFrame([("apple Apple 42nd !bang zebra",)], "text string")
-    got = {r.word for r in wc.word_count_top_k(df, k=100, reference_parity=True).collect()}
+    got = {r.word for r in wc.word_count_top_k(df, reference_parity=True).collect()}
     # uppercase/digit/punct-initial words dropped (master.cc:312-313, slave.cc:149-157)
     assert got == {"apple", "zebra"}
 
 
-def test_top_k_keeps_ties(spark):
+def test_top_k_keeps_ties(spark, monkeypatch):
     # the reference collides equal counts (master.cc:431); we keep both
     df = spark.createDataFrame([("x x y y z",)], "text string")
-    top2 = wc.word_count_top_k(df, k=2).collect()
+    monkeypatch.setattr(wc, "TOP_K", 2)
+    top2 = wc.word_count_top_k(df).collect()
     assert [(r.word, r.cnt) for r in top2] == [("x", 2), ("y", 2)]
 
 
