@@ -9,8 +9,7 @@ The package is organized Spark-first:
 - ``operators`` — the engine surface: word-count parity ops, relational
   coverage, dedup, similarity search, text analysis, multimodal plumbing.
 - ``functions`` — reusable column expression helpers (vector math, hashing).
-- ``plans``     — the measured-crossover cost seam, scan sizing and
-  spread, and salted aggregation.
+- ``plans``     — scan sizing and spread, and salted aggregation.
 - ``streaming`` — Structured Streaming operators over the events table.
 """
 

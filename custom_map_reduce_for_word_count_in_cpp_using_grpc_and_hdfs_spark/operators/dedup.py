@@ -370,10 +370,10 @@ def minhash_near_dups(df: DataFrame, threshold: float = 0.7, shingles: DataFrame
 # Dedup clusters (connected components over near-dup pairs)
 # --------------------------------------------------------------------------
 
-#: Cost crossover for the driver-local components route (round 13, a
-#: decision on the plans/cost.py seam): edge lists at or below
-#: this count are collected (Arrow path) and labeled with a vectorized
-#: numpy pointer-jumping union-find on the driver; larger ones take the
+#: Cost crossover for the driver-local components route (round 13):
+#: edge lists at or below this count are collected (Arrow path) and
+#: labeled with a vectorized numpy pointer-jumping union-find on the
+#: driver; larger ones take the
 #: distributed hash-min loop. Rationale: the loop's cost floor is its
 #: SEQUENTIAL job structure — seed + 3 materializing jobs + (2
 #: localCheckpoints + 1 count) per round — which is latency-bound until
@@ -468,9 +468,9 @@ def connected_components(
     """(id, component) — connected components; component = min vertex id
     in the component.
 
-    Two routes, chosen on the plans/cost.py seam (round 13): the
-    DRIVER-LOCAL path — Arrow-collect the materialized edge list, label
-    it with a vectorized numpy union-find, parallelize the label
+    Two routes (round 13): the DRIVER-LOCAL path — Arrow-collect the
+    materialized edge list, label it with a vectorized numpy union-find,
+    parallelize the label
     relation back — whenever the edge count is at most
     CC_DRIVER_LOCAL_MAX_EDGES (read at call time, so tests force the
     loop by lowering it), the endpoint types are integral, and no
@@ -541,20 +541,17 @@ def connected_components(
     # and the loop's per-round re-reads scan the same materialized bytes.
     pairs = materialize(edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")))
 
-    # Round-13 driver-local route (a plans/cost.py decision):
-    # the loop's floor is ~6+ SEQUENTIAL jobs (seed + per-round
-    # checkpoints + convergence counts) — pure latency for edge lists
-    # that fit one Arrow collect. Decide on the materialized pair
-    # count (one cheap job over the checkpointed blocks — the same
-    # measure-then-route shape as the edge and ANN seams); label
-    # on the driver with the vectorized numpy union-find, parallelize
+    # Round-13 driver-local route: the loop's floor is ~6+ SEQUENTIAL
+    # jobs (seed + per-round checkpoints + convergence counts) — pure
+    # latency for edge lists that fit one Arrow collect. Decide on the
+    # materialized pair count (one cheap job over the checkpointed
+    # blocks); label on the driver with the vectorized numpy
+    # union-find, parallelize
     # the (small) label relation back, and keep the vertex frame fully
     # distributed — only edge ENDPOINT PAIRS ever reach the driver,
     # bounded by CC_DRIVER_LOCAL_MAX_EDGES (32 MB of longs at the cap).
     # Integral id types only: numpy ordering == Spark ordering is
     # guaranteed there; anything else takes the loop.
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
-
     dtypes = dict(pairs.dtypes)
     labels = None
     integral = dtypes["a"] == dtypes["b"] and dtypes["a"] in ("bigint", "int", "smallint", "tinyint")
@@ -575,16 +572,14 @@ def connected_components(
                 "int64 domain)",
                 n_nulls,
             )
-        elif decide_crossover(
-            n_edges,
-            CC_DRIVER_LOCAL_MAX_EDGES,
-            "loop",
-            "driver_local",
-            "materialized edge count",
-            logger=_CC_LOG,
-            detail=f"driver-local cap {CC_DRIVER_LOCAL_MAX_EDGES} edges",
-        ).choice == "driver_local":
-            labels = _driver_local_labels(pairs, dtypes["a"])
+        else:
+            route = "loop" if n_edges > CC_DRIVER_LOCAL_MAX_EDGES else "driver_local"
+            _CC_LOG.info(
+                "connected_components: materialized edge count %d vs driver-local cap %d -> %r",
+                n_edges, CC_DRIVER_LOCAL_MAX_EDGES, route,
+            )
+            if route == "driver_local":
+                labels = _driver_local_labels(pairs, dtypes["a"])
 
     all_labels = vertices.select(F.col(id_col).alias("vid"), F.col(id_col).alias("comp"))
     if labels is None:
@@ -690,8 +685,7 @@ def near_dup_components(
       0.9999+ at sf10/sf100, >=0.8 asserted in tests). The at-scale
       route: edge-stage A/B at sf10 40.8 s vs exact 50.8 s (a wash
       within host noise), at sf100 231.6 s vs 704.3 s — 0.33x, the
-      decisive third-decade win (.scratch/r9, queries/pipeline_q.py's
-      EDGE_AUTO_CROSSOVER_POSTINGS pins the auto switch).
+      decisive third-decade win (.scratch/r9).
 
     Both routes accept a caller-shared ``shingles`` frame (see
     :func:`jaccard_pairs`).

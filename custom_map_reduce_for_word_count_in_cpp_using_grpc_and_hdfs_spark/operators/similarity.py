@@ -13,7 +13,7 @@ Three paths, one output shape (query_id, neighbor_id, rank):
   touching ~1/2^width of the corpus per band.
 - **IVF (k-means buckets)** — each query probes its ``nprobe`` nearest
   centroid buckets and rescores exactly within them; the corpus is
-  bucketed in flight, or once at write time into a partitioned index.
+  bucketed in flight.
 
 Every vector step that is not the exact rescore — hyperplane signing,
 k-means training, nearest-centroid assignment and probe selection — is
@@ -41,7 +41,9 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.par
 #: definition (same planes at write and query time).
 LSH_SEED = 20240813
 
-#: Lloyd iterations of :func:`ivf_centroids_np`, read at call time.
+#: Centroid count and Lloyd iterations of :func:`ivf_centroids_np`,
+#: read at call time.
+IVF_CENTROIDS = 16
 IVF_ITERS = 6
 
 #: Measured cached-bytes-per-source-byte ceiling for the exploded banded
@@ -296,27 +298,6 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
 IVF_SEED = 7_2024
 
 
-def ivf_k_for(n_vectors: int) -> int:
-    """Centroid count for a corpus of ``n_vectors``: √N rounded to the
-    nearest power of two, clamped to [16, 4096].
-
-    A FIXED k is the quiet scale bug the round-11 decade run measured:
-    at 16 centroids, nprobe=10 probes 62% of the corpus, so query cost
-    tracks the corpus linearly (sf10→sf100 IVF ratio 10.8× on 10×
-    vectors). √N keeps the per-bucket size AND the probe fan-out both
-    growing as √N — the classic IVF balance point: probed fraction
-    nprobe/k falls as the corpus grows while each probed bucket stays
-    √N-sized. 4096 caps the (broadcast) centroid payload and the
-    write-time assignment cost; past that, a real deployment shards the
-    index (IVF-PQ / multi-level), which is beyond this engine's seam."""
-    import math
-
-    if n_vectors <= 0:
-        raise ValueError("n_vectors must be positive")
-    k = 2 ** round(math.log2(max(math.sqrt(n_vectors), 1)))
-    return max(16, min(4096, int(k)))
-
-
 def _sq_l2(M: np.ndarray, C: np.ndarray) -> np.ndarray:
     """(n, k) squared L2 distances from the rows of ``M`` to the
     centroids ``C``, as |M|² − 2·M·Cᵀ + |C|² — one BLAS matmul. The one
@@ -345,10 +326,10 @@ def _ddl(df: DataFrame) -> str:
     return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
 
 
-def ivf_centroids_np(corpus: DataFrame, k: int) -> np.ndarray:
+def ivf_centroids_np(corpus: DataFrame) -> np.ndarray:
     """Sampled driver-side k-means: a hash-ordered sample of ``32 × k``
-    vectors collected once (k-bounded), seeded-RNG initial centroids,
-    then :data:`IVF_ITERS` Lloyd iterations as
+    vectors (k = :data:`IVF_CENTROIDS`) collected once, seeded-RNG
+    initial centroids, then :data:`IVF_ITERS` Lloyd iterations as
     numpy matmuls on the driver. Deterministic run to run; fewer sampled
     vectors than ``k`` shrink k rather than fail.
 
@@ -363,6 +344,7 @@ def ivf_centroids_np(corpus: DataFrame, k: int) -> np.ndarray:
     loop paid 4.4-5.7 s in per-iteration jobs.
     Assignment of the full corpus runs on executors
     (:func:`assign_buckets_np`)."""
+    k = IVF_CENTROIDS
     sample = (
         corpus.select("embedding")
         .orderBy(F.xxhash64(F.col("vec_id")).asc(), F.col("vec_id").asc())
@@ -384,16 +366,16 @@ def ivf_centroids_np(corpus: DataFrame, k: int) -> np.ndarray:
     return C
 
 
-def assign_buckets_np(df: DataFrame, centroids: np.ndarray, vec_col: str = "embedding") -> DataFrame:
+def assign_buckets_np(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """``df`` plus each row's nearest-centroid bucket (int ``bucket``
-    column): an Arrow mapInPandas argmin over the centroid matrix, which
-    ships in the task closure (k×dim doubles, ≤2 MB at the k cap) — so
-    the plan stays O(1) in k and per-row cost is a BLAS matmul row."""
+    column) for its ``c_vec`` vector: an Arrow mapInPandas argmin over
+    the centroid matrix, which ships in the task closure (k×dim doubles)
+    — so the plan stays O(1) in k and per-row cost is a BLAS matmul row."""
     C = np.ascontiguousarray(centroids, dtype="float64")
 
     def assign(batches):
         for pdf in batches:
-            yield pdf.assign(bucket=_nearest(_matrix(pdf[vec_col]), C).astype("int32"))
+            yield pdf.assign(bucket=_nearest(_matrix(pdf["c_vec"]), C).astype("int32"))
 
     return df.mapInPandas(assign, f"{_ddl(df)}, bucket int")
 
@@ -423,15 +405,12 @@ IVF_NPROBE = 10
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, centroids: np.ndarray) -> DataFrame:
     """IVF top-:data:`IVF_TOP_K` search: corpus rows get their
-    nearest-centroid bucket in flight (:func:`assign_buckets_np` — at
-    scale the assignment happens at write time instead, see
-    :func:`write_ivf_index` / :func:`ivf_topk_stored`); each query probes
-    its :data:`IVF_NPROBE` nearest centroid buckets and rescores exactly
-    within them."""
+    nearest-centroid bucket in flight (:func:`assign_buckets_np`); each
+    query probes its :data:`IVF_NPROBE` nearest centroid buckets and
+    rescores exactly within them."""
     c_assigned = assign_buckets_np(
         spread(corpus, by=["vec_id"]).select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")),
         centroids,
-        "c_vec",
     )
     probed = _probe_buckets(queries, centroids, IVF_NPROBE)
     scored = (
@@ -441,223 +420,3 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, centroids: np.ndarray) -> Da
         .select("query_id", "neighbor_id", cosine("q_vec", "c_vec").alias("score"))
     )
     return _topk_by_score(scored, IVF_TOP_K)
-
-
-def write_ivf_index(corpus: DataFrame, centroids: np.ndarray, path: str) -> None:
-    """Materialize the IVF index: assign each corpus row's bucket ONCE at
-    write time (:func:`assign_buckets_np`) and store the corpus
-    hive-partitioned by bucket. At 100 TB this is the whole point of
-    IVF — the per-row assignment cost is paid once at ingest, and a
-    probe becomes a partition-pruned read of ``nprobe`` directories
-    instead of a full scan + assignment."""
-    assigned = assign_buckets_np(corpus, centroids, "embedding")
-    assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-#: Minimum expected vectors a stored-route probe should sweep. The
-#: round-12 crossover record (SCALE_R12_ANN_CROSSOVER.json) measured the
-#: quarter-of-centroids operating point UNDER the registry's 0.65 recall
-#: floor at 2k vectors (0.645: 10 of 32 buckets ≈ 625 vectors probed) and
-#: thin at 20k (0.710); from 200k up it clears comfortably (0.829+). At
-#: √N-sized buckets, sweeping ≥1500 vectors forces the probe fraction up
-#: exactly where recall binds (75% of buckets at 2k) and is a no-op from
-#: ~25k vectors on, where the quarter already sweeps more.
-IVF_MIN_PROBED_VECTORS = 1500
-
-
-def ivf_nprobe_for(n_centroids: int, n_vectors: int | None = None) -> int:
-    """Floor-aware stored-route probe count: the quarter-of-centroids
-    operating point (tools/ann_scale.py at e49ef4e), raised at small N so the probe
-    sweeps at least :data:`IVF_MIN_PROBED_VECTORS` expected vectors —
-    the regime where the round-12 crossover measured recall under the
-    0.65 floor (see SCALE_R12_ANN_CROSSOVER.json / SCALE_R13_ANN_FLOOR).
-    ``n_vectors`` defaults to ``n_centroids²`` (the :func:`ivf_k_for`
-    √N inverse) when the caller doesn't know the corpus size."""
-    import math
-
-    if n_vectors is None:
-        n_vectors = n_centroids * n_centroids
-    avg_bucket = max(1.0, n_vectors / max(1, n_centroids))
-    floor = math.ceil(IVF_MIN_PROBED_VECTORS / avg_bucket)
-    return max(10, n_centroids // 4, min(n_centroids, floor))
-
-
-def ivf_topk_stored(
-    spark,
-    queries: DataFrame,
-    index_path: str,
-    centroids: np.ndarray,
-    nprobe: int | None = None,
-) -> DataFrame:
-    """IVF top-:data:`IVF_TOP_K` search against a :func:`write_ivf_index`
-    layout. The probe
-    side broadcasts (bounded: |Q|·nprobe rows) and the equi-join on the
-    ``bucket`` partition column triggers DYNAMIC PARTITION PRUNING: the
-    scan's PartitionFilters carry ``dynamicpruningexpression(bucket IN
-    <broadcast result>)``, so only the probed bucket directories are
-    read and NO bucket assignment runs over index rows at query time —
-    the plan is scan(pruned) → broadcast-join → rescore (pinned in
-    tests/test_scale_layout.py). Round-5 change: the probe bucket list
-    never round-trips through the driver (the previous
-    ``.collect()``-into-``isin`` was bounded but serialized the bucket
-    ids through Python; DPP keeps the whole path on executors and
-    composes with reused broadcast exchanges).
-
-    ``nprobe=None`` (the default) resolves through
-    :func:`ivf_nprobe_for`, so direct callers cannot silently land
-    under the recall floor at small N; an explicit ``nprobe`` is an
-    audited override (bench probes, fraction sweeps)."""
-    if nprobe is None:
-        nprobe = ivf_nprobe_for(len(centroids))
-    probed = _probe_buckets(queries, centroids, nprobe)
-    index = spark.read.parquet(index_path)
-    scored = (
-        F.broadcast(probed)
-        .join(
-            index.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"), "bucket"),
-            "bucket",
-        )
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine("q_vec", "c_vec").alias("score"))
-    )
-    return _topk_by_score(scored, IVF_TOP_K)
-
-
-#: Live-vs-stored IVF crossover, in corpus vectors. It is pinned for
-#: RECALL, not speed: at the stored route's operating point (nprobe =
-#: k/4, the uniform-fixture fraction) the round-12 record
-#: (SCALE_R12_ANN_CROSSOVER.json) measured recall 0.645 at 2k vectors
-#: (UNDER the registry's 0.65 floor), 0.710 at 20k (thin), 0.829 at 200k
-#: and 0.896 at 2M — the sqrt-N geometry needs enough vectors per bucket
-#: for the probed quarter to carry the neighbors — while the live
-#: route's 10-of-16 probe fraction measures 0.940 on the sf0.01 fixture
-#: and 0.865 on sf0.1. The crossover sits where the stored
-#: route's recall margin is established (geometric middle of the thin
-#: 20k and the comfortable 200k points), keeping small corpora on the
-#: high-recall live route and large ones on the write-once index
-#: (8.5x/decade, SCALE_R11_ANN.json). The speed side of that record
-#: (stored ahead at every size) timed an in-plan Lloyd trainer that is
-#: gone; the live route now trains on the driver in a fraction of a
-#: second, so speed no longer argues against it at small N.
-IVF_AUTO_CROSSOVER_VECTORS = 60_000
-
-
-def corpus_fingerprint(corpus: DataFrame, n_vectors: int) -> int:
-    """Cheap, deterministic content fingerprint for index-reuse checks:
-    hash-sample ~64 rows (a fixed ``hash(id) % (N/64)`` predicate — no
-    randomness, no ordering assumptions), CRC-32 each sampled
-    ``(id, vector)`` pair, and sum (order-independent). One
-    column-pruned pass over the corpus — far cheaper than the k-means
-    train + full index rewrite it guards — and any in-place content
-    change at the same row count flips it with probability ~1 unless
-    the change dodges every sampled row AND every CRC."""
-    p = max(1, n_vectors // 64)
-    # cast before abs: abs(hash()) overflows int at Integer.MIN_VALUE,
-    # which ANSI mode (Spark 4 default) turns into a runtime error
-    sampled = corpus.where(F.pmod(F.abs(F.hash(F.col("vec_id")).cast("long")), F.lit(p)) == 0)
-    row = sampled.select(
-        F.sum(
-            F.crc32(
-                F.concat_ws(
-                    "|", F.col("vec_id").cast("string"), F.col("embedding").cast("string")
-                )
-            )
-        ).alias("fp")
-    ).collect()[0]
-    return int(row.fp or 0)
-
-
-def ensure_ivf_index(corpus: DataFrame, path: str, n_vectors: int) -> np.ndarray:
-    """Write-once IVF index with its centroids stored alongside: if
-    ``path`` already holds an index built for exactly ``n_vectors``
-    vectors, load and return the STORED centroids — probes must use the
-    same centroids the rows were assigned with, so centroids are part
-    of the index, not recomputed per query. Otherwise train √N
-    centroids (:func:`ivf_k_for` + :func:`ivf_centroids_np`), write the
-    hive-partitioned index (:func:`write_ivf_index`), and persist the
-    centroid relation as a ``_centroids`` parquet INSIDE the index dir
-    (leading underscore = hidden from the index read's partition
-    discovery, the _SUCCESS convention). Everything goes through Spark
-    writers/readers, so the layout works on any Hadoop filesystem.
-
-    Reuse contract: the check keys on the exact vector count AND a
-    sampled content fingerprint (:func:`corpus_fingerprint`, stored in
-    the sidecar) — a corpus regenerated in place at the same sf_dir
-    with the same count but different content no longer silently reuses
-    stale centroids/buckets; the mismatch triggers a rebuild. Sidecars
-    written before the fingerprint existed (no ``fingerprint`` column)
-    are treated as stale and rebuilt once."""
-    from pyspark.errors import AnalysisException
-
-    spark = corpus.sparkSession
-    cpath = path + "/_centroids"
-    fp = corpus_fingerprint(corpus, n_vectors)
-    try:
-        rows = spark.read.parquet(cpath).orderBy("bucket").collect()
-        if (
-            rows
-            and rows[0].n_vectors == n_vectors
-            and rows[0].asDict().get("fingerprint") == fp
-        ):
-            return np.array([r.cvec for r in rows], dtype="float64")
-    except AnalysisException:
-        pass  # no index yet — build below
-    k = ivf_k_for(n_vectors)
-    centroids = ivf_centroids_np(corpus, k=k)
-    write_ivf_index(corpus, centroids, path)
-    crows = [
-        (int(i), [float(x) for x in c], int(n_vectors), int(fp))
-        for i, c in enumerate(centroids)
-    ]
-    (
-        spark.createDataFrame(
-            crows, "bucket int, cvec array<double>, n_vectors long, fingerprint long"
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(cpath)
-    )
-    return centroids
-
-
-def auto_ivf_topk(queries: DataFrame, corpus: DataFrame, index_root: str):
-    """Cost-aware IVF top-10 — a measured-crossover default on the
-    shared ``plans/cost.py`` seam, like the near-dup edge route.
-    Measures the corpus size (:func:`row_count`: zero jobs on a bare
-    scan) and compares it with IVF_AUTO_CROSSOVER_VECTORS, read at call
-    time (tests force the stored route by lowering it):
-
-    - ``live`` (≤ crossover): 16 centroids from the sampled driver-side
-      trainer, in-flight bucket assignment, nprobe 10
-      (:func:`ivf_centroids_np` + :func:`ivf_topk`) — no storage
-      touched; right for one-shot small-corpus queries, where the
-      stored route's recall is under the floor and its parquet
-      write+read roundtrip dominates.
-    - ``stored`` (> crossover): √N centroids from the same trainer,
-      write-once hive-partitioned index, partition-pruned probes
-      (:func:`ensure_ivf_index` + :func:`ivf_topk_stored`) at the
-      floor-aware :func:`ivf_nprobe_for` — measured 8.5×/decade
-      (SCALE_R11_ANN.json).
-
-    Returns ``(topk_df, CostDecision)`` so callers and tests can audit
-    the route, same as the other cost-aware seams."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
-
-    n = row_count(corpus)
-    decision = decide_crossover(
-        float(n),
-        float(IVF_AUTO_CROSSOVER_VECTORS),
-        "stored",
-        "live",
-        "ivf corpus vectors",
-        detail=f"stored route: sqrt-N={ivf_k_for(n)} centroids at {index_root}",
-    )
-    if decision.choice == "live":
-        centroids = ivf_centroids_np(corpus, k=16)
-        return ivf_topk(queries, corpus, centroids), decision
-    centroids = ensure_ivf_index(corpus, index_root, n)
-    nprobe = ivf_nprobe_for(len(centroids), n)
-    return (
-        ivf_topk_stored(corpus.sparkSession, queries, index_root, centroids, nprobe=nprobe),
-        decision,
-    )

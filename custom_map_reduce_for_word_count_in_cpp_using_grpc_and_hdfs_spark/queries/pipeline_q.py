@@ -8,20 +8,18 @@ connected_components); this query proves the *composition* end-to-end
 against one DuckDB oracle that re-derives the same pipeline with
 recursive-CTE transitive closure for the clustering stage.
 
-Scale shape: one profile pass (explode→groupBy, map-side partials), one
-8-byte-key dedup shuffle, shingle-inverted-index candidate join (no
-all-pairs), then O(cluster-diameter) hash-min label-propagation rounds.
-No stage is quadratic in corpus size.
+Scale shape: one per-row quality map over the scan, one 8-byte-key
+dedup shuffle, a shingle-inverted-index candidate join with hot
+shingles capped out (no all-pairs), then connected components over the
+near-dup edges: one driver-local union-find while the edge list fits
+the driver cap (every driver SF), the distributed hash-min loop past
+it. No stage is quadratic in corpus size.
 """
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-_LOG = logging.getLogger(__name__)
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import dedup as D
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import sampling as S
@@ -47,64 +45,6 @@ MAX_PUNCT_RATIO = 0.10
 #: 20 ≈ 2× the sf0.1 p99.9 shingle df, so genuine near-dup shingles
 #: (df 2-3) are untouched.
 SHINGLE_DF_CAP = 20
-
-#: Cost-aware near-dup edge-route crossover (VERDICT r8 item 1), in
-#: estimated shingle POSTINGS = n_docs x avg distinct shingles/doc. The
-#: exact inverted-index route's self-join cost grows superlinearly in
-#: postings while the MinHash route is ~linear in docs with a fixed
-#: per-doc signature cost, so at some corpus size the routes cross.
-#: Measured fresh-session on the fixture corpus (~48-52 shingles/doc;
-#: .scratch/r9 — measured AFTER the round-9 connected_components fix
-#: that stopped the union-first shape evaluating the edge join twice,
-#: which had inflated the exact route's r7 numbers and produced the
-#: now-retired "minhash 0.55x at sf10" claim):
-#:   sf0.1 (5k docs, 0.26M postings): pipeline exact 6.9 s vs mh 19.4 s
-#:   sf1  (50k docs, 2.6M postings): pipeline exact 21.4 s vs mh 25.8 s
-#:   sf10 (500k docs, 26M postings): a wash — edge-only exact 50.8 s vs
-#:     mh 40.8 s, full pipeline exact 208.7 s vs mh 226.3 s (within the
-#:     1.1-1.3x host-noise band both ways)
-#:   sf100 (5M docs, 259M postings): edge-only exact 704.3 s vs mh
-#:     231.6 s — minhash 0.33x, the decisive third-decade win
-#: 30M pins the crossover just above the measured sf10 tie: every
-#: correctness-gate SF (sf0.01 driver gate through the sf10 sampled
-#: oracles) keeps the oracle-exact route, and corpora a decade bigger
-#: get the 3x-cheaper scale route. Semantics across the switch: MinHash
-#: edges are exact-Jaccard VERIFIED (precision 1 — the partition can
-#: only REFINE, never over-merge); LSH recall is measured 1.0 at
-#: sf0.01-sf1 and 0.9999+ above (sf10 raw-docs edge A/B: 25,598/25,600
-#: pairs; sf100: 255,984/256,000) — the documented LSH contract, with
-#: any miss surfacing as under-merged clusters, i.e. a hash MISMATCH in
-#: an oracle compare, never a silent over-delete.
-EDGE_AUTO_CROSSOVER_POSTINGS = 30_000_000
-#: Docs sampled (via limit — one scan batch, no full pass) for the avg
-#: shingles/doc estimate. The estimate only needs to land on the right
-#: side of a crossover two decades wide, so a small fixed sample is fine
-#: — 256 since round 10: the shingle transform is ~0.9 ms/row
-#: interpreted, so the 1000-doc sample cost 0.89 s per pipeline run at
-#: sf0.1 against a sampling error of ~±6% on a statistic compared to a
-#: 10x-wide crossover (measured avg 52 shingles/doc, std well under the
-#: mean; 0.36 s at 256).
-EDGE_AUTO_SAMPLE_DOCS = 256
-#: Safety margin for the count-only early exit in choose_edge_method
-#: (ADVICE r10): the "every doc yields ≥ 1 shingle" floor is false for
-#: docs shorter than n tokens, so n_docs alone decides only when it
-#: clears the crossover by this factor — a corpus where merely 1/4 of
-#: docs shingle at all still lands on the MinHash side. Between 1× and
-#: 4× the crossover, the sampled estimate runs and decides.
-EDGE_AUTO_COUNT_ONLY_MARGIN = 4
-#: Bytes-gate bound for the zero-job early exit at the SMALL end (round
-#: 13): postings = Σ_doc |distinct shingles| ≤ total tokens ≤ total
-#: chars ≤ parquet scan bytes × this expansion bound. Measured text
-#: expansion on the fixtures is ~2.6× (sf0.1: 584 KB parquet ≈ 1.5 MB
-#: of text); 32× is the same generous headroom discipline as
-#: operators/caching's expansion bounds. When scan bytes × bound stay
-#: under the crossover, the jaccard side is decided WITHOUT the count
-#: or the sampled shingle estimate — at the bench SFs that removes two
-#: driver actions (~0.3 s/run measured); a corpus big enough to cross
-#: always falls through to the measured path. A text column that
-#: out-compresses the bound could only mis-route toward the exact
-#: (oracle-identical) route — a perf risk at worst, never correctness.
-EDGE_AUTO_BYTES_EXPANSION_BOUND = 32
 
 _TOKS = T.tokens_sql("text")
 
@@ -181,109 +121,13 @@ def curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate(load_table(spark, sf_dir, "documents"))
 
 
-def _decide_edge_method(n_docs: int, avg_shingles: float) -> tuple[str, float]:
-    """Pure crossover decision (unit-testable at both ends): returns the
-    chosen route and the estimated posting count it was based on.
-    Delegates the compare-and-log to the shared plans/cost.py seam
-    (VERDICT r9 item 7)."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
-
-    est = n_docs * avg_shingles
-    d = decide_crossover(
-        est,
-        EDGE_AUTO_CROSSOVER_POSTINGS,
-        "minhash",
-        "jaccard",
-        "estimated shingle postings",
-        logger=_LOG,
-        detail=f"{n_docs} docs x {avg_shingles:.1f} shingles/doc",
-    )
-    return d.choice, est
-
-
-def choose_edge_method(docs: DataFrame) -> str:
-    """Measure the corpus and pick the near-dup edge route (see
-    EDGE_AUTO_CROSSOVER_POSTINGS for the measured crossover). Cost of
-    the measurement itself: one count (metadata-only on a parquet scan)
-    plus one limit-bounded sample aggregate — and the sample is skipped
-    entirely when the count alone decides (round 10, margin-guarded in
-    round 11): docs with fewer than 3 tokens yield 0 word 3-gram
-    shingles, so the avg ≥ 1 floor only holds corpus-wide when short
-    docs don't dominate.
-    The early exit therefore requires n_docs to clear the crossover by
-    EDGE_AUTO_COUNT_ONLY_MARGIN× — past that, even a corpus where only
-    1/margin of docs shingle at all still crosses, and at that scale the
-    sample's interpreted shingle transform is least welcome. Near the
-    threshold we fall through to the measured sample (ADVICE r10).
-
-    Round 13 adds the symmetric zero-job exit at the SMALL end: when the
-    scan's file bytes prove the posting estimate cannot reach the
-    crossover even at EDGE_AUTO_BYTES_EXPANSION_BOUND× text expansion
-    (postings ≤ chars ≤ bytes × bound), the jaccard side is decided from
-    metadata alone — the same file-bytes gating as caching.eager_stats
-    and the simhash geometry count. Unsizeable scans (remote schemes,
-    non-file sources) skip the gate and measure, as before.
-
-    Single-scan assumption (ADVICE r13): the bytes bound holds when
-    ``docs``'s rows come from the scanned files roughly once — a
-    row-multiplying frame over the same files (self-join, explode) or
-    text that out-compresses the 32× bound would under-count postings
-    and mis-route to the exact route. That failure is PERF-ONLY (the
-    exact side is oracle-identical) and bounded (the gate fires only
-    under crossover/bound ≈ 937 KB of scan bytes), so the gate stays a
-    bytes check rather than also proving the plan is a bare scan."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count, scan_file_sizes
-
-    sizes = scan_file_sizes(docs)
-    if sizes is not None and sum(sizes) * EDGE_AUTO_BYTES_EXPANSION_BOUND <= EDGE_AUTO_CROSSOVER_POSTINGS:
-        # the gate condition IS the below-crossover decision ('jaccard'
-        # unconditionally inside this branch), so one audit line carries
-        # all the evidence — the round-13 shape additionally ran
-        # decide_crossover, logging the same stat/crossover/detail twice
-        # per pipeline run (ADVICE r13)
-        bound = sum(sizes) * EDGE_AUTO_BYTES_EXPANSION_BOUND
-        _LOG.info(
-            "edge route auto-selected %r from scan bytes alone: %d bytes x %d "
-            "bound = %d posting upper bound vs crossover %d (zero decision jobs)",
-            "jaccard", sum(sizes), EDGE_AUTO_BYTES_EXPANSION_BOUND, bound,
-            EDGE_AUTO_CROSSOVER_POSTINGS,
-        )
-        return "jaccard"
-    n_docs = row_count(docs)
-    if n_docs > EDGE_AUTO_CROSSOVER_POSTINGS * EDGE_AUTO_COUNT_ONLY_MARGIN:
-        method, _ = _decide_edge_method(n_docs, 1.0)  # count alone decides
-        return method
-    avg = (
-        docs.limit(EDGE_AUTO_SAMPLE_DOCS)
-        .select(F.size(F.array_distinct(D.shingles_col("text", 3))).alias("k"))
-        .agg(F.avg("k"))
-        .first()[0]
-        or 0.0
-    )
-    method, est = _decide_edge_method(n_docs, avg)
-    _LOG.info(
-        "edge route auto-selected %r: %d docs x %.1f shingles/doc = %.0f "
-        "estimated postings vs crossover %d",
-        method, n_docs, avg, est, EDGE_AUTO_CROSSOVER_POSTINGS,
-    )
-    return method
-
-
 def curate(docs: DataFrame) -> DataFrame:
     """Pipeline over an arbitrary documents DataFrame (doc_id, text, lang)
     — the seam the pathological hot-shingle fixture test drives.
 
-    The near-dup edge source for the clustering stage is picked from
-    measured corpus stats by :func:`choose_edge_method` (round 9 —
-    VERDICT r8 item 1) against EDGE_AUTO_CROSSOVER_POSTINGS, read at
-    call time (tests force either side by patching it): below it, the
-    exact shingle-index join with the hot-shingle df cap — the
-    oracle-exact shape, where every SF with a hash-exact oracle lands;
-    above it, LSH-verified MinHash edges (the measured 0.33x edge route
-    at sf100) — identical output wherever LSH recall is 1.0 (this
-    corpus: measured 1.0 at sf0.01–sf1, asserted in
-    tests/test_pipeline.py; 0.9999+ at sf10/sf100), never over-merging
-    anywhere (verified edges ⇒ the partition refines the exact one).
+    The near-dup edges for the clustering stage come from the exact
+    shingle-index join with hot shingles (df > :data:`SHINGLE_DF_CAP`)
+    capped out of candidate generation — the shape the oracle states.
 
     The quality gate is computed PER ROW (quality_features/lang_id/
     fingerprint — one narrow map over the scan, no explode, no shuffle),
@@ -320,19 +164,9 @@ def curate(docs: DataFrame) -> DataFrame:
     # Exact dedup on the 8-byte normalized fingerprint; survivor = min id.
     exact_survivors = qual.groupBy("fp_normalized").agg(F.min("doc_id").alias("doc_id"))
     surv_docs = docs.join(exact_survivors.select("doc_id"), "doc_id", "left_semi")
-    # Near-dup clustering over the exact-dedup survivors. Exact route:
-    # hot shingles capped out of candidate generation (SHINGLE_DF_CAP);
-    # minhash route: the banded equi-join IS the skew bound (band width
-    # caps any key's collision mass), so no df cap applies.
-    # decide on the RAW input frame: its count is metadata-cheap for a
-    # parquet scan (survivors would force the gate+dedup stages an extra
-    # time) and upper-bounds the survivor count, so the switch can only
-    # trip EARLY — toward the route that wins at scale
-    if choose_edge_method(docs) == "jaccard":
-        edges = D.jaccard_pairs(surv_docs, JACCARD_T, max_shingle_df=SHINGLE_DF_CAP)
-    else:
-        edges = D.minhash_near_dups(surv_docs, JACCARD_T)
-    edges = edges.select("doc_a", "doc_b")
+    # Near-dup clustering over the exact-dedup survivors, hot shingles
+    # capped out of candidate generation (SHINGLE_DF_CAP)
+    edges = D.jaccard_pairs(surv_docs, JACCARD_T, max_shingle_df=SHINGLE_DF_CAP).select("doc_a", "doc_b")
     comps = D.connected_components(
         surv_docs.select("doc_id"), edges, id_col="doc_id", src_col="doc_a", dst_col="doc_b"
     )

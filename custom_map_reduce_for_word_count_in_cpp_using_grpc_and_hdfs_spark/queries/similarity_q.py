@@ -19,12 +19,12 @@ QUERY_PRED = "vec_id % 50 = 0"
 TOP_K = 10
 
 
-def _scratch_dir(sf_dir: str, kind: str) -> str:
-    """Repo-local staging root (binaryFile ingest fixture, stored IVF
-    index), keyed by the sf_dir's ABSOLUTE path (basename for
-    readability + an 8-hex path hash so two sf dirs sharing a basename
-    never collide — ADVICE r7; override the root with
-    $SPARK_GRAFT_SCRATCH, see ``session.scratch_root``)."""
+def _mm_ingest_dir(sf_dir: str) -> str:
+    """Repo-local staging root of the binaryFile ingest fixture, keyed by
+    the sf_dir's ABSOLUTE path (basename for readability + an 8-hex path
+    hash so two sf dirs sharing a basename never collide — ADVICE r7;
+    override the root with $SPARK_GRAFT_SCRATCH, see
+    ``session.scratch_root``)."""
     import hashlib
     import os
 
@@ -33,11 +33,7 @@ def _scratch_dir(sf_dir: str, kind: str) -> str:
     scratch = scratch_root()
     norm = os.path.normpath(os.path.abspath(sf_dir))
     tag = f"{os.path.basename(norm)}-{hashlib.sha1(norm.encode()).hexdigest()[:8]}"
-    return os.path.join(scratch, kind, tag)
-
-
-def _mm_ingest_dir(sf_dir: str) -> str:
-    return _scratch_dir(sf_dir, "mm_ingest")
+    return os.path.join(scratch, "mm_ingest", tag)
 
 
 @query(
@@ -116,27 +112,17 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_ANN_INVARIANT_ORACLE.format(k=TOP_K, flag="recall_ge_0_65", pred=QUERY_PRED),
 )
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF variant, COST-AWARE since round 12 (VERDICT r11 item 1):
-    routes through ``plans/cost.py`` like the edge-route seam —
-    below the measured corpus-size crossover the live route (k=16
-    centroids trained on a driver-side sample, in-flight assignment,
-    nprobe 10); above it the scale route (√N centroids from the same
-    trainer, write-once hive-partitioned index under the repo scratch
-    dir, partition-pruned probes at the floor-aware nprobe —
-    8.5×/decade measured, SCALE_R11_ANN.json). The route decision reads
-    the corpus size from parquet footers, so it launches no job.
+    """IVF variant: 16 centroids trained on a driver-side sample,
+    in-flight bucket assignment, nprobe 10
+    (:func:`operators.similarity.ivf_topk`).
 
     K-means bucket boundaries are float-order-sensitive, so as with the
     LSH path the driver row is the in-plan invariant: (n_queries, k,
     recall vs exact brute force ≥ 0.65) — margin under the ≥ 0.8
-    asserted in tests, and cleared by BOTH routes (the stored route's
-    uniform-fixture operating point measures ≈ 0.83)."""
+    asserted in tests."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.expr(QUERY_PRED))
-    approx, _decision = S.auto_ivf_topk(
-        queries, emb, index_root=_scratch_dir(sf_dir, "ivf_auto")
-    )
-    approx = approx.select("query_id", "neighbor_id")
+    approx = S.ivf_topk(queries, emb, S.ivf_centroids_np(emb)).select("query_id", "neighbor_id")
     exact = S.brute_force_topk(queries, emb, TOP_K).select("query_id", "neighbor_id")
     return _recall_invariant(approx, exact, queries, 0.65, "recall_ge_0_65")
 

@@ -126,7 +126,7 @@ def test_jaccard_shingle_df_cap_only_prunes_candidates(spark):
 def test_ann_ivf_recall(spark):
     emb = load_table(spark, SF_CORRECT, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    centroids = S.ivf_centroids_np(emb, k=16)
+    centroids = S.ivf_centroids_np(emb)
     brute = S.brute_force_topk(queries, emb, 10).collect()
     approx = S.ivf_topk(queries, emb, centroids).collect()
     bs, as_ = {}, {}
@@ -240,7 +240,7 @@ def test_ivf_short_corpus_guard(spark, monkeypatch):
     rows = [(i, [float(i), 1.0, 0.0, 0.0]) for i in range(5)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     monkeypatch.setattr(S, "IVF_ITERS", 1)
-    centroids = S.ivf_centroids_np(df, k=16)
+    centroids = S.ivf_centroids_np(df)
     assert 1 <= len(centroids) <= 5
     monkeypatch.setattr(S, "IVF_TOP_K", 2)
     monkeypatch.setattr(S, "IVF_NPROBE", 4)
@@ -353,8 +353,7 @@ def test_connected_components_long_chain_converges_logarithmically(spark, monkey
 
 
 def test_connected_components_route_seam(spark, monkeypatch, caplog):
-    """The round-13 driver-local route rides the plans/cost.py seam:
-    auto picks driver-local below the edge cap (audit line included),
+    """The round-13 driver-local route: auto picks driver-local below the edge cap (audit line included),
     the loop above it; null endpoints and non-integral ids always keep
     the loop."""
     import logging as _logging
@@ -644,138 +643,6 @@ def test_near_dup_components_minhash_refines_exact(spark):
 
     with _pytest.raises(ValueError, match="edge_method"):
         D.near_dup_components(docs, 0.3, "bogus")
-
-
-def test_auto_ivf_topk_routes_on_measured_crossover(spark, tmp_path, monkeypatch):
-    """Round 12 (VERDICT r11 item 1): the driver-gated IVF path is
-    cost-aware on the shared plans/cost.py seam. Both ends on the tiny
-    fixture by overriding the pinned crossover:
-
-    - corpus (500) <= crossover -> 'live': no index dir materializes,
-      result identical to the explicit live route;
-    - crossover forced under the corpus -> 'stored': the index dir
-      appears (hive bucket partitions + the _centroids sidecar), recall
-      still clears the registry floor, and a SECOND call reuses the
-      stored centroids (write-once: the bucket dirs' mtimes don't
-      change)."""
-    import os
-
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    idx = str(tmp_path / "ivf_auto_idx")
-
-    live_df, d = S.auto_ivf_topk(queries, emb, index_root=idx)
-    assert d.choice == "live" and d.stat == 500.0
-    assert not os.path.exists(idx), "live route must not touch storage"
-    expected = {
-        (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk(queries, emb, S.ivf_centroids_np(emb, k=16)).collect()
-    }
-    assert {(r.query_id, r.neighbor_id) for r in live_df.collect()} == expected
-
-    monkeypatch.setattr(S, "IVF_AUTO_CROSSOVER_VECTORS", 100)
-    stored_df, d = S.auto_ivf_topk(queries, emb, index_root=idx)
-    assert d.choice == "stored" and d.above
-    got = {}
-    for r in stored_df.collect():
-        got.setdefault(r.query_id, set()).add(r.neighbor_id)
-    assert os.path.exists(os.path.join(idx, "_centroids"))
-    buckets = [p for p in os.listdir(idx) if p.startswith("bucket=")]
-    assert buckets, "stored route must write the hive-partitioned index"
-    exact = {}
-    for r in S.brute_force_topk(queries, emb, 10).collect():
-        exact.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recalls = [len(exact[q] & got.get(q, set())) / len(exact[q]) for q in exact]
-    assert sum(recalls) / len(recalls) >= 0.65
-
-    # write-once: the second call loads the sidecar instead of rebuilding
-    stamp = {b: os.path.getmtime(os.path.join(idx, b)) for b in buckets}
-    again, d2 = S.auto_ivf_topk(queries, emb, index_root=idx)
-    assert d2.choice == "stored"
-    assert {(r.query_id, r.neighbor_id) for r in again.collect()} == {
-        (q, n) for q, ns in got.items() for n in ns
-    }
-    assert {b: os.path.getmtime(os.path.join(idx, b)) for b in buckets} == stamp
-
-
-def test_ivf_nprobe_floor_is_recall_aware():
-    """Round 13 (VERDICT r12 item 5): the stored route's default probe
-    count is floor-aware at small N. The quarter-of-centroids operating
-    point measured recall 0.645 < 0.65 at 2k vectors
-    (SCALE_R12_ANN_CROSSOVER.json); ivf_nprobe_for raises the probe
-    count until >= IVF_MIN_PROBED_VECTORS expected vectors are swept,
-    and is a no-op where the quarter already sweeps more."""
-    # 2k vectors -> 32 centroids, avg bucket 62.5: floor binds (24 > 8)
-    assert S.ivf_k_for(2000) == 32
-    assert S.ivf_nprobe_for(32, 2000) == 24
-    # without n_vectors the sqrt-N inverse (k^2=1024) is assumed — even
-    # more conservative: sweep everything rather than under-recall
-    assert S.ivf_nprobe_for(32) == 32
-    # 200k vectors -> 512 centroids: the quarter dominates, floor inert
-    assert S.ivf_k_for(200_000) == 512
-    assert S.ivf_nprobe_for(512, 200_000) == 128
-    # 2M -> 1024 centroids (sqrt clamp path): still the quarter
-    assert S.ivf_nprobe_for(S.ivf_k_for(2_000_000), 2_000_000) == S.ivf_k_for(2_000_000) // 4
-    # never exceeds the centroid count
-    assert S.ivf_nprobe_for(16, 100) == 16
-
-
-def test_stored_ivf_recall_clears_floor_at_2k(spark, tmp_path):
-    """The round-12 failing operating point, re-measured with the
-    floor-aware default: ivf_topk_stored called DIRECTLY (no auto gate)
-    on the 2k-vector sf0.1 embeddings with nprobe=None must clear the
-    registry's 0.65 recall floor — the exact regime
-    SCALE_R12_ANN_CROSSOVER.json measured at 0.645 under the old
-    quarter-point default."""
-    emb = load_table(spark, "/root/testdata/sf0.1", "embeddings")
-    n = emb.count()
-    assert n == 2000
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    exact = {}
-    for r in S.brute_force_topk(queries, emb, 10).collect():
-        exact.setdefault(r.query_id, set()).add(r.neighbor_id)
-
-    path = str(tmp_path / "ivf2k")
-    c = S.ivf_centroids_np(emb, k=S.ivf_k_for(n))
-    S.write_ivf_index(emb, c, path)
-    got = {}
-    for r in S.ivf_topk_stored(spark, queries, path, c).collect():
-        got.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recalls = [len(exact[q] & got.get(q, set())) / len(exact[q]) for q in exact]
-    recall = sum(recalls) / len(recalls)
-    assert recall >= 0.65, f"floor-aware stored recall {recall:.3f} under floor"
-
-
-def test_ivf_index_rebuilds_on_content_change(spark, tmp_path):
-    """ADVICE r12 item 1: ensure_ivf_index keyed reuse on vector count
-    alone, so a corpus regenerated in place (same count, different
-    content) silently reused stale centroids. The sidecar now carries a
-    sampled content fingerprint: same corpus -> reuse (sidecar mtime
-    unchanged); same-count content change -> fingerprint mismatch ->
-    rebuild."""
-    import os
-    import time
-
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    n = emb.count()
-    idx = str(tmp_path / "fp_idx")
-    c1 = S.ensure_ivf_index(emb, idx, n)
-    sidecar = os.path.join(idx, "_centroids")
-    stamp = os.path.getmtime(sidecar)
-
-    # unchanged corpus: reuse, no rewrite
-    time.sleep(0.05)
-    c2 = S.ensure_ivf_index(emb, idx, n)
-    assert (c1 == c2).all()
-    assert os.path.getmtime(sidecar) == stamp
-
-    # same count, different content: fingerprint flips, index rebuilds
-    mutated = emb.withColumn(
-        "embedding", F.transform(F.col("embedding"), lambda x: x + F.lit(10.0))
-    )
-    assert S.corpus_fingerprint(mutated, n) != S.corpus_fingerprint(emb, n)
-    S.ensure_ivf_index(mutated, idx, n)
-    assert os.path.getmtime(sidecar) > stamp, "content change must rebuild the index"
 
 
 # --------------------------------------------------------------------------

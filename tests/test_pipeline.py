@@ -274,200 +274,3 @@ def test_perrow_gate_bit_identical_to_profile_gate(spark):
         assert (r.punct_ratio is None) == (r.n_chars == 0)
         if r.punct_ratio is not None:
             assert r.punct_ratio == 0.0 and r.punct_ratio == r.punct_ratio  # not NaN
-
-
-def test_curate_minhash_edge_route_matches_exact(spark, monkeypatch):
-    """curate's MinHash edge route — the at-scale side (0.55x the exact
-    route at sf10, BASELINE §M), forced here by a zero posting
-    crossover — must produce the exact route's output wherever LSH
-    recall is 1.0, which it measurably (and deterministically) is on
-    this corpus."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import pipeline_q as PQ
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
-
-    docs = load_table(spark, SF_CORRECT, "documents")
-    assert PQ.choose_edge_method(docs) == "jaccard"
-    exact = {tuple(r) for r in PQ.curate(docs).collect()}
-    monkeypatch.setattr(PQ, "EDGE_AUTO_CROSSOVER_POSTINGS", 0)
-    assert PQ.choose_edge_method(docs) == "minhash"
-    mh = {tuple(r) for r in PQ.curate(docs).collect()}
-    assert exact, "pipeline should keep survivors at this SF"
-    assert mh == exact
-
-
-def test_edge_route_crossover_decision():
-    """VERDICT r8 item 1: the auto route's crossover decision, pinned at
-    BOTH ends with the measured corpus shapes (~48-52 shingles/doc).
-    Every SF with a hash-exact oracle (500 docs at sf0.01 through 500k
-    at sf10) stays on the exact jaccard side — at sf10 the routes are a
-    measured wash, so exact (the oracle shape) keeps the tie; the sf100
-    shape (5M docs, where minhash edges are the measured 0.33x route)
-    switches; the boundary itself is exclusive (est == crossover keeps
-    exact)."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q import (
-        EDGE_AUTO_CROSSOVER_POSTINGS,
-        _decide_edge_method,
-    )
-
-    for n_docs in (500, 5_000, 50_000, 500_000):  # sf0.01 / 0.1 / 1 / 10
-        method, est = _decide_edge_method(n_docs, 52.0)
-        assert method == "jaccard", (n_docs, est)
-    method, est = _decide_edge_method(5_000_000, 52.0)  # sf100
-    assert method == "minhash" and est == 260_000_000.0
-    # exclusive boundary + degenerate corpus stays exact
-    assert _decide_edge_method(EDGE_AUTO_CROSSOVER_POSTINGS, 1.0)[0] == "jaccard"
-    assert _decide_edge_method(EDGE_AUTO_CROSSOVER_POSTINGS + 1, 1.0)[0] == "minhash"
-    assert _decide_edge_method(0, 0.0)[0] == "jaccard"
-
-
-def test_curate_auto_selects_and_logs(spark, monkeypatch, caplog):
-    """curate() takes the cost-aware route: on the fixture corpus
-    (provably below the crossover from scan bytes alone — the round-13
-    zero-job exit) it logs the selection with its bytes evidence, picks
-    jaccard, and produces bit for bit the rows of the jaccard route
-    reached through the measured path (crossover lowered under the
-    bytes bound but above the sampled posting estimate) — so the
-    driver's hash gate sees the same rows the oracle states.
-    The measured (count + sample) path stays covered by
-    test_curate_auto_minhash_side_integration and
-    test_choose_edge_method_count_only_margin, whose monkeypatched
-    crossovers sit below the bytes bound."""
-    import logging as _logging
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import pipeline_q as PQ
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
-
-    docs = load_table(spark, SF_CORRECT, "documents")
-    with caplog.at_level(_logging.INFO, logger="custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q"):
-        assert PQ.choose_edge_method(docs) == "jaccard"
-    msgs = [r.getMessage() for r in caplog.records if "auto-selected" in r.getMessage()]
-    assert msgs and "'jaccard'" in msgs[0] and "scan bytes alone" in msgs[0]
-    auto = {tuple(r) for r in PQ.curate(docs).collect()}
-    monkeypatch.setattr(PQ, "EDGE_AUTO_CROSSOVER_POSTINGS", 100_000)
-    caplog.clear()
-    with caplog.at_level(_logging.INFO, logger="custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q"):
-        assert PQ.choose_edge_method(docs) == "jaccard"
-    assert not any("scan bytes alone" in r.getMessage() for r in caplog.records)
-    exact = {tuple(r) for r in PQ.curate(docs).collect()}
-    assert auto == exact and auto
-
-
-def test_curate_auto_minhash_side_integration(spark, monkeypatch, caplog):
-    """The auto route's ABOVE-crossover side, integration-tested at
-    fixture scale: with the crossover lowered beneath this corpus's
-    posting count, auto must select (and log) 'minhash' and still
-    produce the exact route's output — the recall-1.0 regime every
-    measured SF of this corpus is in."""
-    import logging as _logging
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import pipeline_q as PQ
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
-
-    docs = load_table(spark, SF_CORRECT, "documents")
-    exact = {tuple(r) for r in PQ.curate(docs).collect()}  # default crossover: jaccard
-    monkeypatch.setattr(PQ, "EDGE_AUTO_CROSSOVER_POSTINGS", 1_000)
-    caplog.clear()
-    with caplog.at_level(_logging.INFO, logger="custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q"):
-        auto = {tuple(r) for r in PQ.curate(docs).collect()}
-    msgs = [r.getMessage() for r in caplog.records if "auto-selected" in r.getMessage()]
-    assert msgs and "'minhash'" in msgs[0]
-    assert auto == exact and auto
-
-
-def test_choose_edge_method_count_only_margin(spark, monkeypatch, caplog):
-    """The count-only early exit (round 10) is margin-guarded (ADVICE
-    r10): docs shorter than n tokens yield ZERO shingles, so n_docs
-    alone may only decide when it clears the crossover by
-    EDGE_AUTO_COUNT_ONLY_MARGIN x. Three regimes on the 500-doc fixture
-    corpus, crossover monkeypatched around it:
-
-    - far above (crossover 100, margin x4 => exit needs > 400): the
-      count alone picks minhash WITHOUT running the sample aggregate —
-      the logged evidence shows the avg = 1.0 floor, not a measurement;
-    - near the threshold (crossover 200 => exit needs > 800, but
-      est 500 x 52 >> 200): falls through to the SAMPLE, whose measured
-      avg (~52, not 1.0) appears in the evidence and picks minhash —
-      this is exactly the short-doc-corpus regime where the floor could
-      mis-route;
-    - a short-doc corpus near the threshold routes by its true
-      (near-zero) shingle count: 500 one-token docs, crossover 400 —
-      count-only would have said minhash; the sample measures avg 0.0
-      and correctly keeps the exact route."""
-    import logging as _logging
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import pipeline_q as PQ
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
-
-    docs = load_table(spark, SF_CORRECT, "documents")
-
-    def route_and_evidence(frame, crossover):
-        monkeypatch.setattr(PQ, "EDGE_AUTO_CROSSOVER_POSTINGS", crossover)
-        caplog.clear()
-        with caplog.at_level(_logging.INFO, logger="custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q"):
-            method = PQ.choose_edge_method(frame)
-        ev = [r.getMessage() for r in caplog.records if "cost crossover" in r.getMessage()]
-        assert ev, "decision must leave an audit line"
-        return method, ev[-1]
-
-    method, ev = route_and_evidence(docs, 100)
-    assert method == "minhash" and "x 1.0 shingles/doc" in ev
-
-    method, ev = route_and_evidence(docs, 200)
-    assert method == "minhash" and "x 1.0 shingles/doc" not in ev
-
-    short = spark.createDataFrame(
-        [(i, "tok", "en") for i in range(500)], "doc_id long, text string, lang string"
-    )
-    method, ev = route_and_evidence(short, 400)
-    assert method == "jaccard" and "x 0.0 shingles/doc" in ev
-
-
-def test_choose_edge_method_bytes_gate_zero_jobs(spark, caplog):
-    """The round-13 small-end exit: when scan bytes x the expansion
-    bound stay under the crossover, the jaccard route is decided from
-    file metadata with ZERO driver actions (no count, no sample) — and
-    the decision still leaves its audit line. A non-file frame
-    (createDataFrame) must skip the gate and measure as before."""
-    import logging as _logging
-    from unittest import mock
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import pipeline_q as PQ
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
-
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as _DF
-    except ImportError:  # pragma: no cover — pyspark 3.x
-        from pyspark.sql import DataFrame as _DF
-
-    docs = load_table(spark, SF_CORRECT, "documents")
-    actions = {"n": 0}
-    real = {"collect": _DF.collect, "count": _DF.count, "first": _DF.first}
-
-    def wrap(name):
-        def inner(self_df, *a, **kw):
-            actions["n"] += 1
-            return real[name](self_df, *a, **kw)
-        return inner
-
-    logger = "custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.pipeline_q"
-    with caplog.at_level(_logging.INFO, logger=logger):
-        with mock.patch.object(_DF, "collect", wrap("collect")), \
-                mock.patch.object(_DF, "count", wrap("count")), \
-                mock.patch.object(_DF, "first", wrap("first")):
-            assert PQ.choose_edge_method(docs) == "jaccard"
-    assert actions["n"] == 0, f"bytes gate fired {actions['n']} driver actions"
-    msgs = [r.getMessage() for r in caplog.records if "scan bytes alone" in r.getMessage()]
-    assert msgs and "'jaccard'" in msgs[0]
-
-    # non-file scan: the gate cannot size it and must fall through to
-    # the measured path (count, and near the crossover the sample too)
-    frame = spark.createDataFrame(
-        [(i, "a b c d e f", "en") for i in range(10)],
-        "doc_id long, text string, lang string",
-    )
-    actions["n"] = 0
-    with mock.patch.object(_DF, "collect", wrap("collect")), \
-            mock.patch.object(_DF, "count", wrap("count")), \
-            mock.patch.object(_DF, "first", wrap("first")):
-        assert PQ.choose_edge_method(frame) == "jaccard"
-    assert actions["n"] >= 1, "unsizeable scan must measure"

@@ -421,37 +421,6 @@ def test_bench_headliner_plan_ceilings(spark):
         assert n_cart <= max_cart, f"{name}: {n_cart} CartesianProduct > pinned {max_cart}"
 
 
-def test_cost_decision_seam_pure():
-    """plans/cost.decide_crossover — the shared measured-crossover seam
-    (VERDICT r9 item 7): strict above-comparison matching both prior
-    callers' boundary semantics, the decision record carries its
-    evidence, and the log line names the statistic and the choice."""
-    import logging
-
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
-
-    d = decide_crossover(0.6, 0.5, "salted", "plain", "hot-key row share")
-    assert d.choice == "salted" and d.above and d.stat == 0.6 and d.crossover == 0.5
-    assert decide_crossover(0.5, 0.5, "salted", "plain", "x").choice == "plain"  # exclusive
-    assert decide_crossover(0.0, 0.5, "salted", "plain", "x").choice == "plain"
-    log = logging.getLogger("cost-seam-test")
-    records = []
-
-    class _H(logging.Handler):
-        def emit(self, record):
-            records.append(record.getMessage())
-
-    h = _H()
-    log.addHandler(h)
-    log.setLevel(logging.INFO)
-    try:
-        decide_crossover(31e6, 30e6, "minhash", "jaccard", "estimated shingle postings",
-                         logger=log, detail="sample")
-    finally:
-        log.removeHandler(h)
-    assert records and "estimated shingle postings" in records[0] and "'minhash'" in records[0]
-
-
 def test_initial_shuffle_width_scales_past_core_count(spark):
     """Round 11 (sf100 join-shape root cause): shuffle.partitions=cores
     is the right POST-coalesce width, but as the pre-AQE width it caps

@@ -275,6 +275,39 @@ class _Fn:
         return out
 
 
+def _callee(func: ast.expr, bound: frozenset[str], aliases: dict[str, str], external: set[str]) -> str | None:
+    """The identifier a call through ``func`` resolves to, if it can name
+    a package function."""
+    if isinstance(func, ast.Name) and func.id not in bound:
+        return aliases.get(func.id, func.id)
+    if isinstance(func, ast.Attribute) and _root(func) not in external:
+        return func.attr
+    return None
+
+
+def _dispatch(node: ast.For | ast.comprehension, bound: frozenset[str], aliases: dict[str, str],
+              external: set[str], known: dict) -> dict[str, list[str]]:
+    """Loop names that ``node`` binds, one by one, to every function of a
+    literal tuple or list: ``for op, fn in (("a", f), ("b", g))`` binds
+    ``fn`` to ``f`` and ``g``. A name is kept only when every element
+    names a package function in its position."""
+    rows = node.iter.elts if isinstance(node.iter, (ast.Tuple, ast.List)) else []
+    if isinstance(node.target, ast.Name):
+        slots = [(node.target.id, rows)]
+    elif isinstance(node.target, (ast.Tuple, ast.List)) and rows and all(
+        isinstance(r, (ast.Tuple, ast.List)) and len(r.elts) == len(node.target.elts) for r in rows
+    ):
+        slots = [(t.id, [r.elts[i] for r in rows]) for i, t in enumerate(node.target.elts) if isinstance(t, ast.Name)]
+    else:
+        slots = []
+    out = {}
+    for name, items in slots:
+        callees = [_callee(item, bound, aliases, external) for item in items]
+        if callees and all(c in known for c in callees):
+            out[name] = callees
+    return out
+
+
 def single_valued_parameters(
     package: list[tuple[str, ast.Module]], surface: list[ast.Module]
 ) -> set[tuple[str, str, str]]:
@@ -285,7 +318,9 @@ def single_valued_parameters(
     A call gives each parameter the literal it passes, the default where it
     passes none, and :data:`VARIES` for anything else. ``ClassName(...)``
     calls ``__init__``; a call through a name bound locally calls whatever
-    that name holds, not the package function of the same name."""
+    that name holds, not the package function of the same name. A loop
+    name bound to the functions of a literal tuple (:func:`_dispatch`)
+    calls each of them."""
     by_name: dict[str, list[_Fn]] = {}  # callee identifier -> candidates
     for rel, tree in package:
         for stmt in tree.body:
@@ -302,24 +337,27 @@ def single_valued_parameters(
     values: dict[tuple[tuple[str, str], str], set[str]] = {}
     passed: set[tuple[tuple[str, str], str]] = set()  # (fn key, parameter) a surface call passes
     trees = [(tree, False) for _, tree in package] + [(tree, True) for tree in surface]
+
+    def record(name: str | None, call: ast.Call, on_surface: bool) -> None:
+        for fn in by_name.get(name, ()):
+            given = fn.given(call)
+            for p in fn.params:
+                values.setdefault((fn.key, p), set()).add(given.get(p, fn.defaults.get(p, VARIES)))
+            if on_surface:
+                passed.update((fn.key, p) for p in given)
+
     for tree, on_surface in trees:
         aliases, external = _imports(tree)
-        for call, bound in _scoped(tree):
-            if not isinstance(call, ast.Call):
-                continue
-            func = call.func
-            if isinstance(func, ast.Name) and func.id not in bound:
-                name = aliases.get(func.id, func.id)
-            elif isinstance(func, ast.Attribute) and _root(func) not in external:
-                name = func.attr
-            else:
-                continue
-            for fn in by_name.get(name, ()):
-                given = fn.given(call)
-                for p in fn.params:
-                    values.setdefault((fn.key, p), set()).add(given.get(p, fn.defaults.get(p, VARIES)))
-                if on_surface:
-                    passed |= {(fn.key, p) for p in given}
+        for node, bound in _scoped(tree):
+            if isinstance(node, ast.Call):
+                record(_callee(node.func, bound, aliases, external), node, on_surface)
+            elif isinstance(node, (ast.For, *_COMPS)):
+                for loop in [node] if isinstance(node, ast.For) else node.generators:
+                    for name, callees in _dispatch(loop, bound, aliases, external, by_name).items():
+                        for call in ast.walk(node):
+                            if isinstance(call, ast.Call) and getattr(call.func, "id", None) == name:
+                                for callee in callees:
+                                    record(callee, call, on_surface)
     return {
         (*key, p)
         for (key, p), vals in values.items()
@@ -369,6 +407,14 @@ def test_a_parameter_the_surface_passes_is_not_flagged():
 def test_a_call_through_a_local_name_is_not_the_package_function():
     src = "def f(x, k=4):\n    return x[:k]\n\ndef g(f, y):\n    return f(y, k=y)\n\ndef h(y):\n    return f(y)\n"
     assert ("m.py", "f", "k") in _scan(src)
+
+
+def test_a_call_through_a_tuple_dispatch_calls_each_function():
+    table = "def f(x, mode='a'):\n    return x, mode\n\ndef g(x, mode='a'):\n    return x, mode\n\n"
+    comp = table + "def run(y):\n    return [fn(y) for op, fn in (('f', f), ('g', g))]\n"
+    assert {("m.py", "f", "mode"), ("m.py", "g", "mode")} <= _scan(comp)
+    loop = comp + "def other(y):\n    for op, fn in [('f', f), ('g', g)]:\n        fn(y, mode=op)\n"
+    assert not {("m.py", "f", "mode"), ("m.py", "g", "mode")} & _scan(loop)
 
 
 def test_a_dead_definition_sharing_a_local_name_is_unreached():

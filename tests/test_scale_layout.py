@@ -113,79 +113,16 @@ def test_ivf_plan_size_independent_of_k(spark, monkeypatch):
     assert len(out) > 0
 
 
-def test_ivf_stored_index_partition_pruned_probe(spark, monkeypatch):
-    """write_ivf_index assigns buckets at WRITE time; a probe against the
-    stored layout must (a) carry a bucket partition filter — only nprobe
-    directories are scanned — and (b) run NO bucket assignment over index
-    rows at query time, and (c) return exactly what the in-flight
-    ivf_topk returns."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import similarity as S
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    monkeypatch.setattr(S, "IVF_ITERS", 2)
-    centroids = S.ivf_centroids_np(emb, k=8)
-    path = os.path.join(SCRATCH, "ivf_index")
-    S.write_ivf_index(emb, centroids, path)
-
-    monkeypatch.setattr(S, "IVF_TOP_K", 5)
-    monkeypatch.setattr(S, "IVF_NPROBE", 3)
-    stored = S.ivf_topk_stored(spark, queries, path, centroids, nprobe=3)
-    plan = formatted_plan(stored)
-    scan_section = plan[plan.index("Scan parquet") :] if "Scan parquet" in plan else plan
-    assert "PartitionFilters" in scan_section and "bucket" in scan_section, plan
-    # round 5: the probe bucket set reaches the scan via DYNAMIC partition
-    # pruning (executor-side broadcast result), not a driver-collected
-    # isin list — pin the dynamicpruning expression on the index scan
-    assert "dynamicpruning" in scan_section, plan
-    # the index scan must not recompute assignments at query time: the
-    # stored plan tree's only MapInPandas is the query-side probe, where
-    # the in-flight tree also assigns every corpus row (the tree is the
-    # plan's first paragraph; the dynamic-pruning subquery repeats the
-    # probe below it)
-    def batch_stages(p: str) -> int:
-        return p.split("\n\n", 1)[0].count("MapInPandas")
-
-    assert batch_stages(plan) == 1, plan
-
-    inflight = S.ivf_topk(queries, emb, centroids)
-    assert batch_stages(formatted_plan(inflight)) == 2
-    assert sorted(map(tuple, stored.collect())) == sorted(map(tuple, inflight.collect()))
-
-
 def test_ivf_scaled_k_and_numpy_assignment(spark, monkeypatch):
-    """Round 11 (ANN decade root cause): a FIXED centroid count makes
-    IVF query cost track the corpus linearly (nprobe/16 probes 62% of
-    any corpus), so k scales as √N via ivf_k_for, and write-time
-    assignment at √N-scaled k runs through the Arrow matmul path
-    (assign_buckets_np). Pins: ivf_k_for's curve and clamps; the sampled
-    driver-side trainer's shape; and a stored index probed at its own
-    centroids answers exactly like the in-flight search."""
+    """The sampled driver-side trainer returns :data:`IVF_CENTROIDS`
+    centroids at the corpus's vector width."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import similarity as S
-
-    assert S.ivf_k_for(1) == 16 and S.ivf_k_for(500) == 16  # floor
-    assert S.ivf_k_for(50_000) == 256        # sqrt = 224 -> 2^8
-    assert S.ivf_k_for(200_000) == 512       # sqrt = 447 -> 2^9
-    assert S.ivf_k_for(2_000_000) == 1024    # sqrt = 1414 -> 2^10
-    assert S.ivf_k_for(10**9) == 4096        # clamp
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        S.ivf_k_for(0)
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     monkeypatch.setattr(S, "IVF_ITERS", 3)
-    centroids = S.ivf_centroids_np(emb, k=32)
+    monkeypatch.setattr(S, "IVF_CENTROIDS", 32)
+    centroids = S.ivf_centroids_np(emb)
     assert centroids.shape == (32, 64)
-
-    path = os.path.join(SCRATCH, "ivf_index_np")
-    S.write_ivf_index(emb, centroids, path)
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    monkeypatch.setattr(S, "IVF_TOP_K", 5)
-    monkeypatch.setattr(S, "IVF_NPROBE", 6)
-    a = sorted(map(tuple, S.ivf_topk_stored(spark, queries, path, centroids, nprobe=6).collect()))
-    b = sorted(map(tuple, S.ivf_topk(queries, emb, centroids).collect()))
-    assert a == b and a
 
 
 def test_single_row_group_layout_resilience(spark):
