@@ -59,6 +59,26 @@ POLY_MOD_56 = (1 << 56) - 5
 SIMHASH_BITS = 56
 
 
+def simhash_votes(h: Column, weight: Column | None = None) -> list[Column]:
+    """The :data:`SIMHASH_BITS` SimHash vote aggregates ``_v0``..: vote b
+    sums 2·bit_b(h) − 1 over the group's token hashes ``h``, each counted
+    ``weight`` times (once when None). Flat SUMs keep map-side partial
+    aggregation, so the shuffle carries one row per group per partition."""
+    votes = [F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1 for b in range(SIMHASH_BITS)]
+    if weight is not None:
+        votes = [v * weight for v in votes]
+    return [F.sum(v).alias(f"_v{b}") for b, v in enumerate(votes)]
+
+
+def simhash_fold() -> Column:
+    """The 56-bit SimHash of the :func:`simhash_votes` columns: bit b is
+    set iff vote b is positive (the majority of token-hash bits)."""
+    bits = F.lit(0).cast("long")
+    for b in range(SIMHASH_BITS):
+        bits = bits + F.when(F.col(f"_v{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
+    return bits
+
+
 def poly_hash_token() -> Column:
     """56-bit polynomial hash of the token string column ``tok``."""
     codes = F.transform(F.split(F.col("tok"), ""), lambda c: F.ascii(c).cast("long"))

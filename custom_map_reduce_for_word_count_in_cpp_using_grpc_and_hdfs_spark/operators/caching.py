@@ -26,26 +26,8 @@ from pyspark.sql import DataFrame
 
 logger = logging.getLogger(__name__)
 
-#: Default bound on how many cached bytes one scanned byte can become
-#: through the explode/aggregate chains these operators cache. This is
-#: an EMPIRICAL ceiling, not a proof — and round 7 re-measured every
-#: eager_stats shape across three decades (sf0.1/sf1/sf10,
-#: .scratch/r7/measure_expansion.py), so the engine's own call sites
-#: now pass their measured per-shape bounds (see the constants in
-#: operators/dedup.py and operators/similarity.py): hashed shingle
-#: index 3.4–3.7× flat, minhash signatures 2.3×, simhash fingerprints
-#: 0.1×, banded hyperplane codes 6→30→40× (grows with the log2(N) band
-#: count until its 48-band cap — the one measured shape ABOVE this
-#: default, which is why per-site bounds exist). The 32× default
-#: remains for external callers with unmeasured shapes. The lazy-path log
-#: line below is the audit trail for diagnosing a mis-broadcast that
-#: slipped past a bound.
-_EXPANSION_BOUND = 32
 
-
-def _size_proof(
-    df: DataFrame, expansion_bound: int = _EXPANSION_BOUND
-) -> tuple[bool, bool, list | None]:
+def _size_proof(df: DataFrame, expansion_bound: int) -> tuple[bool, bool, list | None]:
     """(mis-plan risk, proof of smallness, source file sizes).
 
     The two booleans answer DIFFERENT questions (round-8 fix — they were
@@ -86,7 +68,7 @@ def _size_proof(
     return not proven, proven, sizes
 
 
-def eager_stats(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> DataFrame:
+def eager_stats(df: DataFrame, expansion_bound: int) -> DataFrame:
     """Persist ``df`` and materialize it NOW, so joins planned afterwards
     see the cache's MEASURED size instead of Catalyst's estimate.
 
@@ -94,9 +76,11 @@ def eager_stats(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> DataF
     small SF, measured round 5), so it runs only when it can change a
     decision: when the source scan is big enough — or unsizeable — that
     the true cached size could cross the broadcast threshold at
-    ``expansion_bound``× growth (:func:`_size_proof`; pass a
-    shape-specific bound when the default's measured ceiling doesn't
-    cover the caller's expansion). Small sources keep the lazy persist
+    ``expansion_bound``× growth (:func:`_size_proof`). The bound is the
+    caller's measured cached-bytes-per-source-byte ceiling for its shape
+    (the ``*_BOUND`` constants in operators/dedup.py and
+    operators/similarity.py), an empirical ceiling, not a proof. Small
+    sources keep the lazy persist
     and their (correct) broadcast plans; the sf0.1 driver bench takes
     the lazy path, the sf10 OOM repro takes the eager one. Lazy-path
     decisions are logged (source bytes, bound, threshold) so a future

@@ -36,8 +36,11 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions
     minhash_value,
     poly_hash_token,
     poly_hash_token_sql,
+    simhash_fold,
+    simhash_votes,
 )
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import eager_stats, materialize, tie_cache_lifetime
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.similarity import banded_self_join
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.text import tokens_col, tokens_sql
 
 #: Measured cached-bytes-per-source-byte ceilings for the frames this
@@ -136,6 +139,41 @@ def doc_shingles(df: DataFrame) -> DataFrame:
     )
 
 
+def shingle_index(df: DataFrame) -> DataFrame:
+    """:func:`doc_shingles` of ``df``, persisted through
+    :func:`eager_stats` at :data:`SHINGLE_INDEX_BOUND`: the inverted
+    index joins against itself, and its Generate-derived size ESTIMATE is
+    ~50x under reality, so only a materialized cache makes the
+    broadcast-vs-shuffle decision track the data. The materializing
+    count() is itself gated on the source scan's file bytes (see
+    operators/caching.py::eager_stats for the bound and its audit log).
+    Callers that run several near-dup routes share one index."""
+    return eager_stats(doc_shingles(df), SHINGLE_INDEX_BOUND)
+
+
+def _jaccard_at_least(shared: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard ≥ threshold) from one (doc_a, doc_b, n_a,
+    n_b) row per shingle the pair shares: |A ∩ B| is the row count, and
+    |A|, |B| ride on the index rows (:func:`doc_shingles` carries n_sh),
+    so verification is a min() in the pair aggregation — no per-doc
+    sizes aggregate, no size joins onto the pair frame (round 8). The
+    verify half of every shingle near-dup route."""
+    return (
+        shared.groupBy("doc_a", "doc_b")
+        .agg(
+            F.count(F.lit(1)).alias("n_inter"),
+            F.min("n_a").alias("n_a"),
+            F.min("n_b").alias("n_b"),
+        )
+        .withColumn(
+            "jaccard",
+            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     threshold: float,
@@ -159,49 +197,17 @@ def jaccard_pairs(
     caller-owned frame is neither cached nor unpersisted here.
     """
     owned = shingles is None
-    # eager_stats, not a bare lazy cache: the inverted index joins against
-    # itself below, and its Generate-derived size ESTIMATE is ~50x under
-    # reality — only a materialized cache makes the broadcast-vs-shuffle
-    # decision track the data. The materializing count() is itself gated
-    # on the source scan's file bytes: sources whose bytes stay under the
-    # broadcast threshold at the MEASURED expansion ceiling keep the lazy
-    # persist (bounded-by-measurement, not a proof — see
-    # operators/caching.py::eager_stats for the bound and its audit log).
-    ds = (
-        eager_stats(doc_shingles(df), SHINGLE_INDEX_BOUND)
-        if owned
-        else shingles
-    )
+    ds = shingle_index(df) if owned else shingles
     index = ds
     if max_shingle_df is not None:
         freq = ds.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         index = ds.join(freq.where(F.col("df") <= max_shingle_df), "shingle")
 
-    # |A| and |B| ride on the index rows (doc_shingles carries n_sh —
-    # computed BEFORE any DF capping, so capped pairs still divide by the
-    # full union), so verification is a min() inside the pair aggregation:
-    # the round-7 per-doc sizes aggregate, its two pair-frame joins, and
-    # the provably-small broadcast hints they needed are gone (round 8) —
-    # two fewer shuffles of the pair frame and a static plan back under
-    # the round-6 exchange ceilings.
+    # n_sh is computed BEFORE any DF capping, so capped pairs still
+    # divide by the full union
     a = index.select(F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("n_a"))
     b = index.select(F.col("doc_id").alias("doc_b"), "shingle", F.col("n_sh").alias("n_b"))
-    result = (
-        a.join(b, "shingle")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.min("n_a").alias("n_a"),
-            F.min("n_b").alias("n_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    result = _jaccard_at_least(a.join(b, "shingle").where(F.col("doc_a") < F.col("doc_b")), threshold)
     return tie_cache_lifetime(result, ds) if owned else result
 
 
@@ -258,29 +264,9 @@ def band_hashes_col(bands: int, num_perm: int):
     )
 
 
-def _banded_candidate_join(banded: DataFrame, bands: int) -> DataFrame:
-    """Candidate pairs from a (id-as-doc, bhs, band, band_hash) frame:
-    equi-join on (band, band_hash) with canonical-band dedup — a pair
-    agreeing on k bands surfaces only at its FIRST agreeing band (all
-    earlier band hashes differ), so the post-join DISTINCT shuffle is
-    replaced by codegen'd comparisons over the compact bhs arrays."""
-    a = banded.select(F.col("_id").alias("doc_a"), F.col("bhs").alias("bhs_a"), "band", "band_hash")
-    b = banded.select(F.col("_id").alias("doc_b"), F.col("bhs").alias("bhs_b"), "band", "band_hash")
-    first_agreeing = F.lit(True)
-    for j in range(bands - 1):
-        first_agreeing = first_agreeing & (
-            (F.col("band") <= j)
-            | (F.element_at("bhs_a", j + 1) != F.element_at("bhs_b", j + 1))
-        )
-    return (
-        a.join(b, ["band", "band_hash"])
-        .where((F.col("doc_a") < F.col("doc_b")) & first_agreeing)
-        .select("doc_a", "doc_b")
-    )
-
-
 def lsh_candidate_pairs(sigs: DataFrame, bands: int) -> DataFrame:
-    """Band the signature, equi-join on (band_idx, band_hash).
+    """Band the signature (one xxhash64 code per band) and self-join it on
+    (band, code) through :func:`similarity.banded_self_join`.
 
     The signature width is :data:`MINHASH_PERMS`, the producer's (deriving
     it with a collect() would fire a driver round-trip action before the
@@ -312,10 +298,10 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int) -> DataFrame:
         ),
     )
     banded = sigs.select(
-        F.col("doc_id").alias("_id"),
-        F.when(width_ok.isNull(), band_hashes_col(bands, num_perm)).alias("bhs"),
-    ).select("_id", "bhs", F.posexplode("bhs").alias("band", "band_hash"))
-    return tie_cache_lifetime(_banded_candidate_join(banded, bands), sigs)
+        F.col("doc_id").alias("id"),
+        F.when(width_ok.isNull(), band_hashes_col(bands, num_perm)).alias("codes"),
+    ).select("id", "codes", F.posexplode("codes").alias("band", "code"))
+    return tie_cache_lifetime(banded_self_join(banded, bands, "doc_a", "doc_b"), sigs)
 
 
 def minhash_near_dups(df: DataFrame, threshold: float = 0.7, shingles: DataFrame | None = None) -> DataFrame:
@@ -330,37 +316,16 @@ def minhash_near_dups(df: DataFrame, threshold: float = 0.7, shingles: DataFrame
     # three consumers (signatures, both verification sides) —
     # materialize the shingle inverted index once
     owned = shingles is None
-    ds = (
-        eager_stats(doc_shingles(df), SHINGLE_INDEX_BOUND)
-        if owned
-        else shingles
-    )
+    ds = shingle_index(df) if owned else shingles
     cands = lsh_candidate_pairs(minhash_signature(df, shingles=ds), 8)
-    # |A|/|B| ride on the index rows (see doc_shingles) — verification is
-    # a min() in the pair aggregation, no per-doc sizes joins (round 8)
     a = ds.select(F.col("doc_id").alias("doc_a"), "shingle", F.col("n_sh").alias("n_a"))
     b = ds.select(
         F.col("doc_id").alias("doc_b"),
         F.col("shingle").alias("shingle_b"),
         F.col("n_sh").alias("n_b"),
     )
-    result = (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .where(F.col("shingle") == F.col("shingle_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.min("n_a").alias("n_a"),
-            F.min("n_b").alias("n_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    shared = cands.join(a, "doc_a").join(b, "doc_b").where(F.col("shingle") == F.col("shingle_b"))
+    result = _jaccard_at_least(shared, threshold)
     # cands (itself cache-tied to the signature persist) is strongly held
     # by the finalizer until the result dies, chaining the releases
     return tie_cache_lifetime(result, ds, cands) if owned else tie_cache_lifetime(result, cands)
@@ -716,23 +681,11 @@ def simhash(df: DataFrame) -> DataFrame:
 
     toks = spread(df, by=["doc_id"]).select(F.col("doc_id"), F.explode(tokens_col("text")).alias("tok"))
     hashed = toks.select("doc_id", poly_hash_token().alias("h"))
-    # 56 flat SUM aggregates (one per bit) with map-side partial
-    # aggregation: the shuffle carries one 56-column row per doc per
-    # partition. (Both alternatives lose: collect_list shuffles every
-    # token hash and folds through interpreted lambdas; explode-per-bit
-    # shuffles |tokens|×56 rows.)
-    h = F.col("h")
-    votes = [
-        F.sum(F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"_v{b}")
-        for b in range(SIMHASH_BITS)
-    ]
-    per_doc = hashed.groupBy("doc_id").agg(*votes)
-    bit = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS):
-        bit = bit + F.when(F.col(f"_v{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return per_doc.select(F.col("doc_id"), bit.alias("simhash"))
+    # one flat SUM per bit (simhash_votes). Both alternatives lose:
+    # collect_list shuffles every token hash and folds through
+    # interpreted lambdas; explode-per-bit shuffles |tokens|×56 rows.
+    per_doc = hashed.groupBy("doc_id").agg(*simhash_votes(F.col("h")))
+    return per_doc.select(F.col("doc_id"), simhash_fold().alias("simhash"))
 
 
 def simhash_sql() -> str:

@@ -125,6 +125,21 @@ def _first_agreeing_band(codes_a: str, codes_b: str, bands: int):
     return first
 
 
+def banded_self_join(banded: DataFrame, bands: int, a: str, b: str) -> DataFrame:
+    """Candidate pairs (``a`` < ``b``) of a banded (id, codes, band, code)
+    frame: an equi-join on (band, code) that keeps each pair at its first
+    agreeing band only (:func:`_first_agreeing_band`), so a pair agreeing
+    on several bands surfaces once with no DISTINCT shuffle. The filter
+    half of every banded-LSH near-dup join; callers verify the pairs."""
+    left = banded.select(F.col("id").alias(a), F.col("codes").alias("codes_a"), "band", "code")
+    right = banded.select(F.col("id").alias(b), F.col("codes").alias("codes_b"), "band", "code")
+    return (
+        left.join(right, ["band", "code"])
+        .where((F.col(a) < F.col(b)) & _first_agreeing_band("codes_a", "codes_b", bands))
+        .select(a, b)
+    )
+
+
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 10) -> DataFrame:
     """Approximate top-k: candidates share ≥1 of 8 two-bit signature
     bands (16 hyperplanes) with the query, then exact cosine rescoring.
@@ -268,19 +283,13 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     banded = eager_stats(
         spread(df, by=["vec_id"])
         .select(
-            F.col("vec_id").alias("vid"),
+            F.col("vec_id").alias("id"),
             codes_udf(F.col("embedding")).alias("codes"),
         )
-        .select("vid", "codes", F.posexplode("codes").alias("band", "code")),
+        .select("id", "codes", F.posexplode("codes").alias("band", "code")),
         BANDED_CODES_BOUND,
     )
-    a = banded.select(F.col("vid").alias("id_a"), F.col("codes").alias("codes_a"), "band", "code")
-    b = banded.select(F.col("vid").alias("id_b"), F.col("codes").alias("codes_b"), "band", "code")
-    cands = (
-        a.join(b, ["band", "code"])
-        .where((F.col("id_a") < F.col("id_b")) & _first_agreeing_band("codes_a", "codes_b", bands))
-        .select("id_a", "id_b")
-    )
+    cands = banded_self_join(banded, bands, "id_a", "id_b")
     vecs = df.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("vec"))
     result = (
         cands.join(vecs.select(F.col("vid").alias("id_a"), F.col("vec").alias("vec_a")), "id_a")

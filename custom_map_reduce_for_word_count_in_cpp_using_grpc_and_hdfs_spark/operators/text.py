@@ -13,10 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import (
-    poly_hash_chars,
-    poly_hash_chars_sql,
-)
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import poly_hash_chars
 
 #: Reference tokenizer (slave.cc:103) as an array expression.
 def tokens_col(text: Column | str) -> Column:
@@ -124,10 +121,9 @@ def lang_scores(text: Column | str) -> dict[str, Column]:
     return out
 
 
-def lang_id(text: Column | str) -> Column:
-    """argmax over lang_scores, ties broken by language code ascending;
-    'und' (undetermined) when every score is zero."""
-    scores = lang_scores(text)
+def _marker_argmax(scores: dict[str, Column]) -> Column:
+    """argmax over per-language marker scores, ties broken by language
+    code ascending; 'und' (undetermined) when every score is zero."""
     best = F.greatest(*scores.values())
     pred = F.lit("und")
     # iterate in reverse-lexicographic order so the final CASE picks the
@@ -135,6 +131,11 @@ def lang_id(text: Column | str) -> Column:
     for lang in sorted(scores, reverse=True):
         pred = F.when(scores[lang] == best, lang).otherwise(pred)
     return F.when(best == 0, "und").otherwise(pred)
+
+
+def lang_id(text: Column | str) -> Column:
+    """The marker-language argmax (:func:`_marker_argmax`) of ``text``."""
+    return _marker_argmax(lang_scores(text))
 
 
 def lang_id_sql(text_expr: str) -> str:
@@ -148,16 +149,6 @@ def lang_id_sql(text_expr: str) -> str:
         f"WHEN {score[lang]} = {best} THEN '{lang}'" for lang in sorted(score)
     )
     return f"CASE WHEN {best} = 0 THEN 'und' {branches} ELSE 'und' END"
-
-
-def fingerprint(text: Column | str) -> Column:
-    """Rolling-hash document fingerprint (exact-dup detection key that is
-    stable across engines and runs)."""
-    return poly_hash_chars(text)
-
-
-def fingerprint_sql(text_expr: str) -> str:
-    return poly_hash_chars_sql(text_expr)
 
 
 def doc_profile(df):
@@ -180,8 +171,9 @@ def doc_profile(df):
     """
     from pyspark.sql import DataFrame  # noqa: F401  (signature clarity)
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import (
-        SIMHASH_BITS,
         poly_hash_token,
+        simhash_fold,
+        simhash_votes,
     )
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import spread
 
@@ -210,23 +202,8 @@ def doc_profile(df):
         aggs.append(
             F.sum(F.when(F.col("tok").isin(*markers), cnt).otherwise(0)).alias(f"_s_{lang}")
         )
-    aggs += [
-        F.sum((F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1) * cnt).alias(f"_v{b}")
-        for b in range(SIMHASH_BITS)
-    ]
-    tok_feats = cnts.groupBy("doc_id").agg(*aggs)
-
-    simhash = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS):
-        simhash = simhash + F.when(F.col(f"_v{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    scores = {lang: F.col(f"_s_{lang}") for lang in LANG_MARKERS}
-    best = F.greatest(*scores.values())
-    pred = F.lit("und")
-    for lang in sorted(scores, reverse=True):
-        pred = F.when(scores[lang] == best, lang).otherwise(pred)
-    lang_pred = F.when(best == 0, "und").otherwise(pred)
+    tok_feats = cnts.groupBy("doc_id").agg(*aggs, *simhash_votes(h, cnt))
+    lang_pred = _marker_argmax({lang: F.col(f"_s_{lang}") for lang in LANG_MARKERS})
 
     scalars = df.select(
         F.col("doc_id"),
@@ -234,8 +211,8 @@ def doc_profile(df):
         token_count_bpe(text).alias("n_bpe_tokens"),
         punct_count(text).alias("n_punct"),
         F.col("lang").alias("lang_label"),
-        fingerprint(text).alias("fp"),
-        fingerprint(normalized_text(text)).alias("fp_normalized"),
+        poly_hash_chars(text).alias("fp"),
+        poly_hash_chars(normalized_text(text)).alias("fp_normalized"),
         dup_ngram_frac(text, 2).alias("dup_bigram_frac"),
         dup_ngram_frac(text, 3).alias("dup_trigram_frac"),
     )
@@ -257,7 +234,7 @@ def doc_profile(df):
         lang_pred.alias("lang_pred"),
         "fp",
         "fp_normalized",
-        simhash.alias("simhash"),
+        simhash_fold().alias("simhash"),
     )
 
 

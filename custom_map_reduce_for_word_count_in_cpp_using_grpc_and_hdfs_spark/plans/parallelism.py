@@ -151,7 +151,7 @@ def row_count(df: DataFrame) -> int:
     """EXACT row count of ``df``: :func:`_footer_row_count` when the plan
     is provably a bare parquet scan (zero jobs), a ``count()`` job
     otherwise. The one sizing count of every cost seam that needs the
-    exact ``n`` (LSH and SimHash geometry), so the hit-or-fallback
+    exact ``n`` (LSH and SimHash geometry, the tf-idf N), so the hit-or-fallback
     decision lives in one place."""
     n = _footer_row_count(df)
     return df.count() if n is None else n

@@ -4,13 +4,25 @@ Every implemented operator from SURVEY.md §2 registers here as a named
 ``(spark, sf_dir) -> DataFrame`` callable, optionally paired with an
 ANSI-SQL oracle string DuckDB runs over the same parquet tables. Import
 side effects populate the registry.
+
+Suites: the driver verifies about 50 entries, so most operator families
+register as one tagged union (a *suite*), one Catalyst plan fragment per
+branch. Every suite states its union once, as a :class:`TaggedUnion`,
+and builds each branch through it, which fixes the convention the
+oracle's order-insensitive value hash relies on: the tag column comes
+first, the union columns follow in one fixed order, and a column a
+branch does not produce is a NULL cast to the union's type (an untyped
+or differently typed NULL changes the hash). No suite spells a typed
+NULL slot itself (pinned by ``tests/test_union_schemas.py``).
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -43,6 +55,40 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+class TaggedUnion:
+    """One suite's union schema, written once: the ``tag`` column, then
+    ``columns`` (union column name → Spark type) in output order."""
+
+    def __init__(self, tag: str, /, **columns: str):
+        self.tag = tag
+        self.columns = columns
+
+    def branch(self, frame: DataFrame, value: str, /, *same: str, **cols: str | Column | None) -> DataFrame:
+        """``frame`` as the union branch tagged ``value``. ``same`` names
+        union columns read from same-named ``frame`` columns; ``cols``
+        maps a union column to a ``frame`` column name or a Column, and
+        wins over ``same``. Each is cast to its union type. A union
+        column given neither, or mapped to None, is a NULL of its union
+        type."""
+        cols = {**{name: name for name in same}, **cols}
+        unknown = set(cols) - set(self.columns)
+        if unknown:
+            raise KeyError(f"{sorted(unknown)} are not columns of the {self.tag!r} union")
+
+        def slot(name: str, dtype: str) -> Column:
+            src = cols.get(name)
+            if src is None:
+                return F.lit(None).cast(dtype).alias(name)
+            return (F.col(src) if isinstance(src, str) else src).cast(dtype).alias(name)
+
+        return frame.select(F.lit(value).alias(self.tag), *(slot(n, t) for n, t in self.columns.items()))
+
+    @staticmethod
+    def union(*branches: DataFrame) -> DataFrame:
+        """The branches, in order, as one UNION ALL."""
+        return functools.reduce(DataFrame.unionAll, branches)
+
+
 # Populate the registry. The whole registry (50 entries) fits inside the
 # driver's ~50-entry verification window; families that lacked driver
 # rows in round 1 register first anyway, so a shrunken window still
@@ -61,4 +107,4 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries i
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.wordcount_q import flagship  # noqa: E402
 
-__all__ = ["QUERIES", "ORACLE_SQL", "query", "flagship"]
+__all__ = ["QUERIES", "ORACLE_SQL", "TaggedUnion", "query", "flagship"]

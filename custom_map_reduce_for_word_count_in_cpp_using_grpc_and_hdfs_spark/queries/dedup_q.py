@@ -22,8 +22,9 @@ from pyspark.sql import functions as F
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import dedup as D
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import text as T
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.similarity import cosine_batch_near_dups
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import poly_hash_chars, poly_hash_chars_sql
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.vector import cosine_sql
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import TaggedUnion, query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
 JACCARD_T = 0.3
@@ -38,7 +39,7 @@ _EXACT_SUITE_ORACLE = f"""
     SELECT 'normalized', {T.normalized_text_sql('text')}, min(doc_id), count(*)
     FROM documents GROUP BY 2
   UNION ALL
-    SELECT 'fingerprint', CAST({T.fingerprint_sql('text')} AS VARCHAR), min(doc_id), count(*)
+    SELECT 'fingerprint', CAST({poly_hash_chars_sql('text')} AS VARCHAR), min(doc_id), count(*)
     FROM documents GROUP BY 2
   UNION ALL
     SELECT 'winnow', CAST(f.doc_id AS VARCHAR), min(s.first_doc), count(*)
@@ -87,17 +88,17 @@ def dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at production split counts
     docs = spread(load_table(spark, sf_dir, "documents"), by=["doc_id"])
 
-    def tagged(kind: str, keyed: DataFrame, key_col: str) -> DataFrame:
-        return D.exact_dedup_groups(keyed, [key_col]).select(
-            F.lit(kind).alias("kind"),
-            F.col(key_col).cast("string").alias("key"),
-            "survivor_id",
-            "n_copies",
-        )
-
-    raw = tagged("raw", docs, "text")
-    norm = tagged("normalized", docs.withColumn("norm_text", T.normalized_text("text")), "norm_text")
-    fp = tagged("fingerprint", docs.withColumn("fp", T.fingerprint("text")), "fp")
+    u = TaggedUnion("kind", key="string", survivor_id="long", n_copies="long")
+    counts = ("survivor_id", "n_copies")
+    raw = u.branch(D.exact_dedup_groups(docs, ["text"]), "raw", *counts, key="text")
+    norm = u.branch(
+        D.exact_dedup_groups(docs.withColumn("norm_text", T.normalized_text("text")), ["norm_text"]),
+        "normalized", *counts, key="norm_text",
+    )
+    fp = u.branch(
+        D.exact_dedup_groups(docs.withColumn("fp", poly_hash_chars("text")), ["fp"]),
+        "fingerprint", *counts, key="fp",
+    )
 
     # round 13: the exact-SUBSTRING discipline — whole-document keys
     # (the three branches above) miss near-dups that share long spans
@@ -109,27 +110,17 @@ def dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the window formulation consumes the fingerprint frame exactly once
     # (count/min per fp as whole-partition window functions over one
     # sort-shuffle), so the expensive kernel pass needs no cache
-    winnow = D.winnow_shared_docs(D.winnow_fingerprints(docs)).select(
-        F.lit("winnow").alias("kind"),
-        F.col("doc_id").cast("string").alias("key"),
-        "survivor_id",
-        "n_copies",
-    )
+    winnow = u.branch(D.winnow_shared_docs(D.winnow_fingerprints(docs)), "winnow", *counts, key="doc_id")
 
     eval_slice = docs.where(F.col("doc_id") % 101 == 0)
     rest = docs.where(F.col("doc_id") % 101 != 0)
-    contaminated = (
+    contaminated = u.branch(
         rest.join(D.contaminated_docs(rest, eval_slice), "doc_id", "left_semi")
         .groupBy("lang")
-        .agg(F.min("doc_id").alias("survivor_id"), F.count(F.lit(1)).alias("n_copies"))
-        .select(
-            F.lit("contaminated").alias("kind"),
-            F.col("lang").alias("key"),
-            "survivor_id",
-            "n_copies",
-        )
+        .agg(F.min("doc_id").alias("survivor_id"), F.count(F.lit(1)).alias("n_copies")),
+        "contaminated", *counts, key="lang",
     )
-    return raw.unionAll(norm).unionAll(fp).unionAll(winnow).unionAll(contaminated)
+    return u.union(raw, norm, fp, winnow, contaminated)
 
 
 #: Shared oracle CTE list computing exact Jaccard near-dup pairs.
@@ -229,19 +220,16 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    ds = D.eager_stats(D.doc_shingles(docs), D.SHINGLE_INDEX_BOUND)
-
-    def branch(kind: str) -> DataFrame:
-        comps = D.near_dup_components(docs, JACCARD_T, edge_method=kind2method[kind], shingles=ds)
-        return comps.select(
-            F.lit(kind).alias("kind"),
-            "doc_id",
-            F.col("comp").alias("component"),
-            F.count(F.lit(1)).over(Window.partitionBy("comp")).alias("cluster_size"),
+    ds = D.shingle_index(docs)
+    u = TaggedUnion("kind", doc_id="long", component="long", cluster_size="long")
+    branches = [
+        u.branch(
+            D.near_dup_components(docs, JACCARD_T, edge_method=method, shingles=ds), kind, "doc_id",
+            component="comp", cluster_size=F.count(F.lit(1)).over(Window.partitionBy("comp")),
         )
-
-    kind2method = {"exact": "jaccard", "minhash": "minhash"}
-    return D.tie_cache_lifetime(branch("exact").unionAll(branch("minhash")), ds)
+        for kind, method in (("exact", "jaccard"), ("minhash", "minhash"))
+    ]
+    return D.tie_cache_lifetime(u.union(*branches), ds)
 
 
 @query(
@@ -272,9 +260,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # independent ~3 GB shingle caches in one local JVM left too little
     # heap to build broadcast relations (broadcast-build OOM) — and at
     # any scale the second tokenize+explode+distinct pass is pure waste.
-    # eager_stats so every downstream self-join plans against the cache's
-    # measured size (caching.py::eager_stats).
-    ds = D.eager_stats(D.doc_shingles(docs), D.SHINGLE_INDEX_BOUND)
+    ds = D.shingle_index(docs)
     found = D.minhash_near_dups(docs, threshold=JACCARD_T, shingles=ds).select("doc_a", "doc_b")
     true_pairs = D.jaccard_pairs(docs, JACCARD_T, shingles=ds).select("doc_a", "doc_b")
     n_true = true_pairs.agg(F.count(F.lit(1)).alias("n_true_pairs"))

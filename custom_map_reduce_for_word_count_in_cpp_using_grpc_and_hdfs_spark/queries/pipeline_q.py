@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import poly_hash_chars, poly_hash_chars_sql
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import dedup as D
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import sampling as S
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import text as T
@@ -58,7 +59,7 @@ _PIPELINE_ORACLE = f"""
                {T.stopword_count_sql('text')} / len({_TOKS})::BIGINT AS stopword_ratio,
                {T.punct_count_sql('text')} / length(text)::BIGINT AS punct_ratio,
                {T.lang_id_sql('text')} AS lang_pred,
-               {T.fingerprint_sql(T.normalized_text_sql('text'))} AS fp_normalized
+               {poly_hash_chars_sql(T.normalized_text_sql('text'))} AS fp_normalized
         FROM documents
     ),
     qual AS (
@@ -159,7 +160,7 @@ def curate(docs: DataFrame) -> DataFrame:
         T.lang_id(text).alias("lang_pred"),
         feats["n_tokens"].alias("n_tokens"),
         feats["n_chars"].alias("n_chars"),
-        T.fingerprint(T.normalized_text(text)).alias("fp_normalized"),
+        poly_hash_chars(T.normalized_text(text)).alias("fp_normalized"),
     )
     # Exact dedup on the 8-byte normalized fingerprint; survivor = min id.
     exact_survivors = qual.groupBy("fp_normalized").agg(F.min("doc_id").alias("doc_id"))

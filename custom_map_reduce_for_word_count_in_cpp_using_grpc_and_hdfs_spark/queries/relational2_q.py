@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.exact import dsum, dsum_expr
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import TaggedUnion, query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
 
@@ -215,15 +215,7 @@ def rel_tpch_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is engine-identical before the decimal fold). Each branch
     keeps its own plan; the union never mixes their shuffles."""
 
-    def tag(q: str, df: DataFrame, value_col: str, n_rows_col: str | None) -> DataFrame:
-        n_rows = F.col(n_rows_col) if n_rows_col else F.lit(None).cast("long")
-        return df.select(
-            F.lit(q).alias("q"),
-            F.lit(None).cast("string").alias("key"),
-            F.col(value_col).alias("value"),
-            n_rows.alias("n_rows"),
-        )
-
+    u = TaggedUnion("q", key="string", value="double", n_rows="long")
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
@@ -238,7 +230,7 @@ def rel_tpch_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("s_nat") == "NATION_1") & (F.col("c_nat") == "NATION_2"))
         | ((F.col("s_nat") == "NATION_2") & (F.col("c_nat") == "NATION_1"))
     )
-    q7 = (
+    q7 = u.branch(
         li.join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(ns), F.col("s_nkey") == F.col("s_nationkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -249,16 +241,12 @@ def rel_tpch_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6, alias="value"),
             F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.lit("q7").alias("q"),
-            F.concat_ws("|", "s_nat", "c_nat", F.col("yr").cast("string")).alias("key"),
-            "value",
-            "n_rows",
-        )
+        ),
+        "q7", "value", "n_rows",
+        key=F.concat_ws("|", "s_nat", "c_nat", F.col("yr").cast("string")),
     )
 
-    q10 = (
+    q10 = u.branch(
         c.join(o, F.col("o_custkey") == F.col("c_custkey"))
         .join(li.where(F.col("l_returnflag") == "R"), F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("c_custkey")
@@ -267,13 +255,8 @@ def rel_tpch_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
         )
         .orderBy(F.col("value").desc(), F.col("c_custkey").asc())
-        .limit(20)
-        .select(
-            F.lit("q10").alias("q"),
-            F.col("c_custkey").cast("string").alias("key"),
-            "value",
-            "n_rows",
-        )
+        .limit(20),
+        "q10", "value", "n_rows", key="c_custkey",
     )
 
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -291,7 +274,7 @@ def rel_tpch_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_nationkey") == F.col("sn_key"),
     ).select("s_suppkey", "supp_nation")
     std_parts = p.where(F.col("p_type") == "STANDARD").select("p_partkey")
-    q8 = (
+    q8 = u.branch(
         li.join(std_parts, F.col("l_partkey") == F.col("p_partkey"))
         .join(supp_nat, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(
@@ -309,41 +292,29 @@ def rel_tpch_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / dsum(rev, 6)
             ).alias("value"),
             F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.lit("q8").alias("q"),
-            F.col("yr").cast("string").alias("key"),
-            "value",
-            "n_rows",
-        )
+        ),
+        "q8", "value", "n_rows", key="yr",
     )
 
     widget_parts = p.where(F.col("p_name").contains("widget")).select(
         "p_partkey", "p_retailprice"
     )
     amount = rev - F.col("p_retailprice") * F.col("l_quantity") * F.lit(0.5)
-    q9 = (
+    q9 = u.branch(
         li.join(widget_parts, F.col("l_partkey") == F.col("p_partkey"))
         .join(supp_nat, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("supp_nation", F.year("o_orderdate").cast("long").alias("yr"))
-        .agg(dsum(amount, 6, alias="value"), F.count(F.lit(1)).alias("n_rows"))
-        .select(
-            F.lit("q9").alias("q"),
-            F.concat_ws("|", "supp_nation", F.col("yr").cast("string")).alias("key"),
-            "value",
-            "n_rows",
-        )
+        .agg(dsum(amount, 6, alias="value"), F.count(F.lit(1)).alias("n_rows")),
+        "q9", "value", "n_rows",
+        key=F.concat_ws("|", "supp_nation", F.col("yr").cast("string")),
     )
 
-    return (
-        tag("q6", rel_q6_forecast_revenue(spark, sf_dir), "revenue", "n_rows")
-        .unionAll(tag("q14", rel_q14_promo_ratio(spark, sf_dir), "promo_revenue_pct", None))
-        .unionAll(tag("q19", rel_q19_or_predicates(spark, sf_dir), "revenue", None))
-        .unionAll(q7)
-        .unionAll(q10)
-        .unionAll(q8)
-        .unionAll(q9)
+    return u.union(
+        u.branch(rel_q6_forecast_revenue(spark, sf_dir), "q6", "n_rows", value="revenue"),
+        u.branch(rel_q14_promo_ratio(spark, sf_dir), "q14", value="promo_revenue_pct"),
+        u.branch(rel_q19_or_predicates(spark, sf_dir), "q19", value="revenue"),
+        q7, q10, q8, q9,
     )
 
 
@@ -538,8 +509,9 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     c = load_table(spark, sf_dir, "customer")
     p = load_table(spark, sf_dir, "part")
+    u = TaggedUnion("q", key="string", n="long", v="double")
 
-    q4 = (
+    q4 = u.branch(
         o.where(
             (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
@@ -551,13 +523,8 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
         .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit("q4").alias("q"),
-            F.col("o_orderpriority").alias("key"),
-            "n",
-            F.lit(None).cast("double").alias("v"),
-        )
+        .agg(F.count(F.lit(1)).alias("n")),
+        "q4", "n", key="o_orderpriority",
     )
 
     per_cust = (
@@ -569,16 +536,7 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("c_count"))
     )
-    q13 = (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit("q13").alias("q"),
-            F.col("c_count").cast("string").alias("key"),
-            "n",
-            F.lit(None).cast("double").alias("v"),
-        )
-    )
+    q13 = u.branch(per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("n")), "q13", "n", key="c_count")
 
     brand_parts = p.where(F.col("p_brand") == "Brand#1").select("p_partkey")
     li_brand = li.join(brand_parts, F.col("l_partkey") == F.col("p_partkey")).drop(
@@ -588,17 +546,12 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
         F.count(F.lit(1)).alias("n_li"),
     )
-    q17 = (
+    q17 = u.branch(
         li_brand.join(stats.withColumnRenamed("l_partkey", "s_partkey"),
                       F.col("l_partkey") == F.col("s_partkey"))
         .where(5 * F.col("l_quantity").cast("long") * F.col("n_li") < F.col("sum_qty"))
-        .agg((dsum("l_extendedprice", 6) / F.lit(7.0)).alias("v"))
-        .select(
-            F.lit("q17").alias("q"),
-            F.lit(None).cast("string").alias("key"),
-            F.lit(None).cast("long").alias("n"),
-            "v",
-        )
+        .agg((dsum("l_extendedprice", 6) / F.lit(7.0)).alias("v")),
+        "q17", "v",
     )
 
     small = p.where(F.col("p_size") < 10).select("p_partkey")
@@ -608,17 +561,14 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("cost"))
     )
     part_min = vol.groupBy(F.col("l_partkey").alias("m_partkey")).agg(F.min("cost").alias("min_cost"))
-    q2 = (
+    q2 = u.branch(
         vol.join(
             part_min,
             (F.col("l_partkey") == F.col("m_partkey")) & (F.col("cost") == F.col("min_cost")),
-        )
-        .select(
-            F.lit("q2").alias("q"),
-            F.concat_ws("|", F.col("l_partkey").cast("string"), F.col("l_suppkey").cast("string")).alias("key"),
-            F.col("cost").alias("n"),
-            F.lit(None).cast("double").alias("v"),
-        )
+        ),
+        "q2",
+        key=F.concat_ws("|", F.col("l_partkey").cast("string"), F.col("l_suppkey").cast("string")),
+        n="cost",
     )
 
     rev = (
@@ -630,14 +580,8 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6, alias="total_rev"))
     )
     max_rev = rev.agg(F.max("total_rev").alias("mx"))
-    q15 = (
-        rev.join(F.broadcast(max_rev), F.col("total_rev") == F.col("mx"))
-        .select(
-            F.lit("q15").alias("q"),
-            F.col("l_suppkey").cast("string").alias("key"),
-            F.lit(None).cast("long").alias("n"),
-            F.col("total_rev").alias("v"),
-        )
+    q15 = u.branch(
+        rev.join(F.broadcast(max_rev), F.col("total_rev") == F.col("mx")), "q15", key="l_suppkey", v="total_rev"
     )
 
     from pyspark.sql import Window
@@ -653,28 +597,23 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_at_max",
         F.sum(F.when(F.col("smax") == F.col("omax"), 1).otherwise(0)).over(w_ord),
     )
-    q21 = (
+    q21 = u.branch(
         ann.where((F.col("n_supp") > 1) & (F.col("smax") == F.col("omax")) & (F.col("n_at_max") == 1))
         .groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .select(
-            F.lit("q21").alias("q"),
-            F.col("l_suppkey").cast("string").alias("key"),
-            F.col("numwait").alias("n"),
-            F.lit(None).cast("double").alias("v"),
-        )
+        .agg(F.count(F.lit(1)).alias("numwait")),
+        "q21", key="l_suppkey", n="numwait",
     )
 
     thr = c.where(F.col("c_acctbal") > 0).agg(
         (dsum("c_acctbal") / F.count(F.col("c_acctbal"))).alias("thr")
     )
-    q22 = (
+    q22 = u.branch(
         c.join(F.broadcast(thr))
         .where(F.col("c_acctbal") > F.col("thr"))
         .join(o, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .groupBy((F.col("c_nationkey") % 5).cast("string").alias("key"))
-        .agg(F.count(F.lit(1)).alias("n"), dsum("c_acctbal", alias="v"))
-        .select(F.lit("q22").alias("q"), "key", "n", "v")
+        .agg(F.count(F.lit(1)).alias("n"), dsum("c_acctbal", alias="v")),
+        "q22", *u.columns,
     )
 
     n = load_table(spark, sf_dir, "nation")
@@ -695,15 +634,9 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part_val = li_af.groupBy("l_partkey").agg(dsum("l_extendedprice", alias="val"))
     total_val = li_af.agg(dsum("l_extendedprice", alias="tot"))
-    q11 = (
-        part_val.join(F.broadcast(total_val))
-        .where(F.col("val") > F.col("tot") * 0.001)
-        .select(
-            F.lit("q11").alias("q"),
-            F.col("l_partkey").cast("string").alias("key"),
-            F.lit(None).cast("long").alias("n"),
-            F.col("val").alias("v"),
-        )
+    q11 = u.branch(
+        part_val.join(F.broadcast(total_val)).where(F.col("val") > F.col("tot") * 0.001),
+        "q11", key="l_partkey", v="val",
     )
 
     parts16 = p.where(
@@ -712,19 +645,13 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("p_size").isin(1, 4, 9, 14, 19, 23, 36, 45)
     ).select("p_partkey", "p_brand", "p_type", "p_size")
     excl16 = s.where(F.col("s_acctbal") < 2000).select("s_suppkey")
-    q16 = (
+    q16 = u.branch(
         li.join(parts16, F.col("l_partkey") == F.col("p_partkey"))
         .join(excl16, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("n"))
-        .select(
-            F.lit("q16").alias("q"),
-            F.concat_ws(
-                "|", "p_brand", "p_type", F.col("p_size").cast("string")
-            ).alias("key"),
-            "n",
-            F.lit(None).cast("double").alias("v"),
-        )
+        .agg(F.countDistinct("l_suppkey").alias("n")),
+        "q16", "n",
+        key=F.concat_ws("|", "p_brand", "p_type", F.col("p_size").cast("string")),
     )
 
     small_parts = p.where(F.col("p_type") == "SMALL").select("p_partkey")
@@ -738,7 +665,7 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = per_ps.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
         F.sum("sqty").alias("tqty")
     )
-    q20 = (
+    q20 = u.branch(
         per_ps.join(per_part, F.col("l_partkey") == F.col("t_partkey"))
         .where(2 * F.col("sqty") > F.col("tqty"))
         .join(
@@ -747,26 +674,11 @@ def rel_subquery_deep_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
         .groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit("q20").alias("q"),
-            F.col("l_suppkey").cast("string").alias("key"),
-            "n",
-            F.lit(None).cast("double").alias("v"),
-        )
+        .agg(F.count(F.lit(1)).alias("n")),
+        "q20", "n", key="l_suppkey",
     )
 
-    return (
-        q4.unionAll(q13)
-        .unionAll(q17)
-        .unionAll(q2)
-        .unionAll(q15)
-        .unionAll(q21)
-        .unionAll(q22)
-        .unionAll(q11)
-        .unionAll(q16)
-        .unionAll(q20)
-    )
+    return u.union(q4, q13, q17, q2, q15, q21, q22, q11, q16, q20)
 
 
 @query(

@@ -27,7 +27,7 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions
     rev_col,
     rev_sql,
 )
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import TaggedUnion, query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
 
@@ -234,97 +234,61 @@ def rel_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join), and NULL-surface handling through an outer join
     (coalesce / IS NULL / nullif)."""
     o, c, e, n, r = _t(spark, sf_dir, "orders", "customer", "events", "nation", "region")
-    null_i = F.lit(None).cast("long")
-    null_s = F.lit(None).cast("string")
-    null_d = F.lit(None).cast("double")
-
-    def tagged(op: str, df: DataFrame, i1, i2, s1, d1) -> DataFrame:
-        return df.select(
-            F.lit(op).alias("op"),
-            i1.cast("long").alias("i1"),
-            i2.cast("long").alias("i2"),
-            s1.alias("s1"),
-            d1.cast("double").alias("d1"),
-        )
-
-    inner = tagged(
-        "inner",
-        o.where(F.col("o_orderstatus") == "F").join(c, o.o_custkey == c.c_custkey),
-        F.col("o_orderkey"), null_i,
-        F.concat(F.col("c_name"), F.lit("|"), F.col("c_mktsegment")),
-        F.col("o_totalprice"),
-    )
-    left = tagged(
-        "left_outer",
-        c.join(o, o.o_custkey == c.c_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            dsum(F.coalesce(F.col("o_totalprice"), F.lit(0.0)), alias="total_spent"),
-        ),
-        F.col("c_custkey"), F.col("n_orders"), null_s, F.col("total_spent"),
-    )
-    right = tagged(
-        "right_outer",
-        c.join(o, o.o_custkey == c.c_custkey, "right").where(F.col("o_orderkey") % 100 == 0),
-        F.col("o_orderkey"), null_i, F.col("c_name"), null_d,
-    )
-    lo = (
-        e.where(F.col("value") < 100).groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt")).alias("a")
-    )
-    hi = (
-        e.where(F.col("value") >= 400).groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt")).alias("b")
-    )
-    full = tagged(
-        "full_outer",
-        lo.join(hi, F.col("a.event_type") == F.col("b.event_type"), "full"),
-        F.col("a.cnt"), F.col("b.cnt"),
-        F.concat(
-            F.coalesce(F.col("a.event_type"), F.lit("~")),
-            F.lit("|"),
-            F.coalesce(F.col("b.event_type"), F.lit("~")),
-        ),
-        null_d,
-    )
+    u = TaggedUnion("op", i1="long", i2="long", s1="string", d1="double")
+    lo = e.where(F.col("value") < 100).groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt")).alias("a")
+    hi = e.where(F.col("value") >= 400).groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt")).alias("b")
     big = o.where(F.col("o_totalprice") > 400000)
-    semi = tagged(
-        "semi", c.join(big, big.o_custkey == c.c_custkey, "left_semi"),
-        F.col("c_custkey"), null_i, F.col("c_name"), null_d,
-    )
-    anti = tagged(
-        "anti", c.join(big, big.o_custkey == c.c_custkey, "left_anti"),
-        F.col("c_custkey"), null_i, F.col("c_name"), null_d,
-    )
-    cross = tagged(
-        "cross", r.crossJoin(F.broadcast(n)),
-        null_i, null_i, F.concat(F.col("r_name"), F.lit("|"), F.col("n_name")), null_d,
-    )
     na, nb = n.alias("na"), n.alias("nb")
-    theta = tagged(
-        "theta",
-        na.join(
-            nb,
-            (F.col("na.n_regionkey") == F.col("nb.n_regionkey"))
-            & (F.col("na.n_nationkey") < F.col("nb.n_nationkey")),
-        ),
-        F.col("na.n_nationkey"), F.col("nb.n_nationkey"), null_s, null_d,
-    )
     sparse = o.where(F.col("o_orderkey") % 97 == 0)
-    nulls = tagged(
-        "null_handling",
-        c.join(sparse, sparse.o_custkey == c.c_custkey, "left"),
-        F.col("c_custkey"), null_i,
-        F.concat(
-            F.when(F.col("o_orderkey").isNull(), "no_order").otherwise("has_order"),
-            F.lit("|"),
-            F.coalesce(F.nullif(F.col("c_mktsegment"), F.lit("BUILDING")), F.lit("~")),
+    return u.union(
+        u.branch(
+            o.where(F.col("o_orderstatus") == "F").join(c, o.o_custkey == c.c_custkey), "inner",
+            i1="o_orderkey", s1=F.concat(F.col("c_name"), F.lit("|"), F.col("c_mktsegment")), d1="o_totalprice",
         ),
-        F.coalesce(F.col("o_totalprice"), F.lit(0.0)),
+        u.branch(
+            c.join(o, o.o_custkey == c.c_custkey, "left")
+            .groupBy("c_custkey")
+            .agg(
+                F.count("o_orderkey").alias("n_orders"),
+                dsum(F.coalesce(F.col("o_totalprice"), F.lit(0.0)), alias="total_spent"),
+            ),
+            "left_outer", i1="c_custkey", i2="n_orders", d1="total_spent",
+        ),
+        u.branch(
+            c.join(o, o.o_custkey == c.c_custkey, "right").where(F.col("o_orderkey") % 100 == 0),
+            "right_outer", i1="o_orderkey", s1="c_name",
+        ),
+        u.branch(
+            lo.join(hi, F.col("a.event_type") == F.col("b.event_type"), "full"), "full_outer",
+            i1="a.cnt", i2="b.cnt",
+            s1=F.concat(
+                F.coalesce(F.col("a.event_type"), F.lit("~")),
+                F.lit("|"),
+                F.coalesce(F.col("b.event_type"), F.lit("~")),
+            ),
+        ),
+        u.branch(c.join(big, big.o_custkey == c.c_custkey, "left_semi"), "semi", i1="c_custkey", s1="c_name"),
+        u.branch(c.join(big, big.o_custkey == c.c_custkey, "left_anti"), "anti", i1="c_custkey", s1="c_name"),
+        u.branch(r.crossJoin(F.broadcast(n)), "cross", s1=F.concat(F.col("r_name"), F.lit("|"), F.col("n_name"))),
+        u.branch(
+            na.join(
+                nb,
+                (F.col("na.n_regionkey") == F.col("nb.n_regionkey"))
+                & (F.col("na.n_nationkey") < F.col("nb.n_nationkey")),
+            ),
+            "theta", i1="na.n_nationkey", i2="nb.n_nationkey",
+        ),
+        u.branch(
+            c.join(sparse, sparse.o_custkey == c.c_custkey, "left"), "null_handling",
+            i1="c_custkey",
+            s1=F.concat(
+                F.when(F.col("o_orderkey").isNull(), "no_order").otherwise("has_order"),
+                F.lit("|"),
+                F.coalesce(F.nullif(F.col("c_mktsegment"), F.lit("BUILDING")), F.lit("~")),
+            ),
+            d1=F.coalesce(F.col("o_totalprice"), F.lit(0.0)),
+        ),
     )
-    out = inner
-    for part in (left, right, full, semi, anti, cross, theta, nulls):
-        out = out.unionAll(part)
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -402,68 +366,46 @@ def rel_grouping_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (no per-set re-scan)."""
     li, o = _t(spark, sf_dir, "lineitem", "orders")
     e = _t(spark, sf_dir, "events")[0]
-    rollup = (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("cnt"), dsum("l_quantity", alias="val"))
-        .select(
-            F.lit("rollup").alias("mode"),
-            F.col("l_returnflag").alias("k1"),
-            F.col("l_linestatus").alias("k2"),
-            "cnt",
-            "val",
-        )
-    )
-    cube = (
-        o.cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("cnt"), dsum("o_totalprice", alias="val"))
-        .select(
-            F.lit("cube").alias("mode"),
-            F.col("o_orderstatus").alias("k1"),
-            F.col("o_orderpriority").alias("k2"),
-            "cnt",
-            "val",
-        )
-    )
-    gsets = (
-        li.groupingSets([["l_returnflag"], ["l_linestatus"]], "l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("cnt"), dsum("l_extendedprice", alias="val"))
-        .select(
-            F.lit("gsets").alias("mode"),
-            F.col("l_returnflag").alias("k1"),
-            F.col("l_linestatus").alias("k2"),
-            "cnt",
-            "val",
-        )
-    )
+    u = TaggedUnion("mode", k1="string", k2="string", cnt="long", val="double")
     buckets = e.select(
         F.date_trunc("hour", "ts").alias("h"),
         F.date_trunc("day", "ts").alias("d"),
         F.date_trunc("month", "ts").alias("m"),
         "value",
     )
-    trollup = (
-        buckets.groupingSets([["h"], ["d"], ["m"]], "h", "d", "m")
-        .agg(
-            # Label with grouping() (NULL-safe: a NULL ts date_truncs to
-            # NULL in all three buckets; isNotNull would then mislabel the
-            # (h)/(d) grouping-set rows as 'month' while the oracle's
-            # grouping(h)/grouping(d) labels them correctly).
-            F.when(F.grouping("h") == 0, "hour")
-            .when(F.grouping("d") == 0, "day")
-            .otherwise("month")
-            .alias("k1"),
-            F.count(F.lit(1)).alias("cnt"),
-            dsum("value", alias="val"),
-        )
-        .select(
-            F.lit("trollup").alias("mode"),
-            "k1",
-            F.coalesce(F.col("h"), F.col("d"), F.col("m")).cast("string").alias("k2"),
-            "cnt",
-            "val",
-        )
+    return u.union(
+        u.branch(
+            li.rollup("l_returnflag", "l_linestatus")
+            .agg(F.count(F.lit(1)).alias("cnt"), dsum("l_quantity", alias="val")),
+            "rollup", "cnt", "val", k1="l_returnflag", k2="l_linestatus",
+        ),
+        u.branch(
+            o.cube("o_orderstatus", "o_orderpriority")
+            .agg(F.count(F.lit(1)).alias("cnt"), dsum("o_totalprice", alias="val")),
+            "cube", "cnt", "val", k1="o_orderstatus", k2="o_orderpriority",
+        ),
+        u.branch(
+            li.groupingSets([["l_returnflag"], ["l_linestatus"]], "l_returnflag", "l_linestatus")
+            .agg(F.count(F.lit(1)).alias("cnt"), dsum("l_extendedprice", alias="val")),
+            "gsets", "cnt", "val", k1="l_returnflag", k2="l_linestatus",
+        ),
+        u.branch(
+            buckets.groupingSets([["h"], ["d"], ["m"]], "h", "d", "m")
+            .agg(
+                # Label with grouping() (NULL-safe: a NULL ts date_truncs to
+                # NULL in all three buckets; isNotNull would then mislabel the
+                # (h)/(d) grouping-set rows as 'month' while the oracle's
+                # grouping(h)/grouping(d) labels them correctly).
+                F.when(F.grouping("h") == 0, "hour")
+                .when(F.grouping("d") == 0, "day")
+                .otherwise("month")
+                .alias("k1"),
+                F.count(F.lit(1)).alias("cnt"),
+                dsum("value", alias="val"),
+            ),
+            "trollup", "k1", "cnt", "val", k2=F.coalesce(F.col("h"), F.col("d"), F.col("m")),
+        ),
     )
-    return rollup.unionAll(cube).unionAll(gsets).unionAll(trollup)
 
 
 @query(
@@ -522,21 +464,15 @@ def rel_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li, c, o, docs = _t(spark, sf_dir, "lineitem", "customer", "orders", "documents")
 
-    hll = (
+    u = TaggedUnion("sketch", n="long", v="double", ok="boolean")
+    hll = u.branch(
         li.agg(
             F.approx_count_distinct("l_partkey", 0.02).alias("approx_parts"),
             F.countDistinct("l_partkey").alias("exact_parts"),
-        )
-        .select(
-            F.lit("hll").alias("sketch"),
-            F.col("exact_parts").alias("n"),
-            F.lit(None).cast("double").alias("v"),
-            (
-                F.abs(F.col("approx_parts") - F.col("exact_parts"))
-                / F.col("exact_parts")
-                <= 0.06
-            ).alias("ok"),
-        )
+        ),
+        "hll",
+        n="exact_parts",
+        ok=F.abs(F.col("approx_parts") - F.col("exact_parts")) / F.col("exact_parts") <= 0.06,
     )
 
     words = wc.tokenize(docs)
@@ -568,25 +504,22 @@ def rel_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("cnt").alias("row_lo"),
         F.max("cnt").alias("row_hi"),
     )
-    cms = (
+    cms = u.branch(
         exact_counts.join(est, "word")
         .agg(
             F.max("exact").alias("n"),
             F.min(F.col("cms_est") - F.col("exact")).alias("min_err"),
             F.sum("exact").alias("total"),
         )
-        .join(F.broadcast(cons_stats))
-        .select(
-            F.lit("cms").alias("sketch"),
-            "n",
-            F.lit(None).cast("double").alias("v"),
-            (
-                (F.col("min_err") >= 0)
-                & (F.col("n_rows") == depth)
-                & (F.col("row_lo") == F.col("total"))
-                & (F.col("row_hi") == F.col("total"))
-            ).alias("ok"),
-        )
+        .join(F.broadcast(cons_stats)),
+        "cms",
+        "n",
+        ok=(
+            (F.col("min_err") >= 0)
+            & (F.col("n_rows") == depth)
+            & (F.col("row_lo") == F.col("total"))
+            & (F.col("row_hi") == F.col("total"))
+        ),
     )
 
     # Size the filter to the build cardinality: ~32 bits/key keeps the
@@ -611,17 +544,11 @@ def rel_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("might_contain").cast("long")).alias("fps"),
         F.count(F.lit(1)).alias("n_neg"),
     )
-    bloom = (
-        pos_stats.join(F.broadcast(neg_stats))
-        .select(
-            F.lit("bloom").alias("sketch"),
-            F.col("n_members").alias("n"),
-            F.lit(None).cast("double").alias("v"),
-            (
-                (F.col("all_pass") == 1)
-                & (F.col("fps") <= F.lit(0.01) * F.col("n_neg"))
-            ).alias("ok"),
-        )
+    bloom = u.branch(
+        pos_stats.join(F.broadcast(neg_stats)),
+        "bloom",
+        n="n_members",
+        ok=(F.col("all_pass") == 1) & (F.col("fps") <= F.lit(0.01) * F.col("n_neg")),
     )
 
     accuracy = 10000
@@ -630,26 +557,22 @@ def rel_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"approx_percentile(l_quantity, 0.5, {accuracy})").alias("apx"),
         F.count(F.lit(1)).alias("n_rows"),
     )
-    quantile = (
-        li.join(F.broadcast(qstats))
-        .agg(
+    quantile = u.branch(
+        li.join(F.broadcast(qstats)).agg(
             F.sum((F.col("l_quantity") < F.col("apx")).cast("long")).alias("rank_lo"),
             F.sum((F.col("l_quantity") <= F.col("apx")).cast("long")).alias("rank_hi"),
             F.first("med").alias("med"),
             F.first("n_rows").alias("n_rows"),
-        )
-        .select(
-            F.lit("quantile").alias("sketch"),
-            F.lit(None).cast("long").alias("n"),
-            F.col("med").alias("v"),
-            (
-                (F.col("rank_lo") <= 0.5 * F.col("n_rows") + F.col("n_rows") / accuracy + 1)
-                & (F.col("rank_hi") >= 0.5 * F.col("n_rows") - F.col("n_rows") / accuracy - 1)
-            ).alias("ok"),
-        )
+        ),
+        "quantile",
+        v="med",
+        ok=(
+            (F.col("rank_lo") <= 0.5 * F.col("n_rows") + F.col("n_rows") / accuracy + 1)
+            & (F.col("rank_hi") >= 0.5 * F.col("n_rows") - F.col("n_rows") / accuracy - 1)
+        ),
     )
 
-    return hll.unionAll(cms).unionAll(bloom).unionAll(quantile)
+    return u.union(hll, cms, bloom, quantile)
 
 
 @query(
@@ -758,28 +681,17 @@ def rel_distinct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     li, o = _t(spark, sf_dir, "lineitem", "orders")
-    null_i = F.lit(None).cast("long")
-    null_d = F.lit(None).cast("double")
-    pairs = li.select("l_returnflag", "l_linestatus").distinct().select(
-        F.lit("pairs").alias("kind"),
-        F.col("l_returnflag").alias("k1"),
-        F.col("l_linestatus").alias("k2"),
-        null_i.alias("id"),
-        null_d.alias("price"),
-    )
+    u = TaggedUnion("kind", k1="string", k2="string", id="long", price="double")
     w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-    survivor = (
-        o.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            F.lit("survivor").alias("kind"),
-            F.col("o_custkey").cast("string").alias("k1"),
-            F.lit(None).cast("string").alias("k2"),
-            F.col("o_orderkey").alias("id"),
-            F.col("o_totalprice").alias("price"),
-        )
+    return u.union(
+        u.branch(
+            li.select("l_returnflag", "l_linestatus").distinct(), "pairs", k1="l_returnflag", k2="l_linestatus"
+        ),
+        u.branch(
+            o.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1),
+            "survivor", k1="o_custkey", id="o_orderkey", price="o_totalprice",
+        ),
     )
-    return pairs.unionAll(survivor)
 
 
 _SETOP_SUITE_ORACLE = """
@@ -814,51 +726,38 @@ def rel_setop_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     planned as semi/anti joins), and schema-aligned unionByName over
     heterogeneous entities."""
     o, c, s = _t(spark, sf_dir, "orders", "customer", "supplier")
-    null_s = F.lit(None).cast("string")
-    null_d = F.lit(None).cast("double")
-
-    def tagged(op: str, df: DataFrame, id_col, tag, bal) -> DataFrame:
-        return df.select(
-            F.lit(op).alias("op"),
-            id_col.cast("long").alias("id"),
-            tag.alias("tag"),
-            bal.cast("double").alias("bal"),
-        )
-
-    ua = tagged(
-        "union_all",
-        c.where(F.col("c_mktsegment") == "BUILDING").select("c_custkey", F.lit("building").alias("t"))
-        .unionAll(c.where(F.col("c_acctbal") > 9000).select("c_custkey", F.lit("rich").alias("t"))),
-        F.col("c_custkey"), F.col("t"), null_d,
-    )
-    inter = tagged(
-        "intersect",
-        c.where(F.col("c_mktsegment") == "BUILDING").select(F.col("c_custkey").alias("custkey"))
-        .intersect(o.where(F.col("o_totalprice") > 300000).select(F.col("o_custkey").alias("custkey"))),
-        F.col("custkey"), null_s, null_d,
-    )
-    exc = tagged(
-        "except",
-        c.select(F.col("c_custkey").alias("custkey"))
-        .subtract(o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))),
-        F.col("custkey"), null_s, null_d,
-    )
-    ubn = tagged(
-        "union_by_name",
-        c.select(
-            F.col("c_custkey").alias("entity_id"),
-            F.col("c_acctbal").alias("balance"),
-            F.lit("customer").alias("kind"),
-        ).unionByName(
-            s.select(
-                F.col("s_suppkey").alias("entity_id"),
-                F.col("s_acctbal").alias("balance"),
-                F.lit("supplier").alias("kind"),
-            )
+    u = TaggedUnion("op", id="long", tag="string", bal="double")
+    return u.union(
+        u.branch(
+            c.where(F.col("c_mktsegment") == "BUILDING").select("c_custkey", F.lit("building").alias("t"))
+            .unionAll(c.where(F.col("c_acctbal") > 9000).select("c_custkey", F.lit("rich").alias("t"))),
+            "union_all", id="c_custkey", tag="t",
         ),
-        F.col("entity_id"), F.col("kind"), F.col("balance"),
+        u.branch(
+            c.where(F.col("c_mktsegment") == "BUILDING").select(F.col("c_custkey").alias("custkey"))
+            .intersect(o.where(F.col("o_totalprice") > 300000).select(F.col("o_custkey").alias("custkey"))),
+            "intersect", id="custkey",
+        ),
+        u.branch(
+            c.select(F.col("c_custkey").alias("custkey"))
+            .subtract(o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))),
+            "except", id="custkey",
+        ),
+        u.branch(
+            c.select(
+                F.col("c_custkey").alias("entity_id"),
+                F.col("c_acctbal").alias("balance"),
+                F.lit("customer").alias("kind"),
+            ).unionByName(
+                s.select(
+                    F.col("s_suppkey").alias("entity_id"),
+                    F.col("s_acctbal").alias("balance"),
+                    F.lit("supplier").alias("kind"),
+                )
+            ),
+            "union_by_name", id="entity_id", tag="kind", bal="balance",
+        ),
     )
-    return ua.unionAll(inter).unionAll(exc).unionAll(ubn)
 
 
 _SUBQUERY_SUITE_ORACLE = """
@@ -884,18 +783,17 @@ def rel_subquery_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     o, c = _t(spark, sf_dir, "orders", "customer")
+    u = TaggedUnion("kind", o_orderkey="long", o_custkey="long", o_totalprice="double")
     debtors = c.where(F.col("c_acctbal") < 0).select("c_custkey")
-    in_q = o.join(
-        debtors, o.o_custkey == debtors.c_custkey, "left_semi"
-    ).select(F.lit("in").alias("kind"), "o_orderkey", "o_custkey", "o_totalprice")
     w = Window.partitionBy("o_custkey")
     cust_avg = (
         F.sum(F.col("o_totalprice").cast("decimal(27,4)")).over(w).cast("double")
         / F.count(F.lit(1)).over(w)
     )
-    above = (
-        o.withColumn("cust_avg", cust_avg)
-        .where(F.col("o_totalprice") > F.col("cust_avg"))
-        .select(F.lit("above_avg").alias("kind"), "o_orderkey", "o_custkey", "o_totalprice")
+    return u.union(
+        u.branch(o.join(debtors, o.o_custkey == debtors.c_custkey, "left_semi"), "in", *u.columns),
+        u.branch(
+            o.withColumn("cust_avg", cust_avg).where(F.col("o_totalprice") > F.col("cust_avg")),
+            "above_avg", *u.columns,
+        ),
     )
-    return in_q.unionAll(above)

@@ -3,15 +3,13 @@ operators/multimodal.py)."""
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.vector import cosine_sql
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import multimodal as MM
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import similarity as S
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import TaggedUnion, query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table, read_binary_dir
 
 #: Query set: every 50th vector (10 queries at sf0.01).
@@ -127,34 +125,14 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_invariant(approx, exact, queries, 0.65, "recall_ge_0_65")
 
 
-#: mm_suite's tagged-union columns after ``op``, with their types, in output order.
-_MM_UNION = (
-    ("doc_id", "long"), ("payload_md5", "string"), ("modality", "string"),
-    ("byte_len", "long"), ("width", "long"), ("height", "long"), ("n_frames", "long"),
-    ("resized_w", "long"), ("resized_h", "long"), ("sampled_frames", "string"),
-    ("maxval", "long"), ("pixel_sum", "long"), ("r_sum", "long"), ("g_sum", "long"),
-    ("b_sum", "long"), ("decode_ok", "boolean"), ("status", "string"),
+#: mm_suite's tagged union: every op's row, NULL (typed) where the op has no value.
+_MM = TaggedUnion(
+    "op",
+    doc_id="long", payload_md5="string", modality="string", byte_len="long", width="long",
+    height="long", n_frames="long", resized_w="long", resized_h="long", sampled_frames="string",
+    maxval="long", pixel_sum="long", r_sum="long", g_sum="long", b_sum="long",
+    decode_ok="boolean", status="string",
 )
-
-
-def _same(*names: str) -> dict:
-    """Union columns taken unchanged from same-named source columns."""
-    return {name: name for name in names}
-
-
-def _mm_branch(frame: DataFrame, op: str, cols: dict) -> DataFrame:
-    """One ``mm_suite`` union branch: the ``op`` tag, then every
-    :data:`_MM_UNION` column in order. ``cols`` maps a union column to a
-    source column name or a Column; a union column it omits or maps to
-    None is a NULL of the union type (the oracle check is type-exact)."""
-
-    def slot(name: str, dtype: str):
-        src = cols.get(name)
-        if src is None:
-            return F.lit(None).cast(dtype).alias(name)
-        return (F.col(src) if isinstance(src, str) else src).alias(name)
-
-    return frame.select(F.lit(op).alias("op"), *(slot(n, t) for n, t in _MM_UNION))
 
 
 @query(
@@ -547,7 +525,7 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal surface end to end, one tagged union (round-4
     registry consolidation of the former mm_suite + mm_real_decode).
     Every op fills the same ``op`` + 17-column union through
-    :func:`_mm_branch`, NULL (typed) where the op has no value:
+    :data:`_MM`, NULL (typed) where the op has no value:
 
     - op='meta_decode': rows carry (payload: binary, meta: struct) —
       payload proven byte-exact via md5 over the bytes on both engines,
@@ -673,18 +651,18 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("meta.modality").alias("modality"),
     )
     decoded = MM.fake_decode_meta(with_payload)
-    meta_rows = _mm_branch(
+    meta_rows = _MM.branch(
         meta.join(decoded, "doc_id"), "meta_decode",
-        _same("doc_id", "payload_md5", "modality", "byte_len", "width", "height", "n_frames",
-              "resized_w", "resized_h", "sampled_frames"),
+        "doc_id", "payload_md5", "modality", "byte_len", "width", "height", "n_frames",
+        "resized_w", "resized_h", "sampled_frames",
     )
-    image = _same("doc_id", "width", "height", "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum")
-    real_rows = _mm_branch(MM.decode_image_stats(MM.render_ppm_payloads(docs)), "real_decode", image)
-    png_rows = _mm_branch(MM.decode_image_stats(MM.render_png_payloads(docs)), "png_decode", image)
+    image = ("doc_id", "width", "height", "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum")
+    real_rows = _MM.branch(MM.decode_image_stats(MM.render_ppm_payloads(docs)), "real_decode", *image)
+    png_rows = _MM.branch(MM.decode_image_stats(MM.render_png_payloads(docs)), "png_decode", *image)
     jpeg_docs = docs.where(F.col("doc_id") % 10 == 0)
-    jpeg_rows = _mm_branch(
+    jpeg_rows = _MM.branch(
         MM.decode_jpeg_check(MM.render_jpeg_payloads(jpeg_docs)), "jpeg_decode",
-        _same("doc_id", "width", "height", "decode_ok"),
+        "doc_id", "width", "height", "decode_ok",
     )
     # op='quarantine' (round 8, VERDICT r7 item 1): safe-mode decode over
     # a batch with three planted failure classes (truncated PPM,
@@ -695,7 +673,7 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here (kept for triage in the operator output): exception MESSAGES
     # can vary across numpy versions, exception CLASSES cannot.
     q_stats = MM.decode_image_stats(MM.render_quarantine_payloads(jpeg_docs), safe=True)
-    quarantine_rows = _mm_branch(q_stats, "quarantine", {**image, "status": "status"})
+    quarantine_rows = _MM.branch(q_stats, "quarantine", *image, "status")
     # op='quarantine_summary' (round 9, VERDICT r8 item 7): the one-pass
     # quarantine-rate rollup a 100 TB ingest watches next to the decode —
     # per-status doc counts (in byte_len) over the same safe-decode
@@ -703,10 +681,7 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the driver row keeps the driver-stable columns (counts + status —
     # error MESSAGES vary across numpy versions, counts and CLASSES
     # cannot).
-    summary_rows = _mm_branch(
-        MM.quarantine_summary(q_stats), "quarantine_summary",
-        {"byte_len": "n_docs", "status": "status"},
-    )
+    summary_rows = _MM.branch(MM.quarantine_summary(q_stats), "quarantine_summary", "status", byte_len="n_docs")
     # op='video_y4m' (round 9): REAL video-container decode — one raw
     # YUV4MPEG2 stream per sampled doc rendered executor-side, parsed by
     # the native Y4M decoder (header parameter scan + length-based FRAME
@@ -715,14 +690,11 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # planes — no color conversion), so the oracle regenerates every
     # byte arithmetically: byte_len = exact container size, pixel_sum =
     # y+cb+cr, and the r/g/b columns carry the Y/Cb/Cr plane sums.
-    video = _same("doc_id", "byte_len", "width", "height", "n_frames", "sampled_frames")
-    video_rows = _mm_branch(
-        MM.video_frame_stats(MM.render_y4m_payloads(jpeg_docs)), "video_y4m",
-        {
-            **video,
-            "pixel_sum": F.col("y_sum") + F.col("cb_sum") + F.col("cr_sum"),
-            "r_sum": "y_sum", "g_sum": "cb_sum", "b_sum": "cr_sum",
-        },
+    video = ("doc_id", "byte_len", "width", "height", "n_frames", "sampled_frames")
+    video_rows = _MM.branch(
+        MM.video_frame_stats(MM.render_y4m_payloads(jpeg_docs)), "video_y4m", *video,
+        pixel_sum=F.col("y_sum") + F.col("cb_sum") + F.col("cr_sum"),
+        r_sum="y_sum", g_sum="cb_sum", b_sum="cr_sum",
     )
     # The audio ops (round 9 audio_wav: the four PCM containers; round 10
     # audio_g711: A-law, expanded by the exhaustively-pinned compander;
@@ -740,7 +712,7 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pixel_sum": "abs_sum", "r_sum": "ch0_sum", "g_sum": "ch1_sum",
     }
     audio_rows = [
-        _mm_branch(MM.audio_features(render(jpeg_docs)), op, cols)
+        _MM.branch(MM.audio_features(render(jpeg_docs)), op, **cols)
         for op, render, cols in (
             ("audio_wav", MM.render_pcm_variant_payloads, audio),
             ("audio_g711", MM.render_g711_payloads, audio),
@@ -754,17 +726,16 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle re-derives every output pixel — the resize KERNEL is
     # hash-checked, not just the plumbing (fake_decode_meta's resized_w/h
     # checked only the geometry arithmetic).
-    resize_rows = _mm_branch(
+    resize_rows = _MM.branch(
         MM.resized_image_stats(MM.render_ppm_payloads(docs)), "image_resize",
-        _same("doc_id", "width", "height", "resized_w", "resized_h",
-              "pixel_sum", "r_sum", "g_sum", "b_sum"),
+        "doc_id", "width", "height", "resized_w", "resized_h", "pixel_sum", "r_sum", "g_sum", "b_sum",
     )
     # op='video_mjpeg' (round 10): compressed-container video — RIFF/AVI
     # walk + per-frame JPEG decode; exact geometry/count/indices, pixel
     # correctness via the in-plan bounded-error invariant (decode_ok).
-    mjpeg_rows = _mm_branch(
+    mjpeg_rows = _MM.branch(
         MM.mjpeg_frame_check(MM.render_avi_payloads(jpeg_docs)), "video_mjpeg",
-        {**video, "byte_len": None, "decode_ok": "decode_ok"},
+        *video, "decode_ok", byte_len=None,
     )
     # op='audio_adpcm' (round 11): IMA-ADPCM WAV (tag 0x11) decoded
     # natively — block-structured 4-bit differential codec, multi-block
@@ -774,22 +745,18 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and sample correctness is the in-plan bounded-error invariant
     # (decode_ok ≤ ADPCM_TOLERANCE vs the triangle-wave reference — the
     # jpeg_decode pattern at the audio seam).
-    adpcm_rows = _mm_branch(
-        MM.adpcm_roundtrip_check(MM.render_adpcm_payloads(jpeg_docs)), "audio_adpcm",
-        {**audio, "pixel_sum": None, "r_sum": None, "g_sum": None, "decode_ok": "decode_ok"},
+    adpcm_rows = _MM.branch(
+        MM.adpcm_roundtrip_check(MM.render_adpcm_payloads(jpeg_docs)), "audio_adpcm", "decode_ok",
+        **{**audio, "pixel_sum": None, "r_sum": None, "g_sum": None},
     )
     # op='video_dib' (round 11): UNCOMPRESSED AVI — raw-RGB DIB frames
     # through the same RIFF walk (BMP row layout: bottom-up, BGR, 4-byte
     # padding). Lossless, so unlike video_mjpeg every output is an exact
     # integer: container bytes, geometry, and per-channel sums over the
     # sampled frames, all re-derived arithmetically by the oracle.
-    dib_rows = _mm_branch(
+    dib_rows = _MM.branch(
         MM.dib_frame_stats(MM.render_dib_payloads(jpeg_docs)), "video_dib",
-        {
-            **video,
-            "pixel_sum": F.col("r_sum") + F.col("g_sum") + F.col("b_sum"),
-            **_same("r_sum", "g_sum", "b_sum"),
-        },
+        *video, "r_sum", "g_sum", "b_sum", pixel_sum=F.col("r_sum") + F.col("g_sum") + F.col("b_sum"),
     )
     # op='binary_ingest' (round 7, VERDICT r6 item 3): the raw-FILE edge.
     # Real .ppm files staged once per sf_dir (executor-written, marker-
@@ -803,12 +770,12 @@ def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("length").cast("long").alias("byte_len"),
         F.col("content").alias("img"),
     )
-    ingest_rows = _mm_branch(
+    ingest_rows = _MM.branch(
         MM.decode_image_stats(parsed).join(parsed.select("doc_id", "byte_len"), "doc_id"),
-        "binary_ingest", {**image, "byte_len": "byte_len"},
+        "binary_ingest", *image, "byte_len",
     )
     branches = [
         meta_rows, real_rows, png_rows, jpeg_rows, ingest_rows, quarantine_rows,
         summary_rows, video_rows, *audio_rows, resize_rows, mjpeg_rows, adpcm_rows, dib_rows,
     ]
-    return functools.reduce(DataFrame.unionAll, branches)
+    return _MM.union(*branches)

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import TaggedUnion, query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming import (
     events_stream,
     run_available_now,
@@ -55,17 +55,8 @@ def stream_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         shuffle_width=stream_shuffle_width(sf_dir, "events"),
     )
-    tumbling = tumbling_raw.select(
-        F.lit("tumbling").alias("kind"), "ws", "event_type", "n", "sum_value"
-    )
-    sliding = sliding_raw.select(
-        F.lit("sliding").alias("kind"),
-        "ws",
-        F.lit(None).cast("string").alias("event_type"),
-        "n",
-        F.lit(None).cast("double").alias("sum_value"),
-    )
-    return tumbling.unionAll(sliding)
+    u = TaggedUnion("kind", ws="timestamp", event_type="string", n="long", sum_value="double")
+    return u.union(u.branch(tumbling_raw, "tumbling", *u.columns), u.branch(sliding_raw, "sliding", "ws", "n"))
 
 
 @query(
@@ -214,39 +205,19 @@ def stream_dedup_state_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         shuffle_width=stream_shuffle_width(sf_dir, "events", "documents"),
     )
-    dedup_counts = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("dedup").alias("kind"),
-        F.col("event_type").alias("key"),
-        "n",
-        F.lit(None).cast("long").alias("cents"),
+    u = TaggedUnion("kind", key="string", n="long", cents="long")
+    return u.union(
+        u.branch(deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")), "dedup", "n", key="event_type"),
+        u.branch(state_raw, "state", key="user_id", n="n_events", cents="total_value_cents"),
+        u.branch(enriched_raw, "enriched", "n", "cents", key="c_mktsegment"),
+        u.branch(
+            ss_raw, "ss_join",
+            key=F.concat(F.col("click_id").cast("string"), F.lit("|"), F.col("purchase_id").cast("string")),
+            n=F.lit(1),
+            cents=F.round(F.col("purchase_value") * 100),
+        ),
+        u.branch(incr_raw, "incr_dedup", "n", key="lang"),
     )
-    state = state_raw.select(
-        F.lit("state").alias("kind"),
-        F.col("user_id").cast("string").alias("key"),
-        F.col("n_events").alias("n"),
-        F.col("total_value_cents").alias("cents"),
-    )
-    enriched = enriched_raw.select(
-        F.lit("enriched").alias("kind"),
-        F.col("c_mktsegment").alias("key"),
-        "n",
-        "cents",
-    )
-    ss_pairs = ss_raw.select(
-        F.lit("ss_join").alias("kind"),
-        F.concat(
-            F.col("click_id").cast("string"), F.lit("|"), F.col("purchase_id").cast("string")
-        ).alias("key"),
-        F.lit(1).cast("long").alias("n"),
-        F.round(F.col("purchase_value") * 100).cast("long").alias("cents"),
-    )
-    incr = incr_raw.select(
-        F.lit("incr_dedup").alias("kind"),
-        F.col("lang").alias("key"),
-        "n",
-        F.lit(None).cast("long").alias("cents"),
-    )
-    return dedup_counts.unionAll(state).unionAll(enriched).unionAll(ss_pairs).unionAll(incr)
 
 
 @query(

@@ -11,12 +11,13 @@ wc_per_document)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import poly_hash_chars, poly_hash_chars_sql
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import text as T
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import spread
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count, spread
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import TaggedUnion, query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
 
@@ -68,11 +69,11 @@ _PII_GRAFT_SQL = (
            {T.pii_count_sql(T.pii_redact_sql(_PII_GRAFT_SQL), T.PII_EMAIL)
             } AS n_pii_emails_after,
            {T.pii_count_sql(_PII_GRAFT_SQL, T.PII_IPV4)} AS n_pii_ipv4,
-           {T.fingerprint_sql(T.pii_redact_sql(_PII_GRAFT_SQL))} AS fp_pii_redacted,
+           {poly_hash_chars_sql(T.pii_redact_sql(_PII_GRAFT_SQL))} AS fp_pii_redacted,
            d.lang AS lang_label,
            {T.lang_id_sql('d.text')} AS lang_pred,
-           {T.fingerprint_sql('d.text')} AS fp,
-           {T.fingerprint_sql(T.normalized_text_sql('d.text'))} AS fp_normalized,
+           {poly_hash_chars_sql('d.text')} AS fp,
+           {poly_hash_chars_sql(T.normalized_text_sql('d.text'))} AS fp_normalized,
            sh.simhash
     FROM documents d JOIN sh ON d.doc_id = sh.doc_id JOIN tt ON d.doc_id = tt.doc_id
     """,
@@ -109,7 +110,7 @@ def text_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.pii_count(graft, T.PII_EMAIL).alias("n_pii_emails"),
         T.pii_count(T.pii_redact(graft), T.PII_EMAIL).alias("n_pii_emails_after"),
         T.pii_count(graft, T.PII_IPV4).alias("n_pii_ipv4"),
-        T.fingerprint(T.pii_redact(graft)).alias("fp_pii_redacted"),
+        poly_hash_chars(T.pii_redact(graft)).alias("fp_pii_redacted"),
     )
     gate = (
         (F.col("top_token_frac") <= GATE_MAX_TOP_TOKEN_FRAC)
@@ -167,23 +168,21 @@ def text_vocab_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.dedup import shingles_col
 
     docs = spread(load_table(spark, sf_dir, "documents"), by=["doc_id"])
-    bpe = (
-        docs.select(F.explode(F.regexp_extract_all("text", F.lit(T.BPE_PATTERN), 0)).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("term").asc())
-        .limit(50)
-        .select(F.lit("bpe").alias("kind"), "term", "cnt")
+    u = TaggedUnion("kind", term="string", cnt="long")
+
+    def top(terms: Column, limit: int) -> DataFrame:
+        return (
+            docs.select(F.explode(terms).alias("term"))
+            .groupBy("term")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .orderBy(F.col("cnt").desc(), F.col("term").asc())
+            .limit(limit)
+        )
+
+    return u.union(
+        u.branch(top(F.regexp_extract_all("text", F.lit(T.BPE_PATTERN), 0), 50), "bpe", *u.columns),
+        u.branch(top(shingles_col("text", 2), 40), "bigram", *u.columns),
     )
-    bigrams = (
-        docs.select(F.explode(shingles_col("text", 2)).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("term").asc())
-        .limit(40)
-        .select(F.lit("bigram").alias("kind"), "term", "cnt")
-    )
-    return bpe.unionAll(bigrams)
 
 
 @query(
@@ -213,7 +212,9 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-units before the tf multiplication makes every score an exact
     int (the quantization boundary is ~10 orders of magnitude wider than
     libm disagreement). At scale this is two aggregations (tf, df) and
-    one broadcast-joined doc count — no MLlib fit needed.
+    one broadcast-joined doc count — no MLlib fit needed. N is
+    :func:`row_count` of the bare scan (its parquet footers), so building
+    the query launches no job.
     """
     docs = load_table(spark, sf_dir, "documents")
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.text import tokens_col
@@ -221,7 +222,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = spread(docs, by=["doc_id"]).select("doc_id", F.explode(tokens_col("text")).alias("word"))
     tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = docs.count()
+    n_docs = row_count(docs)
     idf_micro = F.round(F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0)) * 1000000).cast("long")
     return (
         tf.join(df.withColumn("idf_micro", idf_micro), "word")

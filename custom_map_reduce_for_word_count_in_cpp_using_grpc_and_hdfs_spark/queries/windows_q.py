@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import TaggedUnion, query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
 
@@ -275,18 +275,12 @@ def fn_semi_structured_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     flatten with position (posexplode / unnest WITH ORDINALITY)."""
     e = load_table(spark, sf_dir, "events")
     emb = load_table(spark, sf_dir, "embeddings")
-    null_i = F.lit(None).cast("long")
-    null_d = F.lit(None).cast("double")
-    null_s = F.lit(None).cast("string")
+    u = TaggedUnion("kind", i1="long", i2="long", i3="long", d1="double", d2="double", s1="string")
 
     k = F.get_json_object("props", "$.k").cast("long")
-    json_q = (
-        e.groupBy(k.alias("i1"))
-        .agg(F.count(F.lit(1)).alias("i2"), F.min("event_id").alias("i3"))
-        .select(
-            F.lit("json").alias("kind"), "i1", "i2", "i3",
-            null_d.alias("d1"), null_d.alias("d2"), null_s.alias("s1"),
-        )
+    json_q = u.branch(
+        e.groupBy(k.alias("i1")).agg(F.count(F.lit(1)).alias("i2"), F.min("event_id").alias("i3")),
+        "json", "i1", "i2", "i3",
     )
     head4 = F.array_join(
         F.transform(
@@ -295,29 +289,19 @@ def fn_semi_structured_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ",",
     )
-    array_q = emb.where(F.col("vec_id") % 20 == 0).select(
-        F.lit("array").alias("kind"),
-        F.col("vec_id").alias("i1"),
-        F.size("embedding").cast("long").alias("i2"),
-        null_i.alias("i3"),
-        F.element_at("embedding", 1).cast("double").alias("d1"),
-        F.element_at("embedding", 64).cast("double").alias("d2"),
-        head4.alias("s1"),
+    array_q = u.branch(
+        emb.where(F.col("vec_id") % 20 == 0), "array",
+        i1="vec_id",
+        i2=F.size("embedding"),
+        d1=F.element_at("embedding", 1),
+        d2=F.element_at("embedding", 64),
+        s1=head4,
     )
-    pos_q = (
-        emb.where(F.col("vec_id") % 100 == 0)
-        .select("vec_id", F.posexplode("embedding").alias("pos", "component"))
-        .select(
-            F.lit("posexplode").alias("kind"),
-            F.col("vec_id").alias("i1"),
-            F.col("pos").cast("long").alias("i2"),
-            null_i.alias("i3"),
-            F.col("component").cast("double").alias("d1"),
-            null_d.alias("d2"),
-            null_s.alias("s1"),
-        )
+    pos_q = u.branch(
+        emb.where(F.col("vec_id") % 100 == 0).select("vec_id", F.posexplode("embedding").alias("pos", "component")),
+        "posexplode", i1="vec_id", i2="pos", d1="component",
     )
-    return json_q.unionAll(array_q).unionAll(pos_q)
+    return u.union(json_q, array_q, pos_q)
 
 
 # --------------------------------------------------------------------------
@@ -375,12 +359,8 @@ def udf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     def scale(v: pd.Series) -> pd.Series:
         return v * 0.9
 
-    pandas_branch = demeaned.select(
-        F.lit("pandas").alias("op"),
-        F.col("c_custkey").cast("string").alias("key"),
-        F.col("bal_vs_best").alias("v1"),
-        scale("bal_vs_best").alias("v2"),
-    )
+    u = TaggedUnion("op", key="string", v1="double", v2="double")
+    pandas_branch = u.branch(demeaned, "pandas", key="c_custkey", v1="bal_vs_best", v2=scale("bal_vs_best"))
 
     @udtf(returnType="word: string", useArrow=True)
     class TokenizeUdtf:
@@ -395,13 +375,10 @@ def udf_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("tokenize_udtf", TokenizeUdtf)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("udtf_documents")
-    udtf_branch = spark.sql(
-        "SELECT word FROM udtf_documents, LATERAL tokenize_udtf(text)"
-    ).groupBy("word").agg(F.count(F.lit(1)).alias("cnt")).select(
-        F.lit("udtf").alias("op"),
-        F.col("word").alias("key"),
-        F.col("cnt").cast("double").alias("v1"),
-        F.lit(None).cast("double").alias("v2"),
+    udtf_branch = u.branch(
+        spark.sql("SELECT word FROM udtf_documents, LATERAL tokenize_udtf(text)")
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        "udtf", key="word", v1="cnt",
     )
-
-    return pandas_branch.unionAll(udtf_branch)
+    return u.union(pandas_branch, udtf_branch)

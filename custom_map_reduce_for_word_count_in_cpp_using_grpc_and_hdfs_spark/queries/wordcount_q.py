@@ -19,10 +19,9 @@ sides drop empty tokens.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import wordcount as wc
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import TaggedUnion, query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
 _TOKENS_SQL = """
@@ -72,11 +71,11 @@ def wc_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``wc_reference_parity``.
     """
     docs = load_table(spark, sf_dir, "documents")
-    topk = flagship(spark, sf_dir).select(F.lit("topk").alias("op"), "word", "cnt")
-    parity = wc.word_count_top_k(docs, reference_parity=True).select(
-        F.lit("keyrange").alias("op"), "word", "cnt"
+    u = TaggedUnion("op", word="string", cnt="long")
+    return u.union(
+        u.branch(flagship(spark, sf_dir), "topk", *u.columns),
+        u.branch(wc.word_count_top_k(docs, reference_parity=True), "keyrange", *u.columns),
     )
-    return topk.unionAll(parity)
 
 
 @query(

@@ -3,10 +3,11 @@
 The reference is strictly batch (SURVEY.md §2.3) — this is north-star
 surface. Design:
 
-- **Source**: file stream over a staged directory (Spark's file source
-  requires a directory; the driver's events table is a single parquet
-  file, so we stage a copy under ``<scratch root>/streams``, see
-  ``session.scratch_root``). In production this is a file-drop source;
+- **Source**: file stream over the table in place: a brace glob
+  ``<sf_dir>/{<table>.parquet}`` that matches the single parquet file
+  the driver's tables are stored as (the file source takes a directory
+  or a glob, not a bare file) or a directory-shaped table alike, so
+  nothing is copied. In production this is a file-drop source;
   everything downstream is identical.
 - **Windows**: tumbling/sliding via ``window()``, sessions via
   ``session_window()`` — all computed with ``Trigger.AvailableNow`` so a
@@ -31,7 +32,6 @@ surface. Design:
 from __future__ import annotations
 
 import os
-import shutil
 import threading
 import uuid
 from urllib.parse import urlsplit
@@ -40,49 +40,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.exact import dsum
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.session import scratch_root
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources.registry import nanos_ts_to_micros, read_parquet
 
 
-def _stage_dir(sf_dir: str, table: str) -> str:
-    """Stage ``<sf_dir>/<table>.parquet`` into a directory usable by the
-    file-stream source, under ``<scratch root>/streams``. Idempotent per
-    (sf_dir, table). A table already stored as a parquet directory is
-    returned as it is: the file source reads directories."""
-    import hashlib
-
-    source = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(source):
-        return source
-    # stable digest — Python's hash() is per-process randomized, which
-    # would re-stage (and leak) a fresh copy every run
-    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    key = f"{table}-{digest}"
-    target = os.path.join(scratch_root(), "streams", key)
-    marker = os.path.join(target, f"{table}.parquet")
-    # staleness guard: if the source was regenerated since we staged it,
-    # re-copy — otherwise a long-lived scratch dir silently streams last
-    # round's data. copy2 preserves the source mtime, so freshness is an
-    # EXACT (size, mtime) match: a restored/checked-out source whose mtime
-    # moved *backwards* (same size) also re-stages, which the previous
-    # `marker >= source` heuristic silently treated as fresh.
-    src_stat = os.stat(source)
-    fresh = (
-        os.path.exists(marker)
-        and os.stat(marker).st_size == src_stat.st_size
-        and abs(os.stat(marker).st_mtime - src_stat.st_mtime) < 1e-6
-    )
-    if not fresh:
-        os.makedirs(target, exist_ok=True)
-        shutil.copy2(source, marker)
-    return target
-
-
 def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """File stream over ``<sf_dir>/<table>.parquet``, staged by
-    :func:`_stage_dir`, with the batch reader's (memoized) schema."""
+    """File stream over ``<sf_dir>/<table>.parquet`` where it lies, with the
+    batch reader's (memoized) schema. The path is the brace glob
+    ``<sf_dir>/{<table>.parquet}``: Spark's file-stream source takes a
+    directory or a glob, not a bare file path (that fails at the first
+    batch with "Option 'basePath' must be a directory"), and the glob
+    matches a single-file table and a directory-shaped one alike. An
+    ``sf_dir`` holding glob metacharacters already fails the batch
+    reader, so the glob adds no restriction."""
     batch_schema = read_parquet(spark, os.path.join(sf_dir, f"{table}.parquet")).schema
-    return spark.readStream.schema(batch_schema).parquet(_stage_dir(sf_dir, table))
+    return spark.readStream.schema(batch_schema).parquet(os.path.join(sf_dir, f"{{{table}.parquet}}"))
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,14 +195,15 @@ def run_available_now_many(
     is awaited — independent streaming jobs shouldn't serialize on the
     driver) and return each result as a batch DataFrame.
 
-    Single-batch constraint for oracle-checked drains: the staged file
-    source is exactly ONE file (see _stage_dir), so an AvailableNow drain
-    is one micro-batch and the watermark never advances mid-drain. With a
-    multi-file source (a directory-shaped table streams in place) the
-    watermark could advance between micro-batches and drop late rows
-    (dropDuplicatesWithinWatermark, stream-stream join), legitimately diverging from the batch oracle — if a staged
-    source ever grows multiple files, pin maxFilesPerTrigger above the
-    file count or use a watermark delay exceeding the event-time span.
+    Single-batch constraint for oracle-checked drains: a single-file table
+    streams as exactly ONE file (see _table_stream), so an AvailableNow
+    drain is one micro-batch and the watermark never advances mid-drain.
+    With a multi-file source (a directory-shaped table) the watermark
+    could advance between micro-batches and drop late rows
+    (dropDuplicatesWithinWatermark, stream-stream join), legitimately
+    diverging from the batch oracle — for such a source, pin
+    maxFilesPerTrigger above the file count or use a watermark delay
+    exceeding the event-time span.
 
     Drain confs: a started query clones the session conf, so the queries
     are started under :func:`_drain_confs` and the session's own values

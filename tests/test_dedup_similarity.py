@@ -466,7 +466,7 @@ def test_eager_stats_join_planning_uses_measured_size(spark):
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import eager_stats
 
     docs = load_table(spark, SF_CORRECT, "documents")
-    small = eager_stats(D.doc_shingles(docs.limit(50)))
+    small = eager_stats(D.doc_shingles(docs.limit(50)), 32)
     other = D.doc_shingles(docs.limit(80))
     plan = other.join(small, "shingle")._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -484,15 +484,15 @@ def test_eager_stats_count_gated_on_source_bytes(spark):
 
     docs = load_table(spark, SF_CORRECT, "documents")
     # 65 KB parquet × 32 expansion bound << 64 MB threshold: no risk.
-    assert _size_proof(D.doc_shingles(docs))[0] is False
+    assert _size_proof(D.doc_shingles(docs), 32)[0] is False
     # In-memory frame: no file listing, size unprovable → eager.
     mem = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    assert _size_proof(D.doc_shingles(mem))[0] is True
+    assert _size_proof(D.doc_shingles(mem), 32)[0] is True
     # Auto-broadcast disabled: a mis-estimate cannot mis-plan → lazy.
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        assert _size_proof(D.doc_shingles(mem))[0] is False
+        assert _size_proof(D.doc_shingles(mem), 32)[0] is False
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -114,6 +114,10 @@ def test_text_profile_primitives_match_duckdb(spark, texts):
     """Every portable text primitive the dedup/profile oracles stand on:
     normalized form, BPE-ish token count, stopword/punct counts, lang-id,
     fingerprint, and the sampling hash bucket — on arbitrary inputs."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import (
+        poly_hash_chars,
+        poly_hash_chars_sql,
+    )
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import sampling as SA
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import text as T
 
@@ -126,7 +130,7 @@ def test_text_profile_primitives_match_duckdb(spark, texts):
         T.stopword_count("t").alias("stop"),
         T.punct_count("t").alias("punct"),
         T.lang_id("t").alias("lang"),
-        T.fingerprint("t").alias("fp"),
+        poly_hash_chars("t").alias("fp"),
         bucket.alias("bucket"),
     ).collect()
     con = duckdb.connect()
@@ -139,7 +143,7 @@ def test_text_profile_primitives_match_duckdb(spark, texts):
                     T.stopword_count_sql("?"),
                     T.punct_count_sql("?"),
                     T.lang_id_sql("?"),
-                    T.fingerprint_sql("?"),
+                    poly_hash_chars_sql("?"),
                     SA.hash_bucket_sql("?", 13),
                 ]
             ) + " FROM (SELECT ? AS text) AS d"

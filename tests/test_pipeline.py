@@ -216,6 +216,7 @@ def test_perrow_gate_bit_identical_to_profile_gate(spark):
     r5: the left_anti branch was asserting over an empty set), so they
     are UNIONED in synthetically — the profile-missing branch and the
     NaN-ratio gate path below run over real rows."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import poly_hash_chars
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import text as T
 
     edge = spark.createDataFrame(
@@ -236,7 +237,7 @@ def test_perrow_gate_bit_identical_to_profile_gate(spark):
         feats["punct_ratio"].alias("punct_ratio"),
         feats["n_chars"].alias("n_chars"),
         T.lang_id(text).alias("lang_pred"),
-        T.fingerprint(T.normalized_text(text)).alias("fp_normalized"),
+        poly_hash_chars(T.normalized_text(text)).alias("fp_normalized"),
     )
     prof = T.doc_profile(docs).select(
         "doc_id", "n_tokens", "stopword_ratio", "punct_ratio",

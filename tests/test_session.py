@@ -100,6 +100,17 @@ def test_second_load_table_launches_no_job(spark, tmp_path):
     assert sorted(again[0].collect()) == sorted(first[0].collect())
 
 
+def test_tfidf_query_builds_without_a_job(spark):
+    """``text_tfidf_top_terms`` sizes N from the documents scan's parquet
+    footers, not with a count job: once the table's schema is memoized,
+    building the query launches no job."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import QUERIES
+
+    build = QUERIES["text_tfidf_top_terms"]
+    build(spark, SF_CORRECT)  # the first load of documents may infer its schema
+    assert jobs_launched(spark, lambda: build(spark, SF_CORRECT)) == 0
+
+
 def test_rewritten_file_is_inferred_again(spark, tmp_path):
     """A file rewritten with another schema (new size and mtime) is
     inferred again, not read through the old schema."""

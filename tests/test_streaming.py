@@ -397,18 +397,25 @@ def test_drain_drops_its_memory_sink_view(spark, tmp_path):
     assert {tuple(r) for r in out.where(F.col("k") >= 0).collect()} == want
 
 
-def test_events_stream_stages_under_the_scratch_root(spark, tmp_path, monkeypatch):
-    """``events_stream`` stages its single-file copy under
-    ``$SPARK_GRAFT_SCRATCH/streams``, not under the repository."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import events_stream
+def test_a_drain_leaves_the_scratch_root_empty(spark, tmp_path, monkeypatch):
+    """``events_stream`` reads the single-file events table where it
+    lies: a drain over it returns the batch rows and writes nothing
+    under ``$SPARK_GRAFT_SCRATCH``."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
+        events_stream,
+        run_available_now_many,
+        tumbling_counts,
+    )
 
     from .conftest import SF_SMOKE
 
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
-    events_stream(spark, SF_SMOKE)
-    (staged,) = os.listdir(tmp_path / "streams")
-    assert staged.startswith("events-")
-    assert os.listdir(tmp_path / "streams" / staged) == ["events.parquet"]
+    (got,) = run_available_now_many([(tumbling_counts(events_stream(spark, SF_SMOKE)), "complete")])
+    want = tumbling_counts(load_table(spark, SF_SMOKE, "events"))
+    rows = sorted(map(tuple, got.collect()))
+    assert rows and rows == sorted(map(tuple, want.collect()))
+    assert os.listdir(tmp_path) == []
 
 
 def test_overlapping_drains_restore_the_session_width(spark, tmp_path, monkeypatch):
